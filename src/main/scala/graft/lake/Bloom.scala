@@ -68,6 +68,9 @@ object Bloom {
   val Bits = 32768
   val BytesPerPlane: Int = Bits / 8
 
+  /** All-zero planes: provably holds nothing (a cell with zero rows). */
+  def empty: Bloom = Bloom(Vector.fill(Planes)(new Array[Byte](BytesPerPlane)))
+
   private[lake] def bitPos(h: Long): Int = ((h % Bits + Bits) % Bits).toInt
 
   /** The aggregation columns maintaining blooms for `cols`, to append to a

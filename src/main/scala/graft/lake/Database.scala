@@ -222,16 +222,19 @@ final class Database(val spark: SparkSession) {
     val d = tables.getOrElse(name,
       throw new IllegalArgumentException(s"unknown lake table '$name'"))
     val schema = d.tableSchema
-    val zc = d.zoneColsFor(schema)
-    val sc = d.sumColsFor(schema)
-    val kc = d.sketchColsFor(schema)
-    val qc = d.quantileColsFor(schema)
-    val fc = d.freqColsFor(schema)
-    val zones = if (zc.isEmpty) None else d.metaStats(zc)
-    val sums = if (sc.isEmpty) None else d.metaSums(sc)
-    val dist = if (kc.isEmpty) None else d.metaApproxDistinct(kc)
-    val quants = if (qc.isEmpty) None else d.metaApproxQuantile(qc, Seq(0.5, 0.95))
-    val tops = if (fc.isEmpty) None else d.metaTopK(fc, 5)
+    import StatFamily._
+    // ONE catalog snapshot for every family, so a concurrent write cannot
+    // mix two table versions into the output.
+    val whole = d.fold().map(_.whole)
+    def answer[T](f: StatFamily[_, _])(q: (CellGroup, Seq[String]) => Option[T]): Option[T] = {
+      val cs = f.cols(d, schema)
+      if (cs.isEmpty) None else whole.flatMap(q(_, cs))
+    }
+    val zones = answer(Zones)(_.zones(_))
+    val sums = answer(Sums)(_.sums(_))
+    val dist = answer(Sketches)(_.approxDistinct(_))
+    val quants = answer(Quantiles)(_.quantiles(_, Seq(0.5, 0.95)))
+    val tops = answer(Freqs)(_.topK(_, 5))
     val nRows: java.lang.Long =
       zones.map(z => Long.box(z._1))
         .orElse(d.knownRowsOption.map(Long.box)).orNull

@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.util.Base64
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -111,10 +109,4 @@ object FreqMap {
     }
     level.head
   }
-
-  /** Manifest encoding. */
-  def encode(b: Array[Byte]): String = Base64.getEncoder.encodeToString(b)
-
-  def decode(s: String): Option[Array[Byte]] =
-    try Some(Base64.getDecoder.decode(s)) catch { case _: Exception => None }
 }

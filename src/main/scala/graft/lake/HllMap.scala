@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.util.Base64
-
 import org.apache.datasketches.hll.{HllSketch, TgtHllType, Union}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -179,14 +177,4 @@ object HllMap {
     sketches.foreach(b => u.update(HllSketch.heapify(b)))
     Math.round(u.getResult.getEstimate)
   }
-
-  /** Manifest encoding. */
-  def encode(b: Array[Byte]): String = Base64.getEncoder.encodeToString(b)
-
-  def decode(s: String): Option[Array[Byte]] =
-    try {
-      val b = Base64.getDecoder.decode(s)
-      HllSketch.heapify(b) // validates — corrupt bytes degrade to unknown
-      Some(b)
-    } catch { case scala.util.control.NonFatal(_) => None }
 }

@@ -112,103 +112,62 @@ final class LakeDataset private (
     */
   @volatile private[lake] var cleanScan: Option[DataFrame] = None
 
-  /** The zone-tracked column SET, fixed when the table first gains a schema
-    * (first batch, manifest DDL, or a rebuild) — NOT recomputed per batch.
-    * Widening's soundness requires the routing aggregation, rebuilds and
-    * per-part materializations to track the same set whenever a column is
-    * present: with > [[ZoneMap.MaxZoneColumns]] zoneable columns and a batch
-    * whose column ORDER differs from the table's, per-schema recomputation
-    * would track different sets and a widen could keep a stale bound for a
-    * column the batch holds values for (an unsound, too-narrow zone).
-    * Columns a later batch adds by schema evolution stay untracked (absence
-    * = unknown = fail open) until the next rebuild refreshes the set.
+  /** Each type-tracked family's column SET ([[StatFamily.trackedFor]]:
+    * zones, sums), fixed when the table first gains a schema (first batch,
+    * manifest DDL, or a rebuild) — NOT recomputed per batch. Appends'
+    * soundness requires the routing aggregation, rebuilds and per-part
+    * materializations to track the same set whenever a column is present:
+    * with more trackable columns than a family's cap and a batch whose
+    * column ORDER differs from the table's, per-schema recomputation would
+    * track different sets and a widen could keep a stale bound (or fold a
+    * sum into a column the part never baselined) for a column the batch
+    * holds values for. Columns a later batch adds by schema evolution stay
+    * untracked (absence = unknown = fail open) until the next rebuild
+    * refreshes the sets.
     */
-  @volatile private[lake] var trackedZoneSet: Option[Set[String]] = None
+  @volatile private[lake] var tracked: Map[StatFamily[_, _], Set[String]] = Map.empty
 
-  /** Zone columns for a frame: the table's fixed tracked set, restricted to
-    * columns the frame actually has, in the frame's schema order.
+  private[lake] def trackedSet(f: StatFamily[_, _],
+      schema: org.apache.spark.sql.types.StructType): Set[String] =
+    tracked.getOrElse(f, {
+      val t = f.trackedFor(schema).toSet
+      tracked += f -> t
+      t
+    })
+
+  /** Refresh every tracked set from a full-table schema (rebuild and load
+    * paths only: every part's stats come from the same aggregation there,
+    * so no stale per-part set can survive the switch).
     */
-  private[lake] def zoneColsFor(schema: org.apache.spark.sql.types.StructType): Seq[String] = {
-    val tracked = trackedZoneSet match {
-      case Some(t) => t
-      case None =>
-        val t = ZoneMap.zoneCols(schema, Set(LakeDataset.BucketCol)).toSet
-        trackedZoneSet = Some(t)
-        t
-    }
-    schema.fields.iterator.map(_.name).filter(tracked.contains).toSeq
+  private def retrack(schema: org.apache.spark.sql.types.StructType): Unit =
+    tracked = StatFamily.all.filterNot(_.optIn).map(f => f -> f.trackedFor(schema).toSet).toMap
+
+  /** Which columns each family tracks in a frame — the layout of every
+    * routing aggregation and part recount.
+    */
+  private[lake] def statLayout(schema: org.apache.spark.sql.types.StructType): StatLayout =
+    StatLayout(this, schema)
+
+  /** A new cell sharing this dataset's layout, storage ledger and snapshot
+    * policy.
+    */
+  private def newPart(df: => DataFrame, key: PartKey, rows: Long, stats: PartStats,
+      tight: Boolean = true): LakePart =
+    new LakePart(df, key, bucketCols, nBuckets, rows, retainDirect, statLayout,
+      partSnapshot, stats, tight)
+
+  /** The cell a routing row's leading key columns name. */
+  private def cellKeyOf(row: Row): PartKey = {
+    val n = cellKeyCols.length
+    PartKey(partitionCols.zipWithIndex.map { case (c, i) =>
+      c -> Option(row.get(i)).map(_.toString).orNull
+    }.sortBy(_._1),
+      if (bucketCols.isEmpty) None
+      // A NULL in the bucket column hashes to a null bucket id (numeric and
+      // temporal types); such rows get a dedicated sentinel cell, mirroring
+      // the null-partition-value handling.
+      else Some(if (row.isNullAt(n - 1)) LakeDataset.NullBucket else row.getInt(n - 1)))
   }
-
-  /** Refresh the tracked set from a full-table schema (rebuild paths only:
-    * every part's zones recompute from the same aggregation there, so no
-    * stale per-part set can survive the switch).
-    */
-  private def retrackZones(schema: org.apache.spark.sql.types.StructType): Seq[String] = {
-    val zc = ZoneMap.zoneCols(schema, Set(LakeDataset.BucketCol))
-    trackedZoneSet = Some(zc.toSet)
-    zc
-  }
-
-  /** Declared bloom columns present in a frame's schema. */
-  private[lake] def bloomColsFor(schema: org.apache.spark.sql.types.StructType): Seq[String] =
-    bloomCols.filter(schema.fieldNames.contains)
-
-  /** Tracked SUM columns — same fixed-set discipline as [[trackedZoneSet]]
-    * (a per-schema recomputation could fold a batch's sums into a column
-    * the part never baselined, a falsely exact sum).
-    */
-  @volatile private[lake] var trackedSumSet: Option[Set[String]] = None
-
-  private[lake] def sumColsFor(schema: org.apache.spark.sql.types.StructType): Seq[String] = {
-    val tracked = trackedSumSet match {
-      case Some(t) => t
-      case None =>
-        val t = SumMap.sumCols(schema, Set(LakeDataset.BucketCol)).toSet
-        trackedSumSet = Some(t)
-        t
-    }
-    schema.fields.iterator
-      .filter(f => tracked.contains(f.name) && SumMap.summable(f.dataType))
-      .map(_.name).toSeq
-  }
-
-  private def retrackSums(schema: org.apache.spark.sql.types.StructType): Seq[String] = {
-    val sc = SumMap.sumCols(schema, Set(LakeDataset.BucketCol))
-    trackedSumSet = Some(sc.toSet)
-    sc
-  }
-
-  /** Declared sketch columns present in a frame's schema (and of a type
-    * `hll_sketch_agg` accepts — anything else would poison every routing
-    * aggregation with an analysis error).
-    */
-  private[lake] def sketchColsFor(schema: org.apache.spark.sql.types.StructType): Seq[String] =
-    sketchCols.filter(c => schema.fields.exists(f =>
-      f.name == c && HllMap.sketchable(f.dataType)))
-
-  /** Declared quantile columns present in a frame's schema (numeric — same
-    * late-analysis-error rationale as [[sketchColsFor]]).
-    */
-  private[lake] def quantileColsFor(schema: org.apache.spark.sql.types.StructType): Seq[String] =
-    quantileCols.filter(c => schema.fields.exists(f =>
-      f.name == c && QuantileMap.quantileable(f.dataType)))
-
-  /** Declared frequent-items columns present in a frame's schema (string-
-    * canonical types — same late-analysis-error rationale as
-    * [[sketchColsFor]]).
-    */
-  private[lake] def freqColsFor(schema: org.apache.spark.sql.types.StructType): Seq[String] =
-    freqCols.filter(c => schema.fields.exists(f =>
-      f.name == c && FreqMap.freqable(f.dataType)))
-
-  /** (zone, bloom, sum, sketch, quantile, freq columns) for a frame
-    * — the per-part stat selector threaded into [[LakePart]] so materialize
-    * recomputes the same sets.
-    */
-  private[lake] def statColsFor(schema: org.apache.spark.sql.types.StructType)
-      : (Seq[String], Seq[String], Seq[String], Seq[String], Seq[String], Seq[String]) =
-    (zoneColsFor(schema), bloomColsFor(schema), sumColsFor(schema),
-      sketchColsFor(schema), quantileColsFor(schema), freqColsFor(schema))
 
   def partKeys: List[PartKey] = parts.keySet().asScala.toList.sortBy(_.relPath)
   def part(key: PartKey): Option[LakePart] = Option(parts.get(key))
@@ -426,8 +385,7 @@ final class LakeDataset private (
       private[LakeDataset] val scan0: Option[DataFrame],
       private[LakeDataset] val since0: Long,
       private[LakeDataset] val checks0: Map[String, String],
-      private[LakeDataset] val zonesTracked0: Option[Set[String]],
-      private[LakeDataset] val sumsTracked0: Option[Set[String]],
+      private[LakeDataset] val tracked0: Map[StatFamily[_, _], Set[String]],
       private[LakeDataset] val pending0: List[SnapRef],
       private[LakeDataset] val retained0: List[SnapRef],
       private[LakeDataset] val txThread: Long)
@@ -460,7 +418,7 @@ final class LakeDataset private (
       parts.asScala.toMap.map { case (k, part) => k -> part.fork() },
       diskDirs.asScala.toMap, diskSchemas.asScala.toMap,
       cleanScan, sinceCompact.get, checksMap,
-      trackedZoneSet, trackedSumSet, p, r,
+      tracked, p, r,
       Thread.currentThread().getId)
   }
 
@@ -510,8 +468,7 @@ final class LakeDataset private (
     cleanScan = st.scan0
     sinceCompact.set(st.since0)
     checksMap = st.checks0
-    trackedZoneSet = st.zonesTracked0
-    trackedSumSet = st.sumsTracked0
+    tracked = st.tracked0
     txDeferredDead = null
     (createdInTx ++ deferredInTx).foreach(_.release())
   }
@@ -615,36 +572,12 @@ final class LakeDataset private (
     * snapshot, set the clean-scan fast path.
     */
   private def rebuildFromSnapshot(snap: DataFrame): Unit = {
-    // Zone maps + blooms recompute TIGHT here (mutations in between only
-    // widen); the tracked set refreshes too — safe on this path because
-    // every part's stats come from this same aggregation.
-    val zc = retrackZones(snap.schema)
-    val bc = bloomColsFor(snap.schema)
-    val sc = retrackSums(snap.schema)
-    val kc = sketchColsFor(snap.schema)
-    val qc = quantileColsFor(snap.schema)
-    val fc = freqColsFor(snap.schema)
-    val statAggs = count(lit(1)) +:
-      (ZoneMap.aggs(zc) ++ Bloom.aggs(bc) ++ SumMap.aggs(snap.schema, sc) ++
-        HllMap.aggs(kc) ++ QuantileMap.aggs(qc) ++ FreqMap.aggs(fc))
-    def bloomsAt(row: Row, offset: Int): Option[Map[String, Bloom]] =
-      if (bc.isEmpty) None else Some(Bloom.fromRow(row, offset, bc))
-    def sumsAt(row: Row, zoneOffset: Int): Option[Map[String, ColSum]] =
-      Some(SumMap.fromRow(row, zoneOffset + 2 * zc.length + Bloom.Planes * bc.length, sc))
-    def sketchesAt(row: Row, zoneOffset: Int): Option[Map[String, Array[Byte]]] =
-      if (kc.isEmpty) None
-      else Some(HllMap.fromRow(row,
-        zoneOffset + 2 * zc.length + Bloom.Planes * bc.length + 2 * sc.length, kc))
-    def quantsAt(row: Row, zoneOffset: Int): Option[Map[String, Array[Byte]]] =
-      if (qc.isEmpty) None
-      else Some(QuantileMap.fromRow(row,
-        zoneOffset + 2 * zc.length + Bloom.Planes * bc.length + 2 * sc.length +
-          2 * kc.length, qc))
-    def freqsAt(row: Row, zoneOffset: Int): Option[Map[String, Array[Byte]]] =
-      if (fc.isEmpty) None
-      else Some(FreqMap.fromRow(row,
-        zoneOffset + 2 * zc.length + Bloom.Planes * bc.length + 2 * sc.length +
-          2 * kc.length + qc.length, fc))
+    // Every family recomputes TIGHT here (mutations in between only widen
+    // or invalidate); the tracked sets refresh too — safe on this path
+    // because every part's stats come from this same aggregation.
+    retrack(snap.schema)
+    val layout = statLayout(snap.schema)
+    val aggs = layout.aggs
     val cells: Array[Row] =
       if (partitionCols.isEmpty && bucketCols.isEmpty) Array.empty
       else {
@@ -652,48 +585,26 @@ final class LakeDataset private (
           (if (bucketCols.nonEmpty)
             List(Bucketing.bucketExprFor(snap, bucketCols.head, nBuckets).as(LakeDataset.BucketCol))
           else Nil)
-        snap.groupBy(keyCols: _*).agg(statAggs.head, statAggs.tail: _*).collect()
+        snap.groupBy(keyCols: _*).agg(aggs.head, aggs.tail: _*).collect()
       }
     parts.clear()
     diskDirs.clear()
     diskSchemas.clear()
     if (cells.isEmpty) {
       val key = PartKey(Nil, None)
-      val row = snap.agg(statAggs.head, statAggs.tail: _*).head()
-      parts.put(key, new LakePart(snap, key, bucketCols, nBuckets, row.getLong(0),
-        retainDirect, initialZones = Some(ZoneMap.fromRow(row, 1, zc)),
-        statColsOf = statColsFor, initialBlooms = bloomsAt(row, 1 + 2 * zc.length),
-        snapshot = partSnapshot, initialSums = sumsAt(row, 1),
-        initialSketches = sketchesAt(row, 1), initialQuants = quantsAt(row, 1),
-        initialFreqs = freqsAt(row, 1)))
+      val (n, stats) = layout.of(snap)
+      parts.put(key, newPart(snap, key, n, stats))
     } else {
-      val nKeyCols = partitionCols.length + (if (bucketCols.nonEmpty) 1 else 0)
       cells.foreach { row =>
-        val partVals = partitionCols.zipWithIndex.map { case (c, i) =>
-          c -> Option(row.get(i)).map(_.toString).orNull
-        }
-        val bucketNr =
-          if (bucketCols.nonEmpty) {
-            if (row.isNullAt(nKeyCols - 1)) Some(LakeDataset.NullBucket)
-            else Some(row.getInt(nKeyCols - 1))
-          } else None
-        val n = row.getLong(nKeyCols)
-        val zones = ZoneMap.fromRow(row, nKeyCols + 1, zc)
+        val key = cellKeyOf(row)
+        val (n, stats) = layout.decode(row, cellKeyCols.length)
         val cond = partitionCols.zipWithIndex.map { case (c, i) =>
           if (row.isNullAt(i)) snap(c).isNull else snap(c) === lit(row.get(i))
-        } ++ bucketNr.map { b =>
+        } ++ key.bucketNr.map { b =>
           val e = Bucketing.bucketExprFor(snap, bucketCols.head, nBuckets)
           if (b == LakeDataset.NullBucket) e.isNull else e === lit(b)
         }
-        val key = PartKey(partVals.sortBy(_._1), bucketNr)
-        parts.put(key,
-          new LakePart(snap.filter(cond.reduce(_ && _)), key, bucketCols, nBuckets, n,
-            retainDirect, initialZones = Some(zones), statColsOf = statColsFor,
-            initialBlooms = bloomsAt(row, nKeyCols + 1 + 2 * zc.length),
-            snapshot = partSnapshot, initialSums = sumsAt(row, nKeyCols + 1),
-            initialSketches = sketchesAt(row, nKeyCols + 1),
-            initialQuants = quantsAt(row, nKeyCols + 1),
-            initialFreqs = freqsAt(row, nKeyCols + 1)))
+        parts.put(key, newPart(snap.filter(cond.reduce(_ && _)), key, n, stats))
       }
     }
     cleanScan = Some(snap)
@@ -924,14 +835,19 @@ final class LakeDataset private (
     * field can never silently bind into a neighboring slot (the positional
     * 12-arg constructor is how round 8 shipped a 15-error build).
     */
-  private def fullManifest(spec: StorageSpec, ddl: Option[String], v: Long): Manifest =
-    Manifest(partitionCols, bucketCols, nBuckets, spec, ddl,
-      partStats = serializedStats, bloomCols = bloomCols,
-      partBlooms = serializedBlooms, partRows = serializedRows,
-      partSums = serializedSums, sketchCols = sketchCols,
-      partSketches = serializedSketches, quantileCols = quantileCols,
-      partQuants = serializedQuants, freqCols = freqCols,
-      partFreqs = serializedFreqs, checks = checksMap, version = v)
+  private def fullManifest(spec: StorageSpec, ddl: Option[String], v: Long): Manifest = {
+    // Each part's stats are read BEFORE its tightness: a concurrent
+    // invalidation landing in between then reads as untight (nothing
+    // vouched), never as a stale value vouched for.
+    val cells = parts.asScala.map { case (key, part) =>
+      val st = part.stats
+      key.relPath -> ((st, part.vouched))
+    }
+    StatFamily.all.foldLeft(Manifest(partitionCols, bucketCols, nBuckets, spec, ddl,
+      bloomCols = bloomCols, partRows = serializedRows, sketchCols = sketchCols,
+      quantileCols = quantileCols, freqCols = freqCols, checks = checksMap,
+      version = v))((m, f) => f.store(m, cells))
+  }
 
   // ------------------------------------------------------------------
   // Optimistic concurrency — the manifest commit protocol.
@@ -1082,20 +998,12 @@ final class LakeDataset private (
         else if (disk.checks == commitBaseChecks || disk.checks == mine.checks) mine.checks
         else throw new java.util.ConcurrentModificationException(
           s"concurrent commit on ${spec.root}: CHECK constraints diverged — reload and retry")
-      def merge[V](diskM: Map[String, V], mineM: Map[String, V]): Map[String, V] =
-        (diskM -- myTouched) ++ mineM.view.filterKeys(myTouched).toMap
       val next = math.max(disk.version, committedVersion.get) + 1L
-      val merged = mine.copy(
+      val merged = StatFamily.all.foldLeft(mine.copy(
         schemaDdl = mine.schemaDdl.orElse(disk.schemaDdl),
-        partStats = merge(disk.partStats, mine.partStats),
-        partBlooms = merge(disk.partBlooms, mine.partBlooms),
-        partRows = merge(disk.partRows, mine.partRows),
-        partSums = merge(disk.partSums, mine.partSums),
-        partSketches = merge(disk.partSketches, mine.partSketches),
-        partQuants = merge(disk.partQuants, mine.partQuants),
-        partFreqs = merge(disk.partFreqs, mine.partFreqs),
+        partRows = (disk.partRows -- myTouched) ++ mine.partRows.view.filterKeys(myTouched).toMap,
         checks = mergedChecks,
-        version = next)
+        version = next))((m, f) => f.rebased(m, disk, mine, myTouched))
       committed = Manifest.writeIfVersion(merged, spec.root, disk.version)
       if (committed) {
         committedVersion.set(next)
@@ -1196,14 +1104,9 @@ final class LakeDataset private (
     require(!partitionCols.contains(name) && !bucketCols.contains(name),
       s"column '$name' is a partition/bucket axis - use ALTER TABLE " +
         "PARTITIONED BY/BUCKETED BY (a relayout) instead")
-    require(!bloomCols.contains(name),
-      s"column '$name' carries key Bloom statistics - relayout to change it")
-    require(!sketchCols.contains(name),
-      s"column '$name' carries HLL distinct sketches - relayout to change it")
-    require(!quantileCols.contains(name),
-      s"column '$name' carries quantile summaries - relayout to change it")
-    require(!freqCols.contains(name),
-      s"column '$name' carries frequent-items sketches - relayout to change it")
+    val carried = StatFamily.all.filter(_.declared(this).contains(name))
+    require(carried.isEmpty,
+      s"column '$name' carries ${carried.mkString(", ")} - relayout to change it")
     val referencing = checksMap.filter { case (_, e) =>
       try spark.sessionState.sqlParser.parseExpression(e).collect {
         case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
@@ -1250,8 +1153,7 @@ final class LakeDataset private (
   def dropColumn(name: String): Unit = this.synchronized {
     require(tableSchema.fieldNames.contains(name), s"unknown column '$name'")
     alterableColumn(name)
-    trackedZoneSet = trackedZoneSet.map(_ - name)
-    trackedSumSet = trackedSumSet.map(_ - name)
+    tracked = tracked.map { case (f, s) => f -> (s - name) }
     alterAllParts(_.drop(name), dropStats = Set(name), renameStats = Map.empty)
   }
 
@@ -1264,8 +1166,7 @@ final class LakeDataset private (
     require(tableSchema.fieldNames.contains(from), s"unknown column '$from'")
     require(!tableSchema.fieldNames.contains(to), s"column '$to' already exists")
     alterableColumn(from)
-    trackedZoneSet = trackedZoneSet.map(s => if (s(from)) s - from + to else s)
-    trackedSumSet = trackedSumSet.map(s => if (s(from)) s - from + to else s)
+    tracked = tracked.map { case (f, s) => f -> (if (s(from)) s - from + to else s) }
     alterAllParts(_.withColumnRenamed(from, to),
       dropStats = Set.empty, renameStats = Map(from -> to))
   }
@@ -1282,7 +1183,7 @@ final class LakeDataset private (
     */
   def analyze(): Int = this.synchronized {
     val untight = parts.values().asScala
-      .filterNot(p => p.statsTight.get && p.rows.get >= 0L).toList
+      .filterNot(_.vouched).toList
     if (untight.isEmpty) return 0
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -1291,27 +1192,6 @@ final class LakeDataset private (
     if (storage.isDefined) writeManifest()
     untight.size
   }
-
-  /** `COUNT(DISTINCT partition_col)` from the catalog: the number of
-    * distinct NON-NULL values of `c` across LIVE (non-empty) cells. Same
-    * vouch as [[metaStats]] — every selected cell tight with a known
-    * counter; a cell deleted to zero rows contributes no value (its
-    * directory may linger), and the NULL cell is excluded (SQL's
-    * COUNT(DISTINCT) ignores NULLs). None when any cell cannot vouch or
-    * `c` is not a partition column — fail open to the scan.
-    */
-  def metaDistinctPartition(c: String,
-      cellFilter: PartKey => Boolean = _ => true): Option[Long] =
-    this.synchronized {
-      if (!partitionCols.contains(c)) return None
-      val ps = parts.asScala.toList.filter(p => cellFilter(p._1))
-      if (ps.isEmpty) return Some(0L)
-      if (!ps.forall { case (_, p) => p.statsTight.get && p.rows.get >= 0L })
-        return None
-      Some(ps.filter(_._2.rows.get > 0L)
-        .map(_._1.partValues.collectFirst { case (k, v) if k == c => v }.orNull)
-        .filter(_ != null).distinct.size.toLong)
-    }
 
   /** Auto re-tighten — the stats-only analogue of the auto-compaction and
     * feed auto-checkpoint thresholds: when a mutation leaves MORE than
@@ -1330,7 +1210,7 @@ final class LakeDataset private (
     val thr = spark.conf.get("spark.graft.stats.autoAnalyzeCells", "64").toInt
     if (thr <= 0) return
     val untight = parts.values().asScala
-      .count(p => !(p.statsTight.get && p.rows.get >= 0L))
+      .count(!_.vouched)
     if (untight > thr) analyze()
   }
 
@@ -1389,62 +1269,8 @@ final class LakeDataset private (
   /** Exact row counts of the parts whose stats are tight — the manifest's
     * persisted tightness vouch (see [[graft.model.Manifest.partRows]]).
     */
-  // The three serializers below each SNAPSHOT their mutable stat once per
-  // part: a guard read and a value read on the same AtomicReference would
-  // race a concurrent invalidation (upsert/delete setting unknown between
-  // the two reads) into a crash or a -1 row count persisted as vouched.
-
   private def serializedRows: Map[String, Long] =
-    parts.asScala.flatMap { case (key, part) =>
-      val rows = part.rows.get
-      if (part.statsTight.get && rows >= 0L) Some(key.relPath -> rows) else None
-    }.toMap
-
-  /** Exact per-part column sums, serialized ONLY for tight parts (a stale
-    * sum is garbage, unlike a superset zone — there is no sound direction
-    * for it, so untight parts simply don't publish one).
-    */
-  private def serializedSums: Map[String, Map[String, (String, Long)]] =
-    parts.asScala.flatMap { case (key, part) =>
-      val sums = part.sums
-      if (part.statsTight.get && part.rows.get >= 0L && sums.isDefined)
-        Some(key.relPath -> sums.get.map { case (c, cs) => c -> SumMap.encode(cs) })
-      else None
-    }.toMap
-
-  /** Per-part HLL sketches, serialized ONLY for tight parts — same one-way
-    * discipline as [[serializedSums]] (a stale sketch is garbage; untight
-    * parts publish none and the loaded table fails open to a scan).
-    */
-  private def serializedSketches: Map[String, Map[String, String]] =
-    parts.asScala.flatMap { case (key, part) =>
-      val snap = part.sketches
-      if (part.statsTight.get && part.rows.get >= 0L && snap.exists(_.nonEmpty))
-        Some(key.relPath -> snap.get.map { case (c, b) => c -> HllMap.encode(b) })
-      else None
-    }.toMap
-
-  /** Per-part GK quantile summaries, serialized ONLY for tight parts — same
-    * one-way discipline as [[serializedSketches]].
-    */
-  private def serializedQuants: Map[String, Map[String, String]] =
-    parts.asScala.flatMap { case (key, part) =>
-      val snap = part.quants
-      if (part.statsTight.get && part.rows.get >= 0L && snap.exists(_.nonEmpty))
-        Some(key.relPath -> snap.get.map { case (c, b) => c -> QuantileMap.encode(b) })
-      else None
-    }.toMap
-
-  /** Per-part MG frequent-items sketches, serialized ONLY for tight parts —
-    * same one-way discipline as [[serializedSketches]].
-    */
-  private def serializedFreqs: Map[String, Map[String, String]] =
-    parts.asScala.flatMap { case (key, part) =>
-      val snap = part.freqs
-      if (part.statsTight.get && part.rows.get >= 0L && snap.exists(_.nonEmpty))
-        Some(key.relPath -> snap.get.map { case (c, b) => c -> FreqMap.encode(b) })
-      else None
-    }.toMap
+    parts.asScala.flatMap { case (key, part) => part.vouchedRows.map(key.relPath -> _) }.toMap
 
   /** Shared plan assembly + fallbacks for the prune paths: everything kept →
     * the (possibly clean-scan) whole table; nothing kept → a legitimately
@@ -1578,726 +1404,239 @@ final class LakeDataset private (
     futures.map(Await.result(_, Duration.Inf)).sum
   }
 
-  /** Metadata-only aggregate answer: the table's exact row count and exact
-    * per-column [min,max] for `cols`, computed ENTIRELY from the catalog —
-    * zero Spark jobs, zero file reads. Available only while every part's
-    * stats are tight ([[LakePart.statsTight]]): counters exact and zones
-    * equal to the data's true bounds (pure-append history, or recomputed by
-    * materialize, or restored from a vouching manifest). Any part that was
-    * upserted/deleted since its last materialize — or that lacks a zone for
-    * a requested column — makes the whole answer unavailable (None): the
-    * caller must fall back to a real scan. Fail open, never wrong.
+  /** The ONE catalog read behind every metadata answer — zero Spark jobs,
+    * zero file reads: a driver-side fold over the per-cell statistics
+    * ([[StatFamily]]), under the dataset monitor so one answer never mixes
+    * two table versions. It owns, once each:
     *
-    * At 100 TB this is the lakehouse metadata-query property: `COUNT(*)`,
-    * `MIN(k)`, `MAX(k)` over a 10k-cell table cost a fold over 10k catalog
-    * entries on the driver instead of a cluster-wide scan.
+    *  - the empty-table rule: a table with no cells answers None;
+    *  - the cell filter: selection is EXACT for whole-cell predicates
+    *    (partition-value equality/IN), a cell holding precisely its rows;
+    *  - the declaration rule: an opt-in family answers only for declared
+    *    columns;
+    *  - the TIGHT-AND-COUNTED gate ([[LakePart.vouchedRows]]): pure-append
+    *    history, a recount, or a vouching manifest.
+    *    A plain fold answers None unless every selected cell passes; a
+    *    `hybrid` fold splits the cells passing it AND carrying every
+    *    requested `families` column (vouched) from the rest, returns a scan
+    *    over only the rest, and answers None when nothing vouched;
+    *  - zero-row cells: a grouped fold drops them (a real GROUP BY emits no
+    *    group without rows) unless `emptyGroups` (top-k and group counts
+    *    are defined over zero rows);
+    *  - grouping: by PARTITION columns only, each group's values decoded
+    *    from the catalog's strings (None when a value does not round-trip);
+    *  - order: cells in relPath order, so the order-sensitive merges
+    *    (quantiles, frequent items) are deterministic.
+    *
+    * The per-family answers are projections of the result ([[CellGroup]]);
+    * any cell lacking a family or column fails that answer open — fall back
+    * to a scan, never a wrong answer.
+    */
+  private[graft] def fold(
+      families: Seq[(StatFamily[_, _], Seq[String])] = Nil,
+      groupBy: Option[Seq[String]] = None,
+      cellFilter: PartKey => Boolean = _ => true,
+      hybrid: Boolean = false,
+      emptyGroups: Boolean = false): Option[CatalogFold] = this.synchronized {
+    if (parts.isEmpty) return None
+    if (families.exists { case (f, cs) => f.optIn && !cs.forall(f.declared(this).contains) })
+      return None
+    if (groupBy.exists(g => g.isEmpty || !g.forall(partitionCols.contains))) return None
+    val (vouched, rest) = parts.asScala.toList.filter(p => cellFilter(p._1)).partition {
+      case (_, p) => p.vouched && (!hybrid || families.forall { case (f, cs) => p.stats.covers(f, cs) })
+    }
+    if (if (hybrid) vouched.isEmpty && rest.nonEmpty else rest.nonEmpty) return None
+    val cells = vouched.map { case (k, p) => FoldCell(k, p.rows.get, p.stats) }.sortBy(_.key.relPath)
+    val groups = groupBy match {
+      case None => Seq(CellGroup(Nil, cells))
+      case Some(g) =>
+        val schema = tableSchema
+        val live = if (emptyGroups) cells else cells.filter(_.rows > 0L)
+        live.groupBy(c => g.map(c.key.valueOf)).toSeq.map { case (strs, members) =>
+          CellGroup(strs.zip(g).map { case (s, c) =>
+            CatalogFold.decode(s, schema(c).dataType).getOrElse(return None)
+          }, members)
+        }
+    }
+    Some(CatalogFold(groups, if (rest.isEmpty) None else Some(assembleSubset(rest))))
+  }
+
+  /** Exact row count and per-column [min, max] from the catalog — the
+    * lakehouse metadata-query property: `COUNT(*)`, `MIN(k)`, `MAX(k)` over
+    * a 10k-cell table cost a fold over 10k catalog entries instead of a
+    * scan. An empty selection answers (0, no values).
     */
   def metaStats(cols: Seq[String],
       cellFilter: PartKey => Boolean = _ => true): Option[(Long, Map[String, Zone])] =
-    this.synchronized {
-      if (parts.isEmpty) return None
-      // Cell selection is EXACT for whole-cell predicates (partition-value
-      // equality/IN): a cell contains precisely the rows with its values.
-      val ps = parts.asScala.toList.filter(p => cellFilter(p._1)).map(_._2)
-      if (ps.isEmpty)
-        return Some((0L, cols.map(_ -> Zone(None, None)).toMap))
-      if (!ps.forall(p => p.statsTight.get && p.rows.get >= 0L)) return None
-      val zoneMaps = ps.map(_.zones)
-      if (cols.nonEmpty && !zoneMaps.forall(z => z.exists(m => cols.forall(m.contains))))
-        return None
-      val cnt = ps.map(_.rows.get).sum
-      val folded = scala.collection.mutable.Map[String, Zone]()
-      for (c <- cols) {
-        val zs: List[Zone] = zoneMaps.map(_.getOrElse(Map.empty)(c))
-        // Fold the per-part intervals; an incomparable pair (corrupt or
-        // type-drifted bound) kills the whole answer — fail open.
-        zs.map(Option(_)).reduce((a, b) =>
-          a.flatMap(x => b.flatMap(y => x.widen(y)))) match {
-          case Some(z) => folded(c) = z
-          case None => return None
-        }
-      }
-      Some((cnt, folded.toMap))
-    }
+    fold(cellFilter = cellFilter).flatMap(_.whole.zones(cols))
 
-  /** [[metaStats]] grouped by PARTITION columns: exact per-group (count,
-    * zones) folded from the catalog — `GROUP BY partition_col` aggregates
-    * with zero scans. Cells carry their partition values in the catalog
-    * key, so each group folds exactly the cells whose key matches.
-    * Returns None (fall back to a real scan) unless every part is tight,
-    * every requested column has a zone in every part, every grouping
-    * column IS a partition column, and every partition value decodes back
-    * to the column's type (values are strings in the catalog; integral
-    * and string partition columns round-trip — anything else fails open).
-    * Group values are external JVM values; a null partition value is the
-    * SQL NULL group.
+  /** [[metaStats]] per group of PARTITION-column values (external JVM
+    * values; a null partition value is the SQL NULL group). Groups without
+    * rows are omitted.
     */
   def metaStatsGrouped(groupCols: Seq[String], cols: Seq[String],
       cellFilter: PartKey => Boolean = _ => true)
-      : Option[Seq[(Seq[Any], Long, Map[String, Zone])]] = this.synchronized {
-    if (parts.isEmpty) return None
-    if (groupCols.isEmpty || !groupCols.forall(partitionCols.contains)) return None
-    val schema = tableSchema
-    import org.apache.spark.sql.types._
-    def decode(s: String, dt: DataType): Option[Any] =
-      if (s == null) Some(null)
-      else try dt match {
-        case StringType => Some(s)
-        case IntegerType => Some(Integer.valueOf(s))
-        case LongType => Some(java.lang.Long.valueOf(s))
-        case ShortType => Some(java.lang.Short.valueOf(s))
-        case ByteType => Some(java.lang.Byte.valueOf(s))
-        case BooleanType => Some(java.lang.Boolean.valueOf(s))
-        case _ => None
-      } catch { case scala.util.control.NonFatal(_) => None }
-    val psAll = parts.asScala.toList.filter(p => cellFilter(p._1))
-    if (psAll.isEmpty) return Some(Seq.empty)
-    if (!psAll.forall { case (_, p) => p.statsTight.get && p.rows.get >= 0L })
-      return None
-    // A provably EMPTY cell contributes no rows — and must contribute no
-    // GROUP: a real grouped aggregation emits nothing for a group with no
-    // rows, so a zero-count catalog row would be a phantom (reachable via
-    // DELETE emptying a cell + ANALYZE re-tightening it).
-    val ps = psAll.filter(_._2.rows.get > 0L)
-    if (ps.isEmpty) return Some(Seq.empty)
-    if (cols.nonEmpty &&
-        !ps.forall { case (_, p) => p.zones.exists(m => cols.forall(m.contains)) })
-      return None
-    val grouped = ps.groupBy { case (key, _) =>
-      groupCols.map(c => key.partValues.collectFirst {
-        case (k, v) if k == c => v
-      }.orNull)
-    }
-    val out = grouped.toSeq.map { case (strVals, members) =>
-      val vals = strVals.zip(groupCols).map { case (s, c) =>
-        decode(s, schema(c).dataType) match {
-          case Some(v) => v
-          case None => return None
-        }
-      }
-      val cnt = members.map(_._2.rows.get).sum
-      val zonesMaps = members.map(_._2.zones.getOrElse(Map.empty))
-      val folded = cols.map { c =>
-        val z = zonesMaps.map(m => Option(m(c)))
-          .reduce((a, b) => a.flatMap(x => b.flatMap(y => x.widen(y))))
-        z match {
-          case Some(zz) => c -> zz
-          case None => return None
-        }
-      }.toMap
-      (vals, cnt, folded)
-    }
-    Some(out)
-  }
+      : Option[Seq[(Seq[Any], Long, Map[String, Zone])]] =
+    fold(groupBy = Some(groupCols), cellFilter = cellFilter)
+      .flatMap(_.each(_.zones(cols)))
+      .map(_.map { case (vals, (n, zones)) => (vals, n, zones) })
 
-  /** Metadata-only SUM answer: the table's exact row count and exact
-    * per-column sums for `cols`, folded ENTIRELY from the catalog — zero
-    * Spark jobs, zero file reads. Same tightness contract as [[metaStats]]
-    * (every selected part tight with a known counter), plus every part must
-    * carry a sum entry for every requested column (appends fold exactly;
-    * upsert/delete invalidate; materialize recomputes; the manifest
-    * persists sums only for vouched-tight parts). The fold is exact by
-    * construction: per-part sums accumulate as DECIMAL(38, s), whose
-    * addition is associative — any fold order equals the one-shot scan.
-    * Fail open (None) on anything less; never a wrong answer.
+  /** Exact row count and per-column sums (see [[SumMap]]) from the catalog;
+    * an empty selection answers (0, zero sums).
     */
   def metaSums(cols: Seq[String],
       cellFilter: PartKey => Boolean = _ => true): Option[(Long, Map[String, ColSum])] =
-    this.synchronized {
-      if (parts.isEmpty) return None
-      val ps = parts.asScala.toList.filter(p => cellFilter(p._1)).map(_._2)
-      if (ps.isEmpty) return Some((0L, cols.map(_ -> SumMap.Zero).toMap))
-      if (!ps.forall(p => p.statsTight.get && p.rows.get >= 0L)) return None
-      val sumMaps = ps.map(_.sums)
-      if (!sumMaps.forall(s => s.exists(m => cols.forall(m.contains)))) return None
-      val maps = sumMaps.map(_.get)
-      val cnt = ps.map(_.rows.get).sum
-      val folded = cols.map { c =>
-        c -> maps.map(_(c)).reduce((a, b) => a.add(b))
-      }.toMap
-      Some((cnt, folded))
-    }
+    fold(cellFilter = cellFilter).flatMap(_.whole.sums(cols))
 
-  /** Metadata-only APPROX_COUNT_DISTINCT answer: per-column HLL union
-    * estimates folded ENTIRELY from the catalog — zero Spark jobs, zero
-    * file reads. Same tightness contract as [[metaSums]] (every selected
-    * part tight with a known counter AND a sketch for every requested
-    * column). The union of per-part sketches carries the same registers as
-    * one sketch over the whole table (register-wise max — see [[HllMap]]),
-    * so the returned estimate equals what a distributed
-    * `hll_sketch_estimate(hll_sketch_agg(c))` scan would print, bit for
-    * bit. Fail open (None) on anything less; never a divergent answer.
+  /** APPROX_COUNT_DISTINCT from the per-cell HLL sketches: the union
+    * carries the same registers as one sketch over the table, so the
+    * estimate equals a distributed `hll_sketch_estimate(hll_sketch_agg(c))`
+    * scan (see [[HllMap]]). An empty selection answers 0 per column.
     */
   def metaApproxDistinct(cols: Seq[String],
       cellFilter: PartKey => Boolean = _ => true): Option[Map[String, Long]] =
-    this.synchronized {
-      if (parts.isEmpty || cols.isEmpty) return None
-      if (!cols.forall(sketchCols.contains)) return None
-      val ps = parts.asScala.toList.filter(p => cellFilter(p._1)).map(_._2)
-      if (ps.isEmpty) return Some(cols.map(_ -> 0L).toMap)
-      if (!ps.forall(p => p.statsTight.get && p.rows.get >= 0L)) return None
-      val sketchMaps = ps.map(_.sketches)
-      if (!sketchMaps.forall(s => s.exists(m => cols.forall(m.contains)))) return None
-      val maps = sketchMaps.map(_.get)
-      Some(cols.map(c => c -> HllMap.unionEstimate(maps.map(_(c)))).toMap)
-    }
+    if (cols.isEmpty) None
+    else fold(Seq(StatFamily.Sketches -> cols), cellFilter = cellFilter)
+      .flatMap(_.whole.approxDistinct(cols))
 
-  /** Metadata-only PARTITION-OVERLAP matrix: how many distinct `c` values
-    * each pair of `partitionCol` values SHARES — the day-over-day /
-    * segment-retention dashboard — folded ENTIRELY from the catalog's
-    * per-cell HLL sketches: zero Spark jobs, zero file reads, at any part
-    * count. Per partition value the cell sketches union losslessly
-    * (register-wise max); the pairwise intersection is the standard HLL
-    * inclusion-exclusion `max(0, |A|+|B|-|A∪B|)`, whose error scales with
-    * the UNION's RSE — honest for overlaps that are a meaningful fraction
-    * of the union, drowned for tiny ones (HLL fundamentally cannot
-    * intersect; [[graft.functions.ThetaAgg.overlapMatrix]] is the
-    * one-scan precise path when that matters; in the exact sparse regime
-    * — under 2^LgK distinct per side — both agree with the truth).
-    *
-    * Same fail-open tightness contract as [[metaApproxDistinct]]. Returns
-    * every unordered pair of partition values `(v_a < v_b, |A|, |B|,
-    * both)`, including zero-overlap pairs.
-    */
-  /** Metadata-only NET-NEW uniques per partition value: for partition
-    * values in sorted order, `|v_i \ (v_0 ∪ … ∪ v_{i-1})|` — the
-    * "how many users did each day actually ADD" dashboard, answered
-    * entirely from the catalog's per-cell theta twins (A-not-B is
-    * first-class theta algebra; HLL cannot subtract, so there is no HLL
-    * fallback — pre-theta manifests fail open). Zero Spark jobs, zero
-    * file reads; EXACT while the running union stays under the sketch's
-    * nominal entries, ~1/√k honest-approximate past it. Same tightness
-    * contract as [[metaPartitionOverlap]]. Returns
-    * (value, distinct, net_new) rows in value order; the first value's
-    * net_new equals its distinct count.
+  /** NET-NEW distinct `c` per partition value in value order:
+    * `|v_i \ (v_0 ∪ … ∪ v_{i-1})|`, from the per-cell theta twins (A-not-B
+    * is theta algebra; HLL cannot subtract, so pre-theta manifests fail
+    * open). EXACT while the running union stays under the sketch's nominal
+    * entries. Rows are (value, distinct, net_new).
     */
   def metaPartitionNetNew(c: String, partitionCol: String)
-      : Option[Seq[(String, Long, Long)]] = this.synchronized {
-    if (!sketchCols.contains(c)) return None
-    if (!partitionCols.contains(partitionCol)) return None
-    val ps = parts.asScala.toList
-    if (ps.isEmpty) return Some(Seq.empty)
-    if (!ps.forall(p => p._2.statsTight.get && p._2.rows.get >= 0L)) return None
-    val tk = HllMap.thetaKey(c)
-    if (!ps.forall(_._2.sketches.exists(_.contains(tk)))) return None
-    import graft.functions.ThetaCodec
-    val groups = ps
-      .groupBy(_._1.partValues.toMap.getOrElse(partitionCol, ""))
-      .map { case (v, cells) => v -> cells.map(_._2.sketches.get(tk)) }
-      .toSeq.sortBy(_._1)
-    val seen = ThetaCodec.emptyUnion()
-    var first = true
-    val out = groups.map { case (v, sks) =>
-      val g = ThetaCodec.emptyUnion()
-      sks.foreach(b => g.union(ThetaCodec.wrap(b)))
-      val gc = g.getResult
-      val distinct = Math.round(gc.getEstimate)
-      val netNew =
-        if (first) distinct
-        else Math.round(org.apache.datasketches.theta.SetOperation.builder()
-          .buildANotB().aNotB(gc, seen.getResult).getEstimate)
-      seen.union(gc)
-      first = false
-      (v, distinct, netNew)
+      : Option[Seq[(String, Long, Long)]] =
+    if (!partitionCols.contains(partitionCol)) None
+    else fold(Seq(StatFamily.Sketches -> Seq(c))) match {
+      case Some(f) => f.whole.netNew(c, partitionCol)
+      case None => Option.when(sketchCols.contains(c) && parts.isEmpty)(Seq.empty)
     }
-    Some(out)
-  }
 
+  /** Pairwise overlap of distinct `c` between partition values — every
+    * unordered pair `(v_a < v_b, |A|, |B|, |A ∩ B|)`, zero overlaps
+    * included. Theta intersection when every cell carries the twin (EXACT
+    * under nominal entries), else HLL inclusion-exclusion, whose error
+    * scales with the union ([[graft.functions.ThetaAgg.overlapMatrix]] is
+    * the one-scan precise path).
+    */
   def metaPartitionOverlap(c: String, partitionCol: String)
-      : Option[Seq[(String, String, Long, Long, Long)]] = this.synchronized {
-    if (!sketchCols.contains(c)) return None
-    if (!partitionCols.contains(partitionCol)) return None
-    val ps = parts.asScala.toList
-    if (ps.isEmpty) return Some(Seq.empty)
-    if (!ps.forall(p => p._2.statsTight.get && p._2.rows.get >= 0L)) return None
-    if (!ps.forall(_._2.sketches.exists(_.contains(c)))) return None
-    // Preferred path: per-cell THETA twins (maintained beside every HLL
-    // entry since they shipped — see HllMap.ThetaPrefix). Theta
-    // intersection answers the overlap DIRECTLY with ~1/√k relative error
-    // on the smaller operand — and EXACTLY while a group stays under the
-    // sketch's nominal entries — where HLL inclusion-exclusion subtracts
-    // two large estimates and drowns small intersections in their error.
-    // Pre-theta manifests (no twins persisted) fall back to the HLL path.
-    val tk = HllMap.thetaKey(c)
-    val haveTheta = ps.forall(_._2.sketches.exists(_.contains(tk)))
-    val groups: Seq[(String, Seq[Array[Byte]])] = ps
-      .groupBy(_._1.partValues.toMap.getOrElse(partitionCol, ""))
-      .map { case (v, cells) =>
-        v -> cells.map(_._2.sketches.get(if (haveTheta) tk else c))
-      }
-      .toSeq.sortBy(_._1)
-    val out = for {
-      i <- groups.indices; j <- (i + 1) until groups.length
-      (va, sa) = groups(i); (vb, sb) = groups(j)
-    } yield if (haveTheta) {
-      val a = HllMap.thetaUnionEstimate(sa)
-      val b = HllMap.thetaUnionEstimate(sb)
-      (va, vb, a, b, HllMap.thetaIntersectEstimate(sa, sb))
-    } else {
-      val a = HllMap.unionEstimate(sa)
-      val b = HllMap.unionEstimate(sb)
-      val u = HllMap.unionEstimate(sa ++ sb)
-      (va, vb, a, b, math.max(0L, a + b - u))
+      : Option[Seq[(String, String, Long, Long, Long)]] =
+    if (!partitionCols.contains(partitionCol)) None
+    else fold(Seq(StatFamily.Sketches -> Seq(c))) match {
+      case Some(f) => f.whole.overlap(c, partitionCol)
+      case None => Option.when(sketchCols.contains(c) && parts.isEmpty)(Seq.empty)
     }
-    Some(out)
-  }
 
-  /** Metadata-only APPROX QUANTILE answers: per-column GK summaries folded
-    * ENTIRELY from the catalog — zero Spark jobs, zero file reads. Same
-    * tightness contract as [[metaApproxDistinct]] (every selected part
-    * tight with a known counter AND a summary for every requested column);
-    * parts fold in sorted key order, so the answer is a deterministic
-    * function of the catalog state, within the GK rank-error bound (~2ε,
-    * ε = [[QuantileMap.Eps]]) of the true quantile — see [[QuantileMap]]
-    * for why no mergeable quantile summary can promise bit-equality with a
-    * scan. Fail open (None) on anything less — including an empty table,
-    * where no quantile is defined; never a divergent answer.
+  /** Approx quantiles from the per-cell GK summaries, within the GK rank
+    * bound of the true quantile (see [[QuantileMap]] for why no mergeable
+    * summary can promise bit-equality with a scan). None over an empty
+    * selection, where no quantile is defined.
     */
   def metaApproxQuantile(cols: Seq[String], qs: Seq[Double],
       cellFilter: PartKey => Boolean = _ => true)
       : Option[Map[String, Seq[Double]]] =
-    this.synchronized {
-      if (parts.isEmpty || cols.isEmpty || qs.isEmpty) return None
-      if (!cols.forall(quantileCols.contains)) return None
-      val ps = parts.asScala.toList.filter(p => cellFilter(p._1))
-        .sortBy(_._1.relPath).map(_._2)
-      if (ps.isEmpty) return None
-      if (!ps.forall(p => p.statsTight.get && p.rows.get >= 0L)) return None
-      val quantMaps = ps.map(_.quants)
-      if (!quantMaps.forall(s => s.exists(m => cols.forall(m.contains)))) return None
-      val maps = quantMaps.map(_.get)
-      val answers = cols.map { c =>
-        val folded = QuantileMap.fold(maps.map(_(c)))
-        c -> qs.map(q => folded.query(q))
-      }
-      if (answers.exists(_._2.exists(_.isEmpty))) None
-      else Some(answers.map { case (c, vs) => c -> vs.map(_.get) }.toMap)
+    if (cols.isEmpty || qs.isEmpty) None
+    else fold(Seq(StatFamily.Quantiles -> cols), cellFilter = cellFilter)
+      .flatMap(_.whole.quantiles(cols, qs))
+
+  /** [[metaApproxQuantile]] per partition group. Groups whose summarized
+    * stream is empty are omitted (no quantile over zero values).
+    */
+  def metaApproxQuantileGrouped(groupCols: Seq[String], cols: Seq[String],
+      qs: Seq[Double], cellFilter: PartKey => Boolean = _ => true)
+      : Option[Seq[(Seq[Any], Map[String, Seq[Double]])]] =
+    if (cols.isEmpty || qs.isEmpty) None
+    else fold(Seq(StatFamily.Quantiles -> cols), Some(groupCols), cellFilter).collect {
+      case f if f.groups.forall(_.column(StatFamily.Quantiles, cols).isDefined) =>
+        f.groups.flatMap(g => g.quantiles(cols, qs).map(g.values -> _))
     }
 
-  /** Metadata-only TOP-K / heavy-hitters answers: per-column Misra–Gries
-    * sketches folded ENTIRELY from the catalog — zero Spark jobs, zero file
-    * reads. Same tightness contract as [[metaApproxQuantile]]; parts fold
-    * in sorted key order (deterministic function of the catalog state).
-    *
-    * Returns per column the top-`k` stored values as
+  /** Top-`k` values per column from the per-cell Misra–Gries sketches, as
     * (value, lower, upper, exact): `lower ≤ true count ≤ upper` is
-    * CERTIFIED by the sketch, and `exact = (lower == upper)` — true
-    * whenever the column's cardinality never exceeded the counter budget
-    * anywhere (then the counts are exact corpus counts and the fold is
-    * order-independent; see [[FreqMap]]). NULLs are not values: the
-    * ranking covers non-null values only (SQL aggregate semantics — the
-    * null-group count lives in [[metaGroupCounts]]). Fail open (None) on
-    * anything less — never a wrong or uncertified answer.
+    * CERTIFIED, and exact whenever the column's cardinality never exceeded
+    * the counter budget (see [[FreqMap]]). NULLs are not values. None over
+    * an empty selection.
     */
   def metaTopK(cols: Seq[String], k: Int,
       cellFilter: PartKey => Boolean = _ => true)
       : Option[Map[String, Seq[(String, Long, Long, Boolean)]]] =
-    this.synchronized {
-      if (parts.isEmpty || cols.isEmpty || k <= 0) return None
-      if (!cols.forall(freqCols.contains)) return None
-      val ps = parts.asScala.toList.filter(p => cellFilter(p._1))
-        .sortBy(_._1.relPath).map(_._2)
-      if (ps.isEmpty) return None
-      if (!ps.forall(p => p.statsTight.get && p.rows.get >= 0L)) return None
-      val freqMaps = ps.map(_.freqs)
-      if (!freqMaps.forall(s => s.exists(m => cols.forall(m.contains)))) return None
-      val maps = freqMaps.map(_.get)
-      Some(cols.map { c =>
-        val folded = FreqMap.fold(maps.map(_(c)))
-        c -> folded.topK(k).map { case (v, lo, hi) => (v, lo, hi, lo == hi) }
-      }.toMap)
-    }
+    if (cols.isEmpty || k <= 0) None
+    else fold(Seq(StatFamily.Freqs -> cols), cellFilter = cellFilter)
+      .flatMap(_.whole.topK(cols, k))
 
-  /** EXACT group-by-count answers from the frequent-items catalog: the
-    * complete (value → count) table of `column`, CERTIFIED exact — only
-    * answered when every selected part is tight AND the folded sketch
-    * never evicted (`dec == 0`, so it holds EVERY distinct value with its
-    * exact count and the fold is merge-order independent). The null group
-    * comes from the row counters (`rows − sketch.n`; the sketch skips
-    * NULLs by aggregate semantics), keyed `None`. This is what lets the
-    * SQL rewrite collapse `GROUP BY col + COUNT` over a low-cardinality
-    * tracked column to a LocalRelation with zero scan tasks
-    * ([[graft.plans.LakePruneRule]]). Fail open (None) on anything less —
-    * an evicted sketch answers nothing rather than an uncertified count.
-    */
-  def metaGroupCounts(column: String, cellFilter: PartKey => Boolean = _ => true)
-      : Option[Seq[(Option[String], Long)]] = this.synchronized {
-    if (parts.isEmpty) return None
-    if (!freqCols.contains(column)) return None
-    val ps = parts.asScala.toList.filter(p => cellFilter(p._1))
-      .sortBy(_._1.relPath).map(_._2)
-    if (ps.isEmpty) return Some(Seq.empty)
-    if (!ps.forall(p => p.statsTight.get && p.rows.get >= 0L)) return None
-    val maps = ps.map(_.freqs)
-    if (!maps.forall(_.exists(_.contains(column)))) return None
-    val folded = FreqMap.fold(maps.map(_.get.apply(column)))
-    if (!folded.isExact) return None
-    val rows = ps.map(_.rows.get).sum
-    val nulls = rows - folded.n
-    val base = folded.counters.toSeq.sortBy(_._1)
-      .map { case (v, c) => (Some(v): Option[String], c) }
-    Some(if (nulls > 0) base :+ ((None: Option[String]) -> nulls) else base)
-  }
-
-  /** [[metaGroupCounts]] grouped by PARTITION columns: per partition group
-    * the complete certified-exact (value → count) table of `column`, null
-    * group included per group (group rows − group sketch n). Same gating
-    * as [[metaTopKGrouped]], PLUS the exactness certificate per group —
-    * any group whose fold evicted fails the WHOLE answer open. This backs
-    * the two-dimensional SQL collapse (`GROUP BY partition_col, freq_col
-    * + COUNT` → LocalRelation — the "status counts per day" dashboard
-    * query with zero scan tasks).
-    */
-  def metaGroupCountsGrouped(groupCols: Seq[String], column: String,
-      cellFilter: PartKey => Boolean = _ => true)
-      : Option[Seq[(Seq[Any], Seq[(Option[String], Long)])]] = this.synchronized {
-    if (parts.isEmpty) return None
-    if (groupCols.isEmpty || !groupCols.forall(partitionCols.contains)) return None
-    if (!freqCols.contains(column)) return None
-    val schema = tableSchema
-    import org.apache.spark.sql.types._
-    def decode(s: String, dt: DataType): Option[Any] =
-      if (s == null) Some(null)
-      else try dt match {
-        case StringType => Some(s)
-        case IntegerType => Some(Integer.valueOf(s))
-        case LongType => Some(java.lang.Long.valueOf(s))
-        case ShortType => Some(java.lang.Short.valueOf(s))
-        case ByteType => Some(java.lang.Byte.valueOf(s))
-        case BooleanType => Some(java.lang.Boolean.valueOf(s))
-        case _ => None
-      } catch { case scala.util.control.NonFatal(_) => None }
-    val psAll = parts.asScala.toList.filter(p => cellFilter(p._1))
-    if (psAll.isEmpty) return Some(Seq.empty)
-    if (!psAll.forall { case (_, p) => p.statsTight.get && p.rows.get >= 0L })
-      return None
-    if (!psAll.forall { case (_, p) => p.freqs.exists(_.contains(column)) })
-      return None
-    val grouped = psAll.groupBy { case (key, _) =>
-      groupCols.map(c => key.partValues.collectFirst {
-        case (g, v) if g == c => v
-      }.orNull)
-    }
-    val out = grouped.toSeq.map { case (strVals, members0) =>
-      val vals = strVals.zip(groupCols).map { case (s, c) =>
-        decode(s, schema(c).dataType) match {
-          case Some(v) => v
-          case None => return None
-        }
-      }
-      val members = members0.sortBy(_._1.relPath)
-      val folded = FreqMap.fold(members.map(_._2.freqs.get.apply(column)))
-      if (!folded.isExact) return None
-      val rows = members.map(_._2.rows.get).sum
-      val nulls = rows - folded.n
-      val base = folded.counters.toSeq.sortBy(_._1)
-        .map { case (v, c) => (Some(v): Option[String], c) }
-      (vals, if (nulls > 0) base :+ ((None: Option[String]) -> nulls) else base)
-    }
-    Some(out)
-  }
-
-  /** [[metaTopK]] grouped by PARTITION columns — per-group top values
-    * folded from each group's member parts only, same gating as
-    * [[metaApproxQuantileGrouped]] (every part tight, sketches for every
-    * requested column; group values decoded from the partition path).
-    * Zero-row groups answer an empty ranking (top-k over nothing is
-    * defined, unlike a quantile).
+  /** [[metaTopK]] per partition group; zero-row groups answer an empty
+    * ranking.
     */
   def metaTopKGrouped(groupCols: Seq[String], cols: Seq[String], k: Int,
       cellFilter: PartKey => Boolean = _ => true)
       : Option[Seq[(Seq[Any], Map[String, Seq[(String, Long, Long, Boolean)]])]] =
-    this.synchronized {
-      if (parts.isEmpty || cols.isEmpty || k <= 0) return None
-      if (groupCols.isEmpty || !groupCols.forall(partitionCols.contains)) return None
-      if (!cols.forall(freqCols.contains)) return None
-      val schema = tableSchema
-      import org.apache.spark.sql.types._
-      def decode(s: String, dt: DataType): Option[Any] =
-        if (s == null) Some(null)
-        else try dt match {
-          case StringType => Some(s)
-          case IntegerType => Some(Integer.valueOf(s))
-          case LongType => Some(java.lang.Long.valueOf(s))
-          case ShortType => Some(java.lang.Short.valueOf(s))
-          case ByteType => Some(java.lang.Byte.valueOf(s))
-          case BooleanType => Some(java.lang.Boolean.valueOf(s))
-          case _ => None
-        } catch { case scala.util.control.NonFatal(_) => None }
-      val psAll = parts.asScala.toList.filter(p => cellFilter(p._1))
-      if (psAll.isEmpty) return Some(Seq.empty)
-      if (!psAll.forall { case (_, p) => p.statsTight.get && p.rows.get >= 0L })
-        return None
-      if (!psAll.forall { case (_, p) => p.freqs.exists(m => cols.forall(m.contains)) })
-        return None
-      val grouped = psAll.groupBy { case (key, _) =>
-        groupCols.map(c => key.partValues.collectFirst {
-          case (g, v) if g == c => v
-        }.orNull)
-      }
-      val out = grouped.toSeq.map { case (strVals, members0) =>
-        val vals = strVals.zip(groupCols).map { case (s, c) =>
-          decode(s, schema(c).dataType) match {
-            case Some(v) => v
-            case None => return None
-          }
-        }
-        val members = members0.sortBy(_._1.relPath)
-        (vals, cols.map { c =>
-          val folded = FreqMap.fold(members.map(_._2.freqs.get.apply(c)))
-          c -> folded.topK(k).map { case (v, lo, hi) => (v, lo, hi, lo == hi) }
-        }.toMap)
-      }
-      Some(out)
-    }
+    if (cols.isEmpty || k <= 0) None
+    else fold(Seq(StatFamily.Freqs -> cols), Some(groupCols), cellFilter, emptyGroups = true)
+      .flatMap(_.each(_.topK(cols, k)))
 
-  /** [[metaApproxQuantile]] grouped by PARTITION columns — per-group
-    * approx quantiles folded from each group's member parts only, same
-    * gating as [[metaSumsGrouped]] (every part tight, summaries for every
-    * requested column; group values decoded from the partition path).
-    * Groups whose summarized stream is empty are omitted (no quantile is
-    * defined over zero non-null values).
+  /** EXACT group-by-count table of `column` from the frequent-items
+    * catalog, answered only while the folded sketch never evicted (then it
+    * holds every distinct value with its exact count); the null group comes
+    * from the row counters. Lets the SQL rewrite collapse `GROUP BY col +
+    * COUNT` to a LocalRelation ([[graft.plans.LakePruneRule]]).
     */
-  def metaApproxQuantileGrouped(groupCols: Seq[String], cols: Seq[String],
-      qs: Seq[Double], cellFilter: PartKey => Boolean = _ => true)
-      : Option[Seq[(Seq[Any], Map[String, Seq[Double]])]] = this.synchronized {
-    if (parts.isEmpty || cols.isEmpty || qs.isEmpty) return None
-    if (groupCols.isEmpty || !groupCols.forall(partitionCols.contains)) return None
-    if (!cols.forall(quantileCols.contains)) return None
-    val schema = tableSchema
-    import org.apache.spark.sql.types._
-    def decode(s: String, dt: DataType): Option[Any] =
-      if (s == null) Some(null)
-      else try dt match {
-        case StringType => Some(s)
-        case IntegerType => Some(Integer.valueOf(s))
-        case LongType => Some(java.lang.Long.valueOf(s))
-        case ShortType => Some(java.lang.Short.valueOf(s))
-        case ByteType => Some(java.lang.Byte.valueOf(s))
-        case BooleanType => Some(java.lang.Boolean.valueOf(s))
-        case _ => None
-      } catch { case scala.util.control.NonFatal(_) => None }
-    val psAll = parts.asScala.toList.filter(p => cellFilter(p._1))
-    if (psAll.isEmpty) return Some(Seq.empty)
-    if (!psAll.forall { case (_, p) => p.statsTight.get && p.rows.get >= 0L })
-      return None
-    val ps = psAll.filter(_._2.rows.get > 0L)
-    if (ps.isEmpty) return Some(Seq.empty)
-    if (!ps.forall { case (_, p) => p.quants.exists(m => cols.forall(m.contains)) })
-      return None
-    val grouped = ps.groupBy { case (key, _) =>
-      groupCols.map(c => key.partValues.collectFirst {
-        case (k, v) if k == c => v
-      }.orNull)
-    }
-    val out = grouped.toSeq.flatMap { case (strVals, members0) =>
-      val vals = strVals.zip(groupCols).map { case (s, c) =>
-        decode(s, schema(c).dataType) match {
-          case Some(v) => v
-          case None => return None
-        }
-      }
-      val members = members0.sortBy(_._1.relPath)
-      val answers = cols.map { c =>
-        val folded = QuantileMap.fold(members.map(_._2.quants.get.apply(c)))
-        c -> qs.map(q => folded.query(q))
-      }
-      if (answers.exists(_._2.exists(_.isEmpty))) None
-      else Some((vals, answers.map { case (c, vs) => c -> vs.map(_.get) }.toMap))
-    }
-    Some(out)
-  }
+  def metaGroupCounts(column: String, cellFilter: PartKey => Boolean = _ => true)
+      : Option[Seq[(Option[String], Long)]] =
+    fold(Seq(StatFamily.Freqs -> Seq(column)), cellFilter = cellFilter)
+      .flatMap(_.whole.groupCounts(column))
 
-  /** [[metaSums]] grouped by PARTITION columns — the grouped analogue,
-    * mirroring [[metaStatsGrouped]]'s gating and group-value decoding.
+  /** [[metaGroupCounts]] per partition group (zero-row groups kept); any
+    * group whose fold evicted fails the whole answer open.
     */
-  def metaSumsGrouped(groupCols: Seq[String], cols: Seq[String],
+  def metaGroupCountsGrouped(groupCols: Seq[String], column: String,
       cellFilter: PartKey => Boolean = _ => true)
-      : Option[Seq[(Seq[Any], Long, Map[String, ColSum])]] = this.synchronized {
-    if (parts.isEmpty) return None
-    if (groupCols.isEmpty || !groupCols.forall(partitionCols.contains)) return None
-    val schema = tableSchema
-    import org.apache.spark.sql.types._
-    def decode(s: String, dt: DataType): Option[Any] =
-      if (s == null) Some(null)
-      else try dt match {
-        case StringType => Some(s)
-        case IntegerType => Some(Integer.valueOf(s))
-        case LongType => Some(java.lang.Long.valueOf(s))
-        case ShortType => Some(java.lang.Short.valueOf(s))
-        case ByteType => Some(java.lang.Byte.valueOf(s))
-        case BooleanType => Some(java.lang.Boolean.valueOf(s))
-        case _ => None
-      } catch { case scala.util.control.NonFatal(_) => None }
-    val psAll = parts.asScala.toList.filter(p => cellFilter(p._1))
-    if (psAll.isEmpty) return Some(Seq.empty)
-    if (!psAll.forall { case (_, p) => p.statsTight.get && p.rows.get >= 0L })
-      return None
-    // Zero-row cells contribute no groups — see [[metaStatsGrouped]].
-    val ps = psAll.filter(_._2.rows.get > 0L)
-    if (ps.isEmpty) return Some(Seq.empty)
-    if (!ps.forall { case (_, p) => p.sums.exists(m => cols.forall(m.contains)) })
-      return None
-    val grouped = ps.groupBy { case (key, _) =>
-      groupCols.map(c => key.partValues.collectFirst {
-        case (k, v) if k == c => v
-      }.orNull)
-    }
-    val out = grouped.toSeq.map { case (strVals, members) =>
-      val vals = strVals.zip(groupCols).map { case (s, c) =>
-        decode(s, schema(c).dataType) match {
-          case Some(v) => v
-          case None => return None
-        }
-      }
-      val cnt = members.map(_._2.rows.get).sum
-      val folded = cols.map { c =>
-        c -> members.map(_._2.sums.get.apply(c)).reduce((a, b) => a.add(b))
-      }.toMap
-      (vals, cnt, folded)
-    }
-    Some(out)
-  }
+      : Option[Seq[(Seq[Any], Seq[(Option[String], Long)])]] =
+    fold(Seq(StatFamily.Freqs -> Seq(column)), Some(groupCols), cellFilter, emptyGroups = true)
+      .flatMap(_.each(_.groupCounts(column)))
 
-  /** Partial catalog fold for HYBRID aggregation: split the parts into the
-    * set whose stats can vouch for `cols` (tight, counted, zoned) and the
-    * rest; fold the vouched side entirely from the catalog and hand back a
-    * DataFrame covering ONLY the rest. `Some((cnt, zones, scanDf))` means
-    * `cnt`/`zones` exactly cover the vouched parts and `scanDf` (None when
-    * every part vouched) holds precisely the remaining rows — the caller
-    * combines one small scan with the fold for an answer identical to a
-    * full-table aggregation. None = nothing vouched (or a fold failed):
-    * fall back to the one full scan.
-    *
-    * The 100 TB shape this serves: one upsert dirties ONE cell of a
-    * 10k-cell table — all-or-nothing metadata answering then scans 10k
-    * cells for a count; the hybrid scans 1.
-    */
+  /** [[metaHybrid]] for count and bounds only. */
   def metaStatsPartial(cols: Seq[String])
       : Option[(Long, Map[String, Zone], Option[DataFrame])] =
     metaHybrid(cols, Nil).map { case (cnt, zones, _, rest) => (cnt, zones, rest) }
 
-  /** [[metaStatsPartial]] for SUMs: fold exact per-part decimal sums over
-    * the vouched parts (each must carry a sum for every requested column)
-    * and return the rest as a DataFrame to scan. Same contract.
-    */
-  def metaSumsPartial(cols: Seq[String])
-      : Option[(Long, Map[String, ColSum], Option[DataFrame])] =
-    metaHybrid(Nil, cols).map { case (cnt, _, sums, rest) => (cnt, sums, rest) }
-
-  /** The combined partial fold behind [[metaStatsPartial]]/[[metaSumsPartial]]:
-    * ONE vouched/rest classification covering both stat families (a cell is
-    * vouched iff tight with a known counter AND carrying zones for every
-    * `mmCols` AND sums for every `sumCols`) so a caller combining counts,
-    * bounds and sums never double-counts a cell that qualifies for one
-    * family but not the other. Returns the vouched fold plus the
-    * rest-covering DataFrame (None when every selected cell vouched).
+  /** HYBRID fold: count, bounds (`mmCols`) and sums (`sumCols`) of the
+    * vouched cells — ONE classification for both families, so a caller
+    * combining them never double-counts a cell — plus a scan covering
+    * exactly the rest (None when every selected cell vouched). The caller
+    * aggregates the scan and combines. One upsert dirtying ONE cell of a
+    * 10k-cell table then scans 1 cell, not 10k. None when nothing vouched.
     */
   def metaHybrid(mmCols: Seq[String], sumCols: Seq[String],
       cellFilter: PartKey => Boolean = _ => true)
       : Option[(Long, Map[String, Zone], Map[String, ColSum], Option[DataFrame])] =
-    this.synchronized {
-      if (parts.isEmpty) return None
-      val selected = parts.asScala.toList.filter(p => cellFilter(p._1))
-      if (selected.isEmpty)
-        return Some((0L, mmCols.map(_ -> Zone(None, None)).toMap,
-          sumCols.map(_ -> SumMap.Zero).toMap, None))
-      val (vouched, rest) = selected.partition { case (_, p) =>
-        p.statsTight.get && p.rows.get >= 0L &&
-          (mmCols.isEmpty || p.zones.exists(m => mmCols.forall(m.contains))) &&
-          (sumCols.isEmpty || p.sums.exists(m => sumCols.forall(m.contains)))
-      }
-      if (vouched.isEmpty) return None
-      val cnt = vouched.map(_._2.rows.get).sum
-      val zones = scala.collection.mutable.Map[String, Zone]()
-      for (c <- mmCols) {
-        vouched.map(v => Option(v._2.zones.get(c)))
-          .reduce((a, b) => a.flatMap(x => b.flatMap(y => x.widen(y)))) match {
-          case Some(z) => zones(c) = z
-          case None => return None // incomparable bounds: fail open entirely
-        }
-      }
-      val sums = sumCols.map { c =>
-        c -> vouched.map(_._2.sums.get.apply(c)).reduce((a, b) => a.add(b))
-      }.toMap
-      val scanDf = if (rest.isEmpty) None else Some(assembleSubset(selected, rest))
-      Some((cnt, zones.toMap, sums, scanDf))
+    fold(Seq(StatFamily.Zones -> mmCols, StatFamily.Sums -> sumCols),
+        cellFilter = cellFilter, hybrid = true).flatMap { f =>
+      for ((cnt, zones) <- f.whole.zones(mmCols); (_, sums) <- f.whole.sums(sumCols))
+        yield (cnt, zones, sums, f.rest)
     }
 
-  /** [[metaStatsPartial]] grouped by PARTITION columns: fold the vouched
-    * cells per group exactly like [[metaStatsGrouped]] and hand back a scan
-    * over the unvouched rest (whose groups the caller aggregates for real
-    * and merges). Gating mirrors [[metaStatsGrouped]] — grouping columns
-    * must be partition columns whose values decode; any vouched-side
-    * failure fails open entirely (None).
-    */
+  /** [[metaStatsPartial]] per partition group. */
   def metaStatsGroupedPartial(groupCols: Seq[String], cols: Seq[String])
       : Option[(Seq[(Seq[Any], Long, Map[String, Zone])], Option[DataFrame])] =
-    this.synchronized {
-      if (parts.isEmpty) return None
-      if (groupCols.isEmpty || !groupCols.forall(partitionCols.contains)) return None
-      val all = parts.asScala.toList
-      val (vouched, rest) = all.partition { case (_, p) =>
-        p.statsTight.get && p.rows.get >= 0L &&
-          (cols.isEmpty || p.zones.exists(m => cols.forall(m.contains)))
-      }
-      if (vouched.isEmpty) return None
-      // Decode + fold the vouched side with the same machinery as the full
-      // grouped fold, restricted to the vouched cells.
-      val vouchedKeys = vouched.map(_._1).toSet
-      metaStatsGrouped(groupCols, cols, cellFilter = vouchedKeys.contains) match {
-        case Some(groups) =>
-          val scanDf = if (rest.isEmpty) None else Some(assembleSubset(all, rest))
-          Some((groups, scanDf))
-        case None => None
-      }
+    metaHybridGrouped(groupCols, cols, Nil).map { case (groups, rest) =>
+      (groups.map { case (vals, cnt, zones, _) => (vals, cnt, zones) }, rest)
     }
 
-  /** The grouped analogue of [[metaHybrid]], serving the SQL surface's
-    * grouped hybrid rewrite: ONE vouched/rest classification spanning both
-    * stat families, the vouched cells folded PER GROUP (counts, zones and
-    * sums keyed by the decoded partition-value tuple), and a scan covering
-    * only the unvouched rest. The caller runs the matching grouped
-    * partial aggregation over the rest and merges group-wise — groups
-    * whose cells all vouched never scan. Gating mirrors
-    * [[metaStatsGrouped]]: grouping columns must be partition columns
-    * whose catalog values decode; any vouched-side failure fails open.
+  /** [[metaHybrid]] per partition group: the vouched cells fold per group,
+    * and the caller runs the matching grouped aggregation over the rest
+    * scan and merges group-wise — groups whose cells all vouched never
+    * scan.
     */
   def metaHybridGrouped(groupCols: Seq[String], mmCols: Seq[String],
       sumCols: Seq[String], cellFilter: PartKey => Boolean = _ => true)
       : Option[(Seq[(Seq[Any], Long, Map[String, Zone], Map[String, ColSum])],
           Option[DataFrame])] =
-    this.synchronized {
-      if (parts.isEmpty) return None
-      if (groupCols.isEmpty || !groupCols.forall(partitionCols.contains)) return None
-      val selected = parts.asScala.toList.filter(p => cellFilter(p._1))
-      if (selected.isEmpty) return Some((Seq.empty, None))
-      val (vouched, rest) = selected.partition { case (_, p) =>
-        p.statsTight.get && p.rows.get >= 0L &&
-          (mmCols.isEmpty || p.zones.exists(m => mmCols.forall(m.contains))) &&
-          (sumCols.isEmpty || p.sums.exists(m => sumCols.forall(m.contains)))
-      }
-      if (vouched.isEmpty) return None
-      val vouchedKeys = vouched.map(_._1).toSet
-      val zonesG = metaStatsGrouped(groupCols, mmCols, vouchedKeys.contains)
-        .getOrElse(return None)
-      val sumsG: Map[Seq[Any], Map[String, ColSum]] =
-        if (sumCols.isEmpty) Map.empty
-        else metaSumsGrouped(groupCols, sumCols, vouchedKeys.contains) match {
-          case Some(gs) => gs.map { case (vals, _, sums) => vals -> sums }.toMap
-          case None => return None
-        }
-      // Both folds decode group values identically over the same vouched
-      // set, so the per-group join is total; a miss means a logic drift —
-      // fail open rather than answer wrong.
-      val merged = zonesG.map { case (vals, cnt, zones) =>
-        val sums =
-          if (sumCols.isEmpty) Map.empty[String, ColSum]
-          else sumsG.getOrElse(vals, return None)
-        (vals, cnt, zones, sums)
-      }
-      val scanDf = if (rest.isEmpty) None else Some(assembleSubset(selected, rest))
-      Some((merged, scanDf))
+    fold(Seq(StatFamily.Zones -> mmCols, StatFamily.Sums -> sumCols), Some(groupCols),
+        cellFilter, hybrid = true).flatMap { f =>
+      f.each(g => for ((cnt, zones) <- g.zones(mmCols); (_, sums) <- g.sums(sumCols))
+        yield (cnt, zones, sums))
+        .map(gs => (gs.map { case (vals, (cnt, zones, sums)) => (vals, cnt, zones, sums) }, f.rest))
     }
 
   /** One DataFrame over exactly `kept`'s rows — the multi-path single scan
@@ -2305,8 +1644,7 @@ final class LakeDataset private (
     * Unlike [[assembleKept]] there is no most-parts-kept → whole-table
     * shortcut: the caller needs EXACTLY these parts' rows.
     */
-  private def assembleSubset(
-      all: List[(PartKey, LakePart)], kept: List[(PartKey, LakePart)]): DataFrame =
+  private def assembleSubset(kept: List[(PartKey, LakePart)]): DataFrame =
     if (kept.isEmpty) emptyLike
     else {
       val dirs = kept.map { case (k, _) => diskDirs.get(k) }
@@ -2364,19 +1702,19 @@ final class LakeDataset private (
     var cover = 0L
     val seed = ordered.takeWhile { case (_, p, _, _) =>
       val take = cover < k
-      if (take && p.statsTight.get && p.rows.get >= 0L) cover += p.rows.get
+      if (take && p.vouched) cover += p.rows.get
       take
     }
     if (cover < k || seed.size > math.max(4, all.size / 8))
       return fullSort(toDF) // seed can't certify cheaply — one plain sort
-    val seedDf = assembleSubset(all, seed.map(s => (s._1, s._2)))
+    val seedDf = assembleSubset(seed.map(s => (s._1, s._2)))
     val observed = seedDf.filter(col(c).isNotNull)
       .sort(sortCols: _*).limit(k).select(col(c)).collect()
     if (observed.length < k) return fullSort(toDF) // NULLs ate the counter
     val t = observed.last.get(0)
     val qZone = if (asc) Zone(None, Option(t)) else Zone(Option(t), None)
     val kept = all.filter { case (_, p) => zoneOf(p).forall(_.overlaps(qZone)) }
-    fullSort(assembleSubset(all, kept))
+    fullSort(assembleSubset(kept))
   }
 
   def schemaInfo: (List[(String, String)], Long, Int) = {
@@ -2429,30 +1767,23 @@ final class LakeDataset private (
   private def cellKeyCols: List[String] = partitionCols ++
     (if (bucketCols.nonEmpty) List(LakeDataset.BucketCol) else Nil)
 
-  /** Distinct cell keys + per-cell row counts AND zone maps (min/max per
-    * tracked column) AND exact column sums of a prepared batch — ONE
-    * aggregation pass, no materialization; null rows for the single-cell
-    * case. Row layout: cell key columns, count, min/max pairs in `zoneCols`
-    * order, bloom planes, then (sum, non-null count) pairs in `sumCols`
-    * order.
+  /** Distinct cell keys + per-cell row counts and statistics of a prepared
+    * batch — ONE aggregation pass, no materialization; null rows for the
+    * single-cell case. Row layout: cell key columns, then the layout's
+    * aggregates ([[StatLayout]]).
     */
-  private def cellCountsOf(p: DataFrame)
-      : (Array[Row], Seq[String], Seq[String], Seq[String], Seq[String], Seq[String], Seq[String]) =
-    if (cellKeyCols.isEmpty) (null, Nil, Nil, Nil, Nil, Nil, Nil)
-    else {
-      val (zc, bc, sc, kc, qc, fc) = statColsFor(p.schema)
-      val aggCols = count(lit(1)) +:
-        (ZoneMap.aggs(zc) ++ Bloom.aggs(bc) ++ SumMap.aggs(p.schema, sc) ++
-          HllMap.aggs(kc) ++ QuantileMap.aggs(qc) ++ FreqMap.aggs(fc))
-      (p.groupBy(cellKeyCols.map(col): _*).agg(aggCols.head, aggCols.tail: _*).collect(),
-        zc, bc, sc, kc, qc, fc)
-    }
+  private def cellCountsOf(p: DataFrame): (Array[Row], StatLayout) = {
+    val layout = statLayout(p.schema)
+    if (cellKeyCols.isEmpty) (null, layout)
+    else (p.groupBy(cellKeyCols.map(col): _*).agg(layout.aggs.head, layout.aggs.tail: _*)
+      .collect(), layout)
+  }
 
   private def splitByCell(df0: DataFrame)
       : (DataFrame, List[LakeDataset.Slice]) = {
     val p = prepared(df0)
-    val (counts, zc, bc, sc, kc, qc, fc) = cellCountsOf(p)
-    splitPrepared(p, counts, zc, bc, sc, kc, qc, fc)
+    val (counts, layout) = cellCountsOf(p)
+    splitPrepared(p, counts, layout)
   }
 
   /** Checkpoint a prepared batch and slice it per cell using precomputed
@@ -2465,10 +1796,7 @@ final class LakeDataset private (
     * routing column) alongside the slices. Mirrors the reference's eager
     * `Dataset::from_dataframe` split (src/dataset.rs:196-238).
     */
-  private def splitPrepared(p: DataFrame, cellCounts: Array[Row],
-      zoneCols: Seq[String], bloomColsIn: Seq[String], sumColsIn: Seq[String],
-      sketchColsIn: Seq[String], quantColsIn: Seq[String],
-      freqColsIn: Seq[String])
+  private def splitPrepared(p: DataFrame, cellCounts: Array[Row], layout: StatLayout)
       : (DataFrame, List[LakeDataset.Slice]) = {
     // Big batches spill to parquet like whole-table snapshots (the cell
     // counts give the size for free); partition-less datasets have no
@@ -2478,73 +1806,25 @@ final class LakeDataset private (
       else materializeSnapshot(p, cellCounts.map(_.getLong(cellKeyCols.length)).sum)
     val batch = snap.drop(LakeDataset.BucketCol)
 
-    def bloomsAt(row: Row, offset: Int, bc: Seq[String]): Option[Map[String, Bloom]] =
-      if (bc.isEmpty) None else Some(Bloom.fromRow(row, offset, bc))
-
     if (cellCounts == null) {
-      // Single-cell dataset: count + zones + blooms + sums + sketches in ONE
-      // aggregation job over the snapshot (was a bare count).
-      val (zc, bc, sc, kc, qc, fc) = statColsFor(snap.schema)
-      val aggCols = count(lit(1)) +:
-        (ZoneMap.aggs(zc) ++ Bloom.aggs(bc) ++ SumMap.aggs(snap.schema, sc) ++
-          HllMap.aggs(kc) ++ QuantileMap.aggs(qc) ++ FreqMap.aggs(fc))
-      val row = snap.agg(aggCols.head, aggCols.tail: _*).head()
-      val sumOff = 1 + 2 * zc.length + Bloom.Planes * bc.length
-      return (batch,
-        List(LakeDataset.Slice(PartKey(Nil, None), snap, row.getLong(0),
-          ZoneMap.fromRow(row, 1, zc), bloomsAt(row, 1 + 2 * zc.length, bc),
-          SumMap.fromRow(row, sumOff, sc),
-          if (kc.isEmpty) None
-          else Some(HllMap.fromRow(row, sumOff + 2 * sc.length, kc)),
-          if (qc.isEmpty) None
-          else Some(QuantileMap.fromRow(row,
-            sumOff + 2 * sc.length + 2 * kc.length, qc)),
-          if (fc.isEmpty) None
-          else Some(FreqMap.fromRow(row,
-            sumOff + 2 * sc.length + 2 * kc.length + qc.length, fc)))))
+      // Single-cell dataset: count + every family in ONE aggregation job
+      // over the snapshot.
+      val (n, stats) = layout.of(snap)
+      return (batch, List(LakeDataset.Slice(PartKey(Nil, None), snap, n, stats)))
     }
 
-    val keyCols = cellKeyCols
     val slices = cellCounts.toList.map { row =>
-      val partVals = partitionCols.zipWithIndex.map { case (c, i) =>
-        c -> Option(row.get(i)).map(_.toString).orNull
-      }
-      val bucketNr =
-        if (bucketCols.nonEmpty) {
-          // A NULL in the bucket column hashes to a null bucket id (numeric
-          // and temporal types); such rows get a dedicated sentinel cell,
-          // mirroring the null-partition-value handling.
-          if (row.isNullAt(keyCols.length - 1)) Some(LakeDataset.NullBucket)
-          else Some(row.getInt(keyCols.length - 1))
-        } else None
-      val n = row.getLong(keyCols.length)
-      val zones = ZoneMap.fromRow(row, keyCols.length + 1, zoneCols)
-      val blooms = bloomsAt(row, keyCols.length + 1 + 2 * zoneCols.length, bloomColsIn)
-      val sumOff =
-        keyCols.length + 1 + 2 * zoneCols.length + Bloom.Planes * bloomColsIn.length
-      val sums = SumMap.fromRow(row, sumOff, sumColsIn)
-      val sketches =
-        if (sketchColsIn.isEmpty) None
-        else Some(HllMap.fromRow(row, sumOff + 2 * sumColsIn.length, sketchColsIn))
-      val quants =
-        if (quantColsIn.isEmpty) None
-        else Some(QuantileMap.fromRow(row,
-          sumOff + 2 * sumColsIn.length + 2 * sketchColsIn.length, quantColsIn))
-      val freqs =
-        if (freqColsIn.isEmpty) None
-        else Some(FreqMap.fromRow(row,
-          sumOff + 2 * sumColsIn.length + 2 * sketchColsIn.length +
-            quantColsIn.length, freqColsIn))
+      val key = cellKeyOf(row)
+      val (n, stats) = layout.decode(row, cellKeyCols.length)
       val cond = partitionCols.zipWithIndex.map { case (c, i) =>
         if (row.isNullAt(i)) snap(c).isNull
         else snap(c) === lit(row.get(i))
-      } ++ bucketNr.map { b =>
+      } ++ key.bucketNr.map { b =>
         if (b == LakeDataset.NullBucket) snap(LakeDataset.BucketCol).isNull
         else snap(LakeDataset.BucketCol) === lit(b)
       }
       val slice = snap.filter(cond.reduce(_ && _)).drop(LakeDataset.BucketCol)
-      LakeDataset.Slice(PartKey(partVals.sortBy(_._1), bucketNr), slice, n,
-        zones, blooms, sums, sketches, quants, freqs)
+      LakeDataset.Slice(key, slice, n, stats)
     }
     (batch, slices)
   }
@@ -2567,22 +1847,8 @@ final class LakeDataset private (
       slices.foreach { s =>
         diskDirs.remove(s.key); diskSchemas.remove(s.key)
         parts.compute(s.key, (_, existing) =>
-          if (existing == null)
-            new LakePart(s.df, s.key, bucketCols, nBuckets, s.rows, retainDirect,
-              initialZones = Some(s.zones), statColsOf = statColsFor,
-              initialBlooms = s.blooms, snapshot = partSnapshot,
-              initialSums = Some(s.sums), initialSketches = s.sketches,
-              initialQuants = s.quants, initialFreqs = s.freqs)
-          else {
-            existing.insert(s.df, s.rows)
-            existing.widenZones(s.zones)
-            s.blooms.foreach(existing.widenBlooms)
-            existing.addSums(s.sums) // exact under pure append
-            s.sketches.foreach(existing.addSketches) // union: exact under append
-            s.quants.foreach(existing.addQuants) // merge: in-bound under append
-            s.freqs.foreach(existing.addFreqs) // merge: bounds add under append
-            existing
-          })
+          if (existing == null) newPart(s.df, s.key, s.rows, s.stats)
+          else { existing.insert(s.df, s.rows, s.stats); existing })
       }
       // Creating from one batch: every part slices the same snapshot, so the
       // snapshot itself IS the whole-table view — reads plan one scan.
@@ -2637,8 +1903,7 @@ final class LakeDataset private (
     // skipping a full batch write+read through the block store.
     enforceChecks(df, "upsert batch")
     val p = prepared(df)
-    val (counts, zoneCols, bloomColsP, sumColsP, sketchColsP, quantColsP,
-      freqColsP) = cellCountsOf(p)
+    val (counts, layout) = cellCountsOf(p)
     val nCells = if (counts == null) 1 else counts.length
     this.synchronized {
       // Decide the path and capture the pre-merge snapshot BEFORE markDirty:
@@ -2660,29 +1925,14 @@ final class LakeDataset private (
         rebuildFromSnapshot(merged)
         retain(merged)
       } else {
-        val (batch, slices) =
-          splitPrepared(p, counts, zoneCols, bloomColsP, sumColsP, sketchColsP,
-            quantColsP, freqColsP)
+        val (batch, slices) = splitPrepared(p, counts, layout)
         slices.foreach { s =>
           diskDirs.remove(s.key); diskSchemas.remove(s.key)
           parts.compute(s.key, (_, existing) =>
-            if (existing == null)
-              // A cell the upsert CREATES holds only fresh rows — its
-              // routed stats (count, zones, sums, sketches) are exact.
-              new LakePart(s.df, s.key, bucketCols, nBuckets, s.rows, retainDirect,
-                initialZones = Some(s.zones), statColsOf = statColsFor,
-                initialBlooms = s.blooms, snapshot = partSnapshot,
-                initialSums = Some(s.sums), initialSketches = s.sketches,
-                initialQuants = s.quants, initialFreqs = s.freqs)
-            else {
-              existing.upsert(s.df, keys, s.rows, leftWins = leftWins)
-              // Sound widening: surviving values ⊆ old ∪ delta. (Sums are
-              // NOT foldable across a merge — LakePart.upsert invalidated
-              // them.)
-              existing.widenZones(s.zones)
-              s.blooms.foreach(existing.widenBlooms)
-              existing
-            })
+            // A cell the upsert CREATES holds only fresh rows — its routed
+            // stats are exact.
+            if (existing == null) newPart(s.df, s.key, s.rows, s.stats)
+            else { existing.upsert(s.df, keys, s.rows, s.stats, leftWins = leftWins); existing })
         }
         retain(batch)
       }
@@ -2726,7 +1976,7 @@ final class LakeDataset private (
     val spec = storage.getOrElse(throw new IllegalStateException("no storage spec"))
     enforceChecks(df, "insertWritten batch")
     val p = prepared(df)
-    val (counts, zc, bc, sc, kc, qc, fc) = profiled("iw:route")(cellCountsOf(p))
+    val (counts, layout) = profiled("iw:route")(cellCountsOf(p))
     require(counts != null,
       "insertWritten needs a partitioned or bucketed layout (fresh cells)")
     require(!p.columns.contains("bucket") || bucketCols.isEmpty,
@@ -2746,17 +1996,10 @@ final class LakeDataset private (
     }
     // Derive and validate EVERY cell key before the write job touches disk.
     val keyed: Seq[(PartKey, Row)] = counts.toSeq.map { row =>
-      val partVals = partitionCols.zipWithIndex.map { case (c, i) =>
-        c -> Option(row.get(i)).map(_.toString).orNull
-      }
-      val bucketNr =
-        if (bucketCols.nonEmpty) {
-          require(!row.isNullAt(nKey - 1),
-            "insertWritten cannot route NULL bucket-key values (writer null " +
-              "directory != catalog sentinel cell) — use insert() for this batch")
-          Some(row.getInt(nKey - 1))
-        } else None
-      val key = PartKey(partVals.sortBy(_._1), bucketNr)
+      require(bucketCols.isEmpty || !row.isNullAt(nKey - 1),
+        "insertWritten cannot route NULL bucket-key values (writer null " +
+          "directory != catalog sentinel cell) — use insert() for this batch")
+      val key = cellKeyOf(row)
       require(!parts.containsKey(key),
         s"insertWritten cell $key already exists — append cannot merge it")
       key -> row
@@ -2803,27 +2046,8 @@ final class LakeDataset private (
         val restored = partVals.foldLeft(raw) { case (d, (k, v)) =>
           d.withColumn(k, lit(v).cast(target(k).dataType))
         }.select(target.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-        val zones = ZoneMap.fromRow(row, nKey + 1, zc)
-        val blooms =
-          if (bc.isEmpty) None else Some(Bloom.fromRow(row, nKey + 1 + 2 * zc.length, bc))
-        val sumOff = nKey + 1 + 2 * zc.length + Bloom.Planes * bc.length
-        val sums = SumMap.fromRow(row, sumOff, sc)
-        val sketches =
-          if (kc.isEmpty) None
-          else Some(HllMap.fromRow(row, sumOff + 2 * sc.length, kc))
-        val quants =
-          if (qc.isEmpty) None
-          else Some(QuantileMap.fromRow(row, sumOff + 2 * sc.length + 2 * kc.length, qc))
-        val freqsP =
-          if (fc.isEmpty) None
-          else Some(FreqMap.fromRow(row,
-            sumOff + 2 * sc.length + 2 * kc.length + qc.length, fc))
-        parts.put(key,
-          new LakePart(restored, key, bucketCols, nBuckets, row.getLong(nKey),
-            retainDirect, initialZones = Some(zones), statColsOf = statColsFor,
-            initialBlooms = blooms, snapshot = partSnapshot,
-            initialSums = Some(sums), initialSketches = sketches,
-            initialQuants = quants, initialFreqs = freqsP))
+        val (n, stats) = layout.decode(row, nKey)
+        parts.put(key, newPart(restored, key, n, stats))
         diskDirs.put(key, dir)
         diskSchemas.put(key, target)
       }
@@ -3052,9 +2276,10 @@ final class LakeDataset private (
     * bucket columns are rejected — an in-place cell rewrite cannot MOVE a
     * row between cells; a cell-migrating change is an upsert
     * ([[upsert]] handles key migration correctly). Row counts are
-    * preserved, so count metadata stays exact; only the ASSIGNED columns'
-    * zone/bloom stats go unknown until the next materialize. Returns cells
-    * touched.
+    * preserved, so count metadata stays exact; the ASSIGNED columns go
+    * unknown in EVERY stat family (zones, blooms, sums, sketches with their
+    * theta twins, quantiles, frequent items) until the next materialize or
+    * ANALYZE. Returns cells touched.
     */
   def updateWhere(cond: Column, assignments: Seq[(String, Column)]): Int =
     this.synchronized {
@@ -3248,22 +2473,9 @@ final class LakeDataset private (
         old.withColumn(LakeDataset.BucketCol,
           Bucketing.bucketExprFor(old, bucketCols.head, nBuckets))
       else old
-    val cellCols = partitionCols ++
-      (if (bucketCols.nonEmpty) List(LakeDataset.BucketCol) else Nil)
-    if (cellCols.isEmpty) return List(PartKey(Nil, None))
-    val cells = withB.join(keyRows, keys.toSeq, "left_semi")
-      .select(cellCols.map(col): _*).distinct().collect()
-    cells.toList.map { row =>
-      val partVals = partitionCols.zipWithIndex.map { case (c, i) =>
-        c -> Option(row.get(i)).map(_.toString).orNull
-      }
-      val bucketNr =
-        if (bucketCols.nonEmpty) {
-          if (row.isNullAt(cellCols.length - 1)) Some(LakeDataset.NullBucket)
-          else Some(row.getInt(cellCols.length - 1))
-        } else None
-      PartKey(partVals.sortBy(_._1), bucketNr)
-    }
+    if (cellKeyCols.isEmpty) return List(PartKey(Nil, None))
+    withB.join(keyRows, keys.toSeq, "left_semi")
+      .select(cellKeyCols.map(col): _*).distinct().collect().toList.map(cellKeyOf)
   }
 
   /** Materialize every part (reference `Dataset::collect` + RPC
@@ -3318,29 +2530,6 @@ final class LakeDataset private (
     * loader restores them (with manifest-DDL types), and the reloaded
     * whole-table scan gets NATIVE Hive partition pruning from the layout.
     */
-  /** Current per-part zone maps serialized for the manifest — the engine's
-    * statistics survive a save/load cycle (a loaded table prunes like a
-    * live one; reference manifests carry no stats at all).
-    */
-  private def serializedStats: Map[String, Map[String, (Option[String], Option[String])]] =
-    parts.asScala.flatMap { case (key, part) =>
-      part.zones.map { zs =>
-        key.relPath -> zs.map { case (c, z) =>
-          c -> (z.min.map(ZoneMap.encodeValue), z.max.map(ZoneMap.encodeValue))
-        }
-      }
-    }.toMap
-
-  /** Current per-part key blooms serialized for the manifest — membership
-    * stats survive a save/load cycle like zones do.
-    */
-  private def serializedBlooms: Map[String, Map[String, String]] =
-    parts.asScala.flatMap { case (key, part) =>
-      part.blooms.filter(_.nonEmpty).map { bs =>
-        key.relPath -> bs.map { case (c, b) => c -> b.encode }
-      }
-    }.toMap
-
   /** True when any live plan (clean scan or a part's frame) reads files
     * under `rootDir` — i.e. the dataset was lazily loaded from the same root
     * it is about to overwrite.
@@ -3612,20 +2801,22 @@ final class LakeDataset private (
     // sketches) was measured as a ~20% regression on the erasure gates and
     // is deliberately NOT done — loose supersets stay sound.
     if (bloomCols.nonEmpty && uniformSchema(ps.map(p => (p.key, p)).toList)) {
-      val bc = bloomColsFor(ps.head.df.schema)
+      val schema = ps.head.df.schema
+      val bc = StatFamily.Blooms.cols(this, schema)
       if (bc.nonEmpty) {
-        val statAggs = count(lit(1)) +: Bloom.aggs(bc)
+        val layout = StatLayout(schema, Seq(StatFamily.Blooms -> bc))
         val tagged = ps.zipWithIndex.map { case (p, i) =>
           p.df.select(bc.map(col) :+ lit(i).as("__graft_recount_cell"): _*)
         }.reduce(_ unionByName _)
         // groupBy output layout: [cell tag, count, planes in bc order]
         val byIdx = tagged.groupBy("__graft_recount_cell")
-          .agg(statAggs.head, statAggs.tail: _*)
+          .agg(layout.aggs.head, layout.aggs.tail: _*)
           .collect().map(r => r.getInt(0) -> r).toMap
         ps.zipWithIndex.foreach { case (p, i) =>
           byIdx.get(i) match {
-            case Some(r) => p.adoptBloomStats(r, 1, bc)
-            case None => p.adoptEmptyBloomStats(bc) // zero surviving rows
+            case Some(r) => val (n, st) = layout.decode(r, 1); p.adoptStats(n, st)
+            case None => // zero surviving rows: all-zero planes prove absence
+              p.adoptStats(0L, PartStats(Seq(StatFamily.Blooms -> bc.map(_ -> Bloom.empty).toMap)))
           }
         }
       }
@@ -3645,19 +2836,13 @@ object LakeDataset {
     * field separator) — collision-safe at any realistic cell count.
     */
   private[lake] def statFingerprints(m: Manifest): Map[String, String] = {
-    val keys = m.partStats.keySet ++ m.partBlooms.keySet ++ m.partRows.keySet ++
-      m.partSums.keySet ++ m.partSketches.keySet ++ m.partQuants.keySet ++
-      m.partFreqs.keySet
+    val fields = StatFamily.all.map(_.field(m))
+    val keys = fields.foldLeft(m.partRows.keySet)(_ ++ _.keySet)
     keys.iterator.map { p =>
       val sb = new StringBuilder
       def add(x: Any): Unit = { sb.append(x); sb.append('\u0001') }
-      add(m.partStats.get(p).map(_.toList.sortBy(_._1)))
-      add(m.partBlooms.get(p).map(_.toList.sortBy(_._1)))
       add(m.partRows.get(p))
-      add(m.partSums.get(p).map(_.toList.sortBy(_._1)))
-      add(m.partSketches.get(p).map(_.toList.sortBy(_._1)))
-      add(m.partQuants.get(p).map(_.toList.sortBy(_._1)))
-      add(m.partFreqs.get(p).map(_.toList.sortBy(_._1)))
+      fields.foreach(f => add(f.get(p).map(_.toList.sortBy(_._1))))
       val md = java.security.MessageDigest.getInstance("MD5")
       p -> md.digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         .map("%02x".format(_)).mkString
@@ -3665,16 +2850,9 @@ object LakeDataset {
   }
 
   /** One routed cell of an incoming batch: key, lazy slice, row count, and
-    * the cell's stats (zones + blooms + exact sums) from the routing
-    * aggregation.
+    * the cell's stats from the routing aggregation.
     */
-  private[lake] final case class Slice(
-      key: PartKey, df: DataFrame, rows: Long,
-      zones: Map[String, Zone], blooms: Option[Map[String, Bloom]],
-      sums: Map[String, ColSum],
-      sketches: Option[Map[String, Array[Byte]]] = None,
-      quants: Option[Map[String, Array[Byte]]] = None,
-      freqs: Option[Map[String, Array[Byte]]] = None)
+  private[lake] final case class Slice(key: PartKey, df: DataFrame, rows: Long, stats: PartStats)
 
   /** Internal bucket-id column, dropped before any user-visible output
     * (reference `$bucket`, src/dataset.rs:200-204).
@@ -3817,10 +2995,7 @@ object LakeDataset {
     // Fix the tracked zone/sum sets from the manifest schema up front, so
     // loaded part stats and every future batch aggregation agree on the
     // same sets.
-    target.foreach { t =>
-      ds.trackedZoneSet = Some(ZoneMap.zoneCols(t, Set(LakeDataset.BucketCol)).toSet)
-      ds.trackedSumSet = Some(SumMap.sumCols(t, Set(LakeDataset.BucketCol)).toSet)
-    }
+    target.foreach(ds.retrack)
     if (leafDirs.isEmpty) {
       // A saved EMPTY table is a manifest-only layout: reconstruct an empty
       // dataset (schema from the manifest DDL) instead of refusing to load
@@ -3888,114 +3063,28 @@ object LakeDataset {
         }
       }
       val key = PartKey(partVals, bucketNr)
-      // Restore this part's zone maps from the manifest (typed via the
-      // schema DDL). A bound that fails to decode drops its COLUMN — stats
-      // degrade to unknown (fail open), never to wrong.
-      val zones: Option[Map[String, Zone]] = target.flatMap { t =>
-        manifest.partStats.get(key.relPath).map { cols =>
-          cols.flatMap { case (c, (mnS, mxS)) =>
-            t.fields.find(_.name == c).map(_.dataType) match {
-              // Restrict to the session's tracked set: a stat column a
-              // PREVIOUS session tracked but this one won't would otherwise
-              // keep a stale bound through future widens (unsound).
-              case Some(dt) if ZoneMap.zoneable(dt) &&
-                  ds.trackedZoneSet.forall(_.contains(c)) =>
-                val mn = mnS.flatMap(ZoneMap.decodeValue(_, dt))
-                val mx = mxS.flatMap(ZoneMap.decodeValue(_, dt))
-                if (mn.isDefined == mnS.isDefined && mx.isDefined == mxS.isDefined)
-                  Some(c -> Zone(mn, mx))
-                else None
-              case _ => None
-            }
-          }
-        }
-      }
-      // Restore the part's key blooms (restricted to the declared set; a
-      // bad decode drops its column — stats degrade to unknown, fail open).
-      val blooms: Option[Map[String, Bloom]] =
-        manifest.partBlooms.get(key.relPath).map { cols =>
-          cols.flatMap { case (c, b64) =>
-            if (manifest.bloomCols.contains(c)) Bloom.decode(b64).map(c -> _) else None
-          }
-        }.filter(_.nonEmpty)
-      // The manifest's tightness vouch: a part listed under part_rows was
-      // saved with exact stats — restore its counter and exactness so a
-      // freshly loaded table can answer count/min/max metadata-only, with
-      // ZERO file reads (the flagship lakehouse property at 100 TB: the
-      // stats live in one JSON manifest, not in O(files) footers).
+      // Restore this part's statistics from the manifest (typed via the
+      // schema DDL, restricted to this table's tracked and declared sets;
+      // an entry that fails to decode drops its COLUMN — stats degrade to
+      // unknown, fail open, never wrong). The superset families come back
+      // as they were saved. The manifest's tightness vouch — a part listed
+      // under part_rows with zones was saved exact — restores its counter,
+      // its exactness and the exact families, so a freshly loaded table
+      // answers metadata-only with ZERO file reads (the stats live in one
+      // JSON manifest, not in O(files) footers).
+      def restored(exact: Boolean) = StatFamily.all.filter(_.superset != exact)
+        .flatMap(f => f.restore(ds, target, manifest, key.relPath).map(f -> _))
+      val supersets = restored(exact = false)
       val exactRows: Option[Long] = manifest.partRows.get(key.relPath)
-      val tight = exactRows.isDefined && zones.isDefined
-      // Sums restore only under the tightness vouch AND for columns this
-      // session tracks with a summable manifest type — anything less
-      // degrades to unknown (metadata-sum fails open), never to wrong.
-      val sums: Option[Map[String, ColSum]] =
-        if (!tight) None
-        else manifest.partSums.get(key.relPath).flatMap { cols =>
-          target.map { t =>
-            cols.flatMap { case (c, (s, n)) =>
-              t.fields.find(_.name == c).map(_.dataType) match {
-                case Some(dt) if SumMap.summable(dt) &&
-                    ds.trackedSumSet.forall(_.contains(c)) =>
-                  SumMap.decode(s, n).map(c -> _)
-                case _ => None
-              }
-            }
-          }
-        }
-      // Sketches restore under the SAME tightness vouch as sums, restricted
-      // to the manifest's declared set; an undecodable sketch drops its
-      // column (approx-distinct fails open to a scan, never answers wrong).
-      val sketches: Option[Map[String, Array[Byte]]] =
-        if (!tight) None
-        else manifest.partSketches.get(key.relPath).map { cols =>
-          cols.flatMap { case (c, b64) =>
-            // Theta twins restore under their base column's declaration —
-            // a `theta:c` key rides the same opt-in as `c` (see HllMap).
-            val base =
-              if (HllMap.isThetaKey(c)) c.stripPrefix(HllMap.ThetaPrefix) else c
-            if (manifest.sketchCols.contains(base)) HllMap.decode(b64).map(c -> _)
-            else None
-          }
-        }.filter(_.nonEmpty)
-      // Quantile summaries restore under the same tightness vouch; an
-      // undecodable summary drops its column (approx-quantile fails open).
-      val quants: Option[Map[String, Array[Byte]]] =
-        if (!tight) None
-        else manifest.partQuants.get(key.relPath).map { cols =>
-          cols.flatMap { case (c, b64) =>
-            if (manifest.quantileCols.contains(c)) QuantileMap.decode(b64).map(c -> _)
-            else None
-          }
-        }.filter(_.nonEmpty)
-      // Frequent-items sketches restore under the same tightness vouch; an
-      // undecodable sketch drops its column (metadata top-k fails open).
-      val freqs: Option[Map[String, Array[Byte]]] =
-        if (!tight) None
-        else manifest.partFreqs.get(key.relPath).map { cols =>
-          cols.flatMap { case (c, b64) =>
-            if (manifest.freqCols.contains(c)) FreqMap.decode(b64).map(c -> _)
-            else None
-          }
-        }.filter(_.nonEmpty)
-      if (eager) {
-        // Eager load: materialize NOW by contract (the caller asked for
-        // resident parts); the thunk runs here, not on first touch.
-        val c = ds.partSnapshot(partDf()); ds.retainDirect(c)
-        ds.parts.put(key,
-          new LakePart(c, key, manifest.buckets, manifest.nBuckets,
-            exactRows.getOrElse(-1L), ds.retainDirect,
-            initialZones = zones, statColsOf = ds.statColsFor, initialBlooms = blooms,
-            snapshot = ds.partSnapshot, initialSums = sums,
-            initialSketches = sketches, initialQuants = quants,
-            initialFreqs = freqs, initialTight = tight))
-      } else ds.parts.put(key,
-        new LakePart(partDf(), key, manifest.buckets, manifest.nBuckets,
-          exactRows.getOrElse(-1L), ds.retainDirect,
-          initialZones = zones, statColsOf = ds.statColsFor, initialBlooms = blooms,
-          snapshot = ds.partSnapshot, initialSums = sums,
-          initialSketches = sketches, initialQuants = quants,
-          initialFreqs = freqs,
-          initialTight = tight))
+      val tight = exactRows.isDefined && supersets.exists(_._1 == StatFamily.Zones)
+      val stats = PartStats(supersets ++ (if (tight) restored(exact = true) else Nil))
+      // Eager load: materialize NOW by contract (the caller asked for
+      // resident parts); otherwise the plan thunk runs on first touch.
+      val resident = Option.when(eager) {
+        val c = ds.partSnapshot(partDf()); ds.retainDirect(c); c
+      }
+      ds.parts.put(key,
+        ds.newPart(resident.getOrElse(partDf()), key, exactRows.getOrElse(-1L), stats, tight))
       ds.diskDirs.put(key, dir.toString)
       target.foreach(t => ds.diskSchemas.put(key, t))
     }

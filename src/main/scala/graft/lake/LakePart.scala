@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.Bucketing
 import graft.model.{PartKey, StorageSpec}
@@ -31,64 +32,27 @@ final class LakePart private[lake] (
     /** Reports checkpoints this part creates to the owning dataset's storage
       * ledger, so superseded generations can be released on rebuild.
       */
-    onCheckpoint: DataFrame => Unit = _ => (),
-    /** Per-column [min,max] zone maps of this part's data, or None when
-      * unknown (lazily loaded parts). Maintained conservatively: mutations
-      * only ever WIDEN the interval (deletes and upsert-replaced rows leave
-      * it a sound superset); a dataset-level rebuild recomputes it tight.
-      */
-    initialZones: Option[Map[String, Zone]] = None,
-    /** The owning dataset's FIXED tracked-stat-column selector, returning
-      * (zone, bloom, sum, sketch, quantile, freq columns) for a
-      * schema. Materialize
+    onCheckpoint: DataFrame => Unit,
+    /** The owning dataset's FIXED tracked-stat-column selector. Materialize
       * recomputes stats through it so the part never tracks a different set
-      * than the routing aggregation widens with (set drift is unsound — see
-      * LakeDataset.trackedZoneSet).
+      * than the routing aggregation folds in with (set drift is unsound —
+      * see [[StatFamily.cols]]).
       */
-    statColsOf: org.apache.spark.sql.types.StructType => (Seq[String], Seq[String], Seq[String], Seq[String], Seq[String], Seq[String]) =
-      s => (ZoneMap.zoneCols(s), Nil, SumMap.sumCols(s), Nil, Nil, Nil),
-    /** Per-column key Bloom filters of this part's data (see [[Bloom]]);
-      * None = no statistics (membership pruning fails open). Mutations OR
-      * plane bits (sound superset); rebuilds recompute tight.
-      */
-    initialBlooms: Option[Map[String, Bloom]] = None,
+    layoutOf: StructType => StatLayout,
     /** How this part materializes its accumulated plan — the owning
       * dataset's snapshot policy (local checkpoint, or parquet spill in
       * reliable mode; see `LakeDataset.partSnapshot`).
       */
-    snapshot: DataFrame => DataFrame =
-      df => org.apache.spark.sql.graftbridge.Bridge.severCheckpoint(
-        df.localCheckpoint(true)),
-    /** Per-column exact SUM state of this part's data (see [[SumMap]]);
-      * None = unknown (metadata-sum answers fail open). Appends FOLD the
-      * batch's sums in; upsert/delete invalidate outright (unlike zones
-      * there is no sound superset to widen to); materialize recomputes.
+    snapshot: DataFrame => DataFrame,
+    /** The part's statistics per family ([[StatFamily]] states how each
+      * family follows every mutation); no family at all for a part loaded
+      * without them.
       */
-    initialSums: Option[Map[String, ColSum]] = None,
-    /** Per-column HLL distinct sketches of this part's data (see
-      * [[HllMap]]); None = unknown (metadata approx-distinct answers fail
-      * open). Appends UNION the batch's sketches in (exact — union is
-      * register-wise max); upsert/delete invalidate; materialize/ANALYZE
-      * recompute.
-      */
-    initialSketches: Option[Map[String, Array[Byte]]] = None,
-    /** Per-column Greenwald–Khanna quantile summaries of this part's data
-      * (see [[QuantileMap]]); None = unknown (metadata approx-quantile
-      * answers fail open). Appends MERGE the batch's summaries in (within
-      * the GK merge bound); upsert/delete invalidate; materialize/ANALYZE
-      * recompute.
-      */
-    initialQuants: Option[Map[String, Array[Byte]]] = None,
-    /** Per-column Misra–Gries frequent-items sketches of this part's data
-      * (see [[FreqMap]]); None = unknown (metadata top-k answers fail
-      * open). Appends MERGE the batch's sketches in (bounds add);
-      * upsert/delete invalidate; materialize/ANALYZE recompute.
-      */
-    initialFreqs: Option[Map[String, Array[Byte]]] = None,
-    /** Whether the initial statistics (zones, blooms, row counter) reflect
-      * the part's data EXACTLY — true on every in-memory creation path (all
-      * compute stats from the routed batch itself); false for parts loaded
-      * from a manifest that does not vouch for them. See [[statsTight]].
+    initialStats: PartStats,
+    /** Whether the initial statistics and row counter reflect the part's
+      * data EXACTLY — true on every in-memory creation path (all compute
+      * stats from the routed batch itself); false for parts loaded from a
+      * manifest that does not vouch for them. See [[statsTight]].
       */
     initialTight: Boolean = true) {
 
@@ -107,101 +71,19 @@ final class LakePart private[lake] (
     }
     d
   }
-  private val zonesRef =
-    new AtomicReference[Option[Map[String, Zone]]](initialZones)
-  private val bloomsRef =
-    new AtomicReference[Option[Map[String, Bloom]]](initialBlooms)
-  private val sumsRef =
-    new AtomicReference[Option[Map[String, ColSum]]](initialSums)
-  private val sketchesRef =
-    new AtomicReference[Option[Map[String, Array[Byte]]]](initialSketches)
-  private val quantsRef =
-    new AtomicReference[Option[Map[String, Array[Byte]]]](initialQuants)
-  private val freqsRef =
-    new AtomicReference[Option[Map[String, Array[Byte]]]](initialFreqs)
+  private val statsRef = new AtomicReference[PartStats](initialStats)
 
-  /** Current exact column sums; None = unknown (metadata sums fail open).
-    * Meaningful only while [[statsTight]] — consumers must check both.
+  /** Current statistics. The exact families are meaningful only while
+    * [[statsTight]] — consumers must check both.
     */
-  def sums: Option[Map[String, ColSum]] = sumsRef.get
-
-  /** Current HLL distinct sketches; None = unknown (metadata approx-distinct
-    * answers fail open). Meaningful only while [[statsTight]].
-    */
-  def sketches: Option[Map[String, Array[Byte]]] = sketchesRef.get
-
-  /** Fold an appended batch's exact sums in (see [[SumMap.merge]]). A part
-    * with unknown sums stays unknown.
-    */
-  private[lake] def addSums(delta: Map[String, ColSum]): Unit =
-    sumsRef.updateAndGet {
-      case Some(old) => Some(SumMap.merge(old, delta))
-      case None => None
-    }
-
-  /** Union an appended batch's sketches in (see [[HllMap.merge]] — exact
-    * under pure append). A part with unknown sketches stays unknown.
-    */
-  private[lake] def addSketches(delta: Map[String, Array[Byte]]): Unit =
-    sketchesRef.updateAndGet {
-      case Some(old) => Some(HllMap.merge(old, delta))
-      case None => None
-    }
-
-  /** Current GK quantile summaries; None = unknown (metadata
-    * approx-quantile answers fail open). Meaningful only while
-    * [[statsTight]].
-    */
-  def quants: Option[Map[String, Array[Byte]]] = quantsRef.get
-
-  /** Merge an appended batch's quantile summaries in (see
-    * [[QuantileMap.merge]] — covers the concatenated stream within the GK
-    * merge bound). A part with unknown summaries stays unknown.
-    */
-  private[lake] def addQuants(delta: Map[String, Array[Byte]]): Unit =
-    quantsRef.updateAndGet {
-      case Some(old) => Some(QuantileMap.merge(old, delta))
-      case None => None
-    }
-
-  /** Current MG frequent-items sketches; None = unknown (metadata top-k
-    * answers fail open). Meaningful only while [[statsTight]].
-    */
-  def freqs: Option[Map[String, Array[Byte]]] = freqsRef.get
-
-  /** Merge an appended batch's frequent-items sketches in (see
-    * [[FreqMap.merge]] — covers the concatenated stream, error bounds add).
-    * A part with unknown sketches stays unknown.
-    */
-  private[lake] def addFreqs(delta: Map[String, Array[Byte]]): Unit =
-    freqsRef.updateAndGet {
-      case Some(old) => Some(FreqMap.merge(old, delta))
-      case None => None
-    }
+  def stats: PartStats = statsRef.get
 
   /** Current zone maps; None = no statistics (pruning fails open). */
-  def zones: Option[Map[String, Zone]] = zonesRef.get
+  def zones: Option[Map[String, Zone]] = stats.get(StatFamily.Zones)
 
   /** Current key blooms; None = no statistics (pruning fails open). */
-  def blooms: Option[Map[String, Bloom]] = bloomsRef.get
+  def blooms: Option[Map[String, Bloom]] = stats.get(StatFamily.Blooms)
 
-  /** Widen this part's zones with an incoming batch's cell zones. A part
-    * with unknown zones stays unknown (there is nothing sound to widen).
-    */
-  private[lake] def widenZones(delta: Map[String, Zone]): Unit =
-    zonesRef.updateAndGet {
-      case Some(old) => Some(ZoneMap.widen(old, delta))
-      case None => None
-    }
-
-  /** OR this part's blooms with an incoming batch's cell blooms (same
-    * directional soundness as [[widenZones]]).
-    */
-  private[lake] def widenBlooms(delta: Map[String, Bloom]): Unit =
-    bloomsRef.updateAndGet {
-      case Some(old) => Some(Bloom.widen(old, delta))
-      case None => None
-    }
   /** Stats-exactness flag: true while the part's zones and row counter are
     * known to reflect its data EXACTLY, not just soundly. Inserts preserve
     * it (count adds the batch, min/max widen with the batch's exact bounds —
@@ -219,6 +101,18 @@ final class LakePart private[lake] (
   /** Maintained row counter; deliberately stale after upsert until the next
     * materialize, matching reference semantics (src/dataset.rs:144). */
   val rows = new AtomicLong(initialRows)
+  /** The tight-and-counted gate: the exact row count while the stats are
+    * exact AND the counter is known — what every exact catalog answer and
+    * the manifest's vouch require. One read of the counter, so a concurrent
+    * delete cannot slip its -1 past the check.
+    */
+  def vouchedRows: Option[Long] = {
+    val n = rows.get
+    if (statsTight.get && n >= 0L) Some(n) else None
+  }
+
+  def vouched: Boolean = vouchedRows.isDefined
+
   /** Rows mutated since the last materialize. */
   val changes = new AtomicLong(0L)
   /** Mutation operations since the last materialize — plan DEPTH, not volume.
@@ -240,12 +134,8 @@ final class LakePart private[lake] (
     val f = new LakePart(
       initial = if (cur0 != null) cur0 else initial,
       key = key, bucketCols = bucketCols, nBuckets = nBuckets,
-      initialRows = rows.get, onCheckpoint = onCheckpoint,
-      initialZones = zonesRef.get, statColsOf = statColsOf,
-      initialBlooms = bloomsRef.get, snapshot = snapshot,
-      initialSums = sumsRef.get, initialSketches = sketchesRef.get,
-      initialQuants = quantsRef.get, initialFreqs = freqsRef.get,
-      initialTight = statsTight.get)
+      initialRows = rows.get, onCheckpoint = onCheckpoint, layoutOf = layoutOf,
+      snapshot = snapshot, initialStats = statsRef.get, initialTight = statsTight.get)
     f.changes.set(changes.get)
     f.mutationOps.set(mutationOps.get)
     f
@@ -267,13 +157,17 @@ final class LakePart private[lake] (
     case _ => cur
   }
 
-  /** Append rows (reference: src/dataset.rs:82-106). Schema evolution is
-    * tolerated via `allowMissingColumns` (the reference's TODO at
-    * src/main.rs:33).
+  /** Append rows (reference: src/dataset.rs:82-106) and fold the batch's
+    * statistics in — exact under pure append, so tightness survives. The
+    * fold happens before any auto-compaction, whose recount would otherwise
+    * already include the batch. Schema evolution is tolerated via
+    * `allowMissingColumns` (the reference's TODO at src/main.rs:33).
     */
-  def insert(other: DataFrame, otherRows: Long, collectNow: Boolean = false): Unit =
+  def insert(other: DataFrame, otherRows: Long, delta: PartStats,
+      collectNow: Boolean = false): Unit =
     lock.synchronized {
       ref.set(cur.unionByName(other, allowMissingColumns = true))
+      statsRef.updateAndGet(_.append(delta))
       rows.addAndGet(otherRows)
       changes.addAndGet(otherRows)
       maybeCompact(collectNow)
@@ -285,17 +179,16 @@ final class LakePart private[lake] (
     * src/dataset.rs:108-147). Keys surviving only on one side are taken from
     * that side. Columns present only in the incoming frame are appended
     * (schema evolution — null for pre-existing rows); columns missing from
-    * the incoming frame keep their existing values.
+    * the incoming frame keep their existing values. Statistics: the superset
+    * families widen with the batch's (surviving values ⊆ old ∪ delta), the
+    * exact ones go unknown.
     */
-  def upsert(other: DataFrame, keys: Seq[String], otherRows: Long, collectNow: Boolean = false,
-      leftWins: Set[String] = Set.empty): Unit =
+  def upsert(other: DataFrame, keys: Seq[String], otherRows: Long, delta: PartStats,
+      collectNow: Boolean = false, leftWins: Set[String] = Set.empty): Unit =
     lock.synchronized {
       ref.set(LakePart.upsertJoin(cur, other, keys, leftWins))
       statsTight.set(false) // superset zones + stale counter until materialize
-      sumsRef.set(None) // a merge's post-state sum is not derivable
-      sketchesRef.set(None) // replaced rows' registers cannot be subtracted
-      quantsRef.set(None) // replaced rows' tuples cannot be subtracted
-      freqsRef.set(None) // replaced rows' counts cannot be subtracted
+      statsRef.updateAndGet(_.rewritten.append(delta))
       changes.addAndGet(otherRows)
       // rows counter intentionally unchanged (stale until materialize),
       // mirroring reference src/dataset.rs:144.
@@ -311,10 +204,7 @@ final class LakePart private[lake] (
   def delete(keysDf: DataFrame, keys: Seq[String]): Unit = lock.synchronized {
     ref.set(cur.join(keysDf.select(keys.map(col): _*).distinct(), keys, "left_anti"))
     statsTight.set(false) // zones now a superset of the surviving rows
-    sumsRef.set(None) // deleted rows' contribution is unknown
-    sketchesRef.set(None) // deleted rows' registers cannot be subtracted
-    quantsRef.set(None) // deleted rows' tuples cannot be subtracted
-    freqsRef.set(None) // deleted rows' counts cannot be subtracted
+    statsRef.updateAndGet(_.rewritten)
     changes.addAndGet(1L)
     rows.set(-1L) // unknown until materialize/recount
     maybeCompact(false)
@@ -327,10 +217,7 @@ final class LakePart private[lake] (
   def deleteWhere(cond: Column): Unit = lock.synchronized {
     ref.set(cur.filter(!coalesce(cond, lit(false))))
     statsTight.set(false) // zones now a superset of the surviving rows
-    sumsRef.set(None) // deleted rows' contribution is unknown
-    sketchesRef.set(None) // deleted rows' registers cannot be subtracted
-    quantsRef.set(None) // deleted rows' tuples cannot be subtracted
-    freqsRef.set(None) // deleted rows' counts cannot be subtracted
+    statsRef.updateAndGet(_.rewritten)
     changes.addAndGet(1L)
     rows.set(-1L) // unknown until materialize/recount
     maybeCompact(false)
@@ -341,9 +228,10 @@ final class LakePart private[lake] (
     * computes them all; sequential `withColumn` would let `SET a = b,
     * b = a` see a half-updated row), and rows where the predicate is FALSE
     * or NULL are untouched. Row count is preserved; the assigned columns'
-    * zone/bloom entries are DROPPED (new values may lie outside the old
-    * bounds — unknown stats fail open, wrong stats never), while every
-    * other column's statistics stay live. Caller must have excluded
+    * entries are DROPPED from every stat family (new values may lie outside
+    * the old bounds, sums, sketches and summaries — unknown stats fail open,
+    * wrong stats never), while every other column's statistics stay live
+    * and exact. Caller must have excluded
     * partition/bucket columns from the assignment set (an in-place update
     * cannot move a row between cells).
     */
@@ -358,11 +246,7 @@ final class LakePart private[lake] (
           case None => col(cn)
         }
       }.toSeq: _*))
-      val assigned = assignments.map(_._1).toSet
-      zonesRef.updateAndGet(_.map(_.filterNot { case (k, _) => assigned(k) }))
-      bloomsRef.updateAndGet(_.map(_.filterNot { case (k, _) => assigned(k) }))
-      sumsRef.updateAndGet(_.map(_.filterNot { case (k, _) => assigned(k) }))
-      sketchesRef.updateAndGet(_.map(_.filterNot { case (k, _) => assigned(k) }))
+      statsRef.updateAndGet(_.forget(assignments.map(_._1).toSet))
       changes.addAndGet(1L)
       maybeCompact(false)
     }
@@ -385,25 +269,9 @@ final class LakePart private[lake] (
       // The recount job doubles as a stats pass: zones recompute TIGHT here
       // (mutations in between only ever widened them), and parts that had
       // no stats at all (lazily loaded) gain them.
-      import org.apache.spark.sql.functions.{count, lit}
-      val (zc, bc, sc, kc, qc, fc) = statColsOf(m.schema)
-      val statAggs = count(lit(1)) +:
-        (ZoneMap.aggs(zc) ++ Bloom.aggs(bc) ++ SumMap.aggs(m.schema, sc) ++
-          HllMap.aggs(kc) ++ QuantileMap.aggs(qc) ++ FreqMap.aggs(fc))
-      val row = m.agg(statAggs.head, statAggs.tail: _*).head()
-      rows.set(row.getLong(0))
-      zonesRef.set(Some(ZoneMap.fromRow(row, 1, zc)))
-      if (bc.nonEmpty) bloomsRef.set(Some(Bloom.fromRow(row, 1 + 2 * zc.length, bc)))
-      sumsRef.set(Some(SumMap.fromRow(row, 1 + 2 * zc.length + Bloom.Planes * bc.length, sc)))
-      if (kc.nonEmpty) sketchesRef.set(Some(HllMap.fromRow(row,
-        1 + 2 * zc.length + Bloom.Planes * bc.length + 2 * sc.length, kc)))
-      if (qc.nonEmpty) quantsRef.set(Some(QuantileMap.fromRow(row,
-        1 + 2 * zc.length + Bloom.Planes * bc.length + 2 * sc.length + 2 * kc.length, qc)))
-      if (fc.nonEmpty) freqsRef.set(Some(FreqMap.fromRow(row,
-        1 + 2 * zc.length + Bloom.Planes * bc.length + 2 * sc.length + 2 * kc.length + qc.length, fc)))
+      recount(m)
       changes.set(0L)
       mutationOps.set(0L)
-      statsTight.set(true) // count + zones just recomputed from data
     }
   }
 
@@ -419,16 +287,7 @@ final class LakePart private[lake] (
       dropStats: Set[String] = Set.empty,
       renameStats: Map[String, String] = Map.empty): Unit = lock.synchronized {
     ref.set(f(cur))
-    def remap[T](m: Map[String, T]): Map[String, T] =
-      m.collect { case (k, v) if !dropStats(k) =>
-        renameStats.getOrElse(k, k) -> v
-      }
-    zonesRef.updateAndGet(_.map(remap))
-    bloomsRef.updateAndGet(_.map(remap))
-    sumsRef.updateAndGet(_.map(remap))
-    sketchesRef.updateAndGet(_.map(remap))
-    quantsRef.updateAndGet(_.map(remap))
-    freqsRef.updateAndGet(_.map(remap))
+    statsRef.updateAndGet(_.remap(dropStats, renameStats))
     mutationOps.incrementAndGet() // plan depth grew by one
   }
 
@@ -439,24 +298,17 @@ final class LakePart private[lake] (
     * prefer [[materialize]] (it also collapses the plan).
     */
   private[lake] def analyzeStats(): Unit = lock.synchronized {
-    if (statsTight.get && rows.get >= 0L) return
-    import org.apache.spark.sql.functions.{count, lit}
-    val d = cur
-    val (zc, bc, sc, kc, qc, fc) = statColsOf(d.schema)
-    val statAggs = count(lit(1)) +:
-      (ZoneMap.aggs(zc) ++ Bloom.aggs(bc) ++ SumMap.aggs(d.schema, sc) ++
-        HllMap.aggs(kc) ++ QuantileMap.aggs(qc) ++ FreqMap.aggs(fc))
-    val row = d.agg(statAggs.head, statAggs.tail: _*).head()
-    rows.set(row.getLong(0))
-    zonesRef.set(Some(ZoneMap.fromRow(row, 1, zc)))
-    if (bc.nonEmpty) bloomsRef.set(Some(Bloom.fromRow(row, 1 + 2 * zc.length, bc)))
-    sumsRef.set(Some(SumMap.fromRow(row, 1 + 2 * zc.length + Bloom.Planes * bc.length, sc)))
-    if (kc.nonEmpty) sketchesRef.set(Some(HllMap.fromRow(row,
-      1 + 2 * zc.length + Bloom.Planes * bc.length + 2 * sc.length, kc)))
-    if (qc.nonEmpty) quantsRef.set(Some(QuantileMap.fromRow(row,
-      1 + 2 * zc.length + Bloom.Planes * bc.length + 2 * sc.length + 2 * kc.length, qc)))
-    if (fc.nonEmpty) freqsRef.set(Some(FreqMap.fromRow(row,
-      1 + 2 * zc.length + Bloom.Planes * bc.length + 2 * sc.length + 2 * kc.length + qc.length, fc)))
+    if (vouched) return
+    recount(cur)
+  }
+
+  /** One aggregation job over `d`: exact count and every family's stats,
+    * restoring [[statsTight]].
+    */
+  private def recount(d: DataFrame): Unit = {
+    val (n, st) = layoutOf(d.schema).of(d)
+    rows.set(n)
+    statsRef.set(st)
     statsTight.set(true)
   }
 
@@ -501,29 +353,17 @@ final class LakePart private[lake] (
     * part's current data — the one-pass rewrite's grouped recount (ONE
     * aggregation job covers every rewritten cell, and it reads only the
     * bloom-tracked columns — parquet column pruning keeps it far cheaper
-    * than a full [[analyzeStats]] per part). `offset` points at the count
-    * in a row laid out (count, bloom planes in `bc` order). Deliberately
-    * does NOT restore [[statsTight]]: zones/sums stay the loose supersets
-    * the mutation left (sound), and re-tightening everything costs a
-    * full-width scan the erase gates measured as a regression. Blooms are
-    * the one stat the driver-side locate consults for MEMBERSHIP — fresh
-    * tight blooms are what stop repeated erases from rewriting cells that
-    * provably hold nothing.
+    * than a full [[analyzeStats]] per part). `fresh` replaces the families
+    * it carries. Deliberately does NOT restore [[statsTight]]: zones/sums
+    * stay the loose supersets the mutation left (sound), and re-tightening
+    * everything costs a full-width scan the erase gates measured as a
+    * regression. Blooms are the one stat the driver-side locate consults
+    * for MEMBERSHIP — fresh tight blooms are what stop repeated erases from
+    * rewriting cells that provably hold nothing.
     */
-  private[lake] def adoptBloomStats(row: org.apache.spark.sql.Row, offset: Int,
-      bc: Seq[String]): Unit = lock.synchronized {
-    rows.set(row.getLong(offset))
-    if (bc.nonEmpty) bloomsRef.set(Some(Bloom.fromRow(row, offset + 1, bc)))
-  }
-
-  /** [[adoptBloomStats]] for a cell whose rewrite left ZERO surviving rows:
-    * exact count 0, all-zero bloom planes (membership probes now PROVE
-    * absence of everything).
-    */
-  private[lake] def adoptEmptyBloomStats(bc: Seq[String]): Unit = lock.synchronized {
-    rows.set(0L)
-    bloomsRef.set(Some(bc.map(c => c -> Bloom(
-      Vector.fill(Bloom.Planes)(new Array[Byte](Bloom.BytesPerPlane)))).toMap))
+  private[lake] def adoptStats(n: Long, fresh: PartStats): Unit = lock.synchronized {
+    rows.set(n)
+    statsRef.updateAndGet(_.adopt(fresh))
   }
 }
 

@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.util.Base64
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.util.QuantileSummaries
 import org.apache.spark.sql.functions._
@@ -124,10 +122,4 @@ object QuantileMap {
     require(q >= 0.0 && q <= 1.0, s"quantile out of [0,1]: $q")
     if (sketches.isEmpty) None else fold(sketches).query(q)
   }
-
-  /** Manifest encoding. */
-  def encode(b: Array[Byte]): String = Base64.getEncoder.encodeToString(b)
-
-  def decode(s: String): Option[Array[Byte]] =
-    try Some(Base64.getDecoder.decode(s)) catch { case _: Exception => None }
 }

@@ -91,11 +91,4 @@ object SumMap {
     */
   def merge(current: Map[String, ColSum], delta: Map[String, ColSum]): Map[String, ColSum] =
     current.map { case (c, x) => c -> delta.get(c).map(x.add).getOrElse(x) }
-
-  /** Manifest encoding: plain decimal string + non-null count. */
-  def encode(cs: ColSum): (String, Long) = (cs.sum.toPlainString, cs.nonNulls)
-
-  def decode(s: String, n: Long): Option[ColSum] =
-    try Some(ColSum(new java.math.BigDecimal(s), n))
-    catch { case scala.util.control.NonFatal(_) => None }
 }

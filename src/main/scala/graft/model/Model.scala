@@ -45,6 +45,9 @@ final case class PartKey(partValues: List[(String, String)], bucketNr: Option[In
       bucketNr.map(b => s"bucket=$b").toList
     segs.mkString("/")
   }
+
+  /** This cell's value of partition column `c` (null when absent or NULL). */
+  def valueOf(c: String): String = partValues.collectFirst { case (k, v) if k == c => v }.orNull
 }
 
 object PartKey {

@@ -146,7 +146,7 @@ object Stats {
         // degrades to the one full scan.
         val hybrid: Option[Row] =
           if (!cols.forall(c => graft.lake.SumMap.summable(schema(c).dataType))) None
-          else ds.metaSumsPartial(cols).flatMap { case (cnt0, sums0, scanOpt) =>
+          else ds.metaHybrid(Nil, cols).flatMap { case (cnt0, _, sums0, scanOpt) =>
             val (scanCnt, scanSums) = scanOpt match {
               case None => (0L, cols.map(_ -> graft.lake.SumMap.Zero).toMap)
               case Some(scan) =>

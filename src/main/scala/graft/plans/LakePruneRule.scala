@@ -316,13 +316,12 @@ final case class LakePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case ApproxDistinctSpec(c) => c
     }.distinct
     for {
-      (cnt, zones) <- scan.ds.metaStats(mmCols, cellFilter)
-      sums <-
-        if (sumCols.isEmpty) Some(Map.empty[String, graft.lake.ColSum])
-        else scan.ds.metaSums(sumCols, cellFilter).map(_._2)
-      approx <-
-        if (approxCols.isEmpty) Some(Map.empty[String, Long])
-        else scan.ds.metaApproxDistinct(approxCols, cellFilter)
+      // ONE catalog snapshot serves every family this answer reads.
+      whole <- scan.ds.fold(Seq(graft.lake.StatFamily.Sketches -> approxCols),
+        cellFilter = cellFilter).map(_.whole)
+      (cnt, zones) <- whole.zones(mmCols)
+      (_, sums) <- whole.sums(sumCols)
+      approx <- whole.approxDistinct(approxCols)
       values <- specs.flatten.zip(aggExprs).foldRight(Option(List.empty[Any])) {
         case ((spec, e), acc) => acc.flatMap { rest =>
           spec match {
@@ -338,8 +337,7 @@ final case class LakePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
               avgValue(sums(c), zones(c)).map(
                 _.map(v => java.lang.Double.valueOf(v): Any).orNull :: rest)
             case CntDistinctSpec(c) =>
-              scan.ds.metaDistinctPartition(c, cellFilter)
-                .map(_.asInstanceOf[Any] :: rest)
+              Some(whole.distinctPartition(c).asInstanceOf[Any] :: rest)
             case ApproxDistinctSpec(c) =>
               Some(approx(c).asInstanceOf[Any] :: rest)
           }
@@ -487,16 +485,12 @@ final case class LakePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case scala.util.Right(AvgSpec(c)) => c
     }.distinct
     for {
-      groups <- scan.ds.metaStatsGrouped(groupAttrs.map(_.name), cols, cellFilter)
-      // Per-group sums keyed by the decoded group tuple — both folds decode
-      // identically, so the join is exact; any miss fails the whole answer
-      // open.
-      sumsByGroup <-
-        if (sumCols.isEmpty) Some(Map.empty[Seq[Any], Map[String, graft.lake.ColSum]])
-        else scan.ds.metaSumsGrouped(groupAttrs.map(_.name), sumCols, cellFilter)
-          .map(_.map { case (vals, _, sums) => vals -> sums }.toMap)
+      // ONE catalog snapshot: per group count, zones and sums together.
+      groups <- scan.ds.fold(groupBy = Some(groupAttrs.map(_.name)), cellFilter = cellFilter)
+        .flatMap(_.each(g =>
+          for ((cnt, zones) <- g.zones(cols); (_, sums) <- g.sums(sumCols)) yield (cnt, zones, sums)))
       rows <- groups.foldRight(Option(List.empty[org.apache.spark.sql.catalyst.InternalRow])) {
-        case ((vals, cnt, zones), acc) => acc.flatMap { rest =>
+        case ((vals, (cnt, zones, sums)), acc) => acc.flatMap { rest =>
           val values = specs.zip(aggExprs).foldRight(Option(List.empty[Any])) {
             case ((spec, e), a2) => a2.flatMap { r2 =>
               spec match {
@@ -505,21 +499,16 @@ final case class LakePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
                     CatalystTypeConverters.createToCatalystConverter(e.dataType)(_)).orNull :: r2)
                 case scala.util.Right(CntSpec) => Some(cnt.asInstanceOf[Any] :: r2)
                 case scala.util.Right(CntColSpec(c)) =>
-                  sumsByGroup.get(vals).map(_(c).nonNulls.asInstanceOf[Any] :: r2)
+                  Some(sums(c).nonNulls.asInstanceOf[Any] :: r2)
                 case scala.util.Right(MinMaxSpec(c, wantMin)) =>
                   val bound = if (wantMin) zones(c).min else zones(c).max
                   Some(bound.map(
                     CatalystTypeConverters.createToCatalystConverter(e.dataType)(_)).orNull :: r2)
                 case scala.util.Right(SumSpec(c)) =>
-                  for {
-                    gs <- sumsByGroup.get(vals)
-                    v <- sumCatalystValue(gs(c), e.dataType)
-                  } yield v :: r2
+                  sumCatalystValue(sums(c), e.dataType).map(_ :: r2)
                 case scala.util.Right(AvgSpec(c)) =>
-                  for {
-                    gs <- sumsByGroup.get(vals)
-                    v <- avgValue(gs(c), zones(c))
-                  } yield (v.map(java.lang.Double.valueOf(_): Any).orNull :: r2)
+                  avgValue(sums(c), zones(c))
+                    .map(_.map(java.lang.Double.valueOf(_): Any).orNull :: r2)
               }
             }
           }

@@ -324,6 +324,52 @@ class DmlSpec extends SparkSpec {
     assert(db.executeDml("VACUUM dml_vac") == 0L)
   }
 
+  /** A table tracking every opt-in sketch family, for the UPDATE cases. */
+  private def sketchedDb(name: String): (Database, LakeDataset, org.apache.spark.sql.DataFrame) = {
+    val o = Fixtures.table(spark, sf(), "orders")
+      .withColumn("o_batch", (col("o_orderkey") / 1000).cast("int"))
+    val db = new Database(spark)
+    val ds = LakeDataset.fromDataFrame(spark, o, partitionCols = Seq("o_batch"),
+      sketchCols = Seq("o_custkey"), quantileCols = Seq("o_totalprice"),
+      freqCols = Seq("o_orderstatus"))
+    db.register(name, ds)
+    (db, ds, o)
+  }
+
+  test("UPDATE of a frequent-items column: GROUP BY count equals a scan") {
+    val (db, _, o) = sketchedDb("dml_upd_freq")
+    db.executeDml("UPDATE dml_upd_freq SET o_orderstatus = 'Z' WHERE o_custkey % 7 = 0")
+    val got = db.executeSql(
+      "SELECT o_orderstatus, count(*) AS n FROM dml_upd_freq GROUP BY o_orderstatus")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val want = o.withColumn("o_orderstatus",
+        when(col("o_custkey") % 7 === 0, lit("Z")).otherwise(col("o_orderstatus")))
+      .groupBy("o_orderstatus").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got == want)
+    assert(want.contains("Z"))
+  }
+
+  test("UPDATE of quantile and sketch columns: catalog answers are None or the scan's") {
+    val (db, ds, o) = sketchedDb("dml_upd_sk")
+    db.executeDml("UPDATE dml_upd_sk SET o_totalprice = o_totalprice + 1e6 WHERE o_orderkey > 0")
+    val prices = o.select((col("o_totalprice") + 1e6).as("p")).collect().map(_.getDouble(0)).sorted
+    ds.metaApproxQuantile(Seq("o_totalprice"), Seq(0.5)).foreach { m =>
+      val median = m("o_totalprice").head
+      // GK rank bound: the answer's rank lies within 2εn (+1) of n/2.
+      val slack = 2 * graft.lake.QuantileMap.Eps * prices.length + 1
+      val lt = prices.count(_ < median)
+      val le = prices.count(_ <= median)
+      assert(lt - slack <= prices.length / 2.0 && prices.length / 2.0 <= le + slack,
+        s"median $median outside the rank bound")
+    }
+    db.executeDml("UPDATE dml_upd_sk SET o_custkey = 1 WHERE o_orderkey > 0")
+    val batches = o.select(col("o_batch").cast("string")).distinct()
+      .collect().map(_.getString(0)).sorted
+    val want = batches.zipWithIndex.map { case (b, i) => (b, 1L, if (i == 0) 1L else 0L) }.toSeq
+    ds.metaPartitionNetNew("o_custkey", "o_batch").foreach(got => assert(got == want))
+  }
+
   test("OPTIMIZE ZORDER BY re-layouts; both named dimensions prune in SQL") {
     val o = Fixtures.table(spark, sf(), "orders")
     val db = new Database(spark)
