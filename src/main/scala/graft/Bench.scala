@@ -11,8 +11,25 @@ import org.apache.spark.sql.SparkSession
   * codegen startup cost.
   */
 object Bench {
+  /** The name-list selector shared by Bench, Verify (`SPARK_GRAFT_ONLY`)
+    * and ScaleSmoke (its section argument): comma-separated names, each
+    * trimmed; `None` selects everything. A name outside `known`, or a list
+    * naming nothing, throws before any work runs.
+    */
+  def select(spec: Option[String], known: Iterable[String]): Option[Set[String]] =
+    spec.map { raw =>
+      val names = raw.split(',').map(_.trim).filter(_.nonEmpty).toSet
+      require(names.nonEmpty, s"selection '$raw' names nothing")
+      val unknown = names -- known
+      require(unknown.isEmpty,
+        s"unknown name(s) in selection: ${unknown.toSeq.sorted.mkString(", ")}")
+      names
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // Optional filter for ad-hoc runs: SPARK_GRAFT_ONLY=q01_pricing_summary,dedup_minhash
+    val only = select(sys.env.get("SPARK_GRAFT_ONLY"), SparkEntry.queries.keys)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(32, Runtime.getRuntime.availableProcessors).toString)
     val spark = SparkSession.builder()
@@ -33,8 +50,6 @@ object Bench {
     // Warm-up: JVM, codegen, parquet footer caches.
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
 
-    // Optional filter for ad-hoc runs: SPARK_GRAFT_ONLY=q01,dedup_minhash
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     // Min over N runs per query (default 3): single-JVM timings at this
@@ -50,16 +65,21 @@ object Bench {
       // evicted. Min-of-N already hid this for runs 2+; this fixes run 1.
       try SparkEntry.prewarm.get(name).foreach(f => f(spark, sfDir))
       catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] prewarm $name failed: $e") // fn records -1
+        System.err.println(s"[bench] prewarm $name failed: $e")
       }
-      val times = (1 to runs).map { _ =>
+      // A run that throws contributes no sample: the time until the
+      // exception is not the query's cost, and under min-of-N it would make
+      // a broken gate look fast.
+      val times = (1 to runs).flatMap { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+        val ok = try { fn(spark, sfDir).count(); true } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e"); false
+        }
         val d = (System.nanoTime() - t0) / 1e9
         // Per RUN: each run builds fresh cached lineages; without uncaching,
         // N runs accumulate N copies and eviction churn skews later runs.
         spark.catalog.clearCache()
-        d
+        if (ok) Some(d) else None
       }
       // Per QUERY (not per run): shared fixtures are read-only for their
       // consumers, so re-building them inside every timed run would just
@@ -72,13 +92,17 @@ object Bench {
       // bimodal split) inside later timed runs.
       System.gc()
       if (debug) System.err.println(f"[bench] $name: ${times.map(t => f"$t%.2f").mkString(", ")}")
-      name -> times.min
+      // A gate with no successful run is written as -1 and listed in
+      // "failed"; the total sums only the passing gates.
+      name -> (if (times.isEmpty) -1.0 else times.min)
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    val total = results.map(_._2).filter(_ >= 0).sum
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
     println(json)
     // The driver captures stdout with a ~2000-char TAIL: with 160+ queries
     // the line above is ~6 KB, its head is cut off, and the driver records
@@ -104,7 +128,7 @@ object Bench {
     // intact inside the tail: headline total + the slowest queries, per-query
     // map capped well under the tail budget, with a pointer to the full map.
     val sortedQ = results.sortBy(-_._2)
-    val head = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries_full":"$outFinal","queries":{"""
+    val head = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries_full":"$outFinal","failed":$failed,"queries":{"""
     val sb = new StringBuilder(head)
     var first = true
     sortedQ.foreach { case (k, v) =>

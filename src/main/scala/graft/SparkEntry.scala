@@ -65,20 +65,22 @@ object SparkEntry {
     * operators fix `spark.sql.shuffle.partitions` STATE STORES at query
     * start and every store pays a per-epoch commit, so the count is a
     * SCALE KNOB, not a constant: derive it from the stream's expected key
-    * volume — one store per `spark.graft.stream.keysPerStore` keys
-    * (default 250k), floored at 4 (the measured ~2× trim for these
-    * fixture-sized streams vs 32 near-empty stores) and capped at the
-    * session's shuffle-partition setting (a 100 TB keyspace gets the
-    * cluster's full store count, never fewer stores than the session would
-    * plan anyway... never MORE than it either — store count beyond the
-    * configured parallelism only adds commit overhead).
+    * volume — one store per [[StreamKeysPerStore]] keys, floored at 4 (the
+    * measured ~2× trim for these fixture-sized streams vs 32 near-empty
+    * stores) and capped at the session's shuffle-partition setting (a
+    * 100 TB keyspace gets the cluster's full store count, never fewer
+    * stores than the session would plan anyway... never MORE than it
+    * either — store count beyond the configured parallelism only adds
+    * commit overhead).
     */
   private def streamStatePartitions(s: SparkSession, expectedKeys: Long): Int = {
-    val perStore = s.conf.get("spark.graft.stream.keysPerStore", "250000").toLong
     val sessionParts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
     math.max(4L, math.min(sessionParts.toLong,
-      (expectedKeys + perStore - 1) / perStore)).toInt
+      (expectedKeys + StreamKeysPerStore - 1) / StreamKeysPerStore)).toInt
   }
+
+  /** Expected stream keys per state store ([[streamStatePartitions]]). */
+  private val StreamKeysPerStore = 250000L
 
   /** Trim the session for a fixture-lifetime stateful stream; returns the
     * previous conf values for [[restoreStreamSession]] in the gate's

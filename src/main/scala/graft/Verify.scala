@@ -6,6 +6,9 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Local-iteration filter: SPARK_GRAFT_ONLY=q01_pricing_summary,graph_kcore
+    // dumps just those queries. Unset (the driver's invocation) → the full gate.
+    val only = Bench.select(sys.env.get("SPARK_GRAFT_ONLY"), SparkEntry.queries.keys)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(32, Runtime.getRuntime.availableProcessors).toString)
     val spark = SparkSession.builder()
@@ -18,10 +21,6 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Local-iteration filter: SPARK_GRAFT_ONLY=q1,q2 dumps just those
-    // queries. Unset (the driver's invocation) → the full gate.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

@@ -226,26 +226,11 @@ final class LakeDataset private (
     (dfs.flatMap(Bridge.checkpointRdds).map(_.id).toSet,
       dfs.flatMap(Bridge.scanRootPaths))
 
-  /** Snapshot reliability mode (`spark.graft.snapshot.mode`):
-    *
-    *  - `local` (default): small snapshots use `localCheckpoint`, which pins
-    *    blocks in THIS executor set — fast, but lost on executor death and
-    *    meaningless with dynamic allocation;
-    *  - `reliable`: every snapshot (whole-table, batch, per-part compaction)
-    *    spills to parquet under [[spillDir]] instead. Point
-    *    `spark.graft.snapshot.dir` at cluster scratch space (HDFS/S3) and
-    *    compaction state survives any executor: the cluster-mode setting.
-    *
-    * Read per call, so tests and sessions can flip it between lifecycles.
-    */
-  private def reliableSnapshots: Boolean =
-    spark.conf.get("spark.graft.snapshot.mode", "local") == "reliable"
-
   /** Eagerly checkpoint and track as pending. In reliable mode this is a
     * parquet spill — same ledger, directory-backed refs.
     */
   private def ckpt(df: DataFrame): DataFrame =
-    if (reliableSnapshots) spillSnapshot(df)
+    if (LakeDataset.reliableSnapshots(spark)) spillSnapshot(df)
     else {
       val c = df.localCheckpoint(true)
       val refs = Bridge.checkpointRdds(c).map(new RddRef(_))
@@ -289,7 +274,7 @@ final class LakeDataset private (
     * until the owning mutation retains it. Reliable mode always spills.
     */
   private def materializeSnapshot(df: DataFrame, estRows: Long): DataFrame =
-    if (!reliableSnapshots &&
+    if (!LakeDataset.reliableSnapshots(spark) &&
         estRows >= 0 && estRows <= LakeDataset.SpillSnapshotRows) ckpt(df)
     else spillSnapshot(df)
 
@@ -302,7 +287,7 @@ final class LakeDataset private (
     * frames (they carry no checkpoint RDDs).
     */
   private[lake] def partSnapshot(df: DataFrame): DataFrame =
-    if (!reliableSnapshots) Bridge.severCheckpoint(df.localCheckpoint(true))
+    if (!LakeDataset.reliableSnapshots(spark)) Bridge.severCheckpoint(df.localCheckpoint(true))
     else {
       val dir = s"$spillDir/gen-${snapshotGen.incrementAndGet()}"
       df.write.mode("overwrite").parquet(dir)
@@ -953,7 +938,7 @@ final class LakeDataset private (
     * about OUR changes — `mine` and its fingerprints are computed once —
     * so the loop re-reads the fresh manifest, re-validates disjointness
     * against it, re-merges, and retries the conditional write, up to
-    * `spark.graft.commit.maxRetries` (default 5) attempts. Every retry is
+    * [[LakeDataset.MaxCommitAttempts]] attempts. Every retry is
     * driver-side manifest arithmetic; no Spark job reruns. Genuine
     * conflicts (overlapping cells, diverged layout/schema/checks) still
     * abort on whichever attempt observes them — retrying cannot fix a
@@ -964,8 +949,6 @@ final class LakeDataset private (
     val fpMine = LakeDataset.statFingerprints(mine)
     def layoutOf(m: Manifest) = (m.partitions, m.buckets, m.nBuckets,
       m.bloomCols, m.sketchCols, m.quantileCols, m.freqCols, m.storage.format)
-    val maxRetries = spark.conf.getOption("spark.graft.commit.maxRetries")
-      .map(_.toInt).getOrElse(5)
     var attempt = 0
     var committed = false
     while (!committed) {
@@ -1012,10 +995,10 @@ final class LakeDataset private (
         commitBaseDisk = LakeDataset.statFingerprints(merged)
         commitBaseChecks = mergedChecks
         checksMap = mergedChecks
-      } else if (attempt >= maxRetries)
+      } else if (attempt >= LakeDataset.MaxCommitAttempts)
         throw new java.util.ConcurrentModificationException(
           s"concurrent commit on ${spec.root}: lost the commit race " +
-            s"$maxRetries times — reload and retry")
+            s"${LakeDataset.MaxCommitAttempts} times — reload and retry")
     }
   }
 
@@ -1941,15 +1924,6 @@ final class LakeDataset private (
     if (save) toStorage()
   }
 
-  private def profiled[T](label: String)(f: => T): T =
-    if (spark.conf.get("spark.graft.lake.profile", "false") != "true") f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(
-        f"[lake] $label%-24s ${(System.nanoTime() - t0) / 1e9}%7.2fs")
-      r
-    }
-
   /** Append a batch whose cells are all FRESH directories, in ONE write job.
     *
     * The insert-then-save path plans the batch twice (an in-memory snapshot
@@ -1976,7 +1950,7 @@ final class LakeDataset private (
     val spec = storage.getOrElse(throw new IllegalStateException("no storage spec"))
     enforceChecks(df, "insertWritten batch")
     val p = prepared(df)
-    val (counts, layout) = profiled("iw:route")(cellCountsOf(p))
+    val (counts, layout) = cellCountsOf(p)
     require(counts != null,
       "insertWritten needs a partitioned or bucketed layout (fresh cells)")
     require(!p.columns.contains("bucket") || bucketCols.isEmpty,
@@ -2014,23 +1988,22 @@ final class LakeDataset private (
     // derives b=.../a=... — and the divergence would surface only at the
     // post-write registration check, after files already landed.
     val dirCols = partitionCols.sorted ++ (if (bucketCols.nonEmpty) List("bucket") else Nil)
-    profiled("iw:write")(
-      p.withColumnRenamed(LakeDataset.BucketCol, "bucket")
-        // One writer task per cell: without this, every input partition
-        // opens a file in every cell directory it touches — a cached
-        // shuffle output (32 partitions × 32 buckets) writes ~1000 tiny
-        // files where 32 suffice, and the commit protocol pays per file
-        // (measured 4.2s → sub-second on a 4k-row batch).
-        .repartition(dirCols.map(col): _*)
-        .write.mode("append").format(spec.format)
-        .option("compression", spec.compression)
-        .partitionBy(dirCols: _*)
-        .save(spec.root))
+    p.withColumnRenamed(LakeDataset.BucketCol, "bucket")
+      // One writer task per cell: without this, every input partition
+      // opens a file in every cell directory it touches — a cached
+      // shuffle output (32 partitions × 32 buckets) writes ~1000 tiny
+      // files where 32 suffice, and the commit protocol pays per file
+      // (measured 4.2s → sub-second on a 4k-row batch).
+      .repartition(dirCols.map(col): _*)
+      .write.mode("append").format(spec.format)
+      .option("compression", spec.compression)
+      .partitionBy(dirCols: _*)
+      .save(spec.root)
     val target = org.apache.spark.sql.types.StructType(
       p.schema.fields.filterNot(_.name == LakeDataset.BucketCol))
     val fileSchema = org.apache.spark.sql.types.StructType(
       target.fields.filterNot(f => partitionCols.contains(f.name)))
-    profiled("iw:register")(this.synchronized {
+    this.synchronized {
       markDirty()
       keyed.foreach { case (key, row) =>
         val partVals = key.partValues
@@ -2051,8 +2024,8 @@ final class LakeDataset private (
         diskDirs.put(key, dir)
         diskSchemas.put(key, target)
       }
-    })
-    profiled("iw:manifest")(writeManifest())
+    }
+    writeManifest()
   }
 
   /** The table view a key probe scans: the single clean scan when present;
@@ -2827,6 +2800,32 @@ final class LakeDataset private (
 
 object LakeDataset {
 
+  /** Snapshot reliability mode (`spark.graft.snapshot.mode`):
+    *
+    *  - `local` (default): small snapshots use `localCheckpoint`, which pins
+    *    blocks in THIS executor set — fast, but lost on executor death and
+    *    meaningless with dynamic allocation;
+    *  - `reliable`: every snapshot (whole-table, batch, per-part compaction)
+    *    spills to parquet under the dataset's spill directory instead, and
+    *    [[shareScan]] shares nothing. Point `spark.graft.snapshot.dir` at
+    *    cluster scratch space (HDFS/S3) and compaction state survives any
+    *    executor: the cluster-mode setting.
+    *
+    * Read per call, so tests and sessions can flip it between lifecycles.
+    */
+  def reliableSnapshots(spark: SparkSession): Boolean =
+    spark.conf.get("spark.graft.snapshot.mode", "local") == "reliable"
+
+  /** Share ONE evaluation of `df` between the consumers of a single call:
+    * a LAZY local checkpoint materializes its partitions as a side effect
+    * of the first action over it, and every later scan reads raw
+    * block-manager rows instead of re-running the plan. Clusters that
+    * cannot pin executor blocks run in reliable snapshot mode, where `df`
+    * comes back unchanged and each consumer pays its own rescan.
+    */
+  def shareScan(df: DataFrame): DataFrame =
+    if (reliableSnapshots(df.sparkSession)) df else df.localCheckpoint(false)
+
   /** Per-cell fingerprint of a manifest's statistics entries — the commit
     * protocol's change detector ([[LakeDataset.rebaseCommit]]): a cell's
     * fingerprint moves iff any of its seven stat-family entries changed
@@ -2890,6 +2889,19 @@ object LakeDataset {
     * wide-merge path anyway.
     */
   val MaxBloomProbeKeys: Int = 256
+
+  /** Max probe keys an index operator collects on the driver to prune a
+    * corpus read (exact and MinHash dedup ingest, BM25 erase); above it the
+    * read falls back to the full table (fail open — a batch that big
+    * amortizes the scan it pays for). 256k longs is ~2 MB on the driver and
+    * covers ~32k-document MinHash batches at the default 8 bands.
+    */
+  val MaxDriverProbeKeys: Int = 1 << 18
+
+  /** Conditional manifest writes a rebase commit attempts before it gives
+    * up on a lost write race ([[LakeDataset.rebaseCommit]]).
+    */
+  val MaxCommitAttempts: Int = 5
 
   /** Cell count above which toStorage switches from concurrent per-part
     * write jobs to one dynamic-partition write job (driver job scheduling

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.lake.LakeDataset
+
 /** Graph operators for corpus/web-graph curation: bipartite projection
   * (co-occurrence graphs), degrees, and triangle counting — the signals a
   * web-scale data pipeline derives from link or interaction structure
@@ -16,6 +18,11 @@ import org.apache.spark.sql.functions._
   * Beyond-reference superset: the reference engine has no graph surface.
   */
 object Graphs {
+
+  /** Dead-frontier rows [[kCore]] still broadcasts into its anti-joins;
+    * a larger (mass-extinction) frontier takes a shuffled anti-join.
+    */
+  private val BroadcastFrontierCap: Long = 1L << 22
 
   /** Project a bipartite (left, right) relation onto its LEFT side: a
     * weighted co-occurrence graph where `(ua, ub, w)` means ua and ub
@@ -56,12 +63,7 @@ object Graphs {
     // here was measured as a 3x regression on graph_triangles in the r15
     // round — the columnar InMemoryRelation write costs more than the
     // rescan; the raw-row checkpoint is the cheap sharing mechanism.)
-    // Conf-gated: reliable-mode clusters that cannot pin executor blocks
-    // can turn it off and pay the rescan.
-    val b = if (df.sparkSession.conf
-        .get("spark.graft.graph.shareMembershipScan", "true").toBoolean)
-      b0.localCheckpoint(false)
-    else b0
+    val b = LakeDataset.shareScan(b0)
     val bounded =
       if (maxRightDegree == Int.MaxValue) {
         val volumeCap = df.sparkSession.conf
@@ -172,7 +174,6 @@ object Graphs {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxIters: Int = 100): DataFrame = {
     require(k >= 1, "k-core needs k >= 1")
-    val spark = edges.sparkSession
     var und = edges.select(
         least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
@@ -184,8 +185,6 @@ object Graphs {
     // so it BROADCASTS (under the usual counted guard; a mass-extinction
     // first round falls open to a shuffled anti-join), and convergence is
     // "the frontier is empty", with no edge-count job per round.
-    val bcast = spark.conf
-      .get("spark.graft.graph.broadcastFrontierCap", (1 << 22).toString).toLong
     var i = 0
     var converged = false
     while (!converged && i < maxIters) {
@@ -194,7 +193,7 @@ object Graphs {
       val nDead = dead.count()
       if (nDead == 0L) converged = true
       else {
-        val d = if (nDead <= bcast) broadcast(dead) else dead
+        val d = if (nDead <= BroadcastFrontierCap) broadcast(dead) else dead
         val next0 = und
           .join(d.withColumnRenamed("v", "a"), Seq("a"), "left_anti")
           .join(d.withColumnRenamed("v", "b"), Seq("b"), "left_anti")

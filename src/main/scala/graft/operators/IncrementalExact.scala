@@ -52,9 +52,6 @@ final class ExactDedupIndex private (
   /** All persisted (h, t, doc) rows. */
   def docRows: Option[DataFrame] = docsDs.map(_.toDF.select("h", "t", "doc"))
 
-  private def maxProbeKeys: Int =
-    spark.conf.get("spark.graft.dedup.maxProbeKeys", "262144").toInt
-
   private def keyOf(text: Column): Column =
     if (normalized) TextAnalysis.normalize(text) else text
 
@@ -81,7 +78,7 @@ final class ExactDedupIndex private (
           // Capped probe: over the cap, fall back to the full table (fail
           // open — a batch that big amortizes the scan it pays for).
           val probe: Option[Array[Long]] = {
-            val cap = maxProbeKeys
+            val cap = LakeDataset.MaxDriverProbeKeys
             val rows = keyed.select("h").limit(cap + 1).collect()
             if (rows.length > cap) None
             else Some(rows.iterator.map(_.getLong(0)).toArray)

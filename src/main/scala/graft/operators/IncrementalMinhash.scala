@@ -48,7 +48,7 @@ import graft.model.StorageSpec
   *
   * Bloom pruning degrades gracefully, never wrongly: a cell is only skipped
   * when the filter PROVES none of the probe keys live in it, and batches
-  * whose probe-key set exceeds `spark.graft.minhash.maxProbeKeys` fall back
+  * whose probe-key set exceeds [[LakeDataset.MaxDriverProbeKeys]] fall back
   * to the full corpus read (a big batch amortizes the scan it pays for).
   * Per-cell filters stay sharp while a cell holds ≲10k distinct keys —
   * `nBuckets` splits each batch's keys that many ways, so size it to the
@@ -78,27 +78,6 @@ final class MinhashIndex private (
   /** All persisted (doc, sz, band, bh) band rows. */
   def bandRows: Option[DataFrame] =
     bandDs.map(_.toDF.select("doc", "sz", "band", "bh"))
-
-  /** Max probe keys collected driver-side for the pruned corpus reads; above
-    * the cap the read falls back to the full table (fail open — a batch that
-    * big amortizes the scan it pays for). 256k longs is ~2 MB on the driver
-    * and covers ~32k-document batches at the default 8 bands.
-    */
-  private def maxProbeKeys: Int =
-    spark.conf.get("spark.graft.minhash.maxProbeKeys", "262144").toInt
-
-  /** Stage timing on stderr when `spark.graft.minhash.profile=true` — the
-    * per-batch floor is a sum of fixed driver/job costs, and cutting it
-    * needs per-stage attribution, not end-to-end numbers.
-    */
-  private def timed[T](label: String)(f: => T): T =
-    if (spark.conf.get("spark.graft.minhash.profile", "false") != "true") f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(
-        f"[mh] $label%-24s ${(System.nanoTime() - t0) / 1e9}%7.2fs")
-      r
-    }
 
   /** A persisted table read pruned to cells that may hold any of the probe
     * values of `keyCol` (bucket id + Bloom membership + zones, all from the
@@ -171,7 +150,7 @@ final class MinhashIndex private (
     // zero-part tables (only-ever-empty ingest) hold nothing to erase
     shingleDs.filter(_.numParts > 0).foreach { sds =>
       val probe: Option[Seq[Any]] = {
-        val cap = maxProbeKeys
+        val cap = LakeDataset.MaxDriverProbeKeys
         val rows = keyed.limit(cap + 1).collect()
         if (rows.length > cap) None else Some(rows.iterator.map(_.get(0)).toSeq)
       }
@@ -182,23 +161,20 @@ final class MinhashIndex private (
       // table they derive from; the two table erasures are then
       // independent and overlap on the shared scheduler (the same
       // discipline as addBatch's three write pipelines).
-      val doomedBands = bandDs.map(_ => timed("remove:derive-bands")(
+      val doomedBands = bandDs.map(_ =>
         bandRowsOf(doomedShingles).select("doc", "band", "bh")
-          .localCheckpoint(true)))
+          .localCheckpoint(true))
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.global
       val fb = Future(bandDs.foreach { bds =>
-        val touched = timed("remove:bands")(
-          bds.delete(doomedBands.get, Seq("doc", "band", "bh")))
-        if (touched.nonEmpty)
-          timed(s"remove:save-bands(${touched.size})")(bds.saveParts(touched))
+        val touched = bds.delete(doomedBands.get, Seq("doc", "band", "bh"))
+        if (touched.nonEmpty) bds.saveParts(touched)
       })
       val fs = Future {
-        val touchedS = timed("remove:shingles")(sds.delete(keyed, Seq("doc")))
-        if (touchedS.nonEmpty)
-          timed(s"remove:save-shingles(${touchedS.size})")(sds.saveParts(touchedS))
+        val touchedS = sds.delete(keyed, Seq("doc"))
+        if (touchedS.nonEmpty) sds.saveParts(touchedS)
       }
       val done = Seq(fb, fs).map(f => scala.util.Try(Await.result(f, Duration.Inf)))
       done.collectFirst { case scala.util.Failure(e) => e }.foreach(throw _)
@@ -259,7 +235,7 @@ final class MinhashIndex private (
       batch: DataFrame, textCol: String, idCol: String,
       threshold: Double = 0.7): DataFrame = this.synchronized {
     require(threshold > 0.0, "threshold must be positive")
-    val cap = maxProbeKeys
+    val cap = LakeDataset.MaxDriverProbeKeys
     val expl = Dedup.shingleRows(batch, textCol, idCol, shingleSize)
       .select(col("doc"), xxhash64(col("s")).as("h"))
       .cache()
@@ -273,7 +249,7 @@ final class MinhashIndex private (
     // the driver dedups a bounded array. A ZERO-PART table (the only-ever
     // batch was empty) is schema-less and unprobeable — treat it as absent.
     val corpusBands = bandDs.filter(_.numParts > 0).map(ds =>
-      prunedRead(ds, "bh", timed("probe:bands") {
+      prunedRead(ds, "bh", {
         val rows = bandedNew.select("bh").limit(cap + 1).collect()
         if (rows.length > cap) None else Some(rows.iterator.map(_.get(0)).toSet.toSeq)
       }).select("doc", "sz", "band", "bh"))
@@ -320,71 +296,66 @@ final class MinhashIndex private (
     // reads.
     val b = nextBatch
     val pairsDir = s"$root/pairs/batch=$b"
-    var pairsSchema: Option[org.apache.spark.sql.types.StructType] = None
     try {
-      timed("write:all3") {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.global
-        val fb = Future(timed("append:bands")(
-          appendBatch(bandedNew, "bands", "bh", b, ds => bandDs = Some(ds))))
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.global
+      val fb = Future(
+        appendBatch(bandedNew, "bands", "bh", b, ds => bandDs = Some(ds)))
 
-        // Shingle verify against the same per-value prune: all of a doc's
-        // shingle rows live in ONE (batch, bucket-of-doc) cell, so keeping
-        // every cell that may hold a candidate doc keeps every row the
-        // Jaccard needs. Candidate docs collected as the (already-distinct)
-        // pairs themselves — two ids per row, so half the cap bounds the
-        // collect and the explode + distinct job the old probe ran
-        // disappears into a driver-side flatten.
-        val corpusShingles = shingleDs.filter(_.numParts > 0).map(ds =>
-          prunedRead(ds, "doc", timed("probe:cands") {
-            val rows = cands.select("doc_a", "doc_b").limit(cap / 2 + 1).collect()
-            if (rows.length > cap / 2) None
-            else Some(rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1))).toSet.toSeq)
-          }).select("doc", "h"))
-        val shinglesAll = corpusShingles.map(_.unionByName(expl)).getOrElse(expl)
-        val fs = Future(timed("append:shingles")(
-          appendBatch(expl, "shingles", "doc", b, ds => shingleDs = Some(ds))))
+      // Shingle verify against the same per-value prune: all of a doc's
+      // shingle rows live in ONE (batch, bucket-of-doc) cell, so keeping
+      // every cell that may hold a candidate doc keeps every row the
+      // Jaccard needs. Candidate docs collected as the (already-distinct)
+      // pairs themselves — two ids per row, so half the cap bounds the
+      // collect and the explode + distinct job the old probe ran
+      // disappears into a driver-side flatten.
+      val corpusShingles = shingleDs.filter(_.numParts > 0).map(ds =>
+        prunedRead(ds, "doc", {
+          val rows = cands.select("doc_a", "doc_b").limit(cap / 2 + 1).collect()
+          if (rows.length > cap / 2) None
+          else Some(rows.iterator.flatMap(r => Iterator(r.get(0), r.get(1))).toSet.toSeq)
+        }).select("doc", "h"))
+      val shinglesAll = corpusShingles.map(_.unionByName(expl)).getOrElse(expl)
+      val fs = Future(
+        appendBatch(expl, "shingles", "doc", b, ds => shingleDs = Some(ds)))
 
-        val verified = cands
-          .join(shinglesAll.select(col("doc").as("doc_a"), col("h")), "doc_a")
-          .join(shinglesAll.select(col("doc").as("doc_b"), col("h")), Seq("doc_b", "h"))
-          .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
-          .agg(count(lit(1)).as("inter"))
-          .withColumn("jaccard",
-            col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-          .filter(col("jaccard") >= threshold)
-          .select("doc_a", "doc_b", "jaccard")
-        pairsSchema = Some(verified.schema)
-        val fp = Future(timed("verify+write:pairs")(
-          verified.write.mode("overwrite").parquet(pairsDir)))
-        val done = Seq(fp, fs, fb).map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-        done.collectFirst { case scala.util.Failure(e) => e }.foreach { e =>
-          // A failed sibling must not leave THIS batch registered in the
-          // live index: a completed append already put its batch=N cells
-          // into the in-memory dataset, so later probes in this process
-          // would serve rows the commit marker never covers, and retrying
-          // the same batch number would collide with them. Every future
-          // has resolved by here (Try-awaited), so nothing registers after
-          // the rollback; dropParts removes catalog entries AND their
-          // directories, leaving the retry's insertWritten clean cells.
-          def rollback(get: Option[LakeDataset], reset: () => Unit): Unit =
-            get.foreach { ds =>
-              val ks = ds.partKeys.filter(_.partValues.contains("batch" -> b.toString))
-              if (ks.nonEmpty) ds.dropParts(ks)
-              // A first-batch failure leaves a zero-part dataset that the
-              // probe path can't plan against — forget the handle entirely,
-              // as if the batch had never created it.
-              if (ds.partKeys.isEmpty) reset()
-            }
-          rollback(shingleDs, () => shingleDs = None)
-          rollback(bandDs, () => bandDs = None)
-          LakeDataset.deleteRecursively(Paths.get(pairsDir))
-          throw e
-        }
+      val verified = cands
+        .join(shinglesAll.select(col("doc").as("doc_a"), col("h")), "doc_a")
+        .join(shinglesAll.select(col("doc").as("doc_b"), col("h")), Seq("doc_b", "h"))
+        .groupBy("doc_a", "doc_b", "sz_a", "sz_b")
+        .agg(count(lit(1)).as("inter"))
+        .withColumn("jaccard",
+          col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
+        .filter(col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
+      val fp = Future(verified.write.mode("overwrite").parquet(pairsDir))
+      val done = Seq(fp, fs, fb).map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+      done.collectFirst { case scala.util.Failure(e) => e }.foreach { e =>
+        // A failed sibling must not leave THIS batch registered in the
+        // live index: a completed append already put its batch=N cells
+        // into the in-memory dataset, so later probes in this process
+        // would serve rows the commit marker never covers, and retrying
+        // the same batch number would collide with them. Every future
+        // has resolved by here (Try-awaited), so nothing registers after
+        // the rollback; dropParts removes catalog entries AND their
+        // directories, leaving the retry's insertWritten clean cells.
+        def rollback(get: Option[LakeDataset], reset: () => Unit): Unit =
+          get.foreach { ds =>
+            val ks = ds.partKeys.filter(_.partValues.contains("batch" -> b.toString))
+            if (ks.nonEmpty) ds.dropParts(ks)
+            // A first-batch failure leaves a zero-part dataset that the
+            // probe path can't plan against — forget the handle entirely,
+            // as if the batch had never created it.
+            if (ds.partKeys.isEmpty) reset()
+          }
+        rollback(shingleDs, () => shingleDs = None)
+        rollback(bandDs, () => bandDs = None)
+        LakeDataset.deleteRecursively(Paths.get(pairsDir))
+        throw e
       }
-      val result = spark.read.schema(pairsSchema.get).parquet(pairsDir)
+      val result = spark.read.schema(verified.schema).parquet(pairsDir)
       MinhashIndex.writeParams(root, numHashes, bands, shingleSize, nBuckets,
         b + 1, compactedBelow)
       nextBatch = b + 1

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.lake.LakeDataset
+
 /** Join helpers for skewed data.
   *
   * AQE's skew-join handling covers sort-merge joins at runtime; explicit
@@ -302,13 +304,10 @@ object Joins {
     // SAME frame — a lazy local checkpoint materializes its partitions as a
     // side effect of the first side's scan, and the second side reads raw
     // block-manager rows instead of re-running scan + distinct + explode.
-    // (Same mechanism and conf discipline as Graphs.projectBipartite's
-    // shared membership scan; a columnar `.cache()` costs more than the
-    // rescan it saves on frames of this shape.)
-    val v = if (df.sparkSession.conf
-        .get("spark.graft.join.shareVariantScan", "true").toBoolean)
-      v0.localCheckpoint(false)
-    else v0
+    // (Same mechanism as Graphs.projectBipartite's shared membership scan;
+    // a columnar `.cache()` costs more than the rescan it saves on frames
+    // of this shape.)
+    val v = LakeDataset.shareScan(v0)
     v.select(col("__graft_s").as("name_a"), col("__graft_key"))
       .join(v.select(col("__graft_s").as("name_b"), col("__graft_key")),
         "__graft_key")

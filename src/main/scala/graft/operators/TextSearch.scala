@@ -133,11 +133,8 @@ object TextSearch {
     // once: the aggregate materializes the partitions as its own job's side
     // effect and the write reads raw block-manager rows. On a streaming
     // ingest (one addToIndex per epoch) this halves the per-epoch batch
-    // passes. Same mechanism/conf stance as Graphs.projectBipartite.
-    val posts = if (df.sparkSession.conf
-        .get("spark.graft.text.shareBatchScan", "true").toBoolean)
-      posts0.localCheckpoint(false)
-    else posts0
+    // passes. Same mechanism as Graphs.projectBipartite.
+    val posts = LakeDataset.shareScan(posts0)
     val row = posts
       .groupBy("doc").agg(sum("tf").as("len"))
       .agg(count(lit(1)).as("n"), sum("len").as("l"))
@@ -171,7 +168,7 @@ object TextSearch {
     // the whole postings lake per erase batch. The same local id frame then
     // feeds the delete, whose own locate resolves driver-side on the same
     // membership axis — the erase never reads an untouched cell.
-    val cap = spark.conf.get("spark.graft.text.maxProbeKeys", "262144").toInt
+    val cap = LakeDataset.MaxDriverProbeKeys
     val collected: Option[Array[org.apache.spark.sql.Row]] = {
       val rows = keyed.limit(cap + 1).collect()
       if (rows.length > cap) None else Some(rows)

@@ -10,10 +10,27 @@ import graft.lake.LakeDataset
   * create partitioned+bucketed, upsert a 1/7 slice, aggregate, save, load.
   * Prints per-phase seconds. Exercises the same code paths the driver
   * benches, one order of magnitude up.
+  *
+  * `runMain graft.tools.ScaleSmoke [sfDir] [section,…]` runs the named
+  * [[Sections]] (all of them when none is named), e.g. `… sf0.1 r7,ivf`
+  * (`… sf0.1 r7 ivf` names the same two);
+  * `SPARK_GRAFT_COPIES` sets the scale factor and `SPARK_GRAFT_CPUS` the
+  * local core count.
   */
 object ScaleSmoke {
+  /** Section names in run order: `base` (the lineitem write path), the
+    * round-tagged claims `r7`…`r15`, the IVF probe curve `ivf`, and the
+    * exact and MinHash incremental-index curves `ex` and `mh`.
+    */
+  val Sections: Seq[String] = Seq("base", "r7", "r8", "r9", "r10", "r11",
+    "r12", "r12b", "r12c", "r12d", "r12e", "r13a", "r13b", "r13c", "r13d",
+    "r14", "r14b", "r14c", "r15", "ivf", "ex", "mh")
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val only = graft.Bench.select(
+      Option(args.drop(1).mkString(",")).filter(_.nonEmpty), Sections)
+    def on(section: String): Boolean = only.forall(_.contains(section))
     val copies = sys.env.getOrElse("SPARK_GRAFT_COPIES", "10").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -33,32 +50,7 @@ object ScaleSmoke {
       r
     }
 
-    // SPARK_GRAFT_ONLY_MH=1 skips straight to the MinHash-index curve;
-    // SPARK_GRAFT_ONLY_IVF=1 runs just the ANN section;
-    // SPARK_GRAFT_ONLY_EX=1 runs just the exact-index curve;
-    // SPARK_GRAFT_ONLY_R7=1 runs just the z-order / PQ / mat-view section.
-    val onlyEx = sys.env.contains("SPARK_GRAFT_ONLY_EX")
-    val onlyR7 = sys.env.contains("SPARK_GRAFT_ONLY_R7")
-    val runAll = !sys.env.contains("SPARK_GRAFT_ONLY_MH") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_IVF") && !onlyEx && !onlyR7 &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R8") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R9") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R10") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R11") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R12") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R12B") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R12C") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R12D") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R12E") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R13A") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R13B") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R13C") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R13D") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R14") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R14B") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R14C") &&
-      !sys.env.contains("SPARK_GRAFT_ONLY_R15")
-    if (runAll) {
+    if (on("base")) {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val big = (0 until copies).map { i =>
       li.withColumn("l_orderkey", col("l_orderkey") + lit(i.toLong * 10000000L))
@@ -141,7 +133,7 @@ object ScaleSmoke {
     }
 
     // ---- round 7: z-order layout, PQ codes, materialized view --------------
-    if (runAll || onlyR7) {
+    if (on("r7")) {
       import graft.operators.{Clustering, MaterializedAgg, Pq, Similarity}
 
       // Z-ORDER: orders scaled `copies`x, clustered on (o_custkey,
@@ -390,12 +382,9 @@ object ScaleSmoke {
             min("o_totalprice"), max("o_totalprice")).collect()
       }
     }
-    if (onlyR7) { spark.stop(); return }
 
     // ---- Round-8 additions: text search / data quality / SCD2 -------------
-    // SPARK_GRAFT_ONLY_R8=1 runs just this section.
-    val onlyR8 = sys.env.contains("SPARK_GRAFT_ONLY_R8")
-    if (runAll || onlyR8) {
+    if (on("r8")) {
       import graft.operators.{DataQuality, TextSearch}
       import graft.lake.{LakeDataset => LD, TrackedLake}
 
@@ -529,12 +518,9 @@ object ScaleSmoke {
         hist.unpersist()
       }
     }
-    if (onlyR8) { spark.stop(); return }
 
     // ---- Round-9 additions: metadata stats / catalog DPP join -------------
-    // SPARK_GRAFT_ONLY_R9=1 runs just this section.
-    val onlyR9 = sys.env.contains("SPARK_GRAFT_ONLY_R9")
-    if (runAll || onlyR9) {
+    if (on("r9")) {
       import graft.operators.{Joins, Stats}
       import graft.model.StorageSpec
 
@@ -661,13 +647,10 @@ object ScaleSmoke {
       }
       mo.unpersist(true); fact0.unpersist(true)
     }
-    if (onlyR9) { spark.stop(); return }
 
     // ---- round-8 additions: metadata SUM, auto-checkpointed feed, --------
-    // ---- exact one-task-per-shard export. SPARK_GRAFT_ONLY_R10=1 runs ----
-    // ---- just this section. ----------------------------------------------
-    val onlyR10 = sys.env.contains("SPARK_GRAFT_ONLY_R10")
-    if (runAll || onlyR10) {
+    // ---- exact one-task-per-shard export. --------------------------------
+    if (on("r10")) {
       import graft.lake.{Database, TrackedLake}
       import graft.model.StorageSpec
       import graft.operators.{Export, Stats}
@@ -755,12 +738,9 @@ object ScaleSmoke {
       }
       mo10.unpersist(true)
     }
-    if (onlyR10) { spark.stop(); return }
 
     // ---- round-8 catalog DDL: shallow clone, ANALYZE, drift restore. ------
-    // ---- SPARK_GRAFT_ONLY_R11=1 runs just this section. -------------------
-    val onlyR11 = sys.env.contains("SPARK_GRAFT_ONLY_R11")
-    if (runAll || onlyR11) {
+    if (on("r11")) {
       import graft.lake.TrackedLake
       import graft.model.StorageSpec
 
@@ -874,16 +854,13 @@ object ScaleSmoke {
       }
       mo11.unpersist(true)
     }
-    if (onlyR11) { spark.stop(); return }
 
     // ---- HLL sketch collapse at ~100-part scale ----------------------------
     // The claim: a tracked column's approx-distinct answers from the CATALOG
     // (union of ~100 per-part 1.5 KiB sketches — O(parts) driver work, zero
     // scan tasks) and matches the distributed hll_sketch_agg scan exactly,
     // at any table size — the fold cost tracks PART COUNT, not bytes.
-    // SPARK_GRAFT_ONLY_R12=1 runs just this section.
-    val onlyR12 = sys.env.contains("SPARK_GRAFT_ONLY_R12")
-    if (runAll || onlyR12) {
+    if (on("r12")) {
       val mo12 = (0 until copies).map { i =>
         spark.read.parquet(s"$sfDir/orders.parquet")
           .withColumn("o_orderkey", col("o_orderkey") + lit(i.toLong * 10000000L))
@@ -915,7 +892,6 @@ object ScaleSmoke {
       }
       require(sqlEst == metaEst, s"SQL collapse $sqlEst != catalog $metaEst")
     }
-    if (onlyR12) { spark.stop(); return }
 
     // ---- R12b: substring dedup + multi-table transactions at scale --------
     // stripDuplicateSpans claim: the only wide work is one gram aggregation
@@ -925,9 +901,7 @@ object ScaleSmoke {
     // Transaction claim: begin/commit/rollback are driver-side metadata ops
     // whose cost tracks PART COUNT, not table bytes — a rollback over a
     // ~100-part table restores counters, stats and computable plans.
-    // SPARK_GRAFT_ONLY_R12B=1 runs just this section.
-    val onlyR12b = sys.env.contains("SPARK_GRAFT_ONLY_R12B")
-    if (runAll || onlyR12b) {
+    if (on("r12b")) {
       import graft.lake.Database
       val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
       val bigDocs12 = (0 until copies).map { i =>
@@ -992,15 +966,12 @@ object ScaleSmoke {
         txA.toDF.agg(count(lit(1))).head()
       }
     }
-    if (onlyR12b) { spark.stop(); return }
 
     // ---- R12c: GK quantile summaries at ~100 parts -------------------------
     // Claim: the catalog fold answers approx quantiles in O(parts) driver
     // work (zero scan jobs), within the GK rank bound of the true quantile;
-    // the alternative is a full percentile_approx scan. Run just this
-    // section with SPARK_GRAFT_ONLY_R12C=1.
-    val onlyR12c = sys.env.contains("SPARK_GRAFT_ONLY_R12C")
-    if (runAll || onlyR12c) {
+    // the alternative is a full percentile_approx scan.
+    if (on("r12c")) {
       val mo12c = (0 until copies).map { i =>
         spark.read.parquet(s"$sfDir/orders.parquet")
           .withColumn("o_orderkey", col("o_orderkey") + lit(i.toLong * 10000000L))
@@ -1042,15 +1013,12 @@ object ScaleSmoke {
           s"catalog quantile q=$q out of bound: rank error $err")
       }
     }
-    if (onlyR12c) { spark.stop(); return }
 
     // ---- R12d: MG frequent-items sketches at ~100 parts ---------------------
     // Claim: the catalog fold answers top-k values in O(parts·k) driver work
     // (zero scan jobs); in the exact regime (cardinality ≤ 64) the counts
-    // equal a full groupBy-count scan's. Run just this section with
-    // SPARK_GRAFT_ONLY_R12D=1.
-    val onlyR12d = sys.env.contains("SPARK_GRAFT_ONLY_R12D")
-    if (runAll || onlyR12d) {
+    // equal a full groupBy-count scan's.
+    if (on("r12d")) {
       val mo12d = (0 until copies).map { i =>
         spark.read.parquet(s"$sfDir/orders.parquet")
           .withColumn("o_orderkey", col("o_orderkey") + lit(i.toLong * 10000000L))
@@ -1094,16 +1062,13 @@ object ScaleSmoke {
       }
       require(sqlT == scanT.sortBy(-_._2), s"SQL collapse must equal the scan: $sqlT")
     }
-    if (onlyR12d) { spark.stop(); return }
 
     // ---- R12e: continuation operators at 20x corpus ------------------------
     // Claims: phash dedup candidates stay Σ bucket² (wall clock tracks the
     // duplicate set, not |media|²); chunking is a narrow map (scales with
     // output rows, no shuffle); BPE rounds are vocabulary-bound (flat as the
     // corpus multiplies — the word-count reduction absorbs the growth).
-    // Run just this section with SPARK_GRAFT_ONLY_R12E=1.
-    val onlyR12e = sys.env.contains("SPARK_GRAFT_ONLY_R12E")
-    if (runAll || onlyR12e) {
+    if (on("r12e")) {
       import spark.implicits._
       import graft.operators.{Bpe, Multimodal, TextAnalysis}
       val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -1138,7 +1103,6 @@ object ScaleSmoke {
       println(s"[scale] merges: $merges")
       require(merges.length == 4 && merges.head._4 > 0)
     }
-    if (onlyR12e) { spark.stop(); return }
 
     // ---- R13a: quantile + freq folds at ~1k parts ---------------------------
     // Claim: the driver-side catalog folds stay sub-second an order of
@@ -1146,10 +1110,8 @@ object ScaleSmoke {
     // quantile reduce is O(parts·log parts) summary merges and the freq
     // fold O(parts·k) counter merges, so ~1k parts is milliseconds of
     // driver work and the ceiling (10k+ parts ≈ a 100 TB table's manifest)
-    // is manifest IO, not fold CPU. Run just this section with
-    // SPARK_GRAFT_ONLY_R13A=1.
-    val onlyR13a = sys.env.contains("SPARK_GRAFT_ONLY_R13A")
-    if (runAll || onlyR13a) {
+    // is manifest IO, not fold CPU.
+    if (on("r13a")) {
       val mo13 = (0 until copies).map { i =>
         spark.read.parquet(s"$sfDir/orders.parquet")
           .withColumn("o_orderkey", col("o_orderkey") + lit(i.toLong * 10000000L))
@@ -1209,16 +1171,13 @@ object ScaleSmoke {
       require(metaT13.map(t => t._1 -> t._2) == scanT13,
         s"exact-regime 1k-part catalog top-k must equal the scan: $metaT13 vs $scanT13")
     }
-    if (onlyR13a) { spark.stop(); return }
 
     // ---- R13b: native BPE encode + pack at 20x corpus ----------------------
     // Claim: the native BpeSymbols/BpeIds expressions keep tokenize→ids→
     // pack a LINEAR narrow map (no shuffle until the pack window, which is
     // shard-partitioned): 20x documents should cost ~20x the sf0.1 gate's
-    // sub-second, not the interpreted HOF fold's minutes. Run just this
-    // section with SPARK_GRAFT_ONLY_R13B=1.
-    val onlyR13b = sys.env.contains("SPARK_GRAFT_ONLY_R13B")
-    if (runAll || onlyR13b) {
+    // sub-second, not the interpreted HOF fold's minutes.
+    if (on("r13b")) {
       import graft.operators.{Bpe, TextAnalysis}
       val bigDocs13 = (0 until copies).map { i =>
         spark.read.parquet(s"$sfDir/documents.parquet")
@@ -1253,7 +1212,6 @@ object ScaleSmoke {
       }
       require(mism == 0, s"r13b decode roundtrip mismatches: $mism")
     }
-    if (onlyR13b) { spark.stop(); return }
 
     // ---- R13c: index erasure cost vs index size ----------------------------
     // Claim: erasing k ids costs one locate probe (a scan with the key set
@@ -1264,9 +1222,7 @@ object ScaleSmoke {
     // how many batches the index holds: the REWRITE cost is flat while the
     // index grows `copies`×. IVF: erasing an operator-sized vector batch
     // rewrites only the lists those vectors sat in.
-    // Run just this section with SPARK_GRAFT_ONLY_R13C=1.
-    val onlyR13c = sys.env.contains("SPARK_GRAFT_ONLY_R13C")
-    if (runAll || onlyR13c) {
+    if (on("r13c")) {
       import graft.operators.{Similarity, TextSearch}
       val docs0r = spark.read.parquet(s"$sfDir/documents.parquet")
         .select("doc_id", "text")
@@ -1324,7 +1280,6 @@ object ScaleSmoke {
       require(left == e20.count() - nDoomedV, "ivf erase lost or kept rows")
       LakeDataset.deleteRecursively(java.nio.file.Paths.get(ivfRoot13))
     }
-    if (onlyR13c) { spark.stop(); return }
 
     // ---- R13d: fuzzy join, LM scoring, graph ops at scale -------------------
     // Claims: (1) the SymSpell deletion join stays ∝ strings (variants are
@@ -1336,9 +1291,7 @@ object ScaleSmoke {
     // counts ≡ 0 mod 3, every count ≤ C(degree,2));
     // (4) the bipartite-projection hub cap bounds output where the
     // uncapped projection's Σ degree² would explode.
-    // Run just this section with SPARK_GRAFT_ONLY_R13D=1.
-    val onlyR13d = sys.env.contains("SPARK_GRAFT_ONLY_R13D")
-    if (runAll || onlyR13d) {
+    if (on("r13d")) {
       import graft.operators.{Graphs, Joins, TextAnalysis}
       // (1) fuzzy join over copies× the customer names: each copy shifts
       // the key space so names are distinct but densely typo-adjacent.
@@ -1496,7 +1449,6 @@ object ScaleSmoke {
       require(predicted > 100000000L,
         s"uncapped candidate volume should exceed 1e8 at 20x: $predicted")
     }
-    if (onlyR13d) { spark.stop(); return }
 
     // ---- r14: write/commit-path scale probes -------------------------------
     // (1) one-pass staged rewrite vs per-part save at a cell count where the
@@ -1509,9 +1461,7 @@ object ScaleSmoke {
     //     independent;
     // (4) index erasure cost vs a copies× index: removing a handful of docs
     //     must track their touched cells, not the corpus.
-    // Run just this section with SPARK_GRAFT_ONLY_R14=1.
-    val onlyR14 = sys.env.contains("SPARK_GRAFT_ONLY_R14")
-    if (runAll || onlyR14) {
+    if (on("r14")) {
       import graft.model.StorageSpec
       // (1) + (2): a 64-cell stored table, every cell mutated.
       val o14 = (0 until copies).map { i =>
@@ -1576,12 +1526,9 @@ object ScaleSmoke {
       require(dprStats.getLong(2) <= dprStats.getLong(0) * 1000000L,
         "directed walk created mass — integer grid broke")
     }
-    if (onlyR14) { spark.stop(); return }
 
     // ---- R14B: second wave — k-core / negatives / split / drift at 20× ----
-    // Run just this section with SPARK_GRAFT_ONLY_R14B=1.
-    val onlyR14b = sys.env.contains("SPARK_GRAFT_ONLY_R14B")
-    if (runAll || onlyR14b) {
+    if (on("r14b")) {
       // (1) k-core on the web-shaped 1M-edge graph: peeling is a degree
       // aggregate + two semi-joins per round on a strictly shrinking edge
       // table; every survivor must hold >= k in-core neighbors.
@@ -1649,12 +1596,9 @@ object ScaleSmoke {
       println(s"[scale] r14b drift: ${dd.length} bins, total dev $totalDev")
       require(totalDev > 0, "a reshaped snapshot must register drift")
     }
-    if (onlyR14b) { spark.stop(); return }
 
     // ---- R14C: third wave — prefix set-sim / ts grid / tar import at 20× ---
-    // Run just this section with SPARK_GRAFT_ONLY_R14C=1.
-    val onlyR14c = sys.env.contains("SPARK_GRAFT_ONLY_R14C")
-    if (runAll || onlyR14c) {
+    if (on("r14c")) {
       // (1) prefix-filter set-similarity join on a corpus engineered so the
       // naive any-shared-shingle join is quadratic: every doc opens with the
       // same 9-word boilerplate (those shingles have df == corpus size); the
@@ -1740,15 +1684,12 @@ object ScaleSmoke {
       require(back14c == expect14c, "tar round trip must be exact")
       LakeDataset.deleteRecursively(java.nio.file.Paths.get(wdsRoot))
     }
-    if (onlyR14c) { spark.stop(); return }
 
     // ---- R15: RECALL at scale — the quality curve, not the cost curve -----
     // The per-round gates pin recall at sf0.01; this section tracks it at
     // COPIES× so a quantizer that happens to hold at small corpora but
     // collapses as lists fill (or as LSH buckets saturate) is caught here.
-    // Run just this section with SPARK_GRAFT_ONLY_R15=1.
-    val onlyR15 = sys.env.contains("SPARK_GRAFT_ONLY_R15")
-    if (runAll || onlyR15) {
+    if (on("r15")) {
       import graft.operators.{Dedup, Similarity}
       // (1) IVF batch recall@10 with lists ∝ corpus AND nprobe ∝ lists
       // (constant probe FRACTION — nprobe/kLists = 1/4, the 1× gate's
@@ -1842,16 +1783,12 @@ object ScaleSmoke {
       println(s"[scale] r15 exact qcut at ${copies}x: " +
         s"${sprQ.getLong(1)}..${sprQ.getLong(0)} rows/bin over $nOrdQ")
     }
-    if (onlyR15) { spark.stop(); return }
 
     // ---- IVF ANN: probe cost vs corpus growth ------------------------------
     // The scale claim: an IVF probe reads nprobe inverted LISTS, whose size
     // stays ~constant when the list count grows with the corpus — so probe
     // cost stays flat at N× vectors while the brute-force scan grows ∝ N.
-    // Gated out of SPARK_GRAFT_ONLY_MH runs; SPARK_GRAFT_ONLY_IVF=1 runs
-    // just this section.
-    val onlyIvf = sys.env.contains("SPARK_GRAFT_ONLY_IVF")
-    if (runAll || onlyIvf) {
+    if (on("ivf")) {
       import graft.operators.Similarity
       val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select("vec_id", "embedding")
@@ -1878,24 +1815,21 @@ object ScaleSmoke {
         LakeDataset.deleteRecursively(java.nio.file.Paths.get(root))
       }
     }
-    if (onlyIvf) { spark.stop(); return }
 
-    // ---- incremental MinHash: per-batch cost vs a GROWING corpus -----------
-    // documents scaled `copies`×, ingested as `copies` equal batches. Every
-    // token is salted PER COPY so the copies are genuinely distinct
-    // documents (verbatim copies would make batch N a true near-dup of all
-    // N-1 prior batches — linear growth in real match work, which is the
-    // corpus's fault, not the operator's). With the band/shingle tables
-    // bucketed + bloom'd, each addBatch prunes its corpus probe to the
-    // cells that may hold a matching hash, so per-batch time should stay
-    // ~flat while the index grows `copies`× (the pre-bucketing design
-    // re-scanned the whole band table: linear growth).
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-    val bigDocs = (0 until copies).map { i =>
-      docs0.withColumn("doc_id", col("doc_id") + lit(i.toLong * 1000000L))
-        .withColumn("text", regexp_replace(col("text"), "\\w+", s"$$0c$i"))
-    }.reduce(_ unionByName _).localCheckpoint(true)
-    println(s"[scale] documents: ${bigDocs.count()} rows")
+    // ---- the index curves' corpus: documents scaled `copies`× ------------
+    // Ingested as `copies` equal batches. Every token is salted PER COPY so
+    // the copies are genuinely distinct documents (verbatim copies would
+    // make batch N a true near-dup of all N-1 prior batches — linear growth
+    // in real match work, which is the corpus's fault, not the operator's).
+    lazy val bigDocs = {
+      val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
+      val d = (0 until copies).map { i =>
+        docs0.withColumn("doc_id", col("doc_id") + lit(i.toLong * 1000000L))
+          .withColumn("text", regexp_replace(col("text"), "\\w+", s"$$0c$i"))
+      }.reduce(_ unionByName _).localCheckpoint(true)
+      println(s"[scale] documents: ${d.count()} rows")
+      d
+    }
 
     // ---- incremental EXACT index: per-batch cost vs a GROWING corpus ------
     // Same contract as the MinHash curve below, but for the fingerprint
@@ -1905,7 +1839,7 @@ object ScaleSmoke {
     // tiny batch of NOISY re-ingests of copy-0 docs — normalization folds
     // the noise away, so every key is already present and the batch must
     // come back empty at ∝ batch cost.
-    if (runAll || onlyEx) {
+    if (on("ex")) {
       val exRoot = java.nio.file.Files.createTempDirectory("graft_scale_ex").toString
       val exIdx = graft.operators.ExactDedupIndex.open(spark, exRoot, nBuckets = 64)
       (0 until copies).foreach { i =>
@@ -1916,8 +1850,6 @@ object ScaleSmoke {
             "text", "doc_id").count()
         }
       }
-      if (sys.env.contains("SPARK_GRAFT_MH_PROFILE"))
-        spark.conf.set("spark.graft.lake.profile", "true")
       val plantedEx = bigDocs
         .filter(col("doc_id") < 1000000L && col("doc_id") % 100 === 0)
         .select((col("doc_id") + 900000000L).as("doc_id"),
@@ -1931,54 +1863,56 @@ object ScaleSmoke {
       }
       LakeDataset.deleteRecursively(java.nio.file.Paths.get(exRoot))
     }
-    if (onlyEx) { spark.stop(); return }
 
-    val mhRoot = java.nio.file.Files.createTempDirectory("graft_scale_mh").toString
-    val idx = graft.operators.MinhashIndex.open(spark, mhRoot)
-    (0 until copies).foreach { i =>
-      time(f"addBatch ${i + 1}%2d/$copies (index holds $i)") {
-        idx.addBatch(
-          bigDocs.filter(col("doc_id") >= i.toLong * 1000000L &&
-            col("doc_id") < (i + 1).toLong * 1000000L),
-          "text", "doc_id", threshold = 0.5).count()
+    // ---- incremental MinHash: per-batch cost vs a GROWING corpus -----------
+    // With the band/shingle tables bucketed + bloom'd, each addBatch prunes
+    // its corpus probe to the cells that may hold a matching hash, so
+    // per-batch time should stay ~flat while the index grows `copies`× (the
+    // pre-bucketing design re-scanned the whole band table: linear growth).
+    if (on("mh")) {
+      val mhRoot = java.nio.file.Files.createTempDirectory("graft_scale_mh").toString
+      val idx = graft.operators.MinhashIndex.open(spark, mhRoot)
+      (0 until copies).foreach { i =>
+        time(f"addBatch ${i + 1}%2d/$copies (index holds $i)") {
+          idx.addBatch(
+            bigDocs.filter(col("doc_id") >= i.toLong * 1000000L &&
+              col("doc_id") < (i + 1).toLong * 1000000L),
+            "text", "doc_id", threshold = 0.5).count()
+        }
       }
-    }
-    // The money probe: a TINY batch of planted near-dups of copy-0 docs
-    // against the full `copies`× index. The prune must route it to the
-    // matching cells — cost ∝ batch + matches, nowhere near a corpus scan.
-    val planted = bigDocs
-      .filter(col("doc_id") < 1000000L && col("doc_id") % 100 === 0)
-      .withColumn("doc_id", col("doc_id") + 900000000L)
-      .withColumn("text", concat(col("text"), lit(" graft near dup suffix")))
-    if (sys.env.contains("SPARK_GRAFT_MH_PROFILE")) {
-      spark.conf.set("spark.graft.minhash.profile", "true")
-      spark.conf.set("spark.graft.lake.profile", "true")
-    }
-    val found = time(s"addBatch tiny planted batch vs ${copies}x index") {
-      idx.addBatch(planted, "text", "doc_id", threshold = 0.5).count()
-    }
-    println(s"[scale] planted-batch pairs found: $found")
+      // The money probe: a TINY batch of planted near-dups of copy-0 docs
+      // against the full `copies`× index. The prune must route it to the
+      // matching cells — cost ∝ batch + matches, nowhere near a corpus scan.
+      val planted = bigDocs
+        .filter(col("doc_id") < 1000000L && col("doc_id") % 100 === 0)
+        .withColumn("doc_id", col("doc_id") + 900000000L)
+        .withColumn("text", concat(col("text"), lit(" graft near dup suffix")))
+      val found = time(s"addBatch tiny planted batch vs ${copies}x index") {
+        idx.addBatch(planted, "text", "doc_id", threshold = 0.5).count()
+      }
+      println(s"[scale] planted-batch pairs found: $found")
 
-    // ---- one-pass training-pipeline operators over the same corpus ------
-    // Each is a single scan with no shuffle beyond a bounded aggregation —
-    // the shapes that stay ∝ data at 100 TB.
-    time(s"decontaminate ${copies}x (broadcast bench grams)") {
-      graft.operators.Dedup.decontaminate(bigDocs,
-        bigDocs.filter(col("doc_id") % 500 === 0), "text", "doc_id").count()
+      // ---- one-pass training-pipeline operators over the same corpus ------
+      // Each is a single scan with no shuffle beyond a bounded aggregation —
+      // the shapes that stay ∝ data at 100 TB.
+      time(s"decontaminate ${copies}x (broadcast bench grams)") {
+        graft.operators.Dedup.decontaminate(bigDocs,
+          bigDocs.filter(col("doc_id") % 500 === 0), "text", "doc_id").count()
+      }
+      time(s"pack sequences ${copies}x (per-shard windows)") {
+        graft.operators.TextAnalysis.packSequences(
+          bigDocs, "text", "doc_id", budgetTokens = 2048).count()
+      }
+      time(s"pii scrub ${copies}x (codegen'd regex)") {
+        graft.operators.TextAnalysis.piiScrub(bigDocs, "text", "doc_id")
+          .agg(sum("n_redacted")).head()
+      }
+      time("full recompute (whole corpus)") {
+        graft.operators.Dedup.minhashDedup(bigDocs, "text", "doc_id",
+          threshold = 0.5).count()
+      }
+      LakeDataset.deleteRecursively(java.nio.file.Paths.get(mhRoot))
     }
-    time(s"pack sequences ${copies}x (per-shard windows)") {
-      graft.operators.TextAnalysis.packSequences(
-        bigDocs, "text", "doc_id", budgetTokens = 2048).count()
-    }
-    time(s"pii scrub ${copies}x (codegen'd regex)") {
-      graft.operators.TextAnalysis.piiScrub(bigDocs, "text", "doc_id")
-        .agg(sum("n_redacted")).head()
-    }
-    time("full recompute (whole corpus)") {
-      graft.operators.Dedup.minhashDedup(bigDocs, "text", "doc_id",
-        threshold = 0.5).count()
-    }
-    LakeDataset.deleteRecursively(java.nio.file.Paths.get(mhRoot))
     spark.stop()
   }
 }
