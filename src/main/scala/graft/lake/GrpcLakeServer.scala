@@ -30,8 +30,8 @@ import graft.sources.ProtoCodec._
   * client-streaming of `SourceIpc` chunks (Arrow IPC bytes + routing
   * metadata); ingest chunks feed the SAME [[Ingestor]] micro-batcher the
   * in-process verbs use (flush at the 10M-row threshold, correct final
-  * flush); SelectIpc is bidirectional — each `Sql` answers with one
-  * `SqlResults` carrying a ZSTD Arrow IPC stream.
+  * flush); SelectIpc is bidirectional — each `Sql` answers with one (or,
+  * past the chunk caps, more) `SqlResults` carrying a ZSTD Arrow IPC stream.
   */
 final class GrpcLakeServer(val server: LakeServer, requestedPort: Int = 0)
     extends AutoCloseable {
@@ -192,12 +192,14 @@ final class GrpcLakeServer(val server: LakeServer, requestedPort: Int = 0)
   /** SelectIpc: every incoming Sql answers with one OR MORE SqlResults — the
     * proto return is `stream SqlResults`, which the reference only ever uses
     * one message deep (src/server.rs:276-304, whole result in one zstd IPC
-    * payload). Small results keep that shape. Big results (plan-statistics
-    * routed, like the in-process encoder) CHUNK: each message carries a
-    * standalone zstd IPC stream of ~`spark.graft.wire.chunkRows` rows with
-    * the same qid, so driver and client each hold O(chunk), not O(result).
-    * Clients correlate by qid, sum `rows`, and concatenate the decoded
-    * tables; each chunk on its own is a pyarrow-readable stream.
+    * payload). Results under `spark.graft.wire.chunkRows` rows and
+    * `.chunkBytes` encoded bytes keep that shape; bigger ones CHUNK: each
+    * message carries a standalone zstd IPC stream with the same qid, so the
+    * client holds O(chunk) and the driver one wave of encoded partitions
+    * ([[ArrowInterchange.toIpcChunked]]: one Spark job per wave, batches
+    * encoded and compressed in the tasks). Clients correlate by qid, sum
+    * `rows`, and concatenate the decoded tables; each chunk on its own is a
+    * pyarrow-readable stream.
     */
   private def selectIpc
       : StreamObserver[Array[Byte]] => StreamObserver[Array[Byte]] = resp =>
@@ -209,51 +211,9 @@ final class GrpcLakeServer(val server: LakeServer, requestedPort: Int = 0)
           val df = server.select(q.sql)
           val names = df.schema.fields.map(_.name).toSeq
           val dtypes = df.schema.fields.map(_.dataType.simpleString).toSeq
-          if (!server.estimateBig(df)) {
-            // Driver-side encode with rows + bytes backstops: the estimate
-            // routed this result small, but size-only plan statistics can
-            // undershoot (joins/explode keep ~child size) — a misrouted big
-            // result degrades to MORE chunks, never an unbounded driver
-            // buffer. Results under both caps still emit the reference's
-            // single-message shape.
-            ArrowInterchange.toIpcChunked(df, Some("zstd"),
-                server.chunkRows, server.chunkBytes) { (data, rows) =>
-              resp.onNext(PbSqlResults(data, rows, names, dtypes, q.qid).encode)
-            }
-          } else {
-            import org.apache.spark.sql.graftbridge.ArrowParallel
-            val schemaMsg = ArrowParallel.schemaMessage(df)
-            val eos = ArrowParallel.eosMessage()
-            val maxRows = server.chunkRows
-            val maxBytes = server.chunkBytes
-            val frames = ListBuffer[Array[Byte]]()
-            var rows = 0L
-            var bytes = 0L
-            var sent = false
-            def flush(): Unit = if (frames.nonEmpty || !sent) {
-              val out = new java.io.ByteArrayOutputStream()
-              out.write(schemaMsg)
-              frames.foreach(out.write)
-              out.write(eos)
-              resp.onNext(PbSqlResults(out.toByteArray, rows, names, dtypes, q.qid).encode)
-              sent = true
-              frames.clear()
-              rows = 0L
-              bytes = 0L
-            }
-            // One partition's frames on the driver at a time
-            // (toLocalIterator); chunk cuts fall at record-batch
-            // granularity, so a result AQE coalesced into one partition
-            // still honors the rows/bytes-per-chunk contract.
-            ArrowParallel.framedPartitions(df).foreach { case (fs, _) =>
-              fs.foreach { case (frame, n) =>
-                frames += frame
-                rows += n
-                bytes += frame.length
-                if (rows >= maxRows || bytes >= maxBytes) flush()
-              }
-            }
-            flush() // final partial chunk, or the empty-result message
+          ArrowInterchange.toIpcChunked(df, Some("zstd"),
+              server.chunkRows, server.chunkBytes) { (data, rows) =>
+            resp.onNext(PbSqlResults(data, rows, names, dtypes, q.qid).encode)
           }
         } catch { case scala.util.control.NonFatal(e) => dead = true; fail(resp, e) }
       }

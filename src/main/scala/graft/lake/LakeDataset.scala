@@ -105,10 +105,16 @@ final class LakeDataset private (
   private val diskSchemas =
     new ConcurrentHashMap[PartKey, org.apache.spark.sql.types.StructType]()
 
-  /** Single-scan view of the whole dataset, set by [[LakeDataset.fromStorage]]
-    * and valid until the first mutation. Lets [[toDF]] plan ONE file scan
-    * (partition-pruned via parquet stats) instead of a union of per-part
-    * scans — at thousands of parts the union plan alone would dominate.
+  /** Single-scan view of the whole dataset, valid until the next mutation.
+    * Lets [[toDF]] plan ONE scan instead of a union of per-part scans — at
+    * thousands of parts the union plan alone would dominate.
+    *
+    * Condition: `cleanScan` is set only when every non-disk cell is a slice
+    * of it. Its setters: a load (every cell disk-resident, or none), the
+    * all-disk [[diskScan]], a snapshot rebuild and a first insert (every
+    * cell filters the one snapshot), a column change of a cell-less table,
+    * and a rollback (restores a pair that held). [[markDirty]] clears it.
+    * [[assembleKept]]'s cost argument relies on it.
     */
   @volatile private[lake] var cleanScan: Option[DataFrame] = None
 

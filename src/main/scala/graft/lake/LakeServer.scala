@@ -124,17 +124,10 @@ final class LakeServer(val spark: SparkSession) {
 
   // ------------------------------------------------ Arrow IPC wire parity
 
-  /** SelectIpc with the actual wire encoding: result rows as one
-    * ZSTD-compressed Arrow IPC stream, matching the reference's response
-    * encoding exactly (src/server.rs:293-297 `IpcWriter...with_compression
-    * (ZSTD)`). Pass `codec = None` for an uncompressed stream.
-    */
-  /** Estimated result size above which [[selectIpc]] switches from the
-    * driver-side encoder to the executor-parallel one: conversion AND batch
-    * compression distribute across the cluster, the driver only concatenates
-    * framed messages. Same codec, byte-compatible streams either way.
-    * Override per session via `spark.graft.wire.parallelEncodeRows` /
-    * `.parallelEncodeBytes`.
+  /** Estimated result size above which [[estimateBig]] calls a result big.
+    * It no longer picks the encoder (every reply encodes in the tasks); the
+    * byte cap is also [[chunkBytes]]'s default. Override per session via
+    * `spark.graft.wire.parallelEncodeRows` / `.parallelEncodeBytes`.
     */
   private def parallelEncodeRows: Long =
     spark.conf.get("spark.graft.wire.parallelEncodeRows", "262144").toLong
@@ -143,27 +136,23 @@ final class LakeServer(val spark: SparkSession) {
 
   /** Rows per wire chunk on the chunked SELECT path ([[GrpcLakeServer]]):
     * each `SqlResults` message carries a standalone IPC stream of about this
-    * many rows, so the driver AND the client hold O(chunk), not O(result).
+    * many rows, so the client holds O(chunk), not O(result).
     */
   private[lake] def chunkRows: Long =
     spark.conf.get("spark.graft.wire.chunkRows", "262144").toLong
 
-  /** Byte backstop per wire chunk — the driver-side encoder flushes a chunk
-    * once its encoded bytes cross this even mid-`chunkRows`, so a result the
-    * plan statistics UNDER-estimated (joins and explode keep ~child size
-    * without CBO) still cannot buffer whole on the driver.
+  /** Byte backstop per wire chunk — a chunk flushes once its encoded bytes
+    * cross this even mid-`chunkRows`, so wide rows still cannot make one
+    * message unbounded.
     */
   private[lake] def chunkBytes: Long =
     spark.conf.get("spark.graft.wire.chunkBytes", parallelEncodeBytes.toString).toLong
 
-  /** Job-free size routing for the wire encoders: Catalyst's plan statistics
-    * — the row count when available, the size-in-bytes estimate otherwise.
-    * The old probe (`df.limit(n+1).count()`) executed every expensive query
-    * TWICE (limit does not short-circuit aggregates/joins) and could route a
-    * nondeterministic query on a different result than it encoded.
-    * Estimates err toward BIG (unknown leaves report the default size), which
-    * costs one distributed encode job on a small result — never driver
-    * memory on a big one.
+  /** Job-free size estimate of a result from Catalyst's plan statistics —
+    * the row count when available, the size-in-bytes estimate otherwise.
+    * Estimates err toward BIG (unknown leaves report the default size).
+    * The server no longer routes on it; it stays as the benchmark's
+    * mirror of the old routing until that mirror is dropped.
     */
   private[lake] def estimateBig(df: DataFrame): Boolean = {
     val stats = df.queryExecution.optimizedPlan.stats
@@ -173,13 +162,14 @@ final class LakeServer(val spark: SparkSession) {
     }
   }
 
-  def selectIpc(sql: String, codec: Option[String] = Some("zstd")): Array[Byte] = {
-    val df = select(sql)
-    if (estimateBig(df))
-      org.apache.spark.sql.graftbridge.ArrowParallel
-        .toIpcBytesDistributed(df, codec = codec)._1
-    else graft.sources.ArrowInterchange.toIpcBytes(df, codec)
-  }
+  /** SelectIpc with the actual wire encoding: result rows as one
+    * ZSTD-compressed Arrow IPC stream, matching the reference's response
+    * encoding exactly (src/server.rs:293-297 `IpcWriter...with_compression
+    * (ZSTD)`), encoded in the tasks like every wire reply. Pass
+    * `codec = None` for an uncompressed stream.
+    */
+  def selectIpc(sql: String, codec: Option[String] = Some("zstd")): Array[Byte] =
+    graft.sources.ArrowInterchange.toIpcBytes(select(sql), codec)
 
   /** Streaming ingest from Arrow IPC chunks (reference `read_source`,
     * src/server.rs:36-46).

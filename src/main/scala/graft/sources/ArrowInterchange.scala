@@ -8,28 +8,33 @@ import scala.jdk.CollectionConverters._
 import org.apache.arrow.compression.CommonsCompressionFactory
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector._
-import org.apache.arrow.vector.compression.CompressionUtil
-import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
+import org.apache.arrow.vector.ipc.ArrowStreamReader
 import org.apache.arrow.vector.types.{FloatingPointPrecision, TimeUnit => ArrowTimeUnit}
-import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
-import org.apache.arrow.vector.util.Text
+import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.graftbridge.ArrowParallel
 import org.apache.spark.sql.types._
 
 /** Arrow IPC stream interchange — the reference's wire format (reference:
   * src/server.rs:36-46 decodes `SourceIpc.data` IPC bytes; src/server.rs:
-  * 293-297 replies with IPC-serialized results). Spark's internal Arrow
-  * converters are private API, so this speaks the PUBLIC Arrow Java API
-  * (`arrow-vector` ships with Spark) for flat schemas: boolean, int/long,
-  * float/double, string, binary, timestamp-µs, date.
+  * 293-297 replies with IPC-serialized results) for flat schemas: boolean,
+  * int/long, float/double, string, binary, timestamp-µs, date.
   *
-  * Driver-side by design: the reference serializes query RESULTS (already
-  * collected) and decodes ingest CHUNKS (micro-batch sized) — both bounded;
-  * bulk data movement stays on the parquet path.
+  * Encoding runs where the rows are: each result partition converts and
+  * compresses its own record batches in a task ([[ArrowParallel]]), and the
+  * driver only concatenates framed messages into standalone streams.
+  * Decoding ingest CHUNKS (micro-batch sized) stays driver-side through the
+  * public Arrow Java API (`arrow-vector` ships with Spark).
   */
 object ArrowInterchange {
 
+  /** The wire's Arrow field for a Spark column — the types [[sparkField]]
+    * decodes, and the same schema [[ArrowParallel]] writes. Anything else
+    * (DECIMAL, nested types) throws, so the encoder refuses it up front
+    * rather than send a stream no client here can read.
+    */
   private def arrowField(f: StructField): Field = {
     val t: ArrowType = f.dataType match {
       case BooleanType => ArrowType.Bool.INSTANCE
@@ -64,8 +69,8 @@ object ArrowInterchange {
     StructField(f.getName, dt, f.isNullable)
   }
 
-  /** Rows per IPC record batch — bounds driver memory: the writer holds one
-    * batch of vectors at a time, never the whole result.
+  /** Rows per IPC record batch — bounds encoder memory: a partition's
+    * writer holds one batch of vectors at a time, never the whole partition.
     */
   val BatchRows: Int = 16384
 
@@ -79,96 +84,56 @@ object ArrowInterchange {
   def toIpcBytes(df: DataFrame, codec: Option[String] = None): Array[Byte] =
     toIpcBytesWithCount(df, codec)._1
 
-  /** Streamed encode: rows arrive via `toLocalIterator` (one partition
-    * resident at a time, not a whole-result `collect`) and leave as a
-    * SEQUENCE of record batches of [[BatchRows]] each — a 100×-scale SELECT
-    * through the wire keeps the driver at O(batch), and IPC readers (ours
-    * and pyarrow) already consume multi-batch streams. Also returns the row
-    * count (the wire's `SqlResults.rows`) without a second job.
+  /** One IPC stream of record batches of at most `batchRows` rows each,
+    * encoded by [[ArrowParallel.framedPartitions]] on the executors. Also
+    * returns the row count (the wire's `SqlResults.rows`) without a second
+    * job.
     */
-  def toIpcBytesWithCount(df: DataFrame, codec: Option[String] = None): (Array[Byte], Long) = {
+  def toIpcBytesWithCount(df: DataFrame, codec: Option[String] = None,
+      batchRows: Int = BatchRows): (Array[Byte], Long) = {
     var result: (Array[Byte], Long) = (Array.emptyByteArray, 0L)
-    toIpcChunked(df, codec, Long.MaxValue, Long.MaxValue) { (b, n) => result = (b, n) }
+    toIpcChunked(df, codec, Long.MaxValue, Long.MaxValue, batchRows) { (b, n) => result = (b, n) }
     result
-  }
-
-  private def mkWriter(root: VectorSchemaRoot, codec: Option[String],
-      out: ByteArrayOutputStream): ArrowStreamWriter = codec match {
-    case None => new ArrowStreamWriter(root, null, out)
-    case Some(c) =>
-      val codecType = c.toLowerCase match {
-        case "zstd" => CompressionUtil.CodecType.ZSTD
-        case "lz4" => CompressionUtil.CodecType.LZ4_FRAME
-        case other => throw new IllegalArgumentException(
-          s"unsupported IPC codec: $other (zstd, lz4)")
-      }
-      new ArrowStreamWriter(root, null,
-        java.nio.channels.Channels.newChannel(out),
-        org.apache.arrow.vector.ipc.message.IpcOption.DEFAULT,
-        CommonsCompressionFactory.INSTANCE, codecType)
   }
 
   /** Incremental chunked encode: emits a STANDALONE IPC stream (schema →
     * batches → EOS) with its row count whenever the running chunk crosses
-    * `maxRows` rows OR `maxBytes` encoded bytes — whichever first. A result
-    * under both caps emits exactly ONE chunk, and an empty result emits one
-    * empty stream, so single-message consumers are unaffected until a
-    * result actually needs chunking. The byte cap is the HARD backstop for
-    * size-estimate misroutes: plan statistics can undershoot (joins,
-    * explode), and without it an "estimated small" result would buffer
-    * whole on the driver — here it degrades to more chunks, each decodable
-    * on its own. Returns the number of chunks emitted (≥ 1).
+    * `maxRows` rows OR `maxBytes` encoded bytes — whichever first. Cuts fall
+    * between record batches of at most `batchRows` rows. A result under both
+    * caps emits exactly ONE chunk, and an empty result emits one empty
+    * stream, so single-message consumers are unaffected until a result
+    * actually needs chunking. The driver holds at most one wave of
+    * compressed frames ([[ArrowParallel.framedPartitions]]) plus the chunk
+    * being built; every job runs inside one SQL execution. A column type the
+    * wire decoder cannot read is refused before any job. Returns the number
+    * of chunks emitted (≥ 1).
     */
-  def toIpcChunked(df: DataFrame, codec: Option[String], maxRows: Long, maxBytes: Long)
-      (emit: (Array[Byte], Long) => Unit): Int = {
-    val schema = df.schema
-    val it = df.toLocalIterator().asScala
-    val allocator = new RootAllocator()
+  def toIpcChunked(df: DataFrame, codec: Option[String], maxRows: Long, maxBytes: Long,
+      batchRows: Int = BatchRows)(emit: (Array[Byte], Long) => Unit): Int = {
+    df.schema.fields.foreach(arrowField)
+    val head = ArrowParallel.schemaMessage(df)
+    val eos = ArrowParallel.eosMessage()
+    val out = new ByteArrayOutputStream()
+    var rows = 0L
     var chunks = 0
-    try {
-      val arrowSchema = new ArrowSchema(schema.fields.map(arrowField).toList.asJava)
-      val root = VectorSchemaRoot.create(arrowSchema, allocator)
-      try {
-        var out: ByteArrayOutputStream = null
-        var writer: ArrowStreamWriter = null
-        var rows = 0L
-        def open(): Unit = {
-          out = new ByteArrayOutputStream()
-          writer = mkWriter(root, codec, out)
-          writer.start()
-          rows = 0L
-        }
-        def closeAndEmit(): Unit = {
-          writer.end(); writer.close()
-          emit(out.toByteArray, rows)
-          chunks += 1
-          writer = null; out = null
-        }
-        open()
-        val buf = new scala.collection.mutable.ArrayBuffer[Row](BatchRows)
-        while (it.hasNext) {
-          if (writer == null) open()
-          buf.clear()
-          while (it.hasNext && buf.length < BatchRows) buf += it.next()
-          root.allocateNew()
-          schema.fields.zipWithIndex.foreach { case (f, c) =>
-            val v = root.getVector(c)
-            var r = 0
-            buf.foreach { row =>
-              if (row.isNullAt(c)) setNull(v, r) else setValue(v, r, f.dataType, row, c)
-              r += 1
-            }
-            v.setValueCount(buf.length)
-          }
-          root.setRowCount(buf.length)
-          writer.writeBatch()
-          rows += buf.length
+    def closeAndEmit(): Unit = {
+      out.write(eos)
+      emit(out.toByteArray, rows)
+      chunks += 1
+      out.reset(); out.write(head); rows = 0L
+    }
+    out.write(head)
+    SQLExecution.withNewExecutionId(df.queryExecution, Some("toIpcChunked")) {
+      ArrowParallel.framedPartitions(df, batchRows, codec).foreach { case (frames, _) =>
+        frames.foreach { case (frame, n) =>
+          out.write(frame)
+          rows += n
           if (rows >= maxRows || out.size() >= maxBytes) closeAndEmit()
         }
-        if (writer != null) closeAndEmit() // final partial, or the empty stream
-        chunks
-      } finally root.close()
-    } finally allocator.close()
+      }
+    }
+    if (rows > 0 || chunks == 0) closeAndEmit() // final partial, or the empty stream
+    chunks
   }
 
   /** Decode an Arrow IPC stream into a DataFrame (all batches). */
@@ -201,41 +166,6 @@ object ArrowInterchange {
       } finally reader.close()
     } finally allocator.close()
   }
-
-  private def setNull(v: FieldVector, r: Int): Unit = v match {
-    case x: BitVector => x.setNull(r)
-    case x: IntVector => x.setNull(r)
-    case x: BigIntVector => x.setNull(r)
-    case x: Float4Vector => x.setNull(r)
-    case x: Float8Vector => x.setNull(r)
-    case x: VarCharVector => x.setNull(r)
-    case x: VarBinaryVector => x.setNull(r)
-    case x: TimeStampMicroTZVector => x.setNull(r)
-    case x: TimeStampMicroVector => x.setNull(r)
-    case x: DateDayVector => x.setNull(r)
-    case other => throw new IllegalArgumentException(s"unsupported vector: $other")
-  }
-
-  private def setValue(v: FieldVector, r: Int, dt: DataType, row: Row, c: Int): Unit =
-    (v, dt) match {
-      case (x: BitVector, BooleanType) => x.setSafe(r, if (row.getBoolean(c)) 1 else 0)
-      case (x: IntVector, IntegerType) => x.setSafe(r, row.getInt(c))
-      case (x: BigIntVector, LongType) => x.setSafe(r, row.getLong(c))
-      case (x: Float4Vector, FloatType) => x.setSafe(r, row.getFloat(c))
-      case (x: Float8Vector, DoubleType) => x.setSafe(r, row.getDouble(c))
-      case (x: VarCharVector, StringType) => x.setSafe(r, new Text(row.getString(c)))
-      case (x: VarBinaryVector, BinaryType) => x.setSafe(r, row.getAs[Array[Byte]](c))
-      case (x: TimeStampMicroTZVector, TimestampType) =>
-        val ts = row.getTimestamp(c)
-        x.setSafe(r, ts.getTime * 1000L + (ts.getNanos % 1000000L) / 1000L)
-      case (x: TimeStampMicroVector, TimestampNTZType) =>
-        val ldt = row.getAs[java.time.LocalDateTime](c)
-        val us = ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L
-        x.setSafe(r, us)
-      case (x: DateDayVector, DateType) =>
-        x.setSafe(r, row.getDate(c).toLocalDate.toEpochDay.toInt)
-      case (other, t) => throw new IllegalArgumentException(s"unsupported: $other/$t")
-    }
 
   private def getValue(v: FieldVector, r: Int, dt: DataType): Any =
     if (v.isNull(r)) null

@@ -37,6 +37,52 @@ class GrpcSpec extends SparkSpec {
     }
   }
 
+  /** One SelectIpc round trip: `sql` in, its SqlResults messages out. */
+  private def selectIpc(port: Int, sql: String): Seq[PbSqlResults] = {
+    val channel = NettyChannelBuilder.forAddress("localhost", port).usePlaintext().build()
+    try {
+      val out = new Collector
+      val req = ClientCalls.asyncBidiStreamingCall(
+        channel.newCall(GrpcLakeServer.SelectIpcMethod, CallOptions.DEFAULT), out)
+      req.onNext(PbSql(sql, Some(1)).encode)
+      req.onCompleted()
+      out.await().map(PbSqlResults.decode)
+    } finally channel.shutdownNow()
+  }
+
+  /** `body`'s result with the Spark jobs it started and its tasks' input
+    * records. A marker job closes the count: the listener bus delivers in
+    * order, so once the marker's start arrives every earlier event has too.
+    */
+  private def counted[T](body: => T): (T, Int, Long) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val records = new java.util.concurrent.atomic.AtomicLong(0L)
+    val marked = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("graft.test.marker") != null))
+          marked.countDown()
+        else jobs.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null) records.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      sc.setLocalProperty("graft.test.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      assert(marked.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      (r, jobs.get(), records.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Decoded `k` column of every chunk, in message order. */
+  private def keys(chunks: Seq[PbSqlResults]): Seq[Long] =
+    chunks.flatMap(c => ArrowInterchange.fromIpcBytes(spark, c.data).select("k").as[Long].collect())
+
   test("six verbs drive a full table lifecycle over the wire") {
     val server = new GrpcLakeServer(new LakeServer(spark))
     val channel = NettyChannelBuilder.forAddress("localhost", server.port)
@@ -332,6 +378,63 @@ class GrpcSpec extends SparkSpec {
       assert(e.getMessage.contains("no table nope"), e.getMessage)
     } finally {
       channel.shutdownNow()
+      server.close()
+    }
+  }
+
+  test("SelectIpc of a catalog-answered aggregate runs no Spark job") {
+    val lake = new LakeServer(spark)
+    lake.createTable(graft.model.TableName("public", "wire_catalog"),
+      Iterator(spark.range(0, 500, 1, 4).selectExpr("id + 3 AS k", "id % 3 AS p")),
+      partitions = Seq("p"))
+    val sql = "SELECT COUNT(*) AS n, MIN(k) AS lo FROM wire_catalog"
+    assert(lake.select(sql).queryExecution.executedPlan
+      .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec],
+      "precondition: the catalog answers this aggregate")
+    val server = new GrpcLakeServer(lake)
+    try {
+      val (results, jobs, _) = counted(selectIpc(server.port, sql))
+      assert(jobs == 0, s"catalog answer ran $jobs jobs")
+      assert(results.size == 1 && results.head.rows == 1L)
+      val row = ArrowInterchange.fromIpcBytes(spark, results.head.data).head()
+      assert(row.getLong(0) == 500L && row.getLong(1) == 3L)
+    } finally server.close()
+  }
+
+  test("SelectIpc fetches a 12-partition ORDER BY in waves: in order, 3 jobs, chunkRows held") {
+    val server = new GrpcLakeServer(new LakeServer(spark))
+    spark.conf.set("spark.graft.wire.chunkRows", "300")
+    try {
+      val sql = "SELECT id AS k FROM range(0, 1200, 1, 12) ORDER BY k"
+      assert(spark.sql(sql).rdd.getNumPartitions == 12, "precondition: 12 partitions")
+      val (chunks, jobs, _) = counted(selectIpc(server.port, sql))
+      // local[4]: 12 partitions in waves of 4.
+      assert(jobs == 3, s"expected 3 jobs, got $jobs")
+      assert(chunks.map(_.rows) == Seq(300L, 300L, 300L, 300L))
+      assert(keys(chunks) == (0L until 1200L))
+    } finally {
+      spark.conf.unset("spark.graft.wire.chunkRows")
+      server.close()
+    }
+  }
+
+  test("SelectIpc refuses a DECIMAL column with an error reply, before any job") {
+    val lake = new LakeServer(spark)
+    lake.createTable(graft.model.TableName("public", "wire_dec"),
+      Iterator(spark.range(10).selectExpr("id AS k")))
+    val server = new GrpcLakeServer(lake)
+    // Zero size caps: a result estimated big is refused like a small one.
+    spark.conf.set("spark.graft.wire.parallelEncodeRows", "0")
+    spark.conf.set("spark.graft.wire.parallelEncodeBytes", "0")
+    try {
+      val (e, jobs, _) = counted(intercept[Exception] {
+        selectIpc(server.port, "SELECT CAST(k AS DECIMAL(10, 2)) AS d FROM wire_dec")
+      })
+      assert(e.getMessage.contains("unsupported IPC type"), e.getMessage)
+      assert(jobs == 0, s"refusal ran $jobs jobs")
+    } finally {
+      spark.conf.unset("spark.graft.wire.parallelEncodeRows")
+      spark.conf.unset("spark.graft.wire.parallelEncodeBytes")
       server.close()
     }
   }
