@@ -226,12 +226,14 @@ final class Database(val spark: SparkSession) {
     // ONE catalog snapshot for every family, so a concurrent write cannot
     // mix two table versions into the output.
     val whole = d.fold().map(_.whole)
-    def answer[T](f: StatFamily[_, _])(q: (CellGroup, Seq[String]) => Option[T]): Option[T] = {
-      val cs = f.cols(d, schema)
+    def answer[T](f: StatFamily[_, _], keep: String => Boolean = _ => true)(
+        q: (CellGroup, Seq[String]) => Option[T]): Option[T] = {
+      val cs = f.cols(d, schema).filter(keep)
       if (cs.isEmpty) None else whole.flatMap(q(_, cs))
     }
     val zones = answer(Zones)(_.zones(_))
-    val sums = answer(Sums)(_.sums(_))
+    // Exact sums only: a floating column's exact decimal is not its SUM.
+    val sums = answer(Sums, c => SumMap.exact(schema(c).dataType))(_.sums(_))
     val dist = answer(Sketches)(_.approxDistinct(_))
     val quants = answer(Quantiles)(_.quantiles(_, Seq(0.5, 0.95)))
     val tops = answer(Freqs)(_.topK(_, 5))

@@ -73,6 +73,10 @@ sealed abstract class StatFamily[V, E](
   def field(m: Manifest): Map[String, Map[String, E]]
   def withField(m: Manifest, f: Map[String, Map[String, E]]): Manifest
   def encode(v: V): E
+  /** Whether a value gets a manifest entry; one that does not reopens as
+    * unknown, like an undecodable one.
+    */
+  def storable(v: V): Boolean = true
   /** None = undecodable: the entry drops and its column stays unknown. */
   def decode(e: E, dt: DataType): Option[V]
 
@@ -81,7 +85,7 @@ sealed abstract class StatFamily[V, E](
       cells: scala.collection.Map[String, (PartStats, Boolean)]): Manifest =
     withField(m, cells.flatMap { case (rel, (st, vouched)) =>
       st.get(this).filter(s => (superset || vouched) && (!optIn || s.nonEmpty))
-        .map(s => rel -> s.map { case (c, v) => c -> encode(v) })
+        .map(s => rel -> s.collect { case (c, v) if storable(v) => c -> encode(v) })
     }.toMap)
 
   /** Decode one cell's manifest entry. Type-tracked families need the
@@ -176,10 +180,9 @@ object StatFamily {
       SumMap.merge(c, d)
     def field(m: Manifest) = m.partSums
     def withField(m: Manifest, f: Map[String, Map[String, (String, Long)]]) = m.copy(partSums = f)
-    def encode(cs: ColSum): (String, Long) = (cs.sum.toPlainString, cs.nonNulls)
-    def decode(e: (String, Long), dt: DataType): Option[ColSum] =
-      try Some(ColSum(new java.math.BigDecimal(e._1), e._2))
-      catch { case scala.util.control.NonFatal(_) => None }
+    def encode(cs: ColSum): (String, Long) = (SumMap.render(cs), cs.nonNulls)
+    override def storable(cs: ColSum): Boolean = SumMap.withinCap(cs)
+    def decode(e: (String, Long), dt: DataType): Option[ColSum] = SumMap.decode(e._1, e._2)
   }
 
   /** Manifest codec of the sketch families: base64 of the sketch bytes. */
@@ -350,8 +353,9 @@ final case class CellGroup(values: Seq[Any], cells: Seq[FoldCell]) {
       else Some((rows, folded.map { case (c, z) => c -> z.get }.toMap))
     }
 
-  /** Exact count and sums — DECIMAL addition is associative, so the fold
-    * equals the one-shot scan bit for bit.
+  /** Exact count and sums — BigDecimal addition is associative, so the
+    * fold is the one-shot exact sum (see [[SumMap]] for what a scan
+    * answers).
     */
   def sums(cols: Seq[String]): Option[(Long, Map[String, ColSum])] =
     column(Sums, cols).map(per =>

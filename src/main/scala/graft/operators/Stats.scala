@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DecimalType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, LongType, StructField, StructType}
 
-import graft.lake.{ColSum, LakeDataset}
+import graft.lake.{ColSum, LakeDataset, SumMap, Zone}
 
 /** Metadata-only table statistics — the lakehouse "answer aggregates from
   * the catalog" property (Delta/Iceberg metadata-only queries; the reference
@@ -99,11 +99,16 @@ object Stats {
     * semantics: NULL iff zero non-null inputs). None when the exact total
     * does not FIT the result type — the real aggregation would overflow
     * there (ANSI error / legacy wrap), so the caller must fall back to the
-    * scan rather than answer something the scan wouldn't.
+    * scan rather than answer something the scan wouldn't. A DOUBLE result
+    * (a floating column's sum) is the correctly rounded exact sum and needs
+    * the column's `zone` for its overflow guard ([[SumMap.roundedSum]]).
     */
-  private[graft] def sumValue(cs: ColSum, rt: DataType): Option[Option[Any]] =
+  private[graft] def sumValue(cs: ColSum, rt: DataType,
+      zone: Option[Zone] = None): Option[Option[Any]] =
     if (cs.nonNulls == 0L) Some(None)
     else rt match {
+      case DoubleType =>
+        zone.flatMap(SumMap.roundedSum(cs, _)).map(_.map(Double.box))
       case LongType =>
         try Some(Some(java.lang.Long.valueOf(cs.sum.longValueExact())))
         catch { case _: ArithmeticException => None }
@@ -116,9 +121,10 @@ object Stats {
   /** One-row frame: `cnt` + `sum_<c>` per requested column — answered from
     * the catalog's exact per-part sums ([[LakeDataset.metaSums]]) when the
     * table can vouch, else ONE aggregation scan with the identical result.
-    * Only exactly-summable columns (integral/decimal) ever take the fast
-    * path; double/float columns always scan (their sum is evaluation-order-
-    * dependent, so no maintained value could equal it by contract).
+    * Only exactly-summable columns (integral/decimal) take the fast path
+    * here, so the drift gates built on it stay oracle-exact; double/float
+    * columns scan (the SQL rewrite answers their SUM as the correctly
+    * rounded exact sum, see [[SumMap]]).
     */
   def tableSumStats(spark: SparkSession, ds: LakeDataset, cols: Seq[String]): DataFrame = {
     val schema = ds.tableSchema
@@ -127,7 +133,7 @@ object Stats {
       StructField("cnt", LongType, nullable = false) +:
         cols.zip(rts).map { case (c, rt) => StructField(s"sum_$c", rt) })
     val meta: Option[Row] =
-      if (!cols.forall(c => graft.lake.SumMap.summable(schema(c).dataType))) None
+      if (!cols.forall(c => SumMap.exact(schema(c).dataType))) None
       else ds.metaSums(cols).flatMap { case (n, sums) =>
         val vals = cols.zip(rts).foldRight(Option(List.empty[Any])) {
           case ((c, rt), acc) =>
@@ -145,7 +151,7 @@ object Stats {
         // emit the combined row IF it fits the result type; anything less
         // degrades to the one full scan.
         val hybrid: Option[Row] =
-          if (!cols.forall(c => graft.lake.SumMap.summable(schema(c).dataType))) None
+          if (!cols.forall(c => SumMap.exact(schema(c).dataType))) None
           else ds.metaHybrid(Nil, cols).flatMap { case (cnt0, _, sums0, scanOpt) =>
             val (scanCnt, scanSums) = scanOpt match {
               case None => (0L, cols.map(_ -> graft.lake.SumMap.Zero).toMap)
@@ -224,7 +230,7 @@ object Stats {
   /** Whether [[tableSumStats]] would take the metadata-only path right now. */
   def sumAnswerable(ds: LakeDataset, cols: Seq[String]): Boolean = {
     val schema = ds.tableSchema
-    cols.forall(c => graft.lake.SumMap.summable(schema(c).dataType)) &&
+    cols.forall(c => SumMap.exact(schema(c).dataType)) &&
       ds.metaSums(cols).exists { case (_, sums) =>
         cols.forall(c => sumValue(sums(c), sumResultType(schema(c).dataType)).isDefined)
       }

@@ -185,11 +185,16 @@ final case class LakePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   /** Aggregate shapes the metadata rewrites serve: COUNT(*), MIN/MAX of a
-    * scan column, SUM of an exactly-summable (integral/decimal) scan
-    * column, COUNT(col) of the same column family (the non-null count
-    * rides in the maintained sum state), and AVG of an INTEGRAL column
-    * (derived from the exact sum + non-null count, behind the
-    * [[avgValue]] exactness guard; full-collapse paths only).
+    * scan column, SUM of a sum-tracked scan column, COUNT(col) of the same
+    * column family (the non-null count rides in the maintained sum state),
+    * and AVG of an INTEGRAL column (derived from the exact sum + non-null
+    * count, behind the [[avgValue]] exactness guard; full-collapse paths
+    * only). An integral or decimal SUM equals the scan's bit for bit. A
+    * DOUBLE/FLOAT column's SUM and AVG answer with the correctly rounded
+    * exact sum (and quotient), which the scan's order-dependent double
+    * accumulation approximates within its own rounding bound; they, and
+    * its COUNT(col), take the full-collapse paths only — a hybrid would add
+    * a rounded partial into an order-dependent scan sum.
     */
   private sealed trait MetaSpec
   private case object CntSpec extends MetaSpec
@@ -218,27 +223,58 @@ final case class LakePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
+  /** `fullCollapse`: the caller answers every cell from the catalog (the
+    * only paths a floating column's SUM, AVG and COUNT(col) take).
+    */
   private def specOf(fn: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction,
-      scan: LakeScan): Option[MetaSpec] = {
+      scan: LakeScan, fullCollapse: Boolean): Option[MetaSpec] = {
     import org.apache.spark.sql.catalyst.expressions.aggregate._
+    import graft.lake.SumMap
+    def summed(a: AttributeReference): Boolean = scan.outputSet.contains(a) &&
+      (SumMap.exact(a.dataType) || fullCollapse && SumMap.floating(a.dataType))
     fn match {
       case Count(Seq(Literal(v, _))) if v != null => Some(CntSpec)
-      case Count(Seq(a: AttributeReference))
-          if scan.outputSet.contains(a) && graft.lake.SumMap.summable(a.dataType) =>
-        Some(CntColSpec(a.name))
+      case Count(Seq(a: AttributeReference)) if summed(a) => Some(CntColSpec(a.name))
       case Min(a: AttributeReference) if scan.outputSet.contains(a) =>
         Some(MinMaxSpec(a.name, wantMin = true))
       case Max(a: AttributeReference) if scan.outputSet.contains(a) =>
         Some(MinMaxSpec(a.name, wantMin = false))
-      case Sum(a: AttributeReference, _)
-          if scan.outputSet.contains(a) && graft.lake.SumMap.summable(a.dataType) =>
-        Some(SumSpec(a.name))
-      case Average(a: AttributeReference, _)
-          if scan.outputSet.contains(a) && integralType(a.dataType) =>
+      case Sum(a: AttributeReference, _) if summed(a) => Some(SumSpec(a.name))
+      case Average(a: AttributeReference, _) if summed(a) &&
+          (integralType(a.dataType) || SumMap.floating(a.dataType)) =>
         Some(AvgSpec(a.name))
       case _ => None
     }
   }
+
+  private def floatingCol(scan: LakeScan, c: String): Boolean =
+    scan.output.exists(a => a.name == c && graft.lake.SumMap.floating(a.dataType))
+
+  /** The columns a full-collapse answer reads zones and sums of: zones for
+    * MIN/MAX and for every AVG and floating SUM (their guards), sums for
+    * SUM, COUNT(col) and AVG.
+    */
+  private def foldCols(specs: Seq[MetaSpec], scan: LakeScan): (Seq[String], Seq[String]) = {
+    val mm = specs.collect {
+      case MinMaxSpec(c, _) => c
+      case AvgSpec(c) => c
+      case SumSpec(c) if floatingCol(scan, c) => c
+    }.distinct
+    val sums = specs.collect {
+      case SumSpec(c) => c
+      case CntColSpec(c) => c
+      case AvgSpec(c) => c
+    }.distinct
+    (mm, sums)
+  }
+
+  /** A full-collapse AVG: the integral guard of [[avgValue]], or a floating
+    * column's correctly rounded quotient.
+    */
+  private def avgAnswer(scan: LakeScan, c: String, cs: graft.lake.ColSum,
+      zone: graft.lake.Zone): Option[Any] =
+    (if (floatingCol(scan, c)) graft.lake.SumMap.roundedAvg(cs, zone) else avgValue(cs, zone))
+      .map(_.map(java.lang.Double.valueOf(_): Any).orNull)
 
   /** An AVG derived from the catalog (exact decimal sum / non-null count)
     * equals the scan's double-accumulated average ONLY when every
@@ -267,11 +303,12 @@ final case class LakePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** A folded sum as a CATALYST value of the aggregate's result type, or
     * None when the exact total would not fit it (the real scan would
-    * overflow there — fail open so the scan's behavior wins).
+    * overflow there — fail open so the scan's behavior wins). A DOUBLE
+    * result needs the column's zone ([[graft.operators.Stats.sumValue]]).
     */
-  private def sumCatalystValue(cs: graft.lake.ColSum, dt: org.apache.spark.sql.types.DataType)
-      : Option[Any] =
-    graft.operators.Stats.sumValue(cs, dt).map(_.map(
+  private def sumCatalystValue(cs: graft.lake.ColSum, dt: org.apache.spark.sql.types.DataType,
+      zone: Option[graft.lake.Zone] = None): Option[Any] =
+    graft.operators.Stats.sumValue(cs, dt, zone).map(_.map(
       CatalystTypeConverters.createToCatalystConverter(dt)(_)).orNull)
 
   /** The LocalRelation carrying the catalog's exact aggregate answer, or
@@ -298,20 +335,11 @@ final case class LakePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
           if lgk == graft.lake.HllMap.LgK && scan.ds.sketchCols.contains(a.name) =>
         Some(ApproxDistinctSpec(a.name))
       case Alias(AggregateExpression(fn, Complete, false, None, _), _) =>
-        specOf(fn, scan)
+        specOf(fn, scan, fullCollapse = true)
       case _ => None
     }
     if (specs.exists(_.isEmpty)) return None
-    // AVG needs BOTH the zone (sign-uniformity guard) and the sum family.
-    val mmCols = specs.flatten.collect {
-      case MinMaxSpec(c, _) => c
-      case AvgSpec(c) => c
-    }.distinct
-    val sumCols = specs.flatten.collect {
-      case SumSpec(c) => c
-      case CntColSpec(c) => c
-      case AvgSpec(c) => c
-    }.distinct
+    val (mmCols, sumCols) = foldCols(specs.flatten, scan)
     val approxCols = specs.flatten.collect {
       case ApproxDistinctSpec(c) => c
     }.distinct
@@ -332,10 +360,9 @@ final case class LakePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
               Some(bound.map(
                 CatalystTypeConverters.createToCatalystConverter(e.dataType)(_)).orNull :: rest)
             case SumSpec(c) =>
-              sumCatalystValue(sums(c), e.dataType).map(_ :: rest)
+              sumCatalystValue(sums(c), e.dataType, zones.get(c)).map(_ :: rest)
             case AvgSpec(c) =>
-              avgValue(sums(c), zones(c)).map(
-                _.map(v => java.lang.Double.valueOf(v): Any).orNull :: rest)
+              avgAnswer(scan, c, sums(c), zones(c)).map(_ :: rest)
             case CntDistinctSpec(c) =>
               Some(whole.distinctPartition(c).asInstanceOf[Any] :: rest)
             case ApproxDistinctSpec(c) =>
@@ -374,7 +401,7 @@ final case class LakePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
     import org.apache.spark.sql.types.LongType
     val specs: Seq[Option[MetaSpec]] = aggExprs.map {
       case Alias(AggregateExpression(fn, Complete, false, None, _), _) =>
-        specOf(fn, scan)
+        specOf(fn, scan, fullCollapse = false)
       case _ => None
     }
     if (specs.exists(_.isEmpty)) return None
@@ -469,21 +496,13 @@ final case class LakePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case Alias(a: AttributeReference, _) if groupIdx.contains(a.name) =>
         scala.util.Left(groupIdx(a.name))
       case Alias(AggregateExpression(fn, Complete, false, None, _), _) =>
-        specOf(fn, scan) match {
+        specOf(fn, scan, fullCollapse = true) match {
           case Some(s) => scala.util.Right(s)
           case None => return None
         }
       case _ => return None
     }
-    val cols = specs.collect {
-      case scala.util.Right(MinMaxSpec(c, _)) => c
-      case scala.util.Right(AvgSpec(c)) => c
-    }.distinct
-    val sumCols = specs.collect {
-      case scala.util.Right(SumSpec(c)) => c
-      case scala.util.Right(CntColSpec(c)) => c
-      case scala.util.Right(AvgSpec(c)) => c
-    }.distinct
+    val (cols, sumCols) = foldCols(specs.collect { case scala.util.Right(s) => s }, scan)
     for {
       // ONE catalog snapshot: per group count, zones and sums together.
       groups <- scan.ds.fold(groupBy = Some(groupAttrs.map(_.name)), cellFilter = cellFilter)
@@ -505,10 +524,9 @@ final case class LakePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
                   Some(bound.map(
                     CatalystTypeConverters.createToCatalystConverter(e.dataType)(_)).orNull :: r2)
                 case scala.util.Right(SumSpec(c)) =>
-                  sumCatalystValue(sums(c), e.dataType).map(_ :: r2)
+                  sumCatalystValue(sums(c), e.dataType, zones.get(c)).map(_ :: r2)
                 case scala.util.Right(AvgSpec(c)) =>
-                  avgValue(sums(c), zones(c))
-                    .map(_.map(java.lang.Double.valueOf(_): Any).orNull :: r2)
+                  avgAnswer(scan, c, sums(c), zones(c)).map(_ :: r2)
               }
             }
           }
@@ -717,7 +735,7 @@ final case class LakePruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case Alias(a: AttributeReference, _) if groupIdx.contains(a.name) =>
         scala.util.Left(groupIdx(a.name))
       case Alias(AggregateExpression(fn, Complete, false, None, _), _) =>
-        specOf(fn, scan) match {
+        specOf(fn, scan, fullCollapse = false) match {
           case Some(_: AvgSpec) => return None // see hybridAnswer
           case Some(s) => scala.util.Right(s)
           case None => return None

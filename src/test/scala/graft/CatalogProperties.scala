@@ -3,10 +3,10 @@ package graft
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.propBoolean
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{functions, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.lake.{LakeDataset, QuantileMap}
+import graft.lake.{LakeDataset, QuantileMap, SumMap}
 import graft.model.StorageSpec
 
 /** Catalog soundness across every stat family: after ANY sequence of
@@ -15,7 +15,8 @@ import graft.model.StorageSpec
   * open to a scan) or the scan's answer — exactly for counts, bounds, sums
   * and group counts, `hll_sketch_estimate(hll_sketch_agg)` for distinct
   * counts, and within the GK rank bound for quantiles — in the plain,
-  * grouped and hybrid shapes.
+  * grouped and hybrid shapes. A floating column's sum is the correctly
+  * rounded exact sum, within the scan's rounding bound of the scan.
   */
 object CatalogProperties extends Properties("CatalogFold") {
 
@@ -28,6 +29,10 @@ object CatalogProperties extends Properties("CatalogFold") {
     Fixtures.table(spark, new SparkSpec {}.sf(), "orders")
       .drop("o_orderdate", "o_orderpriority")
       .withColumn("o_batch", (col("o_orderkey") % 4).cast("int"))
+      // A floating column: nulls, -0.0, both signs, magnitudes 1e-4..1e4.
+      .withColumn("o_x", when(col("o_orderkey") % 11 === 0, lit(null).cast("double"))
+        .when(col("o_orderkey") % 13 === 0, lit(-0.0))
+        .otherwise((col("o_totalprice") - 150000.0) * pow(lit(10.0), col("o_orderkey") % 9 - 4)))
       .cache()
 
   private sealed trait Op
@@ -45,7 +50,7 @@ object CatalogProperties extends Properties("CatalogFold") {
     Gen.choose(1L, 1000L).map(Ups.apply),
     Gen.choose(1L, 1000L).map(DelKeys.apply),
     Gen.choose(5, 11).map(DelWhere.apply),
-    Gen.zip(Gen.choose(3, 9), Gen.oneOf("o_orderstatus", "o_totalprice", "o_custkey"))
+    Gen.zip(Gen.choose(3, 9), Gen.oneOf("o_orderstatus", "o_totalprice", "o_custkey", "o_x"))
       .map { case (m, c) => Upd(m, c) },
     Gen.const(Mat), Gen.const(Analyze), Gen.const(Reload))
 
@@ -53,8 +58,14 @@ object CatalogProperties extends Properties("CatalogFold") {
     * with changed values for an upsert.
     */
   private def batch(seed: Long, fresh: Boolean): DataFrame = {
-    val b = orders.sample(withReplacement = false, 40.0 / 1500, seed).limit(40)
+    // Rarely, a batch brings a special value into the floating column.
+    val special = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+      .lift((seed % 10).toInt)
+    val b0 = orders.sample(withReplacement = false, 40.0 / 1500, seed).limit(40)
+    val b = special.fold(b0)(v =>
+      b0.withColumn("o_x", when(col("o_custkey") % 50 === 0, lit(v)).otherwise(col("o_x"))))
     if (!fresh) b.withColumn("o_totalprice", col("o_totalprice") * 2)
+      .withColumn("o_x", col("o_x") * 2)
       .withColumn("o_orderstatus", lit("U"))
     else b.withColumn("o_orderkey", col("o_orderkey") + seed * 10000)
       .withColumn("o_batch", (col("o_orderkey") % 4).cast("int"))
@@ -69,6 +80,7 @@ object CatalogProperties extends Properties("CatalogFold") {
       case Upd(m, c) => ds.updateWhere(col("o_custkey") % m === 1, Seq(c -> (c match {
         case "o_orderstatus" => lit("Z")
         case "o_totalprice" => col(c) + 1e6
+        case "o_x" => col(c) * -3.0
         case _ => lit(1L)
       })))
       case Mat => ds.materialize()
@@ -80,12 +92,14 @@ object CatalogProperties extends Properties("CatalogFold") {
     ds
   }
 
-  private final case class O(key: Long, cust: Long, status: String, price: Double, batch: Int)
+  private final case class O(key: Long, cust: Long, status: String, price: Double, batch: Int,
+      x: Option[Double])
 
   /** Every catalog answer against the table's own rows (collected once). */
   private def check(ds: LakeDataset, label: String): Prop = {
-    val rows = ds.toDF.select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_batch")
-      .collect().map(r => O(r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3), r.getInt(4)))
+    val rows = ds.toDF.select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_batch", "o_x")
+      .collect().map(r => O(r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3), r.getInt(4),
+        Option(r.get(5)).map(_.asInstanceOf[Double])))
     val n = rows.length.toLong
     def zone(xs: Seq[Long]) = graft.lake.Zone(xs.minOption, xs.maxOption)
     def sum(xs: Seq[Long]) = graft.lake.ColSum(java.math.BigDecimal.valueOf(xs.sum), xs.size.toLong)
@@ -105,6 +119,29 @@ object CatalogProperties extends Properties("CatalogFold") {
     val sums = ds.metaSums(Seq("o_custkey")).forall { case (cnt, s) =>
       cnt == n && sameSum(s("o_custkey"), sum(rows.map(_.cust)))
     }
+    // Floating sum: the fold is None or the correctly rounded exact sum (a
+    // NaN or infinity as Spark's SUM combines them), within n·ε·Σ|x| of the
+    // scan.
+    val xs = rows.toSeq.flatMap(_.x)
+    val finite = xs.filter(x => !x.isNaN && !x.isInfinite)
+    val wantX: Option[Double] =
+      if (xs.isEmpty) None
+      else if (xs.exists(_.isNaN) || xs.contains(Double.PositiveInfinity) &&
+          xs.contains(Double.NegativeInfinity)) Some(Double.NaN)
+      else xs.find(_.isInfinite).orElse(Some(java.lang.Double.parseDouble(
+        finite.foldLeft(java.math.BigDecimal.ZERO)((a, x) => a.add(new java.math.BigDecimal(x)))
+          .toString)))
+    val scanX = Option(ds.toDF.agg(functions.sum(col("o_x"))).head().get(0)).map(_.asInstanceOf[Double])
+    def sameX(a: Option[Double], b: Option[Double]) = (a, b) match {
+      case (Some(p), Some(q)) => p.isNaN && q.isNaN || p == q
+      case _ => a == b
+    }
+    val bound = finite.length * math.ulp(1.0) * finite.map(math.abs).sum
+    val floatSum = ds.fold().flatMap { f =>
+      for ((_, zs) <- f.whole.zones(Seq("o_x")); (_, ss) <- f.whole.sums(Seq("o_x"));
+           v <- SumMap.roundedSum(ss("o_x"), zs("o_x"))) yield v
+    }.forall(got => sameX(got, wantX) && (sameX(got, scanX) ||
+      (got.isDefined && scanX.isDefined && math.abs(got.get - scanX.get) <= bound)))
     val distinct = ds.metaApproxDistinct(Seq("o_custkey")).forall(_("o_custkey") == hll)
     val quant = ds.metaApproxQuantile(Seq("o_totalprice"), Seq(0.5)).forall(m =>
       inRankBound(rows.map(_.price), 0.5, m("o_totalprice").head))
@@ -164,7 +201,7 @@ object CatalogProperties extends Properties("CatalogFold") {
         }
       }
 
-    Seq("stats" -> stats, "sums" -> sums, "distinct" -> distinct, "quantile" -> quant,
+    Seq("stats" -> stats, "sums" -> sums, "floatSum" -> floatSum, "distinct" -> distinct, "quantile" -> quant,
       "groupCounts" -> counts, "topK" -> topk, "distinctPartition" -> partitions,
       "groupedStats" -> groupedStats, "groupedSums" -> groupedSums,
       "groupedCounts" -> groupedCounts, "groupedQuantile" -> groupedQuant,

@@ -401,6 +401,26 @@ class GrpcSpec extends SparkSpec {
     } finally server.close()
   }
 
+  test("SelectIpc of taxi's COUNT(*), SUM(double) runs no job and returns the rounded exact sum") {
+    val lake = new LakeServer(spark)
+    val src = spark.range(0, 600, 1, 4)
+      .selectExpr("id AS k", "id % 3 AS p", "CAST((id * 7919 % 1000) / 7.0 + 0.1 AS DOUBLE) AS total_amount")
+    lake.createTable(graft.model.TableName("public", "wire_taxi"), Iterator(src),
+      partitions = Seq("p"))
+    val sql = "SELECT COUNT(*), SUM(total_amount) FROM wire_taxi"
+    val server = new GrpcLakeServer(lake)
+    try {
+      val (results, jobs, _) = counted(selectIpc(server.port, sql))
+      assert(jobs == 0, s"catalog answer ran $jobs jobs")
+      assert(results.size == 1 && results.head.rows == 1L)
+      val row = ArrowInterchange.fromIpcBytes(spark, results.head.data).head()
+      val xs = src.select("total_amount").as[Double].collect()
+      val exact = xs.map(new java.math.BigDecimal(_)).reduce(_ add _)
+      assert(row.getLong(0) == 600L)
+      assert(row.getDouble(1) == java.lang.Double.parseDouble(exact.toString))
+    } finally server.close()
+  }
+
   test("SelectIpc fetches a 12-partition ORDER BY in waves: in order, 3 jobs, chunkRows held") {
     val server = new GrpcLakeServer(new LakeServer(spark))
     spark.conf.set("spark.graft.wire.chunkRows", "300")

@@ -44,3 +44,58 @@ class StatFamilySpec extends SparkSpec {
     assert(counts == wantCounts)
   }
 }
+
+/** Floating sums through the manifest: kept across a reopen, and absent
+  * from a manifest written before floats were tracked.
+  */
+class FloatSumPersistSpec extends SparkSpec {
+  import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+
+  private val Sql = "SELECT COUNT(*) AS n, SUM(o_totalprice) AS s FROM fsp_t"
+
+  private def saved(): (String, org.apache.spark.sql.DataFrame) = {
+    val o = Fixtures.table(spark, sf(), "orders")
+      .withColumn("o_batch", (col("o_orderkey") % 3).cast("int"))
+    val root = java.nio.file.Files.createTempDirectory("graft_float_sum").toString
+    LakeDataset.fromDataFrame(spark, o, partitionCols = Seq("o_batch"),
+      storage = Some(graft.model.StorageSpec(root))).toStorage()
+    (root, o)
+  }
+
+  private def query(ds: LakeDataset, sql: String = Sql): org.apache.spark.sql.DataFrame = {
+    val db = new graft.lake.Database(spark)
+    db.register("fsp_t", ds)
+    db.executeSql(sql)
+  }
+
+  test("float sums survive toStorage -> fromStorage: the reopened table answers SUM(double)") {
+    val (root, o) = saved()
+    try {
+      val m = graft.model.Manifest.read(root)
+      assert(m.partSums.values.forall(_.contains("o_totalprice")))
+      val df = query(LakeDataset.fromStorage(spark, root))
+      assert(df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      val exact = o.select("o_totalprice").collect()
+        .map(r => new java.math.BigDecimal(r.getDouble(0))).reduce(_ add _)
+      assert(df.head().getDouble(1) == java.lang.Double.parseDouble(exact.toString))
+    } finally LakeDataset.deleteRecursively(java.nio.file.Paths.get(root))
+  }
+
+  test("a manifest without float sums reopens cleanly; SUM(double) scans, SUM(bigint) folds") {
+    val (root, o) = saved()
+    try {
+      val m = graft.model.Manifest.read(root)
+      graft.model.Manifest.write(m.copy(partSums =
+        m.partSums.map { case (rel, cols) => rel -> (cols - "o_totalprice") }), root)
+      val ds = LakeDataset.fromStorage(spark, root)
+      val df = query(ds)
+      assert(!df.queryExecution.optimizedPlan.collectLeaves().exists(_.isInstanceOf[LocalRelation]))
+      assert(df.head().getLong(0) == o.count())
+      val scanned = o.agg(sum(col("o_totalprice"))).head().getDouble(0)
+      assert(math.abs(df.head().getDouble(1) - scanned) <= 1e-9 * math.abs(scanned))
+      val ints = query(ds, "SELECT COUNT(*) AS n, SUM(o_custkey) AS s FROM fsp_t")
+      assert(ints.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      assert(ints.head().getLong(1) == o.agg(sum(col("o_custkey"))).head().getLong(0))
+    } finally LakeDataset.deleteRecursively(java.nio.file.Paths.get(root))
+  }
+}

@@ -40,6 +40,18 @@ class StatsSpec extends SparkSpec {
   private def statsRow(ds: LakeDataset): Seq[Any] =
     Stats.tableStats(spark, ds, statCols).head().toSeq
 
+  /** The exact sum of doubles, as BigDecimal addition computes it. */
+  private def exactSum(xs: Seq[Double]): java.math.BigDecimal =
+    xs.foldLeft(java.math.BigDecimal.ZERO)((a, x) => a.add(new java.math.BigDecimal(x)))
+
+  /** The exact sum rounded once to a double. */
+  private def roundedExactSum(xs: Seq[Double]): Double =
+    java.lang.Double.parseDouble(exactSum(xs).toString)
+
+  /** Any summation order's distance from the exact sum: n·ε·Σ|x|. */
+  private def scanBound(xs: Seq[Double]): Double =
+    xs.length * math.ulp(1.0) * xs.map(math.abs).sum
+
   private def freshLake(): LakeDataset = {
     val o = orders.withColumn("o_batch", (col("o_orderkey") / 500).cast("int"))
     val ds = LakeDataset.fromDataFrame(spark, o.filter(col("o_orderkey") < 600),
@@ -322,17 +334,21 @@ class StatsSpec extends SparkSpec {
     assert(dn.head().getLong(0) == 3L)
   }
 
-  test("AVG fails open: double input, mixed signs, and dirty cells scan") {
+  test("AVG fails open: mixed signs and dirty cells scan; double input rounds once") {
     import spark.implicits._
     val db = new Database(spark)
-    // Double measure: never collapses (order-dependent sums by contract).
+    // Double measure: collapses to the exact sum over the count, rounded
+    // once, within the scan's rounding bound of the scan's average.
     val ds = freshLake()
     db.register("avgfo_t", ds)
     val dd = db.executeSql("SELECT AVG(o_totalprice) AS a FROM avgfo_t")
-    assert(!dd.queryExecution.optimizedPlan.collectLeaves()
+    assert(dd.queryExecution.optimizedPlan.collectLeaves()
       .forall(_.isInstanceOf[LocalRelation]))
-    assert(dd.head().toSeq ==
-      ds.toDF.agg(avg(col("o_totalprice")).as("a")).head().toSeq)
+    val prices = ds.toDF.select("o_totalprice").collect().map(_.getDouble(0))
+    val gotAvg = dd.head().getDouble(0)
+    val scanAvg = ds.toDF.agg(avg(col("o_totalprice"))).head().getDouble(0)
+    assert(math.abs(gotAvg - scanAvg) <= scanBound(prices) / prices.length + math.ulp(scanAvg))
+    assert(gotAvg == graft.lake.SumMap.roundedQuotient(exactSum(prices), prices.length))
     // Mixed-sign integral: the sign-uniformity guard declines (no proof the
     // scan's double accumulation is exact) — the scan answers.
     val mixed = LakeDataset.fromDataFrame(spark,
@@ -352,6 +368,59 @@ class StatsSpec extends SparkSpec {
     val dy = db.executeSql("SELECT AVG(o_custkey) AS a FROM avgdy_t")
     assert(dy.head().toSeq ==
       dirty.toDF.agg(avg(col("o_custkey")).as("a")).head().toSeq)
+  }
+
+  test("AVG of a double column: global and grouped collapse within the scan's bound") {
+    val ds = freshLake()
+    val db = new Database(spark)
+    db.register("avgdbl_t", ds)
+    val whole = db.executeSql("SELECT AVG(o_totalprice) AS a FROM avgdbl_t")
+    assert(whole.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    val prices = ds.toDF.select("o_totalprice").collect().map(_.getDouble(0)).toSeq
+    val scanAvg = ds.toDF.agg(avg(col("o_totalprice"))).head().getDouble(0)
+    assert(math.abs(whole.head().getDouble(0) - scanAvg) <=
+      scanBound(prices) / prices.length + math.ulp(scanAvg))
+    val grouped = db.executeSql(
+      "SELECT o_batch, AVG(o_totalprice) AS a FROM avgdbl_t GROUP BY o_batch")
+    assert(grouped.queryExecution.optimizedPlan.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation]))
+    val byBatch = ds.toDF.select("o_batch", "o_totalprice").collect()
+      .groupBy(_.getInt(0)).map { case (b, rs) => b -> rs.map(_.getDouble(1)).toSeq }
+    grouped.collect().foreach { r =>
+      val xs = byBatch(r.getInt(0))
+      assert(r.getDouble(1) == graft.lake.SumMap.roundedQuotient(exactSum(xs), xs.length))
+    }
+  }
+
+  test("COUNT(col) of a double column from the non-null count; a dirty cell scans") {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("k", LongType), StructField("g", IntegerType),
+      StructField("x", DoubleType)))
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    (0L until 40L).foreach(i => rows.add(org.apache.spark.sql.Row(i, (i % 3).toInt,
+      if (i % 4 == 0) null else java.lang.Double.valueOf(i * 0.1 - 1.7))))
+    val ds = LakeDataset.fromDataFrame(spark, spark.createDataFrame(rows, schema),
+      partitionCols = Seq("g"))
+    val db = new Database(spark)
+    db.register("cntdbl_t", ds)
+    val sql = "SELECT COUNT(x) AS nx, SUM(x) AS s FROM cntdbl_t"
+    val cc = db.executeSql(sql)
+    assert(cc.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    val xs = ds.toDF.select("x").collect().filterNot(_.isNullAt(0)).map(_.getDouble(0)).toSeq
+    val scan = ds.toDF.agg(count(col("x")), sum(col("x"))).head()
+    assert(cc.head().getLong(0) == 30L && scan.getLong(0) == 30L)
+    assert(cc.head().getDouble(1) == roundedExactSum(xs))
+    assert(math.abs(cc.head().getDouble(1) - scan.getDouble(1)) <= scanBound(xs))
+    // One dirty cell: the hybrid would add a rounded partial into a scan
+    // sum, so floats fail open to the plain scan.
+    ds.upsert(spark.createDataFrame(rows, schema).filter(col("k") === 5L)
+      .withColumn("x", lit(2.5)), keys = Seq("k"))
+    val dirty = db.executeSql(sql)
+    assert(!dirty.queryExecution.optimizedPlan.collectLeaves()
+      .exists(_.isInstanceOf[LocalRelation]))
+    val rescan = ds.toDF.agg(count(col("x")), sum(col("x"))).head()
+    assert(dirty.head().getLong(0) == rescan.getLong(0))
+    assert(math.abs(dirty.head().getDouble(1) - rescan.getDouble(1)) <= 2 * scanBound(xs :+ 2.5))
   }
 
   test("auto-analyze re-tightens once dirty cells exceed the threshold") {
@@ -598,7 +667,7 @@ class StatsSpec extends SparkSpec {
     assert(!Stats.sumAnswerable(loaded2, Seq("o_custkey")))
   }
 
-  test("SQL count+sum collapses; grouped and filtered shapes too; sum(double) never") {
+  test("SQL count+sum collapses; grouped and filtered shapes too; sum(double) rounds once") {
     val ds = freshLake()
     val db = new Database(spark)
     db.register("stats_sum_t", ds)
@@ -618,11 +687,15 @@ class StatsSpec extends SparkSpec {
       .agg(count(lit(1)).as("cnt"), sum(col("o_custkey")).as("s"))
       .orderBy("o_batch").collect().toSeq
     assert(grp.orderBy("o_batch").collect().toSeq == realGrp)
-    // SUM over a double column keeps its scan (and stays correct).
+    // SUM over a double column collapses to the correctly rounded exact
+    // sum, which lies within the scan's own rounding bound of the scan.
     val dbl = db.executeSql("SELECT SUM(o_totalprice) AS s FROM stats_sum_t")
-    assert(!dbl.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
-    assert(dbl.head().getDouble(0) ==
-      ds.toDF.agg(sum(col("o_totalprice"))).head().getDouble(0))
+    assert(dbl.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    val prices = ds.toDF.select("o_totalprice").collect().map(_.getDouble(0))
+    val got = dbl.head().getDouble(0)
+    assert(got == roundedExactSum(prices))
+    val scanned = ds.toDF.agg(sum(col("o_totalprice"))).head().getDouble(0)
+    assert(math.abs(got - scanned) <= scanBound(prices))
 
     // COUNT(col) of a sum-tracked column collapses too — the non-null
     // count rides in the maintained sum state. Exact under nulls: register
