@@ -1,166 +1,14 @@
 package graft
 
-import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import graft.gates.{Gate, Gates, Sql}
 
-import graft.functions.Bucketing
-import graft.lake.{Database, LakeDataset}
-import graft.operators.{Bpe, Clustering, DataQuality, Dedup, ExactDedupIndex, Fusion, Graphs, HeavyHitters, Joins, MaterializedAgg, MaterializedJoin, MinhashIndex, Multimodal, Pq, Recall, Sampling, Similarity, Sq, StringCache, TextAnalysis, TextSearch, Urls}
-
-/** Driver contract — one `queries` entry per implemented operator
-  * (SURVEY.md §2), with a DuckDB-equivalent oracle where SQL-expressible.
-  *
-  * Determinism note: Spark and DuckDB both sum doubles in nondeterministic
-  * order, so every floating aggregate here is accumulated EXACTLY as
-  * `DECIMAL(38,s)` and only cast back to double at the end — both engines
-  * then produce bit-identical results. Inputs are 2-decimal monetary doubles
-  * (products of two of them have <=4 decimals), so the decimal cast is
-  * lossless.
+/** Driver contract — one gate per implemented operator (SURVEY.md §2),
+  * each declared once in the [[graft.gates.Gates]] registry with its DuckDB
+  * oracle where SQL-expressible. The three maps are views of the registry.
   */
 object SparkEntry {
-
-  import Fixtures.table
-
-  /** Exact (order-independent) sum of a monetary double column. */
-  private def dsum(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(38, scale))).cast(DoubleType)
-
-  /** Oracle-side spelling of [[dsum]]. */
-  private def osum(expr: String, scale: Int = 2): String =
-    s"CAST(SUM(CAST($expr AS DECIMAL(38,$scale))) AS DOUBLE)"
-
-  /** Base series for the ts_* gates: per-(user, day) purchase value as
-    * exact 1e-4-tick longs. Purchases are ~13/user/month, so the daily
-    * series has real gaps for upsample/fill/interpolate to close.
-    */
-  private def dailyPurchases(s: SparkSession, dir: String): DataFrame =
-    table(s, dir, "events")
-      .filter(col("event_type") === "purchase")
-      .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
-      .agg((sum(col("value").cast(DecimalType(38, 4))) * 10000)
-        .cast(LongType).as("v_ticks"))
-
-  /** Tokenizer CONFIG for the token-id gates: a fixed merge table applied
-    * in order (each left ≠ right, so one merge pass has no overlapping
-    * occurrences and the oracle's two-pass string replace reproduces the
-    * greedy fold exactly — see the `text_bpe_ids` oracle). Chained merges
-    * ("t a"→ta, "ta b"→tab, "l e"→le, "tab le"→table) exercise multi-char
-    * fusion on the corpus's most frequent word.
-    */
-  private val BpeConfigMerges: Seq[(String, String)] =
-    Seq(("t", "a"), ("ta", "b"), ("l", "e"), ("tab", "le"), ("e", "r"))
-
-  /** Deterministic messy-URL synthesis for the curation gates (the corpus
-    * has no URL column): mixed-case scheme/host, www, default ports,
-    * tracking params, unsorted params, trailing slash, fragment — every
-    * case [[graft.operators.Urls.normalizeUrl]] must handle. Both engines
-    * build the identical string, so the gate tests the NORMALIZER, not the
-    * synthesis.
-    */
-  /** State-store count for a fixture-lifetime stateful stream. Stateful
-    * operators fix `spark.sql.shuffle.partitions` STATE STORES at query
-    * start and every store pays a per-epoch commit, so the count is a
-    * SCALE KNOB, not a constant: derive it from the stream's expected key
-    * volume — one store per [[StreamKeysPerStore]] keys, floored at 4 (the
-    * measured ~2× trim for these fixture-sized streams vs 32 near-empty
-    * stores) and capped at the session's shuffle-partition setting (a
-    * 100 TB keyspace gets the cluster's full store count, never fewer
-    * stores than the session would plan anyway... never MORE than it
-    * either — store count beyond the configured parallelism only adds
-    * commit overhead).
-    */
-  private def streamStatePartitions(s: SparkSession, expectedKeys: Long): Int = {
-    val sessionParts = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    math.max(4L, math.min(sessionParts.toLong,
-      (expectedKeys + StreamKeysPerStore - 1) / StreamKeysPerStore)).toInt
-  }
-
-  /** Expected stream keys per state store ([[streamStatePartitions]]). */
-  private val StreamKeysPerStore = 250000L
-
-  /** Trim the session for a fixture-lifetime stateful stream; returns the
-    * previous conf values for [[restoreStreamSession]] in the gate's
-    * `finally`. Three semantics-preserving knobs:
-    *
-    *  - shuffle partitions → [[streamStatePartitions]] (state-store count
-    *    derives from the key volume);
-    *  - state-store maintenance interval → beyond the gate's lifetime: the
-    *    background snapshot/cleanup thread's file ops otherwise land INSIDE
-    *    the timed stream (isolated A/B: stream_outer_join 8.1 → 6.8 s,
-    *    stream_session_window 4.6 → 3.6/3.9 s across two runs; a real
-    *    deployment wants the default — an unbounded stream must compact its
-    *    delta files — so this is scoped to the gate and restored);
-    *  - minBatchesToRetain → 2: a gate runs ≤ 4 epochs, retaining the
-    *    default 100 batches of offset/commit/state history is pure
-    *    bookkeeping. Restored after stop.
-    *  - noDataMicroBatches → off: after every data batch the engine
-    *    schedules an EXTRA empty batch to apply the advanced watermark
-    *    (eviction/emission), and each one commits every state store. All
-    *    five trimmed gates advance their watermarks with explicit sentinel
-    *    DATA batches (two far-future rounds: the first moves the watermark,
-    *    the second — a data batch — flushes under it), so the no-data
-    *    batches add commits without changing any emitted row; the DuckDB
-    *    oracle re-proves the final state per gate. A deployment emitting on
-    *    wall-clock watermark progress (no sentinel traffic) wants the
-    *    default, which is why this is gate-scoped and restored.
-    *
-    * Sequential bench/verify execution is assumed: the override is
-    * session-global while the stream runs (same caveat as the partition
-    * trim it generalizes).
-    */
-  private def trimStreamSession(
-      s: SparkSession, expectedKeys: Long): Map[String, String] = {
-    val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.stateStore.maintenanceInterval",
-      "spark.sql.streaming.minBatchesToRetain",
-      "spark.sql.streaming.noDataMicroBatches.enabled")
-    val saved = keys.map(k => k -> s.conf.getOption(k)).toMap
-    s.conf.set("spark.sql.shuffle.partitions",
-      streamStatePartitions(s, expectedKeys).toString)
-    s.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-    s.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    saved.map { case (k, v) => k -> v.orNull }
-  }
-
-  private def restoreStreamSession(s: SparkSession, saved: Map[String, String]): Unit =
-    saved.foreach { case (k, v) =>
-      if (v == null) s.conf.unset(k) else s.conf.set(k, v)
-    }
-
-  private def syntheticUrl: Column = concat(
-    when(col("doc_id") % 5 === 0, lit("HTTP://")).otherwise(lit("HTTPS://")),
-    when(col("doc_id") % 3 === 0, lit("WWW.")).otherwise(lit("")),
-    col("source"),
-    when(col("doc_id") % 4 === 0, lit(".CO.UK")).otherwise(lit(".Example.COM")),
-    when(col("doc_id") % 5 === 0, lit(":80")).otherwise(lit(":443")),
-    lit("/Articles/"), col("doc_id").cast("string"),
-    when(col("doc_id") % 2 === 0, lit("/?utm_source=feed&b=2&a=1"))
-      .otherwise(lit("?z=9&gclid=abc123")),
-    lit("#Section-2"))
-
-  /** Oracle-side spelling of [[syntheticUrl]]. */
-  private val UrlSynthSql: String =
-    """(CASE WHEN doc_id % 5 = 0 THEN 'HTTP://' ELSE 'HTTPS://' END) ||
-      |(CASE WHEN doc_id % 3 = 0 THEN 'WWW.' ELSE '' END) || source ||
-      |(CASE WHEN doc_id % 4 = 0 THEN '.CO.UK' ELSE '.Example.COM' END) ||
-      |(CASE WHEN doc_id % 5 = 0 THEN ':80' ELSE ':443' END) ||
-      |'/Articles/' || CAST(doc_id AS VARCHAR) ||
-      |(CASE WHEN doc_id % 2 = 0 THEN '/?utm_source=feed&b=2&a=1'
-      |      ELSE '?z=9&gclid=abc123' END) || '#Section-2'""".stripMargin
-
-  /** Oracle-side registered-domain CASE over a host's label list `ls`. */
-  private val DomainCaseSql: String =
-    """CASE WHEN len(ls) >= 3 AND array_to_string(list_slice(ls, len(ls)-1, len(ls)), '.')
-      |       IN ('co.uk','org.uk','ac.uk','co.jp','com.au','com.br',
-      |           'co.in','com.cn','co.kr','com.mx','co.nz','com.sg')
-      |     THEN array_to_string(list_slice(ls, len(ls)-2, len(ls)), '.')
-      |     WHEN len(ls) >= 2 THEN array_to_string(list_slice(ls, len(ls)-1, len(ls)), '.')
-      |     ELSE host END""".stripMargin
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Exercises the whole lake core: partition+bucket split, upsert
@@ -169,7855 +17,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("lake_upsert")(spark, "/root/testdata/sf0.001")
 
-  /** Fixture warm-ups Bench runs OUTSIDE a query's timed region: these
-    * memoized builds are index BOOTSTRAPS (a corpus-sized one-off a real
-    * deployment amortizes across its query stream), so letting the first
-    * timed run pay them would measure bootstrap+operator instead of the
-    * operator. Verify is unaffected — correctness includes the bootstrap.
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Gates.all.map(g => g.name -> g.build).toMap
+
+  /** Verify writes `oracle_sql.json` in this map's iteration order, so it
+    * stays an immutable `Map`: its key set alone fixes the bytes.
     */
-  def prewarm: Map[String, (SparkSession, String) => Unit] = Map(
-    "dedup_minhash_incr" -> ((s, dir) => { Fixtures.minhashIndexRoot(s, dir); () }),
-    "ann_ivf_persisted" -> ((s, dir) => { Fixtures.ivfLake(s, dir); () }),
-    "ann_ivf_topk" -> ((s, dir) => { Fixtures.ivfIndex(s, dir); () }),
-    "ann_batch_ivf" -> ((s, dir) => { Fixtures.ivfIndex(s, dir); () }),
-    "ann_pq_topk" -> ((s, dir) => { Fixtures.pqEncoded(s, dir); () }),
-    "ann_pq_rerank" -> ((s, dir) => { Fixtures.pqEncoded(s, dir); () }),
-    "ann_ivfpq_topk" -> ((s, dir) => { Fixtures.ivfPqLists(s, dir); () }),
-    "lake_change_feed" -> ((s, dir) => { Fixtures.trackedOrders(s, dir); () }),
-    "lake_time_travel" -> ((s, dir) => { Fixtures.trackedOrders(s, dir); () }),
-    "lake_feed_checkpoint" -> ((s, dir) => { Fixtures.checkpointedOrders(s, dir); () }),
-    "lake_scd2" -> ((s, dir) => { Fixtures.trackedOrders(s, dir); () }),
-    "feed_stream_read" -> ((s, dir) => { Fixtures.streamedOrders(s, dir); () }),
-    "feed_replicate" -> ((s, dir) => { Fixtures.streamedOrders(s, dir); () }),
-    "text_bm25_topk" -> ((s, dir) => { Fixtures.bm25Index(s, dir); () }),
-    "text_bm25_int" -> ((s, dir) => { Fixtures.bm25Index(s, dir); () }),
-    "text_phrase_search" -> ((s, dir) => { Fixtures.posIndex(s, dir); () }),
-    "text_bm25_batch" -> ((s, dir) => { Fixtures.bm25Index(s, dir); () }),
-    // Erasure fixtures: build + erase + reopen are index MAINTENANCE
-    // (amortized like any index bootstrap); the timed query is the probe
-    // over the post-erasure index.
-    "ann_ivf_removed" -> ((s, dir) => { Fixtures.ivfLakeRemoved(s, dir); () }),
-    "ann_ivfpq_removed" -> ((s, dir) => { Fixtures.ivfPqListsRemoved(s, dir); () }),
-    "text_bm25_removed" -> ((s, dir) => { Fixtures.bm25IndexRemoved(s, dir); () }),
-    "text_phrase_removed" -> ((s, dir) => { Fixtures.posIndexRemoved(s, dir); () })
-  )
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ------------------------------------------------------ SQL surface (§2.B)
-    "q01_pricing_summary" -> ((s, dir) => {
-      table(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp_ntz"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          dsum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    "q02_filter_pushdown" -> ((s, dir) => {
-      table(s, dir, "lineitem")
-        .filter(col("l_quantity") >= 49 && col("l_returnflag") === "R")
-        .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
-    }),
-
-    "q03_top_orders" -> ((s, dir) => {
-      val c = table(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val o = table(s, dir, "orders")
-      val l = table(s, dir, "lineitem")
-      broadcast(c).join(o, c("c_custkey") === o("o_custkey"))
-        .join(l, o("o_orderkey") === l("l_orderkey"))
-        .filter(o("o_orderdate") < lit("1997-01-01").cast("timestamp_ntz") &&
-          l("l_shipdate") > lit("1997-01-01").cast("timestamp_ntz"))
-        .groupBy(o("o_orderkey"), o("o_orderdate"))
-        .agg(dsum(l("l_extendedprice") * (lit(1) - l("l_discount")), 4).as("revenue"))
-        .orderBy(desc("revenue"), asc("o_orderkey"))
-        .limit(10)
-    }),
-
-    "q04_semi_join" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      val l = table(s, dir, "lineitem").filter(col("l_quantity") >= 48)
-      o.join(l, o("o_orderkey") === l("l_orderkey"), "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_orders"))
-        .orderBy("o_orderpriority")
-    }),
-
-    "q05_revenue_by_nation" -> ((s, dir) => {
-      val c = table(s, dir, "customer")
-      val o = table(s, dir, "orders")
-      val l = table(s, dir, "lineitem")
-      val sup = table(s, dir, "supplier")
-      val n = table(s, dir, "nation")
-      c.join(o, c("c_custkey") === o("o_custkey"))
-        .join(l, o("o_orderkey") === l("l_orderkey"))
-        .join(broadcast(sup), l("l_suppkey") === sup("s_suppkey") &&
-          c("c_nationkey") === sup("s_nationkey"))
-        .join(broadcast(n), sup("s_nationkey") === n("n_nationkey"))
-        .groupBy(n("n_name"))
-        .agg(dsum(l("l_extendedprice") * (lit(1) - l("l_discount")), 4).as("revenue"))
-        .orderBy(desc("revenue"), asc("n_name"))
-    }),
-
-    "q06_forecast_revenue" -> ((s, dir) => {
-      table(s, dir, "lineitem")
-        .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp_ntz") &&
-          col("l_discount") >= 0.03 && col("l_discount") <= 0.05 &&
-          col("l_quantity") < 24)
-        .agg(
-          dsum(col("l_extendedprice") * col("l_discount"), 4).as("revenue"),
-          count(lit(1)).as("n_rows"))
-    }),
-
-    "q07_cte_union" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      val hi = o.filter(col("o_totalprice") > 300000)
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .select(lit("high").as("tier"), col("n"), col("total"))
-      val lo = o.filter(col("o_totalprice") < 5000)
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .select(lit("low").as("tier"), col("n"), col("total"))
-      hi.unionByName(lo).orderBy("tier")
-    }),
-
-    "q08_sort_limit" -> ((s, dir) => {
-      table(s, dir, "customer")
-        .select("c_custkey", "c_name", "c_acctbal")
-        .orderBy(desc("c_acctbal"), asc("c_custkey"))
-        .limit(20)
-    }),
-
-    "q09_distinct_agg" -> ((s, dir) => {
-      table(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          countDistinct(col("l_suppkey")).as("distinct_supp"),
-          countDistinct(col("l_partkey")).as("distinct_part"),
-          count(lit(1)).as("n_rows"))
-        .orderBy("l_returnflag")
-    }),
-
-    "q10_case_arith" -> ((s, dir) => {
-      table(s, dir, "orders")
-        .select(
-          when(col("o_totalprice") < 50000, "small")
-            .when(col("o_totalprice") < 200000, "medium")
-            .otherwise("large").as("size_tier"),
-          col("o_totalprice"))
-        .groupBy("size_tier")
-        .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("size_tier")
-    }),
-
-    "q11_string_fns" -> ((s, dir) => {
-      table(s, dir, "part").select(
-        col("p_partkey"),
-        lower(col("p_name")).as("name_lower"),
-        upper(col("p_brand")).as("brand_upper"),
-        substring(col("p_type"), 1, 5).as("type_prefix"),
-        length(col("p_name")).cast("long").as("name_len"),
-        concat_ws("|", col("p_brand"), col("p_type")).as("brand_type"))
-    }),
-
-    "q12_date_parts" -> ((s, dir) => {
-      table(s, dir, "orders")
-        .groupBy(
-          year(col("o_orderdate")).cast("long").as("o_year"),
-          month(col("o_orderdate")).cast("long").as("o_month"))
-        .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("o_year", "o_month")
-    }),
-
-    "q13_window_rank" -> ((s, dir) => {
-      val w = Window.partitionBy("c_nationkey")
-        .orderBy(desc("c_acctbal"), asc("c_custkey"))
-      table(s, dir, "customer")
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 3)
-        .select("c_nationkey", "rk", "c_custkey", "c_acctbal")
-    }),
-
-    "q14_rollup" -> ((s, dir) => {
-      table(s, dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty"))
-        .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
-    }),
-
-    "q15_events_daily" -> ((s, dir) => {
-      table(s, dir, "events")
-        .groupBy(
-          date_trunc("day", col("ts")).as("day"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"), dsum(col("value"), 4).as("total_value"))
-        .orderBy("day", "event_type")
-    }),
-
-    "q16_anti_join" -> ((s, dir) => {
-      val c = table(s, dir, "customer")
-      val o = table(s, dir, "orders").filter(col("o_totalprice") > 400000)
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n_customers"))
-        .orderBy("c_nationkey")
-    }),
-
-    "q17_json_extract" -> ((s, dir) => {
-      table(s, dir, "events")
-        .select(
-          col("event_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("k_val"))
-    }),
-
-    "q18_math_fns" -> ((s, dir) => {
-      table(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 97 === 0)
-        .select(
-          col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-          abs(col("l_extendedprice") - 30000).as("abs_delta"),
-          ceil(col("l_extendedprice")).as("price_ceil"),
-          floor(col("l_extendedprice")).as("price_floor"),
-          // ROUND to integer only: 2-decimal inputs make the .5 boundary
-          // exactly representable, so HALF_UP (Spark) and round-half-away
-          // (DuckDB) agree; fractional ROUND would diverge on binary doubles.
-          round(col("l_extendedprice")).as("price_round"),
-          sqrt(col("l_quantity")).as("qty_sqrt"),
-          signum(col("l_discount") - 0.05).cast("double").as("disc_sign"),
-          (col("l_orderkey") % 7).as("key_mod"))
-    }),
-
-    "q19_in_like_between" -> ((s, dir) => {
-      table(s, dir, "part")
-        .filter(
-          col("p_brand").isin("Brand#1", "Brand#2", "Brand#3") &&
-          col("p_name").like("%red%") &&
-          col("p_size").between(10, 40) &&
-          col("p_retailprice").isNotNull)
-        .select("p_partkey", "p_brand", "p_name", "p_size")
-    }),
-
-    "q20_conditional_fns" -> ((s, dir) => {
-      table(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 101 === 0)
-        .selectExpr(
-          "l_orderkey", "l_linenumber",
-          "nullif(l_tax, 0.0) AS tax_or_null",
-          "coalesce(nullif(l_tax, 0.0), -1.0) AS tax_coalesced",
-          "ifnull(nullif(l_returnflag, 'N'), 'none') AS flag_or_none",
-          "CAST(l_quantity AS INT) AS qty_int")
-    }),
-
-    "q21_window_running" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
-      table(s, dir, "orders")
-        .filter(col("o_custkey") % 50 === 0)
-        .select(
-          col("o_custkey"), col("o_orderkey"),
-          sum(col("o_totalprice").cast(DecimalType(38, 2)))
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("double").as("running_total"),
-          lag(col("o_orderkey"), 1).over(w).as("prev_order"),
-          rank().over(Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey")))
-            .cast("long").as("price_rank"))
-    }),
-
-    "q22_grouping_sets" -> ((s, dir) => {
-      table(s, dir, "lineitem").createOrReplaceTempView("graft_gs_lineitem")
-      s.sql(
-        """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-          |  CAST(SUM(CAST(l_quantity AS DECIMAL(38,2))) AS DOUBLE) AS qty
-          |FROM graft_gs_lineitem
-          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin)
-    }),
-
-    "q23_sessionize" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      table(s, dir, "events")
-        .withColumn("us", unix_micros(col("ts")))
-        .withColumn("brk",
-          when(col("us") - lag(col("us"), 1).over(w) > 1800000000L, 1L).otherwise(0L))
-        .groupBy("user_id")
-        .agg(
-          (sum(col("brk")) + 1).as("n_sessions"),
-          count(lit(1)).as("n_events"))
-        .orderBy("user_id")
-    }),
-
-    // PIVOT (Spark superset; reference dialect has none) — wide per-status
-    // counts/sums per returnflag.
-    "q32_pivot" -> ((s, dir) => {
-      table(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .pivot("l_linestatus", Seq("F", "O"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("qty"))
-        .orderBy("l_returnflag")
-    }),
-
-    // UNPIVOT via stack() — long-form (measure, value) rows.
-    "q33_unpivot" -> ((s, dir) => {
-      table(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 191 === 0)
-        .selectExpr("l_orderkey", "l_linenumber",
-          "stack(2, 'qty', l_quantity, 'price', l_extendedprice) AS (measure, value)")
-    }),
-
-    "q25_setops" -> ((s, dir) => {
-      val c = table(s, dir, "customer")
-      val rich = c.filter(col("c_acctbal") > 5000).select("c_custkey")
-      val building = c.filter(col("c_mktsegment") === "BUILDING").select("c_custkey")
-      rich.intersect(building).withColumn("op", lit("intersect"))
-        .unionByName(rich.except(building).withColumn("op", lit("except")))
-        .orderBy("op", "c_custkey")
-    }),
-
-    "q26_dedup_keys" -> ((s, dir) => {
-      Dedup.keepFirst(
-        table(s, dir, "lineitem"),
-        keys = Seq("l_orderkey", "l_linenumber"),
-        orderBy = Seq(col("l_partkey"), col("l_suppkey")))
-        .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-    }),
-
-    // Tumbling-window aggregation — the Structured Streaming operator shape
-    // run over the batch events table (window() is identical in both modes).
-    "q27_stream_window" -> ((s, dir) => {
-      table(s, dir, "events")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), dsum(col("value"), 4).as("total_value"))
-        .select(col("window.start").as("ws"), col("event_type"), col("n"), col("total_value"))
-        .orderBy("ws", "event_type")
-    }),
-
-    // SLIDING (hopping) window aggregation — polars group_by_dynamic
-    // (every=1h, period=3h) / streaming hop windows: every event lands in
-    // period/slide = 3 epoch-aligned windows; one explode-by-window
-    // groupBy, the same shape Structured Streaming plans for hop windows.
-    "q34_hop_window" -> ((s, dir) => {
-      table(s, dir, "events")
-        .groupBy(window(col("ts"), "3 hours", "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"), dsum(col("value"), 4).as("total_value"))
-        .select(col("window.start").as("ws"), col("event_type"), col("n"),
-          col("total_value"))
-        .orderBy("ws", "event_type")
-    }),
-
-    // Analytic window functions beyond rank/lag: lead, ntile, percent_rank,
-    // cume_dist, first_value — the remaining polars `over(...)` surface.
-    // The rational-valued functions land on a 1e-6 integer grid (identical
-    // IEEE division on identical integers both sides).
-    "q35_window_analytics" -> ((s, dir) => {
-      val w = Window.partitionBy("o_custkey").orderBy("o_orderkey")
-      table(s, dir, "orders")
-        .filter(col("o_custkey") % 50 === 0)
-        .select(
-          col("o_custkey"), col("o_orderkey"),
-          lead(col("o_totalprice"), 1).over(w).as("next_price"),
-          ntile(4).over(w).cast("long").as("quartile"),
-          round(percent_rank().over(w) * 1000000).cast("long").as("pct_rank_ppm"),
-          round(cume_dist().over(w) * 1000000).cast("long").as("cume_ppm"),
-          first(col("o_orderkey"))
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .as("first_order"))
-    }),
-
-    // TIME-RANGE rolling aggregation (polars rolling_* / group_by_rolling):
-    // per-user trailing 1-hour count and sum, RANGE frame over epoch-micros
-    // so the window bound is exact integer arithmetic on both sides.
-    "q36_rolling_time" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy(unix_micros(col("ts")))
-        .rangeBetween(-3600000000L, 0L)
-      table(s, dir, "events")
-        .filter(col("user_id") % 20 === 0)
-        .select(
-          col("user_id"), col("event_id"),
-          count(lit(1)).over(w).as("n_1h"),
-          sum(col("value").cast(DecimalType(38, 4))).over(w)
-            .cast("double").as("sum_1h"))
-    }),
-
-    // Audit-stamped upsert with an injected deterministic clock: changed
-    // rows carry changed_at > created_at, so the post-merge audit counts are
-    // SQL-expressible.
-    "lake_audit_upsert" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      val t0 = lit("2030-01-01 00:00:00").cast("timestamp")
-      val t1 = lit("2030-01-02 00:00:00").cast("timestamp")
-      val clock = new java.util.concurrent.atomic.AtomicReference[Column](t0)
-      val ds = LakeDataset.fromDataFrame(s, o,
-        partitionCols = Seq("o_orderstatus"),
-        auditColumns = true, auditClock = () => clock.get())
-      clock.set(t1)
-      ds.upsert(o.filter(col("o_orderkey") % 7 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") + 1), Seq("o_orderkey"))
-      ds.toDF.groupBy("o_orderstatus")
-        .agg(
-          count(lit(1)).as("n"),
-          count(when(col("changed_at") > col("created_at"), 1)).as("n_changed"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // Native session-window aggregation (gap-merged event-time sessions).
-    // Output times as epoch micros: both engines truncate ns identically.
-    "q29_session_window" -> ((s, dir) => {
-      table(s, dir, "events")
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n"), dsum(col("value"), 4).as("total_value"))
-        .select(
-          unix_micros(col("session_window.start")).as("sess_start_us"),
-          col("user_id"), col("n"), col("total_value"))
-        .orderBy("user_id", "sess_start_us")
-    }),
-
-    // Mergeable DataSketches HLL: per-group sketches unioned into a global
-    // estimate — the sketch algebra a 1000-executor rollup relies on.
-    // Estimates are engine-specific → rows-only; ServerSpec bounds the error.
-    "q28_hll_union" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-      li.groupBy("l_returnflag")
-        .agg(expr("hll_sketch_agg(l_partkey)").as("sk"))
-        .agg(expr("hll_sketch_estimate(hll_union_agg(sk))").as("distinct_parts_global"))
-    }),
-
-    // HLL-sketch distinct counts — estimates are engine-specific, so
-    // rows-only check; OperatorsSpec asserts <5% error vs exact.
-    "q24_approx_distinct" -> ((s, dir) => {
-      table(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          approx_count_distinct(col("l_partkey")).as("approx_parts"),
-          approx_count_distinct(col("l_suppkey")).as("approx_supps"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Theta-sketch distinct SET ALGEBRA — the overlap questions HLL cannot
-    // answer (intersection / A-not-B): viewers ∩ buyers, view-only mass,
-    // union audience, from ONE pass + k-row set ops. Sketch-valued ->
-    // rows-only; exact twin q34_overlap_exact is the oracle-checked truth
-    // and ThetaSpec pins <2% error against it.
-    "q34_theta_overlap" -> ((s, dir) => {
-      import graft.functions.ThetaAgg
-      val sk = table(s, dir, "events")
-        .filter(col("event_type").isin("view", "purchase"))
-        .groupBy("event_type")
-        .agg(ThetaAgg.sketch(col("user_id")).as("sk"))
-      sk.agg(
-          ThetaAgg.unionAgg(when(col("event_type") === "view", col("sk"))).as("sv"),
-          ThetaAgg.unionAgg(when(col("event_type") === "purchase", col("sk"))).as("sp"),
-          ThetaAgg.unionAgg(col("sk")).as("sall"))
-        .select(
-          round(ThetaAgg.estimate(col("sv"))).cast("long").as("viewers"),
-          round(ThetaAgg.estimate(col("sp"))).cast("long").as("buyers"),
-          round(ThetaAgg.intersectEstimate(col("sv"), col("sp"))).cast("long").as("both_vp"),
-          round(ThetaAgg.aNotBEstimate(col("sv"), col("sp"))).cast("long").as("view_only"),
-          round(ThetaAgg.estimate(col("sall"))).cast("long").as("all_users"))
-    }),
-
-    // Retention/overlap MATRIX: every pairwise segment overlap from ONE
-    // scan (k sketches -> k^2 driver-side set algebra) — the dashboard the
-    // exact path pays one self-join per question for. Sketch-valued ->
-    // rows-only; exact twin retention_matrix_exact is the oracle.
-    "theta_retention_matrix" -> ((s, dir) => {
-      import graft.functions.ThetaAgg
-      ThetaAgg.overlapMatrix(table(s, dir, "events"), "event_type", "user_id")
-        .orderBy("g_a", "g_b")
-    }),
-
-    // ZERO-SCAN retention matrix: the same pairwise-overlap dashboard
-    // answered from the catalog's per-cell THETA twins alone (no Spark
-    // jobs at answer time) — intersection is first-class, EXACT while
-    // groups stay under nominal entries (they do here at every SF), so
-    // the gate carries a full DuckDB oracle; at saturation the error is
-    // ~1/√k on the smaller side, vastly tighter than the r13 HLL
-    // inclusion-exclusion this replaced.
-    "lake_stats_overlap" -> ((s, dir) => {
-      import s.implicits._
-      val ev = table(s, dir, "events")
-        .select(col("event_type"), col("user_id"), col("event_id"))
-      val ds = LakeDataset.fromDataFrame(s, ev,
-        partitionCols = Seq("event_type"), sketchCols = Seq("user_id"))
-      val m = ds.metaPartitionOverlap("user_id", "event_type")
-        .getOrElse(sys.error("catalog overlap failed open — parts not tight"))
-      m.toDF("g_a", "g_b", "distinct_a", "distinct_b", "both_ab")
-        .orderBy("g_a", "g_b")
-    }),
-
-    // MAINTAINED theta catalog family end-to-end: per-cell theta twins ride
-    // the sketch family ([[HllMap.ThetaPrefix]]) through routing, APPEND
-    // FOLDS (the second half lands via insert and the twins union in), the
-    // manifest round-trip, and the zero-scan matrix — and because every
-    // group here stays under the sketch's nominal entries, the answers are
-    // EXACT and the whole path has a full DuckDB oracle (the r13 design
-    // routed small intersections to a one-scan fallback; this closes it).
-    "lake_stats_theta_overlap" -> ((s, dir) => {
-      import s.implicits._
-      val ev = table(s, dir, "events")
-        .select(col("event_type"), col("user_id"), col("event_id"))
-      val ds = LakeDataset.fromDataFrame(s, ev.filter(col("event_id") % 2 === 0),
-        partitionCols = Seq("event_type"), sketchCols = Seq("user_id"),
-        storage = Some(graft.model.StorageSpec(
-          Files.createTempDirectory("graft_theta_ov").toString)))
-      ds.toStorage()
-      val re = LakeDataset.fromStorage(s, ds.storage.get.root)
-      re.insert(ev.filter(col("event_id") % 2 === 1))
-      val m = re.metaPartitionOverlap("user_id", "event_type")
-        .getOrElse(sys.error("catalog overlap failed open — parts not tight"))
-      m.toDF("g_a", "g_b", "distinct_a", "distinct_b", "both_ab")
-        .orderBy("g_a", "g_b")
-    }),
-
-    // The same zero-scan matrix as a SQL verb: SHOW OVERLAP t.col BY part.
-    // Refuses (never silently scans) when the contract can't be met.
-    "lake_sql_overlap" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-        .select(col("event_type"), col("user_id"), col("event_id"))
-      val db = new Database(s)
-      db.register("ov_events", LakeDataset.fromDataFrame(s, ev,
-        partitionCols = Seq("event_type"), sketchCols = Seq("user_id")))
-      db.executeSql("SHOW OVERLAP ov_events.user_id BY event_type")
-        .orderBy("value_a", "value_b")
-    }),
-
-    // NET-NEW uniques per partition value from the catalog's theta twins
-    // alone (A-not-B set algebra — the verb HLL could never answer):
-    // zero scan jobs, EXACT in the sparse regime every SF ships, so the
-    // gate carries a full DuckDB oracle (first-seen-partition counts).
-    "lake_sql_netnew" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-        .select(col("event_type"), col("user_id"), col("event_id"))
-      val db = new Database(s)
-      db.register("nn_events", LakeDataset.fromDataFrame(s, ev,
-        partitionCols = Seq("event_type"), sketchCols = Seq("user_id")))
-      db.executeSql("SHOW NETNEW nn_events.user_id BY event_type")
-        .orderBy("value")
-    }),
-
-    // Exact twin for the retention matrix: distinct (group, user) tags,
-    // one equi-join on user for all co-occurring pairs, counts by flags.
-    "retention_matrix_exact" -> ((s, dir) => {
-      val d = table(s, dir, "events")
-        .select(col("event_type").as("g"), col("user_id").as("u")).distinct()
-      val c = d.groupBy("g").agg(count(lit(1)).as("n"))
-      val p = d.select(col("g").as("g_a"), col("u"))
-        .join(d.select(col("g").as("g_b"), col("u")), "u")
-        .filter(col("g_a") < col("g_b"))
-        .groupBy("g_a", "g_b").agg(count(lit(1)).as("both_ab"))
-      p.join(c.select(col("g").as("g_a"), col("n").as("na")), "g_a")
-        .join(c.select(col("g").as("g_b"), col("n").as("nb")), "g_b")
-        .select(col("g_a"), col("g_b"),
-          (col("na") - col("both_ab")).as("only_a"),
-          (col("nb") - col("both_ab")).as("only_b"),
-          col("both_ab"),
-          (col("na") + col("nb") - col("both_ab")).as("union_ab"))
-        .orderBy("g_a", "g_b")
-    }),
-
-    // Exact twin for q34_theta_overlap: one distinct + one flag aggregate
-    // computes every overlap count the sketches estimate.
-    "q34_overlap_exact" -> ((s, dir) => {
-      val tagged = table(s, dir, "events")
-        .filter(col("event_type").isin("view", "purchase"))
-        .groupBy("user_id")
-        .agg(
-          max(when(col("event_type") === "view", 1).otherwise(0)).as("v"),
-          max(when(col("event_type") === "purchase", 1).otherwise(0)).as("p"))
-      tagged.agg(
-        sum("v").cast("long").as("viewers"),
-        sum("p").cast("long").as("buyers"),
-        sum(col("v") * col("p")).cast("long").as("both_vp"),
-        sum(col("v") * (lit(1) - col("p"))).cast("long").as("view_only"),
-        count(lit(1)).cast("long").as("all_users"))
-    }),
-
-    "q30_corr_manual" -> ((s, dir) => {
-      // Pearson correlation from exact decimal moments: built-in corr() is
-      // summation-order dependent; this formulation is reproducible anywhere.
-      val li = table(s, dir, "lineitem")
-      li.groupBy("l_returnflag")
-        .agg(
-          count(lit(1)).cast("double").as("n"),
-          sum(col("l_quantity").cast(DecimalType(38, 2))).cast("double").as("sx"),
-          sum(col("l_extendedprice").cast(DecimalType(38, 2))).cast("double").as("sy"),
-          sum((col("l_quantity") * col("l_extendedprice")).cast(DecimalType(38, 4)))
-            .cast("double").as("sxy"),
-          sum((col("l_quantity") * col("l_quantity")).cast(DecimalType(38, 4)))
-            .cast("double").as("sxx"),
-          sum((col("l_extendedprice") * col("l_extendedprice")).cast(DecimalType(38, 4)))
-            .cast("double").as("syy"))
-        .select(col("l_returnflag"),
-          ((col("n") * col("sxy") - col("sx") * col("sy")) /
-            (sqrt(col("n") * col("sxx") - col("sx") * col("sx")) *
-             sqrt(col("n") * col("syy") - col("sy") * col("sy")))).as("corr_qty_price"))
-        .orderBy("l_returnflag")
-    }),
-
-    "q31_percentiles" -> ((s, dir) => {
-      table(s, dir, "orders")
-        .groupBy("o_orderstatus")
-        .agg(
-          expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY o_totalprice)").as("p50"),
-          expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY o_totalprice)").as("p90"))
-        .orderBy("o_orderstatus")
-    }),
-
-    "text_docfreq" -> ((s, dir) => {
-      TextAnalysis.documentFrequency(table(s, dir, "documents"), "text", "doc_id")
-        .orderBy("w")
-    }),
-
-    // TF-IDF: ln() differs at ulp level across libm implementations — no
-    // SQL oracle; OperatorsSpec pins the ranking behavior.
-    "text_tfidf" -> ((s, dir) => {
-      TextAnalysis.tfIdfTopTerms(table(s, dir, "documents"), "text", "doc_id", k = 5)
-        .orderBy("doc", "rk")
-    }),
-
-    // Integer-idf TF-IDF ranking — exact integer arithmetic end-to-end, so
-    // the full ranking (not just tf/df counts) is oracle-checked.
-    "text_tfidf_int" -> ((s, dir) => {
-      TextAnalysis.tfIdfTopTermsInt(table(s, dir, "documents"), "text", "doc_id", k = 5)
-        .orderBy("doc", "rk")
-    }),
-
-    // ------------------------------------------- catalog + SQL execution (§2.A)
-    "sql_via_catalog" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("graft_orders", LakeDataset.fromDataFrame(s, table(s, dir, "orders")))
-      db.executeSql(
-        """SELECT o_orderstatus,
-          |       COUNT(*) AS n,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-          |FROM graft_orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
-    }),
-
-    // Curation verbs on the catalog: exact quantile binning as
-    // `QCUT t.col INTO k TIE BY id` — same engine path as text_qcut (the
-    // range-partitioned distributed rank), surfaced through Database so
-    // the stratify step needs no Scala.
-    "lake_sql_qcut" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("graft_docs",
-        LakeDataset.fromDataFrame(s, table(s, dir, "documents")))
-      db.executeSql("QCUT graft_docs.n_chars INTO 10 TIE BY doc_id")
-        .groupBy("bin")
-        .agg(count(lit(1)).as("n_docs"),
-          min(col("n_chars")).as("lo_chars"),
-          max(col("n_chars")).as("hi_chars"))
-        .orderBy("bin")
-    }),
-
-    // `TOPK k PER t.group ORDER BY col DESC TIE BY id` — the per-group
-    // curation cap as a verb (WindowGroupLimit-shaped underneath).
-    "lake_sql_topk" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("graft_orders",
-        LakeDataset.fromDataFrame(s, table(s, dir, "orders")))
-      db.executeSql(
-          "TOPK 3 PER graft_orders.o_orderstatus ORDER BY o_totalprice DESC TIE BY o_orderkey")
-        .select(col("o_orderstatus"), col("o_orderkey"), col("o_totalprice"))
-        .orderBy("o_orderstatus", "o_orderkey")
-    }),
-
-    // Categorical dtype / global string cache (reference enable_string_cache,
-    // src/server.rs:312): a persisted dictionary gives every table encoded
-    // against it the same deterministic string->id mapping. The second table
-    // encodes through a REOPENED cache, so the oracle also proves the
-    // dictionary survives a save/load cycle.
-    "cat_encode" -> ((s, dir) => {
-      val root = Files.createTempDirectory("graft_cat").toString
-      val c1 = StringCache.open(s, root)
-      val seg = c1.encode(
-          table(s, dir, "customer").select(col("c_mktsegment")), "c_mktsegment")
-        .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))
-        .select(lit("seg").as("src"), col("c_mktsegment").as("id"), col("n"))
-      val c2 = StringCache.open(s, root) // fresh handle, state from disk
-      val pri = c2.encode(
-          table(s, dir, "orders").select(col("o_orderpriority")), "o_orderpriority")
-        .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
-        .select(lit("pri").as("src"), col("o_orderpriority").as("id"), col("n"))
-      seg.unionByName(pri).orderBy("src", "id")
-    }),
-
-    // -------------------------------------------------- lake lifecycle (§2.A)
-    // Upsert = full outer join on keys + per-column coalesce(incoming, old);
-    // incoming NULL preserves the old value (l_tax is nulled in the delta and
-    // must survive). Routed per partition×bucket cell.
-    "lake_upsert" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      val ds = LakeDataset.fromDataFrame(s, o,
-        partitionCols = Seq("o_orderstatus"), bucketCols = Seq("o_custkey"), nBuckets = 5)
-      val delta = o.filter(col("o_orderkey") % 7 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") + 1000)
-        .withColumn("o_orderpriority", lit(null).cast("string"))
-      ds.upsert(delta, Seq("o_orderkey"))
-      // n_priority == n proves incoming NULLs preserved the old values.
-      ds.toDF.groupBy("o_orderstatus")
-        .agg(
-          count(lit(1)).as("n"),
-          dsum(col("o_totalprice")).as("sum_price"),
-          count(col("o_orderpriority")).as("n_priority"))
-        .orderBy("o_orderstatus")
-    }),
-
-    "lake_insert" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      val ds = LakeDataset.fromDataFrame(s, o)
-      ds.insert(o.filter(col("o_orderkey") % 10 === 0))
-      ds.toDF.groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("o_orderstatus")
-    }),
-
-    "lake_delete" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      val ds = LakeDataset.fromDataFrame(s, o)
-      ds.delete(o.filter(col("o_orderkey") % 5 === 0), Seq("o_orderkey"))
-      ds.toDF.groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // Multi-table ATOMIC transaction: a committed move of orders <=1000
-    // from ledger A to ledger B, then an ABORTED move of 1000<k<=2000 —
-    // the final per-side aggregate must show the committed move exactly
-    // and no trace of the aborted one (the oracle reconstructs the same
-    // end state relationally).
-    "lake_transaction" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 2000).cast("int"))
-      val db = new Database(s)
-      val a = LakeDataset.fromDataFrame(s, o, partitionCols = Seq("o_batch"))
-      val b = LakeDataset.fromDataFrame(s, o.limit(0))
-      db.register("tx_ledger_a", a)
-      db.register("tx_ledger_b", b)
-      val moved = o.filter(col("o_orderkey") <= 1000)
-      db.transaction(Seq("tx_ledger_a", "tx_ledger_b")) {
-        a.delete(moved.select("o_orderkey"), Seq("o_orderkey"))
-        b.insert(moved)
-      }
-      val aborted = o.filter(col("o_orderkey") > 1000 && col("o_orderkey") <= 2000)
-      try db.transaction(Seq("tx_ledger_a", "tx_ledger_b")) {
-        a.delete(aborted.select("o_orderkey"), Seq("o_orderkey"))
-        b.insert(aborted)
-        throw new RuntimeException("abort: simulate a mid-transaction failure")
-      } catch { case e: RuntimeException if e.getMessage.startsWith("abort:") => () }
-      db.executeSql(
-        s"""SELECT side, o_orderstatus, COUNT(*) AS n,
-           |       ${osum("o_totalprice")} AS total
-           |FROM (SELECT 'a' AS side, o_orderstatus, o_totalprice FROM tx_ledger_a
-           |      UNION ALL
-           |      SELECT 'b' AS side, o_orderstatus, o_totalprice FROM tx_ledger_b)
-           |GROUP BY side, o_orderstatus
-           |ORDER BY side, o_orderstatus""".stripMargin)
-    }),
-
-    // The SQL face of the transaction above: a BEGIN/COMMIT script whose
-    // three statements (move + delete + in-place tag) land atomically, then
-    // an aborted script whose middle statement fails analysis (unknown
-    // table) — the failing script's earlier DELETE must roll back. The
-    // oracle reconstructs the committed-only end state relationally.
-    "lake_sql_transaction" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 2000).cast("int"))
-      val db = new Database(s)
-      db.register("txq_a",
-        LakeDataset.fromDataFrame(s, o, partitionCols = Seq("o_batch")))
-      db.register("txq_b", LakeDataset.fromDataFrame(s, o.limit(0)))
-      db.executeDml(
-        """BEGIN;
-          |INSERT INTO txq_b SELECT * FROM txq_a WHERE o_orderkey <= 1000;
-          |DELETE FROM txq_a WHERE o_orderkey <= 1000;
-          |UPDATE txq_b SET o_orderpriority = 'moved;kept' WHERE o_orderkey <= 500;
-          |COMMIT""".stripMargin)
-      try db.executeDml(
-        """BEGIN;
-          |DELETE FROM txq_a WHERE o_orderkey <= 3000;
-          |INSERT INTO txq_b SELECT * FROM txq_no_such_table;
-          |COMMIT""".stripMargin)
-      catch { case _: Exception => () }
-      db.executeSql(
-        s"""SELECT side, o_orderstatus, COUNT(*) AS n,
-           |       SUM(CASE WHEN o_orderpriority = 'moved;kept' THEN 1 ELSE 0 END) AS tagged,
-           |       ${osum("o_totalprice")} AS total
-           |FROM (SELECT 'a' AS side, o_orderstatus, o_totalprice, o_orderpriority FROM txq_a
-           |      UNION ALL
-           |      SELECT 'b' AS side, o_orderstatus, o_totalprice, o_orderpriority FROM txq_b)
-           |GROUP BY side, o_orderstatus
-           |ORDER BY side, o_orderstatus""".stripMargin)
-    }),
-
-    // SQL DML over the catalog: INSERT INTO / DELETE FROM route to engine
-    // mutations (Spark's own SQL can't write a temp view). The INSERT
-    // reads from the target's own view (snapshot-before-mutate), the
-    // DELETE prunes through the catalog like Scala deleteWhere.
-    "lake_sql_dml" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 6000).cast("int"))
-      val db = new Database(s)
-      db.register("dml_t", LakeDataset.fromDataFrame(s, o, partitionCols = Seq("o_batch")))
-      db.executeDml(
-        """INSERT INTO dml_t
-          |SELECT o_orderkey + 1000000, o_custkey, o_orderstatus, o_totalprice,
-          |       o_orderdate, o_orderpriority,
-          |       CAST(FLOOR((o_orderkey + 1000000) / 6000) AS INT)
-          |FROM dml_t WHERE o_orderkey <= 100""".stripMargin)
-      db.executeDml(
-        "UPDATE dml_t SET o_totalprice = o_totalprice + 5 WHERE o_orderkey <= 50")
-      db.executeDml(
-        "DELETE FROM dml_t WHERE o_orderstatus = 'O' AND o_orderkey BETWEEN 4000 AND 5000")
-      db.executeSql(
-        s"""SELECT COUNT(*) AS n,
-           |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-           |FROM dml_t""".stripMargin)
-    }),
-
-    // Keyed snapshot diff: added/removed/changed/unchanged in ONE
-    // full-outer join (null-safe column compare) — the set-ordered
-    // complement of the change feed for tables with no shared history.
-    "lake_diff" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      val mutated = o.filter(col("o_orderkey") % 7 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 5 === 0, col("o_totalprice") + 1)
-            .otherwise(col("o_totalprice")))
-        .unionByName(o.filter(col("o_orderkey") <= 20)
-          .withColumn("o_orderkey", col("o_orderkey") + 900000))
-      graft.operators.Diff.diffSummary(o, mutated, Seq("o_orderkey"))
-        .orderBy("diff_status")
-    }),
-
-    // Validated ingest (the data contract at the table boundary): clean
-    // rows insert, violating rows come back tagged for quarantine —
-    // never silently dropped, never poisoning the table. The gate reads
-    // the QUARANTINE side; DataQualitySpec pins the accepted side.
-    "lake_validated_ingest" -> ((s, dir) => {
-      import graft.operators.DataQuality
-      val o = table(s, dir, "orders")
-      val ds = LakeDataset.fromDataFrame(s, o.limit(0))
-      val quarantined = DataQuality.insertValidated(ds, o, Seq(
-        DataQuality.InRange("o_totalprice", 0.0, 50000.0),
-        DataQuality.MatchesRegex("o_orderpriority", "^[1-3]-.*$")))
-      quarantined
-        .select(col("o_orderkey"), explode(col("__violations")).as("violation"))
-        .orderBy("o_orderkey", "violation")
-    }),
-
-    // OPTIMIZE as SQL: after an upsert the catalog cannot vouch for
-    // exactness; OPTIMIZE recounts/re-tightens, and the read-back
-    // count/min/max collapses to catalog metadata again — correct AFTER
-    // the mutation (the oracle computes the merged state).
-    "lake_sql_optimize" -> ((s, dir) => {
-      val db = new Database(s)
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 6000).cast("int"))
-      db.register("opt_t", LakeDataset.fromDataFrame(s, o, partitionCols = Seq("o_batch")))
-      db.executeDml(
-        """UPDATE opt_t SET o_totalprice = o_totalprice + 25
-          |WHERE o_orderkey BETWEEN 100 AND 200""".stripMargin)
-      db.executeDml("OPTIMIZE opt_t")
-      db.executeSql(
-        """SELECT COUNT(*) AS cnt, MIN(o_totalprice) AS min_price,
-          |       MAX(o_totalprice) AS max_price
-          |FROM opt_t""".stripMargin)
-    }),
-
-    // Selective compaction: OPTIMIZE ... WHERE collapses ONLY the cells
-    // the predicate prunes to (the petabyte move — compact the churned
-    // partitions, never the whole table); contents must be untouched and
-    // the compacted region's metadata answers return.
-    "lake_sql_optimize_where" -> ((s, dir) => {
-      val db = new Database(s)
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 6000).cast("int"))
-      db.register("optw_t", LakeDataset.fromDataFrame(s, o, partitionCols = Seq("o_batch")))
-      db.executeDml(
-        """UPDATE optw_t SET o_totalprice = o_totalprice + 25
-          |WHERE o_orderkey BETWEEN 100 AND 200""".stripMargin)
-      db.executeDml("OPTIMIZE optw_t WHERE o_batch = 0")
-      db.executeSql(
-        """SELECT o_batch, COUNT(*) AS cnt, MIN(o_totalprice) AS min_price,
-          |       MAX(o_totalprice) AS max_price
-          |FROM optw_t GROUP BY o_batch ORDER BY o_batch""".stripMargin)
-    }),
-
-    // Layout evolution: ALTER TABLE rebuilds the table under a new
-    // partition axis (one pass) and swaps the SQL registration — the
-    // read-back here is a grouped+filtered aggregate the NEW layout
-    // answers from the catalog (cells fold by the new partition values).
-    "lake_relayout" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("rel_t", LakeDataset.fromDataFrame(
-        s, table(s, dir, "orders")
-          .withColumn("o_batch", (col("o_orderkey") / 6000).cast("int")),
-        partitionCols = Seq("o_batch")))
-      db.executeDml("ALTER TABLE rel_t PARTITIONED BY (o_orderstatus)")
-      db.executeSql(
-        """SELECT o_orderstatus, COUNT(*) AS n, MIN(o_orderkey) AS min_key
-          |FROM rel_t WHERE o_orderstatus IN ('F', 'O')
-          |GROUP BY o_orderstatus""".stripMargin)
-    }),
-
-    // MERGE INTO as the SQL verb for the engine upsert (incoming wins per
-    // column on the key join; unmatched rows insert) — the reference's
-    // core mutation reachable from SQL.
-    "lake_sql_merge" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("merge_t",
-        LakeDataset.fromDataFrame(s, table(s, dir, "orders")))
-      db.executeDml(
-        """MERGE INTO merge_t USING (
-          |  SELECT o_orderkey, o_custkey, o_orderstatus,
-          |         o_totalprice + 50 AS o_totalprice, o_orderdate, o_orderpriority
-          |  FROM merge_t WHERE o_orderkey % 17 = 0) s
-          |ON merge_t.o_orderkey = s.o_orderkey
-          |WHEN MATCHED THEN UPDATE SET *
-          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-      db.executeSql(
-        """SELECT COUNT(*) AS n,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-          |FROM merge_t""".stripMargin)
-    }),
-
-    // MERGE as CDC-apply: conditional clauses route each source row to the
-    // FIRST clause (statement order) whose condition holds — delete-flagged
-    // matched rows drop, other matched rows update, unflagged unmatched
-    // rows insert. One statement applies a whole CDC batch.
-    "lake_sql_merge_cdc" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.col
-      val db = new Database(s)
-      val orders = table(s, dir, "orders")
-      db.register("cdc_t", LakeDataset.fromDataFrame(
-        s, orders.filter(col("o_orderkey") % 4 =!= 3),
-        partitionCols = Seq("o_orderstatus")))
-      orders.createOrReplaceTempView("cdc_all")
-      db.executeDml(
-        """MERGE INTO cdc_t USING (
-          |  SELECT o_orderkey, o_custkey, o_orderstatus,
-          |         o_totalprice + 1000 AS o_totalprice, o_orderdate, o_orderpriority,
-          |         CASE WHEN o_orderkey % 5 = 0 THEN 'D' ELSE 'U' END AS op
-          |  FROM cdc_all WHERE o_orderkey % 2 = 0) s
-          |ON cdc_t.o_orderkey = s.o_orderkey
-          |WHEN MATCHED AND s.op = 'D' THEN DELETE
-          |WHEN MATCHED THEN UPDATE SET *
-          |WHEN NOT MATCHED AND s.op <> 'D' THEN INSERT *""".stripMargin)
-      db.executeSql(
-        """SELECT COUNT(*) AS n,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-          |FROM cdc_t""".stripMargin)
-    }),
-
-    // COPY INTO: bulk file ingest into a registered (here: empty) table.
-    "lake_sql_copy" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("copy_t", LakeDataset.fromDataFrame(
-        s, table(s, dir, "orders").limit(0)))
-      db.executeDml(s"COPY INTO copy_t FROM '$dir/orders.parquet'")
-      db.executeSql(
-        """SELECT COUNT(*) AS n,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-          |FROM copy_t""".stripMargin)
-    }),
-
-    // Predicate update (SQL `UPDATE ... SET ... WHERE`): assignment RHS
-    // sees the OLD row, the predicate prunes to catalog-overlapping
-    // cells, row counts (and every unassigned column's stats) stay exact.
-    "lake_update_where" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 6000).cast("int"))
-      val ds = LakeDataset.fromDataFrame(s, o, partitionCols = Seq("o_batch"))
-      ds.updateWhere(col("o_orderkey").between(2000L, 3000L),
-        Seq("o_totalprice" -> (col("o_totalprice") + 100)))
-      ds.toDF.agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-    }),
-
-    // Predicate delete (SQL `DELETE WHERE`): the predicate's conjuncts
-    // prune through the catalog (zones here — the key range hits a few
-    // range cells), so untouched cells keep their plans and tight stats;
-    // rows where the predicate is NULL survive per SQL semantics
-    // (DeleteWhereSpec pins that and the cell-touch count).
-    "lake_delete_where" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 6000).cast("int"))
-      val ds = LakeDataset.fromDataFrame(s, o, partitionCols = Seq("o_batch"))
-      ds.deleteWhere(col("o_orderkey").between(2000L, 3000L) &&
-        col("o_orderstatus") === "F")
-      ds.toDF.agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-    }),
-
-    // A delta that CHANGES the partition value of existing keys: per-cell
-    // routing alone would duplicate those keys (the old row would survive in
-    // its old cell). The migration probe detects it and the merge takes the
-    // global join; n stays constant and every moved key lands exactly once.
-    "lake_migrating_upsert" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      val ds = LakeDataset.fromDataFrame(s, o, partitionCols = Seq("o_orderstatus"))
-      val delta = o.filter(col("o_orderkey") % 17 === 0)
-        .withColumn("o_orderstatus", lit("F"))
-        .withColumn("o_totalprice", col("o_totalprice") + 50)
-      ds.upsert(delta, Seq("o_orderkey"))
-      ds.toDF.groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // Located delete on a table with per-part key BLOOM filters: the keys
-    // are hash-scattered across partitions, so zone ranges cannot skip any
-    // part — the bloom membership probe is what narrows the located-delete
-    // scan. The oracle proves the pruned probe deletes exactly the right
-    // rows (a false "provably absent" would leave survivors and mismatch).
-    "lake_bloom_pruning" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      val ds = LakeDataset.fromDataFrame(s, o,
-        partitionCols = Seq("o_orderstatus"), bloomCols = Seq("o_orderkey"))
-      ds.delete(o.filter(col("o_orderkey") % 1000 === 0).select("o_orderkey"),
-        Seq("o_orderkey"))
-      ds.toDF.groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // Delete by bare keys on a partitioned+bucketed table: the key rows name
-    // neither partition nor bucket, so the engine first LOCATES the cells
-    // holding the keys (projected key+cell scan) and anti-joins only those.
-    "lake_located_delete" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      val ds = LakeDataset.fromDataFrame(s, o,
-        partitionCols = Seq("o_orderstatus"), bucketCols = Seq("o_custkey"), nBuckets = 5)
-      ds.delete(o.filter(col("o_orderkey") % 6 === 0).select("o_orderkey"), Seq("o_orderkey"))
-      ds.toDF.groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("o_orderstatus")
-    }),
-
-    "lake_storage_roundtrip" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-      val root = Files.createTempDirectory("graft_rt").toString
-      val ds = LakeDataset.fromDataFrame(s, li,
-        partitionCols = Seq("l_returnflag"), bucketCols = Seq("l_partkey"),
-        nBuckets = 5, storage = Some(graft.model.StorageSpec(root)))
-      ds.toStorage()
-      val back = LakeDataset.fromStorage(s, root)
-      back.toDF.groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("total"))
-        .orderBy("l_returnflag")
-    }),
-
-    // VACUUM: a crashed writer's leftover cell would be walked back into
-    // the table by the next load (discovery trusts the layout) — the
-    // writer's catalog deletes it. The oracle is the CLEAN aggregate, so
-    // an unvacuumed (or over-vacuumed) root fails the hash.
-    "lake_vacuum_orphans" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      val root = Files.createTempDirectory("graft_vac_gate").toString
-      val ds = LakeDataset.fromDataFrame(s, o,
-        partitionCols = Seq("o_orderstatus"),
-        storage = Some(graft.model.StorageSpec(root)))
-      ds.toStorage()
-      o.limit(100).drop("o_orderstatus")
-        .withColumn("o_totalprice", col("o_totalprice") * 1000)
-        .write.parquet(java.nio.file.Paths.get(root, "o_orderstatus=CRASHED").toString)
-      ds.vacuumOrphans()
-      LakeDataset.fromStorage(s, root).toDF
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // Same lifecycle through the Arrow IPC FILE format (reference
-    // storage.rs Format::Ipc) — the graft `arrowipc` FileFormat writes
-    // zstd-compressed .arrow stream files per part (pyarrow-readable;
-    // ArrowIpcFormatSpec round-trips them cross-tool).
-    "lake_ipc_roundtrip" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-      val root = Files.createTempDirectory("graft_rt_ipc").toString
-      val ds = LakeDataset.fromDataFrame(s, li,
-        partitionCols = Seq("l_returnflag"), bucketCols = Seq("l_partkey"),
-        nBuckets = 5,
-        storage = Some(graft.model.StorageSpec(root, format = "arrowipc",
-          compression = "zstd")))
-      ds.toStorage()
-      val back = LakeDataset.fromStorage(s, root)
-      back.toDF.groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("total"))
-        .orderBy("l_returnflag")
-    }),
-
-    "lake_part_pruning" -> ((s, dir) => {
-      Fixtures.lineitemLake(s, dir)
-        .prunedDF(Map("l_returnflag" -> "R"))
-        .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
-    }),
-
-    "lake_materialize" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val ds = LakeDataset.fromDataFrame(s, ev, partitionCols = Seq("event_type"))
-      ds.insert(ev.filter(col("event_id") % 13 === 0))
-      ds.materialize() // collapse plans; counters refresh (reference collect)
-      ds.toDF.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), dsum(col("value"), 4).as("total_value"))
-        .orderBy("event_type")
-    }),
-
-    // End-to-end through the service verbs (reference proto/db.proto:20-35):
-    // CreateTable -> UpsertTable (chunked) -> MaterializeTable -> SelectIpc.
-    "lake_server_flow" -> ((s, dir) => {
-      import graft.lake.LakeServer
-      import graft.model.TableName
-      val srv = new LakeServer(s)
-      val o = table(s, dir, "orders")
-      val t = TableName("public", "graft_srv_orders")
-      srv.createTable(t, Iterator(o),
-        partitions = Seq("o_orderstatus"), buckets = Seq("o_custkey"))
-      val delta = o.filter(col("o_orderkey") % 9 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") + 500)
-      // two chunks exercise the micro-batcher buffering + final flush
-      srv.upsertTable(t, Seq("o_orderkey"),
-        Iterator(delta.filter(col("o_orderkey") % 2 === 0),
-          delta.filter(col("o_orderkey") % 2 =!= 0)))
-      srv.materializeTable(t)
-      srv.select(
-        """SELECT o_orderstatus, COUNT(*) AS n,
-          |  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-          |FROM graft_srv_orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
-    }),
-
-    // REAL Structured Streaming ingest through the correctness gate: two
-    // deterministic MemoryStream micro-batches of delta keys run through a
-    // Native bounded-state streaming dedup under the oracle: document ids
-    // arrive with cross-batch replays and in-batch duplicates; Spark's
-    // dropDuplicatesWithinWatermark (StreamingIngest.dedupWithinWatermark)
-    // must pass each id exactly once into the lake, so the final content
-    // joined back to documents is the plain distinct set — any leaked
-    // duplicate doubles a count and fails the hash.
-    "stream_dedup" -> ((s, dir) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val docs = table(s, dir, "documents")
-      val root = Files.createTempDirectory("graft_sdedup").toString
-      val ds = LakeDataset.forStorage(s, partitionCols = Nil, bucketCols = Nil,
-        nBuckets = 1, bloomCols = Nil,
-        storage = graft.model.StorageSpec(root))
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp)]
-      def ts(m: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 10:$m%02d:00")
-      val deduped = graft.streaming.StreamingIngest.dedupWithinWatermark(
-        mem.toDF().toDF("doc_id", "ts"), Seq("doc_id"), "ts", "10 minutes")
-      val ids = docs.select("doc_id").as[Long].collect().sorted
-      require(ids.length <= 100000, s"gate fixture grew: ${ids.length} ids")
-      // The stateful dedup keys by doc_id over spark.sql.shuffle.partitions
-      // STATE STORES, fixed at query start; 32 stores × per-batch commit
-      // dominates this small stream's wall clock (measured ~2×). The store
-      // count DERIVES from the stream's key volume (streamStatePartitions —
-      // 4 at this fixture's size, scaling with keys at 100 TB); the session
-      // conf restores after.
-      val prevConfs = trimStreamSession(s, ids.length.toLong)
-      // The streaming engine clones the session (capturing the conf) on the
-      // stream thread AFTER start() returns, so the conf must stay trimmed
-      // until the query has stopped — restoring right after start() races
-      // the clone and the store trim silently may not apply. (Sequential
-      // bench/verify execution is assumed: the override is session-global
-      // while the stream runs.)
-      try {
-        val q = deduped.writeStream.foreachBatch(
-          (b: DataFrame, _: Long) => ds.insert(b.select("doc_id"))).start()
-        try {
-          mem.addData(ids.filter(_ % 3 == 0).map(i => (i, ts(0))).toSeq: _*)
-          q.processAllAvailable()
-          // cross-batch replay of batch 1 + fresh ids
-          mem.addData(ids.filter(_ % 3 <= 1).map(i => (i, ts(2))).toSeq: _*)
-          q.processAllAvailable()
-          // in-batch duplicates of the remaining ids
-          val rest = ids.filter(_ % 3 == 2)
-          mem.addData((rest ++ rest).map(i => (i, ts(4))).toSeq: _*)
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally restoreStreamSession(s, prevConfs)
-      ds.toDF.join(docs, "doc_id")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
-        .orderBy("lang")
-    }),
-
-    // STREAM-STREAM interval join (impression→click): every event streams
-    // on the left; a delayed click stream (event_id % 3 == 0, delayed by
-    // event_id % 7 minutes) arrives in a LATER micro-batch, so every match
-    // crosses batch boundaries through the join state. Clicks delayed past
-    // the 5-minute window must NOT match — the oracle recomputes the
-    // interval join relationally over the same derived click table.
-    "stream_interval_join" -> ((s, dir) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val ev = table(s, dir, "events")
-      // The driver array is the harness's stream SOURCE, not the operator;
-      // it must not grow O(table) silently. Epoch-micros longs, NOT
-      // java.sql.Timestamp: Timestamp arithmetic via getTime drops the
-      // sub-millisecond micros and a delay-0 click would land strictly
-      // before its impression.
-      val rows = ev.select(col("event_id"), unix_micros(col("ts")))
-        .as[(Long, Long)].collect()
-      require(rows.length <= 200000, s"gate fixture grew: ${rows.length} events")
-      val memA = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-      val memB = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-      val joined = graft.streaming.StreamingIngest.intervalJoin(
-        memA.toDF().toDF("event_id", "us_a")
-          .select(col("event_id"), timestamp_micros(col("us_a")).as("ts_a")),
-        memB.toDF().toDF("evt_b", "us_b")
-          .select(col("evt_b"), timestamp_micros(col("us_b")).as("ts_b")),
-        "event_id", "evt_b", "ts_a", "ts_b", "5 minutes", "10 minutes")
-      val root = Files.createTempDirectory("graft_ssj").toString
-      val ds = LakeDataset.forStorage(s, partitionCols = Nil, bucketCols = Nil,
-        nBuckets = 1, bloomCols = Nil, storage = graft.model.StorageSpec(root))
-      // Same state-store trim as stream_dedup: 4 stores carry this state
-      // volume; the conf restores only after the stream has stopped (the
-      // engine clones the session conf asynchronously on the stream thread).
-      val prevConfs = trimStreamSession(s, rows.length.toLong)
-      try {
-        val q = joined.writeStream.foreachBatch(
-          (b: DataFrame, _: Long) =>
-            ds.insert(b.select("event_id", "ts_a", "ts_b"))).start()
-        try {
-          memA.addData(rows.toSeq: _*)
-          q.processAllAvailable()
-          val clicks = rows.filter(_._1 % 3 == 0).map { case (id, us) =>
-            (id, us + (id % 7) * 60000000L)
-          }
-          memB.addData(clicks.toSeq: _*)
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally restoreStreamSession(s, prevConfs)
-      ds.toDF.join(ev, "event_id")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(((unix_timestamp(col("ts_b")) - unix_timestamp(col("ts_a"))) / 60)
-            .cast("long")).as("total_delay_min"))
-        .orderBy("event_type")
-    }),
-
-    // STREAMING SESSION WINDOWS: gap-based sessions through Spark's native
-    // session_window state store, APPEND mode — a session emits only once
-    // the watermark proves no event can still extend it. Two far-future
-    // sentinel batches close every real session (first advances the
-    // watermark, second flushes under it; the sentinels' own sessions are
-    // filtered by key). The emitted set then equals the batch
-    // sessionization of the final events — one DuckDB lag/cumsum oracle.
-    // STREAMING rolling anomaly flags — the stream twin of ts_anomaly:
-    // same integer predicate over a per-key ring of the last 5
-    // observations (flatMapGroupsWithState, state O(keys·N)), fed the same
-    // series in two event-time-ordered epochs; the final flag table
-    // hash-matches ts_anomaly's HUGEINT oracle bit-for-bit.
-    "stream_anomaly" -> ((s, dir) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      import graft.streaming.StreamingIngest
-      val series = dailyPurchases(s, dir)
-        .select(col("user_id"), unix_micros(col("day")), col("v_ticks"))
-        .as[(Long, Long, Long)].collect().sortBy(r => (r._2, r._1))
-      require(series.length <= 200000, s"gate fixture grew: ${series.length} points")
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      val flags = StreamingIngest.anomalyFlags(
-        mem.toDS().map { case (k, us, v) => StreamingIngest.SeriesPoint(k, us, v) },
-        window = 5, kNum = 2, kDen = 1)
-      val root = Files.createTempDirectory("graft_sanom").toString
-      val ds = LakeDataset.forStorage(s, partitionCols = Nil, bucketCols = Nil,
-        nBuckets = 1, bloomCols = Nil, storage = graft.model.StorageSpec(root))
-      // Same state-store trim as stream_dedup: the per-key ring keys over
-      // spark.sql.shuffle.partitions STATE STORES fixed at query start, and
-      // 32 stores x per-epoch commit dominates this small stream's wall
-      // clock. 4 stores carry the same state; the conf restores only after
-      // the stream has stopped (the engine clones the session conf
-      // asynchronously on the stream thread).
-      val prevConfs = trimStreamSession(s, series.length.toLong)
-      try {
-        val q = flags.toDF.writeStream.outputMode("append").foreachBatch(
-          (b: DataFrame, _: Long) => ds.insert(b)).start()
-        try {
-          // Global event-time order makes every key monotone across epochs —
-          // the contract the stateful ring requires.
-          val (h1, h2) = series.splitAt(series.length / 2)
-          mem.addData(h1.toSeq: _*)
-          q.processAllAvailable()
-          mem.addData(h2.toSeq: _*)
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally restoreStreamSession(s, prevConfs)
-      ds.toDF.select(col("key").as("user_id"),
-          timestamp_micros(col("ts_us")).as("day"),
-          col("v").as("v_ticks"), col("anomaly"))
-        .orderBy("user_id", "day")
-    }),
-
-    "stream_session_window" -> ((s, dir) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val ev = table(s, dir, "events").filter(col("user_id") % 20 === 0)
-      val rows = ev.select(col("user_id"), unix_micros(col("ts")), col("value"))
-        .as[(Long, Long, Double)].collect().sortBy(_._2)
-      require(rows.length <= 200000, s"gate fixture grew: ${rows.length} events")
-      val maxUs = rows.map(_._2).max
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Double)]
-      val sess = graft.streaming.StreamingIngest.sessionWindows(
-        mem.toDF().toDF("user_id", "us", "value")
-          .select(col("user_id"), timestamp_micros(col("us")).as("ts"), col("value")),
-        "ts", "user_id", "value", gap = "30 minutes", watermark = "1 hour")
-      val root = Files.createTempDirectory("graft_ssw").toString
-      val ds = LakeDataset.forStorage(s, partitionCols = Nil, bucketCols = Nil,
-        nBuckets = 1, bloomCols = Nil, storage = graft.model.StorageSpec(root))
-      val prevConfs = trimStreamSession(s, rows.length.toLong)
-      try {
-        val q = sess.writeStream.outputMode("append").foreachBatch(
-          (b: DataFrame, _: Long) =>
-            ds.insert(b.select("sess_start", "user_id", "n", "total_value"))).start()
-        try {
-          val (h1, h2) = rows.splitAt(rows.length / 2)
-          mem.addData(h1.toSeq: _*)
-          q.processAllAvailable()
-          mem.addData(h2.toSeq: _*)
-          q.processAllAvailable()
-          mem.addData((-1L, maxUs + 86400000000L, 0.0))
-          q.processAllAvailable()
-          mem.addData((-1L, maxUs + 2 * 86400000000L, 0.0))
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally restoreStreamSession(s, prevConfs)
-      ds.toDF.filter(col("user_id") >= 0)
-        .select(unix_micros(col("sess_start")).as("sess_start_us"),
-          col("user_id"), col("n"), col("total_value"))
-        .orderBy("user_id", "sess_start_us")
-    }),
-
-    // LEFT-OUTER stream-stream join: an impression with no in-window click
-    // must null-extend — but only once the watermark PROVES no match can
-    // still arrive. Two far-future sentinel batches drive the watermark
-    // past all data (the first advances it, the second runs a batch under
-    // it so the evicted unmatched rows emit); the oracle is the relational
-    // left join with matched/unmatched splits.
-    "stream_outer_join" -> ((s, dir) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val ev = table(s, dir, "events")
-      val rows = ev.select(col("event_id"), unix_micros(col("ts")))
-        .as[(Long, Long)].collect()
-      require(rows.length <= 200000, s"gate fixture grew: ${rows.length} events")
-      val maxUs = rows.map(_._2).max
-      val memA = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-      val memB = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-      val joined = graft.streaming.StreamingIngest.intervalJoin(
-        memA.toDF().toDF("event_id", "us_a")
-          .select(col("event_id"), timestamp_micros(col("us_a")).as("ts_a")),
-        memB.toDF().toDF("evt_b", "us_b")
-          .select(col("evt_b"), timestamp_micros(col("us_b")).as("ts_b")),
-        "event_id", "evt_b", "ts_a", "ts_b", "5 minutes", "10 minutes",
-        joinType = "leftOuter")
-      val root = Files.createTempDirectory("graft_ssoj").toString
-      val ds = LakeDataset.forStorage(s, partitionCols = Nil, bucketCols = Nil,
-        nBuckets = 1, bloomCols = Nil, storage = graft.model.StorageSpec(root))
-      val prevConfs = trimStreamSession(s, rows.length.toLong)
-      try {
-        val q = joined.writeStream.foreachBatch(
-          (b: DataFrame, _: Long) =>
-            ds.insert(b.select("event_id", "ts_a", "ts_b"))).start()
-        try {
-          memA.addData(rows.toSeq: _*)
-          q.processAllAvailable()
-          val clicks = rows.filter(_._1 % 3 == 0).map { case (id, us) =>
-            (id, us + (id % 7) * 60000000L)
-          }
-          memB.addData(clicks.toSeq: _*)
-          q.processAllAvailable()
-          val day = 86400000000L
-          memA.addData((-1L, maxUs + day)); memB.addData((-1L, maxUs + day))
-          q.processAllAvailable()
-          memA.addData((-2L, maxUs + 2 * day)); memB.addData((-2L, maxUs + 2 * day))
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally restoreStreamSession(s, prevConfs)
-      ds.toDF.filter(col("event_id") >= 0)
-        .join(ev, "event_id")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_total"),
-          count(col("ts_b")).as("n_matched"),
-          sum(when(col("ts_b").isNull, 1L).otherwise(0L)).as("n_unmatched"),
-          sum(((unix_timestamp(col("ts_b")) - unix_timestamp(col("ts_a"))) / 60)
-            .cast("long")).as("total_delay_min"))
-        .orderBy("event_type")
-    }),
-
-    // streaming query whose foreachBatch applies the SAME upsert path the
-    // batch API uses (StreamingIngest.upsertBatches shape); the merged table
-    // state is SQL-expressible.
-    "stream_ingest_upsert" -> ((s, dir) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val o = table(s, dir, "orders")
-      val ds = LakeDataset.fromDataFrame(s, o, partitionCols = Seq("o_orderstatus"))
-      // Delta keys for the MemoryStream: a BOUNDED, deterministic collect —
-      // the driver array is the harness's stream source, not the operator,
-      // and must not grow O(table). The cap is a loud FAILURE, not a silent
-      // limit(): truncating would quietly diverge from the oracle's
-      // unbounded %13 predicate at sf >= 1 (~115k keys/class there).
-      def streamKeys(m: Int): Seq[Long] = {
-        val cap = 1000000
-        val keys = o.select("o_orderkey").filter(col("o_orderkey") % 13 === m)
-          .orderBy("o_orderkey").limit(cap + 1).as[Long].collect().toSeq
-        require(keys.length <= cap,
-          s"stream_ingest_upsert fixture: > $cap delta keys at this scale " +
-            "factor; the MemoryStream harness (driver-resident by design) " +
-            "stops here rather than silently diverge from the oracle")
-        keys
-      }
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val apply: (DataFrame, Long) => Unit = (batch, _) => {
-        val delta = o.join(broadcast(batch), o("o_orderkey") === col("delta_key"))
-          .drop("delta_key")
-          .withColumn("o_totalprice", col("o_totalprice") + 250)
-        ds.upsert(delta, Seq("o_orderkey"))
-      }
-      val q = mem.toDF().toDF("delta_key").writeStream.foreachBatch(apply).start()
-      try {
-        mem.addData(streamKeys(1))
-        q.processAllAvailable()
-        mem.addData(streamKeys(2))
-        q.processAllAvailable()
-      } finally q.stop()
-      ds.toDF.groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // STREAMING materialized-view maintenance: inserts arrive as a stream
-    // through the CATALOG sink (Database.streamInsertSink), and every
-    // micro-batch folds into the registered MV at O(batch)+O(groups) — the
-    // MV is never rebuilt and the base is never rescanned. The final answer
-    // is read FROM THE MV STATE; the oracle recomputes the group-by over
-    // everything the base + stream delivered, so a missed or double-folded
-    // batch hash-mismatches. (The Delta-Live-Tables composition: the batch
-    // MV gate is lake_sql_matview, the batch fold spec is MatViewSpec,
-    // this gate is the streaming closure.)
-    "stream_mv_maintenance" -> ((s, dir) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val o = table(s, dir, "orders")
-      // Base table holds o_orderkey % 5 in {0, 3, 4}; epochs stream in
-      // %5==1 then %5==2, so the final state is exactly the full table.
-      val base = o.filter(col("o_orderkey") % 5 === 0 ||
-        col("o_orderkey") % 5 >= 3)
-      val ds = LakeDataset.fromDataFrame(s, base,
-        partitionCols = Seq("o_orderstatus"))
-      val db = new Database(s)
-      db.register("mvs_t", ds)
-      db.executeDml(
-        """CREATE MATERIALIZED VIEW mvs_v AS
-          |SELECT o_orderstatus, COUNT(*) AS n, SUM(o_totalprice) AS total
-          |FROM mvs_t GROUP BY o_orderstatus""".stripMargin)
-      // Delta keys for the MemoryStream: bounded deterministic collect —
-      // the driver array is the harness's stream source, not the operator
-      // (same loud-cap contract as stream_ingest_upsert).
-      def streamKeys(m: Int): Seq[Long] = {
-        val cap = 1000000
-        val keys = o.select("o_orderkey").filter(col("o_orderkey") % 5 === m)
-          .orderBy("o_orderkey").limit(cap + 1).as[Long].collect().toSeq
-        require(keys.length <= cap,
-          s"stream_mv_maintenance fixture: > $cap delta keys at this " +
-            "scale factor; the MemoryStream harness stops here rather " +
-            "than silently diverge from the oracle")
-        keys
-      }
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val sink = db.streamInsertSink("mvs_t")
-      val apply: (DataFrame, Long) => Unit = (batch, id) =>
-        sink(o.join(broadcast(batch), o("o_orderkey") === col("delta_key"))
-          .drop("delta_key"), id)
-      val q = mem.toDF().toDF("delta_key").writeStream.foreachBatch(apply).start()
-      try {
-        mem.addData(streamKeys(1))
-        q.processAllAvailable()
-        mem.addData(streamKeys(2))
-        q.processAllAvailable()
-      } finally q.stop()
-      s.sql(
-        """SELECT o_orderstatus, n, CAST(total AS DOUBLE) AS total
-          |FROM mvs_v ORDER BY o_orderstatus""".stripMargin)
-    }),
-
-    // STREAMING join-MV maintenance: CDC upserts stream into the FACT side
-    // of a registered `a JOIN b USING (k)` materialized view through the
-    // catalog's upsert sink — epoch 1 inserts new orders, epoch 2 rewrites
-    // existing ones INCLUDING a join-key move (custkey+1), and every batch
-    // maintains the view by recomputing only its touched join keys (the
-    // same targeted path the SQL verbs use; never a rebuild, never a base
-    // rescan). The answer is read FROM THE VIEW STATE, so a missed batch,
-    // a double fold, or mishandled key movement hash-mismatches the
-    // oracle's one-shot join over everything delivered.
-    "stream_mv_join" -> ((s, dir) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val o = table(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey").as("custkey"),
-          col("o_totalprice"))
-      val db = new Database(s)
-      db.register("mvjs_f", LakeDataset.fromDataFrame(
-        s, o.filter(col("o_orderkey") % 4 < 2)))
-      db.register("mvjs_d", LakeDataset.fromDataFrame(
-        s, table(s, dir, "customer")
-          .select(col("c_custkey").as("custkey"), col("c_name"))))
-      db.executeDml(
-        """CREATE MATERIALIZED VIEW mvjs AS
-          |SELECT custkey, o_orderkey, o_totalprice, c_name
-          |FROM mvjs_f JOIN mvjs_d USING (custkey)""".stripMargin)
-      def epochKeys(pred: Column): Seq[Long] = {
-        val cap = 1000000
-        val keys = o.select("o_orderkey").filter(pred)
-          .orderBy("o_orderkey").limit(cap + 1).as[Long].collect().toSeq
-        require(keys.length <= cap,
-          s"stream_mv_join fixture: > $cap delta keys at this scale " +
-            "factor; the MemoryStream harness stops here rather than " +
-            "silently diverge from the oracle")
-        keys
-      }
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val sink = db.streamUpsertSink("mvjs_f", Seq("o_orderkey"))
-      val apply: (DataFrame, Long) => Unit = (batch, id) => {
-        // Epoch 2's keys (%8==1) rewrite price AND custkey — a CDC image
-        // that moves rows to another join key; epoch 1's insert as-is.
-        val delta = o.join(broadcast(batch), o("o_orderkey") === col("delta_key"))
-          .drop("delta_key")
-          .withColumn("o_totalprice",
-            when(col("o_orderkey") % 8 === 1, col("o_totalprice") + 250)
-              .otherwise(col("o_totalprice")))
-          .withColumn("custkey",
-            when(col("o_orderkey") % 8 === 1, col("custkey") + 1)
-              .otherwise(col("custkey")))
-          .select("o_orderkey", "custkey", "o_totalprice")
-        sink(delta, id)
-      }
-      val q = mem.toDF().toDF("delta_key").writeStream.foreachBatch(apply).start()
-      try {
-        mem.addData(epochKeys(col("o_orderkey") % 4 === 2))
-        q.processAllAvailable()
-        mem.addData(epochKeys(col("o_orderkey") % 8 === 1))
-        q.processAllAvailable()
-      } finally q.stop()
-      assert(db.mvRebuildCount("mvjs") == 0,
-        "stream_mv_join: maintenance must stay incremental")
-      s.sql("SELECT * FROM mvjs")
-    }),
-
-    // STREAMING heavy hitters: the stream twin of text_heavy_terms. Each
-    // micro-batch of documents explodes to terms and folds its per-term
-    // counts into a MaterializedAgg keyed by term — O(batch)+O(vocab per
-    // merge), the corpus is never rescanned — and the final top-15 is read
-    // from the VIEW STATE with the batch operator's exact (cnt DESC, value)
-    // order. The oracle is the one-shot count over the whole corpus, so a
-    // dropped batch, a double fold, or a tie-order drift hash-mismatches.
-    "stream_heavy_terms" -> ((s, dir) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val docs = table(s, dir, "documents")
-      val counter = MaterializedAgg.build(
-        docs.filter(lit(false))
-          .select(explode(split(trim(col("text")), " ")).as("w")),
-        Seq("w"), Seq(MaterializedAgg.count("cnt")))
-      def epochIds(m: Long): Seq[Long] = {
-        val cap = 1000000
-        val ids = docs.select("doc_id").filter(col("doc_id") % 2 === m)
-          .orderBy("doc_id").limit(cap + 1).as[Long].collect().toSeq
-        require(ids.length <= cap,
-          s"stream_heavy_terms fixture: > $cap doc ids at this scale " +
-            "factor; the MemoryStream harness stops here rather than " +
-            "silently diverge from the oracle")
-        ids
-      }
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val apply: (DataFrame, Long) => Unit = (batch, _) =>
-        counter.applyInsert(
-          docs.join(broadcast(batch), docs("doc_id") === col("delta_id"))
-            .select(explode(split(trim(col("text")), " ")).as("w")))
-      val q = mem.toDF().toDF("delta_id").writeStream.foreachBatch(apply).start()
-      try {
-        mem.addData(epochIds(0L))
-        q.processAllAvailable()
-        mem.addData(epochIds(1L))
-        q.processAllAvailable()
-      } finally q.stop()
-      counter.state.select(col("w").as("value"), col("cnt"))
-        .orderBy(desc("cnt"), asc("value")).limit(15)
-    }),
-
-    // EXACTLY-ONCE streaming append: epoch-partitioned cells, overwrite on
-    // replay (StreamingIngest.exactlyOnceInsert scaladoc). The query
-    // re-delivers epoch 0 after the stream — the oracle (each slice once)
-    // fails if the replay duplicates OR if a batch is lost.
-    "stream_exactly_once" -> ((s, dir) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      import graft.streaming.StreamingIngest
-      val o = table(s, dir, "orders")
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-      val root = Files.createTempDirectory("graft_eo_gate").toString
-      val ds = LakeDataset.forStorage(s,
-        partitionCols = Seq(StreamingIngest.EpochCol), bucketCols = Nil,
-        nBuckets = 1, bloomCols = Nil,
-        storage = graft.model.StorageSpec(root))
-      val sink = StreamingIngest.exactlyOnceInsert(ds)
-      def slice(m: Long) = o.filter(col("o_orderkey") % 3 === m)
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val apply: (DataFrame, Long) => Unit = (batch, e) => {
-        val ms = batch.as[Long].collect()
-        require(ms.length == 1)
-        sink(slice(ms.head), e)
-      }
-      val q = mem.toDF().writeStream.foreachBatch(apply).start()
-      try {
-        mem.addData(0L); q.processAllAvailable()
-        mem.addData(1L); q.processAllAvailable()
-      } finally q.stop()
-      // Redelivered epoch (crash after sink, before checkpoint commit).
-      sink(slice(0L), 0L)
-      LakeDataset.fromStorage(s, root).toDF
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // Bucket pruning: an equality predicate on the bucket column scans only
-    // the one matching bucket cell per partition (5x less data at 5 buckets).
-    // As-of join (training-pipeline operator Spark lacks natively): every
-    // event picks up the latest at-or-before budget snapshot of its user.
-    // One shuffle+sort — no inequality-join blowup.
-    "asof_join" -> ((s, dir) => {
-      import graft.operators.Joins
-      val ev = table(s, dir, "events")
-      val snaps = ev.filter(col("event_id") % 10 === 0)
-        .select(col("user_id"), col("ts").as("snap_ts"), col("value").as("budget"))
-      Joins.asofJoin(
-          ev.select("event_id", "user_id", "ts", "value"),
-          snaps, Seq("user_id"), "ts", "snap_ts", Seq("budget"))
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"), col("value"), col("budget"))
-        .orderBy("event_id")
-    }),
-
-    // As-of FORWARD (polars strategy="forward"): earliest snapshot
-    // at-or-after each event — the same one-shuffle running-last plan over
-    // descending time.
-    "asof_join_forward" -> ((s, dir) => {
-      import graft.operators.Joins
-      val ev = table(s, dir, "events")
-      val snaps = ev.filter(col("event_id") % 10 === 0)
-        .select(col("user_id"), col("ts").as("snap_ts"), col("value").as("budget"))
-      Joins.asofJoin(
-          ev.select("event_id", "user_id", "ts", "value"),
-          snaps, Seq("user_id"), "ts", "snap_ts", Seq("budget"),
-          strategy = "forward")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"), col("value"), col("budget"))
-        .orderBy("event_id")
-    }),
-
-    // As-of NEAREST (polars strategy="nearest"): closer of the preceding
-    // and following snapshots, ties to preceding — both candidate frames
-    // ride ONE sorted shuffle.
-    "asof_join_nearest" -> ((s, dir) => {
-      import graft.operators.Joins
-      val ev = table(s, dir, "events")
-      val snaps = ev.filter(col("event_id") % 10 === 0)
-        .select(col("user_id"), col("ts").as("snap_ts"), col("value").as("budget"))
-      Joins.asofJoin(
-          ev.select("event_id", "user_id", "ts", "value"),
-          snaps, Seq("user_id"), "ts", "snap_ts", Seq("budget"),
-          strategy = "nearest")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"), col("value"), col("budget"))
-        .orderBy("event_id")
-    }),
-
-    // As-of with TOLERANCE (polars tolerance=): a nearest-preceding
-    // snapshot farther than 2 days is NO match — the whole payload nulls,
-    // left rows survive.
-    "asof_join_tolerance" -> ((s, dir) => {
-      import graft.operators.Joins
-      val ev = table(s, dir, "events")
-      val snaps = ev.filter(col("event_id") % 10 === 0)
-        .select(col("user_id"), col("ts").as("snap_ts"), col("value").as("budget"))
-      Joins.asofJoin(
-          ev.select("event_id", "user_id", "ts", "value"),
-          snaps, Seq("user_id"), "ts", "snap_ts", Seq("budget"),
-          tolerance = Some(expr("INTERVAL 2 DAYS")))
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"), col("value"), col("budget"))
-        .orderBy("event_id")
-    }),
-
-    // Range join (grid-binned equi-join, not a nested-loop inequality join):
-    // events matched to same-user value bands around budget snapshots.
-    "range_join" -> ((s, dir) => {
-      import graft.operators.Joins
-      val ev = table(s, dir, "events")
-      val bands = ev.filter(col("event_id") % 10 === 0)
-        .select(col("event_id").as("snap_id"), col("user_id"),
-          (col("value") - 10).as("lo"), (col("value") + 10).as("hi"))
-      Joins.rangeJoin(
-          ev.select("event_id", "user_id", "value"), "value",
-          bands, "lo", "hi", keys = Seq("user_id"), binSize = 16L)
-        .select("event_id", "snap_id", "user_id", "value", "lo", "hi")
-        .orderBy("event_id", "snap_id")
-    }),
-
-    // Co-located bucket join (SURVEY §4 "bucketed layout" row): lineitem and
-    // part are hash-bucketed on the join key with the same bucket count, so
-    // the join runs bucket-by-bucket — each sub-join sees 1/5 of either side.
-    "lake_colocated_join" -> ((s, dir) => {
-      import graft.operators.Joins
-      Joins.coLocatedJoin(
-          Fixtures.lineitemLake(s, dir), Fixtures.partLake(s, dir),
-          "l_partkey", "p_partkey")
-        .groupBy("p_brand")
-        .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("revenue"))
-        .orderBy("p_brand")
-    }),
-
-    // Zone-map data skipping (engine extension beyond SURVEY §4's manual
-    // partition layout): per-part [min,max] catalog statistics answer which
-    // cells a range predicate can touch BEFORE planning — only those parts
-    // are scanned; the rest never enter the plan.
-    "lake_zone_pruning" -> ((s, dir) => {
-      Fixtures.ordersZoneLake(s, dir)
-        .zoneRangePrunedDF("o_orderkey", 1000L, 2000L)
-        .filter(col("o_orderkey").between(1000L, 2000L))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-    }),
-
-    // Deterministic shard export: documents written as shard=K parquet
-    // dirs (assignment + intra-shard order are pure functions of the
-    // data), summarized from the RE-READ files — the oracle checks the
-    // persisted assignment, not the pre-write plan. Residue mode here
-    // (SQL-recomputable); ExportSpec covers the hashed mode.
-    "export_shards" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_export").toString
-      graft.operators.Export
-        .shardedWrite(table(s, dir, "documents"), "doc_id", 8, root, hashed = false)
-        // partition-dir values read back as int; the oracle's % is bigint
-        .groupBy(col("shard").cast("long").as("shard"))
-        .agg(count(lit(1)).as("docs"), sum(col("n_chars")).as("chars"))
-    }),
-
-    // The same deterministic shard layout as JSONL (format("json") writes
-    // one object per line) — the standard training-data interchange shape;
-    // the aggregate over the RE-READ files proves the export lossless.
-    "export_shards_jsonl" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_export_jl").toString
-      graft.operators.Export
-        .shardedWrite(table(s, dir, "documents"), "doc_id", 8, root,
-          hashed = false, format = "json")
-        .groupBy(col("shard").cast("long").as("shard"))
-        .agg(count(lit(1)).as("docs"), sum(col("n_chars")).as("chars"))
-    }),
-
-    // WebDataset tar shards — the sequential-archive layout streaming
-    // training loaders consume. The manifest's byte counts are exact USTAR
-    // framing arithmetic (512-byte header + payload padded to 512 per
-    // member + 1024 trailer), so DuckDB reproduces them from LENGTH(text)
-    // alone (the synthetic corpus is ASCII: chars == bytes); ExportSpec
-    // parses the archives back byte-for-byte.
-    "export_webdataset" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_export_wd").toString
-      graft.operators.Export
-        .webdatasetWrite(table(s, dir, "documents"), "doc_id", "text", 8, root)
-        .select("shard", "n_samples", "n_bytes")
-        .orderBy("shard")
-    }),
-
-    // WebDataset round trip: export multimodal tar shards (every 3rd doc
-    // carries a paired binary member), stream-parse them back, and report
-    // per shard — counts, id sums, text chars, paired-bin counts and
-    // bytes. The oracle recomputes all five from the corpus and the
-    // portable residue shard, so the gate proves the READER inverts the
-    // writer byte-for-byte, not just that files appeared.
-    "import_webdataset" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_import_wd").toString
-      val docs = table(s, dir, "documents")
-        .withColumn("bin",
-          when(col("doc_id") % 3 === 0, encode(substring(col("text"), 1, 16), "UTF-8")))
-      graft.operators.Export.webdatasetWrite(docs, "doc_id", "text", 8, root,
-        binCol = Some("bin"))
-      graft.operators.Export.webdatasetRead(s, root)
-        .groupBy("shard")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("doc_id")).as("sum_ids"),
-          sum(length(col("text"))).as("sum_chars"),
-          count(col("bin")).as("n_bins"),
-          coalesce(sum(length(col("bin"))), lit(0L)).as("sum_bin_bytes"))
-        .orderBy("shard")
-    }),
-
-    // Catalog-driven dynamic partition pruning: the dimension's filtered
-    // key set prunes FACT cells (zones+blooms+bucket routing) before any
-    // fact byte is read, then the join broadcasts the driver-small dim.
-    // Spark's native DPP needs the join column to be the Hive partition
-    // column; the engine prunes on any tracked key column.
-    "lake_dpp_join" -> ((s, dir) => {
-      val dim = table(s, dir, "orders").filter(
-        col("o_orderkey").between(3000L, 4800L) &&
-          col("o_orderpriority") === "1-URGENT")
-      graft.operators.Joins.dppJoin(
-        Fixtures.lineitemRangeLake(s, dir), "l_orderkey", dim, "o_orderkey")
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-          dsum(col("l_extendedprice") * (lit(1) - col("l_discount")), 4).as("revenue"))
-    }),
-
-    // Metadata-only aggregates: COUNT(*)/MIN/MAX answered from the catalog
-    // (per-part row counters + tight zone maps) with ZERO file scans — the
-    // lakehouse metadata-query property. The same call degrades to one real
-    // aggregation scan whenever exactness can't be vouched (StatsSpec pins
-    // both paths; this fixture's pure-insert history keeps it tight).
-    "lake_stats_meta" -> ((s, dir) => {
-      graft.operators.Stats.tableStats(s, Fixtures.ordersZoneLake(s, dir),
-        Seq("o_orderkey", "o_totalprice", "o_orderdate"))
-    }),
-
-    // Grouped metadata aggregates: GROUP BY a partition column folds the
-    // per-cell counters/zones by catalog key — per-group counts and
-    // bounds with zero scans (the fallback is the real grouped agg).
-    "lake_stats_meta_grouped" -> ((s, dir) => {
-      graft.operators.Stats.tableStatsBy(s, Fixtures.ordersZoneLake(s, dir),
-        Seq("o_batch"), Seq("o_orderkey")).orderBy("o_batch")
-    }),
-
-    // Filtered metadata: a WHERE of partition-column equalities selects
-    // WHOLE cells, so the catalog fold stays exact — COUNT/MIN/MAX with a
-    // partition filter still collapses to a LocalRelation (the most common
-    // lakehouse metadata query: count of one date partition).
-    "lake_sql_stats_meta_filtered" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("orders_meta_f", Fixtures.ordersZoneLake(s, dir))
-      db.executeSql(
-        """SELECT COUNT(*) AS cnt,
-          |       MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
-          |FROM orders_meta_f WHERE o_batch = 1""".stripMargin)
-    }),
-
-    // The same property on the SQL surface: LakePruneRule collapses the
-    // whole aggregate over the LakeScan view into a LocalRelation.
-    "lake_sql_stats_meta" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("orders_meta", Fixtures.ordersZoneLake(s, dir))
-      db.executeSql(
-        """SELECT COUNT(*) AS cnt,
-          |       MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key,
-          |       MIN(o_orderdate) AS min_date, MAX(o_orderdate) AS max_date
-          |FROM orders_meta""".stripMargin)
-    }),
-
-    // Metadata-only SUM: `count(*) + sum(bigint)` folds from the catalog's
-    // exact per-part decimal sums (LakeDataset.metaSums) — the single most
-    // common dashboard query served with ZERO file reads. Doubles never
-    // take this path (order-dependent sums can't match a scan by contract).
-    "lake_stats_sum" -> ((s, dir) => {
-      graft.operators.Stats.tableSumStats(s, Fixtures.ordersZoneLake(s, dir),
-        Seq("o_custkey", "o_orderkey"))
-    }),
-
-    // Zero-scan drift between two lake snapshots: the "after" lake drops
-    // every 4th order and ingests every 10th re-keyed — counts, exact
-    // sums, and net change per column fold from BOTH manifests' SumMap
-    // state; no scan task reads either table's rows.
-    "lake_stats_drift" -> ((s, dir) => {
-      val before = Fixtures.ordersZoneLake(s, dir)
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 6000).cast("int"))
-      val mutated = o.filter(col("o_orderkey") % 4 =!= 0)
-        .unionByName(o.filter(col("o_orderkey") % 10 === 0)
-          .withColumn("o_orderkey", col("o_orderkey") + 3000000)
-          .withColumn("o_custkey", col("o_custkey") + 1000))
-      val after = LakeDataset.fromDataFrame(s, mutated,
-        partitionCols = Seq("o_batch"))
-      graft.operators.Stats.driftStats(s, before, after,
-          Seq("o_custkey", "o_orderkey"))
-        .orderBy("col_name")
-    }),
-
-    // The same zero-scan drift monitor as a catalog SQL verb:
-    // `SHOW DRIFT before VS after (cols)` — dashboards ask in SQL, the
-    // answer still folds from the two manifests.
-    "lake_sql_drift" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("drift_before", Fixtures.ordersZoneLake(s, dir))
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 6000).cast("int"))
-      val mutated = o.filter(col("o_orderkey") % 4 =!= 0)
-        .unionByName(o.filter(col("o_orderkey") % 10 === 0)
-          .withColumn("o_orderkey", col("o_orderkey") + 3000000)
-          .withColumn("o_custkey", col("o_custkey") + 1000))
-      db.register("drift_after", LakeDataset.fromDataFrame(s, mutated,
-        partitionCols = Seq("o_batch")))
-      db.executeSql("SHOW DRIFT drift_before VS drift_after (o_custkey, o_orderkey)")
-        .orderBy("col_name")
-    }),
-
-    // Approx-distinct from the catalog: hll_sketch_estimate(hll_sketch_agg)
-    // over a sketch-tracked column collapses to a LocalRelation — the
-    // metadata estimate is bit-identical to the scan's (union of per-part
-    // sketches == one sketch over everything). Rows-only gate (DuckDB's
-    // HLL is a different sketch); q09_distinct_agg is the exact twin.
-    "lake_stats_approx_distinct" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("orders_sketch", Fixtures.ordersSketchLake(s, dir))
-      db.executeSql(
-        """SELECT COUNT(*) AS cnt,
-          |       hll_sketch_estimate(hll_sketch_agg(o_custkey)) AS approx_cust
-          |FROM orders_sketch""".stripMargin)
-    }),
-
-    // GK quantile summaries (QuantileMap): approx median/p95 answered from
-    // the CATALOG alone (zero scan jobs), verified two ways in one gate —
-    // the exact discrete quantile (the k-th smallest value, k=ceil(q*n);
-    // identical relational definition on the DuckDB side, so bit-exact)
-    // plus a within_bound boolean holding the catalog answer's RANK to the
-    // GK bound (GK summaries answer within ~2eps of the true rank but never
-    // bit-identically across merge orders — the deterministic facts go in
-    // the output, the approximate value is asserted, not printed).
-    "lake_stats_quantile" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 3000).cast("int"))
-      val ds = LakeDataset.fromDataFrame(s, o, partitionCols = Seq("o_batch"),
-        quantileCols = Seq("o_totalprice"))
-      val qs = Seq(0.25, 0.50, 0.75, 0.95)
-      val approx = ds.metaApproxQuantile(Seq("o_totalprice"), qs)
-        .getOrElse(throw new IllegalStateException(
-          "catalog must answer quantiles on a pure-append table"))("o_totalprice")
-      val n = o.count()
-      // one scan: the exact rank of each catalog answer
-      val rankAggs = qs.zip(approx).map { case (q, v) =>
-        (sum(when(col("o_totalprice") <= lit(v), 1L).otherwise(0L))
-          .cast("double") / lit(n.toDouble)).as(s"r${(q * 100).toInt}")
-      }
-      val ranks = o.agg(rankAggs.head, rankAggs.tail: _*).head()
-      val bnd = 2 * graft.lake.QuantileMap.Eps + 2.0 / n
-      // gate-scale oracle-shaped exact quantiles (the exact rank pass is
-      // the ORACLE's cost, not the operator's — the catalog answer above
-      // ran zero jobs). Exact k-th smallest WITHOUT a single-partition
-      // global-rank window (row_number().over(Window.orderBy(v)) moves the
-      // whole table to ONE task — the textbook scale-killer): the qcut
-      // two-phase rank — range partition, partition-local record numbers,
-      // P-row offsets frame joined back over the SAME materialized range
-      // exchange (reuse guard below, same as Sampling.qcut's). The value
-      // at rank k is tie-insensitive, so the result is identical to the
-      // window form at any scale.
-      require(s.conf.get("spark.sql.exchange.reuse", "true").toBoolean,
-        "lake_stats_quantile's two-phase rank requires exchange reuse: the " +
-          "rank and offset passes must read one materialized range shuffle")
-      val p = math.max(1, s.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-      val ranged = o.select(col("o_totalprice").as("v"))
-        .repartitionByRange(p, col("v"))
-      val withRn = ranged.sortWithinPartitions("v")
-        .withColumn("__mid", monotonically_increasing_id())
-        .withColumn("__pid", shiftright(col("__mid"), 33).cast("int"))
-        .withColumn("__rn", col("__mid").bitwiseAND(lit((1L << 33) - 1)) + lit(1L))
-      // ≤ P aggregated rows under the running-sum window — bounded at any
-      // scale, never the table.
-      val offs = ranged.select(spark_partition_id().as("__pid"))
-        .groupBy("__pid").agg(count(lit(1)).as("__cnt"))
-        .withColumn("__off", coalesce(sum("__cnt").over(
-          Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .select("__pid", "__off")
-      val ks = qs.map(q => math.ceil(q * n).toLong)
-      val kth = withRn.join(broadcast(offs), "__pid")
-        .withColumn("__r", col("__off") + col("__rn"))
-        .filter(col("__r").isin(ks: _*))
-        .select("__r", "v")
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      import s.implicits._
-      qs.zipWithIndex.map { case (q, i) =>
-        ((q * 100).toInt, kth(ks(i)), math.abs(ranks.getDouble(i) - q) <= bnd)
-      }.toDF("q_pct", "exact_disc", "within_bound").orderBy("q_pct")
-    }),
-
-    // Catalog-approximate quantile BINNING (qcut's 100 TB path): decile
-    // boundaries fold from the manifest's GK sketches with zero scan jobs;
-    // binning is one chained-CASE narrow pass. The gate certifies every
-    // bin's population share against the GK rank bound (2·(2ε+2/n) per
-    // share — each share is a difference of two rank-bounded boundaries);
-    // the oracle pins the certified outcome per bin.
-    "lake_qcut_approx" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 3000).cast("int"))
-      val ds = LakeDataset.fromDataFrame(s, o, partitionCols = Seq("o_batch"),
-        quantileCols = Seq("o_totalprice"))
-      val binned = graft.operators.DataQuality.qcutApprox(ds, "o_totalprice", 10)
-      val n = o.count()
-      val bnd = 2 * (2 * graft.lake.QuantileMap.Eps + 2.0 / n)
-      binned.groupBy("bin").agg(count(lit(1)).as("nb"))
-        .select(col("bin").cast("long").as("bin"),
-          (abs(col("nb").cast("double") / lit(n.toDouble) - 0.1) <= lit(bnd))
-            .as("within_bound"))
-        .orderBy("bin")
-    }),
-
-    // Metadata-only TOP-K: per-part Misra–Gries sketches folded from the
-    // CATALOG (zero scan jobs) across a create + an append (the merge
-    // path). o_orderstatus has 3 distinct values << the 64-counter budget,
-    // so the sketches are in the EXACT regime: counts are exact corpus
-    // counts, the fold is order-independent, and the certification column
-    // (exact = lower==upper bound) must read true — all DuckDB-checkable.
-    // The approx regime (cardinality > budget) is bound-pinned in
-    // FreqStatsSpec instead, since its stored set is merge-order dependent.
-    "lake_stats_topk" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 3000).cast("int"))
-      val first = o.filter(col("o_orderkey") % 2 === 0)
-      val second = o.filter(col("o_orderkey") % 2 === 1)
-      val ds = LakeDataset.fromDataFrame(s, first,
-        partitionCols = Seq("o_batch"), freqCols = Seq("o_orderstatus"))
-      ds.insert(second) // appends MERGE sketches — still exact under ≤k card.
-      val top = ds.metaTopK(Seq("o_orderstatus"), 3)
-        .getOrElse(throw new IllegalStateException(
-          "catalog must answer top-k on a pure-append table"))("o_orderstatus")
-      import s.implicits._
-      top.map { case (v, lo, hi, exact) => (v, lo, exact) }
-        .toDF("value", "cnt", "exact")
-        .orderBy(desc("cnt"), col("value"))
-    }),
-
-    // The SQL surface of the frequent-items family: GROUP BY a tracked
-    // low-cardinality column + COUNT collapses to a LocalRelation (zero
-    // scan tasks) — sound only in the certified-exact regime, which this
-    // 3-value column is in. SqlPruneSpec pins the plan shape (no scan) and
-    // the fail-open above budget.
-    "lake_sql_stats_topk" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 3000).cast("int"))
-      val db = new Database(s)
-      db.register("freq_sql", LakeDataset.fromDataFrame(s, o,
-        partitionCols = Seq("o_batch"), freqCols = Seq("o_orderstatus")))
-      db.executeSql(
-        """SELECT o_orderstatus, COUNT(*) AS cnt FROM freq_sql
-          |GROUP BY o_orderstatus ORDER BY cnt DESC, o_orderstatus LIMIT 3""".stripMargin)
-    }),
-
-    // The two-dimensional collapse: GROUP BY (partition col, freq col) +
-    // COUNT plans as a LocalRelation — per-group certified-exact value
-    // counts from the catalog, zero scan tasks ("status counts per day").
-    "lake_sql_stats_group_counts" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 3000).cast("int"))
-      val db = new Database(s)
-      db.register("freq_sql2", LakeDataset.fromDataFrame(s, o,
-        partitionCols = Seq("o_batch"), freqCols = Seq("o_orderstatus")))
-      db.executeSql(
-        """SELECT o_batch, o_orderstatus, COUNT(*) AS cnt FROM freq_sql2
-          |GROUP BY o_batch, o_orderstatus
-          |ORDER BY o_batch, o_orderstatus""".stripMargin)
-    }),
-
-    // Grouped metadata top-k: the per-PARTITION-GROUP top value, folded
-    // from each group's member parts only — still zero scan jobs; exact
-    // regime makes it DuckDB-checkable like lake_stats_topk.
-    "lake_stats_topk_grouped" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 3000).cast("int"))
-      val ds = LakeDataset.fromDataFrame(s, o,
-        partitionCols = Seq("o_batch"), freqCols = Seq("o_orderstatus"))
-      val grouped = ds.metaTopKGrouped(Seq("o_batch"), Seq("o_orderstatus"), 1)
-        .getOrElse(throw new IllegalStateException(
-          "catalog must answer grouped top-k on a pure-append table"))
-      import s.implicits._
-      grouped.flatMap { case (vals, m) =>
-        m("o_orderstatus").map { case (v, lo, _, exact) =>
-          (vals.head.asInstanceOf[Int], v, lo, exact)
-        }
-      }.toDF("o_batch", "value", "cnt", "exact").orderBy("o_batch")
-    }),
-
-    // SHOW STATS: every maintained stat family folded from the catalog in
-    // one verb — zero scan jobs. The gate projects the EXACT families
-    // (counts, zones, sums; deterministic and DuckDB-reproducible); the
-    // approx families (HLL distinct, GK quantiles) are bound-asserted in
-    // QuantileStatsSpec instead, since no oracle can reproduce their bits.
-    "lake_sql_show_stats" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 3000).cast("int"))
-      val db = new Database(s)
-      db.register("stats_show", LakeDataset.fromDataFrame(s, o,
-        partitionCols = Seq("o_batch"),
-        sketchCols = Seq("o_custkey"), quantileCols = Seq("o_totalprice")))
-      db.executeSql("SHOW STATS stats_show")
-        .filter(col("column").isin("o_orderkey", "o_custkey", "o_totalprice"))
-        .select(col("column"), col("n_rows"), col("non_nulls"),
-          col("min_value").cast("double").as("min_d"),
-          col("max_value").cast("double").as("max_d"),
-          col("sum_value").cast("double").as("sum_d"))
-        .orderBy("column")
-    }),
-
-    // The same on the SQL surface: LakePruneRule collapses COUNT/SUM/MIN
-    // mixes over the view into a LocalRelation.
-    "lake_sql_stats_sum" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("orders_sum", Fixtures.ordersZoneLake(s, dir))
-      db.executeSql(
-        """SELECT COUNT(*) AS cnt, SUM(o_custkey) AS sum_cust,
-          |       MIN(o_orderkey) AS min_key
-          |FROM orders_sum""".stripMargin)
-    }),
-
-    // Grouped by the partition column + partition-IN filter: per-group
-    // sums fold per cell, still scan-free.
-    "lake_sql_stats_sum_grouped" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("orders_sum_g", Fixtures.ordersZoneLake(s, dir))
-      db.executeSql(
-        """SELECT o_batch, COUNT(*) AS cnt, SUM(o_custkey) AS sum_cust
-          |FROM orders_sum_g WHERE o_batch IN (0, 1)
-          |GROUP BY o_batch ORDER BY o_batch""".stripMargin)
-    }),
-
-    // HYBRID metadata aggregation: the upsert dirties a few cells — the
-    // vouched cells still fold from the catalog and ONE scan covers only
-    // the dirtied rest (all-or-nothing metadata answering would rescan the
-    // whole table for a single dirty cell). Identical to the full
-    // aggregation by construction; StatsSpec pins the one-cell scan.
-    "lake_stats_hybrid" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 6000).cast("int"))
-      val ds = LakeDataset.fromDataFrame(s, o, partitionCols = Seq("o_batch"))
-      ds.upsert(o.filter(col("o_orderkey") < 32)
-        .withColumn("o_totalprice", lit(0.125)), Seq("o_orderkey"))
-      graft.operators.Stats.tableStats(s, ds, Seq("o_orderkey", "o_totalprice"))
-    }),
-
-    // The SUM flavor of the hybrid: catalog-exact decimal sums over the
-    // vouched cells + the same exact accumulation over the scanned rest.
-    "lake_stats_hybrid_sum" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 6000).cast("int"))
-      val ds = LakeDataset.fromDataFrame(s, o, partitionCols = Seq("o_batch"))
-      ds.upsert(o.filter(col("o_orderkey") < 32)
-        .withColumn("o_custkey", col("o_custkey") + 1000000L), Seq("o_orderkey"))
-      graft.operators.Stats.tableSumStats(s, ds, Seq("o_custkey"))
-    }),
-
-    // The hybrid on the SQL surface: LakePruneRule folds the vouched cells
-    // into a LocalRelation of PARTIAL aggregates, scans ONLY the dirty
-    // cell, and re-aggregates the union — `SELECT count(*), sum(x)` after
-    // one upsert costs one cell's scan, not the table's.
-    "lake_sql_stats_hybrid" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 6000).cast("int"))
-      val ds = LakeDataset.fromDataFrame(s, o, partitionCols = Seq("o_batch"))
-      ds.upsert(o.filter(col("o_orderkey") < 32)
-        .withColumn("o_custkey", col("o_custkey") + 1000000L), Seq("o_orderkey"))
-      val db = new Database(s)
-      db.register("orders_sql_hy", ds)
-      db.executeSql(
-        """SELECT COUNT(*) AS cnt, SUM(o_custkey) AS sum_cust,
-          |       MIN(o_orderkey) AS min_key, COUNT(o_custkey) AS n_cust
-          |FROM orders_sql_hy""".stripMargin)
-    }),
-
-    // Grouped hybrid: vouched groups fold from the catalog; only the dirty
-    // cell's group re-aggregates from its one-cell scan, merged group-wise.
-    "lake_sql_stats_hybrid_grouped" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .withColumn("o_batch", (col("o_orderkey") / 6000).cast("int"))
-      val ds = LakeDataset.fromDataFrame(s, o, partitionCols = Seq("o_batch"))
-      ds.upsert(o.filter(col("o_orderkey") < 32)
-        .withColumn("o_custkey", col("o_custkey") + 1000000L), Seq("o_orderkey"))
-      val db = new Database(s)
-      db.register("orders_sql_hyg", ds)
-      db.executeSql(
-        """SELECT o_batch, COUNT(*) AS cnt, SUM(o_custkey) AS sum_cust
-          |FROM orders_sql_hyg GROUP BY o_batch ORDER BY o_batch""".stripMargin)
-    }),
-
-    // Metadata-only AVG: exact catalog sum / non-null count, behind the
-    // sign-uniform + 2^53 exactness guard (bit-identical to the scan's
-    // double accumulation under it) — integral columns only.
-    "lake_sql_stats_avg" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("orders_avg", Fixtures.ordersZoneLake(s, dir))
-      db.executeSql(
-        "SELECT COUNT(*) AS cnt, AVG(o_custkey) AS avg_cust FROM orders_avg")
-    }),
-
-    // DISTINCT over a partition column: the catalog's live (non-empty)
-    // cell listing IS the answer — zero scans (dirty cells fall to the
-    // grouped hybrid: vouched values + a distinct over only those cells).
-    "lake_sql_distinct_cells" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("orders_dist", Fixtures.ordersZoneLake(s, dir))
-      db.executeSql("SELECT DISTINCT o_batch FROM orders_dist ORDER BY o_batch")
-    }),
-
-    // COUNT(DISTINCT partition_col): the distinct values are catalog keys
-    // — answered with the count family in one scan-free plan.
-    "lake_sql_count_distinct" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("orders_cd", Fixtures.ordersZoneLake(s, dir))
-      db.executeSql(
-        "SELECT COUNT(DISTINCT o_batch) AS n_batches, COUNT(*) AS cnt FROM orders_cd")
-    }),
-
-    // Grouped by the partition column: per-group catalog AVG.
-    "lake_sql_stats_avg_grouped" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("orders_avg_g", Fixtures.ordersZoneLake(s, dir))
-      db.executeSql(
-        """SELECT o_batch, COUNT(*) AS cnt, AVG(o_custkey) AS avg_cust
-          |FROM orders_avg_g GROUP BY o_batch ORDER BY o_batch""".stripMargin)
-    }),
-
-    // Zone-seeded top-k: ORDER BY + LIMIT that reads only the cells whose
-    // zone interval can reach the k-th value — "latest N" over a
-    // range-partitioned table seeds from the extreme cell and prunes the
-    // rest pre-scan (Spark's TakeOrderedAndProject scans every file).
-    "lake_topk" -> ((s, dir) => {
-      Fixtures.ordersZoneLake(s, dir).topK("o_orderkey", 20)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    }),
-
-    // Top-k on a DATA column with a deterministic tie-break — zones on the
-    // ranking column prune whatever they can; the answer is the plain
-    // ordered limit either way.
-    "lake_topk_price" -> ((s, dir) => {
-      Fixtures.ordersZoneLake(s, dir)
-        .topK("o_totalprice", 15, asc = false, tieBreak = Seq("o_orderkey"))
-        .select(col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    "lake_bucket_pruning" -> ((s, dir) => {
-      val ds = Fixtures.lineitemLake(s, dir)
-      ds.bucketPrunedDF(1042L)
-        .filter(col("l_partkey") === 1042L)
-        .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("total"))
-    }),
-
-    // SQL-surface pruning: the SAME skipping the Scala API gets, but driven
-    // entirely by `spark.sql` over a registered view. The view's plan is one
-    // LakeScan leaf; LakePruneRule (SparkSessionExtensions) sees the pushed
-    // WHERE during optimization and plans only the parts whose zone
-    // intervals overlap the range — PlanSpec asserts the leaf count.
-    "lake_sql_zone_pruning" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("orders_zoned", Fixtures.ordersZoneLake(s, dir))
-      db.executeSql(
-        """SELECT COUNT(*) AS n,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-          |FROM orders_zoned WHERE o_orderkey BETWEEN 1000 AND 2000""".stripMargin)
-    }),
-
-    // Partition-value + bucket-id equality through the SQL surface: the rule
-    // prunes on BOTH axes from the catalog (no I/O) before Catalyst plans.
-    "lake_sql_part_pruning" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("lineitem_lake", Fixtures.lineitemLake(s, dir))
-      db.executeSql(
-        """SELECT COUNT(*) AS n,
-          |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-          |FROM lineitem_lake
-          |WHERE l_returnflag = 'R' AND l_partkey = 1042""".stripMargin)
-    }),
-
-    // IN-list pruning through the SQL surface: the rule prunes per listed
-    // VALUE (disjunction over all axes), so the parts between the two listed
-    // batches are skipped — a covering interval would scan them.
-    "lake_sql_in_pruning" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("orders_zoned_in", Fixtures.ordersZoneLake4(s, dir))
-      db.executeSql(
-        """SELECT COUNT(*) AS n,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-          |FROM orders_zoned_in WHERE o_batch IN (0, 3)""".stripMargin)
-    }),
-
-    // OR-predicate pruning through the SQL surface: the rule expands the
-    // disjunction into DNF branches and unions the per-branch kept part
-    // sets, so only the two named batches' cells plan — the parts between
-    // them are skipped (a conjunctive-only extraction would fall back to the
-    // full union on any OR). PlanSpec asserts the leaf count.
-    "lake_sql_or_pruning" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("orders_zoned_or", Fixtures.ordersZoneLake4(s, dir))
-      db.executeSql(
-        """SELECT COUNT(*) AS n,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-          |FROM orders_zoned_or WHERE o_batch = 0 OR o_batch = 3""".stripMargin)
-    }),
-
-    // Same lifecycle through Spark's built-in ORC writer/reader — the
-    // format axis of StorageSpec is generic (parquet / csv / arrowipc /
-    // orc), so a lake can live in whichever columnar format the estate
-    // standardizes on; the oracle checks content fidelity against the
-    // parquet original.
-    "lake_orc_roundtrip" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-      val root = Files.createTempDirectory("graft_rt_orc").toString
-      val ds = LakeDataset.fromDataFrame(s, li,
-        partitionCols = Seq("l_returnflag"), bucketCols = Seq("l_partkey"),
-        nBuckets = 5,
-        storage = Some(graft.model.StorageSpec(root, format = "orc",
-          compression = "zstd")))
-      ds.toStorage()
-      val back = LakeDataset.fromStorage(s, root)
-      back.toDF.groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("total"))
-        .orderBy("l_returnflag")
-    }),
-
-    // CSV lake: the remaining format axis (parquet/orc/arrowipc have their
-    // own gates). Text format round-trips through the manifest DDL schema
-    // (shortest-repr doubles reparse exactly; quoting covers embedded
-    // delimiters); compression is per-file gzip.
-    "lake_csv_roundtrip" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-      val root = Files.createTempDirectory("graft_rt_csv").toString
-      val ds = LakeDataset.fromDataFrame(s, li,
-        partitionCols = Seq("l_returnflag"), bucketCols = Seq("l_partkey"),
-        nBuckets = 5,
-        storage = Some(graft.model.StorageSpec(root, format = "csv",
-          compression = "gzip")))
-      ds.toStorage()
-      val back = LakeDataset.fromStorage(s, root)
-      back.toDF.groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("total"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Z-order clustering: orders binned by the interleaved quantile-rank
-    // bits of (o_custkey, o_totalprice) — the catalog's per-bin zone
-    // intervals are then tight on BOTH columns, so this 2-D range query
-    // plans only the Z-curve regions the rectangle intersects (a layout
-    // sorted by either column alone prunes only that column's dimension).
-    // ClusteringSpec asserts the planned-cell counts per dimension.
-    "lake_zorder_pruning" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      val ds = Clustering.zorderLake(s, o,
-        Seq("o_custkey", "o_totalprice"), bits = 6, nBins = 16).dataset
-      ds.prunedByConstraints(Map.empty, Map(
-          "o_custkey" -> (Some(100L), Some(500L)),
-          "o_totalprice" -> (Some(50000.0), Some(150000.0))))
-        .filter(col("o_custkey").between(100L, 500L) &&
-          col("o_totalprice").between(50000.0, 150000.0))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-    }),
-
-    // Incrementally-maintained aggregate view: after the initial build the
-    // base table is never rescanned — each insert folds a group-keyed
-    // partial into the |groups|-sized state (decimal sums, so the merged
-    // totals are bit-equal to the oracle's one-shot aggregate over the same
-    // final contents regardless of batching).
-    "lake_mat_view" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      val base = o.filter(col("o_orderkey") % 3 === 0)
-      val ds = LakeDataset.fromDataFrame(s, base, partitionCols = Seq("o_orderstatus"))
-      val mv = MaterializedAgg.build(base, Seq("o_orderstatus"), Seq(
-        MaterializedAgg.count("n"),
-        MaterializedAgg.sumDecimal("o_totalprice", "total"),
-        MaterializedAgg.min("o_totalprice", "mn"),
-        MaterializedAgg.max("o_totalprice", "mx")))
-      val d1 = o.filter(col("o_orderkey") % 3 === 1)
-      ds.insert(d1); mv.applyInsert(d1)
-      val d2 = o.filter(col("o_orderkey") % 3 === 2 && col("o_custkey") % 2 === 0)
-      ds.insert(d2); mv.applyInsert(d2)
-      mv.state
-        .select(col("o_orderstatus"), col("n"),
-          col("total").cast(DoubleType).as("total"), col("mn"), col("mx"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // Incrementally-maintained equi-JOIN view (the join complement to
-    // lake_mat_view's aggregate state): orders ⋈ customer kept current
-    // through a fact-side insert, a dimension-side update, a delete, and a
-    // join-key REASSIGNMENT — each folded from the touched-key delta alone:
-    // stale output rows anti-join out by primary key, the touched rows
-    // re-derive against the CURRENT other side, and neither base is ever
-    // rescanned (rebuildCount stays 0). The oracle replays the same
-    // mutation script as SQL CTEs and joins the final tables, so a missed
-    // stale row, a double fold, or mishandled key movement hash-mismatches.
-    "mv_join_incremental" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey").as("custkey"),
-          col("o_totalprice"))
-      val c = table(s, dir, "customer")
-        .select(col("c_custkey").as("custkey"), col("c_name"), col("c_acctbal"))
-      var aCur = o.filter(col("o_orderkey") % 7 < 3)
-      var bCur = c
-      val view = MaterializedJoin.build(aCur, bCur,
-        Seq("custkey"), Seq("o_orderkey"), Seq("custkey"))
-      // fact-side insert
-      val ins = o.filter(col("o_orderkey") % 7 === 3)
-      aCur = aCur.unionByName(ins)
-      view.refreshA(aCur, ins.select("o_orderkey"), bCur)
-      // dimension-side update: every 10th customer's balance moves, and
-      // every joined output row for those customers must follow
-      val bTouched = bCur.filter(col("custkey") % 10 === 0).select("custkey")
-      bCur = bCur.withColumn("c_acctbal",
-        when(col("custkey") % 10 === 0, col("c_acctbal") + 100)
-          .otherwise(col("c_acctbal")))
-      view.refreshB(bCur, bTouched, aCur)
-      // fact-side delete
-      val del = aCur.filter(col("o_orderkey") % 5 === 0).select("o_orderkey")
-      aCur = aCur.filter(col("o_orderkey") % 5 =!= 0)
-      view.refreshA(aCur, del, bCur)
-      // join-key reassignment: the old output row dies under the old
-      // customer, the new one is born under custkey+1 (or vanishes if no
-      // such customer exists — inner-join semantics, same as the oracle)
-      val moved = aCur.filter(col("o_orderkey") % 11 === 3).select("o_orderkey")
-      aCur = aCur.withColumn("custkey",
-        when(col("o_orderkey") % 11 === 3, col("custkey") + 1)
-          .otherwise(col("custkey")))
-      view.refreshA(aCur, moved, bCur)
-      assert(view.rebuildCount == 0, "mv_join_incremental must never rebuild")
-      view.state
-    }),
-
-    // Row-level change feed: every mutation logs stamped image batches
-    // (insert rows incl. the base commit, upsert PRE- and POST-images,
-    // delete pre-images) into a log that is itself a lake table — one cell
-    // per mutation, seq zones make tail reads incremental. The whole feed
-    // content is SQL-derivable from orders.
-    "lake_change_feed" -> ((s, dir) => {
-      import graft.lake.TrackedLake
-      val (t, _) = Fixtures.trackedOrders(s, dir)
-      t.changesSince(0L)
-        .groupBy(col(TrackedLake.OpCol).as("op"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("op")
-    }),
-
-    // Time travel via the feed: the table AS OF the post-insert mark —
-    // the later upsert (+100) and delete must NOT appear, which is exactly
-    // what the oracle (original prices, no deletions) checks.
-    "lake_time_travel" -> ((s, dir) => {
-      val (t, mark) = Fixtures.trackedOrders(s, dir)
-      t.tableAsOf(mark, Seq("o_orderkey"))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // Delta-style SQL time travel: a registered feed serves `FROM t
-    // VERSION AS OF n` — the same reconstruction as lake_time_travel,
-    // through the SQL surface.
-    "lake_sql_time_travel" -> ((s, dir) => {
-      val (t, mark) = Fixtures.trackedOrders(s, dir)
-      val db = new Database(s)
-      db.registerFeed("orders_feed", t, Seq("o_orderkey"))
-      db.executeSql(
-        s"""SELECT o_orderstatus, COUNT(*) AS n,
-           |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-           |FROM orders_feed VERSION AS OF $mark
-           |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
-    }),
-
-    // DESCRIBE HISTORY: the feed's per-version audit summary through SQL
-    // (operation kind + affected-row counts, newest first).
-    "lake_sql_history" -> ((s, dir) => {
-      val (t, _) = Fixtures.trackedOrders(s, dir)
-      val db = new Database(s)
-      db.registerFeed("orders_hist", t, Seq("o_orderkey"))
-      db.executeSql("DESCRIBE HISTORY orders_hist")
-    }),
-
-    // RESTORE TABLE ... VERSION AS OF: audit-grade rollback through
-    // logged mutations — the restored TABLE (not a reconstruction view)
-    // must match the mark's state. Builds its own feed (the shared
-    // trackedOrders fixture must stay unmutated).
-    "lake_sql_restore" -> ((s, dir) => {
-      val o = table(s, dir, "orders")
-      val t = graft.lake.TrackedLake(s,
-        LakeDataset.fromDataFrame(s, o.filter(col("o_orderkey") % 4 === 0),
-          partitionCols = Seq("o_orderstatus")),
-        logBase = true)
-      val mark = t.insert(o.filter(col("o_orderkey") % 4 === 1))
-      t.upsert(o.filter(col("o_custkey") % 3 === 0 &&
-          (col("o_orderkey") % 4 === 0 || col("o_orderkey") % 4 === 2))
-        .withColumn("o_totalprice", col("o_totalprice") + 100), Seq("o_orderkey"))
-      t.delete(o.filter(col("o_orderkey") % 4 === 1 && col("o_custkey") % 5 === 0)
-        .select("o_orderkey"), Seq("o_orderkey"))
-      val db = new Database(s)
-      db.registerFeed("orders_restore", t, Seq("o_orderkey"))
-      db.executeDml(s"RESTORE TABLE orders_restore VERSION AS OF $mark")
-      db.executeSql(
-        """SELECT o_orderstatus, COUNT(*) AS n,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-          |FROM orders_restore
-          |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
-    }),
-
-    // CTAS: CREATE TABLE ... PARTITIONED/BUCKETED ... AS <query> lays the
-    // result out as a lake table and registers it — the layout axes are
-    // live immediately (partition pruning on the very next query).
-    "lake_sql_ctas" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("ctas_src",
-        LakeDataset.fromDataFrame(s, table(s, dir, "orders")))
-      db.executeDml(
-        """CREATE TABLE ctas_t PARTITIONED BY (o_orderstatus)
-          |BUCKETED BY (o_custkey, 4)
-          |AS SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice
-          |   FROM ctas_src WHERE o_totalprice > 50000""".stripMargin)
-      db.executeSql(
-        """SELECT o_orderstatus, COUNT(*) AS n,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-          |FROM ctas_t GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin)
-    }),
-
-    // SHALLOW CLONE: an independent table over the SAME bytes (hard-linked
-    // files, O(files) metadata ops, zero data copied — CatalogDdlSpec pins
-    // shared inodes). Mutating the clone must not touch the source.
-    "lake_sql_clone" -> ((s, dir) => {
-      val srcRoot = Files.createTempDirectory("graft_clone_gate_src").toString
-      val dstRoot = Files.createTempDirectory("graft_clone_gate_dst").toString
-      val src = LakeDataset.fromDataFrame(s, table(s, dir, "orders"),
-        partitionCols = Seq("o_orderstatus"),
-        storage = Some(graft.model.StorageSpec(srcRoot)))
-      src.toStorage()
-      val db = new Database(s)
-      db.register("clone_src_t", src)
-      db.executeDml(s"CREATE TABLE clone_t SHALLOW CLONE clone_src_t LOCATION '$dstRoot'")
-      db.executeDml("DELETE FROM clone_t WHERE o_orderkey % 3 = 0")
-      db.executeSql(
-        """SELECT 'clone' AS side, COUNT(*) AS n,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-          |FROM clone_t
-          |UNION ALL
-          |SELECT 'source' AS side, COUNT(*) AS n,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-          |FROM clone_src_t
-          |ORDER BY side""".stripMargin)
-    }),
-
-    // CHECK constraints: ALTER TABLE ADD CONSTRAINT validates existing
-    // rows, then every ingest enforces at the write boundary — the
-    // violating INSERT is rejected atomically (table unchanged), the
-    // clean one lands.
-    "lake_sql_constraint" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("chk_t",
-        LakeDataset.fromDataFrame(s, table(s, dir, "orders")))
-      db.executeDml(
-        "ALTER TABLE chk_t ADD CONSTRAINT price_pos CHECK (o_totalprice >= 0)")
-      try db.executeDml(
-        """INSERT INTO chk_t VALUES
-          |(9900001, 3, 'O', -10.0, TIMESTAMP '2031-01-01 00:00:00', '1-URGENT')""".stripMargin)
-      catch { case _: IllegalArgumentException => () } // rejected by design
-      db.executeDml(
-        """INSERT INTO chk_t VALUES
-          |(9900001, 3, 'O', 10.5, TIMESTAMP '2031-01-01 00:00:00', '1-URGENT')""".stripMargin)
-      db.executeSql(
-        """SELECT COUNT(*) AS n,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-          |FROM chk_t""".stripMargin)
-    }),
-
-    // DESCRIBE DETAIL: one-row catalog metadata (layout axes, cell count,
-    // exact row count) with ZERO file reads — the cell count and row count
-    // come from the engine catalog, oracle-recomputed from the data.
-    "lake_sql_detail" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("detail_t", LakeDataset.fromDataFrame(
-        s, table(s, dir, "orders"), partitionCols = Seq("o_orderstatus")))
-      db.executeSql("DESCRIBE DETAIL detail_t")
-        .selectExpr("table_name", "format", "partition_columns",
-          "num_cells", "num_rows")
-    }),
-
-    // SQL-managed materialized view: built once, maintained from each SQL
-    // INSERT's batch alone (O(batch)+O(groups)), rebuilt on non-insert
-    // mutations by the operator contract; the oracle recomputes the final
-    // view relationally (base + inserted rows, minus the deleted slice).
-    "lake_sql_matview" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("mv_base", LakeDataset.fromDataFrame(
-        s, table(s, dir, "orders"), partitionCols = Seq("o_orderstatus")))
-      db.executeDml(
-        """CREATE MATERIALIZED VIEW mv_rev AS
-          |SELECT o_orderstatus, COUNT(*) AS n, SUM(o_totalprice) AS total,
-          |       MAX(o_custkey) AS max_cust, AVG(o_totalprice) AS mean
-          |FROM mv_base GROUP BY o_orderstatus""".stripMargin)
-      db.executeDml(
-        """INSERT INTO mv_base VALUES
-          |(9900101, 42, 'O', 1000.5, TIMESTAMP '2031-01-01 00:00:00', '1-URGENT')""".stripMargin)
-      db.executeDml("DELETE FROM mv_base WHERE o_custkey % 9 = 0")
-      db.executeSql(
-        """SELECT o_orderstatus, n, CAST(total AS DOUBLE) AS total, max_cust, mean
-          |FROM mv_rev ORDER BY o_orderstatus""".stripMargin)
-    }),
-
-    // SQL-managed incremental JOIN view: `CREATE MATERIALIZED VIEW ... AS
-    // SELECT ... FROM f JOIN d USING (k)` maintained by the catalog through
-    // every DML verb — INSERT appends its join output, predicate UPDATE /
-    // DELETE recompute only the touched JOIN KEYS (riding the same
-    // pre-state pin as the aggregate MVs), including a fact-side UPDATE
-    // that MOVES rows to another key. rebuildCount is pinned 0 — the
-    // incremental paths, not the escape hatch, do all the maintenance; the
-    // oracle replays the script as CTEs and joins the final tables.
-    "lake_sql_matview_join" -> ((s, dir) => {
-      val db = new Database(s)
-      val ordSlim = table(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey").as("custkey"),
-          col("o_totalprice"))
-      db.register("mvj_f", LakeDataset.fromDataFrame(
-        s, ordSlim.filter(col("o_orderkey") % 4 < 2)))
-      db.register("mvj_d", LakeDataset.fromDataFrame(
-        s, table(s, dir, "customer")
-          .select(col("c_custkey").as("custkey"), col("c_name"),
-            col("c_acctbal"))))
-      db.register("mvj_src", LakeDataset.fromDataFrame(
-        s, ordSlim.filter(col("o_orderkey") % 4 === 2)))
-      db.executeDml(
-        """CREATE MATERIALIZED VIEW mvj AS
-          |SELECT custkey, o_orderkey, o_totalprice, c_name, c_acctbal
-          |FROM mvj_f JOIN mvj_d USING (custkey)""".stripMargin)
-      db.executeDml("INSERT INTO mvj_f SELECT * FROM mvj_src")
-      db.executeDml(
-        "UPDATE mvj_d SET c_acctbal = c_acctbal + 100 WHERE custkey % 10 = 0")
-      db.executeDml("DELETE FROM mvj_f WHERE o_orderkey % 5 = 0")
-      db.executeDml(
-        "UPDATE mvj_f SET custkey = custkey + 1 WHERE o_orderkey % 11 = 3")
-      assert(db.mvRebuildCount("mvj") == 0,
-        "lake_sql_matview_join: maintenance must stay incremental")
-      db.executeSql("SELECT * FROM mvj")
-    }),
-
-    // Column DDL: ADD COLUMN (plan-level, existing rows read NULL) →
-    // populate via UPDATE → RENAME COLUMN → DROP COLUMN, then aggregate
-    // through the evolved schema; the oracle recomputes relationally over
-    // the original table.
-    "lake_sql_alter_columns" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("alt_t", LakeDataset.fromDataFrame(
-        s, table(s, dir, "orders"), partitionCols = Seq("o_orderstatus")))
-      db.executeDml("ALTER TABLE alt_t ADD COLUMN price_tier STRING")
-      db.executeDml(
-        "UPDATE alt_t SET price_tier = CASE WHEN o_totalprice > 100000 " +
-          "THEN 'high' ELSE 'low' END")
-      db.executeDml("ALTER TABLE alt_t RENAME COLUMN o_orderpriority TO priority")
-      db.executeDml("ALTER TABLE alt_t DROP COLUMN o_orderdate")
-      db.executeSql(
-        """SELECT price_tier, COUNT(*) AS n, MIN(priority) AS min_prio
-          |FROM alt_t GROUP BY price_tier ORDER BY price_tier""".stripMargin)
-    }),
-
-    // SHOW PARTITIONS: the cell listing straight from the catalog — one row
-    // per cell with its maintained row counter, zero jobs, zero file reads;
-    // the oracle recomputes the same listing relationally.
-    "lake_sql_show_partitions" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("sp_t", LakeDataset.fromDataFrame(
-        s, table(s, dir, "orders"), partitionCols = Seq("o_orderstatus")))
-      db.executeSql("SHOW PARTITIONS sp_t").orderBy("o_orderstatus")
-    }),
-
-    // ANALYZE TABLE: a predicate delete leaves the touched cells unable to
-    // vouch for tight stats (metadata aggregates fail open to a scan);
-    // ANALYZE recomputes them with a read pass — no rewrite — and the
-    // count/min/max family collapses to the catalog again (StatsSpec pins
-    // the plan; here the values are oracle-checked).
-    "lake_sql_analyze" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("an_t", LakeDataset.fromDataFrame(
-        s, table(s, dir, "orders"), partitionCols = Seq("o_orderstatus")))
-      db.executeDml("DELETE FROM an_t WHERE o_custkey % 7 = 0")
-      db.executeDml("ANALYZE TABLE an_t COMPUTE STATISTICS")
-      db.executeSql(
-        """SELECT COUNT(*) AS n, MIN(o_custkey) AS mn, MAX(o_custkey) AS mx
-          |FROM an_t""".stripMargin)
-    }),
-
-    // OPTIMIZE t ZORDER BY (...): the clustering layout as a SQL verb —
-    // rebuild, re-register, and answer a range aggregate that the new
-    // layout serves with multi-dimension pruning (plan pinned in DmlSpec).
-    "lake_sql_zorder" -> ((s, dir) => {
-      val db = new Database(s)
-      db.register("orders_zo",
-        LakeDataset.fromDataFrame(s, table(s, dir, "orders")))
-      db.executeDml("OPTIMIZE orders_zo ZORDER BY (o_custkey, o_totalprice)")
-      db.executeSql(
-        """SELECT COUNT(*) AS n,
-          |       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2))) AS DOUBLE) AS total
-          |FROM orders_zo
-          |WHERE o_custkey BETWEEN 100 AND 300""".stripMargin)
-    }),
-
-    // Data-quality profile (DataQuality.profile): every column's stats in
-    // ONE aggregate over ONE scan — spec-pinned single leaf. Exact
-    // distinct here for the oracle; approxDistinct=true is the 100 TB
-    // path. Long-typed columns only so min/max casts are portable.
-    "dq_profile" -> ((s, dir) =>
-      DataQuality.profile(table(s, dir, "orders"),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus")).orderBy("column")),
-
-    // Distribution drift between a corpus and its "next crawl" (every
-    // length%7==0 doc dropped, every 5th doc re-crawled longer): per-bin
-    // doc-length histogram counts plus the exact integer TVD numerator —
-    // the promote-or-hold gate a pipeline runs on each incoming batch.
-    "dq_drift" -> ((s, dir) => {
-      val d = table(s, dir, "documents").select("doc_id", "text")
-      val after = d.filter(length(col("text")) % 7 =!= 0)
-        .unionByName(d.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 500000).as("doc_id"),
-            concat(col("text"), lit(" extended by a synthetic crawl pass"))
-              .as("text")))
-      DataQuality.histogramDrift(d, after, length(col("text")),
-          binWidth = 50L, nBins = 12)
-        // dev is Decimal(38,0) for the >9.2e18 row-product regime; at any
-        // gate scale it fits a long exactly, and the long keeps the oracle
-        // on portable BIGINT arithmetic.
-        .withColumn("dev", col("dev").cast("long"))
-        .orderBy("bin")
-    }),
-
-    // Constraint suite (DataQuality.check): row-local checks share one
-    // scan; uniqueness adds one groupBy; referential integrity one
-    // broadcast anti-join. Exact violation counts, oracle-mirrored.
-    "dq_checks" -> ((s, dir) => {
-      import graft.operators.DataQuality._
-      DataQuality.check(table(s, dir, "orders"), Seq(
-        NotNull("o_custkey"),
-        InRange("o_totalprice", 0.0, 400000.0),
-        MatchesRegex("o_orderpriority", "^[1-5]-[A-Z ]+$"),
-        IsIn("o_orderstatus", Seq("O", "F")),
-        Unique(Seq("o_orderkey")),
-        RefIntegrity("o_custkey", table(s, dir, "customer"), "c_custkey")))
-    }),
-
-    // ---- time-series toolkit (TimeSeries.scala): polars upsample /
-    // fill_null(forward) / interpolate / diff / rle parity over the events
-    // stream, all on exact integer grids so DuckDB mirrors bit-for-bit.
-    // Base series: per-(user, day) purchase value in 1e-4 ticks — sparse
-    // (~13 purchases per user per month), so gaps are real.
-
-    "ts_upsample" -> ((s, dir) => {
-      graft.operators.TimeSeries.upsample(
-          dailyPurchases(s, dir), "user_id", "day", 86400L)
-        .select(col("user_id"), col("day"), col("v_ticks"),
-          col("v_ticks").isNull.cast("long").as("is_gap"))
-        .orderBy("user_id", "day")
-    }),
-
-    "ts_fill_forward" -> ((s, dir) => {
-      graft.operators.TimeSeries.fillForward(
-          graft.operators.TimeSeries.upsample(
-            dailyPurchases(s, dir), "user_id", "day", 86400L),
-          "user_id", "day", Seq("v_ticks"))
-        .select(col("user_id"), col("day"), col("v_ticks"))
-        .orderBy("user_id", "day")
-    }),
-
-    "ts_interpolate" -> ((s, dir) => {
-      graft.operators.TimeSeries.interpolateLinear(
-          graft.operators.TimeSeries.upsample(
-            dailyPurchases(s, dir), "user_id", "day", 86400L),
-          "user_id", "day", "v_ticks")
-        .select(col("user_id"), col("day"), col("v_ticks"))
-        .orderBy("user_id", "day")
-    }),
-
-    "ts_diff" -> ((s, dir) => {
-      graft.operators.TimeSeries.diffPct(
-          dailyPurchases(s, dir), "user_id", "day", "v_ticks")
-        .select(col("user_id"), col("day"), col("v_ticks"),
-          col("diff"), col("pct_bps"))
-        .orderBy("user_id", "day")
-    }),
-
-    "ts_ewma" -> ((s, dir) => {
-      graft.operators.TimeSeries.ewmaWindowed(
-          dailyPurchases(s, dir), "user_id", "day", "v_ticks")
-        .select(col("user_id"), col("day"), col("v_ticks"), col("ewma"))
-        .orderBy("user_id", "day")
-    }),
-
-    // Rolling anomaly flags: (x−μ)² > k²σ² over each user's trailing
-    // 5-observation window as the exact integer predicate
-    // kd²·(N·x−S1)² > kn²·(N·S2−S1²) — no sqrt, no float variance, so
-    // the oracle reproduces every flag bit-for-bit in HUGEINT. Rows with
-    // fewer than 5 prior observations emit NULL (don't-know, not normal).
-    "ts_anomaly" -> ((s, dir) => {
-      graft.operators.TimeSeries.anomalies(
-          dailyPurchases(s, dir), "user_id", "day", "v_ticks",
-          window = 5, kNum = 2, kDen = 1)
-        .select(col("user_id"), col("day"), col("v_ticks"), col("anomaly"))
-        .orderBy("user_id", "day")
-    }),
-
-    // Batch sessionization — the relational twin of stream_session_window
-    // (same gap semantics, same oracle shape, no state store): 30-minute
-    // gap sessions over each user's event stream.
-    "ts_sessions" -> ((s, dir) => {
-      graft.operators.TimeSeries.sessions(
-          table(s, dir, "events"), "user_id", "ts", gapSeconds = 1800L)
-        .select(col("user_id"), col("session_id"), col("session_start"),
-          col("session_end"), col("n_events"))
-        .orderBy("user_id", "session_id")
-    }),
-
-    "ts_rle" -> ((s, dir) => {
-      graft.operators.TimeSeries.rle(
-          table(s, dir, "events"), "user_id", Seq("ts", "event_id"), "event_type")
-        .select(col("user_id"), col("run_id"), col("value"),
-          col("run_len"), col("run_start"))
-        .orderBy("user_id", "run_id")
-    }),
-
-    // Composed time-series pipeline (the polars chain
-    // upsample().interpolate().ewm_mean() as one gate): sparse per-user
-    // purchases -> dense day grid -> exact linear interpolation -> windowed
-    // EWMA over the FILLED series, all under ONE chained DuckDB oracle.
-    "pipeline_timeseries" -> ((s, dir) => {
-      val up = graft.operators.TimeSeries.upsample(
-        dailyPurchases(s, dir), "user_id", "day", 86400L)
-      val interp = graft.operators.TimeSeries.interpolateLinear(
-        up, "user_id", "day", "v_ticks")
-      graft.operators.TimeSeries.ewmaWindowed(interp, "user_id", "day", "v_ticks")
-        .select(col("user_id"), col("day"), col("v_ticks"), col("ewma"))
-        .orderBy("user_id", "day")
-    }),
-
-    // Drift-gated streaming ingest: the promote-or-hold admission gate as
-    // a foreachBatch sink. Batch 1 is a true subsample of the corpus's
-    // length distribution (TVD ~0.1) and must land in the main table;
-    // batch 2 shifts every document +400 chars (TVD ~0.9) and must be
-    // quarantined WHOLE. The oracle hardcodes those two outcomes, so an
-    // engine that admits the drifted batch (or holds the conforming one)
-    // hash-mismatches — the DECISION is what's under test.
-    "stream_drift_gate" -> ((s, dir) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val d = table(s, dir, "documents").select("doc_id", "n_chars")
-      val main = LakeDataset.fromDataFrame(s, d)
-      val quarantine = LakeDataset.fromDataFrame(s, d.limit(0))
-      val gate = graft.streaming.StreamingIngest.driftGatedBatches(
-        main, quarantine, "n_chars", binWidth = 50L, nBins = 12,
-        maxDevPerMille = 400L)
-      // MemoryStream fixture rows: bounded, deterministic, loud cap (the
-      // documented harness pattern — the driver array is the stream
-      // source, not the operator).
-      def rows(m: Int, idShift: Long, lenShift: Long): Seq[(Long, Long)] = {
-        val cap = 200000
-        val r = d.filter(col("doc_id") % 5 === m)
-          .select((col("doc_id") + idShift).as("doc_id"),
-            (col("n_chars") + lenShift).as("n_chars"))
-          .orderBy("doc_id").limit(cap + 1).as[(Long, Long)].collect().toSeq
-        require(r.length <= cap,
-          s"stream_drift_gate fixture: > $cap rows at this scale factor")
-        r
-      }
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-      val q = mem.toDF().toDF("doc_id", "n_chars")
-        .writeStream.foreachBatch(gate).start()
-      try {
-        mem.addData(rows(1, 700000L, 0L))
-        q.processAllAvailable()
-        mem.addData(rows(2, 800000L, 400L))
-        q.processAllAvailable()
-      } finally q.stop()
-      main.toDF.select(lit("main").as("dst"), col("doc_id"), col("n_chars"))
-        .unionByName(quarantine.toDF
-          .select(lit("quarantine").as("dst"), col("doc_id"), col("n_chars")))
-        .groupBy("dst")
-        .agg(count(lit(1)).as("n"), sum("doc_id").as("sum_ids"),
-          sum("n_chars").as("sum_chars"))
-        .orderBy("dst")
-    }),
-
-    // Quantile binning (polars qcut): documents into length deciles over a
-    // total (n_chars, doc_id) order — ntile bin assignment is a pure
-    // function of rank and n, so the per-bin report is engine-exact.
-    "text_qcut" -> ((s, dir) => {
-      graft.operators.DataQuality.qcut(
-          table(s, dir, "documents"), "n_chars", 10, Seq("doc_id"))
-        .groupBy("bin")
-        .agg(count(lit(1)).as("n_docs"),
-          min(col("n_chars")).as("lo_chars"),
-          max(col("n_chars")).as("hi_chars"))
-        .orderBy("bin")
-    }),
-
-    // Per-group quantile binning (polars qcut().over(group)) — price
-    // quartiles WITHIN each order status: ntile over a group-partitioned
-    // window, one hashpartitioning(status) exchange, each stratum ranks
-    // inside its own partition.
-    "text_qcut_group" -> ((s, dir) => {
-      graft.operators.DataQuality.qcutPerGroup(
-          table(s, dir, "orders"), "o_orderstatus", "o_totalprice", 4,
-          Seq("o_orderkey"))
-        .groupBy("o_orderstatus", "bin")
-        .agg(count(lit(1)).as("n"),
-          dsum(col("o_totalprice")).as("total"))
-        .orderBy("o_orderstatus", "bin")
-    }),
-
-    // SCD Type-2 dimension history from the feed: one interval row per
-    // state, one window pass over the log. The report aggregates interval
-    // counts + the CURRENT slice's prices per status; the oracle derives
-    // both from orders and the fixture's known mutation recipe.
-    "lake_scd2" -> ((s, dir) => {
-      val (t, _) = Fixtures.trackedOrders(s, dir)
-      val h = t.scdHistory(Seq("o_orderkey"))
-      h.groupBy("o_orderstatus")
-        .agg(
-          count(lit(1)).as("n_hist"),
-          sum(when(col("_current"), 1L).otherwise(0L)).as("n_current"),
-          dsum(when(col("_current"), col("o_totalprice"))).as("total_current"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // Streaming feed consumer: a Structured Streaming file source tails
-    // the DURABLE feed's log root (each mutation = one new cell
-    // directory), delivering every image row through a real streaming
-    // query — the same feed content the batch reader sees, so the
-    // lake_change_feed oracle applies verbatim.
-    "feed_stream_read" -> ((s, dir) => {
-      import graft.lake.TrackedLake
-      val t = Fixtures.streamedOrders(s, dir)
-      s.catalog.dropTempView("graft_feed_stream")
-      val q = t.streamChanges().writeStream
-        .format("memory").queryName("graft_feed_stream")
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      s.table("graft_feed_stream")
-        .groupBy(col(TrackedLake.OpCol).as("op"))
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("op")
-    }),
-
-    // CDC replication: a streaming query applies the feed to an initially
-    // EMPTY replica lake (inserts/post-images merge by key, deletes
-    // anti-join out, in seq order) — the replica must equal the source
-    // table's final state, which the oracle derives from orders directly.
-    "feed_replicate" -> ((s, dir) => {
-      val t = Fixtures.streamedOrders(s, dir)
-      val replica = LakeDataset.fromDataFrame(s,
-        table(s, dir, "orders").limit(0),
-        partitionCols = Seq("o_orderstatus"))
-      val q = t.streamChanges().writeStream
-        .foreachBatch(graft.streaming.StreamingIngest
-          .applyFeedBatches(replica, Seq("o_orderkey")))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      replica.toDF.groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // Log checkpoint: the prefix (base commit + insert) collapsed into ONE
-    // base cell BEFORE the upsert/delete landed; reconstructing the final
-    // state composes the base cell with the post-checkpoint tail across
-    // the boundary. The oracle derives the same final state from orders
-    // directly — matched upsert keys (+100), new upsert keys inserted
-    // (+100), deleted keys absent.
-    "lake_feed_checkpoint" -> ((s, dir) => {
-      val t = Fixtures.checkpointedOrders(s, dir)
-      t.tableAsOf(t.currentSeq, Seq("o_orderkey"))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
-        .orderBy("o_orderstatus")
-    }),
-
-    "bucket_numeric" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-      li.groupBy(Bucketing.bucketExprFor(li, "l_partkey", 5).as("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("bucket")
-    }),
-
-    // String bucketing uses xxhash64 — not reproducible in DuckDB, so no
-    // oracle (rows-only check). Asserts stay in BucketingSpec.
-    "bucket_string" -> ((s, dir) => {
-      val li = table(s, dir, "lineitem")
-      li.groupBy(Bucketing.bucketExprFor(li, "l_linestatus", 5).as("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("bucket")
-    }),
-
-    // ------------------------------------- training-data pipeline operators
-    "text_stats" -> ((s, dir) => {
-      val d = table(s, dir, "documents")
-      d.select(
-        col("doc_id"),
-        length(trim(col("text"))).cast("long").as("n_chars_trim"),
-        TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-        TextAnalysis.regexTokenCount(col("text")).as("n_tokens_re"),
-        TextAnalysis.stopwordCount(col("text")).as("n_stop"))
-    }),
-
-    "text_quality" -> ((s, dir) => {
-      table(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.qualityScore(col("text")).as("quality"))
-    }),
-
-    // Model-based quality filtering: an integer log-odds-surrogate lexicon
-    // trained on the even half of the corpus (label = single-digit source,
-    // a balanced 50/50 split), then every doc scored by its linear margin.
-    // Exact integer arithmetic end-to-end -> full DuckDB oracle.
-    "text_quality_classifier" -> ((s, dir) => {
-      val d = table(s, dir, "documents")
-      val labeled = d.filter(col("doc_id") % 2 === 0)
-        .withColumn("label", (length(col("source")) === 4).cast("int"))
-      val lex = TextAnalysis.trainQualityLexicon(labeled, "text", "label")
-      TextAnalysis.lexiconScore(d, "text", "doc_id", lex).orderBy("doc")
-    }),
-
-    // Sequence packing: shard-parallel token-budget binning in id order —
-    // pure integer arithmetic, windowed per shard (never a global window).
-    "text_pack_sequences" -> ((s, dir) => {
-      TextAnalysis.packSequences(table(s, dir, "documents"),
-          "text", "doc_id", budgetTokens = 2048, nShards = 8)
-        .orderBy("doc_id")
-    }),
-
-    // BPE tokenizer training, round-1 statistics: exact integer adjacent-
-    // pair frequencies over the corpus word-count table — full DuckDB
-    // oracle for the counting machinery every merge round reuses.
-    "text_bpe_pairs" -> ((s, dir) => {
-      val words = Bpe.wordCounts(table(s, dir, "documents"), "text")
-      Bpe.pairStats(words.withColumn("s", Bpe.charSymbols(col("word"))))
-        .orderBy(desc("freq"), col("left_sym"), col("right_sym"))
-        .limit(10)
-    }),
-
-    // The trained merge table (8 rounds): deterministic (total-order tie
-    // break) but inherently iterative — no single SQL oracle can replay 8
-    // dependent rounds, so rows-only here; BpeSpec hand-verifies the
-    // classic planted corpus and pins round-1 == text_bpe_pairs' argmax.
-    "text_bpe_merges" -> ((s, dir) => {
-      import s.implicits._
-      Bpe.train(Bpe.wordCounts(table(s, dir, "documents"), "text"), 8)
-        .toDF("rank", "left_sym", "right_sym", "freq")
-        .orderBy("rank")
-    }),
-
-    // Token-ID encoding against a CONFIG merge table (tokenizer config =
-    // literals in both engine and oracle, like the PII regexes): apply the
-    // merges per word, map final symbols to dense ids from the
-    // deterministic corpus vocabulary (distinct symbols, lexicographic).
-    // Ids are a pure function of corpus + config -> full DuckDB oracle;
-    // the exploded stream is bounded to every 25th doc.
-    "text_bpe_ids" -> ((s, dir) => {
-      val symd = Bpe.symbolize(table(s, dir, "documents"), "text", "doc_id",
-        BpeConfigMerges)
-      val voc = Bpe.vocab(symd)
-      symd.filter(col("doc") % 25 === 0)
-        .select(col("doc"), posexplode(col("syms")).as(Seq("pos", "symbol")))
-        .join(broadcast(voc), "symbol")
-        .select(col("doc"), col("pos").cast("long").as("pos"),
-          col("token_id"), col("symbol"))
-        .orderBy("doc", "pos")
-    }),
-
-    // Sequence packing on REAL tokenizer counts: the BPE token-id arrays
-    // (not the whitespace proxy) feed the shard-parallel token-budget
-    // binning — the tokenize -> pack loop closed end-to-end.
-    "text_pack_bpe" -> ((s, dir) => {
-      val docs = table(s, dir, "documents")
-      val symd = Bpe.symbolize(docs, "text", "doc_id", BpeConfigMerges)
-      val ids = Bpe.tokenIds(docs, "text", "doc_id", BpeConfigMerges,
-        Bpe.vocab(symd))
-      TextAnalysis.packCounts(ids.select(col("doc"), col("n_tokens")),
-          "doc", "n_tokens", budgetTokens = 1024, nShards = 8)
-        .orderBy("doc_id")
-    }),
-
-    // Lossless tokenize→detokenize round trip: the </w>-marked symbol
-    // stream decodes back to the whitespace-normalized text exactly —
-    // the property that makes token-id exports reversible.
-    "text_bpe_roundtrip" -> ((s, dir) => {
-      Bpe.decode(Bpe.symbolizeMarked(table(s, dir, "documents"),
-          "text", "doc_id", BpeConfigMerges))
-        .orderBy("doc")
-    }),
-
-    // DSIR-shaped data selection: score every document by its integer-rate
-    // unigram contrast against the English subcorpus (the "target domain"),
-    // keep the top 50 — domain-matching selection without labels. Exact
-    // integer arithmetic end-to-end -> full DuckDB oracle.
-    "text_dsir_select" -> ((s, dir) => {
-      val d = table(s, dir, "documents")
-      val scored = TextAnalysis.importanceContrast(
-        d, d.filter(col("lang") === "en"), "text", "doc_id")
-      TextAnalysis.importanceSelect(scored, 50)
-    }),
-
-    // Sliding-window chunking (RAG / context-window prep): 32-word chunks
-    // every 24 words, 8-word overlap — one codegen'd tokenize+transform+
-    // posexplode per row, no shuffle, integer arithmetic end-to-end.
-    "text_chunks" -> ((s, dir) => {
-      TextAnalysis.chunkWords(table(s, dir, "documents"),
-          "text", "doc_id", chunkSize = 32, stride = 24)
-        .orderBy("doc", "chunk_id")
-    }),
-
-    // Bipartite projection: the weighted co-purchase graph (users sharing
-    // bought items). One self equi-join on the item key — Σ degree² over
-    // items, never |users|²; hub caps available for web-scale skew.
-    "graph_copurchase_edges" -> ((s, dir) => {
-      val bip = table(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
-      Graphs.projectBipartite(bip, "user_id", "item")
-        .orderBy("ua", "ub")
-    }),
-
-    // Per-vertex triangle counts on the strong (w>=5) co-purchase
-    // backbone, via degree-ordered orientation (each triangle found
-    // exactly once, O(m^1.5) wedge volume). The threshold matters for the
-    // RIGHT reason: triangle counting is superlinear in density, and the
-    // fixed 100-item space makes the w>=2 graph ~50% dense at sf0.1 —
-    // backbone-thinning before triangles is exactly what a real
-    // co-occurrence analysis does. Oracle = INDEPENDENT naive 3-way join.
-    "graph_triangles" -> ((s, dir) => {
-      val bip = table(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
-      val strong = Graphs.projectBipartite(bip, "user_id", "item")
-        .filter(col("w") >= 5)
-      Graphs.triangleCounts(strong, "ua", "ub").orderBy("v")
-    }),
-
-    // 3-core of the strong co-purchase backbone: parallel peeling to the
-    // fixed point (3 rounds at sf0.01, peeling 57 of 100 vertices), each
-    // survivor reported with its in-core degree. Oracle = the same rounds
-    // unrolled in DuckDB (extra rounds are no-ops past the fixed point).
-    "graph_kcore" -> ((s, dir) => {
-      val bip = table(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
-      val strong = Graphs.projectBipartite(bip, "user_id", "item")
-        .filter(col("w") >= 5)
-      Graphs.kCore(strong, "ua", "ub", k = 3).orderBy("v")
-    }),
-
-    // ENTITY RESOLUTION PIPELINE: noisy records → fuzzy name pairs →
-    // connected components → canonical entity id. Corpus = customers at
-    // key%11 (multiples of 11 NEVER differ in one digit — 11 ∤ d·10^p —
-    // so base names can't chain) + planted one-char typos at key%22.
-    // Completeness is the deletion theorem; the oracle recomputes with
-    // independent all-pairs levenshtein + recursive-CTE components.
-    "pipeline_entity_resolution" -> ((s, dir) => {
-      val c = table(s, dir, "customer")
-      val base = c.filter(col("c_custkey") % 11 === 0)
-        .select(col("c_custkey").cast("long").as("rid"), col("c_name").as("name"))
-      val typos = c.filter(col("c_custkey") % 22 === 0)
-        .select((col("c_custkey") + 100000L).cast("long").as("rid"),
-          concat(substring(col("c_name"), 1, 9), lit("x"),
-            substring(col("c_name"), 11, 100)).as("name"))
-      val rows = base.unionByName(typos)
-      val nameIds = rows.groupBy("name").agg(min("rid").as("nid"))
-      val pairs = Joins.fuzzySelfPairs(rows.select("name"), "name", maxDist = 1)
-        .join(nameIds.select(col("name").as("name_a"), col("nid").as("ida")), "name_a")
-        .join(nameIds.select(col("name").as("name_b"), col("nid").as("idb")), "name_b")
-        .select("ida", "idb")
-      val comps = Dedup.connectedComponents(pairs, "ida", "idb")
-      rows.join(nameIds, "name")
-        .join(comps.withColumnRenamed("doc_id", "nid"), Seq("nid"), "left")
-        .select(col("rid"), coalesce(col("component"), col("nid")).as("entity"))
-        .orderBy("rid")
-    }),
-
-    // Personalized, edge-weighted PageRank: trust propagates from the
-    // seed users (id % 10 == 0) over shared-item weights — TrustRank-style
-    // quality curation; unreachable vertices score exactly 0. Oracle
-    // unrolls the identical 3 integer-grid iterations.
-    "graph_ppr_weighted" -> ((s, dir) => {
-      val bip = table(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
-      val strong = Graphs.projectBipartite(bip, "user_id", "item")
-        .filter(col("w") >= 2)
-      val seeds = bip.select(col("user_id")).distinct()
-        .filter(col("user_id") % 10 === 0)
-      Graphs.personalizedPageRankInt(strong, "ua", "ub", "w",
-          seeds, "user_id", iters = 3)
-        .orderBy("v")
-    }),
-
-    // END-TO-END CURATION PIPELINE: URL → registered domain → blocklist →
-    // per-domain cap → LM-quality filter → sequence packing, one composed
-    // gate with a single chained DuckDB oracle (every stage exact-integer).
-    // Proves the round's curation operators COMPOSE, orderings included.
-    "pipeline_curation_full" -> ((s, dir) => {
-      import s.implicits._
-      val d = table(s, dir, "documents")
-      val withDom = d.select(col("doc_id"), col("text"),
-        Urls.registeredDomain(syntheticUrl).as("domain"))
-      val block = Seq("src3.co.uk", "src7.co.uk").toDF("domain")
-      val kept = withDom.join(broadcast(block), Seq("domain"), "left_anti")
-      val capped = Sampling.topKPerGroup(kept, Seq("domain"),
-        Seq(Sampling.hashKey(col("doc_id")), col("doc_id")), 20)
-      val scored = TextAnalysis.bigramLmScore(capped,
-        d.filter(col("lang") === "en" && col("source") === "src0"),
-        "text", "doc_id")
-      val good = scored.filter(col("lm_avg") >= 34000)
-      val packed = TextAnalysis.packCounts(
-        good.select(col("doc"), col("n_bigrams")),
-        "doc", "n_bigrams", budgetTokens = 256, nShards = 8)
-      packed
-        .join(capped.select(col("doc_id"), col("domain")), "doc_id")
-        .join(good.select(col("doc").as("doc_id"), col("lm_avg")), "doc_id")
-        .select("doc_id", "domain", "lm_avg", "pack")
-        .orderBy("doc_id")
-    }),
-
-    // RIGHT-TO-BE-FORGOTTEN END-TO-END: one erased-id set (doc_id % 170 —
-    // GDPR-sized: a handful of ids, so every index's rewrite tracks the
-    // touched cells, not the corpus)
-    // flows through the corpus table AND every persisted index type —
-    // exact-dedup, BM25, positional, MinHash (bands + shingles), IVF —
-    // and each surface reports its exact surviving row count plus a
-    // zero references-to-forgotten-ids counter. Every surviving count is
-    // SQL-derivable (postings = distinct (doc, word); positional = token
-    // occurrences; bands = 8/doc; shingles = distinct trigrams with the
-    // short-doc rule; exact index = normalized keys whose canonical
-    // survived), so the WHOLE composed erasure has one DuckDB oracle.
-    "pipeline_erasure_full" -> ((s, dir) => {
-      val d = table(s, dir, "documents")
-        .filter(col("doc_id") < 1000).select("doc_id", "text")
-      val emb = table(s, dir, "embeddings")
-        .filter(col("vec_id") < 1000).select("vec_id", "embedding")
-      val erased = d.filter(col("doc_id") % 170 === 0).select("doc_id")
-
-      // The six surfaces (corpus + five index families) are INDEPENDENT
-      // build+erase pipelines over disjoint roots; each runs as a chain of
-      // 1-4-task jobs, so sequentially the gate is bound by the per-job
-      // scheduler floor, not data. Overlap them on a thread pool (guide
-      // §2.6): one surface's stage tail back-fills with the next surface's
-      // jobs. The composed FINAL STATE — what the oracle hashes — is
-      // identical; build→erase stays sequential INSIDE each surface.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-
-      val fCorpus = Future {
-        val corpus = LakeDataset.fromDataFrame(s,
-          d.withColumn("b", (col("doc_id") % 4).cast("int")),
-          partitionCols = Seq("b"))
-        corpus.delete(erased, Seq("doc_id"))
-        corpus
-      }
-      val fEx = Future {
-        val exIdx = ExactDedupIndex.open(s,
-          Files.createTempDirectory("graft_ef_ex").toString, nBuckets = 8)
-        exIdx.addBatch(d, "text", "doc_id")
-        exIdx.remove(erased, "doc_id")
-        exIdx
-      }
-      val fBm = Future {
-        val bm = TextSearch.buildIndex(s, d, "text", "doc_id", nBuckets = 8,
-          storage = Some(graft.model.StorageSpec(
-            Files.createTempDirectory("graft_ef_bm").toString)))
-        TextSearch.removeFromIndex(bm, erased, "doc_id")
-      }
-      val fPos = Future {
-        val pos = TextSearch.buildPositional(s, d, "text", "doc_id",
-          nBuckets = 8, storage = Some(graft.model.StorageSpec(
-            Files.createTempDirectory("graft_ef_pos").toString)))
-        TextSearch.removeFromPositional(pos, erased, "doc_id")
-        pos
-      }
-      // 8 bucket cells per table is right-sized for this gate's SF (the
-      // nBuckets=32 default is a crawl-scale key space; per-cell fixed job
-      // costs would dominate the composition here)
-      val fMh = Future {
-        val mh = MinhashIndex.open(s,
-          Files.createTempDirectory("graft_ef_mh").toString, nBuckets = 8)
-        mh.addBatch(d, "text", "doc_id")
-        mh.remove(erased, "doc_id")
-        mh
-      }
-      val fIvf = Future {
-        val ivfRoot = Files.createTempDirectory("graft_ef_ivf").toString
-        val (cen, asg) = Similarity.buildIvf(emb, "embedding", "vec_id", 16, 64)
-        Similarity.saveIvf(s, ivfRoot, cen, asg)
-        Similarity.removeFromIvf(Similarity.loadIvf(s, ivfRoot),
-          emb.filter(col("vec_id") % 170 === 0).select("vec_id"), "vec_id")
-        Similarity.loadIvf(s, ivfRoot)
-      }
-      // Await ALL surfaces (never abandon one mid-build on a sibling's
-      // failure), then rethrow the first error.
-      val awaited = Seq(fCorpus, fEx, fBm, fPos, fMh, fIvf)
-        .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-      awaited.foreach(_.get)
-      val corpus = Await.result(fCorpus, Duration.Inf)
-      val exIdx = Await.result(fEx, Duration.Inf)
-      val bm2 = Await.result(fBm, Duration.Inf)
-      val pos = Await.result(fPos, Duration.Inf)
-      val mh = Await.result(fMh, Duration.Inf)
-      val ivf2 = Await.result(fIvf, Duration.Inf)
-
-      def surface(name: String, df: DataFrame, idc: String): DataFrame =
-        df.agg(count(lit(1)).as("rows"),
-            count(when(col(idc) % 170 === 0, 1)).as("erased_refs"))
-          .select(lit(name).as("surface"), col("rows"), col("erased_refs"))
-
-      surface("1_corpus", corpus.toDF, "doc_id")
-        .unionByName(surface("2_exact_index", exIdx.docRows.get, "doc"))
-        .unionByName(surface("3_bm25_postings", bm2.postings.toDF, "doc"))
-        .unionByName(surface("4_positional", pos.postings.toDF, "doc"))
-        .unionByName(surface("5_minhash_bands", mh.bandRows.get, "doc"))
-        .unionByName(surface("6_minhash_shingles", mh.shingleRows.get, "doc"))
-        .unionByName(surface("7_ivf_assigned", ivf2.assigned.toDF, "vec_id"))
-        .orderBy("surface")
-    }),
-
-    // STREAMING right-to-be-forgotten: the same seven-surface erasure
-    // composition, but the erase requests arrive as a STREAM (two
-    // micro-batches through a foreachBatch sink) — deletion requests
-    // trickle in continuously in a real GDPR pipeline. The final state
-    // must hash-match pipeline_erasure_full's batch oracle exactly: the
-    // sink's incremental, touched-cell-bounded removes converge to the
-    // same state as one batch erase.
-    "stream_erasure" -> ((s, dir) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val d = table(s, dir, "documents")
-        .filter(col("doc_id") < 1000).select("doc_id", "text")
-      val emb = table(s, dir, "embeddings")
-        .filter(col("vec_id") < 1000).select("vec_id", "embedding")
-
-      // 4 buckets / 8 IVF lists: the surface COUNTS this gate reports are
-      // layout-independent (same oracle as the batch capstone), and the
-      // gate's cost at this fixed 1000-doc fixture is per-cell job count —
-      // two streaming epochs × six surfaces × cells — not data volume.
-      // The six surface BOOTSTRAPS are independent pipelines over disjoint
-      // roots: overlap them (guide §2.6) exactly like the batch capstone;
-      // the erase stream starts only after every build committed.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      val fCorpus = Future { LakeDataset.fromDataFrame(s,
-        d.withColumn("b", (col("doc_id") % 4).cast("int")),
-        partitionCols = Seq("b")) }
-      val fEx = Future {
-        val exIdx = ExactDedupIndex.open(s,
-          Files.createTempDirectory("graft_se_ex").toString, nBuckets = 4)
-        exIdx.addBatch(d, "text", "doc_id")
-        exIdx
-      }
-      val fBm = Future { TextSearch.buildIndex(s, d, "text", "doc_id",
-        nBuckets = 4, storage = Some(graft.model.StorageSpec(
-          Files.createTempDirectory("graft_se_bm").toString))) }
-      val fPos = Future { TextSearch.buildPositional(s, d, "text", "doc_id",
-        nBuckets = 4, storage = Some(graft.model.StorageSpec(
-          Files.createTempDirectory("graft_se_pos").toString))) }
-      val fMh = Future {
-        val mh = MinhashIndex.open(s,
-          Files.createTempDirectory("graft_se_mh").toString, nBuckets = 4)
-        mh.addBatch(d, "text", "doc_id")
-        mh
-      }
-      val fIvf = Future {
-        val ivfRoot = Files.createTempDirectory("graft_se_ivf").toString
-        val (cen, asg) = Similarity.buildIvf(emb, "embedding", "vec_id", 8, 32)
-        Similarity.saveIvf(s, ivfRoot, cen, asg)
-        ivfRoot
-      }
-      Seq(fCorpus, fEx, fBm, fPos, fMh, fIvf)
-        .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-        .foreach(_.get)
-      val corpus = Await.result(fCorpus, Duration.Inf)
-      val exIdx = Await.result(fEx, Duration.Inf)
-      val bm = Await.result(fBm, Duration.Inf)
-      val pos = Await.result(fPos, Duration.Inf)
-      val mh = Await.result(fMh, Duration.Inf)
-      val ivfRoot = Await.result(fIvf, Duration.Inf)
-
-      val (sink, current) = graft.streaming.StreamingIngest.erasureBatches(
-        corpus, "doc_id", exIdx, mh, bm, pos, ivfRoot)
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val q = mem.toDF().toDF("doc_id").writeStream
-        .foreachBatch(sink).start()
-      val erased = d.filter(col("doc_id") % 170 === 0)
-        .select("doc_id").as[Long].collect().sorted
-      try {
-        mem.addData(erased.filter(_ < 500).toSeq: _*)
-        q.processAllAvailable()
-        mem.addData(erased.filter(_ >= 500).toSeq: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-
-      val bmFinal = current()
-      val ivf2 = Similarity.loadIvf(s, ivfRoot)
-      def surface(name: String, df: DataFrame, idc: String): DataFrame =
-        df.agg(count(lit(1)).as("rows"),
-            count(when(col(idc) % 170 === 0, 1)).as("erased_refs"))
-          .select(lit(name).as("surface"), col("rows"), col("erased_refs"))
-      surface("1_corpus", corpus.toDF, "doc_id")
-        .unionByName(surface("2_exact_index", exIdx.docRows.get, "doc"))
-        .unionByName(surface("3_bm25_postings", bmFinal.postings.toDF, "doc"))
-        .unionByName(surface("4_positional", pos.postings.toDF, "doc"))
-        .unionByName(surface("5_minhash_bands", mh.bandRows.get, "doc"))
-        .unionByName(surface("6_minhash_shingles", mh.shingleRows.get, "doc"))
-        .unionByName(surface("7_ivf_assigned", ivf2.assigned.toDF, "vec_id"))
-        .orderBy("surface")
-    }),
-
-    // Local clustering coefficients on the strong co-purchase backbone —
-    // the "abnormally cliquish neighborhood" spam/farm signal. Exact
-    // integers + one IEEE division -> fully oracle-checkable.
-    "graph_clustering_coeff" -> ((s, dir) => {
-      val bip = table(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
-      val strong = Graphs.projectBipartite(bip, "user_id", "item")
-        .filter(col("w") >= 5)
-      Graphs.clusteringCoefficients(strong, "ua", "ub").orderBy("v")
-    }),
-
-    // Integer-grid PageRank (3 iterations, damping 0.85 as the exact
-    // rational 850000/1e6) on the strong co-purchase graph — the site-
-    // authority curation signal, bit-reproducible: the oracle unrolls the
-    // SAME iterations in DuckDB. One join + one groupBy per iteration.
-    "graph_pagerank_int" -> ((s, dir) => {
-      val bip = table(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
-      val strong = Graphs.projectBipartite(bip, "user_id", "item")
-        .filter(col("w") >= 2)
-      Graphs.pageRankInt(strong, "ua", "ub", iters = 3).orderBy("v")
-    }),
-
-    // DIRECTED weighted PERSONALIZED PageRank — the full TrustRank shape,
-    // completing the 2x2 (direction x personalization): trust spreads from
-    // seed users along parity-directed weighted co-purchase edges; dangling
-    // mass returns to the SEEDS (damped), not to arbitrary vertices.
-    // Oracle unrolls the identical 3 integer-grid rounds.
-    "graph_ppr_directed" -> ((s, dir) => {
-      val bip = table(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
-      val strong = Graphs.projectBipartite(bip, "user_id", "item")
-        .filter(col("w") >= 2)
-      val directed = strong.select(
-        when((col("ua") + col("ub")) % 2 === 0, col("ua")).otherwise(col("ub")).as("src"),
-        when((col("ua") + col("ub")) % 2 === 0, col("ub")).otherwise(col("ua")).as("dst"),
-        col("w"))
-      val seeds = bip.select(col("user_id")).distinct()
-        .filter(col("user_id") % 10 === 0)
-      Graphs.personalizedPageRankDirectedInt(directed, "src", "dst", "w",
-          seeds, "user_id", iters = 3)
-        .orderBy("v")
-    }),
-
-    // DIRECTED PageRank: the real link-graph semantics (authority ≠ hub).
-    // Edges = the strong co-purchase pairs directed by (x+y) parity — a
-    // deterministic mixed-direction graph WITH genuine dangling vertices
-    // (pure sinks), whose mass redistributes uniformly on the integer grid
-    // each round (D div n, exact rational). Oracle unrolls the identical
-    // 3 iterations, dangling aggregate included, in DuckDB.
-    "graph_pagerank_directed" -> ((s, dir) => {
-      val bip = table(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"),
-          get_json_object(col("props"), "$.k").cast("long").as("item"))
-      val strong = Graphs.projectBipartite(bip, "user_id", "item")
-        .filter(col("w") >= 2)
-      val directed = strong.select(
-        when((col("ua") + col("ub")) % 2 === 0, col("ua")).otherwise(col("ub")).as("src"),
-        when((col("ua") + col("ub")) % 2 === 0, col("ub")).otherwise(col("ua")).as("dst"))
-      Graphs.pageRankDirectedInt(directed, "src", "dst", iters = 3).orderBy("v")
-    }),
-
-    // URL canonicalization + registered-domain extraction over a messy
-    // synthesized URL per document (mixed case, www, default ports,
-    // tracking params, fragments, trailing slashes). One codegen'd
-    // narrow map — no shuffle; RE2-safe regexes mirrored by the oracle.
-    "curate_url_normalize" -> ((s, dir) => {
-      table(s, dir, "documents")
-        .select(col("doc_id"), syntheticUrl.as("url"))
-        .select(col("doc_id"), col("url"),
-          Urls.normalizeUrl(col("url")).as("norm_url"),
-          Urls.registeredDomain(col("url")).as("domain"))
-        .orderBy("doc_id")
-    }),
-
-    // Domain-level curation: blocklist anti-join (broadcast) + per-domain
-    // document cap under a deterministic md5 rank — the C4/RefinedWeb
-    // "cap any one site's share of the corpus" pass.
-    "curate_domain_cap" -> ((s, dir) => {
-      import s.implicits._
-      val d = table(s, dir, "documents")
-        .select(col("doc_id"), Urls.registeredDomain(syntheticUrl).as("domain"))
-      val block = Seq("src3.co.uk", "src7.co.uk").toDF("domain")
-      val kept = d.join(broadcast(block), Seq("domain"), "left_anti")
-      Sampling.topKPerGroup(kept, Seq("domain"),
-          Seq(Sampling.hashKey(col("doc_id")), col("doc_id")), 8)
-        .select("domain", "doc_id")
-        .orderBy("domain", "doc_id")
-    }),
-
-    // SymSpell fuzzy self-join: all customer-name pairs within Levenshtein
-    // distance 1, via deletion-neighborhood equi-join (complete by theorem,
-    // no nested-loop plan). Oracle is the INDEPENDENT all-pairs ground
-    // truth — DuckDB's own levenshtein over a length-banded join.
-    "fuzzy_join_names" -> ((s, dir) => {
-      Joins.fuzzySelfPairs(table(s, dir, "customer").select("c_name"), "c_name")
-        .orderBy("name_a", "name_b")
-    }),
-
-    // The k=2 deletion neighborhood (nested deletes) under the same
-    // independent all-pairs oracle — supplier names make the COMPLETE
-    // distance-<=2 graph at sf0.01, so any missed candidate fails the gate.
-    "fuzzy_join_names2" -> ((s, dir) => {
-      Joins.fuzzySelfPairs(table(s, dir, "supplier").select("s_name"),
-          "s_name", maxDist = 2)
-        .orderBy("name_a", "name_b")
-    }),
-
-    // CCNet-style bigram LM quality scoring: train integer-rate bigram
-    // model on the reference slice (en × src0), score every document by
-    // modeled-bigram mass + OOV mass. Narrow-map bigram build, vocab-
-    // bounded model, exact integers end-to-end -> full DuckDB oracle.
-    "text_lm_score" -> ((s, dir) => {
-      val d = table(s, dir, "documents")
-      TextAnalysis.bigramLmScore(
-          d, d.filter(col("lang") === "en" && col("source") === "src0"),
-          "text", "doc_id")
-        .orderBy("doc")
-    }),
-
-    // Benchmark decontamination: every 50th document plays the eval set;
-    // training docs sharing any word trigram with it are flagged with
-    // their contamination ratio (integer ratio -> oracle-exact double).
-    // The benchmark gram set broadcasts; the corpus never reshuffles.
-    "text_decontaminate" -> ((s, dir) => {
-      val d = table(s, dir, "documents")
-      Dedup.decontaminate(d, d.filter(col("doc_id") % 50 === 0),
-          "text", "doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // PII scrub: emails and phone-shaped numbers redacted to placeholder
-    // tokens with a per-doc redaction count. PII is INJECTED onto every
-    // 7th document (the synthetic corpus has none), same expression on
-    // the oracle side; patterns are RE2-compatible so DuckDB runs the
-    // identical regexes.
-    "text_pii_scrub" -> ((s, dir) => {
-      val d = table(s, dir, "documents")
-      val withPii = d.withColumn("text",
-        when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" contact user"),
-            col("doc_id").cast("string"),
-            lit("@example.com or 555-123-4567")))
-          .otherwise(col("text")))
-      TextAnalysis.piiScrub(withPii, "text", "doc_id").orderBy("doc_id")
-    }),
-
-    // Heuristic language ID (word-marker + char-trigram variants) —
-    // engine-deterministic, no SQL oracle.
-    "text_langid" -> ((s, dir) => {
-      table(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.langId(col("text")).as("lang_pred"),
-          TextAnalysis.langIdNgram(col("text")).as("lang_pred_ngram"),
-          col("lang"))
-    }),
-
-    // xxhash64-based fingerprint — engine-deterministic, no SQL oracle.
-    "text_fingerprint" -> ((s, dir) => {
-      table(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
-    }),
-
-    // Winnowing rolling-hash fingerprints — engine-deterministic, no oracle;
-    // OperatorsSpec asserts near-dup overlap guarantees.
-    "text_winnow" -> ((s, dir) => {
-      TextAnalysis.winnowFingerprints(
-        table(s, dir, "documents"), "text", "doc_id")
-        .groupBy("doc")
-        .agg(count(lit(1)).as("n_fp"), min("fp").as("min_fp"), max("fp").as("max_fp"))
-        .orderBy("doc")
-    }),
-
-    // Winnowing with an integer modular rolling hash — the oracle-checked
-    // exact twin of text_winnow (same k-gram/min-window/distinct machinery,
-    // SQL-reproducible hash).
-    "text_winnow_int" -> ((s, dir) => {
-      TextAnalysis.winnowFingerprintsInt(
-        table(s, dir, "documents"), "text", "doc_id")
-        .groupBy("doc")
-        .agg(count(lit(1)).as("n_fp"), min("fp").as("min_fp"), max("fp").as("max_fp"))
-        .orderBy("doc")
-    }),
-
-    // Gopher-style line-repetition signals; boilerplate INJECTED onto every
-    // 5th doc (the synthetic corpus has no repeated lines), identical
-    // expression on the oracle side.
-    "text_repetition" -> ((s, dir) => {
-      val d = table(s, dir, "documents")
-      val injected = d.withColumn("text",
-        when(col("doc_id") % 5 === 0,
-          concat(col("text"),
-            lit("\nrepeat me line\nrepeat me line\nrepeat me line")))
-          .otherwise(col("text")))
-      TextAnalysis.lineRepetition(injected, "text", "doc_id").orderBy("doc")
-    }),
-
-    // Top-bigram concentration — natural repetition exists in the corpus,
-    // no injection needed.
-    "text_top_bigram" -> ((s, dir) =>
-      TextAnalysis.topBigramFrac(table(s, dir, "documents"), "text", "doc_id")
-        .orderBy("doc")),
-
-    // BM25 full-text search over the persisted inverted index: the query's
-    // terms prune the postings lake to ≤3 of 16 bucket cells (driver-side
-    // bucket ids, zero I/O) — query cost ∝ queried terms' postings, never
-    // corpus size. Float scorer: ln() is libm-dependent, so rows-only;
-    // the exact-integer twin below is the hash-checked ranking.
-    "text_bm25_topk" -> ((s, dir) =>
-      TextSearch.searchTopK(Fixtures.bm25Index(s, dir), "spark join window", 20)),
-
-    // Integer-surrogate BM25 (same pruned plan, integer idf/saturation
-    // ladders — TextSearch.searchTopKInt scaladoc) — oracle-checked
-    // end-to-end including the ranking.
-    "text_bm25_int" -> ((s, dir) =>
-      TextSearch.searchTopKInt(Fixtures.bm25Index(s, dir), "spark join window", 20)),
-
-    // INDEX ERASURE: doc_id % 10 == 0 deleted from the persisted inverted
-    // index (removeFromIndex rewrites only the bucket cells that held the
-    // doomed postings), index reopened from disk, then the integer-BM25
-    // ranking must equal the oracle computed over the SURVIVING documents
-    // alone — erased docs must influence neither df, nor the corpus
-    // scalars, nor the ranking.
-    "text_bm25_removed" -> ((s, dir) =>
-      TextSearch.searchTopKInt(Fixtures.bm25IndexRemoved(s, dir), "spark join window", 20)),
-
-    // HYBRID retrieval: reciprocal-rank fusion of the integer-BM25 lexical
-    // top-20 and the SQ8 code-space-cosine vector top-20 (vec_id keys the
-    // same synthetic corpus) — both inputs are oracle-exact, the fusion is
-    // integer arithmetic, so the whole hybrid ranking has a DuckDB oracle.
-    "search_hybrid_rrf" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val e = table(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0)
-        .head().getSeq[Float](1).toSeq
-      // The two unpartitioned rank windows below are PROVABLY bounded: each
-      // input is a `.limit(20)` top-k, so the single-partition window stage
-      // holds ≤ 20 rows at any corpus scale — never the table.
-      val lex = TextSearch.searchTopKInt(
-          Fixtures.bm25Index(s, dir), "spark join window", 20)
-        .withColumn("rk", row_number().over(
-          Window.orderBy(desc("score_int"), col("doc"))))
-      val vec = Sq.sq8TopK(Sq.sq8Encode(e, "embedding", "vec_id"),
-          "vec_id", q, 20)
-        .withColumnRenamed("vec_id", "doc")
-        .withColumn("rk", row_number().over(
-          Window.orderBy(desc("cos_q"), col("doc"))))
-      Fusion.rrf(Seq(lex.select("doc", "rk"), vec.select("doc", "rk")),
-        "doc", "rk", 15)
-    }),
-
-    // BM25 SIMILARITY JOIN: top-5 corpus docs for every row of a query
-    // table in ONE plan (query terms explode into a single equi-join on
-    // the pruned postings, per-query window top-k) — the text analogue of
-    // ann_batch_*. Integer ladders, so the full ranking is oracle-checked;
-    // self-matches kept (each query doc ranks itself first).
-    "text_bm25_batch" -> ((s, dir) =>
-      TextSearch.searchBatchTopKInt(Fixtures.bm25Index(s, dir),
-        table(s, dir, "documents").filter(col("doc_id") <= 5),
-        "text", "doc_id", 5)
-        .orderBy("query_id", "rk")),
-
-    // Exact phrase search over the positional index: each phrase slot
-    // votes for its start position (pos − idx) — one broadcast join + one
-    // aggregation, no |phrase|-way self-join; overlapping and
-    // repeated-word occurrences exact ("batch batch" exercises both).
-    // All-integer, so the full ranking is oracle-checked.
-    "text_phrase_search" -> ((s, dir) =>
-      TextSearch.phraseSearchTopK(Fixtures.posIndex(s, dir), "batch batch", 20)),
-
-    // Erasure through the POSITIONAL index: doc_id % 10 == 0 deleted from
-    // the persisted occurrence lists, index reopened from disk, same
-    // phrase ranking over the survivors.
-    "text_phrase_removed" -> ((s, dir) =>
-      TextSearch.phraseSearchTopK(Fixtures.posIndexRemoved(s, dir), "batch batch", 20)),
-
-    // Heavy hitters: exact global top-k terms (one map-side-combined
-    // aggregation + TakeOrdered).
-    "text_heavy_terms" -> ((s, dir) =>
-      HeavyHitters.topK(
-        table(s, dir, "documents")
-          .select(explode(split(trim(col("text")), " ")).as("w")),
-        "w", 15)),
-
-    // Candidate-pruned variant: per-partition local top-c via mapPartitions
-    // (≤ partitions·c rows shuffle instead of the vocabulary), exact
-    // second-pass counts — exact above the N/(c+1) frequency floor, which
-    // every top-15 term here clears (HeavyHittersSpec pins equality and
-    // the pigeonhole guarantee across layouts).
-    "text_heavy_terms_pruned" -> ((s, dir) =>
-      HeavyHitters.topKCandidates(
-        table(s, dir, "documents")
-          .select(explode(split(trim(col("text")), " ")).as("w")),
-        "w", 15, c = 50)),
-
-    // Deterministic ~10% hash sample (md5 is oracle-portable).
-    "sample_hash" -> ((s, dir) =>
-      Sampling.hashSample(table(s, dir, "documents"), "doc_id", "1999")
-        .select("doc_id", "lang", "source").orderBy("doc_id")),
-
-    // Language-rebalancing stratified sample: keep ~50% of English, ~10%
-    // of everything else.
-    "sample_stratified" -> ((s, dir) =>
-      Sampling.stratifiedSample(table(s, dir, "documents"), "doc_id", "lang",
-          Map("en" -> "7fff"), default = "1999")
-        .select("doc_id", "lang").orderBy("doc_id")),
-
-    // Leak-proof split: hash-split on the near-dup CANONICAL id so whole
-    // clusters land in one split — the near-dup fixture's planted replays
-    // (+100000 suffix copies) must land in the same split as their
-    // originals, which raw-id hashing cannot guarantee.
-    "sample_split_leakproof" -> ((s, dir) => {
-      val corpus = Fixtures.nearDupDocuments(s, dir)
-      Sampling.leakproofSplit(corpus,
-          Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
-            shingleSize = 3, threshold = 0.5),
-          "doc_id", valHexThreshold = "3fff")
-        .select("doc_id", "canon", "split").orderBy("doc_id")
-    }),
-
-    // K-fold leak-proof assignment: folds by Lehmer(canonical id) mod 5 —
-    // an entire near-dup cluster shares one fold, loners fold by their own
-    // id, and the integer arithmetic is engine-portable.
-    "sample_folds_leakproof" -> ((s, dir) => {
-      val corpus = Fixtures.nearDupDocuments(s, dir)
-      Sampling.leakproofFolds(corpus,
-          Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
-            shingleSize = 3, threshold = 0.5),
-          "doc_id", k = 5)
-        .select("doc_id", "canon", "fold").orderBy("doc_id")
-    }),
-
-    // Contrastive negatives: 4 deterministic shard-local pseudo-random
-    // negatives per document — no cartesian, one window + one equi-join.
-    "sample_negatives" -> ((s, dir) =>
-      Sampling.negativePairs(table(s, dir, "documents"), "doc_id",
-          k = 4, shards = 16)
-        .orderBy("anchor", "slot")),
-
-    // Per-source token shares and the sampling weights for a uniform blend.
-    "text_mixture_weights" -> ((s, dir) =>
-      Sampling.mixtureWeights(table(s, dir, "documents"), "source",
-          TextAnalysis.tokenCount(col("text")))
-        .orderBy("source")),
-
-    // Exact dedup after normalization: noisy copies (case flip +
-    // punctuation + whitespace noise) injected for every 9th doc — exact
-    // dedup misses them, normalization folds them.
-    "dedup_normalized" -> ((s, dir) => {
-      val d = table(s, dir, "documents")
-      val noisy = d.filter(col("doc_id") % 9 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          concat(upper(col("text")), lit("  !!")).as("text"))
-      Dedup.exactNormalized(
-          d.select("doc_id", "text").unionByName(noisy), "text", "doc_id")
-        .filter(col("dup_count") > 1)
-        .select("canonical_id", "dup_count")
-        .orderBy("canonical_id")
-    }),
-
-    // Curation: keep the 3 longest documents per language (deterministic
-    // tie-break on doc_id) — the rank filter rides WindowGroupLimit, so
-    // each map task ships only its local top-k.
-    "curate_topk_per_lang" -> ((s, dir) =>
-      Sampling.topKPerGroup(table(s, dir, "documents"), Seq("lang"),
-          Seq(col("n_chars").desc, col("doc_id").asc), k = 3)
-        .select("lang", "doc_id", "n_chars")
-        .orderBy("lang", "doc_id")),
-
-    // The composed curation pipeline, end to end in ONE oracle-checked
-    // flow: exact dedup -> quality gate -> budget-constrained selection
-    // (distributed prefix sum) -> deterministic shard export, summarized
-    // from the PERSISTED shards. Each stage is an operator with its own
-    // gate entry; this proves they compose.
-    "pipeline_curate" -> ((s, dir) => {
-      import graft.operators.{Dedup, Export}
-      val corpus = Fixtures.dupDocuments(s, dir)
-      val canon = Dedup.exact(corpus, "text", "doc_id")
-        .select(col("canonical_id").as("doc_id"))
-      val kept = corpus.join(canon, Seq("doc_id"))
-        .filter(col("n_chars") >= 150)
-      val selected = Sampling.budgetSelect(kept,
-        (col("doc_id") * 37) % 1000, col("doc_id"), "n_chars",
-        budget = 30000L, nPartitions = 8)
-      val root = java.nio.file.Files.createTempDirectory("graft_pipeline").toString
-      Export.shardedWrite(selected, "doc_id", 4, root, hashed = false)
-        .groupBy(col("shard").cast("long").as("shard"))
-        .agg(count(lit(1)).as("docs"), sum(col("n_chars")).as("chars"))
-    }),
-
-    // Budget-constrained curation: best-scoring docs until the char budget
-    // fills — the window-free distributed prefix sum (range partitions +
-    // driver offsets + per-partition running totals); the oracle is the
-    // single-window spelling it replaces.
-    "curate_budget_select" -> ((s, dir) => {
-      val d = table(s, dir, "documents")
-        .withColumn("score", (col("doc_id") * 37) % 1000)
-      Sampling.budgetSelect(d, col("score"), col("doc_id"), "n_chars",
-          budget = 50000L, nPartitions = 8)
-        .select("doc_id", "score", "n_chars")
-        .orderBy("doc_id")
-    }),
-
-    // Incremental exact dedup: batch 1 is the first 250 docs; batch 2 is
-    // the rest plus normalized-noisy copies of batch-1 docs — the copies
-    // must come back as already-seen, everything else as new. Unlike the
-    // MinHash index this one's output is doc ids, so the whole incremental
-    // path is oracle-checked.
-    "dedup_incr_exact" -> ((s, dir) => {
-      val d = table(s, dir, "documents")
-      val root = Files.createTempDirectory("graft_exact_idx").toString
-      // 8 bucket cells is right-sized for this SF; a real corpus opens with
-      // a larger key space (the parameter persists with the index).
-      val idx = ExactDedupIndex.open(s, root, nBuckets = 8)
-      val b1 = d.filter(col("doc_id") < 250).select("doc_id", "text")
-      val noisy = d.filter(col("doc_id") < 250 && col("doc_id") % 9 === 0)
-        .select((col("doc_id") + 1000000).as("doc_id"),
-          concat(upper(col("text")), lit("  !!")).as("text"))
-      val b2 = d.filter(col("doc_id") >= 250).select("doc_id", "text")
-        .unionByName(noisy)
-      val r1 = idx.addBatch(b1, "text", "doc_id")
-        .select(lit(0L).as("batch"), col("doc").as("doc_id"))
-      val r2 = idx.addBatch(b2, "text", "doc_id")
-        .select(lit(1L).as("batch"), col("doc").as("doc_id"))
-      r1.unionByName(r2).orderBy("batch", "doc_id")
-    }),
-
-    // INDEX ERASURE through the exact-dedup index (right-to-be-forgotten):
-    // batch 0 seeds, every id % 7 == 0 is then ERASED, and batch 1 replays
-    // batch 0 wholesale — exactly the forgotten keys must come back as NEW
-    // (the ghost no longer suppresses them) while every still-remembered
-    // replay adds nothing. Only cells that held a doomed row rewrite.
-    // Doc-id output -> the whole erase+replay path is oracle-checked.
-    "dedup_incr_removed" -> ((s, dir) => {
-      val d = table(s, dir, "documents")
-      val root = Files.createTempDirectory("graft_exact_rm").toString
-      val idx = ExactDedupIndex.open(s, root, nBuckets = 8)
-      val b1 = d.filter(col("doc_id") < 250).select("doc_id", "text")
-      // Pin batch 0's result rows before the erase rewrites its cells —
-      // the lazy plan reads the index's live files.
-      val r1 = idx.addBatch(b1, "text", "doc_id")
-        .select(lit(0L).as("batch"), col("doc").as("doc_id"))
-        .localCheckpoint(true)
-      idx.remove(
-        d.filter(col("doc_id") < 250 && col("doc_id") % 7 === 0)
-          .select("doc_id"), "doc_id")
-      val r2 = idx.addBatch(b1, "text", "doc_id")
-        .select(lit(1L).as("batch"), col("doc").as("doc_id"))
-      r1.unionByName(r2).orderBy("batch", "doc_id")
-    }),
-
-    // INDEX ERASURE through the persisted MinHash index: erase a GDPR-
-    // realistic handful of near-dup ORIGINALS from the bootstrapped corpus
-    // index, then ingest the near-dup copies — pairs with erased partners
-    // must vanish (no ghost candidates) while surviving partners still
-    // pair. The erase set is deliberately SMALL (erasure requests are, and
-    // cost must track touched cells, not the corpus — the % 20 erase-half
-    // variant measured 13 s of legitimate whole-table rewrite at sf0.1).
-    // xxhash-based -> rows-only; dedup_incr_removed is the exact-index
-    // twin of the same erase+replay contract.
-    "dedup_minhash_removed" -> ((s, dir) => {
-      val corpus = Fixtures.nearDupDocuments(s, dir)
-      val root = Files.createTempDirectory("graft_mh_rm").toString
-      Fixtures.copyDir(Fixtures.minhashIndexRoot(s, dir), root)
-      val idx = MinhashIndex.open(s, root)
-      idx.remove(
-        corpus.filter(col("doc_id") < 100000 && col("doc_id") % 250 === 0)
-          .select("doc_id"), "doc_id")
-      idx.addBatch(corpus.filter(col("doc_id") >= 100000), "text", "doc_id",
-          threshold = 0.5)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    "dedup_exact" -> ((s, dir) => {
-      Dedup.exact(Fixtures.dupDocuments(s, dir), "text", "doc_id")
-        .select(col("canonical_id"), col("dup_count"))
-        .orderBy("canonical_id")
-    }),
-
-    // CONTENT-level streaming dedup: real Structured Streaming micro-
-    // batches drain through the persisted ExactDedupIndex — epoch 0 seeds,
-    // epoch 1 mixes fresh docs with normalized-noisy replays (caught),
-    // epoch 2 replays epoch 0 wholesale and must add NOTHING: the
-    // cross-micro-batch state lives in the index lake, not stream memory.
-    // Exact normalized keys -> the same DuckDB oracle shape as
-    // dedup_incr_exact, with the empty third epoch proving durability.
-    "stream_dedup_content" -> ((s, dir) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val d = table(s, dir, "documents")
-      val corpus = d.select("doc_id", "text")
-        .unionByName(d.filter(col("doc_id") % 9 === 0)
-          .select((col("doc_id") + 1000000).as("doc_id"),
-            concat(upper(col("text")), lit("  !!")).as("text")))
-      val idx = ExactDedupIndex.open(s,
-        Files.createTempDirectory("graft_sdc_idx").toString, nBuckets = 8)
-      val out = LakeDataset.forStorage(s, partitionCols = Nil,
-        bucketCols = Nil, nBuckets = 1, bloomCols = Nil,
-        storage = graft.model.StorageSpec(
-          Files.createTempDirectory("graft_sdc_out").toString))
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val q = mem.toDF().toDF("doc_id").writeStream.foreachBatch(
-        (b: DataFrame, epoch: Long) =>
-          out.insert(idx.addBatch(b.join(corpus, "doc_id"), "text", "doc_id")
-            .select(lit(epoch).as("batch"), col("doc").as("doc_id")))).start()
-      val ids = d.select("doc_id").as[Long].collect().sorted
-      require(ids.length <= 100000, s"gate fixture grew: ${ids.length} ids")
-      val noisyIds = ids.filter(_ % 9 == 0).map(_ + 1000000)
-      try {
-        mem.addData(ids.filter(_ < 250).toSeq: _*)
-        q.processAllAvailable()
-        mem.addData((ids.filter(_ >= 250) ++ noisyIds).toSeq: _*)
-        q.processAllAvailable()
-        // wholesale replay of epoch 0 — zero new uniques expected
-        mem.addData(ids.filter(_ < 250).toSeq: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-      out.toDF.orderBy("batch", "doc_id")
-    }),
-
-    // STREAMING BM25 maintenance: the index bootstraps from the first 150
-    // docs, the REST of the corpus streams in through two foreachBatch
-    // epochs (each batch appends postings + updates the corpus scalars),
-    // and the measured search over the final handle must equal the
-    // text_bm25_int oracle computed over the WHOLE corpus — a batch-built
-    // and a stream-grown index are indistinguishable to queries.
-    "stream_bm25_ingest" -> ((s, dir) => {
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val d = table(s, dir, "documents").select("doc_id", "text")
-      val root = Files.createTempDirectory("graft_sbm25").toString
-      TextSearch.buildIndex(s, d.filter(col("doc_id") < 150), "text",
-        "doc_id", nBuckets = 16,
-        storage = Some(graft.model.StorageSpec(root)))
-      val (sink, current) = graft.streaming.StreamingIngest.bm25Batches(
-        TextSearch.open(s, root), "text", "doc_id")
-      val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val q = mem.toDF().toDF("doc_id").writeStream.foreachBatch(
-        (b: DataFrame, epoch: Long) => sink(b.join(d, "doc_id"), epoch)).start()
-      val rest = d.filter(col("doc_id") >= 150).select("doc_id")
-        .as[Long].collect().sorted
-      require(rest.length <= 100000, s"gate fixture grew: ${rest.length} ids")
-      try {
-        mem.addData(rest.filter(_ < 300).toSeq: _*)
-        q.processAllAvailable()
-        mem.addData(rest.filter(_ >= 300).toSeq: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-      TextSearch.searchTopKInt(current(), "spark join window", 20)
-    }),
-
-    // MinHash-LSH near-dup with exact-Jaccard verify — no SQL oracle
-    // (xxhash64 signatures); DedupSpec asserts the planted pairs are found.
-    "dedup_minhash" -> ((s, dir) => {
-      Dedup.minhashDedup(Fixtures.nearDupDocuments(s, dir), "text", "doc_id",
-          threshold = 0.5)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    // RECALL GATE for MinHash LSH banding: pair recall of the 32-hash /
-    // 8-band pipeline against the exact all-pairs Jaccard truth at t=0.5
-    // (measured 1.0 at sf0.01; floor 0.95 — LSH contracts 1-2% misses, a
-    // banding/signature regression drops far below that). The truth count
-    // is the dedup_ngram_jaccard oracle's own cardinality.
-    "dedup_recall_minhash" -> ((s, dir) => {
-      val docs = Fixtures.nearDupDocuments(s, dir)
-      val approx = Dedup.minhashDedup(docs, "text", "doc_id", threshold = 0.5)
-      val exact = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
-        shingleSize = 3, threshold = 0.5)
-      Recall.gate(approx, exact, Seq("doc_a", "doc_b"),
-        minPermille = 950, minTruth = 40)
-    }),
-
-    // Incremental MinHash through the PERSISTED index: the corpus index is
-    // bootstrapped once (Fixtures); the measured query reopens a copy and
-    // adds ONE small batch (the near-dup copies) — signing only the batch
-    // and band-joining new-vs-all, so the cost is ∝ batch, not corpus
-    // (compare dedup_minhash, the full recompute, in the same bench).
-    // IncrementalDedupSpec asserts batched pair sets equal the recompute.
-    // xxhash-based → rows-only; dedup_ngram_jaccard is the exact twin.
-    "dedup_minhash_incr" -> ((s, dir) => {
-      val corpus = Fixtures.nearDupDocuments(s, dir)
-      val root = Files.createTempDirectory("graft_mh_incr").toString
-      Fixtures.copyDir(Fixtures.minhashIndexRoot(s, dir), root)
-      val idx = MinhashIndex.open(s, root)
-      idx.addBatch(corpus.filter(col("doc_id") >= 100000), "text", "doc_id",
-          threshold = 0.5)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    // Duplicate GROUPS from the exact near-dup pairs: connected components
-    // by iterative min-label propagation; component = min doc id (the
-    // canonical keeper). Recursive-CTE oracle reproduces it exactly.
-    "dedup_components" -> ((s, dir) => {
-      Dedup.connectedComponents(
-          Dedup.ngramJaccardPairs(Fixtures.nearDupDocuments(s, dir),
-            "text", "doc_id", shingleSize = 3, threshold = 0.5),
-          "doc_a", "doc_b")
-        .orderBy("doc_id")
-    }),
-
-    // The dedup pipeline's OUTPUT: the corpus with one canonical doc per
-    // near-dup group (group minimum) and all unmatched docs untouched.
-    "dedup_keep_canonical" -> ((s, dir) => {
-      val corpus = Fixtures.nearDupDocuments(s, dir)
-      Dedup.keepCanonical(corpus,
-          Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
-            shingleSize = 3, threshold = 0.5),
-          "doc_id")
-        .select("doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // Quality-aware survivor selection: per near-dup cluster keep the
-    // LONGEST member (ties min id) — the near-dup fixture's replays carry
-    // an appended suffix, so keepBest keeps the REPLAY where
-    // dedup_keep_canonical keeps the original: the two policies are
-    // distinguishable in the gate, both oracle-exact.
-    "dedup_keep_best" -> ((s, dir) => {
-      val corpus = Fixtures.nearDupDocuments(s, dir)
-      Dedup.keepBest(corpus,
-          Dedup.ngramJaccardPairs(corpus, "text", "doc_id",
-            shingleSize = 3, threshold = 0.5),
-          corpus.select(col("doc_id"), length(col("text")).as("q")),
-          "doc_id", "q")
-        .select("doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // Dedup observability: cluster-size histogram over the exact near-dup
-    // components — the "is this organic duplication or a template?" report.
-    "dedup_cluster_sizes" -> ((s, dir) => {
-      Dedup.componentSizeHistogram(
-          Dedup.ngramJaccardPairs(Fixtures.nearDupDocuments(s, dir),
-            "text", "doc_id", shingleSize = 3, threshold = 0.5))
-        .orderBy("members")
-    }),
-
-    // The FULL dedup pipeline composed end-to-end on a corpus planting
-    // both exact copies and near-dup replays: exact stage drops the
-    // byte-identical +200000 copies (min-id survivor), near-dup stage
-    // groups the +100000 suffix replays and keeps the longest member.
-    // Every stage is exact arithmetic -> the composed survivor set has a
-    // single chained DuckDB oracle; PipelineDedupSpec pins idempotence.
-    "pipeline_dedup_full" -> ((s, dir) => {
-      val corpus = Fixtures.pipelineDedupCorpus(s, dir)
-      Dedup.pipelineDedup(corpus, "text", "doc_id",
-          corpus.select(col("doc_id"), length(col("text")).as("q")), "q")
-        .select("doc_id").orderBy("doc_id")
-    }),
-
-    // Exact all-pairs n-gram Jaccard (no hashing) — the oracle-checked
-    // ground truth the MinHash-LSH path is measured against.
-    "dedup_ngram_jaccard" -> ((s, dir) => {
-      Dedup.ngramJaccardPairs(Fixtures.nearDupDocuments(s, dir), "text", "doc_id",
-          shingleSize = 3, threshold = 0.5)
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    // Prefix-filter set-similarity join (AllPairs/PPJoin): the EXACT
-    // threshold join — provably no false negatives, unlike MinHash LSH —
-    // with candidate volume paid only on each doc's rarest shingles. Same
-    // corpus, threshold, and output contract as dedup_ngram_jaccard, so
-    // the all-pairs oracle doubles as the completeness proof.
-    "dedup_setsim_prefix" -> ((s, dir) => {
-      Dedup.setSimJoinPrefix(Fixtures.nearDupDocuments(s, dir), "text", "doc_id",
-          shingleSize = 3, threshold = 0.5)
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    // Eval-set decontamination as a CROSS-corpus exact-threshold join:
-    // every (training doc, benchmark doc) pair with Jaccard >= 0.5, no
-    // false negatives by the prefix theorem. The benchmark plants every
-    // 7th doc's derivative; the oracle is the full A x B quadratic ground
-    // truth, so completeness across corpora is gate-checked.
-    "decontaminate_setsim" -> ((s, dir) => {
-      val train = table(s, dir, "documents")
-      val bench = train.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 500000).as("doc_id"),
-          concat(col("text"), lit(" eval prompt suffix")).as("text"))
-      Dedup.setSimJoinPrefixAB(train, bench, "text", "doc_id",
-          shingleSize = 3, threshold = 0.5)
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    "dedup_simhash" -> ((s, dir) => {
-      Dedup.simhashDedup(Fixtures.nearDupDocuments(s, dir), "text", "doc_id")
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    // Exact word-tf cosine pairs — the hash-free oracle-checked twin for
-    // dedup_simhash (SimHash sketches exactly this tf vector;
-    // SimhashEquivSpec pins the hamming<->cosine bracketing). Bounded to
-    // every 10th doc (planted dups preserved): the corpus' 31-word shared
-    // vocabulary makes the word join quadratic in corpus size, and this is
-    // the verification twin, not the scale path.
-    "dedup_simhash_cosine" -> ((s, dir) => {
-      Dedup.wordCosinePairs(
-          Fixtures.nearDupDocuments(s, dir).filter(col("doc_id") % 10 === 0),
-          "text", "doc_id", threshold = 0.95)
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    // Exact substring-level dedup (the "exact substring deduplication"
-    // stage of LLM data pipelines): duplicated word 6-gram spans —
-    // templated boilerplate INJECTED onto every 4th doc — are stripped
-    // from every occurrence after the corpus-order first, so exactly one
-    // copy survives. Pure string machinery, no hashing -> full DuckDB
-    // oracle down to the rebuilt clean_text.
-    "dedup_substring_spans" -> ((s, dir) => {
-      val d = table(s, dir, "documents")
-      val injected = d.withColumn("text",
-        when(col("doc_id") % 4 === 0,
-          concat(col("text"),
-            lit(" graft boiler plate sentence repeated across many documents verbatim today")))
-          .otherwise(col("text")))
-      Dedup.stripDuplicateSpans(injected, "text", "doc_id", n = 6)
-        .orderBy("doc")
-    }),
-
-    "dedup_embedding" -> ((s, dir) => {
-      Dedup.embeddingNearDup(Fixtures.jitteredEmbeddings(s, dir),
-          "embedding", "vec_id", threshold = 0.9)
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    // SemDeDup: cluster-bucketed semantic dedup — the corpus pruned to one
-    // canonical member per semantic-duplicate group (k-means assignment,
-    // in-cluster exact cosine, connected components, keep group minimum).
-    // Float cosine + clustering -> rows-only; dedup_embedding_exact is the
-    // all-pairs ground truth and OperatorsSpec pins pair recall/precision.
-    "dedup_semantic" -> ((s, dir) => {
-      val emb = Fixtures.jitteredEmbeddings(s, dir)
-      Dedup.keepCanonical(emb,
-          Dedup.semanticDedup(emb, "embedding", "vec_id",
-            numClusters = 8, dim = 64, threshold = 0.9),
-          "vec_id")
-        .select("vec_id")
-        .orderBy("vec_id")
-    }),
-
-    // All-pairs exact cosine near-dup (quantized double) — the oracle-checked
-    // ground truth for the LSH-bucketed dedup_embedding above.
-    "dedup_embedding_exact" -> ((s, dir) => {
-      Dedup.embeddingExactPairs(Fixtures.jitteredEmbeddings(s, dir),
-          "embedding", "vec_id", threshold = 0.9)
-        .orderBy("doc_a", "doc_b")
-    }),
-
-    "embed_mean_pool" -> ((s, dir) => {
-      Similarity.meanPoolRows(table(s, dir, "embeddings"), "label", "embedding")
-        .orderBy("label", "pos")
-    }),
-
-    "ann_brute_topk" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0)
-        .head().getSeq[Float](1).toSeq
-      Similarity.bruteForceTopK(e, "embedding", "vec_id", q, 10)
-    }),
-
-    // Oracle-checkable exact ANN: double cosine quantized to a 1e-6 grid
-    // (engine-portable; see Similarity.exactTopKQuantized). The float32
-    // CosineF32 fast path keeps its own rows-only entry above.
-    "ann_exact_topk" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0)
-        .head().getSeq[Float](1).toSeq
-      Similarity.exactTopKQuantized(e, "embedding", "vec_id", q, 10)
-    }),
-
-    "ann_ivf_topk" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0)
-        .head().getSeq[Float](1).toSeq
-      // Index built once per SF and reused (Fixtures) — ANN indexes
-      // amortize over their query stream.
-      val (centroids, assigned) = Fixtures.ivfIndex(s, dir)
-      Similarity.ivfTopK(assigned, centroids, "embedding", "vec_id", q, 10, nprobe = 4)
-    }),
-
-    // PERSISTED IVF: the index saved as a centroid-partitioned lake dataset,
-    // loaded back (no rebuild), then probed across ALL centroids on the
-    // quantized-cosine grid — which must equal the exact top-k, so the whole
-    // save -> load -> prune -> probe path is oracle-checked (same SQL as
-    // ann_exact_topk).
-    "ann_ivf_persisted" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0)
-        .head().getSeq[Float](1).toSeq
-      val index = Fixtures.ivfLake(s, dir)
-      Similarity.ivfTopKLake(index, "embedding", "vec_id", q, 10,
-        nprobe = index.centroids.size, quantize = true)
-    }),
-
-    // INDEX ERASURE: vec_id % 10 == 0 deleted from the persisted inverted
-    // lists (removeFromIvf rewrites only the touched list directories),
-    // index reloaded from disk, then the all-lists quantized probe must
-    // equal the exact top-k over the SURVIVING vectors — so the whole
-    // delete -> incremental-save -> reload -> probe path is oracle-checked.
-    "ann_ivf_removed" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 1)
-        .head().getSeq[Float](1).toSeq
-      val index = Fixtures.ivfLakeRemoved(s, dir)
-      Similarity.ivfTopKLake(index, "embedding", "vec_id", q, 10,
-        nprobe = index.centroids.size, quantize = true)
-    }),
-
-    // Erasure through the QUANTIZED lists: the same delete applied to the
-    // PQ-coded lake (centroid-partitioned like the float lists), reloaded,
-    // then the all-lists ADC + exact-rerank probe equals the exact top-k
-    // over the survivors — shares ann_ivf_removed's oracle.
-    "ann_ivfpq_removed" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 1)
-        .head().getSeq[Float](1).toSeq
-      val index = Fixtures.ivfLake(s, dir)
-      Pq.ivfPqTopK(Fixtures.ivfPqListsRemoved(s, dir), index.centroids,
-        Fixtures.pqModel(s, dir), "embedding", "vec_id", q, 10,
-        nprobe = index.centroids.size)
-    }),
-
-    // Product quantization, ADC-only: 16-byte codes stand in for 256-byte
-    // vectors; the scan reads codes alone. Approximate by construction →
-    // rows-only; PqSpec pins recall and ann_pq_rerank below is the
-    // oracle-checked exact twin.
-    "ann_pq_topk" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0)
-        .head().getSeq[Float](1).toSeq
-      val model = Fixtures.pqModel(s, dir)
-      Pq.adcTopK(Fixtures.pqEncoded(s, dir), "vec_id", model, q, 10)
-    }),
-
-    // Two-stage PQ search: ADC narrows to k*refine candidates, exact
-    // quantized cosine ranks the winners — recovers the exact top-k, so the
-    // whole train -> encode -> ADC -> rerank path shares ann_exact_topk's
-    // oracle.
-    "ann_pq_rerank" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0)
-        .head().getSeq[Float](1).toSeq
-      val model = Fixtures.pqModel(s, dir)
-      Pq.rerankTopK(Fixtures.pqEncoded(s, dir), "embedding", "vec_id",
-        model, q, k = 10, refine = 10)
-    }),
-
-    // Full IVF-PQ: probes prune to nprobe list DIRECTORIES (engine part
-    // pruning), ADC-scan 16-byte codes inside them, exact-rerank the
-    // survivors. Probe-subset approximate → rows-only; PqSpec pins the
-    // all-lists probe == exact top-k.
-    "ann_ivfpq_topk" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0)
-        .head().getSeq[Float](1).toSeq
-      val index = Fixtures.ivfLake(s, dir)
-      Pq.ivfPqTopK(Fixtures.ivfPqLists(s, dir), index.centroids,
-        Fixtures.pqModel(s, dir), "embedding", "vec_id", q, 10, nprobe = 4)
-    }),
-
-    // SQ8 scalar quantization: int8 codes (4x smaller vectors), code-space
-    // cosine = exact integer dot/norms + one deterministic division on the
-    // 1e-6 grid — approximate vs float cosine (SqSpec pins recall) but a
-    // pure function of the data, so the WHOLE quantize+score+rank path has
-    // a DuckDB oracle (PQ's ADC path, by contrast, is rows-only).
-    "ann_sq8_topk" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0)
-        .head().getSeq[Float](1).toSeq
-      Sq.sq8TopK(Sq.sq8Encode(e, "embedding", "vec_id"), "vec_id", q, 10)
-    }),
-
-    // FILTERED quantized search: the metadata pre-filter composes with the
-    // SQ8 code-space scorer — filter before scoring (never post-rank), and
-    // because SQ8 scoring is deterministic integer arithmetic the whole
-    // filter+quantize+rank path is oracle-checkable (the float IVF filtered
-    // path shares ann_filtered_topk's oracle instead).
-    "ann_filtered_sq8" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0)
-        .head().getSeq[Float](1).toSeq
-      Sq.sq8TopK(Sq.sq8Encode(e, "embedding", "vec_id", keepCols = Seq("label")),
-        "vec_id", q, 10, pred = Some(col("label").isin(2, 7)))
-    }),
-
-    // Batch ANN, exact: top-k for a whole query TABLE on the quantized
-    // grid — oracle-checked ground truth for the IVF similarity join below.
-    "ann_batch_exact" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      Similarity.exactBatchTopKQuantized(
-          e.filter(col("vec_id") % 25 === 0), e, "embedding", "vec_id", k = 5)
-        .orderBy("query_id", "rk")
-    }),
-
-    // FILTERED vector search, exact ground truth: top-k over only the rows
-    // passing a metadata predicate, scored on the oracle-portable 1e-6
-    // cosine grid. The filter lands on the scan (pre-filter), never on the
-    // ranked result — a post-filtered top-k could return < k survivors.
-    "ann_filtered_topk" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0)
-        .head().getSeq[Float](1).toSeq
-      Similarity.exactTopKQuantized(
-        e.filter(col("label").isin(2, 7)), "embedding", "vec_id", q, 10)
-    }),
-
-    // Filtered search THROUGH the persisted IVF index: the predicate is
-    // pushed into the probed inverted lists' parquet scans (PushedFilters —
-    // pinned in OperatorsSpec), so part pruning and row-group filtering
-    // compose. All-lists probe on the quantized grid == the exact filtered
-    // top-k, so the whole filter-pushdown probe path shares
-    // ann_filtered_topk's DuckDB oracle.
-    "ann_filtered_ivf" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0)
-        .head().getSeq[Float](1).toSeq
-      val index = Fixtures.ivfLake(s, dir)
-      Similarity.ivfTopKLake(index, "embedding", "vec_id", q, 10,
-        nprobe = index.centroids.size, quantize = true,
-        pred = Some(col("label").isin(2, 7)))
-    }),
-
-    // Batch ANN through the IVF lists: every query meets only its nprobe
-    // probed lists via a centroid equi-join — a similarity JOIN, not
-    // |queries| single scans. Float cosine + probe subset → rows-only;
-    // OperatorsSpec measures recall against ann_batch_exact.
-    "ann_batch_ivf" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val (centroids, assigned) = Fixtures.ivfIndex(s, dir)
-      Similarity.ivfBatchTopK(
-          e.filter(col("vec_id") % 25 === 0), assigned, centroids,
-          "embedding", "vec_id", k = 5, nprobe = 5)
-        .orderBy("query_id", "rk")
-    }),
-
-    // RECALL GATE for the approximate IVF path: measured recall@5 of the
-    // nprobe=5 batch probe against the exact twin, judged against a 0.60
-    // floor (measured 0.71 at sf0.01) — a quantizer/probe regression flips
-    // the status row and hash-mismatches; the oracle derives the truth
-    // count from the exact twin's own SQL. Plumbing twins can't see a
-    // QUALITY drop; this gate exists exactly for that.
-    "ann_recall_ivf" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") % 25 === 0)
-      val (centroids, assigned) = Fixtures.ivfIndex(s, dir)
-      val approx = Similarity.ivfBatchTopK(queries, assigned, centroids,
-        "embedding", "vec_id", k = 5, nprobe = 5)
-      val exact = Similarity.exactBatchTopKQuantized(queries, e,
-        "embedding", "vec_id", k = 5)
-      Recall.gate(approx, exact, Seq("query_id", "vec_id"),
-        minPermille = 600, minTruth = 50)
-    }),
-
-    // RECALL GATE for the PQ ADC scan: recall@10 of the 16x256 ADC ranking
-    // against the exact top-10 (measured 0.8 at sf0.01; floor 0.60). The
-    // rerank path recovers exactness (ann_pq_rerank); this pins the raw
-    // code-space scan's quality.
-    "ann_recall_pq" -> ((s, dir) => {
-      val e = table(s, dir, "embeddings")
-      val q = e.filter(col("vec_id") === 0)
-        .head().getSeq[Float](1).toSeq
-      val model = Fixtures.pqModel(s, dir)
-      val approx = Pq.adcTopK(Fixtures.pqEncoded(s, dir), "vec_id", model, q, 10)
-      val exact = Similarity.exactTopKQuantized(e, "embedding", "vec_id", q, 10)
-      Recall.gate(approx, exact, Seq("vec_id"),
-        minPermille = 600, minTruth = 10)
-    }),
-
-    // Integer byte-slot features through the typed mapPartitions decode seam
-    // — exactly reproducible in SQL (the float feature path stays spec-only:
-    // float accumulation order isn't portable, and an array column can't
-    // hash-compare anyway).
-    "multimodal_features" -> ((s, dir) => {
-      import s.implicits._
-      val media = Multimodal.mediaFromDocuments(table(s, dir, "documents"))
-        .as[Multimodal.MediaRow]
-      Multimodal.byteSlotFeatures(media).toDF()
-        .select(col("media_id"), col("n_bytes"), col("slot").cast("long").as("slot"),
-          col("byte_sum"))
-        .orderBy("media_id", "slot")
-    }),
-
-    // Perceptual-hash near-dup detection over media payloads: every tenth
-    // document replays with a length-preserving byte perturbation
-    // (translate e->f); pairs within hamming 3 of the 32-bit dHash-shaped
-    // hash. Integer arithmetic + COMPLETE chunk bucketing -> the bucketed
-    // engine answer equals DuckDB's all-pairs answer bit-for-bit.
-    "multimodal_phash_dedup" -> ((s, dir) => {
-      import s.implicits._
-      val docs = table(s, dir, "documents")
-      val corpus = docs.select(col("doc_id"), col("text"))
-        .unionByName(docs.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 100000L).as("doc_id"),
-            translate(col("text"), "e", "f").as("text")))
-      val media = Multimodal.mediaFromDocuments(corpus)
-        .as[Multimodal.MediaRow]
-      Multimodal.phashNearDups(media, maxHamming = 3).orderBy("id_a", "id_b")
-    }),
-
-    "multimodal_frames" -> ((s, dir) => {
-      import s.implicits._
-      val media = Multimodal.mediaFromDocuments(table(s, dir, "documents"))
-        .as[Multimodal.MediaRow]
-      Multimodal.sampleFrames(media, n = 4)
-        .select(col("media_id"), col("frame_nr").cast("long").as("frame_nr"),
-          length(col("frame")).cast("long").as("frame_bytes"))
-        .orderBy("media_id", "frame_nr")
-    })
-  )
-
-  /** Seven-surface right-to-be-forgotten oracle, shared by the batch
-    * composition (`pipeline_erasure_full`) and its streaming twin
-    * (`stream_erasure`) — the streaming sink's incremental removes must
-    * converge to the exact state one batch erase produces.
-    */
-  private val erasureFullOracle: String =
-    """WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 1000),
-      |k AS (SELECT * FROM d WHERE doc_id % 170 <> 0),
-      |norm AS (
-      |  SELECT trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
-      |              ' +', ' ', 'g')) AS t, MIN(doc_id) AS m
-      |  FROM d GROUP BY t),
-      |bmw AS (SELECT DISTINCT doc_id, w FROM
-      |        (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS w FROM k)),
-      |ws AS (SELECT doc_id,
-      |         string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS ws
-      |       FROM k),
-      |tri AS (SELECT doc_id, COUNT(DISTINCT s) AS n FROM (
-      |          SELECT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS s
-      |          FROM ws, LATERAL (SELECT unnest(generate_series(1,
-      |                 greatest(len(ws) - 2, 0))) AS i) g) GROUP BY doc_id),
-      |sh AS (SELECT CAST(SUM(COALESCE(tri.n, 1)) AS BIGINT) AS n
-      |       FROM ws LEFT JOIN tri USING (doc_id))
-      |SELECT '1_corpus' AS surface,
-      |       CAST((SELECT COUNT(*) FROM k) AS BIGINT) AS rows,
-      |       CAST(0 AS BIGINT) AS erased_refs
-      |UNION ALL SELECT '2_exact_index',
-      |       CAST((SELECT COUNT(*) FROM norm WHERE m % 170 <> 0) AS BIGINT), 0
-      |UNION ALL SELECT '3_bm25_postings',
-      |       CAST((SELECT COUNT(*) FROM bmw) AS BIGINT), 0
-      |UNION ALL SELECT '4_positional',
-      |       CAST((SELECT COALESCE(SUM(len(string_split(trim(text), ' '))), 0)
-      |             FROM k) AS BIGINT), 0
-      |UNION ALL SELECT '5_minhash_bands',
-      |       CAST(8 * (SELECT COUNT(*) FROM k) AS BIGINT), 0
-      |UNION ALL SELECT '6_minhash_shingles', (SELECT n FROM sh), 0
-      |UNION ALL SELECT '7_ivf_assigned',
-      |       CAST((SELECT COUNT(*) FROM embeddings
-      |             WHERE vec_id < 1000 AND vec_id % 170 <> 0) AS BIGINT), 0
-      |ORDER BY surface""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         |  ${osum("l_quantity")} AS sum_qty,
-         |  ${osum("l_extendedprice")} AS sum_base_price,
-         |  ${osum("l_extendedprice*(1-l_discount)", 4)} AS sum_disc_price,
-         |  COUNT(*) AS count_order
-         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-         |GROUP BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q02_filter_pushdown" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_quantity
-        |FROM lineitem WHERE l_quantity >= 49 AND l_returnflag = 'R'""".stripMargin,
-
-    "q03_top_orders" ->
-      s"""SELECT o_orderkey, o_orderdate,
-         |  ${osum("l_extendedprice*(1-l_discount)", 4)} AS revenue
-         |FROM customer, orders, lineitem
-         |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
-         |  AND o_orderkey = l_orderkey
-         |  AND o_orderdate < TIMESTAMP '1997-01-01'
-         |  AND l_shipdate > TIMESTAMP '1997-01-01'
-         |GROUP BY o_orderkey, o_orderdate
-         |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q04_semi_join" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_orders
-        |FROM orders WHERE EXISTS (
-        |  SELECT 1 FROM lineitem
-        |  WHERE l_orderkey = o_orderkey AND l_quantity >= 48)
-        |GROUP BY o_orderpriority""".stripMargin,
-
-    "q05_revenue_by_nation" ->
-      s"""SELECT n_name, ${osum("l_extendedprice*(1-l_discount)", 4)} AS revenue
-         |FROM customer, orders, lineitem, supplier, nation
-         |WHERE c_custkey = o_custkey AND o_orderkey = l_orderkey
-         |  AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-         |  AND s_nationkey = n_nationkey
-         |GROUP BY n_name""".stripMargin,
-
-    "q06_forecast_revenue" ->
-      s"""SELECT ${osum("l_extendedprice*l_discount", 4)} AS revenue,
-         |  COUNT(*) AS n_rows
-         |FROM lineitem
-         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-         |  AND l_shipdate < TIMESTAMP '1997-01-01'
-         |  AND l_discount >= 0.03 AND l_discount <= 0.05
-         |  AND l_quantity < 24""".stripMargin,
-
-    "q07_cte_union" ->
-      s"""WITH hi AS (SELECT COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |            FROM orders WHERE o_totalprice > 300000),
-         |     lo AS (SELECT COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |            FROM orders WHERE o_totalprice < 5000)
-         |SELECT 'high' AS tier, n, total FROM hi
-         |UNION ALL
-         |SELECT 'low' AS tier, n, total FROM lo""".stripMargin,
-
-    "q08_sort_limit" ->
-      """SELECT c_custkey, c_name, c_acctbal FROM customer
-        |ORDER BY c_acctbal DESC, c_custkey LIMIT 20""".stripMargin,
-
-    "q09_distinct_agg" ->
-      """SELECT l_returnflag,
-        |  COUNT(DISTINCT l_suppkey) AS distinct_supp,
-        |  COUNT(DISTINCT l_partkey) AS distinct_part,
-        |  COUNT(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q10_case_arith" ->
-      s"""SELECT CASE WHEN o_totalprice < 50000 THEN 'small'
-         |            WHEN o_totalprice < 200000 THEN 'medium'
-         |            ELSE 'large' END AS size_tier,
-         |  COUNT(*) AS n_orders, ${osum("o_totalprice")} AS total
-         |FROM orders GROUP BY 1""".stripMargin,
-
-    "q11_string_fns" ->
-      """SELECT p_partkey,
-        |  LOWER(p_name) AS name_lower,
-        |  UPPER(p_brand) AS brand_upper,
-        |  SUBSTR(p_type, 1, 5) AS type_prefix,
-        |  CAST(LENGTH(p_name) AS BIGINT) AS name_len,
-        |  p_brand || '|' || p_type AS brand_type
-        |FROM part""".stripMargin,
-
-    "q12_date_parts" ->
-      s"""SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
-         |  CAST(EXTRACT(month FROM o_orderdate) AS BIGINT) AS o_month,
-         |  COUNT(*) AS n_orders, ${osum("o_totalprice")} AS total
-         |FROM orders GROUP BY 1, 2""".stripMargin,
-
-    "q13_window_rank" ->
-      """SELECT c_nationkey, rk, c_custkey, c_acctbal FROM (
-        |  SELECT c_nationkey, c_custkey, c_acctbal,
-        |    ROW_NUMBER() OVER (PARTITION BY c_nationkey
-        |                       ORDER BY c_acctbal DESC, c_custkey) AS rk
-        |  FROM customer) t
-        |WHERE rk <= 3""".stripMargin,
-
-    "q14_rollup" ->
-      s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-         |  ${osum("l_quantity")} AS qty
-         |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "q15_events_daily" ->
-      s"""SELECT date_trunc('day', ts) AS day, event_type,
-         |  COUNT(*) AS n, ${osum("value", 4)} AS total_value
-         |FROM events GROUP BY 1, 2""".stripMargin,
-
-    "q16_anti_join" ->
-      """SELECT c_nationkey, COUNT(*) AS n_customers
-        |FROM customer WHERE NOT EXISTS (
-        |  SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_totalprice > 400000)
-        |GROUP BY c_nationkey""".stripMargin,
-
-    "q17_json_extract" ->
-      """SELECT event_id,
-        |  CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS BIGINT) AS k_val
-        |FROM events""".stripMargin,
-
-    "q30_corr_manual" ->
-      s"""WITH m AS (
-         |  SELECT l_returnflag,
-         |    CAST(COUNT(*) AS DOUBLE) AS n,
-         |    ${osum("l_quantity")} AS sx,
-         |    ${osum("l_extendedprice")} AS sy,
-         |    ${osum("l_quantity*l_extendedprice", 4)} AS sxy,
-         |    ${osum("l_quantity*l_quantity", 4)} AS sxx,
-         |    ${osum("l_extendedprice*l_extendedprice", 4)} AS syy
-         |  FROM lineitem GROUP BY l_returnflag)
-         |SELECT l_returnflag,
-         |  (n*sxy - sx*sy) / (SQRT(n*sxx - sx*sx) * SQRT(n*syy - sy*sy))
-         |    AS corr_qty_price
-         |FROM m""".stripMargin,
-
-    "q31_percentiles" ->
-      """SELECT o_orderstatus,
-        |  percentile_disc(0.5) WITHIN GROUP (ORDER BY o_totalprice) AS p50,
-        |  percentile_disc(0.9) WITHIN GROUP (ORDER BY o_totalprice) AS p90
-        |FROM orders GROUP BY o_orderstatus""".stripMargin,
-
-    "text_docfreq" ->
-      """SELECT w, COUNT(*) AS df FROM (
-        |  SELECT DISTINCT doc_id, unnest(string_split(TRIM(text), ' ')) AS w
-        |  FROM documents) t
-        |GROUP BY w""".stripMargin,
-
-    "sql_via_catalog" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders GROUP BY o_orderstatus""".stripMargin,
-
-    "lake_upsert" ->
-      s"""WITH delta AS (
-         |  SELECT o_orderkey, o_totalprice + 1000 AS o_totalprice,
-         |         CAST(NULL AS VARCHAR) AS o_orderpriority
-         |  FROM orders WHERE o_orderkey % 7 = 0),
-         |merged AS (
-         |  SELECT l.o_orderstatus AS o_orderstatus,
-         |         COALESCE(d.o_totalprice, l.o_totalprice) AS o_totalprice,
-         |         COALESCE(d.o_orderpriority, l.o_orderpriority) AS o_orderpriority
-         |  FROM orders l FULL OUTER JOIN delta d ON l.o_orderkey = d.o_orderkey)
-         |SELECT o_orderstatus, COUNT(*) AS n,
-         |  ${osum("o_totalprice")} AS sum_price,
-         |  COUNT(o_orderpriority) AS n_priority
-         |FROM merged GROUP BY o_orderstatus""".stripMargin,
-
-    "lake_insert" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM (SELECT * FROM orders
-         |      UNION ALL SELECT * FROM orders WHERE o_orderkey % 10 = 0) t
-         |GROUP BY o_orderstatus""".stripMargin,
-
-    "lake_delete" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders WHERE o_orderkey % 5 <> 0
-         |GROUP BY o_orderstatus""".stripMargin,
-
-    "lake_delete_where" ->
-      s"""SELECT COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders
-         |WHERE NOT (o_orderkey BETWEEN 2000 AND 3000 AND o_orderstatus = 'F')""".stripMargin,
-
-    "lake_sql_dml" ->
-      s"""WITH t AS (
-         |  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-         |  UNION ALL
-         |  SELECT o_orderkey + 1000000, o_orderstatus, o_totalprice
-         |  FROM orders WHERE o_orderkey <= 100
-         |), u AS (
-         |  SELECT o_orderkey, o_orderstatus,
-         |         CASE WHEN o_orderkey <= 50 THEN o_totalprice + 5
-         |              ELSE o_totalprice END AS o_totalprice
-         |  FROM t
-         |)
-         |SELECT COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM u
-         |WHERE NOT (o_orderstatus = 'O' AND o_orderkey BETWEEN 4000 AND 5000)""".stripMargin,
-
-    // lake_transaction: the committed move (keys <= 1000, A -> B) shows;
-    // the aborted move (1000 < k <= 2000) must leave no trace.
-    "lake_transaction" ->
-      s"""WITH u AS (
-         |  SELECT 'a' AS side, o_orderstatus, o_totalprice
-         |  FROM orders WHERE o_orderkey > 1000
-         |  UNION ALL
-         |  SELECT 'b' AS side, o_orderstatus, o_totalprice
-         |  FROM orders WHERE o_orderkey <= 1000)
-         |SELECT side, o_orderstatus, COUNT(*) AS n,
-         |       ${osum("o_totalprice")} AS total
-         |FROM u
-         |GROUP BY side, o_orderstatus
-         |ORDER BY side, o_orderstatus""".stripMargin,
-
-    // lake_sql_transaction: the committed BEGIN/COMMIT script shows (keys
-    // <= 1000 moved a->b, keys <= 500 tagged — with a ';' inside the tag
-    // literal exercising the quote-aware script splitter); the aborted
-    // script (its middle INSERT fails analysis) must leave no trace.
-    "lake_sql_transaction" ->
-      s"""WITH u AS (
-         |  SELECT 'a' AS side, o_orderstatus, o_totalprice, o_orderpriority
-         |  FROM orders WHERE o_orderkey > 1000
-         |  UNION ALL
-         |  SELECT 'b' AS side, o_orderstatus, o_totalprice,
-         |         CASE WHEN o_orderkey <= 500 THEN 'moved;kept'
-         |              ELSE o_orderpriority END AS o_orderpriority
-         |  FROM orders WHERE o_orderkey <= 1000)
-         |SELECT side, o_orderstatus, COUNT(*) AS n,
-         |       CAST(SUM(CASE WHEN o_orderpriority = 'moved;kept' THEN 1 ELSE 0 END)
-         |            AS BIGINT) AS tagged,
-         |       ${osum("o_totalprice")} AS total
-         |FROM u
-         |GROUP BY side, o_orderstatus
-         |ORDER BY side, o_orderstatus""".stripMargin,
-
-    "lake_diff" ->
-      """SELECT * FROM (
-        |  SELECT 'added' AS diff_status, COUNT(*) AS n FROM orders WHERE o_orderkey <= 20
-        |  UNION ALL
-        |  SELECT 'removed', COUNT(*) FROM orders WHERE o_orderkey % 7 = 0
-        |  UNION ALL
-        |  SELECT 'changed', COUNT(*) FROM orders
-        |  WHERE o_orderkey % 7 <> 0 AND o_orderkey % 5 = 0
-        |  UNION ALL
-        |  SELECT 'unchanged', COUNT(*) FROM orders
-        |  WHERE o_orderkey % 7 <> 0 AND o_orderkey % 5 <> 0
-        |) ORDER BY diff_status""".stripMargin,
-
-    "lake_validated_ingest" ->
-      """SELECT o_orderkey, v AS violation FROM (
-        |  SELECT o_orderkey, 'in_range(o_totalprice)' AS v FROM orders
-        |  WHERE o_totalprice < 0 OR o_totalprice > 50000
-        |  UNION ALL
-        |  SELECT o_orderkey, 'matches_regex(o_orderpriority)' FROM orders
-        |  WHERE NOT regexp_matches(o_orderpriority, '^[1-3]-.*$')
-        |) ORDER BY o_orderkey, violation""".stripMargin,
-
-    "lake_sql_optimize" ->
-      """SELECT COUNT(*) AS cnt,
-        |       MIN(CASE WHEN o_orderkey BETWEEN 100 AND 200
-        |                THEN o_totalprice + 25 ELSE o_totalprice END) AS min_price,
-        |       MAX(CASE WHEN o_orderkey BETWEEN 100 AND 200
-        |                THEN o_totalprice + 25 ELSE o_totalprice END) AS max_price
-        |FROM orders""".stripMargin,
-
-    // lake_sql_optimize_where: selective compaction must not change
-    // contents — the oracle reproduces the post-UPDATE state per batch.
-    "lake_sql_optimize_where" ->
-      """SELECT CAST(FLOOR(o_orderkey / 6000.0) AS INT) AS o_batch,
-        |       COUNT(*) AS cnt,
-        |       MIN(CASE WHEN o_orderkey BETWEEN 100 AND 200
-        |                THEN o_totalprice + 25 ELSE o_totalprice END) AS min_price,
-        |       MAX(CASE WHEN o_orderkey BETWEEN 100 AND 200
-        |                THEN o_totalprice + 25 ELSE o_totalprice END) AS max_price
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "lake_relayout" ->
-      """SELECT o_orderstatus, COUNT(*) AS n, MIN(o_orderkey) AS min_key
-        |FROM orders WHERE o_orderstatus IN ('F', 'O')
-        |GROUP BY o_orderstatus""".stripMargin,
-
-    "lake_sql_merge" ->
-      s"""SELECT COUNT(*) AS n,
-         |       ${osum("o_totalprice + CASE WHEN o_orderkey % 17 = 0 THEN 50 ELSE 0 END")} AS total
-         |FROM orders""".stripMargin,
-
-    "lake_sql_merge_cdc" ->
-      """WITH base AS (SELECT o_orderkey, o_totalprice FROM orders
-        |              WHERE o_orderkey % 4 <> 3),
-        |     src AS (SELECT o_orderkey, o_totalprice + 1000 AS p,
-        |                    CASE WHEN o_orderkey % 5 = 0 THEN 'D' ELSE 'U' END AS op
-        |             FROM orders WHERE o_orderkey % 2 = 0),
-        |     fin AS (
-        |       SELECT CASE WHEN s.o_orderkey IS NOT NULL THEN s.p
-        |                   ELSE b.o_totalprice END AS price
-        |       FROM base b LEFT JOIN src s ON b.o_orderkey = s.o_orderkey
-        |       WHERE s.o_orderkey IS NULL OR s.op <> 'D'
-        |       UNION ALL
-        |       SELECT s.p AS price FROM src s
-        |       WHERE s.op <> 'D'
-        |         AND s.o_orderkey NOT IN (SELECT o_orderkey FROM base))
-        |SELECT COUNT(*) AS n,
-        |       CAST(SUM(CAST(price AS DECIMAL(38,2))) AS DOUBLE) AS total
-        |FROM fin""".stripMargin,
-
-    "lake_sql_copy" ->
-      s"""SELECT COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders""".stripMargin,
-
-    "lake_update_where" ->
-      s"""SELECT COUNT(*) AS n,
-         |       ${osum("CASE WHEN o_orderkey BETWEEN 2000 AND 3000 THEN o_totalprice + 100 ELSE o_totalprice END")} AS total
-         |FROM orders""".stripMargin,
-
-    "lake_migrating_upsert" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM (
-         |  SELECT CASE WHEN o_orderkey % 17 = 0 THEN 'F' ELSE o_orderstatus END
-         |           AS o_orderstatus,
-         |         o_totalprice + CASE WHEN o_orderkey % 17 = 0 THEN 50 ELSE 0 END
-         |           AS o_totalprice
-         |  FROM orders) t
-         |GROUP BY o_orderstatus""".stripMargin,
-
-    "lake_located_delete" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders WHERE o_orderkey % 6 <> 0
-         |GROUP BY o_orderstatus""".stripMargin,
-
-    "lake_bloom_pruning" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders WHERE o_orderkey % 1000 <> 0
-         |GROUP BY o_orderstatus""".stripMargin,
-
-    "lake_storage_roundtrip" ->
-      s"""SELECT l_returnflag, COUNT(*) AS n, ${osum("l_extendedprice")} AS total
-         |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "lake_ipc_roundtrip" ->
-      s"""SELECT l_returnflag, COUNT(*) AS n, ${osum("l_extendedprice")} AS total
-         |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "lake_vacuum_orphans" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // Each %3 slice exactly once despite the re-delivered epoch.
-    "stream_exactly_once" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders WHERE o_orderkey % 3 <= 1
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // The deterministic id assignment: first batch = row_number over sorted
-    // distinct values; the second batch's UNSEEN values continue after the
-    // current max id, again in sorted order.
-    "cat_encode" ->
-      """WITH seg AS (SELECT DISTINCT c_mktsegment AS value FROM customer),
-        |seg_id AS (SELECT value, ROW_NUMBER() OVER (ORDER BY value) AS id FROM seg),
-        |pri AS (SELECT DISTINCT o_orderpriority AS value FROM orders),
-        |pri_new AS (
-        |  SELECT value FROM pri WHERE value NOT IN (SELECT value FROM seg_id)),
-        |pri_id AS (
-        |  SELECT value,
-        |         (SELECT COUNT(*) FROM seg_id) + ROW_NUMBER() OVER (ORDER BY value) AS id
-        |  FROM pri_new),
-        |dict AS (SELECT * FROM seg_id UNION ALL SELECT * FROM pri_id)
-        |SELECT 'seg' AS src, d.id AS id, COUNT(*) AS n
-        |FROM customer c JOIN dict d ON c.c_mktsegment = d.value GROUP BY d.id
-        |UNION ALL
-        |SELECT 'pri' AS src, d.id AS id, COUNT(*) AS n
-        |FROM orders o JOIN dict d ON o.o_orderpriority = d.value GROUP BY d.id
-        |ORDER BY src, id""".stripMargin,
-
-    "lake_part_pruning" ->
-      s"""SELECT COUNT(*) AS n, ${osum("l_quantity")} AS sum_qty
-         |FROM lineitem WHERE l_returnflag = 'R'""".stripMargin,
-
-    "lake_bucket_pruning" ->
-      s"""SELECT COUNT(*) AS n, ${osum("l_extendedprice")} AS total
-         |FROM lineitem WHERE l_partkey = 1042""".stripMargin,
-
-    "lake_zone_pruning" ->
-      s"""SELECT COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders WHERE o_orderkey BETWEEN 1000 AND 2000""".stripMargin,
-
-    "export_shards" ->
-      """SELECT doc_id % 8 AS shard, COUNT(*) AS docs,
-        |       CAST(SUM(n_chars) AS BIGINT) AS chars
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "export_shards_jsonl" ->
-      """SELECT doc_id % 8 AS shard, COUNT(*) AS docs,
-        |       CAST(SUM(n_chars) AS BIGINT) AS chars
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    // export_webdataset: exact USTAR framing — 512-byte header + payload
-    // padded to a 512 multiple per member, 1024-byte end-of-archive.
-    "export_webdataset" ->
-      """SELECT doc_id % 8 AS shard,
-        |  CAST(COUNT(*) AS BIGINT) AS n_samples,
-        |  CAST(SUM(512 + LENGTH(text) + (512 - LENGTH(text) % 512) % 512)
-        |       + 1024 AS BIGINT) AS n_bytes
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "import_webdataset" ->
-      """SELECT doc_id % 8 AS shard,
-        |  CAST(COUNT(*) AS BIGINT) AS n_docs,
-        |  CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-        |  CAST(SUM(LENGTH(text)) AS BIGINT) AS sum_chars,
-        |  CAST(SUM(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_bins,
-        |  CAST(SUM(CASE WHEN doc_id % 3 = 0
-        |           THEN LENGTH(SUBSTRING(text, 1, 16)) ELSE 0 END) AS BIGINT)
-        |    AS sum_bin_bytes
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "lake_dpp_join" ->
-      s"""SELECT o_orderpriority, COUNT(*) AS n,
-         |       ${osum("l_extendedprice * (1 - l_discount)", 4)} AS revenue
-         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |WHERE o_orderkey BETWEEN 3000 AND 4800 AND o_orderpriority = '1-URGENT'
-         |GROUP BY o_orderpriority""".stripMargin,
-
-    "lake_stats_meta" ->
-      """SELECT COUNT(*) AS cnt,
-        |       MIN(o_orderkey) AS min_o_orderkey, MAX(o_orderkey) AS max_o_orderkey,
-        |       MIN(o_totalprice) AS min_o_totalprice, MAX(o_totalprice) AS max_o_totalprice,
-        |       MIN(o_orderdate) AS min_o_orderdate, MAX(o_orderdate) AS max_o_orderdate
-        |FROM orders""".stripMargin,
-
-    "lake_stats_meta_grouped" ->
-      """SELECT CAST(FLOOR(o_orderkey / 6000.0) AS INT) AS o_batch,
-        |       COUNT(*) AS cnt,
-        |       MIN(o_orderkey) AS min_o_orderkey, MAX(o_orderkey) AS max_o_orderkey
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "lake_sql_stats_meta_filtered" ->
-      """SELECT COUNT(*) AS cnt,
-        |       MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key
-        |FROM orders WHERE CAST(FLOOR(o_orderkey / 6000.0) AS INT) = 1""".stripMargin,
-
-    "lake_sql_stats_meta" ->
-      """SELECT COUNT(*) AS cnt,
-        |       MIN(o_orderkey) AS min_key, MAX(o_orderkey) AS max_key,
-        |       MIN(o_orderdate) AS min_date, MAX(o_orderdate) AS max_date
-        |FROM orders""".stripMargin,
-
-    "lake_stats_sum" ->
-      """SELECT COUNT(*) AS cnt,
-        |       CAST(SUM(o_custkey) AS BIGINT) AS sum_o_custkey,
-        |       CAST(SUM(o_orderkey) AS BIGINT) AS sum_o_orderkey
-        |FROM orders""".stripMargin,
-
-    // lake_qcut_approx: the engine emits a CERTIFIED verdict per bin (share
-    // within the GK rank bound); the oracle pins all ten verdicts true.
-    "lake_qcut_approx" ->
-      """SELECT CAST(UNNEST(generate_series(1, 10)) AS BIGINT) AS bin,
-        |  TRUE AS within_bound ORDER BY 1""".stripMargin,
-
-    // lake_stats_quantile: exact_disc is the k-th smallest (k=ceil(q*n)) —
-    // a value from the data, so bit-exact across engines; within_bound
-    // pins the catalog's GK answers to their rank bound on the Spark side.
-    "lake_stats_quantile" ->
-      """WITH ranked AS (
-        |  SELECT o_totalprice AS v,
-        |         ROW_NUMBER() OVER (ORDER BY o_totalprice) AS rn,
-        |         (SELECT COUNT(*) FROM orders) AS n
-        |  FROM orders)
-        |SELECT q_pct, MIN(v) AS exact_disc, TRUE AS within_bound
-        |FROM (VALUES (25), (50), (75), (95)) AS qs(q_pct), ranked
-        |WHERE rn = CAST(CEIL(q_pct * n / 100.0) AS BIGINT)
-        |GROUP BY q_pct
-        |ORDER BY q_pct""".stripMargin,
-
-    // lake_stats_topk: the catalog's MG top values in the exact regime are
-    // plain group-by counts; the certification column must be true.
-    "lake_stats_topk" ->
-      """SELECT o_orderstatus AS value, COUNT(*) AS cnt, TRUE AS exact
-        |FROM orders GROUP BY o_orderstatus
-        |ORDER BY cnt DESC, value LIMIT 3""".stripMargin,
-
-    "lake_sql_stats_topk" ->
-      """SELECT o_orderstatus, COUNT(*) AS cnt FROM orders
-        |GROUP BY o_orderstatus ORDER BY cnt DESC, o_orderstatus LIMIT 3""".stripMargin,
-
-    "lake_sql_stats_group_counts" ->
-      """SELECT CAST(FLOOR(o_orderkey / 3000.0) AS INT) AS o_batch,
-        |       o_orderstatus, COUNT(*) AS cnt
-        |FROM orders GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "lake_stats_topk_grouped" ->
-      """WITH counts AS (
-        |  SELECT CAST(FLOOR(o_orderkey / 3000.0) AS INT) AS o_batch, o_orderstatus AS value,
-        |         COUNT(*) AS cnt
-        |  FROM orders GROUP BY 1, 2),
-        |ranked AS (
-        |  SELECT o_batch, value, cnt, TRUE AS exact,
-        |         ROW_NUMBER() OVER (PARTITION BY o_batch
-        |                            ORDER BY cnt DESC, value) AS rk
-        |  FROM counts)
-        |SELECT o_batch, value, cnt, exact FROM ranked WHERE rk = 1
-        |ORDER BY o_batch""".stripMargin,
-
-    // lake_sql_show_stats: the exact stat families per column. The double
-    // column (o_totalprice) has no sum family BY CONTRACT (float sums are
-    // never metadata-answered) — its non_nulls/sum_d are NULL.
-    "lake_sql_show_stats" ->
-      """SELECT * FROM (
-        |  SELECT 'o_custkey' AS "column", COUNT(*) AS n_rows,
-        |         COUNT(o_custkey) AS non_nulls,
-        |         CAST(MIN(o_custkey) AS DOUBLE) AS min_d,
-        |         CAST(MAX(o_custkey) AS DOUBLE) AS max_d,
-        |         CAST(SUM(CAST(o_custkey AS DECIMAL(38,0))) AS DOUBLE) AS sum_d
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'o_orderkey', COUNT(*), COUNT(o_orderkey),
-        |         CAST(MIN(o_orderkey) AS DOUBLE), CAST(MAX(o_orderkey) AS DOUBLE),
-        |         CAST(SUM(CAST(o_orderkey AS DECIMAL(38,0))) AS DOUBLE)
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'o_totalprice', COUNT(*), CAST(NULL AS BIGINT),
-        |         CAST(MIN(o_totalprice) AS DOUBLE), CAST(MAX(o_totalprice) AS DOUBLE),
-        |         CAST(NULL AS DOUBLE)
-        |  FROM orders)
-        |ORDER BY "column"""".stripMargin,
-
-    "lake_sql_stats_sum" ->
-      """SELECT COUNT(*) AS cnt, CAST(SUM(o_custkey) AS BIGINT) AS sum_cust,
-        |       MIN(o_orderkey) AS min_key
-        |FROM orders""".stripMargin,
-
-    "lake_sql_stats_sum_grouped" ->
-      """SELECT CAST(FLOOR(o_orderkey / 6000.0) AS INT) AS o_batch,
-        |       COUNT(*) AS cnt, CAST(SUM(o_custkey) AS BIGINT) AS sum_cust
-        |FROM orders WHERE CAST(FLOOR(o_orderkey / 6000.0) AS INT) IN (0, 1)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "lake_stats_hybrid" ->
-      """SELECT COUNT(*) AS cnt,
-        |       MIN(o_orderkey) AS min_o_orderkey, MAX(o_orderkey) AS max_o_orderkey,
-        |       MIN(CASE WHEN o_orderkey < 32 THEN 0.125 ELSE o_totalprice END) AS min_o_totalprice,
-        |       MAX(CASE WHEN o_orderkey < 32 THEN 0.125 ELSE o_totalprice END) AS max_o_totalprice
-        |FROM orders""".stripMargin,
-
-    "lake_stats_hybrid_sum" ->
-      """SELECT COUNT(*) AS cnt,
-        |       CAST(SUM(CASE WHEN o_orderkey < 32
-        |                     THEN o_custkey + 1000000 ELSE o_custkey END) AS BIGINT)
-        |         AS sum_o_custkey
-        |FROM orders""".stripMargin,
-
-    "lake_sql_stats_hybrid" ->
-      """SELECT COUNT(*) AS cnt,
-        |       CAST(SUM(CASE WHEN o_orderkey < 32
-        |                     THEN o_custkey + 1000000 ELSE o_custkey END) AS BIGINT)
-        |         AS sum_cust,
-        |       MIN(o_orderkey) AS min_key, COUNT(o_custkey) AS n_cust
-        |FROM orders""".stripMargin,
-
-    "lake_sql_stats_hybrid_grouped" ->
-      """SELECT CAST(FLOOR(o_orderkey / 6000.0) AS INT) AS o_batch,
-        |       COUNT(*) AS cnt,
-        |       CAST(SUM(CASE WHEN o_orderkey < 32
-        |                     THEN o_custkey + 1000000 ELSE o_custkey END) AS BIGINT)
-        |         AS sum_cust
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "lake_sql_stats_avg" ->
-      """SELECT COUNT(*) AS cnt, AVG(o_custkey) AS avg_cust
-        |FROM orders""".stripMargin,
-
-    "lake_sql_stats_avg_grouped" ->
-      """SELECT CAST(FLOOR(o_orderkey / 6000.0) AS INT) AS o_batch,
-        |       COUNT(*) AS cnt, AVG(o_custkey) AS avg_cust
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "lake_sql_distinct_cells" ->
-      """SELECT DISTINCT CAST(FLOOR(o_orderkey / 6000.0) AS INT) AS o_batch
-        |FROM orders ORDER BY o_batch""".stripMargin,
-
-    "lake_sql_count_distinct" ->
-      """SELECT COUNT(DISTINCT CAST(FLOOR(o_orderkey / 6000.0) AS INT))
-        |         AS n_batches,
-        |       COUNT(*) AS cnt
-        |FROM orders""".stripMargin,
-
-    "lake_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders ORDER BY o_orderkey DESC LIMIT 20""".stripMargin,
-
-    "lake_topk_price" ->
-      """SELECT o_orderkey, o_totalprice
-        |FROM orders ORDER BY o_totalprice DESC, o_orderkey DESC LIMIT 15""".stripMargin,
-
-    "lake_sql_zone_pruning" ->
-      s"""SELECT COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders WHERE o_orderkey BETWEEN 1000 AND 2000""".stripMargin,
-
-    "lake_sql_part_pruning" ->
-      s"""SELECT COUNT(*) AS n, ${osum("l_extendedprice")} AS total
-         |FROM lineitem WHERE l_returnflag = 'R' AND l_partkey = 1042""".stripMargin,
-
-    // o_batch = trunc(o_orderkey / 4000) — orderkeys are positive, so FLOOR
-    // mirrors Spark's double-division + int cast truncation exactly.
-    "lake_sql_in_pruning" ->
-      s"""SELECT COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders
-         |WHERE CAST(FLOOR(o_orderkey / 4000.0) AS INT) IN (0, 3)""".stripMargin,
-
-    "lake_sql_or_pruning" ->
-      s"""SELECT COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders
-         |WHERE CAST(FLOOR(o_orderkey / 4000.0) AS INT) = 0
-         |   OR CAST(FLOOR(o_orderkey / 4000.0) AS INT) = 3""".stripMargin,
-
-    "lake_orc_roundtrip" ->
-      s"""SELECT l_returnflag, COUNT(*) AS n, ${osum("l_extendedprice")} AS total
-         |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "lake_csv_roundtrip" ->
-      s"""SELECT l_returnflag, COUNT(*) AS n, ${osum("l_extendedprice")} AS total
-         |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "lake_zorder_pruning" ->
-      s"""SELECT COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders
-         |WHERE o_custkey BETWEEN 100 AND 500
-         |  AND o_totalprice BETWEEN 50000 AND 150000""".stripMargin,
-
-    // The feed's images, reconstructed relationally: I = the inserted
-    // slice; U- = the matched (existing) upsert keys as they were; U+ =
-    // every upsert key after the merge (+100); D = the deleted keys'
-    // post-insert rows. Op codes sort in binary ('+' < '-') in both
-    // engines.
-    "lake_change_feed" ->
-      s"""WITH ch AS (
-         |  SELECT 'I' AS op, o_totalprice FROM orders
-         |  WHERE o_orderkey % 4 = 0 OR o_orderkey % 4 = 1
-         |  UNION ALL
-         |  SELECT 'U-', o_totalprice FROM orders
-         |  WHERE o_orderkey % 4 = 0 AND o_custkey % 3 = 0
-         |  UNION ALL
-         |  SELECT 'U+', o_totalprice + 100 FROM orders
-         |  WHERE o_custkey % 3 = 0 AND (o_orderkey % 4 = 0 OR o_orderkey % 4 = 2)
-         |  UNION ALL
-         |  SELECT 'D', o_totalprice FROM orders
-         |  WHERE o_orderkey % 4 = 1 AND o_custkey % 5 = 0)
-         |SELECT op, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM ch GROUP BY op ORDER BY op""".stripMargin,
-
-    "dq_drift" ->
-      """WITH before_t AS (SELECT doc_id, text FROM documents),
-        |after_t AS (
-        |  SELECT doc_id, text FROM documents WHERE LENGTH(text) % 7 <> 0
-        |  UNION ALL
-        |  SELECT doc_id + 500000, text || ' extended by a synthetic crawl pass'
-        |  FROM documents WHERE doc_id % 5 = 0),
-        |hb AS (SELECT LEAST(GREATEST(LENGTH(text) // 50, 0), 11) AS bin,
-        |              COUNT(*) AS n_before FROM before_t GROUP BY 1),
-        |ha AS (SELECT LEAST(GREATEST(LENGTH(text) // 50, 0), 11) AS bin,
-        |              COUNT(*) AS n_after FROM after_t GROUP BY 1),
-        |j AS (SELECT COALESCE(hb.bin, ha.bin) AS bin,
-        |             COALESCE(n_before, 0) AS n_before,
-        |             COALESCE(n_after, 0) AS n_after
-        |      FROM hb FULL OUTER JOIN ha ON hb.bin = ha.bin),
-        |t AS (SELECT bin, n_before, n_after,
-        |             SUM(n_before) OVER () AS tb, SUM(n_after) OVER () AS ta
-        |      FROM j)
-        |SELECT CAST(bin AS BIGINT) AS bin,
-        |  CAST(n_before AS BIGINT) AS n_before,
-        |  CAST(n_after AS BIGINT) AS n_after,
-        |  CAST(ABS(n_before * ta - n_after * tb) AS BIGINT) AS dev
-        |FROM t ORDER BY bin""".stripMargin,
-
-    // ts_* family: shared obs/bounds/grid CTEs mirror dailyPurchases +
-    // TimeSeries.upsample. DuckDB generate_series is inclusive like
-    // Spark's sequence; v_ticks sums have exactly 4 decimals so *10000
-    // casts are integral on both engines.
-    "ts_upsample" ->
-      """WITH obs AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    CAST(SUM(CAST(value AS DECIMAL(38,4))) * 10000 AS BIGINT) AS v_ticks
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |bounds AS (SELECT user_id, MIN(day) AS lo, MAX(day) AS hi FROM obs GROUP BY 1),
-        |grid AS (SELECT user_id,
-        |  UNNEST(generate_series(lo, hi, INTERVAL 1 DAY)) AS day FROM bounds)
-        |SELECT g.user_id, g.day, o.v_ticks,
-        |  CAST(CASE WHEN o.v_ticks IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_gap
-        |FROM grid g
-        |LEFT JOIN obs o ON o.user_id = g.user_id AND o.day = g.day""".stripMargin,
-
-    "ts_fill_forward" ->
-      """WITH obs AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    CAST(SUM(CAST(value AS DECIMAL(38,4))) * 10000 AS BIGINT) AS v_ticks
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |bounds AS (SELECT user_id, MIN(day) AS lo, MAX(day) AS hi FROM obs GROUP BY 1),
-        |grid AS (SELECT user_id,
-        |  UNNEST(generate_series(lo, hi, INTERVAL 1 DAY)) AS day FROM bounds),
-        |up AS (SELECT g.user_id, g.day, o.v_ticks FROM grid g
-        |       LEFT JOIN obs o ON o.user_id = g.user_id AND o.day = g.day)
-        |SELECT user_id, day,
-        |  LAST_VALUE(v_ticks IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_ticks
-        |FROM up""".stripMargin,
-
-    // Interpolation arithmetic runs in DAY units here vs SECONDS in Spark:
-    // floor(a*c / (b*c)) = floor(a/b), so scaling numerator and
-    // denominator by 86400 cannot change the floor division's result.
-    "ts_interpolate" ->
-      """WITH obs AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    CAST(SUM(CAST(value AS DECIMAL(38,4))) * 10000 AS BIGINT) AS v_ticks
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |bounds AS (SELECT user_id, MIN(day) AS lo, MAX(day) AS hi FROM obs GROUP BY 1),
-        |grid AS (SELECT user_id,
-        |  UNNEST(generate_series(lo, hi, INTERVAL 1 DAY)) AS day FROM bounds),
-        |up AS (SELECT g.user_id, g.day, o.v_ticks FROM grid g
-        |       LEFT JOIN obs o ON o.user_id = g.user_id AND o.day = g.day),
-        |anch AS (SELECT user_id, day, v_ticks,
-        |    LAST_VALUE(v_ticks IGNORE NULLS) OVER w_back AS pv,
-        |    LAST_VALUE(CASE WHEN v_ticks IS NOT NULL THEN
-        |      date_diff('day', TIMESTAMP '2024-01-01', day) END IGNORE NULLS)
-        |      OVER w_back AS pt,
-        |    FIRST_VALUE(v_ticks IGNORE NULLS) OVER w_fwd AS nv,
-        |    FIRST_VALUE(CASE WHEN v_ticks IS NOT NULL THEN
-        |      date_diff('day', TIMESTAMP '2024-01-01', day) END IGNORE NULLS)
-        |      OVER w_fwd AS nt,
-        |    date_diff('day', TIMESTAMP '2024-01-01', day) AS t
-        |  FROM up
-        |  WINDOW w_back AS (PARTITION BY user_id ORDER BY day
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |         w_fwd AS (PARTITION BY user_id ORDER BY day
-        |           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT user_id, day,
-        |  CASE WHEN v_ticks IS NOT NULL THEN v_ticks
-        |       WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-        |         pv + ((nv - pv) * (t - pt)
-        |               - (((((nv - pv) * (t - pt)) % (nt - pt)) + (nt - pt)) % (nt - pt)))
-        |              // (nt - pt)
-        |  END AS v_ticks
-        |FROM anch""".stripMargin,
-
-    "ts_diff" ->
-      """WITH obs AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    CAST(SUM(CAST(value AS DECIMAL(38,4))) * 10000 AS BIGINT) AS v_ticks
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |d AS (SELECT user_id, day, v_ticks,
-        |    v_ticks - LAG(v_ticks) OVER w AS diff,
-        |    LAG(v_ticks) OVER w AS prev
-        |  FROM obs WINDOW w AS (PARTITION BY user_id ORDER BY day))
-        |SELECT user_id, day, v_ticks, diff,
-        |  CASE WHEN prev > 0 THEN
-        |    (diff * 10000 - ((((diff * 10000) % prev) + prev) % prev)) // prev
-        |  END AS pct_bps
-        |FROM d""".stripMargin,
-
-    // Weights (s−a)^k·s^(N−1−k) for α = 3/10, N = 8, generated with the
-    // same integer fold as TimeSeries.ewmaWindowed; LAG-present terms only,
-    // exact floor division via the portable pmod spelling.
-    "ts_ewma" -> {
-      def pw(b: Long, e: Int): Long = (0 until e).foldLeft(1L)((acc, _) => acc * b)
-      val terms = (0 until 8).map { k =>
-        val w = pw(7L, k) * pw(10L, 7 - k)
-        val xk = if (k == 0) "v_ticks" else s"LAG(v_ticks, $k) OVER w"
-        (s"CASE WHEN $xk IS NOT NULL THEN $xk * $w ELSE 0 END",
-          s"CASE WHEN $xk IS NOT NULL THEN $w ELSE 0 END")
-      }
-      s"""WITH obs AS (
-         |  SELECT user_id, date_trunc('day', ts) AS day,
-         |    CAST(SUM(CAST(value AS DECIMAL(38,4))) * 10000 AS BIGINT) AS v_ticks
-         |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-         |e AS (SELECT user_id, day, v_ticks,
-         |    CAST(${terms.map(_._1).mkString(" + ")} AS BIGINT) AS num,
-         |    CAST(${terms.map(_._2).mkString(" + ")} AS BIGINT) AS den
-         |  FROM obs WINDOW w AS (PARTITION BY user_id ORDER BY day))
-         |SELECT user_id, day, v_ticks,
-         |  CASE WHEN den > 0 THEN
-         |    (num - (((num % den) + den) % den)) // den
-         |  END AS ewma
-         |FROM e""".stripMargin
-    },
-
-    // kd=1, kn=2: flag ⇔ 1·(5·x − S1)² > 4·(5·S2 − S1²), every product in
-    // HUGEINT — the identical integer predicate the engine evaluates in
-    // Decimal(38,0).
-    "ts_anomaly" ->
-      """WITH obs AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    CAST(SUM(CAST(value AS DECIMAL(38,4))) * 10000 AS BIGINT) AS v_ticks
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |win AS (SELECT user_id, day, v_ticks,
-        |    COUNT(v_ticks) OVER w AS m,
-        |    SUM(CAST(v_ticks AS HUGEINT)) OVER w AS s1,
-        |    SUM(CAST(v_ticks AS HUGEINT) * CAST(v_ticks AS HUGEINT)) OVER w AS s2
-        |  FROM obs
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY day
-        |    ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING))
-        |SELECT user_id, day, v_ticks,
-        |  CASE WHEN v_ticks IS NULL OR m < 5 THEN NULL
-        |       ELSE (5*v_ticks - s1)*(5*v_ticks - s1) > 4*(5*s2 - s1*s1) END
-        |    AS anomaly
-        |FROM win""".stripMargin,
-
-    // The stream twin must converge to the batch flags exactly.
-    "stream_anomaly" ->
-      """WITH obs AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |    CAST(SUM(CAST(value AS DECIMAL(38,4))) * 10000 AS BIGINT) AS v_ticks
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-        |win AS (SELECT user_id, day, v_ticks,
-        |    COUNT(v_ticks) OVER w AS m,
-        |    SUM(CAST(v_ticks AS HUGEINT)) OVER w AS s1,
-        |    SUM(CAST(v_ticks AS HUGEINT) * CAST(v_ticks AS HUGEINT)) OVER w AS s2
-        |  FROM obs
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY day
-        |    ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING))
-        |SELECT user_id, day, v_ticks,
-        |  CASE WHEN v_ticks IS NULL OR m < 5 THEN NULL
-        |       ELSE (5*v_ticks - s1)*(5*v_ticks - s1) > 4*(5*s2 - s1*s1) END
-        |    AS anomaly
-        |FROM win""".stripMargin,
-
-    "ts_sessions" ->
-      """WITH flg AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR date_diff('microsecond', LAG(ts) OVER w, ts) > 1800000000
-        |         THEN 1 ELSE 0 END AS newses
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-        |runs AS (
-        |  SELECT user_id, ts,
-        |    SUM(newses) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |  FROM flg)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-        |  MIN(ts) AS session_start, MAX(ts) AS session_end,
-        |  COUNT(*) AS n_events
-        |FROM runs GROUP BY user_id, session_id""".stripMargin,
-
-    "ts_rle" ->
-      """WITH flg AS (
-        |  SELECT user_id, ts, event_id, event_type,
-        |    CASE WHEN LAG(event_type) OVER w IS NULL
-        |           OR LAG(event_type) OVER w <> event_type THEN 1 ELSE 0 END AS chg
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |runs AS (
-        |  SELECT user_id, ts, event_type,
-        |    SUM(chg) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id
-        |  FROM flg)
-        |SELECT user_id, CAST(run_id AS BIGINT) AS run_id,
-        |  MIN(event_type) AS value, COUNT(*) AS run_len, MIN(ts) AS run_start
-        |FROM runs GROUP BY user_id, run_id""".stripMargin,
-
-    "text_qcut" ->
-      """WITH b AS (SELECT doc_id, n_chars,
-        |  NTILE(10) OVER (ORDER BY n_chars, doc_id) AS bin FROM documents)
-        |SELECT bin, COUNT(*) AS n_docs,
-        |  MIN(n_chars) AS lo_chars, MAX(n_chars) AS hi_chars
-        |FROM b GROUP BY bin""".stripMargin,
-
-    "text_qcut_group" ->
-      s"""WITH b AS (SELECT o_orderstatus, o_totalprice,
-         |  NTILE(4) OVER (PARTITION BY o_orderstatus
-         |                 ORDER BY o_totalprice, o_orderkey) AS bin
-         |  FROM orders)
-         |SELECT o_orderstatus, bin, COUNT(*) AS n,
-         |  ${osum("o_totalprice")} AS total
-         |FROM b GROUP BY o_orderstatus, bin""".stripMargin,
-
-    // The QCUT verb routes through the same exact ntile assignment.
-    "lake_sql_qcut" ->
-      """WITH b AS (SELECT doc_id, n_chars,
-        |  NTILE(10) OVER (ORDER BY n_chars, doc_id) AS bin FROM documents)
-        |SELECT bin, COUNT(*) AS n_docs,
-        |  MIN(n_chars) AS lo_chars, MAX(n_chars) AS hi_chars
-        |FROM b GROUP BY bin""".stripMargin,
-
-    "lake_sql_topk" ->
-      """WITH r AS (SELECT o_orderstatus, o_orderkey, o_totalprice,
-        |  ROW_NUMBER() OVER (PARTITION BY o_orderstatus
-        |       ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        |  FROM orders)
-        |SELECT o_orderstatus, o_orderkey, o_totalprice FROM r WHERE rk <= 3
-        |ORDER BY o_orderstatus, o_orderkey""".stripMargin,
-
-    // The ts_interpolate CTE chain feeding the ts_ewma polynomial — one
-    // chained oracle for the composed upsample→interpolate→ewm_mean gate.
-    "pipeline_timeseries" -> {
-      def pw(b: Long, e: Int): Long = (0 until e).foldLeft(1L)((acc, _) => acc * b)
-      val terms = (0 until 8).map { k =>
-        val w = pw(7L, k) * pw(10L, 7 - k)
-        val xk = if (k == 0) "v_ticks" else s"LAG(v_ticks, $k) OVER w2"
-        (s"CASE WHEN $xk IS NOT NULL THEN $xk * $w ELSE 0 END",
-          s"CASE WHEN $xk IS NOT NULL THEN $w ELSE 0 END")
-      }
-      s"""WITH obs AS (
-         |  SELECT user_id, date_trunc('day', ts) AS day,
-         |    CAST(SUM(CAST(value AS DECIMAL(38,4))) * 10000 AS BIGINT) AS v_ticks
-         |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-         |bounds AS (SELECT user_id, MIN(day) AS lo, MAX(day) AS hi FROM obs GROUP BY 1),
-         |grid AS (SELECT user_id,
-         |  UNNEST(generate_series(lo, hi, INTERVAL 1 DAY)) AS day FROM bounds),
-         |up AS (SELECT g.user_id, g.day, o.v_ticks FROM grid g
-         |       LEFT JOIN obs o ON o.user_id = g.user_id AND o.day = g.day),
-         |anch AS (SELECT user_id, day, v_ticks,
-         |    LAST_VALUE(v_ticks IGNORE NULLS) OVER w_back AS pv,
-         |    LAST_VALUE(CASE WHEN v_ticks IS NOT NULL THEN
-         |      date_diff('day', TIMESTAMP '2024-01-01', day) END IGNORE NULLS)
-         |      OVER w_back AS pt,
-         |    FIRST_VALUE(v_ticks IGNORE NULLS) OVER w_fwd AS nv,
-         |    FIRST_VALUE(CASE WHEN v_ticks IS NOT NULL THEN
-         |      date_diff('day', TIMESTAMP '2024-01-01', day) END IGNORE NULLS)
-         |      OVER w_fwd AS nt,
-         |    date_diff('day', TIMESTAMP '2024-01-01', day) AS t
-         |  FROM up
-         |  WINDOW w_back AS (PARTITION BY user_id ORDER BY day
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         |         w_fwd AS (PARTITION BY user_id ORDER BY day
-         |           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
-         |interp AS (SELECT user_id, day,
-         |    CASE WHEN v_ticks IS NOT NULL THEN v_ticks
-         |         WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-         |           pv + ((nv - pv) * (t - pt)
-         |                 - (((((nv - pv) * (t - pt)) % (nt - pt)) + (nt - pt)) % (nt - pt)))
-         |                // (nt - pt)
-         |    END AS v_ticks
-         |  FROM anch),
-         |e AS (SELECT user_id, day, v_ticks,
-         |    CAST(${terms.map(_._1).mkString(" + ")} AS BIGINT) AS num,
-         |    CAST(${terms.map(_._2).mkString(" + ")} AS BIGINT) AS den
-         |  FROM interp WINDOW w2 AS (PARTITION BY user_id ORDER BY day))
-         |SELECT user_id, day, v_ticks,
-         |  CASE WHEN den > 0 THEN
-         |    (num - (((num % den) + den) % den)) // den
-         |  END AS ewma
-         |FROM e""".stripMargin
-    },
-
-    // The oracle HARDCODES the admit/quarantine outcomes the drift gate
-    // must reach: batch 1 (a distribution-true subsample) lands in main,
-    // batch 2 (+400 chars, TVD ~0.9 against the snapshot) lands whole in
-    // quarantine.
-    "stream_drift_gate" ->
-      """WITH mainr AS (
-        |  SELECT doc_id, n_chars FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 700000, n_chars FROM documents WHERE doc_id % 5 = 1),
-        |quar AS (
-        |  SELECT doc_id + 800000 AS doc_id, n_chars + 400 AS n_chars
-        |  FROM documents WHERE doc_id % 5 = 2),
-        |u AS (SELECT 'main' AS dst, doc_id, n_chars FROM mainr
-        |      UNION ALL
-        |      SELECT 'quarantine' AS dst, doc_id, n_chars FROM quar)
-        |SELECT dst, COUNT(*) AS n,
-        |  CAST(SUM(doc_id) AS BIGINT) AS sum_ids,
-        |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-        |FROM u GROUP BY dst ORDER BY dst""".stripMargin,
-
-    "lake_stats_drift" ->
-      """WITH after_t AS (
-        |  SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey % 4 <> 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 3000000, o_custkey + 1000 FROM orders
-        |  WHERE o_orderkey % 10 = 0),
-        |b AS (SELECT COUNT(*) AS cb, SUM(o_custkey) AS sbc,
-        |             SUM(o_orderkey) AS sbo FROM orders),
-        |a AS (SELECT COUNT(*) AS ca, SUM(o_custkey) AS sac,
-        |             SUM(o_orderkey) AS sao FROM after_t)
-        |SELECT * FROM (
-        |  SELECT 'o_custkey' AS col_name, cb AS cnt_before, ca AS cnt_after,
-        |    CAST(sbc AS DOUBLE) AS sum_before, CAST(sac AS DOUBLE) AS sum_after,
-        |    CAST(sac - sbc AS DOUBLE) AS net_sum FROM b, a
-        |  UNION ALL
-        |  SELECT 'o_orderkey', cb, ca, CAST(sbo AS DOUBLE),
-        |    CAST(sao AS DOUBLE), CAST(sao - sbo AS DOUBLE) FROM b, a)
-        |ORDER BY col_name""".stripMargin,
-
-    "lake_sql_drift" ->
-      """WITH after_t AS (
-        |  SELECT o_orderkey, o_custkey FROM orders WHERE o_orderkey % 4 <> 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 3000000, o_custkey + 1000 FROM orders
-        |  WHERE o_orderkey % 10 = 0),
-        |b AS (SELECT COUNT(*) AS cb, SUM(o_custkey) AS sbc,
-        |             SUM(o_orderkey) AS sbo FROM orders),
-        |a AS (SELECT COUNT(*) AS ca, SUM(o_custkey) AS sac,
-        |             SUM(o_orderkey) AS sao FROM after_t)
-        |SELECT * FROM (
-        |  SELECT 'o_custkey' AS col_name, cb AS cnt_before, ca AS cnt_after,
-        |    CAST(sbc AS DOUBLE) AS sum_before, CAST(sac AS DOUBLE) AS sum_after,
-        |    CAST(sac - sbc AS DOUBLE) AS net_sum FROM b, a
-        |  UNION ALL
-        |  SELECT 'o_orderkey', cb, ca, CAST(sbo AS DOUBLE),
-        |    CAST(sao AS DOUBLE), CAST(sao - sbo AS DOUBLE) FROM b, a)
-        |ORDER BY col_name""".stripMargin,
-
-    "dq_profile" ->
-      """SELECT 'o_orderkey' AS "column", COUNT(*) AS n_rows,
-        |       COUNT(*) - COUNT(o_orderkey) AS n_nulls,
-        |       COUNT(DISTINCT o_orderkey) AS n_distinct,
-        |       MIN(o_orderkey) AS min_long, MAX(o_orderkey) AS max_long
-        |FROM orders
-        |UNION ALL
-        |SELECT 'o_custkey', COUNT(*), COUNT(*) - COUNT(o_custkey),
-        |       COUNT(DISTINCT o_custkey), MIN(o_custkey), MAX(o_custkey)
-        |FROM orders
-        |UNION ALL
-        |SELECT 'o_orderstatus', COUNT(*), COUNT(*) - COUNT(o_orderstatus),
-        |       COUNT(DISTINCT o_orderstatus),
-        |       CAST(NULL AS BIGINT), CAST(NULL AS BIGINT)
-        |FROM orders""".stripMargin,
-
-    "dq_checks" ->
-      """WITH rep AS (
-        |  SELECT 'not_null(o_custkey)' AS c, COUNT(*) AS n,
-        |    SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS v FROM orders
-        |  UNION ALL
-        |  SELECT 'in_range(o_totalprice)', COUNT(*),
-        |    SUM(CASE WHEN o_totalprice < 0 OR o_totalprice > 400000
-        |        THEN 1 ELSE 0 END) FROM orders
-        |  UNION ALL
-        |  SELECT 'matches_regex(o_orderpriority)', COUNT(*),
-        |    SUM(CASE WHEN o_orderpriority IS NOT NULL AND
-        |        NOT regexp_matches(o_orderpriority, '^[1-5]-[A-Z ]+$')
-        |        THEN 1 ELSE 0 END) FROM orders
-        |  UNION ALL
-        |  SELECT 'is_in(o_orderstatus)', COUNT(*),
-        |    SUM(CASE WHEN o_orderstatus IS NOT NULL AND
-        |        o_orderstatus NOT IN ('O', 'F') THEN 1 ELSE 0 END) FROM orders
-        |  UNION ALL
-        |  SELECT 'unique(o_orderkey)', CAST(SUM(g) AS BIGINT),
-        |    CAST(SUM(g - 1) AS BIGINT)
-        |  FROM (SELECT COUNT(*) AS g FROM orders GROUP BY o_orderkey)
-        |  UNION ALL
-        |  SELECT 'ref_integrity(o_custkey)',
-        |    (SELECT COUNT(*) FROM orders),
-        |    (SELECT COUNT(*) FROM orders o
-        |     WHERE o.o_custkey IS NOT NULL AND NOT EXISTS (
-        |       SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)))
-        |SELECT c AS "constraint", CAST(n AS BIGINT) AS n_rows,
-        |       CAST(v AS BIGINT) AS n_violations, v = 0 AS passed
-        |FROM rep""".stripMargin,
-
-    // SCD2 intervals from the fixture recipe: base %4=0 images (closed
-    // where the upsert re-imaged them), the upsert's post-images (all
-    // current), inserted %4=1 rows (closed where the delete hit).
-    "lake_scd2" ->
-      s"""WITH hist AS (
-         |  SELECT o_orderstatus, o_totalprice AS p,
-         |         CASE WHEN o_custkey % 3 = 0 THEN 0 ELSE 1 END AS cur
-         |  FROM orders WHERE o_orderkey % 4 = 0
-         |  UNION ALL
-         |  SELECT o_orderstatus, o_totalprice + 100, 1
-         |  FROM orders
-         |  WHERE o_custkey % 3 = 0 AND (o_orderkey % 4 = 0 OR o_orderkey % 4 = 2)
-         |  UNION ALL
-         |  SELECT o_orderstatus, o_totalprice,
-         |         CASE WHEN o_custkey % 5 = 0 THEN 0 ELSE 1 END
-         |  FROM orders WHERE o_orderkey % 4 = 1)
-         |SELECT o_orderstatus, COUNT(*) AS n_hist,
-         |       CAST(SUM(cur) AS BIGINT) AS n_current,
-         |       ${osum("CASE WHEN cur = 1 THEN p END")} AS total_current
-         |FROM hist GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // The streaming tail delivers the same feed content as the batch
-    // reader — the lake_change_feed reconstruction applies verbatim.
-    "feed_stream_read" ->
-      s"""WITH ch AS (
-         |  SELECT 'I' AS op, o_totalprice FROM orders
-         |  WHERE o_orderkey % 4 = 0 OR o_orderkey % 4 = 1
-         |  UNION ALL
-         |  SELECT 'U-', o_totalprice FROM orders
-         |  WHERE o_orderkey % 4 = 0 AND o_custkey % 3 = 0
-         |  UNION ALL
-         |  SELECT 'U+', o_totalprice + 100 FROM orders
-         |  WHERE o_custkey % 3 = 0 AND (o_orderkey % 4 = 0 OR o_orderkey % 4 = 2)
-         |  UNION ALL
-         |  SELECT 'D', o_totalprice FROM orders
-         |  WHERE o_orderkey % 4 = 1 AND o_custkey % 5 = 0)
-         |SELECT op, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM ch GROUP BY op ORDER BY op""".stripMargin,
-
-    // The replica equals the source's final state: %4=0 base rows (+100
-    // where the upsert matched), %4=1 inserted rows minus the deleted
-    // slice, %4=2 rows the upsert created (+100).
-    "feed_replicate" ->
-      s"""WITH st AS (
-         |  SELECT o_orderstatus,
-         |         o_totalprice + CASE WHEN o_custkey % 3 = 0 THEN 100 ELSE 0 END AS p
-         |  FROM orders WHERE o_orderkey % 4 = 0
-         |  UNION ALL
-         |  SELECT o_orderstatus, o_totalprice FROM orders
-         |  WHERE o_orderkey % 4 = 1 AND o_custkey % 5 <> 0
-         |  UNION ALL
-         |  SELECT o_orderstatus, o_totalprice + 100 FROM orders
-         |  WHERE o_orderkey % 4 = 2 AND o_custkey % 3 = 0)
-         |SELECT o_orderstatus, COUNT(*) AS n, ${osum("p")} AS total
-         |FROM st GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // Final state across the checkpoint boundary: %4=0 base rows (+100
-    // where the upsert matched), %4=1 inserted rows minus the deleted
-    // slice, %4=2 rows the upsert created (+100).
-    "lake_feed_checkpoint" ->
-      s"""WITH st AS (
-         |  SELECT o_orderstatus,
-         |         o_totalprice + CASE WHEN o_custkey % 3 = 0 THEN 100 ELSE 0 END AS p
-         |  FROM orders WHERE o_orderkey % 4 = 0
-         |  UNION ALL
-         |  SELECT o_orderstatus, o_totalprice FROM orders
-         |  WHERE o_orderkey % 4 = 1 AND o_custkey % 5 <> 0
-         |  UNION ALL
-         |  SELECT o_orderstatus, o_totalprice + 100 FROM orders
-         |  WHERE o_orderkey % 4 = 2 AND o_custkey % 3 = 0)
-         |SELECT o_orderstatus, COUNT(*) AS n, ${osum("p")} AS total
-         |FROM st GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // As of the post-insert mark: base + insert, ORIGINAL prices, nothing
-    // deleted.
-    "lake_time_travel" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders
-         |WHERE o_orderkey % 4 = 0 OR o_orderkey % 4 = 1
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "lake_sql_time_travel" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders
-         |WHERE o_orderkey % 4 = 0 OR o_orderkey % 4 = 1
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "lake_sql_restore" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders
-         |WHERE o_orderkey % 4 = 0 OR o_orderkey % 4 = 1
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "lake_sql_zorder" ->
-      s"""SELECT COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders WHERE o_custkey BETWEEN 100 AND 300""".stripMargin,
-
-    "lake_sql_ctas" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders WHERE o_totalprice > 50000
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "lake_sql_clone" ->
-      s"""SELECT 'clone' AS side, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders WHERE o_orderkey % 3 <> 0
-         |UNION ALL
-         |SELECT 'source' AS side, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders
-         |ORDER BY side""".stripMargin,
-
-    "lake_sql_constraint" ->
-      s"""SELECT COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM (SELECT o_totalprice FROM orders
-         |      UNION ALL SELECT 10.5) t""".stripMargin,
-
-    "lake_sql_detail" ->
-      """SELECT 'detail_t' AS table_name, 'memory' AS format,
-        |       'o_orderstatus' AS partition_columns,
-        |       COUNT(DISTINCT o_orderstatus) AS num_cells,
-        |       COUNT(*) AS num_rows
-        |FROM orders""".stripMargin,
-
-    "lake_sql_analyze" ->
-      """SELECT COUNT(*) AS n, MIN(o_custkey) AS mn, MAX(o_custkey) AS mx
-        |FROM orders WHERE o_custkey % 7 <> 0""".stripMargin,
-
-    "lake_sql_show_partitions" ->
-      """SELECT o_orderstatus, COUNT(*) AS num_rows
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "lake_sql_alter_columns" ->
-      """SELECT CASE WHEN o_totalprice > 100000 THEN 'high' ELSE 'low' END
-        |         AS price_tier,
-        |       COUNT(*) AS n, MIN(o_orderpriority) AS min_prio
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "lake_sql_matview" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n,
-         |       ${osum("o_totalprice")} AS total,
-         |       MAX(o_custkey) AS max_cust,
-         |       ${osum("o_totalprice")} / COUNT(o_totalprice) AS mean
-         |FROM (SELECT o_orderstatus, o_totalprice, o_custkey FROM orders
-         |      UNION ALL
-         |      SELECT 'O', 1000.5, 42) t
-         |WHERE o_custkey % 9 <> 0
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // The trackedOrders recipe's four versions, recomputed relationally:
-    // base INSERT (%4=0), insert (%4=1), upsert (custkey%3=0 over %4 in
-    // {0,2} — U+ counts include the new %4=2 keys), delete (%4=1 and
-    // custkey%5=0).
-    "lake_sql_history" ->
-      """SELECT CAST(1 AS BIGINT) AS version, 'INSERT' AS operation,
-        |       (SELECT COUNT(*) FROM orders WHERE o_orderkey % 4 = 0) AS inserted,
-        |       CAST(0 AS BIGINT) AS upserted, CAST(0 AS BIGINT) AS deleted
-        |UNION ALL SELECT 2, 'INSERT',
-        |       (SELECT COUNT(*) FROM orders WHERE o_orderkey % 4 = 1), 0, 0
-        |UNION ALL SELECT 3, 'UPSERT', 0,
-        |       (SELECT COUNT(*) FROM orders
-        |        WHERE o_custkey % 3 = 0 AND (o_orderkey % 4 = 0 OR o_orderkey % 4 = 2)), 0
-        |UNION ALL SELECT 4, 'DELETE', 0, 0,
-        |       (SELECT COUNT(*) FROM orders
-        |        WHERE o_orderkey % 4 = 1 AND o_custkey % 5 = 0)
-        |ORDER BY version DESC""".stripMargin,
-
-    // Final view contents = base (%3=0) plus the two inserted deltas.
-    "lake_mat_view" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total,
-         |       MIN(o_totalprice) AS mn, MAX(o_totalprice) AS mx
-         |FROM orders
-         |WHERE o_orderkey % 3 = 0 OR o_orderkey % 3 = 1
-         |   OR (o_orderkey % 3 = 2 AND o_custkey % 2 = 0)
-         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // The final tables after the gate's whole mutation script (insert,
-    // dimension update, delete, key reassignment), joined one-shot — the
-    // incremental view must land on exactly this multiset.
-    "mv_join_incremental" ->
-      """WITH a0 AS (
-        |  SELECT o_orderkey, o_custkey AS custkey, o_totalprice
-        |  FROM orders WHERE o_orderkey % 7 < 3),
-        |a1 AS (
-        |  SELECT * FROM a0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_custkey AS custkey, o_totalprice
-        |  FROM orders WHERE o_orderkey % 7 = 3),
-        |a2 AS (SELECT * FROM a1 WHERE o_orderkey % 5 <> 0),
-        |a3 AS (SELECT o_orderkey,
-        |              CASE WHEN o_orderkey % 11 = 3 THEN custkey + 1
-        |                   ELSE custkey END AS custkey,
-        |              o_totalprice
-        |       FROM a2),
-        |b1 AS (SELECT c_custkey AS custkey, c_name,
-        |              CASE WHEN c_custkey % 10 = 0 THEN c_acctbal + 100
-        |                   ELSE c_acctbal END AS c_acctbal
-        |       FROM customer)
-        |SELECT custkey, o_orderkey, o_totalprice, c_name, c_acctbal
-        |FROM a3 JOIN b1 USING (custkey)""".stripMargin,
-
-    // Same replay shape as mv_join_incremental, but over the SQL verbs'
-    // script (base slice %4<2, insert %4=2).
-    "lake_sql_matview_join" ->
-      """WITH f0 AS (
-        |  SELECT o_orderkey, o_custkey AS custkey, o_totalprice
-        |  FROM orders WHERE o_orderkey % 4 < 2),
-        |f1 AS (
-        |  SELECT * FROM f0
-        |  UNION ALL
-        |  SELECT o_orderkey, o_custkey AS custkey, o_totalprice
-        |  FROM orders WHERE o_orderkey % 4 = 2),
-        |f2 AS (SELECT * FROM f1 WHERE o_orderkey % 5 <> 0),
-        |f3 AS (SELECT o_orderkey,
-        |              CASE WHEN o_orderkey % 11 = 3 THEN custkey + 1
-        |                   ELSE custkey END AS custkey,
-        |              o_totalprice
-        |       FROM f2),
-        |d1 AS (SELECT c_custkey AS custkey, c_name,
-        |              CASE WHEN c_custkey % 10 = 0 THEN c_acctbal + 100
-        |                   ELSE c_acctbal END AS c_acctbal
-        |       FROM customer)
-        |SELECT custkey, o_orderkey, o_totalprice, c_name, c_acctbal
-        |FROM f3 JOIN d1 USING (custkey)""".stripMargin,
-
-    // stream_mv_join: the view state after base %4<2, epoch-1 insert of
-    // %4=2, epoch-2 CDC rewrite of %8=1 (price+250, custkey+1 — a key
-    // move). %8=1 implies %4=1, so every epoch-2 key exists in the table.
-    "stream_mv_join" ->
-      """WITH f1 AS (
-        |  SELECT o_orderkey, o_custkey AS custkey, o_totalprice
-        |  FROM orders WHERE o_orderkey % 4 < 2 OR o_orderkey % 4 = 2),
-        |f2 AS (SELECT o_orderkey,
-        |              CASE WHEN o_orderkey % 8 = 1 THEN custkey + 1
-        |                   ELSE custkey END AS custkey,
-        |              CASE WHEN o_orderkey % 8 = 1 THEN o_totalprice + 250
-        |                   ELSE o_totalprice END AS o_totalprice
-        |       FROM f1),
-        |d AS (SELECT c_custkey AS custkey, c_name FROM customer)
-        |SELECT custkey, o_orderkey, o_totalprice, c_name
-        |FROM f2 JOIN d USING (custkey)""".stripMargin,
-
-    "lake_colocated_join" ->
-      s"""SELECT p_brand, COUNT(*) AS n, ${osum("l_extendedprice")} AS revenue
-         |FROM lineitem JOIN part ON l_partkey = p_partkey
-         |GROUP BY p_brand""".stripMargin,
-
-    "range_join" ->
-      """WITH bands AS (
-        |  SELECT event_id AS snap_id, user_id, value - 10 AS lo, value + 10 AS hi
-        |  FROM events WHERE event_id % 10 = 0)
-        |SELECT e.event_id, b.snap_id, e.user_id, e.value, b.lo, b.hi
-        |FROM events e JOIN bands b
-        |  ON e.user_id = b.user_id AND e.value BETWEEN b.lo AND b.hi""".stripMargin,
-
-    "asof_join" ->
-      """WITH snaps AS (
-        |  SELECT user_id, ts AS snap_ts, value AS budget
-        |  FROM events WHERE event_id % 10 = 0)
-        |SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us, e.value, s.budget
-        |FROM events e ASOF LEFT JOIN snaps s
-        |  ON e.user_id = s.user_id AND e.ts >= s.snap_ts""".stripMargin,
-
-    "asof_join_forward" ->
-      """WITH snaps AS (
-        |  SELECT user_id, ts AS snap_ts, value AS budget
-        |  FROM events WHERE event_id % 10 = 0)
-        |SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us, e.value, s.budget
-        |FROM events e ASOF LEFT JOIN snaps s
-        |  ON e.user_id = s.user_id AND e.ts <= s.snap_ts""".stripMargin,
-
-    // nearest: both directed ASOFs, pick the closer, ties to preceding.
-    "asof_join_nearest" ->
-      """WITH snaps AS (
-        |  SELECT user_id, ts AS snap_ts, value AS budget
-        |  FROM events WHERE event_id % 10 = 0),
-        |b AS (
-        |  SELECT e.event_id, e.user_id, e.ts, e.value,
-        |         s.snap_ts AS bts, s.budget AS bb
-        |  FROM events e ASOF LEFT JOIN snaps s
-        |    ON e.user_id = s.user_id AND e.ts >= s.snap_ts),
-        |f AS (
-        |  SELECT e.event_id, s.snap_ts AS fts, s.budget AS fb
-        |  FROM events e ASOF LEFT JOIN snaps s
-        |    ON e.user_id = s.user_id AND e.ts <= s.snap_ts)
-        |SELECT b.event_id, b.user_id, epoch_us(b.ts) AS ts_us, b.value,
-        |  CASE WHEN fts IS NULL THEN bb
-        |       WHEN bts IS NULL THEN fb
-        |       WHEN b.ts - bts <= fts - b.ts THEN bb ELSE fb END AS budget
-        |FROM b JOIN f USING (event_id)""".stripMargin,
-
-    // tolerance: ASOF already picked the NEAREST preceding snapshot, so
-    // out-of-tolerance means no match at all — a CASE null is exact.
-    "asof_join_tolerance" ->
-      """WITH snaps AS (
-        |  SELECT user_id, ts AS snap_ts, value AS budget
-        |  FROM events WHERE event_id % 10 = 0)
-        |SELECT e.event_id, e.user_id, epoch_us(e.ts) AS ts_us, e.value,
-        |  CASE WHEN e.ts - s.snap_ts <= INTERVAL 2 DAY THEN s.budget END AS budget
-        |FROM events e ASOF LEFT JOIN snaps s
-        |  ON e.user_id = s.user_id AND e.ts >= s.snap_ts""".stripMargin,
-
-    "bucket_numeric" ->
-      """SELECT CAST(l_partkey % 5 AS INTEGER) AS bucket, COUNT(*) AS n
-        |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "q18_math_fns" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey,
-        |  ABS(l_extendedprice - 30000) AS abs_delta,
-        |  CAST(CEIL(l_extendedprice) AS BIGINT) AS price_ceil,
-        |  CAST(FLOOR(l_extendedprice) AS BIGINT) AS price_floor,
-        |  ROUND(l_extendedprice) AS price_round,
-        |  SQRT(l_quantity) AS qty_sqrt,
-        |  CAST(SIGN(l_discount - 0.05) AS DOUBLE) AS disc_sign,
-        |  l_orderkey % 7 AS key_mod
-        |FROM lineitem WHERE l_orderkey % 97 = 0""".stripMargin,
-
-    "q19_in_like_between" ->
-      """SELECT p_partkey, p_brand, p_name, p_size
-        |FROM part
-        |WHERE p_brand IN ('Brand#1', 'Brand#2', 'Brand#3')
-        |  AND p_name LIKE '%red%'
-        |  AND p_size BETWEEN 10 AND 40
-        |  AND p_retailprice IS NOT NULL""".stripMargin,
-
-    "q20_conditional_fns" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  NULLIF(l_tax, 0.0) AS tax_or_null,
-        |  COALESCE(NULLIF(l_tax, 0.0), -1.0) AS tax_coalesced,
-        |  IFNULL(NULLIF(l_returnflag, 'N'), 'none') AS flag_or_none,
-        |  CAST(l_quantity AS INTEGER) AS qty_int
-        |FROM lineitem WHERE l_orderkey % 101 = 0""".stripMargin,
-
-    "q21_window_running" ->
-      """SELECT o_custkey, o_orderkey,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(38,2)))
-        |       OVER (PARTITION BY o_custkey ORDER BY o_orderkey
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |       AS DOUBLE) AS running_total,
-        |  LAG(o_orderkey, 1) OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS prev_order,
-        |  CAST(RANK() OVER (PARTITION BY o_custkey
-        |                    ORDER BY o_totalprice DESC, o_orderkey) AS BIGINT) AS price_rank
-        |FROM orders WHERE o_custkey % 50 = 0""".stripMargin,
-
-    "q35_window_analytics" ->
-      """SELECT o_custkey, o_orderkey,
-        |  LEAD(o_totalprice, 1) OVER w AS next_price,
-        |  CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
-        |  CAST(round(PERCENT_RANK() OVER w * 1000000) AS BIGINT) AS pct_rank_ppm,
-        |  CAST(round(CUME_DIST() OVER w * 1000000) AS BIGINT) AS cume_ppm,
-        |  FIRST_VALUE(o_orderkey) OVER (PARTITION BY o_custkey ORDER BY o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_order
-        |FROM orders WHERE o_custkey % 50 = 0
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey)""".stripMargin,
-
-    "q36_rolling_time" ->
-      """SELECT user_id, event_id,
-        |  COUNT(*) OVER w AS n_1h,
-        |  CAST(SUM(CAST(value AS DECIMAL(38,4))) OVER w AS DOUBLE) AS sum_1h
-        |FROM events WHERE user_id % 20 = 0
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-        |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""".stripMargin,
-
-    "q22_grouping_sets" ->
-      s"""SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-         |  ${osum("l_quantity")} AS qty
-         |FROM lineitem
-         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())""".stripMargin,
-
-    "q23_sessionize" ->
-      """WITH t AS (
-        |  SELECT user_id, event_id,
-        |    CASE WHEN epoch_us(ts) - LAG(epoch_us(ts), 1)
-        |              OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |              > 1800000000 THEN 1 ELSE 0 END AS brk
-        |  FROM events)
-        |SELECT user_id, CAST(SUM(brk) + 1 AS BIGINT) AS n_sessions,
-        |  COUNT(*) AS n_events
-        |FROM t GROUP BY user_id""".stripMargin,
-
-    "q32_pivot" ->
-      s"""SELECT l_returnflag,
-         |  COUNT(CASE WHEN l_linestatus = 'F' THEN 1 END) AS F_n,
-         |  CAST(SUM(CASE WHEN l_linestatus = 'F'
-         |       THEN CAST(l_quantity AS DECIMAL(38,2)) END) AS DOUBLE) AS F_qty,
-         |  COUNT(CASE WHEN l_linestatus = 'O' THEN 1 END) AS O_n,
-         |  CAST(SUM(CASE WHEN l_linestatus = 'O'
-         |       THEN CAST(l_quantity AS DECIMAL(38,2)) END) AS DOUBLE) AS O_qty
-         |FROM lineitem GROUP BY l_returnflag""".stripMargin,
-
-    "q33_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, 'qty' AS measure, l_quantity AS value
-        |FROM lineitem WHERE l_orderkey % 191 = 0
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'price' AS measure, l_extendedprice AS value
-        |FROM lineitem WHERE l_orderkey % 191 = 0""".stripMargin,
-
-    "q25_setops" ->
-      """SELECT c_custkey, 'intersect' AS op FROM (
-        |  SELECT c_custkey FROM customer WHERE c_acctbal > 5000
-        |  INTERSECT
-        |  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING') a
-        |UNION ALL
-        |SELECT c_custkey, 'except' AS op FROM (
-        |  SELECT c_custkey FROM customer WHERE c_acctbal > 5000
-        |  EXCEPT
-        |  SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING') b""".stripMargin,
-
-    "q26_dedup_keys" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey FROM (
-        |  SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-        |    ROW_NUMBER() OVER (PARTITION BY l_orderkey, l_linenumber
-        |                       ORDER BY l_partkey, l_suppkey) AS rn
-        |  FROM lineitem) t
-        |WHERE rn = 1""".stripMargin,
-
-    "q27_stream_window" ->
-      s"""SELECT date_trunc('hour', ts) AS ws, event_type,
-         |  COUNT(*) AS n, ${osum("value", 4)} AS total_value
-         |FROM events GROUP BY 1, 2""".stripMargin,
-
-    // q34: each event replicates into the 3 hourly-started windows that
-    // contain it — epoch-aligned like Spark's window(ts, period, slide).
-    "q34_hop_window" ->
-      s"""SELECT date_trunc('hour', ts) - (i * INTERVAL 1 HOUR) AS ws,
-         |  event_type, COUNT(*) AS n, ${osum("value", 4)} AS total_value
-         |FROM events, range(0, 3) t(i)
-         |GROUP BY 1, 2 ORDER BY ws, event_type""".stripMargin,
-
-    "lake_audit_upsert" ->
-      """SELECT o_orderstatus, COUNT(*) AS n,
-        |  COUNT(CASE WHEN o_orderkey % 7 = 0 THEN 1 END) AS n_changed
-        |FROM orders GROUP BY o_orderstatus""".stripMargin,
-
-    "q29_session_window" ->
-      s"""WITH t AS (
-         |  SELECT user_id, ts, value,
-         |    CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER
-         |           (PARTITION BY user_id ORDER BY ts, event_id)
-         |         >= 1800000000 THEN 1 ELSE 0 END AS brk
-         |  FROM events),
-         |s AS (
-         |  SELECT user_id, ts, value,
-         |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-         |                   ROWS UNBOUNDED PRECEDING) AS sid
-         |  FROM t)
-         |SELECT epoch_us(MIN(ts)) AS sess_start_us, user_id,
-         |  COUNT(*) AS n, ${osum("value", 4)} AS total_value
-         |FROM s GROUP BY user_id, sid""".stripMargin,
-
-    // The streaming session windows, once every session is watermark-closed,
-    // equal the batch sessionization of the final event set.
-    "stream_session_window" ->
-      s"""WITH e AS (SELECT * FROM events WHERE user_id % 20 = 0),
-         |t AS (
-         |  SELECT user_id, ts, value,
-         |    CASE WHEN epoch_us(ts) - LAG(epoch_us(ts)) OVER
-         |           (PARTITION BY user_id ORDER BY ts, event_id)
-         |         >= 1800000000 THEN 1 ELSE 0 END AS brk
-         |  FROM e),
-         |s AS (
-         |  SELECT user_id, ts, value,
-         |    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-         |                   ROWS UNBOUNDED PRECEDING) AS sid
-         |  FROM t)
-         |SELECT epoch_us(MIN(ts)) AS sess_start_us, user_id,
-         |  COUNT(*) AS n, ${osum("value", 4)} AS total_value
-         |FROM s GROUP BY user_id, sid
-         |ORDER BY user_id, sess_start_us""".stripMargin,
-
-    "lake_materialize" ->
-      s"""SELECT event_type, COUNT(*) AS n, ${osum("value", 4)} AS total_value
-         |FROM (SELECT * FROM events
-         |      UNION ALL SELECT * FROM events WHERE event_id % 13 = 0) t
-         |GROUP BY event_type""".stripMargin,
-
-    // Every id exactly once despite cross-batch replays and in-batch dups.
-    "stream_dedup" ->
-      """SELECT lang, COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // The stream-stream interval join recomputed relationally: the click
-    // table is the same deterministic derivation (event_id % 3 == 0,
-    // delayed event_id % 7 minutes), and only delays <= 5 minutes match.
-    "stream_interval_join" ->
-      """WITH b AS (
-        |  SELECT event_id, event_id % 7 AS delay_min
-        |  FROM events WHERE event_id % 3 = 0)
-        |SELECT e.event_type, COUNT(*) AS n,
-        |       CAST(SUM(delay_min) AS BIGINT) AS total_delay_min
-        |FROM events e JOIN b USING (event_id)
-        |WHERE delay_min <= 5
-        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin,
-
-    // The left-outer variant: every event appears once; in-window clicks
-    // match, everything else null-extends after the watermark flush.
-    "stream_outer_join" ->
-      """WITH b AS (
-        |  SELECT event_id, event_id % 7 AS delay_min
-        |  FROM events WHERE event_id % 3 = 0 AND event_id % 7 <= 5)
-        |SELECT e.event_type,
-        |  COUNT(*) AS n_total,
-        |  COUNT(b.event_id) AS n_matched,
-        |  CAST(SUM(CASE WHEN b.event_id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_unmatched,
-        |  CAST(SUM(delay_min) AS BIGINT) AS total_delay_min
-        |FROM events e LEFT JOIN b USING (event_id)
-        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin,
-
-    "stream_ingest_upsert" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM (
-         |  SELECT o_orderstatus,
-         |         o_totalprice + CASE WHEN o_orderkey % 13 IN (1, 2)
-         |                             THEN 250 ELSE 0 END AS o_totalprice
-         |  FROM orders) t
-         |GROUP BY o_orderstatus""".stripMargin,
-
-    // Final MV state == group-by over base + both streamed epochs = the
-    // whole table (the %5 classes partition the keys).
-    "stream_mv_maintenance" ->
-      s"""SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM orders GROUP BY o_orderstatus""".stripMargin,
-
-    "lake_server_flow" ->
-      s"""WITH delta AS (
-         |  SELECT o_orderkey, o_totalprice + 500 AS o_totalprice
-         |  FROM orders WHERE o_orderkey % 9 = 0),
-         |merged AS (
-         |  SELECT l.o_orderstatus AS o_orderstatus,
-         |         COALESCE(d.o_totalprice, l.o_totalprice) AS o_totalprice
-         |  FROM orders l FULL OUTER JOIN delta d ON l.o_orderkey = d.o_orderkey)
-         |SELECT o_orderstatus, COUNT(*) AS n, ${osum("o_totalprice")} AS total
-         |FROM merged GROUP BY o_orderstatus""".stripMargin,
-
-    "text_stats" -> {
-      val stops = TextAnalysis.Stopwords.map(w => s"'$w'").mkString(", ")
-      s"""SELECT doc_id,
-         |  CAST(LENGTH(TRIM(text)) AS BIGINT) AS n_chars_trim,
-         |  CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-         |       ELSE CAST(LENGTH(TRIM(text))
-         |            - LENGTH(REPLACE(TRIM(text), ' ', '')) + 1 AS BIGINT)
-         |  END AS n_tokens,
-         |  CAST(len(regexp_extract_all(LOWER(text), '[a-z0-9]+|[^a-z0-9 ]')) AS BIGINT) AS n_tokens_re,
-         |  CAST(len(list_filter(string_split(TRIM(text), ' '),
-         |       w -> list_contains([$stops], w))) AS BIGINT) AS n_stop
-         |FROM documents""".stripMargin
-    },
-
-    "text_quality" -> {
-      val stops = TextAnalysis.Stopwords.map(w => s"'$w'").mkString(", ")
-      s"""WITH c AS (
-         |  SELECT doc_id,
-         |    CAST(LENGTH(TRIM(text)) AS DOUBLE) AS chars,
-         |    CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0.0
-         |         ELSE CAST(LENGTH(TRIM(text))
-         |              - LENGTH(REPLACE(TRIM(text), ' ', '')) + 1 AS DOUBLE)
-         |    END AS tokens,
-         |    CAST(len(list_filter(string_split(TRIM(text), ' '),
-         |         w -> list_contains([$stops], w))) AS DOUBLE) AS stops
-         |  FROM documents)
-         |SELECT doc_id,
-         |  0.4 * LEAST(1.0, tokens / 100.0)
-         |  + 0.3 * LEAST(1.0, (CASE WHEN tokens > 0 THEN stops / tokens ELSE 0.0 END) * 4.0)
-         |  + 0.3 * LEAST(1.0, chars / 500.0) AS quality
-         |FROM c""".stripMargin
-    },
-
-    "text_quality_classifier" ->
-      """WITH train AS (
-        |  SELECT doc_id, text,
-        |    CASE WHEN LENGTH(source) = 4 THEN 1 ELSE 0 END AS lab
-        |  FROM documents WHERE doc_id % 2 = 0),
-        |pres AS (SELECT DISTINCT doc_id, lab, term FROM (
-        |  SELECT doc_id, lab,
-        |    unnest(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS term
-        |  FROM train)),
-        |lex AS (
-        |  SELECT term, SUM(CASE WHEN lab = 1 THEN 1 ELSE -1 END) AS weight
-        |  FROM pres GROUP BY term),
-        |tf AS (
-        |  SELECT doc_id, term, COUNT(*) AS tf FROM (
-        |    SELECT doc_id,
-        |      unnest(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS term
-        |    FROM documents)
-        |  GROUP BY doc_id, term)
-        |SELECT tf.doc_id AS doc,
-        |  CAST(SUM(tf.tf * COALESCE(lex.weight, 0)) AS BIGINT) AS score,
-        |  CAST(SUM(CASE WHEN lex.weight IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS terms_hit
-        |FROM tf LEFT JOIN lex ON lex.term = tf.term
-        |GROUP BY tf.doc_id
-        |ORDER BY doc""".stripMargin,
-
-    "text_bpe_pairs" ->
-      """WITH words AS (
-        |  SELECT word, COUNT(*) AS cnt FROM (
-        |    SELECT unnest(string_split(trim(text), ' ')) AS word FROM documents) t
-        |  WHERE word <> '' GROUP BY word),
-        |sym AS (SELECT word, cnt, string_split(word, '') AS s FROM words),
-        |pairs AS (
-        |  SELECT s[i] AS left_sym, s[i+1] AS right_sym, cnt
-        |  FROM sym, LATERAL unnest(range(1, len(s))) AS g(i))
-        |SELECT left_sym, right_sym, CAST(SUM(cnt) AS BIGINT) AS freq
-        |FROM pairs GROUP BY 1, 2
-        |ORDER BY freq DESC, left_sym, right_sym LIMIT 10""".stripMargin,
-
-    // text_bpe_ids / text_pack_bpe: the config merge table applies per
-    // word as TWO nested replaces on the space-joined symbol string —
-    // with left != right a merge's occurrences never overlap in symbols,
-    // pass 1's only misses are boundary-space consumptions between
-    // back-to-back occurrences, and pass 2 (misses now flanked by fused
-    // tokens) catches every one, reproducing the engine's greedy
-    // left-to-right fold exactly.
-    "text_bpe_ids" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM documents),
-        |w AS (SELECT doc_id, i AS word_i, ws[i] AS word
-        |      FROM t, LATERAL unnest(generate_series(1, len(ws))) AS g(i)
-        |      WHERE ws[i] <> ''),
-        |s0 AS (SELECT doc_id, word_i,
-        |       ' ' || array_to_string(string_split(word, ''), ' ') || ' ' AS s FROM w),
-        |s1 AS (SELECT doc_id, word_i, replace(replace(s, ' t a ', ' ta '), ' t a ', ' ta ') AS s FROM s0),
-        |s2 AS (SELECT doc_id, word_i, replace(replace(s, ' ta b ', ' tab '), ' ta b ', ' tab ') AS s FROM s1),
-        |s3 AS (SELECT doc_id, word_i, replace(replace(s, ' l e ', ' le '), ' l e ', ' le ') AS s FROM s2),
-        |s4 AS (SELECT doc_id, word_i, replace(replace(s, ' tab le ', ' table '), ' tab le ', ' table ') AS s FROM s3),
-        |s5 AS (SELECT doc_id, word_i, replace(replace(s, ' e r ', ' er '), ' e r ', ' er ') AS s FROM s4),
-        |toks AS (SELECT doc_id, word_i, string_split(trim(s), ' ') AS syms FROM s5),
-        |seq AS (SELECT doc_id, word_i, j, syms[j] AS symbol
-        |        FROM toks, LATERAL unnest(generate_series(1, len(syms))) AS g(j)),
-        |voc AS (SELECT symbol,
-        |          CAST(row_number() OVER (ORDER BY symbol) - 1 AS INTEGER) AS token_id
-        |        FROM (SELECT DISTINCT symbol FROM seq)),
-        |pos AS (SELECT doc_id, word_i, j, symbol,
-        |          row_number() OVER (PARTITION BY doc_id ORDER BY word_i, j) - 1 AS pos
-        |        FROM seq)
-        |SELECT p.doc_id AS doc, CAST(p.pos AS BIGINT) AS pos, v.token_id, p.symbol
-        |FROM pos p JOIN voc v USING (symbol)
-        |WHERE p.doc_id % 25 = 0
-        |ORDER BY doc, pos""".stripMargin,
-
-    "text_pack_bpe" ->
-      """WITH t AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM documents),
-        |w AS (SELECT doc_id, i AS word_i, ws[i] AS word
-        |      FROM t, LATERAL unnest(generate_series(1, len(ws))) AS g(i)
-        |      WHERE ws[i] <> ''),
-        |s0 AS (SELECT doc_id, word_i,
-        |       ' ' || array_to_string(string_split(word, ''), ' ') || ' ' AS s FROM w),
-        |s1 AS (SELECT doc_id, word_i, replace(replace(s, ' t a ', ' ta '), ' t a ', ' ta ') AS s FROM s0),
-        |s2 AS (SELECT doc_id, word_i, replace(replace(s, ' ta b ', ' tab '), ' ta b ', ' tab ') AS s FROM s1),
-        |s3 AS (SELECT doc_id, word_i, replace(replace(s, ' l e ', ' le '), ' l e ', ' le ') AS s FROM s2),
-        |s4 AS (SELECT doc_id, word_i, replace(replace(s, ' tab le ', ' table '), ' tab le ', ' table ') AS s FROM s3),
-        |s5 AS (SELECT doc_id, word_i, replace(replace(s, ' e r ', ' er '), ' e r ', ' er ') AS s FROM s4),
-        |cnt AS (SELECT doc_id, SUM(len(string_split(trim(s), ' '))) AS n_tokens
-        |        FROM s5 GROUP BY doc_id),
-        |r AS (SELECT d.doc_id, d.doc_id % 8 AS shard, COALESCE(c.n_tokens, 0) AS n_tokens
-        |      FROM documents d LEFT JOIN cnt c USING (doc_id)),
-        |win AS (SELECT doc_id, shard, n_tokens,
-        |          SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS start_off
-        |        FROM r)
-        |SELECT doc_id, CAST(shard AS INTEGER) AS shard, CAST(n_tokens AS BIGINT) AS n_tokens,
-        |  CAST(shard * 4294967296 + CAST(FLOOR(start_off / 1024.0) AS BIGINT) AS BIGINT) AS pack
-        |FROM win ORDER BY doc_id""".stripMargin,
-
-    // text_bpe_roundtrip: decode(encode(text)) == whitespace-normalized
-    // text — the oracle IS the normalization, no tokenizer replay needed.
-    "text_bpe_roundtrip" ->
-      """SELECT doc_id AS doc,
-        |  trim(regexp_replace(text, ' +', ' ', 'g')) AS rebuilt_text
-        |FROM documents ORDER BY doc""".stripMargin,
-
-    "text_dsir_select" ->
-      """WITH tok AS (
-        |  SELECT doc_id, lang,
-        |    unnest(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS term
-        |  FROM documents),
-        |nt AS (SELECT COUNT(*) AS n FROM tok WHERE lang = 'en'),
-        |nr AS (SELECT COUNT(*) AS n FROM tok),
-        |tr AS (SELECT term, (COUNT(*) * 1000000) // (SELECT n FROM nt) AS rate_t
-        |       FROM tok WHERE lang = 'en' GROUP BY term),
-        |rr AS (SELECT term, (COUNT(*) * 1000000) // (SELECT n FROM nr) AS rate_r
-        |       FROM tok GROUP BY term),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term)
-        |SELECT tf.doc_id AS doc,
-        |  CAST(SUM(tf.tf * (COALESCE(tr.rate_t, 0) - rr.rate_r)) AS BIGINT) AS weight,
-        |  CAST(SUM(tf.tf) AS BIGINT) AS n_tokens
-        |FROM tf LEFT JOIN tr USING (term) JOIN rr USING (term)
-        |GROUP BY tf.doc_id
-        |ORDER BY weight DESC, doc LIMIT 50""".stripMargin,
-
-    "graph_copurchase_edges" ->
-      """WITH b AS (
-        |  SELECT DISTINCT user_id AS u,
-        |    CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS BIGINT) AS item
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT a.u AS ua, b2.u AS ub, COUNT(*) AS w
-        |FROM b a JOIN b b2 USING (item)
-        |WHERE a.u < b2.u
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "graph_triangles" ->
-      """WITH b AS (
-        |  SELECT DISTINCT user_id AS u,
-        |    CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS BIGINT) AS item
-        |  FROM events WHERE event_type = 'purchase'),
-        |e AS (SELECT a.u AS x, b2.u AS y
-        |      FROM b a JOIN b b2 USING (item)
-        |      WHERE a.u < b2.u GROUP BY 1, 2 HAVING COUNT(*) >= 5),
-        |t AS (SELECT e1.x AS v1, e1.y AS v2, e2.y AS v3
-        |      FROM e e1
-        |      JOIN e e2 ON e2.x = e1.y
-        |      JOIN e e3 ON e3.x = e1.x AND e3.y = e2.y),
-        |pv AS (SELECT unnest([v1, v2, v3]) AS v FROM t)
-        |SELECT v, COUNT(*) AS triangles FROM pv
-        |GROUP BY v ORDER BY v""".stripMargin,
-
-    "retention_matrix_exact" ->
-      """WITH d AS (SELECT DISTINCT event_type AS g, user_id AS u FROM events),
-        |c AS (SELECT g, COUNT(*) AS n FROM d GROUP BY g),
-        |p AS (SELECT a.g AS g_a, b.g AS g_b, COUNT(*) AS both_ab
-        |      FROM d a JOIN d b ON a.u = b.u AND a.g < b.g GROUP BY 1, 2)
-        |SELECT p.g_a, p.g_b,
-        |  ca.n - p.both_ab AS only_a,
-        |  cb.n - p.both_ab AS only_b,
-        |  p.both_ab,
-        |  ca.n + cb.n - p.both_ab AS union_ab
-        |FROM p JOIN c ca ON ca.g = p.g_a JOIN c cb ON cb.g = p.g_b
-        |ORDER BY 1, 2""".stripMargin,
-
-    // The catalog theta matrix is EXACT while every group stays under the
-    // sketch's nominal entries (this fixture does at every SF) — so the
-    // zero-scan answer has a full relational oracle, incremental appends
-    // included.
-    "lake_stats_theta_overlap" ->
-      """WITH d AS (SELECT DISTINCT event_type AS g, user_id AS u FROM events),
-        |c AS (SELECT g, COUNT(*) AS n FROM d GROUP BY g),
-        |p AS (SELECT a.g AS g_a, b.g AS g_b, COUNT(*) AS both_ab
-        |      FROM d a JOIN d b ON a.u = b.u AND a.g < b.g GROUP BY 1, 2)
-        |SELECT ca.g AS g_a, cb.g AS g_b,
-        |  CAST(ca.n AS BIGINT) AS distinct_a, CAST(cb.n AS BIGINT) AS distinct_b,
-        |  CAST(COALESCE(p.both_ab, 0) AS BIGINT) AS both_ab
-        |FROM c ca JOIN c cb ON ca.g < cb.g
-        |LEFT JOIN p ON p.g_a = ca.g AND p.g_b = cb.g
-        |ORDER BY 1, 2""".stripMargin,
-
-    "lake_stats_overlap" ->
-      """WITH d AS (SELECT DISTINCT event_type AS g, user_id AS u FROM events),
-        |c AS (SELECT g, COUNT(*) AS n FROM d GROUP BY g),
-        |p AS (SELECT a.g AS g_a, b.g AS g_b, COUNT(*) AS both_ab
-        |      FROM d a JOIN d b ON a.u = b.u AND a.g < b.g GROUP BY 1, 2)
-        |SELECT ca.g AS g_a, cb.g AS g_b,
-        |  CAST(ca.n AS BIGINT) AS distinct_a, CAST(cb.n AS BIGINT) AS distinct_b,
-        |  CAST(COALESCE(p.both_ab, 0) AS BIGINT) AS both_ab
-        |FROM c ca JOIN c cb ON ca.g < cb.g
-        |LEFT JOIN p ON p.g_a = ca.g AND p.g_b = cb.g
-        |ORDER BY 1, 2""".stripMargin,
-
-    "lake_sql_netnew" ->
-      """WITH d AS (SELECT DISTINCT event_type AS g, user_id AS u FROM events),
-        |c AS (SELECT g, COUNT(*) AS n FROM d GROUP BY g),
-        |firsts AS (SELECT u, MIN(g) AS g FROM d GROUP BY u),
-        |nn AS (SELECT g, COUNT(*) AS net FROM firsts GROUP BY g)
-        |SELECT c.g AS value, CAST(c.n AS BIGINT) AS approx_distinct,
-        |  CAST(COALESCE(nn.net, 0) AS BIGINT) AS approx_net_new
-        |FROM c LEFT JOIN nn ON nn.g = c.g
-        |ORDER BY c.g""".stripMargin,
-
-    "lake_sql_overlap" ->
-      """WITH d AS (SELECT DISTINCT event_type AS g, user_id AS u FROM events),
-        |c AS (SELECT g, COUNT(*) AS n FROM d GROUP BY g),
-        |p AS (SELECT a.g AS g_a, b.g AS g_b, COUNT(*) AS both_ab
-        |      FROM d a JOIN d b ON a.u = b.u AND a.g < b.g GROUP BY 1, 2)
-        |SELECT ca.g AS value_a, cb.g AS value_b,
-        |  CAST(ca.n AS BIGINT) AS approx_distinct_a,
-        |  CAST(cb.n AS BIGINT) AS approx_distinct_b,
-        |  CAST(COALESCE(p.both_ab, 0) AS BIGINT) AS approx_overlap
-        |FROM c ca JOIN c cb ON ca.g < cb.g
-        |LEFT JOIN p ON p.g_a = ca.g AND p.g_b = cb.g
-        |ORDER BY 1, 2""".stripMargin,
-
-    "q34_overlap_exact" ->
-      """WITH tagged AS (
-        |  SELECT user_id,
-        |    MAX(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS v,
-        |    MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS p
-        |  FROM events WHERE event_type IN ('view', 'purchase')
-        |  GROUP BY user_id)
-        |SELECT CAST(SUM(v) AS BIGINT) AS viewers,
-        |  CAST(SUM(p) AS BIGINT) AS buyers,
-        |  CAST(SUM(v * p) AS BIGINT) AS both_vp,
-        |  CAST(SUM(v * (1 - p)) AS BIGINT) AS view_only,
-        |  CAST(COUNT(*) AS BIGINT) AS all_users
-        |FROM tagged""".stripMargin,
-
-    "pipeline_entity_resolution" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT CAST(c_custkey AS BIGINT) AS rid, c_name AS name
-        |  FROM customer WHERE c_custkey % 11 = 0),
-        |typo AS (
-        |  SELECT CAST(c_custkey + 100000 AS BIGINT) AS rid,
-        |         substring(c_name, 1, 9) || 'x' || substring(c_name, 11) AS name
-        |  FROM customer WHERE c_custkey % 22 = 0),
-        |rws AS (SELECT * FROM base UNION ALL SELECT * FROM typo),
-        |nid AS (SELECT name, MIN(rid) AS nid FROM rws GROUP BY name),
-        |p AS (SELECT a.nid AS ida, b.nid AS idb FROM nid a JOIN nid b
-        |      ON a.name < b.name AND abs(length(a.name) - length(b.name)) <= 1
-        |         AND levenshtein(a.name, b.name) <= 1),
-        |edges AS (SELECT ida AS a, idb AS b FROM p
-        |          UNION SELECT idb, ida FROM p),
-        |reach(v, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.v),
-        |comps AS (SELECT v, MIN(r) AS component FROM reach GROUP BY v)
-        |SELECT r.rid, COALESCE(c.component, n.nid) AS entity
-        |FROM rws r JOIN nid n USING (name) LEFT JOIN comps c ON c.v = n.nid
-        |ORDER BY r.rid""".stripMargin,
-
-    "graph_ppr_weighted" ->
-      """WITH b AS (
-        |  SELECT DISTINCT user_id AS u,
-        |    CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS BIGINT) AS item
-        |  FROM events WHERE event_type = 'purchase'),
-        |e0 AS (SELECT a.u AS x, b2.u AS y, COUNT(*) AS w
-        |       FROM b a JOIN b b2 USING (item)
-        |       WHERE a.u < b2.u GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-        |e AS (SELECT x AS u, y AS v, w FROM e0
-        |      UNION ALL SELECT y AS u, x AS v, w FROM e0),
-        |wt AS (SELECT u, SUM(w) AS wt FROM e GROUP BY u),
-        |s0 AS (SELECT u, CASE WHEN u % 10 = 0 THEN CAST(1000000 AS BIGINT)
-        |                      ELSE CAST(0 AS BIGINT) END AS s FROM wt),
-        |i1 AS (SELECT e.v AS u, SUM((s0.s * e.w) // wt.wt) AS m
-        |       FROM e JOIN s0 ON s0.u = e.u JOIN wt ON wt.u = e.u GROUP BY e.v),
-        |s1 AS (SELECT wt.u, (CASE WHEN wt.u % 10 = 0 THEN 150000 ELSE 0 END)
-        |         + (850000 * COALESCE(i1.m, 0)) // 1000000 AS s
-        |       FROM wt LEFT JOIN i1 ON i1.u = wt.u),
-        |i2 AS (SELECT e.v AS u, SUM((s1.s * e.w) // wt.wt) AS m
-        |       FROM e JOIN s1 ON s1.u = e.u JOIN wt ON wt.u = e.u GROUP BY e.v),
-        |s2 AS (SELECT wt.u, (CASE WHEN wt.u % 10 = 0 THEN 150000 ELSE 0 END)
-        |         + (850000 * COALESCE(i2.m, 0)) // 1000000 AS s
-        |       FROM wt LEFT JOIN i2 ON i2.u = wt.u),
-        |i3 AS (SELECT e.v AS u, SUM((s2.s * e.w) // wt.wt) AS m
-        |       FROM e JOIN s2 ON s2.u = e.u JOIN wt ON wt.u = e.u GROUP BY e.v),
-        |s3 AS (SELECT wt.u, (CASE WHEN wt.u % 10 = 0 THEN 150000 ELSE 0 END)
-        |         + (850000 * COALESCE(i3.m, 0)) // 1000000 AS s
-        |       FROM wt LEFT JOIN i3 ON i3.u = wt.u)
-        |SELECT u AS v, CAST(s AS BIGINT) AS pr FROM s3 ORDER BY v""".stripMargin,
-
-    "pipeline_curation_full" ->
-      s"""WITH u0 AS (SELECT doc_id, $UrlSynthSql AS url FROM documents),
-        |hp AS (SELECT doc_id,
-        |  lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-        |  lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS hostport
-        |  FROM u0),
-        |h AS (SELECT doc_id,
-        |  CASE WHEN scheme = 'http'
-        |         THEN regexp_replace(regexp_replace(hostport, '^www\\.', ''), ':80$$', '')
-        |       WHEN scheme = 'https'
-        |         THEN regexp_replace(regexp_replace(hostport, '^www\\.', ''), ':443$$', '')
-        |       ELSE regexp_replace(hostport, '^www\\.', '') END AS host FROM hp),
-        |dom AS (SELECT doc_id, host, string_split(host, '.') AS ls FROM h),
-        |dd AS (SELECT doc_id, $DomainCaseSql AS domain FROM dom),
-        |ranked AS (SELECT domain, doc_id, row_number() OVER (PARTITION BY domain
-        |  ORDER BY substring(md5(CAST(doc_id AS VARCHAR)), 1, 4), doc_id) AS rn
-        |  FROM dd WHERE domain NOT IN ('src3.co.uk', 'src7.co.uk')),
-        |capped AS (SELECT domain, doc_id FROM ranked WHERE rn <= 20),
-        |t AS (SELECT doc_id, lang, source,
-        |    string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS ws
-        |  FROM documents),
-        |bg AS (SELECT doc_id, lang, source, ws[i] || ' ' || ws[i+1] AS bg
-        |       FROM t, LATERAL (SELECT unnest(generate_series(1, len(ws)-1)) AS i) g),
-        |refbg AS (SELECT bg FROM bg WHERE lang = 'en' AND source = 'src0'),
-        |big AS (SELECT bg, COUNT(*) AS c2 FROM refbg GROUP BY bg),
-        |uni AS (SELECT split_part(bg, ' ', 1) AS w1, COUNT(*) AS c1
-        |        FROM refbg GROUP BY 1),
-        |model AS (SELECT bg, (c2 * 1000000) // c1 AS rate
-        |          FROM big JOIN uni ON split_part(big.bg, ' ', 1) = uni.w1),
-        |tf AS (SELECT bg.doc_id, bg.bg, COUNT(*) AS tf
-        |       FROM bg JOIN capped ON capped.doc_id = bg.doc_id GROUP BY 1, 2),
-        |sc AS (SELECT tf.doc_id,
-        |         CAST(SUM(tf) AS BIGINT) AS n_bigrams,
-        |         CAST(SUM(tf * COALESCE(rate, 0)) // SUM(tf) AS BIGINT) AS lm_avg
-        |       FROM tf LEFT JOIN model USING (bg) GROUP BY 1),
-        |good AS (SELECT * FROM sc WHERE lm_avg >= 34000),
-        |packed AS (SELECT doc_id, n_bigrams, lm_avg,
-        |  (doc_id % 8) * 4294967296 +
-        |  (SUM(n_bigrams) OVER (PARTITION BY doc_id % 8 ORDER BY doc_id
-        |     ROWS UNBOUNDED PRECEDING) - n_bigrams) // 256 AS pack
-        |  FROM good)
-        |SELECT p.doc_id, c.domain, p.lm_avg, CAST(p.pack AS BIGINT) AS pack
-        |FROM packed p JOIN capped c ON c.doc_id = p.doc_id
-        |ORDER BY p.doc_id""".stripMargin,
-
-    "graph_clustering_coeff" ->
-      """WITH b AS (
-        |  SELECT DISTINCT user_id AS u,
-        |    CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS BIGINT) AS item
-        |  FROM events WHERE event_type = 'purchase'),
-        |e AS (SELECT a.u AS x, b2.u AS y
-        |      FROM b a JOIN b b2 USING (item)
-        |      WHERE a.u < b2.u GROUP BY 1, 2 HAVING COUNT(*) >= 5),
-        |both_dir AS (SELECT x AS v FROM e UNION ALL SELECT y FROM e),
-        |deg AS (SELECT v, COUNT(*) AS degree FROM both_dir GROUP BY v),
-        |t AS (SELECT e1.x AS v1, e1.y AS v2, e2.y AS v3
-        |      FROM e e1
-        |      JOIN e e2 ON e2.x = e1.y
-        |      JOIN e e3 ON e3.x = e1.x AND e3.y = e2.y),
-        |pv AS (SELECT unnest([v1, v2, v3]) AS v FROM t),
-        |tri AS (SELECT v, COUNT(*) AS triangles FROM pv GROUP BY v)
-        |SELECT deg.v, deg.degree,
-        |  COALESCE(tri.triangles, 0) AS triangles,
-        |  CASE WHEN deg.degree > 1
-        |       THEN COALESCE(tri.triangles, 0) * 2.0 / (deg.degree * (deg.degree - 1))
-        |       ELSE 0.0 END AS coeff
-        |FROM deg LEFT JOIN tri ON tri.v = deg.v
-        |ORDER BY deg.v""".stripMargin,
-
-    "graph_kcore" ->
-      """WITH b AS MATERIALIZED (
-        |  SELECT DISTINCT user_id AS u,
-        |    CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS BIGINT) AS item
-        |  FROM events WHERE event_type = 'purchase'),
-        |e0 AS MATERIALIZED (SELECT a.u AS a, b2.u AS b FROM b a JOIN b b2 USING (item)
-        |       WHERE a.u < b2.u GROUP BY 1, 2 HAVING COUNT(*) >= 5),
-        |d1 AS MATERIALIZED (SELECT v, COUNT(*) AS dg FROM (SELECT a AS v FROM e0 UNION ALL SELECT b FROM e0) GROUP BY v),
-        |a1 AS MATERIALIZED (SELECT v FROM d1 WHERE dg >= 3),
-        |e1 AS MATERIALIZED (SELECT e.a, e.b FROM e0 e JOIN a1 x ON e.a = x.v JOIN a1 y ON e.b = y.v),
-        |d2 AS MATERIALIZED (SELECT v, COUNT(*) AS dg FROM (SELECT a AS v FROM e1 UNION ALL SELECT b FROM e1) GROUP BY v),
-        |a2 AS MATERIALIZED (SELECT v FROM d2 WHERE dg >= 3),
-        |e2 AS MATERIALIZED (SELECT e.a, e.b FROM e1 e JOIN a2 x ON e.a = x.v JOIN a2 y ON e.b = y.v),
-        |d3 AS MATERIALIZED (SELECT v, COUNT(*) AS dg FROM (SELECT a AS v FROM e2 UNION ALL SELECT b FROM e2) GROUP BY v),
-        |a3 AS MATERIALIZED (SELECT v FROM d3 WHERE dg >= 3),
-        |e3 AS MATERIALIZED (SELECT e.a, e.b FROM e2 e JOIN a3 x ON e.a = x.v JOIN a3 y ON e.b = y.v),
-        |d4 AS MATERIALIZED (SELECT v, COUNT(*) AS dg FROM (SELECT a AS v FROM e3 UNION ALL SELECT b FROM e3) GROUP BY v),
-        |a4 AS MATERIALIZED (SELECT v FROM d4 WHERE dg >= 3),
-        |e4 AS MATERIALIZED (SELECT e.a, e.b FROM e3 e JOIN a4 x ON e.a = x.v JOIN a4 y ON e.b = y.v),
-        |d5 AS MATERIALIZED (SELECT v, COUNT(*) AS dg FROM (SELECT a AS v FROM e4 UNION ALL SELECT b FROM e4) GROUP BY v),
-        |a5 AS MATERIALIZED (SELECT v FROM d5 WHERE dg >= 3),
-        |e5 AS MATERIALIZED (SELECT e.a, e.b FROM e4 e JOIN a5 x ON e.a = x.v JOIN a5 y ON e.b = y.v),
-        |d6 AS MATERIALIZED (SELECT v, COUNT(*) AS dg FROM (SELECT a AS v FROM e5 UNION ALL SELECT b FROM e5) GROUP BY v),
-        |a6 AS MATERIALIZED (SELECT v FROM d6 WHERE dg >= 3),
-        |e6 AS MATERIALIZED (SELECT e.a, e.b FROM e5 e JOIN a6 x ON e.a = x.v JOIN a6 y ON e.b = y.v)
-        |SELECT v, CAST(COUNT(*) AS BIGINT) AS core_deg
-        |FROM (SELECT a AS v FROM e6 UNION ALL SELECT b FROM e6)
-        |GROUP BY v ORDER BY v""".stripMargin,
-
-    "graph_pagerank_int" ->
-      """WITH b AS (
-        |  SELECT DISTINCT user_id AS u,
-        |    CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS BIGINT) AS item
-        |  FROM events WHERE event_type = 'purchase'),
-        |e0 AS (SELECT a.u AS x, b2.u AS y FROM b a JOIN b b2 USING (item)
-        |       WHERE a.u < b2.u GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-        |e AS (SELECT x AS u, y AS v FROM e0 UNION ALL SELECT y AS u, x AS v FROM e0),
-        |deg AS (SELECT u, COUNT(*) AS d FROM e GROUP BY u),
-        |s0 AS (SELECT u, CAST(1000000 AS BIGINT) AS s FROM deg),
-        |i1 AS (SELECT e.v AS u, SUM(s0.s // deg.d) AS m
-        |       FROM e JOIN s0 ON s0.u = e.u JOIN deg ON deg.u = e.u GROUP BY e.v),
-        |s1 AS (SELECT deg.u, 150000 + (850000 * COALESCE(i1.m, 0)) // 1000000 AS s
-        |       FROM deg LEFT JOIN i1 ON i1.u = deg.u),
-        |i2 AS (SELECT e.v AS u, SUM(s1.s // deg.d) AS m
-        |       FROM e JOIN s1 ON s1.u = e.u JOIN deg ON deg.u = e.u GROUP BY e.v),
-        |s2 AS (SELECT deg.u, 150000 + (850000 * COALESCE(i2.m, 0)) // 1000000 AS s
-        |       FROM deg LEFT JOIN i2 ON i2.u = deg.u),
-        |i3 AS (SELECT e.v AS u, SUM(s2.s // deg.d) AS m
-        |       FROM e JOIN s2 ON s2.u = e.u JOIN deg ON deg.u = e.u GROUP BY e.v),
-        |s3 AS (SELECT deg.u, 150000 + (850000 * COALESCE(i3.m, 0)) // 1000000 AS s
-        |       FROM deg LEFT JOIN i3 ON i3.u = deg.u)
-        |SELECT u AS v, CAST(s AS BIGINT) AS pr FROM s3 ORDER BY v""".stripMargin,
-
-    "graph_ppr_directed" ->
-      """WITH b AS (
-        |  SELECT DISTINCT user_id AS u,
-        |    CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS BIGINT) AS item
-        |  FROM events WHERE event_type = 'purchase'),
-        |e0 AS (SELECT a.u AS x, b2.u AS y, COUNT(*) AS w
-        |       FROM b a JOIN b b2 USING (item)
-        |       WHERE a.u < b2.u GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-        |e AS (SELECT CASE WHEN (x + y) % 2 = 0 THEN x ELSE y END AS u,
-        |             CASE WHEN (x + y) % 2 = 0 THEN y ELSE x END AS v, w FROM e0),
-        |verts AS (SELECT u FROM e UNION SELECT v FROM e),
-        |wt AS (SELECT u, SUM(w) AS wt FROM e GROUP BY u),
-        |seeds AS (SELECT u FROM verts WHERE u % 10 = 0),
-        |ns AS (SELECT COUNT(*) AS n FROM seeds),
-        |s0 AS (SELECT u, CASE WHEN u IN (SELECT u FROM seeds)
-        |                 THEN CAST(1000000 AS BIGINT) ELSE 0 END AS s FROM verts),
-        |d1 AS (SELECT COALESCE(SUM(s), 0) AS dm FROM s0
-        |       WHERE u NOT IN (SELECT u FROM wt)),
-        |i1 AS (SELECT e.v AS u, SUM((s0.s * e.w) // wt.wt) AS m
-        |       FROM e JOIN s0 ON s0.u = e.u JOIN wt ON wt.u = e.u GROUP BY e.v),
-        |s1 AS (SELECT verts.u,
-        |         (CASE WHEN verts.u IN (SELECT u FROM seeds) THEN 150000 ELSE 0 END) +
-        |         (850000 * (COALESCE(i1.m, 0) +
-        |            CASE WHEN verts.u IN (SELECT u FROM seeds)
-        |            THEN (SELECT dm FROM d1) // (SELECT n FROM ns) ELSE 0 END))
-        |           // 1000000 AS s
-        |       FROM verts LEFT JOIN i1 ON i1.u = verts.u),
-        |d2 AS (SELECT COALESCE(SUM(s), 0) AS dm FROM s1
-        |       WHERE u NOT IN (SELECT u FROM wt)),
-        |i2 AS (SELECT e.v AS u, SUM((s1.s * e.w) // wt.wt) AS m
-        |       FROM e JOIN s1 ON s1.u = e.u JOIN wt ON wt.u = e.u GROUP BY e.v),
-        |s2 AS (SELECT verts.u,
-        |         (CASE WHEN verts.u IN (SELECT u FROM seeds) THEN 150000 ELSE 0 END) +
-        |         (850000 * (COALESCE(i2.m, 0) +
-        |            CASE WHEN verts.u IN (SELECT u FROM seeds)
-        |            THEN (SELECT dm FROM d2) // (SELECT n FROM ns) ELSE 0 END))
-        |           // 1000000 AS s
-        |       FROM verts LEFT JOIN i2 ON i2.u = verts.u),
-        |d3 AS (SELECT COALESCE(SUM(s), 0) AS dm FROM s2
-        |       WHERE u NOT IN (SELECT u FROM wt)),
-        |i3 AS (SELECT e.v AS u, SUM((s2.s * e.w) // wt.wt) AS m
-        |       FROM e JOIN s2 ON s2.u = e.u JOIN wt ON wt.u = e.u GROUP BY e.v),
-        |s3 AS (SELECT verts.u,
-        |         (CASE WHEN verts.u IN (SELECT u FROM seeds) THEN 150000 ELSE 0 END) +
-        |         (850000 * (COALESCE(i3.m, 0) +
-        |            CASE WHEN verts.u IN (SELECT u FROM seeds)
-        |            THEN (SELECT dm FROM d3) // (SELECT n FROM ns) ELSE 0 END))
-        |           // 1000000 AS s
-        |       FROM verts LEFT JOIN i3 ON i3.u = verts.u)
-        |SELECT u AS v, CAST(s AS BIGINT) AS pr FROM s3 ORDER BY v""".stripMargin,
-
-    "graph_pagerank_directed" ->
-      """WITH b AS (
-        |  SELECT DISTINCT user_id AS u,
-        |    CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS BIGINT) AS item
-        |  FROM events WHERE event_type = 'purchase'),
-        |e0 AS (SELECT a.u AS x, b2.u AS y FROM b a JOIN b b2 USING (item)
-        |       WHERE a.u < b2.u GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-        |e AS (SELECT CASE WHEN (x + y) % 2 = 0 THEN x ELSE y END AS u,
-        |             CASE WHEN (x + y) % 2 = 0 THEN y ELSE x END AS v FROM e0),
-        |verts AS (SELECT u FROM e UNION SELECT v FROM e),
-        |nv AS (SELECT COUNT(*) AS n FROM verts),
-        |od AS (SELECT u, COUNT(*) AS d FROM e GROUP BY u),
-        |s0 AS (SELECT u, CAST(1000000 AS BIGINT) AS s FROM verts),
-        |d1 AS (SELECT COALESCE(SUM(s), 0) AS dm FROM s0
-        |       WHERE u NOT IN (SELECT u FROM od)),
-        |i1 AS (SELECT e.v AS u, SUM(s0.s // od.d) AS m
-        |       FROM e JOIN s0 ON s0.u = e.u JOIN od ON od.u = e.u GROUP BY e.v),
-        |s1 AS (SELECT verts.u, 150000 + (850000 * (COALESCE(i1.m, 0) +
-        |         (SELECT dm FROM d1) // (SELECT n FROM nv))) // 1000000 AS s
-        |       FROM verts LEFT JOIN i1 ON i1.u = verts.u),
-        |d2 AS (SELECT COALESCE(SUM(s), 0) AS dm FROM s1
-        |       WHERE u NOT IN (SELECT u FROM od)),
-        |i2 AS (SELECT e.v AS u, SUM(s1.s // od.d) AS m
-        |       FROM e JOIN s1 ON s1.u = e.u JOIN od ON od.u = e.u GROUP BY e.v),
-        |s2 AS (SELECT verts.u, 150000 + (850000 * (COALESCE(i2.m, 0) +
-        |         (SELECT dm FROM d2) // (SELECT n FROM nv))) // 1000000 AS s
-        |       FROM verts LEFT JOIN i2 ON i2.u = verts.u),
-        |d3 AS (SELECT COALESCE(SUM(s), 0) AS dm FROM s2
-        |       WHERE u NOT IN (SELECT u FROM od)),
-        |i3 AS (SELECT e.v AS u, SUM(s2.s // od.d) AS m
-        |       FROM e JOIN s2 ON s2.u = e.u JOIN od ON od.u = e.u GROUP BY e.v),
-        |s3 AS (SELECT verts.u, 150000 + (850000 * (COALESCE(i3.m, 0) +
-        |         (SELECT dm FROM d3) // (SELECT n FROM nv))) // 1000000 AS s
-        |       FROM verts LEFT JOIN i3 ON i3.u = verts.u)
-        |SELECT u AS v, CAST(s AS BIGINT) AS pr FROM s3 ORDER BY v""".stripMargin,
-
-    "curate_url_normalize" ->
-      s"""WITH u0 AS (SELECT doc_id, $UrlSynthSql AS url FROM documents),
-        |p AS (SELECT doc_id, url,
-        |  lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-        |  lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS hostport,
-        |  regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*(.*)$$', 1) AS rest
-        |FROM u0),
-        |h AS (SELECT *,
-        |  CASE WHEN scheme = 'http'
-        |         THEN regexp_replace(regexp_replace(hostport, '^www\\.', ''), ':80$$', '')
-        |       WHEN scheme = 'https'
-        |         THEN regexp_replace(regexp_replace(hostport, '^www\\.', ''), ':443$$', '')
-        |       ELSE regexp_replace(hostport, '^www\\.', '') END AS host,
-        |  regexp_replace(rest, '#.*$$', '') AS nofrag FROM p),
-        |q AS (SELECT *,
-        |  regexp_replace(regexp_replace(nofrag, '\\?.*$$', ''), '/+$$', '') AS path,
-        |  regexp_extract(nofrag, '\\?(.*)$$', 1) AS qs FROM h),
-        |f AS (SELECT *, array_to_string(list_sort(list_filter(string_split(qs, '&'),
-        |  x -> NOT (starts_with(x, 'utm_') OR starts_with(x, 'fbclid=')
-        |            OR starts_with(x, 'gclid=') OR starts_with(x, 'msclkid=')
-        |            OR x = ''))), '&') AS sq FROM q),
-        |n AS (SELECT doc_id, url, host,
-        |  scheme || '://' || host || path ||
-        |  (CASE WHEN sq = '' THEN '' ELSE '?' || sq END) AS norm_url FROM f),
-        |dom AS (SELECT *, string_split(host, '.') AS ls FROM n)
-        |SELECT doc_id, url, norm_url, $DomainCaseSql AS domain
-        |FROM dom ORDER BY doc_id""".stripMargin,
-
-    "curate_domain_cap" ->
-      s"""WITH u0 AS (SELECT doc_id, $UrlSynthSql AS url FROM documents),
-        |hp AS (SELECT doc_id,
-        |  lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-        |  lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)', 1)) AS hostport
-        |  FROM u0),
-        |h AS (SELECT doc_id,
-        |  CASE WHEN scheme = 'http'
-        |         THEN regexp_replace(regexp_replace(hostport, '^www\\.', ''), ':80$$', '')
-        |       WHEN scheme = 'https'
-        |         THEN regexp_replace(regexp_replace(hostport, '^www\\.', ''), ':443$$', '')
-        |       ELSE regexp_replace(hostport, '^www\\.', '') END AS host FROM hp),
-        |dom AS (SELECT doc_id, host, string_split(host, '.') AS ls FROM h),
-        |dd AS (SELECT doc_id, $DomainCaseSql AS domain FROM dom),
-        |ranked AS (SELECT domain, doc_id, row_number() OVER (PARTITION BY domain
-        |  ORDER BY substring(md5(CAST(doc_id AS VARCHAR)), 1, 4), doc_id) AS rn
-        |  FROM dd WHERE domain NOT IN ('src3.co.uk', 'src7.co.uk'))
-        |SELECT domain, doc_id FROM ranked WHERE rn <= 8
-        |ORDER BY domain, doc_id""".stripMargin,
-
-    "fuzzy_join_names" ->
-      """WITH d AS (SELECT DISTINCT c_name AS name FROM customer)
-        |SELECT a.name AS name_a, b.name AS name_b,
-        |  CAST(levenshtein(a.name, b.name) AS INTEGER) AS dist
-        |FROM d a JOIN d b
-        |  ON a.name < b.name AND abs(length(a.name) - length(b.name)) <= 1
-        |WHERE levenshtein(a.name, b.name) <= 1
-        |ORDER BY 1, 2""".stripMargin,
-
-    "fuzzy_join_names2" ->
-      """WITH d AS (SELECT DISTINCT s_name AS name FROM supplier)
-        |SELECT a.name AS name_a, b.name AS name_b,
-        |  CAST(levenshtein(a.name, b.name) AS INTEGER) AS dist
-        |FROM d a JOIN d b
-        |  ON a.name < b.name AND abs(length(a.name) - length(b.name)) <= 2
-        |WHERE levenshtein(a.name, b.name) <= 2
-        |ORDER BY 1, 2""".stripMargin,
-
-    "text_lm_score" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, source,
-        |    string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS ws
-        |  FROM documents),
-        |bg AS (SELECT doc_id, lang, source, ws[i] || ' ' || ws[i+1] AS bg
-        |       FROM t, LATERAL (SELECT unnest(generate_series(1, len(ws)-1)) AS i) g),
-        |refbg AS (SELECT bg FROM bg WHERE lang = 'en' AND source = 'src0'),
-        |big AS (SELECT bg, COUNT(*) AS c2 FROM refbg GROUP BY bg),
-        |uni AS (SELECT split_part(bg, ' ', 1) AS w1, COUNT(*) AS c1
-        |        FROM refbg GROUP BY 1),
-        |model AS (SELECT bg, (c2 * 1000000) // c1 AS rate
-        |          FROM big JOIN uni ON split_part(big.bg, ' ', 1) = uni.w1),
-        |tf AS (SELECT doc_id, bg, COUNT(*) AS tf FROM bg GROUP BY 1, 2)
-        |SELECT tf.doc_id AS doc,
-        |  CAST(SUM(tf) AS BIGINT) AS n_bigrams,
-        |  CAST(SUM(CASE WHEN rate IS NULL THEN tf ELSE 0 END) AS BIGINT) AS oov_bigrams,
-        |  CAST(SUM(tf * COALESCE(rate, 0)) AS BIGINT) AS lm_score,
-        |  CAST(SUM(tf * COALESCE(rate, 0)) // SUM(tf) AS BIGINT) AS lm_avg
-        |FROM tf LEFT JOIN model USING (bg)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "text_chunks" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(TRIM(text), ' ') AS toks FROM documents),
-        |c AS (
-        |  SELECT doc_id, toks,
-        |    unnest(range(0, GREATEST(CAST(ceil(len(toks) / 24.0) AS BIGINT), 1))) AS i
-        |  FROM t)
-        |SELECT doc_id AS doc, i AS chunk_id,
-        |  array_to_string(list_slice(toks, i*24 + 1, i*24 + 32), ' ') AS chunk,
-        |  LEAST(len(toks) - i*24, 32) AS n_words
-        |FROM c""".stripMargin,
-
-    "text_pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id, doc_id % 8 AS shard,
-        |    CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-        |         ELSE LENGTH(TRIM(text))
-        |              - LENGTH(REPLACE(TRIM(text), ' ', '')) + 1 END AS n_tokens
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, shard, n_tokens,
-        |    SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens AS start_off
-        |  FROM t)
-        |SELECT doc_id, CAST(shard AS INTEGER) AS shard, CAST(n_tokens AS BIGINT) AS n_tokens,
-        |  CAST(shard * 4294967296 + CAST(FLOOR(start_off / 2048.0) AS BIGINT) AS BIGINT) AS pack
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    "text_decontaminate" ->
-      """WITH words AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM documents),
-        |idx AS (SELECT doc_id, ws,
-        |        unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS i FROM words),
-        |grams AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s FROM idx),
-        |bench AS (SELECT DISTINCT s FROM grams WHERE doc_id % 50 = 0),
-        |sizes AS (SELECT doc_id, COUNT(*) AS total_grams FROM grams GROUP BY doc_id),
-        |shared AS (
-        |  SELECT g.doc_id, COUNT(*) AS shared_grams
-        |  FROM grams g JOIN bench b ON g.s = b.s GROUP BY g.doc_id)
-        |SELECT sh.doc_id, shared_grams, total_grams,
-        |  CAST(shared_grams AS DOUBLE) / total_grams AS contamination
-        |FROM shared sh JOIN sizes sz ON sh.doc_id = sz.doc_id
-        |ORDER BY sh.doc_id""".stripMargin,
-
-    "text_pii_scrub" -> {
-      val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val phone = "\\b\\d{3}[-.]\\d{3}[-.]\\d{4}\\b"
-      s"""WITH corpus AS (
-         |  SELECT doc_id,
-         |    CASE WHEN doc_id % 7 = 0
-         |      THEN text || ' contact user' || CAST(doc_id AS VARCHAR)
-         |           || '@example.com or 555-123-4567'
-         |      ELSE text END AS text
-         |  FROM documents)
-         |SELECT doc_id,
-         |  regexp_replace(regexp_replace(text, '$email', '<EMAIL>', 'g'),
-         |                 '$phone', '<PHONE>', 'g') AS clean_text,
-         |  CAST(len(regexp_extract_all(text, '$email'))
-         |     + len(regexp_extract_all(text, '$phone')) AS BIGINT) AS n_redacted
-         |FROM corpus ORDER BY doc_id""".stripMargin
-    },
-
-    "text_langid" -> {
-      // Generated from the same constants as the Spark operator. Tie-break
-      // mirrors Spark's array_max over struct(score, lang): highest score,
-      // then lexicographically LARGEST language code.
-      val langs = TextAnalysis.LangMarkers.map(_._1)
-      val langsDesc = langs.sorted.reverse
-      def mk(lang: String, markers: Seq[String]): String = {
-        val lst = markers.map(w => s"'$w'").mkString(", ")
-        s"len(list_filter(string_split(lower(trim(text)), ' '), w -> list_contains([$lst], w))) AS mk_$lang"
-      }
-      def ng(lang: String, tris: Seq[String]): String = {
-        val terms = tris.map(t =>
-          s"(LENGTH(lower(text)) - LENGTH(replace(lower(text), '$t', ''))) / 3").mkString(" + ")
-        s"($terms) AS ng_$lang"
-      }
-      def pick(prefix: String): String = {
-        val m = s"greatest(${langs.map(l => s"${prefix}_$l").mkString(", ")})"
-        val cases = langsDesc.init.map(l => s"WHEN ${prefix}_$l = $m THEN '$l'").mkString(" ")
-        s"CASE WHEN $m <= 0 THEN 'und' $cases ELSE '${langsDesc.last}' END"
-      }
-      s"""WITH s AS (
-         |  SELECT doc_id, lang,
-         |    ${TextAnalysis.LangMarkers.map { case (l, ms) => mk(l, ms) }.mkString(",\n    ")},
-         |    ${TextAnalysis.TrigramProfiles.map { case (l, ts) => ng(l, ts) }.mkString(",\n    ")}
-         |  FROM documents)
-         |SELECT doc_id, ${pick("mk")} AS lang_pred,
-         |  ${pick("ng")} AS lang_pred_ngram, lang
-         |FROM s""".stripMargin
-    },
-
-    "text_repetition" ->
-      """WITH injected AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 5 = 0
-        |    THEN text || chr(10) || 'repeat me line' || chr(10) || 'repeat me line'
-        |         || chr(10) || 'repeat me line'
-        |    ELSE text END AS text
-        |  FROM documents),
-        |lines AS (SELECT doc_id, unnest(string_split(text, chr(10))) AS line FROM injected),
-        |lc AS (SELECT doc_id, line, count(*) AS c, length(line) AS len
-        |       FROM lines WHERE line <> '' GROUP BY doc_id, line)
-        |SELECT doc_id AS doc,
-        |  1.0 - count(*)::DOUBLE / sum(c) AS dup_line_frac,
-        |  coalesce(sum(CASE WHEN c > 1 THEN c*len END), 0)::DOUBLE / sum(c*len)
-        |    AS dup_line_char_frac
-        |FROM lc GROUP BY doc_id ORDER BY doc""".stripMargin,
-
-    "text_top_bigram" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_split_to_array(lower(text), '\s+') AS l FROM documents),
-        |bg AS (SELECT doc_id, unnest(list_zip(l[1:len(l)-1], l[2:len(l)])) AS z FROM toks),
-        |bc AS (SELECT doc_id, z[1] || ' ' || z[2] AS bigram, count(*) AS c
-        |       FROM bg GROUP BY doc_id, bigram)
-        |SELECT doc_id AS doc, max(c)::DOUBLE / sum(c) AS top_bigram_frac,
-        |  CAST(sum(c) AS BIGINT) AS n_bigrams
-        |FROM bc GROUP BY doc_id ORDER BY doc""".stripMargin,
-
-    "sample_hash" ->
-      """SELECT doc_id, lang, source FROM documents
-        |WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) <= '1999'
-        |ORDER BY doc_id""".stripMargin,
-
-    "sample_stratified" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) <=
-        |  CASE WHEN lang = 'en' THEN '7fff' ELSE '1999' END
-        |ORDER BY doc_id""".stripMargin,
-
-    "sample_split_leakproof" ->
-      """WITH RECURSIVE corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text || ' graft near dup suffix' AS text
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |words AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM corpus),
-        |idx AS (SELECT doc_id, ws,
-        |        unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS i FROM words),
-        |grams AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s FROM idx),
-        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
-        |inter AS (
-        |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-        |  FROM grams x JOIN grams y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = doc_a
-        |  JOIN sizes sb ON sb.doc_id = doc_b
-        |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5),
-        |edges AS (
-        |  SELECT doc_a AS a, doc_b AS b FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach(v, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.v),
-        |comps AS (SELECT v AS doc_id, MIN(r) AS component FROM reach GROUP BY v)
-        |SELECT c.doc_id, COALESCE(k.component, c.doc_id) AS canon,
-        |  CASE WHEN substr(md5(CAST(COALESCE(k.component, c.doc_id) AS VARCHAR)), 1, 4)
-        |            <= '3fff'
-        |       THEN 'val' ELSE 'train' END AS split
-        |FROM corpus c LEFT JOIN comps k ON c.doc_id = k.doc_id
-        |ORDER BY c.doc_id""".stripMargin,
-
-    // Same recursive-CTE components as sample_split_leakproof; fold =
-    // Lehmer(canon) mod 5 in the identical reduced-mod integer arithmetic.
-    "sample_folds_leakproof" ->
-      """WITH RECURSIVE corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text || ' graft near dup suffix' AS text
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |words AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM corpus),
-        |idx AS (SELECT doc_id, ws,
-        |        unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS i FROM words),
-        |grams AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s FROM idx),
-        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
-        |inter AS (
-        |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-        |  FROM grams x JOIN grams y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = doc_a
-        |  JOIN sizes sb ON sb.doc_id = doc_b
-        |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5),
-        |edges AS (
-        |  SELECT doc_a AS a, doc_b AS b FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach(v, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.v),
-        |comps AS (SELECT v AS doc_id, MIN(r) AS component FROM reach GROUP BY v)
-        |SELECT c.doc_id, COALESCE(k.component, c.doc_id) AS canon,
-        |  CAST(((COALESCE(k.component, c.doc_id) % 2147483647) * 48271)
-        |       % 2147483647 % 5 AS INTEGER) AS fold
-        |FROM corpus c LEFT JOIN comps k ON c.doc_id = k.doc_id
-        |ORDER BY c.doc_id""".stripMargin,
-
-    "sample_negatives" ->
-      """WITH base AS (
-        |  SELECT doc_id AS anchor,
-        |    CAST(((doc_id % 2147483647) * 48271) % 2147483647 % 16 AS INTEGER) AS shard
-        |  FROM documents),
-        |idx AS (
-        |  SELECT anchor, shard,
-        |    CAST(row_number() OVER (PARTITION BY shard ORDER BY anchor) AS BIGINT) AS rn,
-        |    count(*) OVER (PARTITION BY shard) AS n
-        |  FROM base),
-        |slotted AS (
-        |  SELECT anchor, shard, rn, n,
-        |    CAST(unnest(generate_series(1, 4)) AS BIGINT) AS slot
-        |  FROM idx WHERE n >= 2),
-        |cand AS (
-        |  SELECT anchor, shard, slot,
-        |    ((rn + (((anchor % 2147483647) * 40503 + slot * 69621) % 2147483647) % (n - 1))
-        |      % n) + 1 AS neg_rn
-        |  FROM slotted)
-        |SELECT c.anchor, c.slot, i.anchor AS negative
-        |FROM cand c JOIN idx i ON i.shard = c.shard AND i.rn = c.neg_rn
-        |ORDER BY 1, 2""".stripMargin,
-
-    "text_mixture_weights" ->
-      """WITH t AS (
-        |  SELECT source,
-        |    CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
-        |         ELSE LENGTH(TRIM(text)) - LENGTH(REPLACE(TRIM(text), ' ', '')) + 1
-        |    END AS n_tokens
-        |  FROM documents),
-        |a AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS stratum_weight
-        |      FROM t GROUP BY source)
-        |SELECT source, stratum_weight,
-        |  stratum_weight::DOUBLE / sum(stratum_weight) OVER () AS share,
-        |  1.0 / count(*) OVER () AS target_share,
-        |  (1.0 / count(*) OVER ())
-        |    / (stratum_weight::DOUBLE / sum(stratum_weight) OVER ()) AS sample_weight
-        |FROM a ORDER BY source""".stripMargin,
-
-    "dedup_incr_exact" ->
-      """WITH b1 AS (SELECT doc_id, text FROM documents WHERE doc_id < 250),
-        |b2 AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id >= 250
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, upper(text) || '  !!'
-        |  FROM documents WHERE doc_id < 250 AND doc_id % 9 = 0),
-        |n1 AS (
-        |  SELECT trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
-        |              ' +', ' ', 'g')) AS norm,
-        |         min(doc_id) AS doc_id
-        |  FROM b1 GROUP BY norm),
-        |n2 AS (
-        |  SELECT trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
-        |              ' +', ' ', 'g')) AS norm,
-        |         min(doc_id) AS doc_id
-        |  FROM b2 GROUP BY norm)
-        |SELECT CAST(0 AS BIGINT) AS batch, doc_id FROM n1
-        |UNION ALL
-        |SELECT CAST(1 AS BIGINT), n2.doc_id FROM n2
-        |WHERE norm NOT IN (SELECT norm FROM n1)
-        |ORDER BY batch, doc_id""".stripMargin,
-
-    // Every surface's surviving rows, derived relationally; erased_refs
-    // is identically zero (a nonzero Spark-side count would row-mismatch).
-    "pipeline_erasure_full" -> erasureFullOracle,
-
-    // Streaming erasure converges to the batch erasure's exact state: the
-    // two gates share one oracle by construction.
-    "stream_erasure" -> erasureFullOracle,
-
-    // Erase-then-replay contract: batch 1 returns EXACTLY the canonicals
-    // the erase forgot (id % 7 == 0) — a suppressed replay (ghost) or a
-    // leaked non-forgotten replay both break the row set.
-    "dedup_incr_removed" ->
-      """WITH b1 AS (SELECT doc_id, text FROM documents WHERE doc_id < 250),
-        |n1 AS (
-        |  SELECT trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
-        |              ' +', ' ', 'g')) AS norm,
-        |         min(doc_id) AS doc_id
-        |  FROM b1 GROUP BY norm)
-        |SELECT CAST(0 AS BIGINT) AS batch, doc_id FROM n1
-        |UNION ALL
-        |SELECT CAST(1 AS BIGINT), doc_id FROM n1 WHERE doc_id % 7 = 0
-        |ORDER BY batch, doc_id""".stripMargin,
-
-    // stream_dedup_content: the dedup_incr_exact oracle shape — epoch 2
-    // (the wholesale replay) contributes no rows by construction.
-    "stream_dedup_content" ->
-      """WITH b1 AS (SELECT doc_id, text FROM documents WHERE doc_id < 250),
-        |b2 AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id >= 250
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, upper(text) || '  !!'
-        |  FROM documents WHERE doc_id % 9 = 0),
-        |n1 AS (
-        |  SELECT trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
-        |              ' +', ' ', 'g')) AS norm,
-        |         min(doc_id) AS doc_id
-        |  FROM b1 GROUP BY norm),
-        |n2 AS (
-        |  SELECT trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
-        |              ' +', ' ', 'g')) AS norm,
-        |         min(doc_id) AS doc_id
-        |  FROM b2 GROUP BY norm)
-        |SELECT CAST(0 AS BIGINT) AS batch, doc_id FROM n1
-        |UNION ALL
-        |SELECT CAST(1 AS BIGINT), n2.doc_id FROM n2
-        |WHERE norm NOT IN (SELECT norm FROM n1)
-        |ORDER BY batch, doc_id""".stripMargin,
-
-    "dedup_normalized" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, upper(text) || '  !!' AS text
-        |  FROM documents WHERE doc_id % 9 = 0),
-        |n AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),
-        |         ' +', ' ', 'g')) AS norm_text
-        |  FROM corpus)
-        |SELECT min(doc_id) AS canonical_id, CAST(count(*) AS BIGINT) AS dup_count
-        |FROM n GROUP BY norm_text HAVING count(*) > 1 ORDER BY canonical_id""".stripMargin,
-
-    "curate_topk_per_lang" ->
-      """WITH r AS (
-        |  SELECT lang, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY lang ORDER BY n_chars DESC, doc_id) AS rk
-        |  FROM documents)
-        |SELECT lang, doc_id, n_chars FROM r WHERE rk <= 3
-        |ORDER BY lang, doc_id""".stripMargin,
-
-    "pipeline_curate" ->
-      """WITH corpus AS (
-        |  SELECT * FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000, text, lang, source, n_chars
-        |  FROM documents WHERE doc_id % 10 = 0
-        |), canon AS (
-        |  SELECT MIN(doc_id) AS doc_id FROM corpus GROUP BY text
-        |), kept AS (
-        |  SELECT c.doc_id, c.n_chars FROM corpus c JOIN canon USING (doc_id)
-        |  WHERE c.n_chars >= 150
-        |), ranked AS (
-        |  SELECT doc_id, n_chars,
-        |         SUM(n_chars) OVER (ORDER BY (doc_id * 37) % 1000 DESC, doc_id) AS cum
-        |  FROM kept
-        |)
-        |SELECT doc_id % 4 AS shard, COUNT(*) AS docs,
-        |       CAST(SUM(n_chars) AS BIGINT) AS chars
-        |FROM ranked WHERE cum <= 30000 GROUP BY 1""".stripMargin,
-
-    "curate_budget_select" ->
-      """WITH scored AS (
-        |  SELECT doc_id, (doc_id * 37) % 1000 AS score, n_chars FROM documents
-        |), ranked AS (
-        |  SELECT doc_id, score, n_chars,
-        |         SUM(n_chars) OVER (ORDER BY score DESC, doc_id ASC) AS cum
-        |  FROM scored
-        |)
-        |SELECT doc_id, score, n_chars FROM ranked WHERE cum <= 50000
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_tfidf_int" ->
-      """WITH tfc AS (
-        |  SELECT doc, w, COUNT(*) AS tf FROM (
-        |    SELECT doc_id AS doc, unnest(string_split(trim(text), ' ')) AS w
-        |    FROM documents) t
-        |  GROUP BY doc, w),
-        |idf AS (
-        |  SELECT w, COUNT(*) AS df,
-        |         (1000 * (SELECT COUNT(*) FROM documents)) // COUNT(*) AS idf_int
-        |  FROM (SELECT DISTINCT doc_id, unnest(string_split(trim(text), ' ')) AS w
-        |        FROM documents) t
-        |  GROUP BY w),
-        |scored AS (
-        |  SELECT doc, tfc.w AS w, tf, df, tf * idf_int AS score_int,
-        |         CAST(ROW_NUMBER() OVER (PARTITION BY doc
-        |              ORDER BY tf * idf_int DESC, tfc.w) AS BIGINT) AS rk
-        |  FROM tfc JOIN idf ON tfc.w = idf.w)
-        |SELECT doc, w, tf, df, score_int, rk FROM scored WHERE rk <= 5""".stripMargin,
-
-    // Exact-integer BM25 (TextSearch.searchTopKInt): every division is
-    // integer division (`div` in Spark, `//` here), so the full ranking
-    // hash-matches. dl/l/score sums CAST from DuckDB's HUGEINT to BIGINT.
-    "text_bm25_int" ->
-      """WITH tf AS (
-        |  SELECT doc, w, COUNT(*) AS tf FROM (
-        |    SELECT doc_id AS doc, unnest(string_split(TRIM(text), ' ')) AS w
-        |    FROM documents) t
-        |  GROUP BY doc, w),
-        |dl AS (SELECT doc, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY doc),
-        |corpus AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |                  CAST(SUM(dl) AS BIGINT) AS l FROM dl),
-        |q AS (SELECT UNNEST(['spark', 'join', 'window']) AS w),
-        |p AS (SELECT tf.doc, tf.w, tf.tf, dl.dl
-        |      FROM tf JOIN dl USING (doc)
-        |      WHERE tf.w IN (SELECT w FROM q)),
-        |dft AS (SELECT w, COUNT(*) AS df FROM p GROUP BY w)
-        |SELECT p.doc AS doc,
-        |  CAST(SUM(((1000 * (2 * n - 2 * df + 1)) // (2 * df + 1)) *
-        |           ((44 * l * tf * 1000000) //
-        |            (20 * l * tf + 6 * l + 18 * dl * n))) AS BIGINT) AS score_int
-        |FROM p JOIN dft USING (w) CROSS JOIN corpus
-        |GROUP BY p.doc
-        |ORDER BY score_int DESC, doc
-        |LIMIT 20""".stripMargin,
-
-    // stream_bm25_ingest: identical to text_bm25_int — a stream-grown
-    // index must answer exactly like a batch-built one over the same docs.
-    "stream_bm25_ingest" ->
-      """WITH tf AS (
-        |  SELECT doc, w, COUNT(*) AS tf FROM (
-        |    SELECT doc_id AS doc, unnest(string_split(TRIM(text), ' ')) AS w
-        |    FROM documents) t
-        |  GROUP BY doc, w),
-        |dl AS (SELECT doc, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY doc),
-        |corpus AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |                  CAST(SUM(dl) AS BIGINT) AS l FROM dl),
-        |q AS (SELECT UNNEST(['spark', 'join', 'window']) AS w),
-        |p AS (SELECT tf.doc, tf.w, tf.tf, dl.dl
-        |      FROM tf JOIN dl USING (doc)
-        |      WHERE tf.w IN (SELECT w FROM q)),
-        |dft AS (SELECT w, COUNT(*) AS df FROM p GROUP BY w)
-        |SELECT p.doc AS doc,
-        |  CAST(SUM(((1000 * (2 * n - 2 * df + 1)) // (2 * df + 1)) *
-        |           ((44 * l * tf * 1000000) //
-        |            (20 * l * tf + 6 * l + 18 * dl * n))) AS BIGINT) AS score_int
-        |FROM p JOIN dft USING (w) CROSS JOIN corpus
-        |GROUP BY p.doc
-        |ORDER BY score_int DESC, doc
-        |LIMIT 20""".stripMargin,
-
-    // text_bm25_int over the documents that SURVIVED the erasure — the
-    // removed docs must be absent from tf, df, dl, and the corpus scalars.
-    "text_bm25_removed" ->
-      """WITH tf AS (
-        |  SELECT doc, w, COUNT(*) AS tf FROM (
-        |    SELECT doc_id AS doc, unnest(string_split(TRIM(text), ' ')) AS w
-        |    FROM documents WHERE doc_id % 10 <> 0) t
-        |  GROUP BY doc, w),
-        |dl AS (SELECT doc, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY doc),
-        |corpus AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |                  CAST(SUM(dl) AS BIGINT) AS l FROM dl),
-        |q AS (SELECT UNNEST(['spark', 'join', 'window']) AS w),
-        |p AS (SELECT tf.doc, tf.w, tf.tf, dl.dl
-        |      FROM tf JOIN dl USING (doc)
-        |      WHERE tf.w IN (SELECT w FROM q)),
-        |dft AS (SELECT w, COUNT(*) AS df FROM p GROUP BY w)
-        |SELECT p.doc AS doc,
-        |  CAST(SUM(((1000 * (2 * n - 2 * df + 1)) // (2 * df + 1)) *
-        |           ((44 * l * tf * 1000000) //
-        |            (20 * l * tf + 6 * l + 18 * dl * n))) AS BIGINT) AS score_int
-        |FROM p JOIN dft USING (w) CROSS JOIN corpus
-        |GROUP BY p.doc
-        |ORDER BY score_int DESC, doc
-        |LIMIT 20""".stripMargin,
-
-    "text_heavy_terms" ->
-      """SELECT w AS value, COUNT(*) AS cnt FROM (
-        |  SELECT unnest(string_split(TRIM(text), ' ')) AS w FROM documents) t
-        |GROUP BY w ORDER BY cnt DESC, value LIMIT 15""".stripMargin,
-
-    // stream_heavy_terms: the stream fold must converge on the one-shot
-    // whole-corpus count — identical SQL to text_heavy_terms.
-    "stream_heavy_terms" ->
-      """SELECT w AS value, COUNT(*) AS cnt FROM (
-        |  SELECT unnest(string_split(TRIM(text), ' ')) AS w FROM documents) t
-        |GROUP BY w ORDER BY cnt DESC, value LIMIT 15""".stripMargin,
-
-    // search_hybrid_rrf: the text_bm25_int and ann_sq8_topk oracles at
-    // k=20 with explicit ranks, fused on the integer RRF grid.
-    "search_hybrid_rrf" ->
-      """WITH tf AS (
-        |  SELECT doc, w, COUNT(*) AS tf FROM (
-        |    SELECT doc_id AS doc, unnest(string_split(TRIM(text), ' ')) AS w
-        |    FROM documents) t
-        |  GROUP BY doc, w),
-        |dl AS (SELECT doc, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY doc),
-        |corpus AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |                  CAST(SUM(dl) AS BIGINT) AS l FROM dl),
-        |qt AS (SELECT UNNEST(['spark', 'join', 'window']) AS w),
-        |p AS (SELECT tf.doc, tf.w, tf.tf, dl.dl
-        |      FROM tf JOIN dl USING (doc)
-        |      WHERE tf.w IN (SELECT w FROM qt)),
-        |dft AS (SELECT w, COUNT(*) AS df FROM p GROUP BY w),
-        |lex AS (
-        |  SELECT doc, ROW_NUMBER() OVER (ORDER BY score_int DESC, doc) AS rk
-        |  FROM (
-        |    SELECT p.doc,
-        |      CAST(SUM(((1000 * (2 * n - 2 * df + 1)) // (2 * df + 1)) *
-        |               ((44 * l * tf * 1000000) //
-        |                (20 * l * tf + 6 * l + 18 * dl * n))) AS BIGINT) AS score_int
-        |    FROM p JOIN dft USING (w) CROSS JOIN corpus
-        |    GROUP BY p.doc
-        |    ORDER BY score_int DESC, doc LIMIT 20)),
-        |enc AS (
-        |  SELECT vec_id,
-        |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(FLOOR(x *
-        |      (CASE WHEN list_max(list_transform(CAST(embedding AS DOUBLE[]), y -> abs(y))) = 0
-        |            THEN 0 ELSE 127.0 / list_max(list_transform(CAST(embedding AS DOUBLE[]), y -> abs(y))) END)
-        |      + 0.5) AS BIGINT)) AS codes
-        |  FROM embeddings),
-        |qv AS (SELECT codes AS qc FROM enc WHERE vec_id = 0),
-        |vecscored AS (
-        |  SELECT vec_id,
-        |    list_dot_product(codes, qc) AS dot,
-        |    list_dot_product(codes, codes) AS nv,
-        |    list_dot_product(qc, qc) AS nq
-        |  FROM enc, qv),
-        |vec AS (
-        |  SELECT vec_id AS doc, ROW_NUMBER() OVER (ORDER BY cos_q DESC, doc) AS rk
-        |  FROM (
-        |    SELECT vec_id,
-        |      CASE WHEN nv = 0 OR nq = 0 THEN 0
-        |           ELSE CAST(round(dot / (sqrt(nv) * sqrt(nq)) * 1000000.0) AS BIGINT) END AS cos_q
-        |    FROM vecscored
-        |    ORDER BY cos_q DESC, vec_id LIMIT 20) s(vec_id, cos_q)),
-        |contrib AS (
-        |  SELECT doc, 1000000 // (60 + rk) AS c FROM lex
-        |  UNION ALL
-        |  SELECT doc, 1000000 // (60 + rk) AS c FROM vec)
-        |SELECT doc, CAST(SUM(c) AS BIGINT) AS rrf_int
-        |FROM contrib GROUP BY doc
-        |ORDER BY rrf_int DESC, doc LIMIT 15""".stripMargin,
-
-    // Batch BM25: same integer ladders as text_bm25_int, per-query window.
-    "text_bm25_batch" ->
-      """WITH tf AS (
-        |  SELECT doc, w, COUNT(*) AS tf FROM (
-        |    SELECT doc_id AS doc, unnest(string_split(TRIM(text), ' ')) AS w
-        |    FROM documents) t
-        |  GROUP BY doc, w),
-        |dl AS (SELECT doc, CAST(SUM(tf) AS BIGINT) AS dl FROM tf GROUP BY doc),
-        |corpus AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |                  CAST(SUM(dl) AS BIGINT) AS l FROM dl),
-        |qt AS (SELECT DISTINCT doc_id AS query_id,
-        |              unnest(string_split(TRIM(text), ' ')) AS w
-        |       FROM documents WHERE doc_id <= 5),
-        |p AS (SELECT tf.doc, tf.w, tf.tf, dl.dl
-        |      FROM tf JOIN dl USING (doc)
-        |      WHERE tf.w IN (SELECT DISTINCT w FROM qt)),
-        |dft AS (SELECT w, COUNT(*) AS df FROM p GROUP BY w),
-        |sc AS (
-        |  SELECT qt.query_id, p.doc,
-        |    CAST(SUM(((1000 * (2 * n - 2 * df + 1)) // (2 * df + 1)) *
-        |             ((44 * l * tf * 1000000) //
-        |              (20 * l * tf + 6 * l + 18 * dl * n))) AS BIGINT)
-        |      AS score_int
-        |  FROM qt JOIN p USING (w) JOIN dft USING (w) CROSS JOIN corpus
-        |  GROUP BY qt.query_id, p.doc),
-        |rk AS (
-        |  SELECT query_id, doc, score_int,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |         ORDER BY score_int DESC, doc) AS BIGINT) AS rk
-        |  FROM sc)
-        |SELECT query_id, doc, score_int, rk FROM rk WHERE rk <= 5
-        |ORDER BY query_id, rk""".stripMargin,
-
-    // Exact phrase occurrences via the same slot-vote scheme in SQL
-    // (positions are 1-based here, 0-based in Spark — only differences
-    // matter, and the start column never leaves the query).
-    "text_phrase_search" ->
-      """WITH words AS (
-        |  SELECT doc_id AS doc,
-        |         generate_subscripts(string_split(TRIM(text), ' '), 1) AS pos,
-        |         unnest(string_split(TRIM(text), ' ')) AS w
-        |  FROM documents),
-        |ph AS (SELECT * FROM (VALUES ('batch', 0), ('batch', 1)) t(w, idx)),
-        |cand AS (SELECT doc, pos - idx AS s FROM words JOIN ph USING (w)),
-        |occ AS (SELECT doc, s FROM cand GROUP BY doc, s HAVING COUNT(*) = 2)
-        |SELECT doc, COUNT(*) AS n_occ FROM occ
-        |GROUP BY doc ORDER BY n_occ DESC, doc LIMIT 20""".stripMargin,
-
-    // text_phrase_search over the documents that SURVIVED the erasure.
-    "text_phrase_removed" ->
-      """WITH words AS (
-        |  SELECT doc_id AS doc,
-        |         generate_subscripts(string_split(TRIM(text), ' '), 1) AS pos,
-        |         unnest(string_split(TRIM(text), ' ')) AS w
-        |  FROM documents WHERE doc_id % 10 <> 0),
-        |ph AS (SELECT * FROM (VALUES ('batch', 0), ('batch', 1)) t(w, idx)),
-        |cand AS (SELECT doc, pos - idx AS s FROM words JOIN ph USING (w)),
-        |occ AS (SELECT doc, s FROM cand GROUP BY doc, s HAVING COUNT(*) = 2)
-        |SELECT doc, COUNT(*) AS n_occ FROM occ
-        |GROUP BY doc ORDER BY n_occ DESC, doc LIMIT 20""".stripMargin,
-
-    "text_winnow_int" ->
-      """WITH words AS (
-        |  SELECT doc_id AS doc,
-        |         generate_subscripts(string_split(trim(text), ' '), 1) AS pos,
-        |         unnest(string_split(trim(text), ' ')) AS w
-        |  FROM documents),
-        |vocab AS (
-        |  SELECT w, ROW_NUMBER() OVER (ORDER BY w) AS wid
-        |  FROM (SELECT DISTINCT w FROM words) t),
-        |grams AS (
-        |  SELECT doc, pos,
-        |    wid AS id0,
-        |    LEAD(wid, 1) OVER (PARTITION BY doc ORDER BY pos) AS id1,
-        |    LEAD(wid, 2) OVER (PARTITION BY doc ORDER BY pos) AS id2,
-        |    LEAD(wid, 3) OVER (PARTITION BY doc ORDER BY pos) AS id3
-        |  FROM words JOIN vocab USING (w)),
-        |hashed AS (
-        |  SELECT doc, pos,
-        |    ((((((id0 % 2147483647) * 1000003 + id1) % 2147483647) * 1000003
-        |       + id2) % 2147483647) * 1000003 + id3) % 2147483647 AS h
-        |  FROM grams WHERE id3 IS NOT NULL),
-        |fps AS (
-        |  SELECT DISTINCT doc,
-        |    MIN(h) OVER (PARTITION BY doc ORDER BY pos
-        |                 ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-        |  FROM hashed)
-        |SELECT doc, COUNT(*) AS n_fp, MIN(fp) AS min_fp, MAX(fp) AS max_fp
-        |FROM fps GROUP BY doc ORDER BY doc""".stripMargin,
-
-    "dedup_embedding_exact" ->
-      """WITH corpus AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 100000 AS vec_id,
-        |         list_transform(embedding, x -> CAST(x * CAST(1.001 AS FLOAT) AS FLOAT))
-        |  FROM embeddings WHERE vec_id % 10 = 0),
-        |pairs AS (
-        |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b,
-        |    CAST(round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |                                      CAST(b.embedding AS DOUBLE[])) * 1000000)
-        |         AS BIGINT) AS cos_q
-        |  FROM corpus a, corpus b WHERE a.vec_id < b.vec_id)
-        |SELECT doc_a, doc_b, cos_q FROM pairs WHERE cos_q >= 900000""".stripMargin,
-
-    "ann_exact_topk" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id,
-        |  CAST(round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), qe) * 1000000)
-        |       AS BIGINT) AS cos_q
-        |FROM embeddings, q
-        |ORDER BY cos_q DESC, vec_id LIMIT 10""".stripMargin,
-
-    // Recall gates: the healthy state is the literal 'ok' status plus the
-    // exact twin's own cardinality — a recall regression in the
-    // approximate path flips the status and hash-mismatches; a fixture
-    // break flips it to truth_too_small or moves the count.
-    "ann_recall_ivf" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        |  FROM embeddings WHERE vec_id % 25 = 0),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id,
-        |    CAST(round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv)
-        |         * 1000000) AS BIGINT) AS cos_q
-        |  FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-        |ranked AS (
-        |  SELECT query_id, vec_id,
-        |    ROW_NUMBER() OVER (PARTITION BY query_id
-        |         ORDER BY cos_q DESC, vec_id) AS rk
-        |  FROM scored)
-        |SELECT 'ok' AS status,
-        |  CAST((SELECT COUNT(*) FROM ranked WHERE rk <= 5) AS BIGINT) AS truth""".stripMargin,
-
-    "ann_recall_pq" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0),
-        |topk AS (
-        |  SELECT vec_id FROM embeddings, q
-        |  ORDER BY CAST(round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), qe)
-        |       * 1000000) AS BIGINT) DESC, vec_id LIMIT 10)
-        |SELECT 'ok' AS status,
-        |  CAST((SELECT COUNT(*) FROM topk) AS BIGINT) AS truth""".stripMargin,
-
-    "dedup_recall_minhash" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text || ' graft near dup suffix' AS text
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |words AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM corpus),
-        |idx AS (SELECT doc_id, ws,
-        |        unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS i FROM words),
-        |grams AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s FROM idx),
-        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
-        |inter AS (
-        |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-        |  FROM grams x JOIN grams y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = doc_a
-        |  JOIN sizes sb ON sb.doc_id = doc_b
-        |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5)
-        |SELECT 'ok' AS status,
-        |  CAST((SELECT COUNT(*) FROM pairs) AS BIGINT) AS truth""".stripMargin,
-
-    "ann_batch_exact" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        |  FROM embeddings WHERE vec_id % 25 = 0),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id,
-        |    CAST(round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv)
-        |         * 1000000) AS BIGINT) AS cos_q
-        |  FROM embeddings e, q WHERE e.vec_id <> q.query_id),
-        |ranked AS (
-        |  SELECT query_id, vec_id, cos_q,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-        |         ORDER BY cos_q DESC, vec_id) AS BIGINT) AS rk
-        |  FROM scored)
-        |SELECT query_id, vec_id, cos_q, rk FROM ranked WHERE rk <= 5
-        |ORDER BY query_id, rk""".stripMargin,
-
-    // PQ rerank recovers the exact top-k — same oracle as ann_exact_topk.
-    "ann_pq_rerank" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id,
-        |  CAST(round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), qe) * 1000000)
-        |       AS BIGINT) AS cos_q
-        |FROM embeddings, q
-        |ORDER BY cos_q DESC, vec_id LIMIT 10""".stripMargin,
-
-    // SQ8: quantization replicated in SQL (elementwise floor + list-order
-    // maxabs), code-space cosine from exact integer dot/norms.
-    "ann_sq8_topk" ->
-      """WITH enc AS (
-        |  SELECT vec_id,
-        |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(FLOOR(x *
-        |      (CASE WHEN list_max(list_transform(CAST(embedding AS DOUBLE[]), y -> abs(y))) = 0
-        |            THEN 0 ELSE 127.0 / list_max(list_transform(CAST(embedding AS DOUBLE[]), y -> abs(y))) END)
-        |      + 0.5) AS BIGINT)) AS codes
-        |  FROM embeddings),
-        |q AS (SELECT codes AS qc FROM enc WHERE vec_id = 0),
-        |scored AS (
-        |  SELECT vec_id,
-        |    list_dot_product(codes, qc) AS dot,
-        |    list_dot_product(codes, codes) AS nv,
-        |    list_dot_product(qc, qc) AS nq
-        |  FROM enc, q)
-        |SELECT vec_id,
-        |  CASE WHEN nv = 0 OR nq = 0 THEN 0
-        |       ELSE CAST(round(dot / (sqrt(nv) * sqrt(nq)) * 1000000.0) AS BIGINT) END AS cos_q
-        |FROM scored
-        |ORDER BY cos_q DESC, vec_id LIMIT 10""".stripMargin,
-
-    // Filtered SQ8: the sq8 oracle with the predicate applied before
-    // scoring — the query vector still comes from the UNFILTERED corpus
-    // (vec_id 0), exactly as the engine reads it.
-    "ann_filtered_sq8" ->
-      """WITH enc AS (
-        |  SELECT vec_id, label,
-        |    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(FLOOR(x *
-        |      (CASE WHEN list_max(list_transform(CAST(embedding AS DOUBLE[]), y -> abs(y))) = 0
-        |            THEN 0 ELSE 127.0 / list_max(list_transform(CAST(embedding AS DOUBLE[]), y -> abs(y))) END)
-        |      + 0.5) AS BIGINT)) AS codes
-        |  FROM embeddings),
-        |q AS (SELECT codes AS qc FROM enc WHERE vec_id = 0),
-        |scored AS (
-        |  SELECT vec_id,
-        |    list_dot_product(codes, qc) AS dot,
-        |    list_dot_product(codes, codes) AS nv,
-        |    list_dot_product(qc, qc) AS nq
-        |  FROM enc, q WHERE label IN (2, 7))
-        |SELECT vec_id,
-        |  CASE WHEN nv = 0 OR nq = 0 THEN 0
-        |       ELSE CAST(round(dot / (sqrt(nv) * sqrt(nq)) * 1000000.0) AS BIGINT) END AS cos_q
-        |FROM scored
-        |ORDER BY cos_q DESC, vec_id LIMIT 10""".stripMargin,
-
-    // Filtered vector search: same grid, predicate applied BEFORE ranking.
-    // ann_filtered_ivf (all-lists probe + pushed filter) must reproduce the
-    // same rows, so both share this oracle.
-    "ann_filtered_topk" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id,
-        |  CAST(round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), qe) * 1000000)
-        |       AS BIGINT) AS cos_q
-        |FROM embeddings, q WHERE label IN (2, 7)
-        |ORDER BY cos_q DESC, vec_id LIMIT 10""".stripMargin,
-
-    "ann_filtered_ivf" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id,
-        |  CAST(round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), qe) * 1000000)
-        |       AS BIGINT) AS cos_q
-        |FROM embeddings, q WHERE label IN (2, 7)
-        |ORDER BY cos_q DESC, vec_id LIMIT 10""".stripMargin,
-
-    // Probing ALL inverted lists of the persisted index on the quantized
-    // grid IS the exact top-k — same oracle as ann_exact_topk.
-    "ann_ivf_persisted" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0)
-        |SELECT vec_id,
-        |  CAST(round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), qe) * 1000000)
-        |       AS BIGINT) AS cos_q
-        |FROM embeddings, q
-        |ORDER BY cos_q DESC, vec_id LIMIT 10""".stripMargin,
-
-    // Same survivors through the PQ-coded lists (ADC + exact rerank).
-    "ann_ivfpq_removed" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 1)
-        |SELECT vec_id,
-        |  CAST(round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), qe) * 1000000)
-        |       AS BIGINT) AS cos_q
-        |FROM embeddings, q WHERE vec_id % 10 <> 0
-        |ORDER BY cos_q DESC, vec_id LIMIT 10""".stripMargin,
-
-    // Post-erasure probe == exact top-k over the vectors that SURVIVED the
-    // removeFromIvf delete (vec_id % 10 == 0 erased, index reloaded).
-    "ann_ivf_removed" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 1)
-        |SELECT vec_id,
-        |  CAST(round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), qe) * 1000000)
-        |       AS BIGINT) AS cos_q
-        |FROM embeddings, q WHERE vec_id % 10 <> 0
-        |ORDER BY cos_q DESC, vec_id LIMIT 10""".stripMargin,
-
-    "dedup_ngram_jaccard" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text || ' graft near dup suffix' AS text
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |words AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM corpus),
-        |idx AS (SELECT doc_id, ws,
-        |        unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS i FROM words),
-        |grams AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s FROM idx),
-        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
-        |inter AS (
-        |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-        |  FROM grams x JOIN grams y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b,
-        |  CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) AS jaccard
-        |FROM inter
-        |JOIN sizes sa ON sa.doc_id = doc_a
-        |JOIN sizes sb ON sb.doc_id = doc_b
-        |WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5""".stripMargin,
-
-    // The cross-corpus join's oracle is the full A x B quadratic ground
-    // truth over the train corpus and the planted benchmark derivatives.
-    "decontaminate_setsim" ->
-      """WITH bench AS (
-        |  SELECT doc_id + 500000 AS doc_id, text || ' eval prompt suffix' AS text
-        |  FROM documents WHERE doc_id % 7 = 0),
-        |wa AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM documents),
-        |wb AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM bench),
-        |ia AS (SELECT doc_id, ws,
-        |       unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS i FROM wa),
-        |ib AS (SELECT doc_id, ws,
-        |       unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS i FROM wb),
-        |ga AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s FROM ia),
-        |gb AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s FROM ib),
-        |sa AS (SELECT doc_id, COUNT(*) AS sz FROM ga GROUP BY doc_id),
-        |sb AS (SELECT doc_id, COUNT(*) AS sz FROM gb GROUP BY doc_id),
-        |inter AS (
-        |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-        |  FROM ga x JOIN gb y ON x.s = y.s GROUP BY 1, 2)
-        |SELECT doc_a, doc_b,
-        |  CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) AS jaccard
-        |FROM inter
-        |JOIN sa ON sa.doc_id = doc_a
-        |JOIN sb ON sb.doc_id = doc_b
-        |WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5""".stripMargin,
-
-    // The prefix-filter join must return EXACTLY the all-pairs result —
-    // completeness is the theorem under test, so the oracle is the same
-    // quadratic ground truth as dedup_ngram_jaccard.
-    "dedup_setsim_prefix" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text || ' graft near dup suffix' AS text
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |words AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM corpus),
-        |idx AS (SELECT doc_id, ws,
-        |        unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS i FROM words),
-        |grams AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s FROM idx),
-        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
-        |inter AS (
-        |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-        |  FROM grams x JOIN grams y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b,
-        |  CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) AS jaccard
-        |FROM inter
-        |JOIN sizes sa ON sa.doc_id = doc_a
-        |JOIN sizes sb ON sb.doc_id = doc_b
-        |WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5""".stripMargin,
-
-    // Twin for dedup_simhash: integer tf arithmetic end-to-end, one double
-    // division + sqrt at the end (IEEE-deterministic on identical integer
-    // inputs), rounded to a 1e-6 grid.
-    "dedup_simhash_cosine" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text || ' graft near dup suffix' AS text
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |tf AS (
-        |  SELECT doc_id, w, COUNT(*) AS tf FROM (
-        |    SELECT doc_id, unnest(string_split(trim(text), ' ')) AS w FROM corpus)
-        |  GROUP BY doc_id, w),
-        |norms AS (SELECT doc_id, SUM(tf * tf) AS n2 FROM tf GROUP BY doc_id),
-        |dots AS (
-        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, SUM(a.tf * b.tf) AS dot
-        |  FROM tf a JOIN tf b ON a.w = b.w AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT doc_a, doc_b,
-        |  round(CAST(dot AS DOUBLE) / sqrt(CAST(na.n2 * nb.n2 AS DOUBLE)), 6) AS cosine
-        |FROM dots
-        |JOIN norms na ON na.doc_id = doc_a
-        |JOIN norms nb ON nb.doc_id = doc_b
-        |WHERE round(CAST(dot AS DOUBLE) / sqrt(CAST(na.n2 * nb.n2 AS DOUBLE)), 6) >= 0.95""".stripMargin,
-
-    // stripDuplicateSpans: first occurrence per gram = MIN(struct(doc,pos))
-    // on the Spark side; the oracle encodes the same lexicographic order as
-    // doc_id*1000000+pos (pos < 1e6 always — it is bounded by doc length).
-    "dedup_substring_spans" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, CASE WHEN doc_id % 4 = 0
-        |    THEN text || ' graft boiler plate sentence repeated across many documents verbatim today'
-        |    ELSE text END AS text
-        |  FROM documents),
-        |words AS (SELECT doc_id,
-        |    string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS ws
-        |  FROM corpus),
-        |grams AS (
-        |  SELECT doc_id, i AS pos, array_to_string(ws[i:i+5], ' ') AS g
-        |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 5)) AS i
-        |        FROM words WHERE len(ws) >= 6)),
-        |firsts AS (
-        |  SELECT g, MIN(doc_id * 1000000 + pos) AS fk
-        |  FROM grams GROUP BY g HAVING COUNT(*) > 1),
-        |covered AS (
-        |  SELECT DISTINCT doc_id, p FROM (
-        |    SELECT gr.doc_id, unnest(generate_series(gr.pos, gr.pos + 5)) AS p
-        |    FROM grams gr JOIN firsts f ON gr.g = f.g
-        |    WHERE gr.doc_id * 1000000 + gr.pos <> f.fk)),
-        |toks AS (
-        |  SELECT doc_id, i AS p, ws[i] AS w
-        |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws))) AS i FROM words)),
-        |kept AS (
-        |  SELECT t.doc_id, t.p, t.w FROM toks t
-        |  LEFT JOIN covered c ON t.doc_id = c.doc_id AND t.p = c.p
-        |  WHERE c.doc_id IS NULL),
-        |clean AS (
-        |  SELECT doc_id, COUNT(*) AS n_kept,
-        |         string_agg(w, ' ' ORDER BY p) AS ct
-        |  FROM kept GROUP BY doc_id)
-        |SELECT w.doc_id AS doc,
-        |  CAST(len(w.ws) AS BIGINT) AS tokens_total,
-        |  CAST(len(w.ws) - COALESCE(clean.n_kept, 0) AS BIGINT) AS tokens_removed,
-        |  COALESCE(clean.ct, '') AS clean_text
-        |FROM words w
-        |LEFT JOIN clean ON clean.doc_id = w.doc_id
-        |ORDER BY doc""".stripMargin,
-
-    // multimodal_phash_dedup: the all-pairs SQL answer — the engine's
-    // chunk-bucketed candidates are COMPLETE to hamming 3, so the sets match.
-    "multimodal_phash_dedup" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000, translate(text, 'e', 'f')
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |pos AS (
-        |  SELECT doc_id, LENGTH(text) AS len, text,
-        |         unnest(generate_series(1, LENGTH(text))) AS i
-        |  FROM corpus),
-        |agg AS (
-        |  SELECT doc_id, ((i-1) * 33) // len AS w,
-        |         SUM(ascii(substr(text, CAST(i AS INTEGER), 1))) AS s,
-        |         COUNT(*) AS c
-        |  FROM pos GROUP BY 1, 2),
-        |bits AS (
-        |  SELECT a.doc_id,
-        |         (CASE WHEN a.s * b.c < b.s * a.c THEN CAST(1 AS BIGINT) ELSE 0 END
-        |            << CAST(a.w AS INTEGER)) AS bit
-        |  FROM agg a JOIN agg b ON b.doc_id = a.doc_id AND b.w = a.w + 1
-        |  WHERE a.w < 32),
-        |hashes AS (SELECT doc_id, SUM(bit) AS phash FROM bits GROUP BY doc_id)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |       CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
-        |FROM hashes a JOIN hashes b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.phash, b.phash)) <= 3""".stripMargin,
-
-    "multimodal_features" ->
-      """WITH pos AS (
-        |  SELECT doc_id, LENGTH(text) AS len, text,
-        |         unnest(generate_series(1, LENGTH(text))) AS i
-        |  FROM documents)
-        |SELECT doc_id AS media_id, CAST(len AS BIGINT) AS n_bytes,
-        |       CAST((i - 1) % 16 AS BIGINT) AS slot,
-        |       CAST(SUM(ascii(substr(text, CAST(i AS INTEGER), 1))) AS BIGINT) AS byte_sum
-        |FROM pos GROUP BY 1, 2, 3""".stripMargin,
-
-    "dedup_components" ->
-      """WITH RECURSIVE corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text || ' graft near dup suffix' AS text
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |words AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM corpus),
-        |idx AS (SELECT doc_id, ws,
-        |        unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS i FROM words),
-        |grams AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s FROM idx),
-        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
-        |inter AS (
-        |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-        |  FROM grams x JOIN grams y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = doc_a
-        |  JOIN sizes sb ON sb.doc_id = doc_b
-        |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5),
-        |edges AS (
-        |  SELECT doc_a AS a, doc_b AS b FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach(v, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.v)
-        |SELECT v AS doc_id, MIN(r) AS component
-        |FROM reach GROUP BY v ORDER BY v""".stripMargin,
-
-    "dedup_keep_canonical" ->
-      """WITH RECURSIVE corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text || ' graft near dup suffix' AS text
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |words AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM corpus),
-        |idx AS (SELECT doc_id, ws,
-        |        unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS i FROM words),
-        |grams AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s FROM idx),
-        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
-        |inter AS (
-        |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-        |  FROM grams x JOIN grams y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = doc_a
-        |  JOIN sizes sb ON sb.doc_id = doc_b
-        |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5),
-        |edges AS (
-        |  SELECT doc_a AS a, doc_b AS b FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach(v, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.v),
-        |comps AS (SELECT v AS doc_id, MIN(r) AS component FROM reach GROUP BY v)
-        |SELECT c.doc_id FROM corpus c
-        |LEFT JOIN comps k ON c.doc_id = k.doc_id AND k.doc_id <> k.component
-        |WHERE k.doc_id IS NULL
-        |ORDER BY c.doc_id""".stripMargin,
-
-    // dedup_cluster_sizes: the dedup_components recursive CTE, histogrammed.
-    "dedup_cluster_sizes" ->
-      """WITH RECURSIVE corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text || ' graft near dup suffix' AS text
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |words AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM corpus),
-        |idx AS (SELECT doc_id, ws,
-        |        unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS i FROM words),
-        |grams AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s FROM idx),
-        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
-        |inter AS (
-        |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-        |  FROM grams x JOIN grams y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = doc_a
-        |  JOIN sizes sb ON sb.doc_id = doc_b
-        |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5),
-        |edges AS (
-        |  SELECT doc_a AS a, doc_b AS b FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach(v, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.v),
-        |comps AS (SELECT v AS doc_id, MIN(r) AS component FROM reach GROUP BY v),
-        |csz AS (SELECT component, COUNT(*) AS members FROM comps GROUP BY component)
-        |SELECT CAST(members AS BIGINT) AS members,
-        |       CAST(COUNT(*) AS BIGINT) AS n_clusters
-        |FROM csz GROUP BY members ORDER BY members""".stripMargin,
-
-    // dedup_keep_best: same component construction as dedup_keep_canonical,
-    // but the survivor is the component's (length DESC, id ASC) argmax.
-    "dedup_keep_best" ->
-      """WITH RECURSIVE corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text || ' graft near dup suffix' AS text
-        |  FROM documents WHERE doc_id % 10 = 0),
-        |words AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM corpus),
-        |idx AS (SELECT doc_id, ws,
-        |        unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS i FROM words),
-        |grams AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s FROM idx),
-        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
-        |inter AS (
-        |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-        |  FROM grams x JOIN grams y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = doc_a
-        |  JOIN sizes sb ON sb.doc_id = doc_b
-        |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5),
-        |edges AS (
-        |  SELECT doc_a AS a, doc_b AS b FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach(v, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.v),
-        |comps AS (SELECT v AS doc_id, MIN(r) AS component FROM reach GROUP BY v),
-        |ranked AS (
-        |  SELECT k.doc_id,
-        |         ROW_NUMBER() OVER (PARTITION BY k.component
-        |                            ORDER BY LENGTH(c.text) DESC, k.doc_id) AS rk
-        |  FROM comps k JOIN corpus c ON c.doc_id = k.doc_id)
-        |SELECT c.doc_id FROM corpus c
-        |LEFT JOIN ranked r ON c.doc_id = r.doc_id AND r.rk > 1
-        |WHERE r.doc_id IS NULL
-        |ORDER BY c.doc_id""".stripMargin,
-
-    "dedup_exact" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0)
-        |SELECT MIN(doc_id) AS canonical_id, COUNT(*) AS dup_count
-        |FROM corpus GROUP BY text""".stripMargin,
-
-    // pipeline_dedup_full: exact stage (min-id per identical text) chained
-    // into the keep-best near-dup stage — the dedup_keep_best oracle over
-    // the exact stage's survivors.
-    "pipeline_dedup_full" ->
-      """WITH RECURSIVE corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text || ' graft near dup suffix' AS text
-        |  FROM documents WHERE doc_id % 10 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 200000 AS doc_id, text FROM documents WHERE doc_id % 20 = 0),
-        |ex AS (SELECT MIN(doc_id) AS doc_id FROM corpus GROUP BY text),
-        |c2 AS (SELECT c.doc_id, c.text FROM corpus c JOIN ex USING (doc_id)),
-        |words AS (SELECT doc_id, string_split(trim(text), ' ') AS ws FROM c2),
-        |idx AS (SELECT doc_id, ws,
-        |        unnest(generate_series(1, greatest(len(ws) - 2, 1))) AS i FROM words),
-        |grams AS (SELECT DISTINCT doc_id, array_to_string(ws[i:i+2], ' ') AS s FROM idx),
-        |sizes AS (SELECT doc_id, COUNT(*) AS sz FROM grams GROUP BY doc_id),
-        |inter AS (
-        |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
-        |  FROM grams x JOIN grams y ON x.s = y.s AND x.doc_id < y.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT doc_a, doc_b FROM inter
-        |  JOIN sizes sa ON sa.doc_id = doc_a
-        |  JOIN sizes sb ON sb.doc_id = doc_b
-        |  WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5),
-        |edges AS (
-        |  SELECT doc_a AS a, doc_b AS b FROM pairs
-        |  UNION SELECT doc_b, doc_a FROM pairs),
-        |reach(v, r) AS (
-        |  SELECT a, a FROM edges
-        |  UNION
-        |  SELECT e.a, reach.r FROM edges e JOIN reach ON e.b = reach.v),
-        |comps AS (SELECT v AS doc_id, MIN(r) AS component FROM reach GROUP BY v),
-        |ranked AS (
-        |  SELECT k.doc_id,
-        |         ROW_NUMBER() OVER (PARTITION BY k.component
-        |                            ORDER BY LENGTH(c.text) DESC, k.doc_id) AS rk
-        |  FROM comps k JOIN c2 c ON c.doc_id = k.doc_id)
-        |SELECT c.doc_id FROM c2 c
-        |LEFT JOIN ranked r ON c.doc_id = r.doc_id AND r.rk > 1
-        |WHERE r.doc_id IS NULL
-        |ORDER BY c.doc_id""".stripMargin,
-
-    "embed_mean_pool" ->
-      """SELECT label, CAST(i AS BIGINT) AS pos,
-        |  CAST(CAST(SUM(CAST(ROUND(CAST(embedding[i] AS DOUBLE) * 100000) AS BIGINT))
-        |       AS BIGINT) AS DOUBLE) / (COUNT(*) * 100000.0) AS m
-        |FROM embeddings, range(1, 65) t(i)
-        |GROUP BY label, i""".stripMargin,
-
-    "multimodal_frames" ->
-      """SELECT media_id, frame_nr,
-        |  LEAST(start + 32, len) - start AS frame_bytes
-        |FROM (
-        |  SELECT doc_id AS media_id, CAST(i AS BIGINT) AS frame_nr,
-        |         (CAST(LENGTH(text) AS BIGINT) * i) // 4 AS start,
-        |         CAST(LENGTH(text) AS BIGINT) AS len
-        |  FROM documents, generate_series(0, 3) t(i)
-        |  WHERE LENGTH(text) > 0) s""".stripMargin
-  )
+  val oracleSql: Map[String, String] =
+    Gates.all.collect { case Gate(name, _, Sql(text), _) => name -> text }.toMap
+
+  /** Fixture warm-ups Bench runs outside a gate's timed region. */
+  val prewarm: Map[String, (SparkSession, String) => Unit] =
+    Gates.all.flatMap(g => g.prewarm.map(g.name -> _)).toMap
 }
