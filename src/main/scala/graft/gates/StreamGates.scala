@@ -75,6 +75,13 @@ private[gates] object StreamGates {
     child
   }
 
+  /** Stop a query that ran on a [[streamSession]] child and unregister the
+    * streaming listener buses its run left on the shared listener bus: the
+    * child's and that of Spark's per-query clone of it.
+    */
+  private def stopOwned(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+    try q.stop() finally org.apache.spark.sql.graftbridge.Bridge.releaseStreamBuses(q)
+
   val gates: Seq[Gate] = Seq(
     // REAL Structured Streaming ingest through the correctness gate: two
     // deterministic MemoryStream micro-batches of delta keys run through a
@@ -117,7 +124,7 @@ private[gates] object StreamGates {
         val rest = ids.filter(_ % 3 == 2)
         mem.addData((rest ++ rest).map(i => (i, ts(4))).toSeq: _*)
         q.processAllAvailable()
-      } finally q.stop()
+      } finally stopOwned(q)
       ds.toDF.join(docs, "doc_id")
         .groupBy("lang")
         .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("chars"))
@@ -168,7 +175,7 @@ private[gates] object StreamGates {
         }
         memB.addData(clicks.toSeq: _*)
         q.processAllAvailable()
-      } finally q.stop()
+      } finally stopOwned(q)
       ds.toDF.join(ev, "event_id")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
@@ -219,7 +226,7 @@ private[gates] object StreamGates {
         q.processAllAvailable()
         mem.addData(h2.toSeq: _*)
         q.processAllAvailable()
-      } finally q.stop()
+      } finally stopOwned(q)
       ds.toDF.select(col("key").as("user_id"),
           timestamp_micros(col("ts_us")).as("day"),
           col("v").as("v_ticks"), col("anomaly"))
@@ -280,7 +287,7 @@ private[gates] object StreamGates {
         q.processAllAvailable()
         mem.addData((-1L, maxUs + 2 * 86400000000L, 0.0))
         q.processAllAvailable()
-      } finally q.stop()
+      } finally stopOwned(q)
       ds.toDF.filter(col("user_id") >= 0)
         .select(unix_micros(col("sess_start")).as("sess_start_us"),
           col("user_id"), col("n"), col("total_value"))
@@ -348,7 +355,7 @@ private[gates] object StreamGates {
         q.processAllAvailable()
         memA.addData((-2L, maxUs + 2 * day)); memB.addData((-2L, maxUs + 2 * day))
         q.processAllAvailable()
-      } finally q.stop()
+      } finally stopOwned(q)
       ds.toDF.filter(col("event_id") >= 0)
         .join(ev, "event_id")
         .groupBy("event_type")

@@ -105,16 +105,18 @@ final class LakeDataset private (
   private val diskSchemas =
     new ConcurrentHashMap[PartKey, org.apache.spark.sql.types.StructType]()
 
-  /** Single-scan view of the whole dataset, valid until the next mutation.
-    * Lets [[toDF]] plan ONE scan instead of a union of per-part scans — at
-    * thousands of parts the union plan alone would dominate.
+  /** Whole-table view over the snapshots the parts slice: [[toDF]] plans it
+    * instead of a union of per-part scans, which at thousands of parts would
+    * dominate. [[assembleKept]]'s cost argument relies on it.
     *
-    * Condition: `cleanScan` is set only when every non-disk cell is a slice
-    * of it. Its setters: a load (every cell disk-resident, or none), the
-    * all-disk [[diskScan]], a snapshot rebuild and a first insert (every
-    * cell filters the one snapshot), a column change of a cell-less table,
-    * and a rollback (restores a pair that held). [[markDirty]] clears it.
-    * [[assembleKept]]'s cost argument relies on it.
+    * Contract: when set, its rows are exactly the union of every part's
+    * [[LakePart.view]] rows. Setters: a load (every cell disk-resident, or
+    * none), the all-disk [[diskScan]], a snapshot rebuild and a first insert
+    * (every cell filters the one snapshot), a column change of a cell-less
+    * table, and a rollback (restores a pair that held). Carried
+    * ([[carryClean]]) by an insert, as `cleanScan ∪ batch`, and by a
+    * [[deleteWhere]], filtered like the touched parts. [[markDirty]] clears
+    * it on every other mutation.
     */
   @volatile private[lake] var cleanScan: Option[DataFrame] = None
 
@@ -538,10 +540,17 @@ final class LakeDataset private (
   }
 
   private def unionParts: DataFrame = {
-    val views = parts.values().asScala.toList.map(_.view)
-    require(views.nonEmpty, "dataset has no parts")
-    views.reduce(_ unionByName (_, allowMissingColumns = true))
+    require(!parts.isEmpty, "dataset has no parts")
+    unionViews(parts.values().asScala.toList.map(_.view))
   }
+
+  /** The union of some parts' views. No views is a legitimate result (a
+    * prune that keeps no cell), not an error: an empty frame with the table
+    * schema.
+    */
+  private def unionViews(views: List[DataFrame]): DataFrame =
+    if (views.isEmpty) emptyLike
+    else views.reduce(_ unionByName (_, allowMissingColumns = true))
 
   /** Dataset-level compaction: execute the current union-of-parts ONCE into
     * a single materialized snapshot, then rebuild every part as a cell
@@ -553,7 +562,7 @@ final class LakeDataset private (
     */
   def compact(): Unit = this.synchronized {
     if (parts.isEmpty) return // nothing to collapse — a legal no-op
-    val snap = materializeSnapshot(unionParts, knownRowsEstimate)
+    val snap = materializeSnapshot(cleanScan.getOrElse(unionParts), knownRowsEstimate)
     rebuildFromSnapshot(snap)
     retain(snap)
   }
@@ -609,22 +618,26 @@ final class LakeDataset private (
     sinceCompact.incrementAndGet()
   }
 
+  /** After [[markDirty]]: `next` maps the view from before the mutation to
+    * the parts' rows now (None, or a failure to analyze, drops it). Only
+    * while the plan is shallow: from [[LakeDataset.CompactReadThreshold]]
+    * mutations on, [[toDF]] compacts instead.
+    */
+  private def carryClean(prev: Option[DataFrame])(next: DataFrame => Option[DataFrame]): Unit =
+    if (sinceCompact.get < LakeDataset.CompactReadThreshold)
+      cleanScan = prev.flatMap(d => scala.util.Try(next(d)).toOption.flatten)
+
   /** Engine-level partition pruning: only parts whose partition values match
     * every supplied (col -> value) filter contribute to the plan. The
     * reference leaves this commented out (src/dataset.rs:66-71); at scale it
     * is essential — Catalyst cannot prune what is already unioned in.
     */
-  def prunedDF(partFilters: Map[String, String]): DataFrame = {
-    val views = parts.asScala.collect {
+  def prunedDF(partFilters: Map[String, String]): DataFrame =
+    unionViews(parts.asScala.collect {
       case (key, part) if partFilters.forall { case (c, v) =>
         key.partValues.exists { case (kc, kv) => kc == c && kv == v }
       } => part.view
-    }.toList
-    // No matching parts is a legitimate result (pruning a value with no
-    // data), not an error: an empty frame with the table schema.
-    if (views.isEmpty) emptyLike else
-      views.reduce(_ unionByName (_, allowMissingColumns = true))
-  }
+    }.toList)
 
   /** Bucket pruning: for an equality predicate on the (single) bucket column,
     * only the one matching bucket cell per partition needs scanning. The
@@ -637,13 +650,11 @@ final class LakeDataset private (
     val dt = sample.get.schema(bucketCols.head).dataType
     val targetBucket = Bucketing.localBucketId(bucketValue, dt, nBuckets)
       .getOrElse(LakeDataset.NullBucket)
-    val views = parts.asScala.collect {
+    // A bucket id with no cells (sparse layout, or a freshly pruned load)
+    // plans the empty frame.
+    unionViews(parts.asScala.collect {
       case (key, part) if key.bucketNr.forall(_ == targetBucket) => part.view
-    }.toList
-    // A bucket id with no cells (sparse layout, or a freshly pruned load) is
-    // a legitimately empty result, not an error.
-    if (views.isEmpty) emptyLike else
-      views.reduce(_ unionByName (_, allowMissingColumns = true))
+    }.toList)
   }
 
   /** Zone-map pruning (engine-level data skipping): for an equality
@@ -672,13 +683,10 @@ final class LakeDataset private (
     * column is NULL live in the sentinel cells and are not part of any
     * numbered bucket.
     */
-  def bucketCells(b: Int): DataFrame = {
-    val views = parts.asScala.collect {
+  def bucketCells(b: Int): DataFrame =
+    unionViews(parts.asScala.collect {
       case (key, part) if key.bucketNr.contains(b) => part.view
-    }.toList
-    if (views.isEmpty) emptyLike
-    else views.reduce(_ unionByName (_, allowMissingColumns = true))
-  }
+    }.toList)
 
   /** The table's current schema without running a job. */
   def tableSchema: org.apache.spark.sql.types.StructType =
@@ -1270,18 +1278,8 @@ final class LakeDataset private (
   private def assembleKept(
       all: List[(PartKey, LakePart)], kept: List[(PartKey, LakePart)]): DataFrame =
     if (kept.size == all.size) toDF
-    else if (kept.isEmpty) emptyLike
     else if (cleanScan.isDefined && kept.size * 2 > all.size) toDF
-    else {
-      // Disk-resident kept set → ONE multi-path scan: at batches×buckets
-      // cells, planning a union of per-part views costs more driver time
-      // than the pruned read itself (the incremental-index probe profile).
-      val dirs = kept.map { case (k, _) => diskDirs.get(k) }
-      if (storage.isDefined && dirs.forall(_ != null) &&
-          uniformSchema(kept))
-        multiPathScan(dirs)
-      else kept.map(_._2.view).reduce(_ unionByName (_, allowMissingColumns = true))
-    }
+    else assembleSubset(kept)
 
   /** The parts one conjunction keeps — every axis checked from the catalog
     * (no I/O, no jobs): partition-directory values and the bucket id for
@@ -1347,13 +1345,10 @@ final class LakeDataset private (
     }
   }
 
-  private def zoneFiltered(keep: Map[String, Zone] => Boolean): DataFrame = {
-    val views = parts.values().asScala.toList.collect {
+  private def zoneFiltered(keep: Map[String, Zone] => Boolean): DataFrame =
+    unionViews(parts.values().asScala.toList.collect {
       case part if part.zones.forall(keep) => part.view
-    }
-    if (views.isEmpty) emptyLike
-    else views.reduce(_ unionByName (_, allowMissingColumns = true))
-  }
+    })
 
   /** Empty DataFrame with the table schema (for prune paths matching zero parts). */
   private def emptyLike: DataFrame = {
@@ -1629,9 +1624,11 @@ final class LakeDataset private (
     }
 
   /** One DataFrame over exactly `kept`'s rows — the multi-path single scan
-    * when the kept set is disk-resident with one schema, else a view union.
-    * Unlike [[assembleKept]] there is no most-parts-kept → whole-table
-    * shortcut: the caller needs EXACTLY these parts' rows.
+    * when the kept set is disk-resident with one schema (at batches×buckets
+    * cells, planning a view union costs more driver time than the pruned
+    * read itself), else a view union. Unlike [[assembleKept]] there is no
+    * most-parts-kept → whole-table shortcut: the caller needs EXACTLY these
+    * parts' rows.
     */
   private def assembleSubset(kept: List[(PartKey, LakePart)]): DataFrame =
     if (kept.isEmpty) emptyLike
@@ -1639,7 +1636,7 @@ final class LakeDataset private (
       val dirs = kept.map { case (k, _) => diskDirs.get(k) }
       if (storage.isDefined && dirs.forall(_ != null) && uniformSchema(kept))
         multiPathScan(dirs)
-      else kept.map(_._2.view).reduce(_ unionByName (_, allowMissingColumns = true))
+      else unionViews(kept.map(_._2.view))
     }
 
   /** Zone-seeded top-k: the k extreme rows by `c` (desc by default, with
@@ -1832,6 +1829,7 @@ final class LakeDataset private (
     val (batch, slices) = splitByCell(df)
     this.synchronized {
       val wasEmpty = parts.isEmpty
+      val prev = cleanScan
       markDirty()
       slices.foreach { s =>
         diskDirs.remove(s.key); diskSchemas.remove(s.key)
@@ -1839,6 +1837,10 @@ final class LakeDataset private (
           if (existing == null) newPart(s.df, s.key, s.rows, s.stats)
           else { existing.insert(s.df, s.rows, s.stats); existing })
       }
+      // The batch snapshot is exactly the union of its routed slices. A batch
+      // whose columns differ (schema evolution) drops the view instead.
+      def cols(d: DataFrame) = d.schema.map(f => (f.name, f.dataType))
+      carryClean(prev)(d => if (cols(d) == cols(batch)) Some(d.union(batch)) else None)
       // Creating from one batch: every part slices the same snapshot, so the
       // snapshot itself IS the whole-table view — reads plan one scan.
       if (wasEmpty) {
@@ -1988,23 +1990,7 @@ final class LakeDataset private (
     // or republish — skip the write job entirely (an incremental index
     // ingesting an all-duplicates batch hits this on every probe).
     if (keyed.isEmpty) return
-    // Sorted to match PartKey.relPath (which sorts partValues by column
-    // name): the dynamic writer nests directories in partitionBy ORDER, so
-    // an unsorted multi-column spec would write a=.../b=... while relPath
-    // derives b=.../a=... — and the divergence would surface only at the
-    // post-write registration check, after files already landed.
-    val dirCols = partitionCols.sorted ++ (if (bucketCols.nonEmpty) List("bucket") else Nil)
-    p.withColumnRenamed(LakeDataset.BucketCol, "bucket")
-      // One writer task per cell: without this, every input partition
-      // opens a file in every cell directory it touches — a cached
-      // shuffle output (32 partitions × 32 buckets) writes ~1000 tiny
-      // files where 32 suffice, and the commit protocol pays per file
-      // (measured 4.2s → sub-second on a 4k-row batch).
-      .repartition(dirCols.map(col): _*)
-      .write.mode("append").format(spec.format)
-      .option("compression", spec.compression)
-      .partitionBy(dirCols: _*)
-      .save(spec.root)
+    writeCells(p.withColumnRenamed(LakeDataset.BucketCol, "bucket"), spec, "append", spec.root)
     val target = org.apache.spark.sql.types.StructType(
       p.schema.fields.filterNot(_.name == LakeDataset.BucketCol))
     val fileSchema = org.apache.spark.sql.types.StructType(
@@ -2042,11 +2028,7 @@ final class LakeDataset private (
     * dataset monitor.
     */
   private def probeBase(delta: DataFrame, keys: Seq[String]): DataFrame =
-    cleanScan.getOrElse {
-      val views = probeKeptParts(delta, keys).map(_.view)
-      if (views.isEmpty) emptyLike
-      else views.reduce(_ unionByName (_, allowMissingColumns = true))
-    }
+    cleanScan.getOrElse(unionViews(probeKeptParts(delta, keys).map(_.view)))
 
   /** The parts a key probe must scan for `delta`'s keys — both stat axes:
     *
@@ -2239,11 +2221,15 @@ final class LakeDataset private (
       if (eqs.isEmpty && ranges.isEmpty && ins.isEmpty) all
       else keptBy(all, eqs, ranges, ins)
     if (touched.isEmpty) return 0
+    val prev = cleanScan
     markDirty()
     touched.foreach { case (k, p) =>
       diskDirs.remove(k); diskSchemas.remove(k)
       p.deleteWhere(cond)
     }
+    // The parts the catalog pruned hold no row where `cond` is true, so the
+    // whole view filtered like a touched part is the union of the parts.
+    carryClean(prev)(d => Some(LakePart.survivors(d, cond)))
     maybeAutoAnalyze()
     touched.size
   }
@@ -2499,16 +2485,6 @@ final class LakeDataset private (
 
   // ----------------------------------------------------------------- storage
 
-  /** Persist: wipe root, write the whole table as ONE partitioned write job,
-    * then manifest.json (reference `Dataset::to_storage`,
-    * src/dataset.rs:330-353 — which saves part-by-part; at 10k cells that is
-    * 10k driver-scheduled jobs, so we hand the whole layout to Spark's
-    * `partitionBy` writer instead: one job, every executor writing its own
-    * cells' files, identical `k=v/bucket=N` directories). Partition and
-    * bucket columns live in the directory names, not the data files; the
-    * loader restores them (with manifest-DDL types), and the reloaded
-    * whole-table scan gets NATIVE Hive partition pruning from the layout.
-    */
   /** True when any live plan (clean scan or a part's frame) reads files
     * under `rootDir` — i.e. the dataset was lazily loaded from the same root
     * it is about to overwrite.
@@ -2560,6 +2536,32 @@ final class LakeDataset private (
     orphans.map(d => rootP.relativize(d).toString)
   }
 
+  /** The cell directory columns, sorted like PartKey.relPath: the dynamic
+    * writer nests directories in partitionBy ORDER.
+    */
+  private val dirCols: List[String] =
+    partitionCols.sorted ++ (if (bucketCols.nonEmpty) List("bucket") else Nil)
+
+  /** Write `df` (holding the [[dirCols]]) as one directory per cell under
+    * `path`, with ONE writer task and file per cell: otherwise every input
+    * partition opens a file in every cell it touches (32 partitions × 32
+    * buckets wrote ~1000 tiny files, 4.2 s → sub-second on a 4k-row batch).
+    */
+  private def writeCells(df: DataFrame, spec: StorageSpec, mode: String, path: String): Unit =
+    df.repartition(dirCols.map(col): _*)
+      .write.mode(mode).format(spec.format)
+      .option("compression", spec.compression)
+      .partitionBy(dirCols: _*)
+      .save(path)
+
+  /** Persist: wipe root, write the whole table, then manifest.json
+    * (reference `Dataset::to_storage`, src/dataset.rs:330-353, saves
+    * part-by-part; past a few small cells we hand the whole layout to one
+    * `partitionBy` job instead — [[writeCells]]). Partition and bucket
+    * columns live in the directory names, not the data files; the loader
+    * restores them (with manifest-DDL types), and the reloaded whole-table
+    * scan gets NATIVE Hive partition pruning from the layout.
+    */
   def toStorage(): Unit = {
     requireNotInTransaction("toStorage")
     val spec = storage.getOrElse(throw new IllegalStateException("no storage spec"))
@@ -2589,7 +2591,6 @@ final class LakeDataset private (
     }
     val ddl = parts.values().asScala.headOption.map(_.df.schema.toDDL)
     val df = toDF
-    val dirCols = partitionCols.sorted ++ (if (bucketCols.nonEmpty) List("bucket") else Nil)
     if (dirCols.isEmpty) {
       df.write.mode("overwrite").format(spec.format)
         .option("compression", spec.compression).save(spec.root)
@@ -2608,19 +2609,16 @@ final class LakeDataset private (
         .map(p => Future(p.save(spec, dropCols = partitionCols)))
       jobs.foreach(Await.result(_, Duration.Inf))
     } else {
-      // Many cells: ONE partitionBy job — 10k cells as 10k driver-scheduled
-      // jobs would serialize on the driver; the dynamic writer hands the
-      // whole layout to the executors. Identical directories either way.
+      // Many cells, big data or unknown counts: ONE job over toDF (the clean
+      // scan when set, else the union of the parts), one file per cell —
+      // 10k cells as 10k driver-scheduled jobs would serialize on the driver.
       require(!df.columns.contains("bucket") || bucketCols.isEmpty,
         "a data column named 'bucket' collides with the bucket directory layout")
       val withB =
         if (bucketCols.nonEmpty)
           df.withColumn("bucket", Bucketing.bucketExprFor(df, bucketCols.head, nBuckets))
         else df
-      withB.write.mode("overwrite").format(spec.format)
-        .option("compression", spec.compression)
-        .partitionBy(dirCols: _*)
-        .save(spec.root)
+      writeCells(withB, spec, "overwrite", spec.root)
     }
     commitManifest(spec)(v => fullManifest(spec, ddl, v))
     // Every cell's directory now mirrors its content exactly. PartKey.escape
@@ -2633,6 +2631,13 @@ final class LakeDataset private (
     }
   }
 
+  /** Before a save rewrites cells in place: a clean scan over the root's
+    * files (a load's or [[diskScan]]'s, carried through an insert or a
+    * [[deleteWhere]]) would read the replaced files afterwards.
+    */
+  private def retireRootScan(spec: StorageSpec): Unit =
+    if (cleanScan.exists(dfReadsUnder(_, spec.root))) cleanScan = None
+
   /** Incremental save of a single cell — at scale you save the cells an
     * ingest touched, not the world. The manifest rewrites too, so its
     * per-part stats stay in sync with the refreshed files (a stale zone on
@@ -2641,6 +2646,7 @@ final class LakeDataset private (
   def savePart(key: PartKey): Unit = {
     requireNotInTransaction("savePart")
     val spec = storage.getOrElse(throw new IllegalStateException("no storage spec"))
+    retireRootScan(spec)
     Option(parts.get(key)).foreach { p =>
       // A lazily loaded part reads the very directory the overwrite-mode
       // write below deletes first — collect it off the files before saving.
@@ -2664,6 +2670,7 @@ final class LakeDataset private (
   def saveParts(keys: Seq[PartKey]): Unit = {
     requireNotInTransaction("saveParts")
     val spec = storage.getOrElse(throw new IllegalStateException("no storage spec"))
+    retireRootScan(spec)
     val ps = keys.flatMap(k => Option(parts.get(k)))
     if (ps.isEmpty) return
     val onePassMin = spark.conf
@@ -2713,30 +2720,21 @@ final class LakeDataset private (
     */
   private def onePassRewrite(spec: StorageSpec, ps: Seq[LakePart]): Boolean = {
     import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
-    val dirCols = partitionCols.sorted ++
-      (if (bucketCols.nonEmpty) List("bucket") else Nil)
     val renderSafe = dirCols.nonEmpty && partitionCols.forall { c =>
       val dt = tableSchema(c).dataType
       dt != TimestampType && dt != TimestampNTZType
     }
     if (!renderSafe) return false
-    val staged = ps.map { p =>
+    val staged = unionViews(ps.toList.map { p =>
       p.key.bucketNr match {
         case Some(b) => p.view.withColumn("bucket",
           if (b == LakeDataset.NullBucket) lit(null).cast("int") else lit(b))
         case None => p.view
       }
-    }.reduce(_ unionByName (_, allowMissingColumns = true))
+    })
     val stagingRoot =
       s"${spec.root}/_staging_${java.util.UUID.randomUUID().toString.take(8)}"
-    staged
-      // One writer task per cell (the insertWritten discipline): without
-      // this every input partition opens a file in every cell it touches.
-      .repartition(dirCols.map(col): _*)
-      .write.mode("overwrite").format(spec.format)
-      .option("compression", spec.compression)
-      .partitionBy(dirCols: _*)
-      .save(stagingRoot)
+    writeCells(staged, spec, "overwrite", stagingRoot)
     // Verify the 1:1 leaf mapping BEFORE destroying anything: every staged
     // leaf must be an expected cell (a value-rendering mismatch aborts to
     // the safe path); an expected cell MISSING from staging is a

@@ -210,12 +210,11 @@ final class LakePart private[lake] (
     maybeCompact(false)
   }
 
-  /** Delete rows matching a predicate — SQL `DELETE WHERE` semantics: rows
-    * where the predicate is TRUE go; rows where it is FALSE **or NULL**
-    * stay (a bare `filter(!cond)` would silently delete the NULL rows too).
+  /** Delete rows matching a predicate — SQL `DELETE WHERE` semantics
+    * ([[LakePart.survivors]]).
     */
   def deleteWhere(cond: Column): Unit = lock.synchronized {
-    ref.set(cur.filter(!coalesce(cond, lit(false))))
+    ref.set(LakePart.survivors(cur, cond))
     statsTight.set(false) // zones now a superset of the surviving rows
     statsRef.updateAndGet(_.rewritten)
     changes.addAndGet(1L)
@@ -376,6 +375,12 @@ object LakePart {
 
   /** Max chained mutations before forced compaction (plan-depth guard). */
   val AutoCompactDepth: Long = 24L
+
+  /** The rows SQL `DELETE WHERE cond` keeps: those where `cond` is FALSE
+    * **or NULL** (a bare `filter(!cond)` would delete the NULL rows too).
+    */
+  def survivors(d: DataFrame, cond: Column): DataFrame =
+    d.filter(!coalesce(cond, lit(false)))
 
   /** The upsert merge plan: full outer join on `keys`, then per-column
     * `coalesce(incoming, existing)` — incoming wins, but NULL in the

@@ -97,7 +97,9 @@ object ScaleSmoke {
     val dz = time("create range-partitioned") {
       LakeDataset.fromDataFrame(spark, bigO, partitionCols = Seq("o_batch"))
     }
-    dz.insert(bigO.limit(1)) // drop cleanScan: reads now union all parts
+    // drop cleanScan (an UPDATE does; an insert keeps it): reads now union
+    // all parts
+    dz.updateWhere(col("o_orderkey") === 1L, Seq("o_orderpriority" -> col("o_orderpriority")))
     println(s"[scale] zone dataset parts: ${dz.numParts}")
     val loKey = 1000L
     val hiKey = 60000L
@@ -161,7 +163,9 @@ object ScaleSmoke {
       zlake.dataset.storage = Some(graft.model.StorageSpec(zroot))
       time("zorder save")(zlake.dataset.toStorage())
       val zds = time("zorder load")(LakeDataset.fromStorage(spark, zroot))
-      zds.insert(zlake.bin(bigO7.limit(1))) // drop cleanScan: plan the union
+      // drop cleanScan (an UPDATE does; an insert keeps it): plan the union
+      zds.updateWhere(col("o_orderkey") === 1L,
+        Seq("o_orderpriority" -> col("o_orderpriority")))
       def leaves(df: org.apache.spark.sql.DataFrame): Int =
         df.queryExecution.optimizedPlan.collectLeaves().size
       val custPrune = zds.prunedByConstraints(Map.empty,

@@ -97,4 +97,38 @@ object Bridge {
           case _ => Seq.empty[String]
         }
     }.flatten
+
+  /** Streaming listener buses registered on the context's shared listener
+    * bus: one per session whose `StreamingQueryManager` has been built.
+    */
+  def streamListenerBuses(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.sparkContext.listenerBus.findListenersByClass[
+      org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus]().size
+
+  /** Unregister the streaming listener buses a STOPPED query's run left on
+    * the shared listener bus. A session's `StreamingQueryManager` adds one
+    * when it is first built and Spark never removes it, so each run leaves
+    * two: the bus of the session the query ran on, and that of the clone
+    * session Spark's stream execution plans every micro-batch on (its
+    * stateful operators build the clone's manager to reach the state-store
+    * coordinator). Call only for a query whose session is the caller's own
+    * and is discarded with it: that session's streaming listeners hear
+    * nothing afterwards. The managers' buses are private, hence the
+    * reflection; a manager never built is left unbuilt.
+    */
+  def releaseStreamBuses(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = q match {
+    case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
+      val exec = w.streamingQuery
+      val built = classOf[org.apache.spark.sql.internal.SessionState]
+        .getDeclaredField("streamingQueryManager")
+      val bus = classOf[org.apache.spark.sql.classic.StreamingQueryManager]
+        .getDeclaredField("listenerBus")
+      built.setAccessible(true)
+      bus.setAccessible(true)
+      Seq(exec.sparkSession, exec.sparkSessionForStream).foreach { s =>
+        Option(built.get(s.sessionState)).foreach(m => s.sparkContext.removeSparkListener(
+          bus.get(m).asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface]))
+      }
+    case _ => ()
+  }
 }

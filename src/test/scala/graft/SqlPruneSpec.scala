@@ -272,10 +272,11 @@ class SqlPruneSpec extends SparkSpec {
     val ds = LakeDataset.fromDataFrame(spark, rows.toDF("p", "k"),
       partitionCols = Seq("p"))
     // drop the clean-scan fast path so the union-of-parts shape is visible
-    // (insert only into B: part A keeps a single plan leg, so the pruned
-    // leaf count below is exactly 1 — leaves count plan LEGS, and a part
+    // (an insert carries it; an UPDATE drops it and keeps COUNT(*) exact.
+    // Update only B: part A keeps a single plan leg, so the pruned leaf
+    // count below is exactly 1 — leaves count plan LEGS, and a part
     // accumulates one per unmaterialized mutation)
-    ds.insert(Seq(("B", 1001L)).toDF("p", "k"))
+    ds.updateWhere(col("p") === "B", Seq("k" -> col("k")))
     db.register("t_explain", ds)
     // a partition-equality WHERE plans exactly one leaf of the four parts
     val one = db.executeSql(
@@ -292,6 +293,11 @@ class SqlPruneSpec extends SparkSpec {
     // no lake table referenced: a query-level row with a null table
     val none = db.executeSql("EXPLAIN PRUNING SELECT 1 AS x").head()
     assert(none.isNullAt(0) && none.isNullAt(1))
+    // an insert keeps the whole-table view: the snapshot and the batch
+    ds.compact()
+    ds.insert(Seq(("B", 1002L)).toDF("p", "k"))
+    val ins = db.executeSql("EXPLAIN PRUNING SELECT k FROM t_explain").head()
+    assert(ins.getLong(2) <= 2L, ins)
   }
 
   test("GROUP BY (partition col, freq col) collapses to per-group exact counts") {

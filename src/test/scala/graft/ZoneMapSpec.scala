@@ -101,8 +101,8 @@ class ZoneMapSpec extends SparkSpec {
     val aKey = loaded.partKeys.find(_.partValues.exists(_._2 == "a")).get
     assert(loaded.part(aKey).get.zones.get("id") === Zone(Some(1L), Some(3L)))
     assert(loaded.part(aKey).get.zones.get("v") === Zone(Some(10.0), Some(12.0)))
-    // Drop cleanScan via an insert whose widened interval ([201,500] on part
-    // c) still excludes the probe value.
+    // An insert whose widened interval ([201,500] on part c) still excludes
+    // the probe value: the one kept part still plans one leaf.
     loaded.insert(Seq((500L, "c", 1.0)).toDF("id", "grp", "v"))
     val pruned = loaded.zonePrunedDF("id", 102L)
     assert(pruned.queryExecution.optimizedPlan.collectLeaves().size === 1)
