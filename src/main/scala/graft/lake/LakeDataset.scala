@@ -307,8 +307,11 @@ final class LakeDataset private (
   /** Rows currently in the table if every counter is known, else
     * Long.MaxValue (conservative: unknown size spills to parquet).
     */
-  private def knownRowsEstimate: Long = {
-    val counters = parts.values().asScala.map(_.rows.get)
+  private def knownRowsEstimate: Long = rowsEstimate(atMost = false)
+
+  /** `atMost` sums [[LakePart.rowsAtMost]] instead: still known after a delete. */
+  private def rowsEstimate(atMost: Boolean): Long = {
+    val counters = parts.values().asScala.map(p => (if (atMost) p.rowsAtMost else p.rows).get)
     if (counters.exists(_ < 0L)) Long.MaxValue
     else counters.sum
   }
@@ -619,13 +622,12 @@ final class LakeDataset private (
   }
 
   /** After [[markDirty]]: `next` maps the view from before the mutation to
-    * the parts' rows now (None, or a failure to analyze, drops it). Only
-    * while the plan is shallow: from [[LakeDataset.CompactReadThreshold]]
-    * mutations on, [[toDF]] compacts instead.
+    * the parts' rows now. Only while the plan is shallow: from
+    * [[LakeDataset.CompactReadThreshold]] mutations on, [[toDF]] compacts
+    * instead.
     */
-  private def carryClean(prev: Option[DataFrame])(next: DataFrame => Option[DataFrame]): Unit =
-    if (sinceCompact.get < LakeDataset.CompactReadThreshold)
-      cleanScan = prev.flatMap(d => scala.util.Try(next(d)).toOption.flatten)
+  private def carryClean(prev: Option[DataFrame])(next: DataFrame => DataFrame): Unit =
+    if (sinceCompact.get < LakeDataset.CompactReadThreshold) cleanScan = prev.map(next)
 
   /** Engine-level partition pruning: only parts whose partition values match
     * every supplied (col -> value) filter contribute to the plan. The
@@ -1742,13 +1744,12 @@ final class LakeDataset private (
     (partitionCols ++ bucketCols).forall(keys.contains)
 
   /** Stamp audit columns and add the internal routing bucket id. */
-  private def prepared(df0: DataFrame): DataFrame = {
-    val df = stamped(df0)
-    if (bucketCols.nonEmpty)
-      df.withColumn(LakeDataset.BucketCol,
-        Bucketing.bucketExprFor(df, bucketCols.head, nBuckets))
-    else df
-  }
+  private def prepared(df0: DataFrame): DataFrame = withBucket(stamped(df0))
+
+  /** `d` with its bucket id as column `name` (as is without buckets). */
+  private def withBucket(d: DataFrame, name: String = LakeDataset.BucketCol): DataFrame =
+    if (bucketCols.isEmpty) d
+    else d.withColumn(name, Bucketing.bucketExprFor(d, bucketCols.head, nBuckets))
 
   private def cellKeyCols: List[String] = partitionCols ++
     (if (bucketCols.nonEmpty) List(LakeDataset.BucketCol) else Nil)
@@ -1837,10 +1838,9 @@ final class LakeDataset private (
           if (existing == null) newPart(s.df, s.key, s.rows, s.stats)
           else { existing.insert(s.df, s.rows, s.stats); existing })
       }
-      // The batch snapshot is exactly the union of its routed slices. A batch
-      // whose columns differ (schema evolution) drops the view instead.
-      def cols(d: DataFrame) = d.schema.map(f => (f.name, f.dataType))
-      carryClean(prev)(d => if (cols(d) == cols(batch)) Some(d.union(batch)) else None)
+      // The batch snapshot is exactly the union of its routed slices, merged
+      // by name like LakePart.insert merges each slice.
+      carryClean(prev)(_.unionByName(batch, allowMissingColumns = true))
       // Creating from one batch: every part slices the same snapshot, so the
       // snapshot itself IS the whole-table view — reads plan one scan.
       if (wasEmpty) {
@@ -2020,15 +2020,20 @@ final class LakeDataset private (
     writeManifest()
   }
 
-  /** The table view a key probe scans: the single clean scan when present;
-    * otherwise the union of ONLY the parts whose key-column zones overlap
-    * the delta's key ranges (one tiny min/max aggregation over the delta buys
-    * skipping entire parts from the probe plan — at 10k parts the difference
-    * between a full-table probe and a handful of scans). Runs inside the
+  /** The table view a key probe scans: the clean scan when no mutation has
+    * touched it since it was built; otherwise the union of ONLY the parts
+    * whose key-column zones overlap the delta's key ranges (one tiny min/max
+    * aggregation over the delta buys skipping entire parts from the probe
+    * plan — at 10k parts the difference between a full-table probe and a
+    * handful of scans). A view [[carryClean]] kept serves only when the
+    * probe keeps most parts, as in [[assembleKept]]. Runs inside the
     * dataset monitor.
     */
-  private def probeBase(delta: DataFrame, keys: Seq[String]): DataFrame =
-    cleanScan.getOrElse(unionViews(probeKeptParts(delta, keys).map(_.view)))
+  private def probeBase(delta: DataFrame, keys: Seq[String]): DataFrame = {
+    if (sinceCompact.get == 0L && cleanScan.isDefined) return cleanScan.get
+    val kept = probeKeptParts(delta, keys)
+    cleanScan.filter(_ => kept.size * 2 > parts.size).getOrElse(unionViews(kept.map(_.view)))
+  }
 
   /** The parts a key probe must scan for `delta`'s keys — both stat axes:
     *
@@ -2087,15 +2092,8 @@ final class LakeDataset private (
     val old = probeBase(batch, keys)
     val cellCols = partitionCols ++
       (if (bucketCols.nonEmpty) List(LakeDataset.BucketCol) else Nil)
-    def loc(d: DataFrame, tag: String): DataFrame = {
-      val withB =
-        if (bucketCols.nonEmpty)
-          d.withColumn(LakeDataset.BucketCol,
-            Bucketing.bucketExprFor(d, bucketCols.head, nBuckets))
-        else d
-      withB.select(keys.map(col) ++
-        cellCols.map(c => col(c).as(s"${tag}_$c")): _*)
-    }
+    def loc(d: DataFrame, tag: String): DataFrame =
+      withBucket(d).select(keys.map(col) ++ cellCols.map(c => col(c).as(s"${tag}_$c")): _*)
     val moved = loc(old, "o").join(loc(batch, "d"), keys.toSeq)
       .filter(cellCols.map(c => !(col(s"o_$c") <=> col(s"d_$c"))).reduce(_ || _))
     !moved.isEmpty
@@ -2229,7 +2227,7 @@ final class LakeDataset private (
     }
     // The parts the catalog pruned hold no row where `cond` is true, so the
     // whole view filtered like a touched part is the union of the parts.
-    carryClean(prev)(d => Some(LakePart.survivors(d, cond)))
+    carryClean(prev)(LakePart.survivors(_, cond))
     maybeAutoAnalyze()
     touched.size
   }
@@ -2432,14 +2430,8 @@ final class LakeDataset private (
     locateCells(keyRows, keys)
 
   private def locateCells(keyRows: DataFrame, keys: Seq[String]): List[PartKey] = {
-    val old = probeBase(keyRows, keys)
-    val withB =
-      if (bucketCols.nonEmpty)
-        old.withColumn(LakeDataset.BucketCol,
-          Bucketing.bucketExprFor(old, bucketCols.head, nBuckets))
-      else old
     if (cellKeyCols.isEmpty) return List(PartKey(Nil, None))
-    withB.join(keyRows, keys.toSeq, "left_semi")
+    withBucket(probeBase(keyRows, keys)).join(keyRows, keys.toSeq, "left_semi")
       .select(cellKeyCols.map(col): _*).distinct().collect().toList.map(cellKeyOf)
   }
 
@@ -2547,8 +2539,9 @@ final class LakeDataset private (
     * partition opens a file in every cell it touches (32 partitions × 32
     * buckets wrote ~1000 tiny files, 4.2 s → sub-second on a 4k-row batch).
     */
-  private def writeCells(df: DataFrame, spec: StorageSpec, mode: String, path: String): Unit =
-    df.repartition(dirCols.map(col): _*)
+  private def writeCells(df: DataFrame, spec: StorageSpec, mode: String, path: String,
+      perCell: Boolean = true): Unit =
+    (if (perCell) df.repartition(dirCols.map(col): _*) else df)
       .write.mode(mode).format(spec.format)
       .option("compression", spec.compression)
       .partitionBy(dirCols: _*)
@@ -2610,15 +2603,14 @@ final class LakeDataset private (
       jobs.foreach(Await.result(_, Duration.Inf))
     } else {
       // Many cells, big data or unknown counts: ONE job over toDF (the clean
-      // scan when set, else the union of the parts), one file per cell —
-      // 10k cells as 10k driver-scheduled jobs would serialize on the driver.
+      // scan when set, else the union of the parts) — 10k cells as 10k
+      // driver-scheduled jobs would serialize on the driver. One writer task
+      // per cell only up to SpillSnapshotRows: shuffling tens of millions of
+      // rows into one task per cell is unmeasured.
       require(!df.columns.contains("bucket") || bucketCols.isEmpty,
         "a data column named 'bucket' collides with the bucket directory layout")
-      val withB =
-        if (bucketCols.nonEmpty)
-          df.withColumn("bucket", Bucketing.bucketExprFor(df, bucketCols.head, nBuckets))
-        else df
-      writeCells(withB, spec, "overwrite", spec.root)
+      writeCells(withBucket(df, "bucket"), spec, "overwrite", spec.root,
+        perCell = rowsEstimate(atMost = true) <= LakeDataset.SpillSnapshotRows)
     }
     commitManifest(spec)(v => fullManifest(spec, ddl, v))
     // Every cell's directory now mirrors its content exactly. PartKey.escape
@@ -2635,8 +2627,9 @@ final class LakeDataset private (
     * files (a load's or [[diskScan]]'s, carried through an insert or a
     * [[deleteWhere]]) would read the replaced files afterwards.
     */
-  private def retireRootScan(spec: StorageSpec): Unit =
+  private def retireRootScan(spec: StorageSpec): Unit = this.synchronized {
     if (cleanScan.exists(dfReadsUnder(_, spec.root))) cleanScan = None
+  }
 
   /** Incremental save of a single cell — at scale you save the cells an
     * ingest touched, not the world. The manifest rewrites too, so its

@@ -101,6 +101,11 @@ final class LakePart private[lake] (
   /** Maintained row counter; deliberately stale after upsert until the next
     * materialize, matching reference semantics (src/dataset.rs:144). */
   val rows = new AtomicLong(initialRows)
+  /** The counter a delete leaves behind instead of -1: an upper bound for
+    * size heuristics (as stale as [[rows]] after an upsert), never for
+    * answers. -1 while never counted.
+    */
+  val rowsAtMost = new AtomicLong(initialRows)
   /** The tight-and-counted gate: the exact row count while the stats are
     * exact AND the counter is known — what every exact catalog answer and
     * the manifest's vouch require. One read of the counter, so a concurrent
@@ -136,6 +141,7 @@ final class LakePart private[lake] (
       key = key, bucketCols = bucketCols, nBuckets = nBuckets,
       initialRows = rows.get, onCheckpoint = onCheckpoint, layoutOf = layoutOf,
       snapshot = snapshot, initialStats = statsRef.get, initialTight = statsTight.get)
+    f.rowsAtMost.set(rowsAtMost.get)
     f.changes.set(changes.get)
     f.mutationOps.set(mutationOps.get)
     f
@@ -169,6 +175,7 @@ final class LakePart private[lake] (
       ref.set(cur.unionByName(other, allowMissingColumns = true))
       statsRef.updateAndGet(_.append(delta))
       rows.addAndGet(otherRows)
+      if (rowsAtMost.get >= 0L) rowsAtMost.addAndGet(otherRows)
       changes.addAndGet(otherRows)
       maybeCompact(collectNow)
     }
@@ -307,6 +314,7 @@ final class LakePart private[lake] (
   private def recount(d: DataFrame): Unit = {
     val (n, st) = layoutOf(d.schema).of(d)
     rows.set(n)
+    rowsAtMost.set(n)
     statsRef.set(st)
     statsTight.set(true)
   }

@@ -86,9 +86,9 @@ object ScaleSmoke {
 
     // ---- zone-map pruning at many-part scale -------------------------------
     // orders scaled `copies`x, range-partitioned into ~10 cells per copy so
-    // every cell has a disjoint o_orderkey interval. A mutation drops the
-    // clean scan, so reads plan the union — the regime where engine-level
-    // pruning decides the plan size.
+    // every cell has a disjoint o_orderkey interval. A keyed delete drops
+    // the clean scan, so reads plan the union — the regime where
+    // engine-level pruning decides the plan size.
     val o = spark.read.parquet(s"$sfDir/orders.parquet")
     val bigO = (0 until copies).map { i =>
       o.withColumn("o_orderkey", col("o_orderkey") + lit(i.toLong * 10000000L))
@@ -97,12 +97,16 @@ object ScaleSmoke {
     val dz = time("create range-partitioned") {
       LakeDataset.fromDataFrame(spark, bigO, partitionCols = Seq("o_batch"))
     }
-    // drop cleanScan (an UPDATE does; an insert keeps it): reads now union
-    // all parts
-    dz.updateWhere(col("o_orderkey") === 1L, Seq("o_orderpriority" -> col("o_orderpriority")))
     println(s"[scale] zone dataset parts: ${dz.numParts}")
     val loKey = 1000L
     val hiKey = 60000L
+    // An insert keeps the whole-table view; the delete's key probe must
+    // still plan only the zone-kept parts. The delete then drops the view.
+    dz.insert(bigO.limit(1))
+    time("keys-only located delete") {
+      import spark.implicits._
+      dz.delete((loKey to loKey + 500L).toDF("o_orderkey"), Seq("o_orderkey"))
+    }
     time("zone-pruned range agg") {
       dz.zoneRangePrunedDF("o_orderkey", loKey, hiKey)
         .filter(col("o_orderkey").between(loKey, hiKey))
@@ -111,10 +115,6 @@ object ScaleSmoke {
     time("unpruned range agg") {
       dz.toDF.filter(col("o_orderkey").between(loKey, hiKey))
         .agg(count(lit(1))).collect()
-    }
-    time("keys-only located delete") {
-      import spark.implicits._
-      dz.delete((loKey to loKey + 500L).toDF("o_orderkey"), Seq("o_orderkey"))
     }
 
     // ---- the SAME range query through the SQL surface ----------------------

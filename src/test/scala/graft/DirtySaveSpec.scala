@@ -1,12 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
@@ -94,6 +94,49 @@ class DirtySaveSpec extends SparkSpec {
     ds.saveParts(ds.partKeys)
     assert(ds.toDF.count() == 610L)
     assert(LakeDataset.fromStorage(spark, root.toString).toDF.count() == 610L)
+    LakeDataset.deleteRecursively(Paths.get(root.toString))
+  }
+
+  test("a key probe after an insert scans only the cells its keys' zones keep") {
+    val sc = spark.sparkContext
+    val root = Files.createTempDirectory("graft-carried-probe-")
+    val base = (0L until 600L).map(k => (k, k / 100L, k * 0.5))
+    val ds0 = LakeDataset.fromDataFrame(spark, base.toDF("k", "p", "v"),
+      partitionCols = Seq("p"))
+    ds0.storage = Some(StorageSpec(root.toString))
+    ds0.toStorage()
+    // the load's whole-table scan, carried through an insert
+    val ds = LakeDataset.fromStorage(spark, root.toString)
+    ds.insert(Seq((5L, 0L, 1.0)).toDF("k", "p", "v"))
+
+    val probeStages = ConcurrentHashMap.newKeySet[Int]()
+    val recordsRead = new AtomicLong(0L)
+    val marked = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.probe") != null))
+          probeStages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (probeStages.contains(e.stageId) && e.taskMetrics != null)
+          recordsRead.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("graft.test.marker") != null))
+          marked.countDown()
+    }
+    sc.addSparkListener(listener)
+    val cells = try {
+      sc.setLocalProperty("graft.test.probe", "1")
+      val located =
+        try ds.cellsHolding(Seq(250L, 260L).toDF("k"), Seq("k"))
+        finally sc.setLocalProperty("graft.test.probe", null)
+      sc.setLocalProperty("graft.test.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.marker", null)
+      assert(marked.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      located
+    } finally sc.removeSparkListener(listener)
+    assert(cells.map(_.relPath) == List("p=2"))
+    assert(recordsRead.get <= 100L, s"probe read ${recordsRead.get} of 601 rows")
     LakeDataset.deleteRecursively(Paths.get(root.toString))
   }
 }
