@@ -11,10 +11,9 @@ import org.apache.spark.sql.SparkSession
   * codegen startup cost.
   */
 object Bench {
-  /** The name-list selector shared by Bench, Verify (`SPARK_GRAFT_ONLY`)
-    * and ScaleSmoke (its section argument): comma-separated names, each
-    * trimmed; `None` selects everything. A name outside `known`, or a list
-    * naming nothing, throws before any work runs.
+  /** The `SPARK_GRAFT_ONLY` gate selector shared by Bench and Verify:
+    * comma-separated names, each trimmed; `None` selects everything. A name
+    * outside `known`, or a list naming nothing, throws before any work runs.
     */
   def select(spec: Option[String], known: Iterable[String]): Option[Set[String]] =
     spec.map { raw =>

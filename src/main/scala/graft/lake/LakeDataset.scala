@@ -2636,24 +2636,7 @@ final class LakeDataset private (
     * per-part stats stay in sync with the refreshed files (a stale zone on
     * disk would be an UNSOUND zone on the next load).
     */
-  def savePart(key: PartKey): Unit = {
-    requireNotInTransaction("savePart")
-    val spec = storage.getOrElse(throw new IllegalStateException("no storage spec"))
-    retireRootScan(spec)
-    Option(parts.get(key)).foreach { p =>
-      // A lazily loaded part reads the very directory the overwrite-mode
-      // write below deletes first — collect it off the files before saving.
-      if (dfReadsUnder(p.df, spec.root)) p.materialize()
-      p.save(spec, dropCols = partitionCols)
-      diskDirs.put(key, s"${spec.root}/${key.relPath}")
-      diskSchemas.put(key, p.df.schema)
-      val ddl = parts.values().asScala.headOption.map(_.df.schema.toDDL)
-      // Carry the tightness vouch (exact rows + sums) like toStorage does —
-      // an incremental cell save must not cost every OTHER part its
-      // metadata-answerability on the next load.
-      commitManifest(spec)(v => fullManifest(spec, ddl, v))
-    }
-  }
+  def savePart(key: PartKey): Unit = saveParts(Seq(key))
 
   /** Incremental save of SEVERAL cells: concurrent per-part write jobs (the
     * same ioPool fan-out as [[toStorage]]'s few-cells path) and ONE manifest
@@ -2666,9 +2649,7 @@ final class LakeDataset private (
     retireRootScan(spec)
     val ps = keys.flatMap(k => Option(parts.get(k)))
     if (ps.isEmpty) return
-    val onePassMin = spark.conf
-      .get("spark.graft.lake.onePassSaveMinCells", "8").toInt
-    if (ps.size >= onePassMin && onePassRewrite(spec, ps)) ()
+    if (ps.size >= LakeDataset.OnePassSaveMinCells && onePassRewrite(spec, ps)) ()
     else perPartSave(spec, ps)
     val ddl = parts.values().asScala.headOption.map(_.df.schema.toDDL)
     commitManifest(spec)(v => fullManifest(spec, ddl, v))
@@ -2676,8 +2657,8 @@ final class LakeDataset private (
 
   /** The classic per-cell save: one (materialize-if-self-reading +
     * overwrite) job pair per cell, concurrent over [[LakeDataset.ioPool]].
-    * Right for a handful of large cells; past
-    * `spark.graft.lake.onePassSaveMinCells` the fixed two-jobs-per-cell
+    * Right for a handful of large cells; from
+    * [[LakeDataset.OnePassSaveMinCells]] cells the fixed two-jobs-per-cell
     * cost dominates and [[onePassRewrite]] takes over.
     */
   private def perPartSave(spec: StorageSpec, ps: Seq[LakePart]): Unit = {
@@ -2905,6 +2886,11 @@ object LakeDataset {
     * stops scaling long before the executors do).
     */
   val OnePassSaveCells: Int = 64
+
+  /** Touched-cell count from which `saveParts` rewrites the cells in one
+    * staged write job instead of two jobs per cell.
+    */
+  val OnePassSaveMinCells: Int = 8
 
   /** Snapshot rows above which a rebuild materializes to parquet spill
     * instead of the block store (which collapses under multi-GB snapshots:

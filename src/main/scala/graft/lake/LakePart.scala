@@ -174,7 +174,7 @@ final class LakePart private[lake] (
     lock.synchronized {
       ref.set(cur.unionByName(other, allowMissingColumns = true))
       statsRef.updateAndGet(_.append(delta))
-      rows.addAndGet(otherRows)
+      if (rows.get >= 0L) rows.addAndGet(otherRows)
       if (rowsAtMost.get >= 0L) rowsAtMost.addAndGet(otherRows)
       changes.addAndGet(otherRows)
       maybeCompact(collectNow)

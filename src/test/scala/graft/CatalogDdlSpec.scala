@@ -168,6 +168,20 @@ class CatalogDdlSpec extends SparkSpec {
     assert(det.getAs[Long]("num_rows") == ds.rowsCount)
   }
 
+  test("DESCRIBE DETAIL after a delete then an insert reports no wrong row count") {
+    val d = db()
+    val o = Fixtures.table(spark, sf(), "orders")
+    val ds = LakeDataset.fromDataFrame(spark, o)
+    d.register("ddl_rows", ds)
+    ds.deleteWhere(col("o_orderkey") === o.agg(min("o_orderkey")).head().getLong(0))
+    ds.insert(o.limit(10).withColumn("o_orderkey", col("o_orderkey") + 9000000L))
+    val det = d.executeSql("DESCRIBE DETAIL ddl_rows").head()
+    val truth = o.count() - 1 + 10
+    assert(det.isNullAt(det.fieldIndex("num_rows")) ||
+      det.getAs[Long]("num_rows") == truth,
+      s"num_rows ${det.get(det.fieldIndex("num_rows"))}, table holds $truth")
+  }
+
   // ------------------------------------------------- CHECK constraints
 
   test("CHECK constraints: add validates existing rows; ingest enforces") {

@@ -80,7 +80,7 @@ class DriverLocateSpec extends SparkSpec {
   test("erase idempotency survives the one-pass rewrite: second delete touches nothing") {
     val root = Files.createTempDirectory("graft_dls_idem").toString
     val ds = bloomedTable(root)
-    // 28 cells (7 batches x 4 buckets); >= onePassSaveMinCells keys spread
+    // 28 cells (7 batches x 4 buckets); >= OnePassSaveMinCells keys spread
     // over every bucket force the one-pass save whose blooms-only recount
     // must re-tighten membership.
     val doomed = (0L until 200L).map(_ * 17L).filter(_ < 4000L)

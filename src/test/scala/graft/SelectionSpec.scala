@@ -2,10 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** [[Bench.select]], the `SPARK_GRAFT_ONLY` parser Bench and Verify share
-  * (and ScaleSmoke's section argument): entries are trimmed, and a list
-  * that names an unknown gate fails before any work instead of quietly
-  * selecting nothing.
+/** [[Bench.select]], the `SPARK_GRAFT_ONLY` parser Bench and Verify share:
+  * entries are trimmed, and a list that names an unknown gate fails before
+  * any work instead of quietly selecting nothing.
   */
 class SelectionSpec extends AnyFunSuite {
   private val gates = SparkEntry.queries.keySet
@@ -27,11 +26,5 @@ class SelectionSpec extends AnyFunSuite {
 
   test("a list naming nothing throws") {
     intercept[IllegalArgumentException](Bench.select(Some(" , "), gates))
-  }
-
-  test("ScaleSmoke sections go through the same parser") {
-    assert(Bench.select(Some("r7, ivf"), tools.ScaleSmoke.Sections).contains(Set("r7", "ivf")))
-    intercept[IllegalArgumentException](
-      Bench.select(Some("R7"), tools.ScaleSmoke.Sections))
   }
 }

@@ -1,7 +1,8 @@
 import duckdb, json, glob, sys
 import pandas as pd
-sf = '/root/testdata/sf0.01'
-out = __import__('sys').argv[1] if len(__import__('sys').argv) > 1 else '/tmp/verify_out'
+# usage: check_oracle.py [verifyOutDir] [dataDir]
+out = sys.argv[1] if len(sys.argv) > 1 else '/tmp/verify_out'
+sf = sys.argv[2] if len(sys.argv) > 2 else '/root/testdata/sf0.01'
 con = duckdb.connect()
 for t in ['region','nation','customer','supplier','part','orders','lineitem','events','documents','embeddings']:
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
