@@ -6,6 +6,20 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{EliminateSubqueryAliases, RelationTimeTravel,
+  UnresolvedAttribute, UnresolvedFunction, UnresolvedIdentifier, UnresolvedRelation,
+  UnresolvedStar, UnresolvedTable, UnresolvedTableOrView}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, ConstraintCharacteristic, EqualTo,
+  Expression, Literal}
+import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.{Inner, UsingJoin}
+import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AddColumns,
+  Aggregate, AlterTableCommand, AnalyzeTable, Assignment, CreateMaterializedViewAsSelect,
+  CreateTableAsSelect, DeleteAction, DeleteFromTable, DropColumns, DropConstraint, DropTable,
+  InsertIntoStatement, InsertStarAction, Join, LogicalPlan, MergeIntoTable, Project,
+  RenameColumn, RenameTable, SubqueryAlias, TruncateTable, UnresolvedWith, UpdateStarAction,
+  UpdateTable}
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.model.TableName
 
@@ -48,25 +62,36 @@ final class Database(val spark: SparkSession) {
     register(name, feed.table)
   }
 
-  private val VersionAsOfRe =
-    """(?i)\b([A-Za-z_][\w]*)\s+VERSION\s+AS\s+OF\s+(\d+)""".r
-
-  /** Rewrite `name VERSION AS OF n` references to point at a temp view of
-    * the feed's reconstruction at mark n. Names that are not registered
-    * feeds pass through untouched (Spark then reports them as it would any
-    * unknown relation). Plan-only — the reconstruction runs when the query
-    * does, pruned to the log cells at or below the mark.
+  /** Spark's own SQL parser: a statement becomes a typed plan, so quoted
+    * text, comments and nested parentheses never confuse its structure.
     */
-  private def rewriteVersionAsOf(sql: String): String =
-    VersionAsOfRe.replaceAllIn(sql, m => {
-      java.util.regex.Matcher.quoteReplacement(feeds.get(m.group(1)) match {
-        case Some((feed, keys)) =>
-          val view = s"${m.group(1)}__v${m.group(2)}"
-          feed.tableAsOf(m.group(2).toLong, keys).createOrReplaceTempView(view)
-          view
-        case None => m.matched
-      })
+  private def parse(sql: String): LogicalPlan =
+    spark.sessionState.sqlParser.parsePlan(sql)
+
+  /** A parsed query as a DataFrame. `name VERSION AS OF n` over a
+    * registered feed reads the feed's reconstruction at mark n under the
+    * feed's name; other names pass through (Spark then reports them as it
+    * would any time travel it cannot serve). Plan-only — the
+    * reconstruction runs when the query does, pruned to the log cells at
+    * or below the mark.
+    */
+  private def planDf(plan: LogicalPlan): DataFrame =
+    Bridge.ofRows(spark, if (feeds.isEmpty) plan else timeTravel(plan))
+
+  private def timeTravel(plan: LogicalPlan): LogicalPlan = plan.transformUpWithSubqueries {
+    case RelationTimeTravel(UnresolvedRelation(Seq(n), _, _), None, Some(v))
+        if feeds.contains(n) =>
+      val (feed, keys) = feeds(n)
+      SubqueryAlias(n, feed.tableAsOf(v.toLong, keys).queryExecution.analyzed)
+    // CTE bodies are not children of their WITH node.
+    case w: UnresolvedWith => w.copy(cteRelations = w.cteRelations.map {
+      case (n, q, depth) => (n, timeTravel(q).asInstanceOf[SubqueryAlias], depth)
     })
+  }
+
+  /** A read statement: exactly `spark.sql` while no feed is registered. */
+  private def readSql(sql: String): DataFrame =
+    if (feeds.isEmpty) spark.sql(sql) else planDf(parse(sql))
 
   /** (Re-)register the table's SQL view. The view plan is ONE
     * `graft.plans.LakeScan` leaf that `LakePruneRule` resolves to the
@@ -81,9 +106,6 @@ final class Database(val spark: SparkSession) {
     */
   def refresh(name: String): Unit =
     tables.get(name).foreach(_.scanDF.createOrReplaceTempView(name))
-
-  /** Refresh all views — cheap (plan-only, no jobs). */
-  def refreshAll(): Unit = tables.keys.foreach(refresh)
 
   private val DescribeHistoryRe =
     """(?is)^\s*DESCRIBE\s+HISTORY\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
@@ -286,7 +308,7 @@ final class Database(val spark: SparkSession) {
     */
   private def explainPruning(sql: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val df = spark.sql(if (feeds.isEmpty) sql else rewriteVersionAsOf(sql))
+    val df = readSql(sql)
     val scans = df.queryExecution.analyzed.collect {
       case s: graft.plans.LakeScan => s.ds
     }.distinct
@@ -347,26 +369,22 @@ final class Database(val spark: SparkSession) {
       val ord0 = if (desc == null) col(o) else col(o).desc
       val ord = if (tie == null) Seq(ord0) else Seq(ord0, col(tie))
       graft.operators.Sampling.topKPerGroup(tables(t).toDF, Seq(g), ord, k.toInt)
-    case _ => spark.sql(if (feeds.isEmpty) sql else rewriteVersionAsOf(sql))
+    case _ => readSql(sql)
   }
 
   /** Execute a batch of SQL statements: dedupe identical strings, run the
     * distinct ones concurrently on the shared session (reference
     * `Database::execute_sqls` + polars `collect_all` CSE,
-    * src/database.rs:58-63). Spark's scheduler interleaves the jobs; with
-    * `spark.scheduler.mode=FAIR` they time-share the cluster.
+    * src/database.rs:58-63), each through [[executeSql]] — the batch
+    * serves the same SQL surface as one statement. Spark's scheduler
+    * interleaves the jobs; with `spark.scheduler.mode=FAIR` they
+    * time-share the cluster.
     */
   def executeSqls(sqls: Seq[String])(implicit ec: ExecutionContext): Map[String, Array[org.apache.spark.sql.Row]] = {
     val distinct = sqls.distinct
-    val futures = distinct.map(s => s -> Future(spark.sql(s).collect()))
+    val futures = distinct.map(s => s -> Future(executeSql(s).collect()))
     futures.map { case (s, f) => s -> Await.result(f, Duration.Inf) }.toMap
   }
-
-  /** Columns, dtypes, row count, part count for a table (reference
-    * `get_table_info`, src/server.rs:210-232).
-    */
-  def tableInfo(name: String): Option[(List[(String, String)], Long, Int)] =
-    tables.get(name).map(_.schemaInfo)
 
   /** Multi-table ATOMIC transaction: every engine mutation the body
     * performs on the named tables either fully applies or — on any
@@ -468,19 +486,35 @@ final class Database(val spark: SparkSession) {
     }
   }
 
-  /** Split an SQL script into statements on TOP-LEVEL semicolons only — a
-    * `;` inside a single-quoted literal (SQL escapes a quote as `''`,
-    * which reads here as quote-close + quote-open and stays balanced)
-    * never splits.
+  /** Split an SQL script into statements on TOP-LEVEL semicolons only. A
+    * `;` inside quoted text — a '…' or "…" string literal (a backslash
+    * escapes the next character; SQL's doubled quote reads here as close +
+    * open and stays balanced) or a `…` identifier — never splits, and a
+    * `--` line comment is dropped up to its newline, so neither its quotes
+    * nor its semicolons count.
     */
   private[lake] def splitSqlScript(script: String): List[String] = {
     val out = scala.collection.mutable.ListBuffer.empty[String]
     val cur = new StringBuilder
-    var inQuote = false
-    script.foreach {
-      case '\'' => inQuote = !inQuote; cur += '\''
-      case ';' if !inQuote => out += cur.toString; cur.clear()
-      case c => cur += c
+    var quote: Char = 0 // the open quote, 0 outside quoted text
+    var i = 0
+    while (i < script.length) {
+      val c = script.charAt(i)
+      if (quote != 0) {
+        cur += c
+        if (c == '\\' && quote != '`' && i + 1 < script.length) {
+          i += 1; cur += script.charAt(i)
+        } else if (c == quote) quote = 0
+      } else if (script.startsWith("--", i)) {
+        val eol = script.indexOf('\n', i)
+        i = (if (eol < 0) script.length else eol) - 1 // keep the newline
+      } else if (c == ';') {
+        out += cur.toString; cur.clear()
+      } else {
+        if (c == '\'' || c == '"' || c == '`') quote = c
+        cur += c
+      }
+      i += 1
     }
     out += cur.toString
     out.map(_.trim).filter(_.nonEmpty).toList
@@ -493,19 +527,19 @@ final class Database(val spark: SparkSession) {
     * not fork, so a script containing one refuses up front — before any
     * lock is taken or any statement runs.
     */
-  private def dmlTarget(sql: String): String =
-    parseMerge(sql).map(_._1).getOrElse(sql match {
-      case DeleteRe(t, _)    => t
-      case DeleteAllRe(t)    => t
-      case UpdateRe(t, _, _) => t
-      case InsertRe(t, _)    => t
-      case CopyRe(t, _, _)   => t
-      case TruncateRe(t)     => t
-      case other => throw new IllegalArgumentException(
-        "only mutation DML (INSERT INTO / UPDATE / DELETE FROM / MERGE INTO / " +
-          s"COPY INTO / TRUNCATE TABLE) can run inside a transaction; got: " +
-          s"'${other.trim.take(60)}'")
-    })
+  private def dmlTarget(sql: String): String = (sql match {
+    case CopyRe(t, _, _) => Some(t)
+    case _ => scala.util.Try(parseDml(sql)).toOption.collect {
+      case DeleteFromTable(t, _) => target(t)
+      case UpdateTable(t, _, _) => target(t)
+      case i: InsertIntoStatement => target(i.table)
+      case m: MergeIntoTable => target(EliminateSubqueryAliases(m.targetTable))
+      case TruncateTable(t) => target(t)
+    }
+  }).getOrElse(throw new IllegalArgumentException(
+    "only mutation DML (INSERT INTO / UPDATE / DELETE FROM / MERGE INTO / " +
+      s"COPY INTO / TRUNCATE TABLE) can run inside a transaction; got: " +
+      s"'${sql.trim.take(60)}'"))
 
   private val BeginRe = """(?is)^\s*BEGIN(?:\s+TRANSACTION)?\s*$""".r
   private val CommitRe = """(?is)^\s*(?:COMMIT|END)(?:\s+TRANSACTION)?\s*$""".r
@@ -539,19 +573,10 @@ final class Database(val spark: SparkSession) {
     transaction(targets)(stmts.map(executeDml).sum)
   }
 
-  private val DeleteRe =
-    """(?is)^\s*DELETE\s+FROM\s+([A-Za-z_][\w]*)\s+WHERE\s+(.+?)\s*;?\s*$""".r
-  private val DeleteAllRe =
-    """(?is)^\s*DELETE\s+FROM\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
-  private val InsertRe =
-    """(?is)^\s*INSERT\s+INTO\s+([A-Za-z_][\w]*)\s+((?:SELECT|VALUES|WITH|TABLE)\b.+?)\s*;?\s*$""".r
-  private val UpdateRe =
-    """(?is)^\s*UPDATE\s+([A-Za-z_][\w]*)\s+SET\s+(.+?)(?:\s+WHERE\s+(.+?))?\s*;?\s*$""".r
-
+  // The lake verbs: statements Spark's grammar rejects (or misreads), so a
+  // regex dispatch reads them before the parser does.
   private val CopyRe =
     """(?is)^\s*COPY\s+INTO\s+([A-Za-z_][\w]*)\s+FROM\s+'([^']+)'(?:\s+FORMAT\s+([A-Za-z]+))?\s*;?\s*$""".r
-  private val AlterRe =
-    """(?is)^\s*ALTER\s+TABLE\s+([A-Za-z_][\w]*)\s+(.+?)\s*;?\s*$""".r
   private val OptimizeRe =
     """(?is)^\s*OPTIMIZE\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
   private val OptimizeWhereRe =
@@ -562,128 +587,82 @@ final class Database(val spark: SparkSession) {
     """(?is)^\s*VACUUM\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
   private val RestoreRe =
     """(?is)^\s*RESTORE\s+TABLE\s+([A-Za-z_][\w]*)\s+VERSION\s+AS\s+OF\s+(\d+)\s*;?\s*$""".r
-  private val TruncateRe =
-    """(?is)^\s*TRUNCATE\s+TABLE\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
   private val RenameTableRe =
-    ("""(?is)^\s*(?:ALTER\s+TABLE\s+([A-Za-z_][\w]*)\s+RENAME\s+TO""" +
-      """|RENAME\s+TABLE\s+([A-Za-z_][\w]*)\s+TO)\s+([A-Za-z_][\w]*)\s*;?\s*$""").r
-  private val AnalyzeRe =
-    """(?is)^\s*ANALYZE\s+TABLE\s+([A-Za-z_][\w]*)\s+COMPUTE\s+STATISTICS\s*;?\s*$""".r
+    """(?is)^\s*RENAME\s+TABLE\s+([A-Za-z_][\w]*)\s+TO\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
   private val CreateCloneRe =
     """(?is)^\s*CREATE\s+TABLE\s+([A-Za-z_][\w]*)\s+SHALLOW\s+CLONE\s+([A-Za-z_][\w]*)\s+LOCATION\s+'([^']+)'\s*;?\s*$""".r
-  private val CreateTableAsRe =
-    ("""(?is)^\s*CREATE\s+TABLE\s+([A-Za-z_][\w]*)""" +
-      """(?:\s+PARTITIONED\s+BY\s*\(\s*([^)]+?)\s*\))?""" +
-      """(?:\s+BUCKETED\s+BY\s*\(\s*([A-Za-z_][\w]*)\s*,\s*(\d+)\s*\))?""" +
-      """(?:\s+LOCATION\s+'([^']+)')?""" +
-      """\s+AS\s+(.+?)\s*;?\s*$""").r
-  private val DropTableRe =
-    """(?is)^\s*DROP\s+TABLE\s+([A-Za-z_][\w]*)(\s+PURGE)?\s*;?\s*$""".r
-  private val AddColumnRe =
-    """(?is)^\s*ALTER\s+TABLE\s+([A-Za-z_][\w]*)\s+ADD\s+COLUMN\s+([A-Za-z_][\w]*)\s+([A-Za-z0-9_(),\s]+?)\s*;?\s*$""".r
-  private val DropColumnRe =
-    """(?is)^\s*ALTER\s+TABLE\s+([A-Za-z_][\w]*)\s+DROP\s+COLUMN\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
-  private val RenameColumnRe =
-    """(?is)^\s*ALTER\s+TABLE\s+([A-Za-z_][\w]*)\s+RENAME\s+COLUMN\s+([A-Za-z_][\w]*)\s+TO\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
-  private val AddConstraintRe =
-    """(?is)^\s*ALTER\s+TABLE\s+([A-Za-z_][\w]*)\s+ADD\s+CONSTRAINT\s+([A-Za-z_][\w]*)\s+CHECK\s*\((.+)\)\s*;?\s*$""".r
-  private val DropConstraintRe =
-    """(?is)^\s*ALTER\s+TABLE\s+([A-Za-z_][\w]*)\s+DROP\s+CONSTRAINT\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
-
-  /** One `WHEN [NOT] MATCHED [AND cond] THEN <action>` clause, in
-    * statement order. `action` is "update" (UPDATE SET *), "delete"
-    * (DELETE — matched only), or "insert" (INSERT * — not-matched only).
-    * The optional condition may reference SOURCE columns (qualified by the
-    * USING alias or bare) — per-row routing picks the FIRST matched clause
-    * whose condition holds, SQL's clause-order semantics.
+  // `ALTER TABLE t` with any sequence of these two layout clauses.
+  private val PartitionedBy = """(?is)PARTITIONED\s+BY\s*\(\s*([^)]+?)\s*\)"""
+  private val BucketedBy = """(?is)BUCKETED\s+BY\s*\(\s*([A-Za-z_][\w]*)\s*,\s*(\d+)\s*\)"""
+  private val AlterLayoutRe =
+    raw"""(?is)^\s*ALTER\s+TABLE\s+([A-Za-z_][\w]*)((?:\s+(?:$PartitionedBy|$BucketedBy))+)\s*;?\s*$$""".r
+  private val DropMvRe =
+    """(?is)^\s*DROP\s+MATERIALIZED\s+VIEW\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
+  private val RefreshMvRe =
+    """(?is)^\s*REFRESH\s+MATERIALIZED\s+VIEW\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
+  /** CTAS's `BUCKETED BY (col, n)` clause, which the grammar rejects: the
+    * statement parses with the clause cut out (groups 1 and 4).
     */
-  private case class MergeClause(matched: Boolean, cond: Option[String], action: String)
+  private val CtasBucketRe =
+    ("""(?is)^(\s*CREATE\s+TABLE\s+[A-Za-z_][\w]*(?:\s+PARTITIONED\s+BY\s*\([^)]*\))?)""" +
+      """\s+BUCKETED\s+BY\s*\(\s*([A-Za-z_][\w]*)\s*,\s*(\d+)\s*\)(.*)$""").r
 
-  private val MergeClauseRe =
-    """(?is)\s*WHEN\s+(NOT\s+)?MATCHED(?:\s+AND\s+(.+?))?\s+THEN\s+(UPDATE\s+SET\s+\*|INSERT\s+\*|DELETE)""".r
+  private val UnsupportedDml =
+    "unsupported DML; expected DELETE FROM <t> [WHERE <cond>], " +
+      "INSERT INTO <t> <query>, UPDATE <t> SET ... [WHERE <cond>], " +
+      "MERGE INTO <t> USING (<query>) ON <key equalities>, " +
+      "COPY INTO <t> FROM '<path>' [FORMAT <fmt>], " +
+      "OPTIMIZE <t> [ZORDER BY (cols)], VACUUM <t>, " +
+      "CREATE TABLE <t> [PARTITIONED BY (...)] [BUCKETED BY (col, n)] " +
+      "[LOCATION '<path>'] AS <query>, " +
+      "CREATE TABLE <t> SHALLOW CLONE <src> LOCATION '<path>', " +
+      "DROP TABLE <t> [PURGE], " +
+      "ALTER TABLE <t> ADD CONSTRAINT <c> CHECK (<expr>) | " +
+      "DROP CONSTRAINT <c> | PARTITIONED BY (...) [BUCKETED BY (col, n)]"
 
-  /** Parse `MERGE INTO t [alias] USING ( <query> ) [alias] ON <cond>
-    * [WHEN MATCHED [AND c] THEN UPDATE SET * | DELETE]...
-    * [WHEN NOT MATCHED [AND c] THEN INSERT *]`.
-    * Returns (table, query, sourceAlias, keyColumns, clauses-in-order).
-    * The USING query scans with a paren-depth counter (regexes cannot
-    * balance nested parens); the ON condition must be a conjunction of
-    * same-name column equalities (`a.k = b.k`) — exactly the key-join the
-    * engine upsert implements. Action forms are `UPDATE SET *` /
-    * `INSERT *` / `DELETE` (the CDC-apply triad); clause conditions and
-    * order drive per-row routing in [[executeDml]]. Anything else is
-    * rejected loudly.
+  private def unsupported(got: String) =
+    new IllegalArgumentException(s"$UnsupportedDml; got $got")
+
+  /** Parse one DML statement. A MERGE with no WHEN clause (the grammar
+    * wants one) is the native upsert: it parses again with the
+    * `UPDATE SET *` / `INSERT *` pair that means. A statement the grammar
+    * rejects fails as unsupported DML, with the parser's message.
     */
-  private def parseMerge(sql: String)
-      : Option[(String, String, Option[String], Seq[String], Seq[MergeClause])] = {
-    val m = """(?is)^\s*MERGE\s+INTO\s+([A-Za-z_][\w]*)(?:\s+(?:AS\s+)?[A-Za-z_][\w]*)?\s+USING\s*\(""".r
-      .findFirstMatchIn(sql).getOrElse(return None)
-    val table = m.group(1)
-    var depth = 1
-    var i = m.end
-    while (i < sql.length && depth > 0) {
-      sql.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
+  private def parseDml(sql: String): LogicalPlan =
+    try {
+      try parse(sql)
+      catch {
+        case e: ParseException if e.getCondition == "MERGE_WITHOUT_WHEN" =>
+          parse(sql.trim.stripSuffix(";") +
+            "\nWHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
       }
-      i += 1
+    } catch {
+      case e: ParseException => throw unsupported(e.getMessage)
     }
-    if (depth != 0) return None
-    val query = sql.substring(m.end, i - 1).trim
-    val rest = sql.substring(i)
-    val onM = """(?is)^\s*(?:(?:AS\s+)?([A-Za-z_][\w]*)\s+)?ON\s+(.+)$""".r
-      .findFirstMatchIn(rest).getOrElse(return None)
-    val srcAlias = Option(onM.group(1)).filterNot(_.equalsIgnoreCase("on"))
-    val afterOn = onM.group(2)
-    val whenIdx = """(?i)\bWHEN\b""".r.findFirstMatchIn(afterOn).map(_.start)
-    val cond = whenIdx.fold(afterOn)(afterOn.substring(0, _)).trim.stripSuffix(";").trim
-    val actions = whenIdx.map(afterOn.substring(_)).getOrElse("").trim.stripSuffix(";").trim
-    // Scan the WHEN clauses in order and require them to tile the whole
-    // action text — an unparseable clause anywhere is loud, never skipped.
-    val clauseMs = MergeClauseRe.findAllMatchIn(actions).toList
-    val tiled = clauseMs.foldLeft(0) { (pos, m) =>
-      if (m.start != pos) -1000 else m.end
-    }
-    if (actions.nonEmpty && (clauseMs.isEmpty || tiled != actions.length))
-      throw new IllegalArgumentException(
-        "MERGE supports WHEN MATCHED [AND cond] THEN UPDATE SET * | DELETE " +
-          "and WHEN NOT MATCHED [AND cond] THEN INSERT * (engine merge semantics)")
-    val clauses = clauseMs.map { m =>
-      val matched = m.group(1) == null
-      val action = m.group(3).toUpperCase.takeWhile(!_.isWhitespace) match {
-        case "UPDATE" => "update"
-        case "INSERT" => "insert"
-        case "DELETE" => "delete"
-      }
-      if (matched && action == "insert")
-        throw new IllegalArgumentException("WHEN MATCHED cannot INSERT")
-      if (!matched && action != "insert")
-        throw new IllegalArgumentException("WHEN NOT MATCHED supports only INSERT *")
-      MergeClause(matched, Option(m.group(2)).map(_.trim), action)
-    }
-    require(clauses.count(c => c.matched && c.action == "update") <= 1 &&
-      clauses.count(c => c.matched && c.action == "delete") <= 1 &&
-      clauses.count(!_.matched) <= 1,
-      "MERGE allows at most one UPDATE, one DELETE, and one INSERT clause")
-    val keys = cond.split("""(?i)\s+AND\s+""").toSeq.map { eq =>
-      eq.split("=", 2).map(_.trim) match {
-        case Array(l, r) =>
-          val ln = l.substring(l.lastIndexOf('.') + 1)
-          val rn = r.substring(r.lastIndexOf('.') + 1)
-          if (ln.nonEmpty && ln == rn && ln.matches("[A-Za-z_][\\w]*")) ln
-          else throw new IllegalArgumentException(
-            s"MERGE ON must be same-name column equalities; got '$eq'")
-        case _ => throw new IllegalArgumentException(
-          s"MERGE ON must be same-name column equalities; got '$eq'")
-      }
-    }
-    Some((table, query, srcAlias, keys, clauses))
+
+  /** The one-part lake table name a parsed statement targets. */
+  private def target(p: LogicalPlan): String = (p match {
+    case r: UnresolvedRelation => r.multipartIdentifier
+    case r: UnresolvedTable => r.multipartIdentifier
+    case r: UnresolvedTableOrView => r.multipartIdentifier
+    case r: UnresolvedIdentifier => r.nameParts
+    case other => throw unsupported(s"a ${other.nodeName} table reference")
+  }) match {
+    case Seq(name) => name
+    case parts => throw unsupported(s"the multi-part name ${parts.mkString(".")}")
   }
 
-  /** Split a SET list on top-level commas (commas inside parens or quotes
-    * belong to the expressions).
-    */
+  /** A one-part column reference's name. */
+  private def columnName(e: Expression): Option[String] = e match {
+    case UnresolvedAttribute(Seq(c)) => Some(c)
+    case _ => None
+  }
+
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(a, b) => conjuncts(a) ++ conjuncts(b)
+    case other => Seq(other)
+  }
+
   // ------------------------------------------------------------------
   // Materialized views — SQL-managed incremental aggregates.
   // ------------------------------------------------------------------
@@ -714,39 +693,43 @@ final class Database(val spark: SparkSession) {
   /** Registered join MVs: view name → entry. */
   private val mvJoins = TrieMap[String, MvJoinEntry]()
 
-  private val CreateMvRe =
-    """(?is)^\s*CREATE\s+MATERIALIZED\s+VIEW\s+([A-Za-z_][\w]*)\s+AS\s+(.+?)\s*;?\s*$""".r
-  private val DropMvRe =
-    """(?is)^\s*DROP\s+MATERIALIZED\s+VIEW\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
-  private val RefreshMvRe =
-    """(?is)^\s*REFRESH\s+MATERIALIZED\s+VIEW\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
-  private val MvQueryRe =
-    """(?is)^\s*SELECT\s+(.+?)\s+FROM\s+([A-Za-z_][\w]*)\s+GROUP\s+BY\s+(.+?)\s*$""".r
-  private val MvJoinQueryRe =
-    """(?is)^\s*SELECT\s+(.+?)\s+FROM\s+([A-Za-z_][\w]*)\s+JOIN\s+([A-Za-z_][\w]*)\s+USING\s*\(\s*(.+?)\s*\)\s*$""".r
-  private val MvAggRe =
-    """(?i)^(COUNT|SUM|MIN|MAX|AVG)\s*\(\s*(\*|[A-Za-z_][\w]*)\s*\)\s+AS\s+([A-Za-z_][\w]*)$""".r
-
-  /** Parse the supported MV shape — `SELECT <group cols + aggregates> FROM
-    * <registered table> GROUP BY <group cols>` with COUNT(*) / SUM / MIN /
-    * MAX / AVG aggregates, every aggregate aliased. Anything else is
-    * rejected loudly (the incremental-maintenance contract is exactly this
-    * shape). AVG decomposes into a hidden exact sum + non-null count pair
-    * (both insert-maintainable; AVG itself is not) and is re-derived at
-    * publish time.
+  /** Register an MV from its defining query text — one path for CREATE
+    * and for reload, where `state` is the persisted state (None builds it
+    * from the bases). The parsed shape picks the kind:
+    *
+    *  - `SELECT <group cols + aggregates> FROM <table> GROUP BY <group
+    *    cols>` with COUNT(*) / SUM / MIN / MAX / AVG aggregates, every
+    *    aggregate aliased. AVG decomposes into a hidden exact sum +
+    *    non-null count pair (both insert-maintainable; AVG itself is not)
+    *    and is re-derived at publish time.
+    *  - `SELECT <*|plain cols> FROM <a> JOIN <b> USING (<keys>)` over two
+    *    distinct registered tables. The USING form is the supported one BY
+    *    DESIGN: it carries the one-name-per-key contract
+    *    [[graft.operators.MaterializedJoin]] maintains under (an ON a.x =
+    *    b.y equi-join with differently-named keys is the same view over a
+    *    renamed registration).
+    *
+    * Anything else is rejected loudly (the incremental-maintenance contract
+    * is exactly these shapes).
     */
-  private def parseMvQuery(q: String): (String, Seq[String],
-      Seq[graft.operators.MaterializedAgg.AggCol], DataFrame => DataFrame) = {
+  private def putMv(name: String, query: String, state: Option[DataFrame]): Unit =
+    parse(query) match {
+      case Project(items, Join(a: UnresolvedRelation, b: UnresolvedRelation,
+          UsingJoin(Inner, keys), None, _)) =>
+        putMvJoin(name, query, items, target(a), target(b), keys, state)
+      case Aggregate(groups, items, base: UnresolvedRelation, _) =>
+        putMvAgg(name, query, groups, items, target(base), state)
+      case _ => throw new IllegalArgumentException(
+        "materialized view query must be SELECT <cols+aggs> FROM <table> GROUP BY <cols>")
+    }
+
+  private def putMvAgg(name: String, query: String, groups: Seq[Expression],
+      items: Seq[Expression], base: String, state: Option[DataFrame]): Unit = {
     import graft.operators.MaterializedAgg._
-    val m = MvQueryRe.findFirstMatchIn(q).getOrElse(
-      throw new IllegalArgumentException(
-        "materialized view query must be SELECT <cols+aggs> FROM <table> GROUP BY <cols>"))
-    val base = m.group(2)
     val baseSchema = tables.getOrElse(base,
       throw new IllegalArgumentException(s"unknown lake table '$base'")).tableSchema
-    val groupCols = splitAssignments(m.group(3))
-    require(groupCols.forall(_.matches("[A-Za-z_][\\w]*")),
-      "GROUP BY must list plain columns")
+    val groupCols = groups.map(g => columnName(g).getOrElse(
+      throw new IllegalArgumentException("GROUP BY must list plain columns")))
     def exactSum(arg: String, alias: String): AggCol =
       // Decimal accumulation for floating measures: associative, so the
       // incrementally merged total equals the one-shot aggregate.
@@ -757,66 +740,66 @@ final class Database(val spark: SparkSession) {
       }
     val derived = scala.collection.mutable.ListBuffer[(String, Column)]()
     val hidden = scala.collection.mutable.ListBuffer[String]()
-    val aggs = splitAssignments(m.group(1)).flatMap {
-      case item if groupCols.contains(item.trim) => None // group col in SELECT
-      case MvAggRe(fn, arg, alias) => fn.toUpperCase match {
-        case "COUNT" =>
-          require(arg == "*", "only COUNT(*) is maintainable incrementally")
-          Seq(count(alias))
-        case "SUM" => Seq(exactSum(arg, alias))
-        case "MIN" => Seq(min(arg, alias))
-        case "MAX" => Seq(max(arg, alias))
-        case "AVG" =>
-          import org.apache.spark.sql.functions.{col, lit, nullif}
-          require(arg != "*", "AVG needs a column")
-          val (s, c) = (s"__${alias}_sum", s"__${alias}_cnt")
-          hidden ++= Seq(s, c)
-          derived += alias -> (col(s).cast("double") / nullif(col(c), lit(0L)))
-          Seq(exactSum(arg, s), countNonNull(arg, c))
-      }
-      case other => throw new IllegalArgumentException(
-        s"unsupported MV select item '$other' (COUNT(*)/SUM/MIN/MAX/AVG AS alias, " +
-          "or a GROUP BY column)")
+    val aggs = items.flatMap {
+      case item if columnName(item).exists(groupCols.contains) => None // group col in SELECT
+      case Alias(f: UnresolvedFunction, alias) if !f.isDistinct && f.filter.isEmpty &&
+          f.nameParts.size == 1 =>
+        // COUNT(*) parses as COUNT(1).
+        (f.nameParts.head.toUpperCase, f.arguments, f.arguments.flatMap(columnName)) match {
+          case ("COUNT", args, _) =>
+            require(args == Seq(Literal(1)), "only COUNT(*) is maintainable incrementally")
+            Seq(count(alias))
+          case ("SUM", _, Seq(arg)) => Seq(exactSum(arg, alias))
+          case ("MIN", _, Seq(arg)) => Seq(min(arg, alias))
+          case ("MAX", _, Seq(arg)) => Seq(max(arg, alias))
+          case ("AVG", _, Seq(arg)) =>
+            import org.apache.spark.sql.functions.{col, lit, nullif}
+            val (s, c) = (s"__${alias}_sum", s"__${alias}_cnt")
+            hidden ++= Seq(s, c)
+            derived += alias -> (col(s).cast("double") / nullif(col(c), lit(0L)))
+            Seq(exactSum(arg, s), countNonNull(arg, c))
+          case _ => throw unsupportedMvItem(f.sql)
+        }
+      case other => throw unsupportedMvItem(other.sql)
     }
     require(aggs.nonEmpty, "materialized view needs at least one aggregate")
     val derive: DataFrame => DataFrame = df =>
       derived.foldLeft(df) { case (d, (a, c)) => d.withColumn(a, c) }
         .drop(hidden.toSeq: _*)
-    (base, groupCols, aggs, derive)
+    val mag = state.fold(graft.operators.MaterializedAgg.build(
+      tables(base).toDF, groupCols, aggs))(
+      graft.operators.MaterializedAgg.fromState(_, groupCols, aggs))
+    mviews.put(name, MvEntry(base, query, mag, derive))
+    publishMv(name)
   }
+
+  private def unsupportedMvItem(item: String) = new IllegalArgumentException(
+    s"unsupported MV select item '$item' (COUNT(*)/SUM/MIN/MAX/AVG AS alias, " +
+      "or a GROUP BY column)")
 
   private def publishMv(name: String): Unit =
     mviews.get(name).foreach(e =>
       e.derive(e.mag.state).createOrReplaceTempView(name))
 
-  /** Parse the supported join-MV shape — `SELECT <*|plain cols> FROM <a>
-    * JOIN <b> USING (<keys>)` over two distinct registered tables. The
-    * USING form is the supported one BY DESIGN: it carries the one-name-
-    * per-key contract [[graft.operators.MaterializedJoin]] maintains under
-    * (an ON a.x = b.y equi-join with differently-named keys is the same
-    * view over a renamed registration). Returns (baseA, baseB, keys,
-    * publish projection).
-    */
-  private def parseMvJoinQuery(q: String): (String, String, Seq[String],
-      DataFrame => DataFrame) = {
-    val m = MvJoinQueryRe.findFirstMatchIn(q).get
-    val (items, a, b) = (m.group(1).trim, m.group(2), m.group(3))
+  private def putMvJoin(name: String, query: String, items: Seq[Expression],
+      a: String, b: String, keys: Seq[String], state: Option[DataFrame]): Unit = {
     require(a != b, "self-join materialized views are not supported")
     for (t <- Seq(a, b)) require(tables.contains(t), s"unknown lake table '$t'")
-    val keys = splitAssignments(m.group(4))
-    require(keys.nonEmpty && keys.forall(_.matches("[A-Za-z_][\\w]*")),
-      "USING must list plain key columns")
-    val publish: DataFrame => DataFrame =
-      if (items == "*") identity
-      else {
+    val publish: DataFrame => DataFrame = items match {
+      case Seq(UnresolvedStar(None)) => identity
+      case _ =>
         import org.apache.spark.sql.functions.col
-        val cols = splitAssignments(items)
-        require(cols.forall(_.matches("[A-Za-z_][\\w]*")),
-          "join MV SELECT items must be plain columns (or *) — aggregates " +
-            "belong in an aggregate MV over this view's bases")
+        val cols = items.map(i => columnName(i).getOrElse(
+          throw new IllegalArgumentException(
+            "join MV SELECT items must be plain columns (or *) — aggregates " +
+              "belong in an aggregate MV over this view's bases")))
         df => df.select(cols.map(col): _*)
-      }
-    (a, b, keys, publish)
+    }
+    val mj = state.fold(graft.operators.MaterializedJoin.build(
+      tables(a).toDF, tables(b).toDF, keys, keys, keys))(
+      graft.operators.MaterializedJoin.fromState(_, keys, keys, keys))
+    mvJoins.put(name, MvJoinEntry(a, b, query, keys, mj, publish))
+    publishMvJoin(name)
   }
 
   private def publishMvJoin(name: String): Unit =
@@ -1093,52 +1076,31 @@ final class Database(val spark: SparkSession) {
       val name = node.get("name").asText()
       val query = node.get("query").asText()
       require(!tables.contains(name), s"name '$name' already in use by a table")
-      val state = spark.read.parquet(d.resolve("state").toString)
-      if (node.has("join") && node.get("join").asBoolean()) {
-        val (a, b, keys, publish) = parseMvJoinQuery(query)
-        val mj = graft.operators.MaterializedJoin.fromState(state, keys, keys, keys)
-        mvJoins.put(name, MvJoinEntry(a, b, query, keys, mj, publish))
-        publishMvJoin(name)
-      } else {
-        val (base, groupCols, aggs, derive) = parseMvQuery(query)
-        val mag = graft.operators.MaterializedAgg.fromState(state, groupCols, aggs)
-        mviews.put(name, MvEntry(base, query, mag, derive))
-        publishMv(name)
-      }
+      putMv(name, query, Some(spark.read.parquet(d.resolve("state").toString)))
     }
     dirs.size
   }
 
-  private def splitAssignments(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ListBuffer[String]()
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    s.foreach { ch =>
-      if (quote != 0) { cur += ch; if (ch == quote) quote = 0 }
-      else ch match {
-        case '\'' | '"' => quote = ch; cur += ch
-        case '(' => depth += 1; cur += ch
-        case ')' => depth -= 1; cur += ch
-        case ',' if depth == 0 => out += cur.toString; cur.clear()
-        case _ => cur += ch
-      }
-    }
-    if (cur.nonEmpty) out += cur.toString
-    out.map(_.trim).filter(_.nonEmpty).toSeq
-  }
-
   /** SQL DML over the catalog — the write statements Spark temp views
     * cannot execute (`spark.sql("DELETE ...")` fails on a view; lakehouse
-    * SQL needs them). Two statements route to ENGINE mutations:
+    * SQL needs them). Spark's own parser reads the standard statements
+    * (DELETE, UPDATE, INSERT, MERGE, TRUNCATE, ANALYZE, DROP TABLE, CTAS,
+    * CREATE MATERIALIZED VIEW, and ALTER TABLE's RENAME TO, ADD / DROP /
+    * RENAME COLUMN and ADD / DROP CONSTRAINT), so conditions and SET values
+    * are Catalyst expressions, never split text. The lake verbs the grammar
+    * does not know — COPY INTO, OPTIMIZE [WHERE | ZORDER BY], VACUUM,
+    * RESTORE, SHALLOW CLONE, RENAME TABLE a TO b, ALTER TABLE PARTITIONED /
+    * BUCKETED BY, DROP / REFRESH MATERIALIZED VIEW and a `BEGIN; ...;
+    * COMMIT` script — are read by a small regex dispatch first. The
+    * mutations route to the engine:
     *
     *  - `DELETE FROM t [WHERE cond]` → [[LakeDataset.deleteWhere]] — the
     *    predicate prunes to catalog-overlapping cells; SQL NULL semantics;
     *    no WHERE deletes every row. Returns cells touched.
     *  - `INSERT INTO t <query>` → [[LakeDataset.insert]] of the query's
-    *    result (any SELECT/VALUES/WITH), matched to the table's columns BY
-    *    POSITION (arity-checked) like SQL INSERT without a column list.
-    *    Returns 1.
+    *    result (any SELECT/VALUES/WITH/TABLE), matched to the table's
+    *    columns BY POSITION (arity-checked) like SQL INSERT without a
+    *    column list. Returns 1.
     *  - `UPDATE t SET a = e1, b = e2 [WHERE cond]` →
     *    [[LakeDataset.updateWhere]] — RHS expressions see the OLD row,
     *    pruned to catalog-overlapping cells; partition/bucket columns are
@@ -1155,179 +1117,16 @@ final class Database(val spark: SparkSession) {
     * the supported grammar (never silently executes as a read).
     */
   def executeDml(sql: String): Long = {
-    import org.apache.spark.sql.functions.{col, expr}
+    import org.apache.spark.sql.functions.expr
     // A `BEGIN; ...; COMMIT` script is the atomic multi-statement form.
     if (TxScriptRe.findFirstIn(sql).isDefined) return executeTransaction(sql)
-    def ds(name: String): LakeDataset = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"unknown lake table '$name'"))
-    parseMerge(sql) match {
-      case Some((t, query, srcAlias, keys, clauses)) =>
-        // MERGE INTO → engine upsert: per-column incoming-wins coalesce on
-        // the key join; source columns missing from the table evolve the
-        // schema. Table columns ABSENT from the source become typed NULLs —
-        // engine coalesce then preserves the existing value on matched rows
-        // (SQL's "UPDATE only what SET names"), and the migration probe
-        // routes rows whose delta cell value differs from their current
-        // cell through the global merge, so a source without the partition
-        // column cannot duplicate keys across cells.
-        val target = ds(t)
-        val tgtFields = target.tableSchema.fields
-        val q = spark.sql(query)
-        val srcCols = q.columns.toSet
-        val casted = q.select(q.columns.map { c =>
-          tgtFields.find(_.name == c) match {
-            case Some(f) => col(s"`$c`").cast(f.dataType).as(c)
-            case None => col(s"`$c`")
-          }
-        }.toSeq: _*)
-        val filled0 = tgtFields.filterNot(f => srcCols.contains(f.name))
-          .foldLeft(casted)((d, f) =>
-            d.withColumn(f.name, org.apache.spark.sql.functions.lit(null).cast(f.dataType)))
-        // Clause conditions reference SOURCE columns — aliasing the frame
-        // with the statement's USING alias makes both `s.op` and bare `op`
-        // resolve (a target-column reference fails analysis loudly).
-        val filled = srcAlias.fold(filled0)(filled0.alias)
-        // ANSI MERGE cardinality check (shared with the engine upsert) —
-        // probed ONCE here on the filled source; the upserts below pass
-        // `checkKeys = false` so the batch is not aggregated twice.
-        LakeDataset.requireUniqueSourceKeys(spark, filled, keys, "MERGE source")
-        // Pin touched groups BEFORE mutating (targeted MV maintenance).
-        val preTouched = touchedGroupsPreKeys(t, filled, keys)
-        val matchedClauses = clauses.filter(_.matched)
-        val insertClause = clauses.find(!_.matched)
-        val unconditionalUpsert = clauses.isEmpty || (
-          matchedClauses.forall(c => c.action == "update" && c.cond.isEmpty) &&
-            matchedClauses.nonEmpty &&
-            insertClause.exists(_.cond.isEmpty))
-        if (unconditionalUpsert) {
-          // Fast path — UPDATE+INSERT with no conditions IS the engine's
-          // native merge: one upsert, no extra key joins.
-          target.upsert(filled, keys, checkKeys = false)
-        } else {
-          // Per-row clause routing, SQL's first-match-in-statement-order
-          // semantics. Plain (non-null-safe) join semantics match SQL's ON:
-          // a NULL key never matches, so it routes as NOT MATCHED.
-          import org.apache.spark.sql.functions.{lit, when}
-          val existingKeys = target.toDF.select(keys.map(col): _*)
-          val matchedSrc = filled.join(existingKeys, keys.toSeq, "left_semi")
-          val unmatchedSrc = filled.join(existingKeys, keys.toSeq, "left_anti")
-          val act = matchedClauses.foldLeft(Option.empty[Column]) { (acc, cl) =>
-            val w = cl.cond.map(expr).getOrElse(lit(true))
-            val v = lit(cl.action)
-            Some(acc.fold(when(w, v))(_.when(w, v)))
-          }.getOrElse(lit(null).cast("string"))
-          val routed = matchedSrc.withColumn("__merge_act", act)
-          val updRows = routed.filter(col("__merge_act") === "update")
-            .drop("__merge_act")
-          val insRows = insertClause.map(cl =>
-            cl.cond.fold(unmatchedSrc)(c => unmatchedSrc.filter(expr(c))))
-          val upserts = (if (matchedClauses.exists(_.action == "update"))
-            Some(updRows) else None, insRows) match {
-            case (Some(u), Some(i)) => Some(u.unionByName(i))
-            case (u, i) => u.orElse(i)
-          }
-          // Routing reads the PRE-state: pin the (drift-sized) delete key
-          // set eagerly before any mutation so the upsert cannot shift it.
-          val delKeys =
-            if (matchedClauses.exists(_.action == "delete"))
-              Some(routed.filter(col("__merge_act") === "delete")
-                .select(keys.map(col): _*).localCheckpoint(true))
-            else None
-          upserts.foreach(target.upsert(_, keys, checkKeys = false))
-          delKeys.foreach(target.delete(_, keys))
-        }
-        refresh(t)
-        preTouched.fold(maintainRebuild(t))(maintainTouched(t, _))
-        return 1L
-      case None =>
-    }
     sql match {
-      case DeleteRe(t, cond) =>
-        val pre = touchedGroupsPre(t, expr(cond), Nil)
-        val n = ds(t).deleteWhere(expr(cond))
-        refresh(t); pre.fold(maintainRebuild(t))(maintainTouched(t, _)); n.toLong
-      case UpdateRe(t, setList, condOrNull) =>
-        val assignments = splitAssignments(setList).map { a =>
-          a.split("=", 2) match {
-            case Array(name, rhs) if name.trim.matches("[A-Za-z_][\\w]*") =>
-              name.trim -> expr(rhs.trim)
-            case _ => throw new IllegalArgumentException(
-              s"malformed SET assignment: '$a' (expected <column> = <expression>)")
-          }
-        }
-        val cond = Option(condOrNull).map(expr)
-          .getOrElse(org.apache.spark.sql.functions.lit(true))
-        val pre = touchedGroupsPre(t, cond, assignments)
-        val n = ds(t).updateWhere(cond, assignments)
-        refresh(t); pre.fold(maintainRebuild(t))(maintainTouched(t, _)); n.toLong
-      case DeleteAllRe(t) =>
-        val n = ds(t).deleteWhere(org.apache.spark.sql.functions.lit(true))
-        refresh(t); maintainRebuild(t); n.toLong
-      case TruncateRe(t) =>
-        val n = ds(t).deleteWhere(org.apache.spark.sql.functions.lit(true))
-        refresh(t); maintainRebuild(t); n.toLong
-      case RenameTableRe(alterName, renameName, to) =>
-        // Catalog-only rename: the engine handle, feed registration, and
-        // every dependent MV's base pointer move together; zero data jobs.
-        val from = Option(alterName).getOrElse(renameName)
-        val d = tables.getOrElse(from,
-          throw new IllegalArgumentException(s"unknown lake table '$from'"))
-        require(!tables.contains(to) && !mviews.contains(to) &&
-          !mvJoins.contains(to), s"name '$to' already in use")
-        tables.remove(from); tables.put(to, d)
-        feeds.remove(from).foreach(feeds.put(to, _))
-        mviews.foreach { case (mv, e) if e.base == from =>
-          // The defining query is the MV's durable form — rewrite its FROM
-          // so a later save/load resolves the renamed base.
-          mviews.put(mv, e.copy(base = to, query = e.query.replaceAll(
-            s"(?i)\\bFROM\\s+$from\\b", s"FROM $to")))
-        case _ => ()
-        }
-        mvJoins.foreach { case (mv, e) if e.baseA == from || e.baseB == from =>
-          // Either side may be the renamed table: rewrite both the FROM and
-          // the JOIN position in the durable query text.
-          val q2 = e.query
-            .replaceAll(s"(?i)\\bFROM\\s+$from\\b", s"FROM $to")
-            .replaceAll(s"(?i)\\bJOIN\\s+$from\\b", s"JOIN $to")
-          mvJoins.put(mv, e.copy(
-            baseA = if (e.baseA == from) to else e.baseA,
-            baseB = if (e.baseB == from) to else e.baseB,
-            query = q2))
-        case _ => ()
-        }
-        spark.catalog.dropTempView(from)
-        refresh(to); 1L
-      case InsertRe(t, query) =>
-        val target = ds(t)
-        val tgt = target.tableSchema
-        val q = spark.sql(query)
-        require(q.columns.length == tgt.fields.length,
-          s"INSERT arity mismatch: table '$t' has ${tgt.fields.length} columns, " +
-            s"query produced ${q.columns.length}")
-        // Positional alignment WITH the target's column types — SQL INSERT
-        // casts values to the column type (a TIMESTAMP literal lands in a
-        // TIMESTAMP_NTZ column, an int in a bigint).
-        val aligned = q.select(q.columns.zip(tgt.fields).map { case (from, f) =>
-          col(s"`$from`").cast(f.dataType).as(f.name)
-        }.toSeq: _*)
-        target.insert(aligned)
-        refresh(t); maintainInsert(t, aligned); 1L
       case CopyRe(t, path, fmtOrNull) =>
         // COPY INTO: bulk file ingest — read with the given format
         // (default parquet) and append through the same positional
         // type-cast alignment as INSERT.
-        val target = ds(t)
-        val tgt = target.tableSchema
         val fmt = Option(fmtOrNull).map(_.toLowerCase).getOrElse("parquet")
-        val q = spark.read.format(fmt).load(path)
-        require(q.columns.length == tgt.fields.length,
-          s"COPY arity mismatch: table '$t' has ${tgt.fields.length} columns, " +
-            s"file has ${q.columns.length}")
-        val aligned = q.select(q.columns.zip(tgt.fields).map { case (from, f) =>
-          col(s"`$from`").cast(f.dataType).as(f.name)
-        }.toSeq: _*)
-        target.insert(aligned)
-        refresh(t); maintainInsert(t, aligned); 1L
+        append(t, "COPY", "file has")(spark.read.format(fmt).load(path))
       case OptimizeZorderRe(t, colsList) =>
         // OPTIMIZE t ZORDER BY (c1, c2): re-layout the table under a
         // Z-order clustering — rows bin by the interleaved quantile-rank
@@ -1386,62 +1185,21 @@ final class Database(val spark: SparkSession) {
         require(!tables.contains(t), s"table '$t' already exists")
         register(t, ds(src).shallowCloneTo(loc))
         1L
-      case CreateTableAsRe(t, partsOrNull, bColOrNull, bNOrNull, locOrNull, query) =>
-        // CTAS: run the query, lay the result out as a lake table
-        // (optional partition/bucket axes and storage root), register it.
-        require(!tables.contains(t), s"table '$t' already exists")
-        val pCols = Option(partsOrNull)
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-        val bCols = Option(bColOrNull).toSeq
-        val n = Option(bNOrNull).map(_.toInt).getOrElse(5)
-        val spec = Option(locOrNull).map(p => graft.model.StorageSpec(p))
-        val created = LakeDataset.fromDataFrame(spark, executeSql(query),
-          pCols, bCols, n, spec)
-        if (spec.isDefined) created.toStorage()
-        register(t, created)
-        1L
-      case DropTableRe(t, purgeOrNull) =>
-        val dropped = tables.remove(t).getOrElse(
-          throw new IllegalArgumentException(s"unknown lake table '$t'"))
-        feeds.remove(t)
-        spark.catalog.dropTempView(t)
-        // Dependent materialized views drop with their base (a stale MV
-        // over a vanished table could only serve wrong answers).
-        mviews.filter(_._2.base == t).keys.foreach { mv =>
-          mviews.remove(mv); spark.catalog.dropTempView(mv)
-        }
-        mvJoins.filter { case (_, e) => e.baseA == t || e.baseB == t }
-          .keys.foreach { mv =>
-            mvJoins.remove(mv); spark.catalog.dropTempView(mv)
-          }
-        // PURGE additionally deletes the storage root — without it the
-        // files survive (an unregister, like dropping an external table).
-        if (purgeOrNull != null)
-          dropped.storage.foreach(s =>
-            LakeDataset.deleteRecursively(java.nio.file.Paths.get(s.root)))
-        1L
-      case CreateMvRe(name, query) =>
-        // CREATE MATERIALIZED VIEW: build the state once, then every SQL
-        // mutation maintains it incrementally — aggregate MVs fold inserts
-        // at O(batch)+O(groups) and refresh touched groups on predicate
-        // mutations; join MVs (SELECT ... FROM a JOIN b USING (k)) append
-        // insert batches' join output and recompute touched JOIN KEYS.
-        require(!tables.contains(name) && !mviews.contains(name) &&
-          !mvJoins.contains(name), s"name '$name' already in use")
-        if (MvJoinQueryRe.findFirstMatchIn(query).isDefined) {
-          val (a, b, keys, publish) = parseMvJoinQuery(query)
-          val mj = graft.operators.MaterializedJoin.build(
-            tables(a).toDF, tables(b).toDF, keys, keys, keys)
-          mvJoins.put(name, MvJoinEntry(a, b, query, keys, mj, publish))
-          publishMvJoin(name)
-        } else {
-          val (base, groupCols, aggs, derive) = parseMvQuery(query)
-          val mag = graft.operators.MaterializedAgg.build(
-            tables(base).toDF, groupCols, aggs)
-          mviews.put(name, MvEntry(base, query, mag, derive))
-          publishMv(name)
-        }
-        1L
+      case RenameTableRe(from, to) => renameTable(from, to)
+      case AlterLayoutRe(t, clauses, _, _, _) =>
+        // Layout DDL: rebuild under the new partition/bucket layout (one
+        // table pass) and swap the catalog registration — readers of the
+        // view see the new layout on their next query.
+        val old = ds(t)
+        val newParts = PartitionedBy.r.findFirstMatchIn(clauses)
+          .map(_.group(1).split(",").map(_.trim).toSeq).getOrElse(Nil)
+        val (newBuckets, n) = BucketedBy.r.findFirstMatchIn(clauses)
+          .map(m => (Seq(m.group(1)), m.group(2).toInt))
+          .getOrElse((Nil, 5))
+        val schemaNames = old.tableSchema.fieldNames.toSet
+        tables.put(t, old.relayout(newParts, newBuckets, n,
+          old.bloomCols.filter(schemaNames.contains)))
+        refresh(t); 1L
       case DropMvRe(name) =>
         require(mviews.remove(name).isDefined || mvJoins.remove(name).isDefined,
           s"unknown materialized view '$name'")
@@ -1463,66 +1221,309 @@ final class Database(val spark: SparkSession) {
             publishMvJoin(name)
         }
         1L
-      case AnalyzeRe(t) =>
-        // ANALYZE TABLE t COMPUTE STATISTICS: restore the catalog's
-        // tightness vouch by recomputing stats for untight cells only —
-        // a read pass, never a rewrite (that's OPTIMIZE). Returns cells
-        // analyzed.
-        ds(t).analyze().toLong
-      case AddColumnRe(t, c, ddlType) =>
-        // Plan-level schema evolution: existing rows read NULL, no data
-        // pass; the refreshed view serves the new schema immediately.
-        ds(t).addColumn(c, ddlType)
-        refresh(t); 1L
-      case DropColumnRe(t, c) =>
-        ds(t).dropColumn(c)
-        refresh(t); 1L
-      case RenameColumnRe(t, from, to) =>
-        ds(t).renameColumn(from, to)
-        refresh(t); 1L
-      case AddConstraintRe(t, name, e) =>
-        // ALTER TABLE t ADD CONSTRAINT c CHECK (expr): existing rows must
-        // already satisfy it; afterwards every ingest enforces it against
-        // the incoming batch (write-boundary data contract).
-        ds(t).addCheck(name, e.trim)
-        1L
-      case DropConstraintRe(t, name) =>
-        if (ds(t).dropCheck(name)) 1L else 0L
-      case AlterRe(t, clauses) =>
-        // Layout DDL: rebuild under the new partition/bucket layout (one
-        // table pass) and swap the catalog registration — readers of the
-        // view see the new layout on their next query.
-        val old = ds(t)
-        val partsM = """(?is)PARTITIONED\s+BY\s*\(\s*([^)]+?)\s*\)""".r
-          .findFirstMatchIn(clauses)
-        val bucketM = """(?is)BUCKETED\s+BY\s*\(\s*([A-Za-z_][\w]*)\s*,\s*(\d+)\s*\)""".r
-          .findFirstMatchIn(clauses)
-        val residue = """(?is)(PARTITIONED\s+BY\s*\([^)]*\)|BUCKETED\s+BY\s*\([^)]*\))""".r
-          .replaceAllIn(clauses, "").trim
-        if ((partsM.isEmpty && bucketM.isEmpty) || residue.nonEmpty)
-          throw new IllegalArgumentException(
-            "ALTER TABLE supports PARTITIONED BY (cols) and/or BUCKETED BY (col, n)")
-        val newParts = partsM.map(_.group(1).split(",").map(_.trim).toSeq)
-          .getOrElse(Nil)
-        val (newBuckets, n) = bucketM
-          .map(m => (Seq(m.group(1)), m.group(2).toInt))
-          .getOrElse((Nil, 5))
-        val schemaNames = old.tableSchema.fieldNames.toSet
-        tables.put(t, old.relayout(newParts, newBuckets, n,
-          old.bloomCols.filter(schemaNames.contains)))
-        refresh(t); 1L
-      case _ => throw new IllegalArgumentException(
-        "unsupported DML; expected DELETE FROM <t> [WHERE <cond>], " +
-          "INSERT INTO <t> <query>, UPDATE <t> SET ... [WHERE <cond>], " +
-          "MERGE INTO <t> USING (<query>) ON <key equalities>, " +
-          "COPY INTO <t> FROM '<path>' [FORMAT <fmt>], " +
-          "OPTIMIZE <t> [ZORDER BY (cols)], VACUUM <t>, " +
-          "CREATE TABLE <t> [PARTITIONED BY (...)] [BUCKETED BY (col, n)] " +
-          "[LOCATION '<path>'] AS <query>, " +
-          "CREATE TABLE <t> SHALLOW CLONE <src> LOCATION '<path>', " +
-          "DROP TABLE <t> [PURGE], " +
-          "ALTER TABLE <t> ADD CONSTRAINT <c> CHECK (<expr>) | " +
-          "DROP CONSTRAINT <c> | PARTITIONED BY (...) [BUCKETED BY (col, n)]")
+      case CtasBucketRe(head, bCol, n, rest) => parseDml(head + rest) match {
+        case c: CreateTableAsSelect => createTable(c, Seq(bCol), n.toInt)
+        case other => throw unsupported(other.nodeName)
+      }
+      case _ => executePlan(parseDml(sql))
     }
+  }
+
+  /** Route one parsed statement. Forms the grammar accepts but the engine
+    * does not serve (an INSERT column list or OVERWRITE, ANALYZE NOSCAN, a
+    * TRUNCATE partition, DROP TABLE IF EXISTS, ...) fall through to the
+    * unsupported-DML refusal.
+    */
+  private def executePlan(plan: LogicalPlan): Long = plan match {
+    case DeleteFromTable(t, Literal.TrueLiteral) => truncate(target(t))
+    case DeleteFromTable(t, cond) =>
+      val (name, c) = (target(t), Bridge.column(cond))
+      val pre = touchedGroupsPre(name, c, Nil)
+      val n = ds(name).deleteWhere(c)
+      refresh(name); pre.fold(maintainRebuild(name))(maintainTouched(name, _)); n.toLong
+    case UpdateTable(t, assigns, cond) =>
+      val name = target(t)
+      val assignments = assigns.map { case Assignment(k, v) =>
+        columnName(k).getOrElse(throw new IllegalArgumentException(
+          s"malformed SET assignment: '${k.sql}' (expected <column> = <expression>)")) ->
+          Bridge.column(v)
+      }
+      val c = cond.fold(org.apache.spark.sql.functions.lit(true))(Bridge.column)
+      val pre = touchedGroupsPre(name, c, assignments)
+      val n = ds(name).updateWhere(c, assignments)
+      refresh(name); pre.fold(maintainRebuild(name))(maintainTouched(name, _)); n.toLong
+    case TruncateTable(t) => truncate(target(t))
+    case i: InsertIntoStatement if i.partitionSpec.isEmpty && i.userSpecifiedCols.isEmpty &&
+        !i.overwrite && !i.ifPartitionNotExists && !i.byName =>
+      append(target(i.table), "INSERT", "query produced")(planDf(i.query))
+    case m: MergeIntoTable => merge(m)
+    case RenameTable(from, Seq(to), false) => renameTable(target(from), to)
+    case AnalyzeTable(t, spec, false) if spec.isEmpty =>
+      // ANALYZE TABLE t COMPUTE STATISTICS: restore the catalog's
+      // tightness vouch by recomputing stats for untight cells only —
+      // a read pass, never a rewrite (that's OPTIMIZE). Returns cells
+      // analyzed.
+      ds(target(t)).analyze().toLong
+    case DropTable(t, false, purge) => dropTable(target(t), purge)
+    // Column DDL is plan-level schema evolution: no data pass (an added
+    // column reads NULL), and the refreshed view serves the new schema.
+    case AddColumns(t, Seq(c)) if c.path.isEmpty && c.nullable && c.comment.isEmpty &&
+        c.position.isEmpty && c.default.isEmpty =>
+      alterColumns(t)(_.addColumn(c.colName, c.dataType.sql))
+    case DropColumns(t, Seq(c), false) if c.name.size == 1 =>
+      alterColumns(t)(_.dropColumn(c.name.head))
+    case RenameColumn(t, c, to) if c.name.size == 1 =>
+      alterColumns(t)(_.renameColumn(c.name.head, to))
+    case AddCheckConstraint(t, check) if check.userProvidedName != null &&
+        check.userProvidedCharacteristic == ConstraintCharacteristic.empty =>
+      // ALTER TABLE t ADD CONSTRAINT c CHECK (expr): existing rows must
+      // already satisfy it; afterwards every ingest enforces it against
+      // the incoming batch (write-boundary data contract). The table keeps
+      // the predicate's own text.
+      ds(target(t.collectLeaves().head)).addCheck(check.userProvidedName, check.condition.trim)
+      1L
+    case DropConstraint(t, name, _, _) => if (ds(target(t)).dropCheck(name)) 1L else 0L
+    case c: CreateTableAsSelect => createTable(c, Nil, 5)
+    case c: CreateMaterializedViewAsSelect if c.columns.isEmpty && c.partitioning.isEmpty =>
+      // CREATE MATERIALIZED VIEW: build the state once, then every SQL
+      // mutation maintains it incrementally — aggregate MVs fold inserts
+      // at O(batch)+O(groups) and refresh touched groups on predicate
+      // mutations; join MVs (SELECT ... FROM a JOIN b USING (k)) append
+      // insert batches' join output and recompute touched JOIN KEYS.
+      val name = target(c.name)
+      require(!tables.contains(name) && !mviews.contains(name) &&
+        !mvJoins.contains(name), s"name '$name' already in use")
+      putMv(name, c.originalText, None)
+      1L
+    case _: AlterTableCommand => throw new IllegalArgumentException(
+      "ALTER TABLE supports PARTITIONED BY (cols) and/or BUCKETED BY (col, n), " +
+        "RENAME TO <t>, ADD COLUMN <c> <type>, DROP COLUMN <c>, " +
+        "RENAME COLUMN <a> TO <b>, ADD CONSTRAINT <c> CHECK (<expr>) and " +
+        "DROP CONSTRAINT <c>")
+    case other => throw unsupported(other.nodeName)
+  }
+
+  private def ds(name: String): LakeDataset = tables.getOrElse(name,
+    throw new IllegalArgumentException(s"unknown lake table '$name'"))
+
+  private def alterColumns(t: LogicalPlan)(change: LakeDataset => Unit): Long = {
+    val name = target(t)
+    change(ds(name))
+    refresh(name); 1L
+  }
+
+  private def truncate(t: String): Long = {
+    val n = ds(t).deleteWhere(org.apache.spark.sql.functions.lit(true))
+    refresh(t); maintainRebuild(t); n.toLong
+  }
+
+  /** Append `rows` to table `t`, matched to its columns BY POSITION
+    * (arity-checked) and cast to their types, as SQL INSERT does (a
+    * TIMESTAMP literal lands in a TIMESTAMP_NTZ column, an int in a
+    * bigint). Returns 1.
+    */
+  private def append(t: String, verb: String, produced: String)(rows: => DataFrame): Long = {
+    import org.apache.spark.sql.functions.col
+    val target = ds(t)
+    val tgt = target.tableSchema
+    val q = rows
+    require(q.columns.length == tgt.fields.length,
+      s"$verb arity mismatch: table '$t' has ${tgt.fields.length} columns, " +
+        s"$produced ${q.columns.length}")
+    val aligned = q.select(q.columns.zip(tgt.fields).map { case (from, f) =>
+      col(s"`$from`").cast(f.dataType).as(f.name)
+    }.toSeq: _*)
+    target.insert(aligned)
+    refresh(t); maintainInsert(t, aligned); 1L
+  }
+
+  /** `MERGE INTO t [alias] USING (<query>) [alias] ON <cond>
+    * [WHEN MATCHED [AND c] THEN UPDATE SET * | DELETE]...
+    * [WHEN NOT MATCHED [AND c] THEN INSERT *]` → engine upsert. The ON
+    * condition must be a conjunction of same-name column equalities
+    * (`a.k = b.k`) — exactly the key-join the engine upsert implements.
+    * Action forms are `UPDATE SET *` / `INSERT *` / `DELETE` (the
+    * CDC-apply triad); a clause's condition may reference SOURCE columns
+    * (qualified by the USING alias or bare), and per-row routing picks the
+    * FIRST matched clause whose condition holds, SQL's clause-order
+    * semantics. Anything else is rejected loudly.
+    */
+  private def merge(m: MergeIntoTable): Long = {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    if (m.notMatchedBySourceActions.nonEmpty ||
+        !(m.matchedActions ++ m.notMatchedActions).forall {
+          case _: UpdateStarAction | _: DeleteAction | _: InsertStarAction => true
+          case _ => false
+        })
+      throw new IllegalArgumentException(
+        "MERGE supports WHEN MATCHED [AND cond] THEN UPDATE SET * | DELETE " +
+          "and WHEN NOT MATCHED [AND cond] THEN INSERT * (engine merge semantics)")
+    val matchedClauses = m.matchedActions
+    val insertClause = m.notMatchedActions.headOption
+    require(matchedClauses.count(_.isInstanceOf[UpdateStarAction]) <= 1 &&
+      matchedClauses.count(_.isInstanceOf[DeleteAction]) <= 1 &&
+      m.notMatchedActions.size <= 1,
+      "MERGE allows at most one UPDATE, one DELETE, and one INSERT clause")
+    val keys = conjuncts(m.mergeCondition).map {
+      case EqualTo(l: UnresolvedAttribute, r: UnresolvedAttribute)
+          if l.nameParts.last == r.nameParts.last => l.nameParts.last
+      case e => throw new IllegalArgumentException(
+        s"MERGE ON must be same-name column equalities; got '${e.sql}'")
+    }
+    val (srcAlias, source) = m.sourceTable match {
+      case SubqueryAlias(a, q) => (Some(a.name), q)
+      case q => (None, q)
+    }
+    if (source.isInstanceOf[UnresolvedRelation])
+      throw unsupported("MERGE USING <table>; expected USING (<query>)")
+    val t = target(EliminateSubqueryAliases(m.targetTable))
+    // MERGE INTO → engine upsert: per-column incoming-wins coalesce on
+    // the key join; source columns missing from the table evolve the
+    // schema. Table columns ABSENT from the source become typed NULLs —
+    // engine coalesce then preserves the existing value on matched rows
+    // (SQL's "UPDATE only what SET names"), and the migration probe
+    // routes rows whose delta cell value differs from their current
+    // cell through the global merge, so a source without the partition
+    // column cannot duplicate keys across cells.
+    val target0 = ds(t)
+    val tgtFields = target0.tableSchema.fields
+    val q = planDf(source)
+    val srcCols = q.columns.toSet
+    val casted = q.select(q.columns.map { c =>
+      tgtFields.find(_.name == c) match {
+        case Some(f) => col(s"`$c`").cast(f.dataType).as(c)
+        case None => col(s"`$c`")
+      }
+    }.toSeq: _*)
+    val filled0 = tgtFields.filterNot(f => srcCols.contains(f.name))
+      .foldLeft(casted)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+    // Clause conditions reference SOURCE columns — aliasing the frame
+    // with the statement's USING alias makes both `s.op` and bare `op`
+    // resolve (a target-column reference fails analysis loudly).
+    val filled = srcAlias.fold(filled0)(filled0.alias)
+    // ANSI MERGE cardinality check (shared with the engine upsert) —
+    // probed ONCE here on the filled source; the upserts below pass
+    // `checkKeys = false` so the batch is not aggregated twice.
+    LakeDataset.requireUniqueSourceKeys(spark, filled, keys, "MERGE source")
+    // Pin touched groups BEFORE mutating (targeted MV maintenance).
+    val preTouched = touchedGroupsPreKeys(t, filled, keys)
+    val unconditionalUpsert = matchedClauses.nonEmpty &&
+      matchedClauses.forall(_ == UpdateStarAction(None)) &&
+      insertClause.exists(_.condition.isEmpty)
+    if (unconditionalUpsert) {
+      // Fast path — UPDATE+INSERT with no conditions IS the engine's
+      // native merge: one upsert, no extra key joins.
+      target0.upsert(filled, keys, checkKeys = false)
+    } else {
+      // Per-row clause routing, SQL's first-match-in-statement-order
+      // semantics. Plain (non-null-safe) join semantics match SQL's ON:
+      // a NULL key never matches, so it routes as NOT MATCHED.
+      val existingKeys = target0.toDF.select(keys.map(col): _*)
+      val matchedSrc = filled.join(existingKeys, keys.toSeq, "left_semi")
+      val unmatchedSrc = filled.join(existingKeys, keys.toSeq, "left_anti")
+      val act = matchedClauses.foldLeft(Option.empty[Column]) { (acc, cl) =>
+        val w = cl.condition.fold(lit(true))(Bridge.column)
+        val v = lit(if (cl.isInstanceOf[DeleteAction]) "delete" else "update")
+        Some(acc.fold(when(w, v))(_.when(w, v)))
+      }.getOrElse(lit(null).cast("string"))
+      val routed = matchedSrc.withColumn("__merge_act", act)
+      val updRows = routed.filter(col("__merge_act") === "update")
+        .drop("__merge_act")
+      val insRows = insertClause.map(cl =>
+        cl.condition.fold(unmatchedSrc)(c => unmatchedSrc.filter(Bridge.column(c))))
+      val upserts = (if (matchedClauses.exists(_.isInstanceOf[UpdateStarAction]))
+        Some(updRows) else None, insRows) match {
+        case (Some(u), Some(i)) => Some(u.unionByName(i))
+        case (u, i) => u.orElse(i)
+      }
+      // Routing reads the PRE-state: pin the (drift-sized) delete key
+      // set eagerly before any mutation so the upsert cannot shift it.
+      val delKeys =
+        if (matchedClauses.exists(_.isInstanceOf[DeleteAction]))
+          Some(routed.filter(col("__merge_act") === "delete")
+            .select(keys.map(col): _*).localCheckpoint(true))
+        else None
+      upserts.foreach(target0.upsert(_, keys, checkKeys = false))
+      delKeys.foreach(target0.delete(_, keys))
+    }
+    refresh(t)
+    preTouched.fold(maintainRebuild(t))(maintainTouched(t, _))
+    1L
+  }
+
+  /** CTAS: run the query, lay the result out as a lake table (partition
+    * columns from `PARTITIONED BY`, the bucket axis and the storage root
+    * from `LOCATION`), register it.
+    */
+  private def createTable(c: CreateTableAsSelect, bCols: Seq[String], nBuckets: Int): Long = {
+    val t = target(c.name)
+    require(!tables.contains(t), s"table '$t' already exists")
+    val pCols = c.partitioning.map { tr =>
+      (tr.name, tr.references.toSeq.map(_.fieldNames.toSeq)) match {
+        case ("identity", Seq(Seq(col))) => col
+        case _ => throw unsupported(s"the partition transform ${tr.describe}")
+      }
+    }
+    val spec = c.tableSpec.location.map(p => graft.model.StorageSpec(p))
+    val created = LakeDataset.fromDataFrame(spark, planDf(c.query),
+      pCols, bCols, nBuckets, spec)
+    if (spec.isDefined) created.toStorage()
+    register(t, created)
+    1L
+  }
+
+  /** Catalog-only rename: the engine handle, feed registration, and every
+    * dependent MV's base pointer move together; zero data jobs.
+    */
+  private def renameTable(from: String, to: String): Long = {
+    val d = tables.getOrElse(from,
+      throw new IllegalArgumentException(s"unknown lake table '$from'"))
+    require(!tables.contains(to) && !mviews.contains(to) &&
+      !mvJoins.contains(to), s"name '$to' already in use")
+    tables.remove(from); tables.put(to, d)
+    feeds.remove(from).foreach(feeds.put(to, _))
+    mviews.foreach { case (mv, e) if e.base == from =>
+      // The defining query is the MV's durable form — rewrite its FROM
+      // so a later save/load resolves the renamed base.
+      mviews.put(mv, e.copy(base = to, query = e.query.replaceAll(
+        s"(?i)\\bFROM\\s+$from\\b", s"FROM $to")))
+    case _ => ()
+    }
+    mvJoins.foreach { case (mv, e) if e.baseA == from || e.baseB == from =>
+      // Either side may be the renamed table: rewrite both the FROM and
+      // the JOIN position in the durable query text.
+      val q2 = e.query
+        .replaceAll(s"(?i)\\bFROM\\s+$from\\b", s"FROM $to")
+        .replaceAll(s"(?i)\\bJOIN\\s+$from\\b", s"JOIN $to")
+      mvJoins.put(mv, e.copy(
+        baseA = if (e.baseA == from) to else e.baseA,
+        baseB = if (e.baseB == from) to else e.baseB,
+        query = q2))
+    case _ => ()
+    }
+    spark.catalog.dropTempView(from)
+    refresh(to); 1L
+  }
+
+  private def dropTable(t: String, purge: Boolean): Long = {
+    val dropped = tables.remove(t).getOrElse(
+      throw new IllegalArgumentException(s"unknown lake table '$t'"))
+    feeds.remove(t)
+    spark.catalog.dropTempView(t)
+    // Dependent materialized views drop with their base (a stale MV
+    // over a vanished table could only serve wrong answers).
+    mviews.filter(_._2.base == t).keys.foreach { mv =>
+      mviews.remove(mv); spark.catalog.dropTempView(mv)
+    }
+    mvJoins.filter { case (_, e) => e.baseA == t || e.baseB == t }
+      .keys.foreach { mv =>
+        mvJoins.remove(mv); spark.catalog.dropTempView(mv)
+      }
+    // PURGE additionally deletes the storage root — without it the
+    // files survive (an unregister, like dropping an external table).
+    if (purge)
+      dropped.storage.foreach(s =>
+        LakeDataset.deleteRecursively(java.nio.file.Paths.get(s.root)))
+    1L
   }
 }

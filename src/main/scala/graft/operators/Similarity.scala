@@ -108,21 +108,6 @@ object Similarity {
     df.withColumn("centroid",
       graft.functions.CentroidArgmax(col(vecCol), centroids))
 
-  /** Deterministic k-means++-style seeding: greedy farthest-point selection
-    * (maximin on cosine distance) over a hash-ordered sample. Farthest-point
-    * is the derandomized ++ variant — same spread guarantee (2-approx of the
-    * k-center objective), no RNG, so the index is reproducible run to run.
-    * Driver-side over `sampleSize` vectors: O(sample · k · dim), trivial
-    * next to one corpus pass.
-    */
-  def farthestPointSeeds(
-      df: DataFrame, vecCol: String, idCol: String,
-      numCentroids: Int, sampleSize: Int = 1024): Seq[(Int, Seq[Double])] = {
-    val sample = sampleVectors(df, vecCol, idCol, sampleSize)
-    maximinSeeds(sample, numCentroids).zipWithIndex
-      .map { case (v, ci) => ci -> v.toSeq }
-  }
-
   /** Hash-ordered deterministic sample of `n` vectors, driver-resident. */
   private def sampleVectors(
       df: DataFrame, vecCol: String, idCol: String, n: Int): Array[Array[Double]] = {

@@ -25,13 +25,6 @@ object Bridge {
     qe.analyzed.collect { case lr: LogicalRDD => lr.rdd }
   }
 
-  /** Drop the persisted blocks behind a checkpointed Dataset. Only call on
-    * snapshots no live plan references — a local checkpoint cannot be
-    * recomputed, so later reads of a released snapshot fail.
-    */
-  def unpersistCheckpoint(df: Dataset[_], blocking: Boolean = false): Unit =
-    checkpointRdds(df).foreach(_.unpersist(blocking))
-
   /** Re-wrap a locally-checkpointed Dataset's LogicalRDD WITHOUT the origin
     * plan's constraints or per-attribute stats. `localCheckpoint` copies
     * the origin plan's constraint set onto the LogicalRDD; when the origin
