@@ -1279,7 +1279,8 @@ final class Database(val spark: SparkSession) {
       // ALTER TABLE t ADD CONSTRAINT c CHECK (expr): existing rows must
       // already satisfy it; afterwards every ingest enforces it against
       // the incoming batch (write-boundary data contract). The table keeps
-      // the predicate's own text.
+      // the predicate's own text. The parser hangs the table under a
+      // `Filter NOT (check)` validation node, hence the leaf.
       ds(target(t.collectLeaves().head)).addCheck(check.userProvidedName, check.condition.trim)
       1L
     case DropConstraint(t, name, _, _) => if (ds(target(t)).dropCheck(name)) 1L else 0L
@@ -1482,23 +1483,20 @@ final class Database(val spark: SparkSession) {
       !mvJoins.contains(to), s"name '$to' already in use")
     tables.remove(from); tables.put(to, d)
     feeds.remove(from).foreach(feeds.put(to, _))
+    // The defining query is an MV's durable form — rewrite the renamed
+    // base where it is named (FROM, or either JOIN side; bare or
+    // backquoted) so a later save/load resolves it.
+    def renamed(query: String) = query.replaceAll(
+      s"(?i)\\b(FROM|JOIN)(\\s+)(`?)$from\\3(?!\\w)", s"$$1$$2$$3$to$$3")
     mviews.foreach { case (mv, e) if e.base == from =>
-      // The defining query is the MV's durable form — rewrite its FROM
-      // so a later save/load resolves the renamed base.
-      mviews.put(mv, e.copy(base = to, query = e.query.replaceAll(
-        s"(?i)\\bFROM\\s+$from\\b", s"FROM $to")))
+      mviews.put(mv, e.copy(base = to, query = renamed(e.query)))
     case _ => ()
     }
     mvJoins.foreach { case (mv, e) if e.baseA == from || e.baseB == from =>
-      // Either side may be the renamed table: rewrite both the FROM and
-      // the JOIN position in the durable query text.
-      val q2 = e.query
-        .replaceAll(s"(?i)\\bFROM\\s+$from\\b", s"FROM $to")
-        .replaceAll(s"(?i)\\bJOIN\\s+$from\\b", s"JOIN $to")
       mvJoins.put(mv, e.copy(
         baseA = if (e.baseA == from) to else e.baseA,
         baseB = if (e.baseB == from) to else e.baseB,
-        query = q2))
+        query = renamed(e.query)))
     case _ => ()
     }
     spark.catalog.dropTempView(from)

@@ -82,6 +82,20 @@ class SqlParseSpec extends SparkSpec {
     assert(rows.map(_.getString(0)).toSet == Set("sp_feed VERSION AS OF 2"))
   }
 
+  test("a backquoted MV base survives RENAME TABLE and a save/load cycle") {
+    val db = freshDb("sp_mvb")
+    db.executeDml(
+      "CREATE MATERIALIZED VIEW sp_mvv AS SELECT o_orderstatus, COUNT(*) AS n " +
+        "FROM `sp_mvb` GROUP BY o_orderstatus")
+    db.executeDml("RENAME TABLE sp_mvb TO sp_mvb2")
+    val root = java.nio.file.Files.createTempDirectory("sp_mv").toString
+    assert(db.saveMaterializedViews(root) == 1)
+    val db2 = new Database(spark)
+    db2.register("sp_mvb2", LakeDataset.fromDataFrame(spark, orders))
+    assert(db2.loadMaterializedViews(root) == 1)
+    assert(db2.executeSql("SELECT SUM(n) FROM sp_mvv").head().getLong(0) == orders.count())
+  }
+
   test("selectMany serves the lake SQL surface, as select does") {
     val srv = new LakeServer(spark)
     srv.createTable(TableName("test", "sp_srv"), Iterator(orders))
